@@ -2,6 +2,8 @@ package graft.core
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.{Duration, HOURS}
+import scala.util.{Success, Try}
+import scala.util.control.NonFatal
 
 /** Driver-side fan-out for independent Spark actions (guide §2.6:
   * "overlap independent jobs" — Spark's scheduler runs several jobs at
@@ -22,6 +24,10 @@ import scala.concurrent.duration.{Duration, HOURS}
   * seconds locally and minutes at cluster scale); callers with truly
   * longer phases pass their own.
   *
+  * Failure: when a thunk throws, its siblings are not interrupted; the
+  * call waits (within the same bound) for them to finish, then rethrows
+  * the first failure. Sibling results are discarded.
+  *
   * Determinism: the thunks must be independent (no shared mutable
   * state); each one's Spark actions are unaffected by sibling jobs, so
   * results are bit-identical to running the same thunks sequentially.
@@ -39,12 +45,20 @@ object Concurrency {
         t
       })
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(Future.sequence(thunks.map(t => Future(t()))), maxWait)
+    val futures = thunks.map(t => Future(t()))
+    try Await.result(Future.sequence(futures), maxWait)
     catch {
       case e: java.util.concurrent.TimeoutException =>
         throw new IllegalStateException(
           s"Concurrency.inParallel('$name'): ${thunks.size} task(s) still " +
             s"running after $maxWait — a Spark action appears wedged", e)
+      case NonFatal(e) =>
+        // The first failure surfaces only once every started sibling has
+        // finished: shutdownNow would interrupt them mid-action, and an
+        // interrupted eager checkpoint can leave partial blocks behind.
+        Try(Await.ready(Future.sequence(futures.map(_.transform(Success(_)))),
+          maxWait))
+        throw e
     } finally pool.shutdownNow()
   }
 }

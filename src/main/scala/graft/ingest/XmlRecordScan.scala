@@ -26,10 +26,17 @@ object XmlRecordScan {
     regexp_extract(line, s"""$name="([^"]*)"""", 1)
 
   /** Scan `path` for `<Record>` lines of the given `types`. Returns
-    * (record_type, value, start_ts, end_ts, source_name) with the Apple
-    * timestamp format `yyyy-MM-dd HH:mm:ss Z` parsed tz-aware.
+    * (record_type, value, start_ts, end_ts, wall_date, source_name) with
+    * the Apple timestamp format `yyyy-MM-dd HH:mm:ss Z` parsed tz-aware.
     * `value` stays a string — sleep records carry categorical values
-    * (`HKCategoryValueSleepAnalysisAsleep`); numeric callers `try_cast`. */
+    * (`HKCategoryValueSleepAnalysisAsleep`); numeric callers `try_cast`.
+    * A missing `startDate`/`endDate` gives a null timestamp (point samples
+    * such as HR may omit `endDate`).
+    *
+    * One scan serves many consumers: pass every type they need, then route
+    * rows by `record_type`. The snapshot pipeline reads `export.xml` once
+    * this way (`ReferencePipeline.appleRecords`) and materializes the
+    * result, instead of one file pass per domain. */
   def records(spark: SparkSession, path: String, types: Seq[String]): DataFrame = {
     val lines = spark.read.text(path)
     val typePred = types.map(t => col("value").contains(s"""type="$t"""")).reduce(_ || _)
@@ -44,9 +51,11 @@ object XmlRecordScan {
       .select(
         attr(col("value"), "type").as("record_type"),
         attr(col("value"), "value").as("value"),
-        to_timestamp(attr(col("value"), "startDate"), "yyyy-MM-dd HH:mm:ss Z")
+        // a record without the attribute gets a null timestamp; a present
+        // but malformed one still fails the parse
+        to_timestamp(attrOpt(col("value"), "startDate"), "yyyy-MM-dd HH:mm:ss Z")
           .as("start_ts"),
-        to_timestamp(attr(col("value"), "endDate"), "yyyy-MM-dd HH:mm:ss Z")
+        to_timestamp(attrOpt(col("value"), "endDate"), "yyyy-MM-dd HH:mm:ss Z")
           .as("end_ts"),
         // the reference's `_get_date_from_dt` keeps the record's LOCAL
         // wall-clock date (offset preserved, not converted to UTC) — the

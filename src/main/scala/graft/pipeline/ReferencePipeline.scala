@@ -105,26 +105,37 @@ object ReferencePipeline {
         sum(when(col("record_type") === EnergyType, col("v")).otherwise(0.0))
           .as("total_active_energy"))
 
+  /** Stage 1 input — the one `export.xml` scan the three Apple daily
+    * builders share: every record of the six types they read, reduced to
+    * the columns they read. Each builder routes its own `record_type`s out
+    * of this frame, so a snapshot run reads the file once (materialize the
+    * result before handing it to more than one builder). */
+  def appleRecords(spark: SparkSession, xmlPath: String): DataFrame =
+    XmlRecordScan.records(spark, xmlPath,
+        Seq(HrType, HrvType, SleepType, StepsType, DistanceType, EnergyType))
+      .select("record_type", "value", "start_ts", "end_ts", "wall_date")
+
   /** Stage 1a — Apple `daily_cardio`: HR (pop-std, F2 outliers 30-220) ⟗
     * HRV (exact median, F3 outliers 5-300) on date.
     * Contract: date, hr_mean, hr_min, hr_max, hr_std, hr_samples,
     * hrv_sdnn_mean, hrv_sdnn_median, hrv_sdnn_min, hrv_sdnn_max,
     * n_hrv_sdnn (`src/etl/stage_csv_aggregation.py:254-260,784-789`). */
-  def appleDailyCardio(spark: SparkSession, xmlPath: String): DataFrame = {
-    val records = XmlRecordScan.records(spark, xmlPath, Seq(HrType, HrvType))
+  def appleDailyCardio(records: DataFrame): DataFrame = {
+    // each side keeps only its own record_type below
+    val numeric = records
       .withColumn("v", col("value").try_cast("double"))
       .filter(col("v").isNotNull)
     // wall_date, not to_date(start_ts): the reference dates Apple XML
     // records by LOCAL wall-clock (parity-pinned in appleHrDaily)
     val hr = DailyAgg.dailyStatsBy(
-      DailyAgg.outlierFilter(records.filter(col("record_type") === HrType), "v", 30, 220),
+      DailyAgg.outlierFilter(numeric.filter(col("record_type") === HrType), "v", 30, 220),
       col("wall_date"), "v")
       .select(col("date"),
         round(col("v_mean"), 6).as("hr_mean"), col("v_min").as("hr_min"),
         col("v_max").as("hr_max"), round(col("v_std"), 6).as("hr_std"),
         col("n_samples").as("hr_samples"))
     val hrv = DailyAgg.dailyPercentilesBy(
-      DailyAgg.outlierFilter(records.filter(col("record_type") === HrvType), "v", 5, 300),
+      DailyAgg.outlierFilter(numeric.filter(col("record_type") === HrvType), "v", 5, 300),
       col("wall_date"), "v")
       .select(col("date"),
         round(col("v_mean"), 6).as("hrv_sdnn_mean"),
@@ -138,11 +149,12 @@ object ReferencePipeline {
     * asleep-vs-inbed split sums, quality = asleep/inbed clipped 0-100.
     * Contract: date, sleep_hours, sleep_quality_score,
     * total_sleep_minutes (`src/etl/stage_csv_aggregation.py:162-215`). */
-  def appleDailySleep(spark: SparkSession, xmlPath: String): DataFrame = {
+  def appleDailySleep(records: DataFrame): DataFrame = {
     // wall-clock dates, NO positive-duration filter — both per the
     // reference (`aggregate_sleep` keeps zero/negative intervals and
     // local dates; parity-pinned in appleSleepDailyExact)
-    val iv = XmlRecordScan.records(spark, xmlPath, Seq(SleepType))
+    val iv = records
+      .filter(col("record_type") === SleepType)
       .withColumn("mins",
         (unix_timestamp(col("end_ts")) - unix_timestamp(col("start_ts"))) / 60.0)
       .filter(col("start_ts").isNotNull && col("end_ts").isNotNull)
@@ -163,8 +175,9 @@ object ReferencePipeline {
 
   /** Stage 1c — Apple `daily_activity`: sums of steps/distance/energy.
     * Contract: date, total_steps, total_distance, total_active_energy. */
-  def appleDailyActivity(spark: SparkSession, xmlPath: String): DataFrame =
-    XmlRecordScan.records(spark, xmlPath, Seq(StepsType, DistanceType, EnergyType))
+  def appleDailyActivity(records: DataFrame): DataFrame =
+    records
+      .filter(col("record_type").isin(StepsType, DistanceType, EnergyType))
       .withColumn("v", col("value").try_cast("double"))
       .filter(col("v").isNotNull)
       .groupBy(col("wall_date").as("date"))

@@ -20,7 +20,9 @@ import graft.operators.{Folds, Impute}
   * Stage map (reference stage → engine call):
   *  - 0 ingest: S1/S2 deterministic ZIP selection (filename date, mtime
   *    fallback; Zepp optionally password-protected) + S3 extraction
-  *  - 1 aggregate: S5/S6 XML scans + S7/S8 robust CSVs → daily_* frames
+  *  - 1 aggregate: S5 — one `export.xml` scan, materialized and routed by
+  *    record type to the cardio, sleep and activity builders — + S7/S8
+  *    robust CSVs → daily_* frames
   *  - 2 unify: the five-domain `unify_all` (J11)
   *  - 3 label: segment z-scores → PBSI composite → percentile labels
   *  - 4 segment: `segment_autolog` table
@@ -36,6 +38,9 @@ import graft.operators.{Folds, Impute}
   * object only sequences them and lays out files. All frames stay
   * distributed — the only collects are fold boundaries (a handful of
   * rows) and the report rendering the reference also does driver-side.
+  * A frame read by more than one later job (the XML records, the Apple
+  * daily frames, `unified`, `labeled`) is materialized once with an eager
+  * `localCheckpoint`, so no job replays its lineage back to the scan.
   */
 object RunPipeline {
 
@@ -57,7 +62,8 @@ object RunPipeline {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,
       "usage: graft.pipeline.RunPipeline <rawRoot> <participant> <snapshot:YYYY-MM-DD> <outDir> [zeppPassword]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -162,10 +168,16 @@ object RunPipeline {
         s"${if (zeppExtracted) zeppChosen.getOrElse("-") else "skipped"}")
 
     // ---------- stage 1: aggregate ----------
-    val appleXml = findFirst(s"$extracted/apple", "export.xml")
-    val appleCardio = appleXml.map(x => ReferencePipeline.appleDailyCardio(spark, x))
-    val appleSleep = appleXml.map(x => ReferencePipeline.appleDailySleep(spark, x))
-    val appleAct = appleXml.map(x => ReferencePipeline.appleDailyActivity(spark, x))
+    // export.xml is scanned once: the records frame feeds three builders,
+    // and each daily frame is written here and read again by unify
+    val appleRecords = findFirst(s"$extracted/apple", "export.xml")
+      .map(x => ReferencePipeline.appleRecords(spark, x).localCheckpoint(true))
+    val appleCardio = appleRecords.map(r =>
+      ReferencePipeline.appleDailyCardio(r).localCheckpoint(true))
+    val appleSleep = appleRecords.map(r =>
+      ReferencePipeline.appleDailySleep(r).localCheckpoint(true))
+    val appleAct = appleRecords.map(r =>
+      ReferencePipeline.appleDailyActivity(r).localCheckpoint(true))
     val medsCsv = findFirst(s"$extracted/apple", "Medications.csv")
     val meds = medsCsv.map(p => ReferencePipeline.medsDaily(
       spark.read.option("header", "true").csv(p), snapshot))
@@ -240,6 +252,7 @@ object RunPipeline {
       ReferencePipeline.unifyMedsDomain(
         meds.map(m => "apple_autoexport" -> m).toSeq),
       ReferencePipeline.unifySomDomain(som))
+      .localCheckpoint(true) // written, then read by every label job
     Sinks.atomicCsv(unified, s"$joined/daily_unified.csv")
     logs += StageLog(2, "unify", "success",
       s"${unified.columns.length} cols")

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import graft.ingest.XmlRecordScan
 import graft.pipeline.ReferencePipeline
 
 /** End-to-end stage 1→4 on a reference-shaped fixture: XML + Zepp CSV in,
@@ -12,6 +13,15 @@ class ReferencePipelineSpec extends SparkTestBase {
 
   private def record(t: String, v: String, start: String, end: String) =
     s""" <Record type="$t" sourceName="W" value="$v" startDate="$start +0000" endDate="$end +0000"/>"""
+
+  private def writeXml(lines: Seq[String]): String = {
+    val dir = Files.createTempDirectory("graft-pipe").toFile
+    val f = new java.io.File(dir, "export.xml")
+    val w = new java.io.PrintWriter(f, "UTF-8")
+    lines.foreach(w.println)
+    w.close()
+    f.getAbsolutePath
+  }
 
   private lazy val xmlPath: String = {
     val days = (1 to 12).map(d => f"2021-05-$d%02d")
@@ -29,13 +39,10 @@ class ReferencePipelineSpec extends SparkTestBase {
           record(StepsType, (8000 + 100 * i).toString, s"$d 12:00:00", s"$d 12:10:00"),
           record(EnergyType, "500", s"$d 13:00:00", s"$d 13:30:00"))
     } ++ Seq("</HealthData>")
-    val dir = Files.createTempDirectory("graft-pipe").toFile
-    val f = new java.io.File(dir, "export.xml")
-    val w = new java.io.PrintWriter(f, "UTF-8")
-    lines.foreach(w.println)
-    w.close()
-    f.getAbsolutePath
+    writeXml(lines)
   }
+
+  private lazy val records = appleRecords(spark, xmlPath)
 
   private lazy val zeppCsv = Seq(
     ("2021-05-13 08:00:00+0000", "70.0"), // a day Apple doesn't cover
@@ -43,24 +50,54 @@ class ReferencePipelineSpec extends SparkTestBase {
     .toDF("time", "heartRate")
 
   test("stage 1: daily contracts carry the reference schemas and values") {
-    val cardio = appleDailyCardio(spark, xmlPath)
+    val cardio = appleDailyCardio(records)
     assert(cardio.columns.toSeq === Seq("date", "hr_mean", "hr_min", "hr_max",
       "hr_std", "hr_samples", "hrv_sdnn_mean", "hrv_sdnn_median", "hrv_sdnn_min",
       "hrv_sdnn_max", "n_hrv_sdnn"))
     val d1 = cardio.orderBy("date").head()
     assert(d1.getAs[Double]("hr_mean") === 62.5) // mean of 60..65
     assert(d1.getAs[Long]("hr_samples") === 6L)
-    val sleep = appleDailySleep(spark, xmlPath).orderBy("date").head()
+    val sleep = appleDailySleep(records).orderBy("date").head()
     assert(sleep.getAs[Double]("sleep_hours") === 7.0)
     assert(math.abs(sleep.getAs[Double]("sleep_quality_score") - 420.0 / 480.0 * 100) < 1e-6)
-    val act = appleDailyActivity(spark, xmlPath).orderBy("date").head()
+    val act = appleDailyActivity(records).orderBy("date").head()
     assert(act.getAs[Double]("total_steps") === 8000.0)
+  }
+
+  test("stage 1 routing: one scan feeds each domain, two elements on one line") {
+    // SURVEY §7.5.7: an HR and a sleep element share a physical line; the
+    // steps record sits on another day, so a builder that took a foreign
+    // record_type would gain a day
+    val path = writeXml(Seq("<HealthData>",
+      record(HrType, "70", "2021-06-01 09:00:00", "2021-06-01 09:00:00") +
+        record(SleepType, "HKCategoryValueSleepAnalysisAsleep",
+          "2021-06-01 01:00:00", "2021-06-01 07:00:00"),
+      record(HrType, "80", "2021-06-01 10:00:00", "2021-06-01 10:00:00"),
+      record(StepsType, "1000", "2021-06-02 12:00:00", "2021-06-02 12:10:00"),
+      "</HealthData>"))
+    val routed = appleRecords(spark, path)
+    for (t <- Seq(HrType, SleepType, StepsType)) {
+      val perDomain = XmlRecordScan.records(spark, path, Seq(t))
+        .select(routed.columns.map(col): _*).collect().toSet
+      assert(perDomain.nonEmpty)
+      assert(routed.filter(col("record_type") === t).collect().toSet === perDomain, t)
+    }
+    val cardio = appleDailyCardio(routed).collect()
+    assert(cardio.map(_.getAs[java.sql.Date]("date").toString).toSeq === Seq("2021-06-01"))
+    assert(cardio.head.getAs[Double]("hr_mean") === 75.0)
+    assert(cardio.head.getAs[Long]("hr_samples") === 2L)
+    val sleep = appleDailySleep(routed).collect()
+    assert(sleep.map(_.getAs[java.sql.Date]("date").toString).toSeq === Seq("2021-06-01"))
+    assert(sleep.head.getAs[Double]("sleep_hours") === 6.0)
+    val act = appleDailyActivity(routed).collect()
+    assert(act.map(_.getAs[java.sql.Date]("date").toString).toSeq === Seq("2021-06-02"))
+    assert(act.head.getAs[Double]("total_steps") === 1000.0)
   }
 
   test("stage 2: unify fuses vendors with provenance and fills Zepp-only days") {
     val unified = unifyDaily(
-      appleDailyCardio(spark, xmlPath), zeppDailyCardio(zeppCsv),
-      appleDailySleep(spark, xmlPath), appleDailyActivity(spark, xmlPath))
+      appleDailyCardio(records), zeppDailyCardio(zeppCsv),
+      appleDailySleep(records), appleDailyActivity(records))
     assert(unified.count() === 13) // 12 Apple days + 1 Zepp-only day
     val zeppDay = unified.filter(col("date") === lit("2021-05-13").cast("date")).head()
     assert(zeppDay.getAs[String]("source_cardio") === "b")
@@ -72,8 +109,8 @@ class ReferencePipelineSpec extends SparkTestBase {
 
   test("stage 3+4: labels are non-degenerate; HR shift drives the label; segments close") {
     val unified = unifyDaily(
-      appleDailyCardio(spark, xmlPath), zeppDailyCardio(zeppCsv),
-      appleDailySleep(spark, xmlPath), appleDailyActivity(spark, xmlPath))
+      appleDailyCardio(records), zeppDailyCardio(zeppCsv),
+      appleDailySleep(records), appleDailyActivity(records))
     val labeled = labelDaily(unified)
     graft.qc.Audit.assertNonDegenerate(labeled, "label_3cls")
     graft.qc.Audit.assertUniqueKey(labeled, Seq("date"))

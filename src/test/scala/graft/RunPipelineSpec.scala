@@ -1,9 +1,55 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.LongAdder
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, LocalFileSystem, Path}
+import org.apache.spark.sql.SparkSession
+
 import graft.pipeline.RunPipeline
+
+/** `file://` that counts the bytes read per path. */
+class ReadCountingFileSystem extends LocalFileSystem {
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    val in = super.open(f, bufferSize)
+    val n = ReadCountingFileSystem.bytes
+      .computeIfAbsent(f.toUri.getPath, _ => new LongAdder)
+    new FSDataInputStream(new FSInputStream {
+      override def read(): Int = { val b = in.read(); if (b >= 0) n.increment(); b }
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        val r = in.read(b, off, len); if (r > 0) n.add(r); r
+      }
+      override def seek(pos: Long): Unit = in.seek(pos)
+      override def getPos: Long = in.getPos
+      override def seekToNewSource(target: Long): Boolean = in.seekToNewSource(target)
+      override def close(): Unit = in.close()
+    })
+  }
+}
+
+object ReadCountingFileSystem {
+  val bytes = new ConcurrentHashMap[String, LongAdder]()
+
+  /** Runs `body` with every `file://` read of `spark`'s queries counted;
+    * returns its result and the bytes read per path. Filesystem instances
+    * are not cached meanwhile, so the counting class serves every read. */
+  def counting[T](spark: SparkSession)(body: => T): (T, Map[String, Long]) = {
+    bytes.clear()
+    spark.conf.set("fs.file.impl", classOf[ReadCountingFileSystem].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      val out = body
+      (out, bytes.asScala.map { case (k, v) => k -> v.sum() }.toMap)
+    } finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+}
 
 /** End-to-end snapshot orchestration: raw ZIP in → artifact tree out.
   * The fixture is a reference-shaped snapshot (HealthAutoExport ZIP with
@@ -71,7 +117,9 @@ class RunPipelineSpec extends SparkTestBase {
 
   test("RunPipeline: snapshot ZIP in -> full artifact tree out, stages 0-9") {
     val (rawRoot, outDir) = buildFixture()
-    val logs = RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+    val (logs, readBytes) = ReadCountingFileSystem.counting(spark) {
+      RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+    }
     val byStage = logs.map(l => (l.stage, l.name) -> l.status).toMap
     assert(byStage((0, "ingest")) === "success", logs.mkString("\n"))
     assert(byStage((1, "aggregate")) === "success", logs.mkString("\n"))
@@ -132,6 +180,13 @@ class RunPipelineSpec extends SparkTestBase {
 
     val report = new String(Files.readAllBytes(Paths.get(s"$outDir/RUN_REPORT.md")), "UTF-8")
     assert(report.contains("P000001") && report.contains("2024-08-31"))
+
+    // stage 1 reads export.xml in one pass and no later job rescans it
+    val xmlRead = readBytes.collect { case (p, n) if p.endsWith("/export.xml") => n }.sum
+    val passes = xmlRead.toDouble / Files.size(
+      Paths.get(s"$outDir/extracted/apple/apple_health_export/export.xml"))
+    assert(xmlRead > 0 && passes <= 2.0,
+      f"export.xml read $passes%.2f times ($xmlRead bytes): $readBytes")
   }
 
   test("RunPipeline: SoM-less snapshot degrades to stages 0-4 + report") {
