@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sinks
+import graft.core.{Concurrency, Sinks}
 import graft.ingest.{Discovery, EncryptedZip, RobustCsv, ZipExtract}
 import graft.ml.Models
 import graft.operators.{Folds, Impute}
@@ -28,8 +28,11 @@ import graft.operators.{Folds, Impute}
   *  - 4 segment: `segment_autolog` table
   *  - 5 ML prep: temporal gate + anti-leak drop (ML7 exclusions) +
   *    median impute (M1 fallback path — deterministic)
-  *  - 6 ML6: per-fold LogisticRegression (the reference's stage-6 model)
-  *    + the ML6-extended families (RF / GBT / LinearSVC) → metrics
+  *  - 6 ML6: LogisticRegression (the reference's stage-6 model) and the
+  *    ML6-extended families (RF / GBT / LinearSVC), each fit once per fold
+  *    and all four concurrently; the primary artifacts read the logistic
+  *    predictions and the extended table comes from one metrics pass
+  *    sliced by model
   *  - 7/8 LSTM + TFLite: out of engine scope per SURVEY (external libs)
   *  - 9 report: `Reports.writeArtifacts` tree (cv_summary.json,
   *    confusion matrices, per-class CSVs, RUN_REPORT.md)
@@ -41,6 +44,8 @@ import graft.operators.{Folds, Impute}
   * A frame read by more than one later job (the XML records, the Apple
   * daily frames, `unified`, `labeled`) is materialized once with an eager
   * `localCheckpoint`, so no job replays its lineage back to the scan.
+  * Every Spark job carries the description `stage <n> <name>` of the stage
+  * that submitted it.
   */
 object RunPipeline {
 
@@ -122,13 +127,23 @@ object RunPipeline {
 
   def run(spark: SparkSession, rawRoot: String, participant: String,
           snapshot: String, outDir: String,
-          cfg: Config = Config()): Seq[StageLog] = {
+          cfg: Config = Config()): Seq[StageLog] =
+    try runStages(spark, rawRoot, participant, snapshot, outDir, cfg)
+    finally spark.sparkContext.setJobDescription(null)
+
+  private def runStages(spark: SparkSession, rawRoot: String,
+                        participant: String, snapshot: String, outDir: String,
+                        cfg: Config): Seq[StageLog] = {
     val logs = scala.collection.mutable.ArrayBuffer[StageLog]()
+    // labels the jobs the calling thread submits from here on
+    def stage(n: Int, name: String): Unit =
+      spark.sparkContext.setJobDescription(s"stage $n $name")
     val snapDate = java.time.LocalDate.parse(snapshot)
     val extracted = s"$outDir/extracted"
     val joined = s"$outDir/joined"
 
     // ---------- stage 0: ingest ----------
+    stage(0, "ingest")
     val appleDir = Paths.get(rawRoot, participant, "apple", "export")
     val appleZips = listWithSuffix(appleDir, ".zip")
     val appleChosen = Discovery
@@ -168,6 +183,7 @@ object RunPipeline {
         s"${if (zeppExtracted) zeppChosen.getOrElse("-") else "skipped"}")
 
     // ---------- stage 1: aggregate ----------
+    stage(1, "aggregate")
     // export.xml is scanned once: the records frame feeds three builders,
     // and each daily frame is written here and read again by unify
     val appleRecords = findFirst(s"$extracted/apple", "export.xml")
@@ -245,6 +261,7 @@ object RunPipeline {
     if (!stage1.exists(_._2.isDefined)) return logs.toSeq
 
     // ---------- stage 2: unify ----------
+    stage(2, "unify")
     val unified = ReferencePipeline.unifyAllDomains(
       ReferencePipeline.unifySleepDomains(appleSleep, zeppSleep),
       ReferencePipeline.unifyCardioDomains(appleCardio, zeppCardio),
@@ -258,6 +275,7 @@ object RunPipeline {
       s"${unified.columns.length} cols")
 
     // ---------- stage 3: label ----------
+    stage(3, "label")
     // unify_all's frame carries no provenance flags; labelDaily's quality
     // factor reads the canonical form's missing_/source_ columns. Derive
     // them with the same any-non-null rule unifyCanonical applies.
@@ -279,14 +297,17 @@ object RunPipeline {
     logs += StageLog(3, "label", "success", "pbsi labels attached")
 
     // ---------- stage 4: segment ----------
+    stage(4, "segment")
     val segments = ReferencePipeline.segmentAutolog(labeled)
     Sinks.atomicCsv(segments, s"$joined/segment_autolog.csv")
     logs += StageLog(4, "segment", "success", "segment_autolog written")
 
     // ---------- stage 5: ML prep ----------
+    stage(5, "ml-prep")
     val generatedAt = java.time.Instant.now().toString
     if (!labeled.columns.contains("som_category_3class")) {
       logs += StageLog(5, "ml-prep", "skipped", "no SoM domain in snapshot")
+      stage(9, "report")
       Sinks.atomicText(spark, s"$outDir/RUN_REPORT.md",
         Reports.runReportMd(labeled, participant, snapshot, "0-4",
           generatedAt, None))
@@ -303,12 +324,13 @@ object RunPipeline {
       s"${features.size} features, median-imputed per segment")
 
     // ---------- stage 6: ML6 + extended families ----------
+    stage(6, "ml6")
     // Both fold branches land on the same summary shape. The monthly
     // frame's bounds mirror the reference's build_month_windows: a
     // BOUNDED train window [train_start, val_start) and an EXCLUSIVE
     // val_end. The day-based branch summarizes actual role dates, so its
-    // val_end is an inclusive max date — flagged per row so foldPreds
-    // applies the right comparison.
+    // val_end is an inclusive max date — flagged per row so the fold
+    // slicing applies the right comparison.
     val foldFrame =
       if (cfg.foldsMonthly)
         Folds.calendarFoldsMonthly(prepped, "date", "som_binary")
@@ -331,6 +353,7 @@ object RunPipeline {
         "val_end_inclusive").collect()
     if (foldRows.isEmpty) {
       logs += StageLog(6, "ml6", "skipped", "no usable calendar folds")
+      stage(9, "report")
       Sinks.atomicText(spark, s"$outDir/RUN_REPORT.md",
         Reports.runReportMd(labeled, participant, snapshot, "0-5",
           generatedAt, None))
@@ -351,7 +374,7 @@ object RunPipeline {
     // Per-fold train/val slices and the single-class fit guard, computed
     // ONCE and shared by all four families: each MLlib iteration rescans
     // its training frame and the class-count guard is a Spark job, so
-    // leaving them inside foldPreds would replay both per family.
+    // leaving them inside each family's fit would replay both per family.
     val foldData = foldRows.toSeq.map { r =>
       val (fid, ts, vs, ve) =
         (r.getInt(0), r.getDate(1), r.getDate(2), r.getDate(3))
@@ -368,31 +391,39 @@ object RunPipeline {
       val fittable = train.select("som_binary").na.drop().distinct().count() >= 2 &&
         !valD.isEmpty
       (fid, train, valD, fittable)
-    }
-    def foldPreds(fit: (DataFrame, DataFrame) => DataFrame): Option[DataFrame] = {
-      val parts = foldData.flatMap { case (fid, train, valD, fittable) =>
-        if (!fittable) None
-        else Some(fit(train, valD)
-          .select(lit(fid).as("fold_id"), col("date"),
-            col("som_binary").cast("int").cast("string").as("y_true"),
-            col("y_pred").cast("int").cast("string").as("y_pred_s")))
-      }
-      parts.reduceOption(_ unionByName _)
-    }
+    }.collect { case (fid, train, valD, true) => (fid, train, valD) }
     val classes = Seq("0", "1")
-    // Actual per-fold training-set sizes (the bounded windows foldPreds
-    // really trains on), so published artifacts don't fall back to the
+    // Actual per-fold training-set sizes (the bounded windows the folds
+    // really train on), so published artifacts don't fall back to the
     // total-minus-val identity that no longer matches.
     val trainCounts = {
       import spark.implicits._
       foldRows.toSeq.map(r => (r.getInt(0), r.getLong(4)))
         .toDF("fold_id", "n_train")
     }
-    val primary = foldPreds(families.head._2)
-    primary match {
+    // Each family is fit once per fold, all four concurrently: a fit is a
+    // chain of small MLlib jobs bound by driver and scheduling latency, not
+    // compute, so overlapping them leaves about the slowest family. Each
+    // family's fold predictions are materialized once; the primary
+    // artifacts and the extended table both read them.
+    val preds =
+      if (foldData.isEmpty) Nil
+      else Concurrency.inParallel("ml6-fits", families.map { case (name, fit) =>
+        () => {
+          // pool threads start with the submitting thread's description
+          stage(6, s"ml6-fit $name")
+          foldData.map { case (fid, train, valD) =>
+            fit(train, valD).select(lit(name).as("model"),
+              lit(fid).as("fold_id"), col("date"),
+              col("som_binary").cast("int").cast("string").as("y_true"),
+              col("y_pred").cast("int").cast("string").as("y_pred_s"))
+          }.reduce(_ unionByName _).localCheckpoint(true)
+        }
+      })
+    preds.headOption match {
       case Some(pred) =>
-        val summary = Reports.writeArtifacts(labeled, pred, "fold_id",
-          "y_true", "y_pred_s", "date", classes,
+        val summary = Reports.writeArtifacts(labeled, pred.drop("model"),
+          "fold_id", "y_true", "y_pred_s", "date", classes,
           model = families.head._1, featureSet = "FS-B",
           target = "som_binary", nFeatures = features.size,
           participant = participant, snapshot = snapshot,
@@ -400,29 +431,26 @@ object RunPipeline {
           outDir = outDir, trainCounts = Some(trainCounts))
         logs += StageLog(6, "ml6", "success",
           s"${summary.folds.size} folds, ${families.head._1}")
+        // ML6-extended: per-fold metric rows for every family, one pass
+        stage(6, "ml6-ext")
+        Sinks.atomicCsv(Reports.perFoldMetrics(preds.reduce(_ unionByName _),
+            "fold_id", "y_true", "y_pred_s", "date", classes,
+            Some(trainCounts), sliceCols = Seq("model"))
+          .select("model", "fold_id", "val_start", "val_end", "n_train",
+            "n_val", "f1_macro", "balanced_accuracy", "cohen_kappa"),
+          s"$outDir/metrics/ml6_extended_summary.csv")
+        logs += StageLog(6, "ml6-ext", "success", s"${preds.size} families")
       case None =>
         logs += StageLog(6, "ml6", "skipped", "all folds single-class")
     }
-    // ML6-extended: per-fold metric rows for every family, one frame
-    val extended = families.flatMap { case (name, fit) =>
-      foldPreds(fit).map(p =>
-        Reports.perFoldMetrics(p, "fold_id", "y_true", "y_pred_s", "date",
-          classes, Some(trainCounts)).withColumn("model", lit(name)))
-    }
-    extended.reduceOption(_ unionByName _).foreach { frame =>
-      Sinks.atomicCsv(frame
-        .select("model", "fold_id", "val_start", "val_end", "n_train",
-          "n_val", "f1_macro", "balanced_accuracy", "cohen_kappa"),
-        s"$outDir/metrics/ml6_extended_summary.csv")
-      logs += StageLog(6, "ml6-ext", "success",
-        s"${extended.size} families")
-    }
     logs += StageLog(7, "ml7-lstm", "skipped", "out of engine scope (SURVEY M5)")
     logs += StageLog(8, "tflite", "skipped", "out of engine scope (SURVEY M5)")
-    if (primary.isEmpty)
+    if (preds.isEmpty) {
+      stage(9, "report")
       Sinks.atomicText(spark, s"$outDir/RUN_REPORT.md",
         Reports.runReportMd(labeled, participant, snapshot, "0-6",
           generatedAt, None))
+    }
     logs += StageLog(9, "report", "success", s"$outDir/RUN_REPORT.md")
     logs.toSeq
   }

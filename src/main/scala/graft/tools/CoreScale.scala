@@ -47,6 +47,11 @@ object CoreScale {
     val outPath = args.headOption.getOrElse("SCALING_CORES.jsonl")
     val scale = if (args.length > 1) args(1) else "sf1g"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val queries = if (scale == "sf10g") DeepHeavy else Heavy
+    // a renamed or removed query must not silently shrink the probe
+    val missing = queries.filterNot(graft.SparkEntry.queries.contains)
+    require(missing.isEmpty,
+      s"CoreScale: not in SparkEntry.queries: ${missing.mkString(", ")}")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -62,7 +67,6 @@ object CoreScale {
       case other => throw new IllegalArgumentException(
         s"CoreScale: unknown scale '$other' (sf1g|sf10g)")
     }
-    val queries = if (scale == "sf10g") DeepHeavy else Heavy
     // out-of-timing warmup: table counts + the incremental-dedup state
     graft.core.Tables.documents(spark, dir).count()
     spark.read.parquet(s"$dir/embeddings.parquet").count()
@@ -80,15 +84,14 @@ object CoreScale {
       TimingSink.rows(fn(spark, dir))
       (System.nanoTime() - t0) / 1e9
     }
-    val rows = queries.flatMap { name =>
-      graft.SparkEntry.queries.get(name).map { fn =>
-        // untimed warmup (codegen/JIT), then min of 2 timed runs —
-        // ScaleCurve's methodology
-        once(fn)
-        val t = math.min(once(fn), once(fn))
-        System.err.println(f"[corescale] $name%-24s $t%7.2f s @ $cpus cpus")
-        name -> t
-      }
+    val rows = queries.map { name =>
+      val fn = graft.SparkEntry.queries(name)
+      // untimed warmup (codegen/JIT), then min of 2 timed runs —
+      // ScaleCurve's methodology
+      once(fn)
+      val t = math.min(once(fn), once(fn))
+      System.err.println(f"[corescale] $name%-24s $t%7.2f s @ $cpus cpus")
+      name -> t
     }
     val qs = rows.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")

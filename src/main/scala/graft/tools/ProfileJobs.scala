@@ -62,6 +62,8 @@ object ProfileJobs {
       if (profiled) { jobs.clear(); stages.clear()
         spark.sparkContext.addSparkListener(listener) }
       val t0 = System.nanoTime()
+      // listener job times are epoch ms, not nanoTime
+      val t0EpochMs = System.currentTimeMillis()
       val df = fn(spark, dir)
       val t1 = System.nanoTime()
       TimingSink.rows(df)
@@ -71,7 +73,7 @@ object ProfileJobs {
         spark.sparkContext.removeSparkListener(listener)
         println(f"[jobs] $name construct=${(t1 - t0) / 1e9}%.2f s sink=${(t2 - t1) / 1e9}%.2f s jobs=${jobs.size}")
         val sorted = jobs.sortBy(_.start)
-        var prevEnd = t0 / 1000000L
+        var prevEnd = t0EpochMs
         sorted.foreach { j =>
           val dur = if (j.end > 0) (j.end - j.start) / 1e3 else -1.0
           val gap = (j.start - prevEnd) / 1e3

@@ -8,8 +8,11 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, LocalFileSystem, Path}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
+import graft.ml.Models
 import graft.pipeline.RunPipeline
 
 /** `file://` that counts the bytes read per path. */
@@ -48,6 +51,31 @@ object ReadCountingFileSystem {
       spark.conf.unset("fs.file.impl")
       spark.conf.unset("fs.file.impl.disable.cache")
     }
+  }
+}
+
+/** A job as a listener sees it at submission: its `spark.job.description`
+  * ("" when unset) and the call sites of its stages. */
+final case class JobSeen(description: String, callSites: String)
+
+object JobsSeen {
+  /** Runs `body` and returns its result and every Spark job it submitted. */
+  def recording[T](spark: SparkSession)(body: => T): (T, Seq[JobSeen]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[JobSeen]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(JobSeen(
+          Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description"))).getOrElse(""),
+          e.stageInfos.map(_.details).mkString("\n")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusDrain(sc)
+      (out, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
   }
 }
 
@@ -115,10 +143,20 @@ class RunPipelineSpec extends SparkTestBase {
     (s"$root/raw", s"$root/out")
   }
 
+  /** Every job carries the `stage <n> <name>` label of its stage. */
+  private def assertStageLabelled(jobs: Seq[JobSeen]): Unit = {
+    val unlabelled = jobs.filterNot(_.description.startsWith("stage "))
+    assert(jobs.nonEmpty && unlabelled.isEmpty,
+      s"${unlabelled.size} of ${jobs.size} jobs without a stage label, e.g. " +
+        unlabelled.headOption)
+  }
+
   test("RunPipeline: snapshot ZIP in -> full artifact tree out, stages 0-9") {
     val (rawRoot, outDir) = buildFixture()
-    val (logs, readBytes) = ReadCountingFileSystem.counting(spark) {
-      RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+    val ((logs, readBytes), jobs) = JobsSeen.recording(spark) {
+      ReadCountingFileSystem.counting(spark) {
+        RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+      }
     }
     val byStage = logs.map(l => (l.stage, l.name) -> l.status).toMap
     assert(byStage((0, "ingest")) === "success", logs.mkString("\n"))
@@ -187,6 +225,40 @@ class RunPipelineSpec extends SparkTestBase {
       Paths.get(s"$outDir/extracted/apple/apple_health_export/export.xml"))
     assert(xmlRead > 0 && passes <= 2.0,
       f"export.xml read $passes%.2f times ($xmlRead bytes): $readBytes")
+
+    // cv_summary's folds and the extended table's logreg_balanced rows
+    // come from one prediction frame, so their metrics agree
+    val cvFolds = ("\"fold\": (\\d+),[^}]*\"f1_macro\": ([^,]+), " +
+        "\"balanced_accuracy\": ([^,]+), \"cohen_kappa\": ([^,}]+)").r
+      .findAllMatchIn(cv)
+      .map(m => m.group(1).toInt -> (2 to 4).map(i => m.group(i).toDouble))
+      .toMap
+    val extLogreg = ext.drop(1).map(_.split(","))
+      .filter(_(header("model")) == "logreg_balanced")
+      .map(r => r(header("fold_id")).toInt ->
+        Seq("f1_macro", "balanced_accuracy", "cohen_kappa")
+          .map(c => r(header(c)).toDouble))
+      .toMap
+    assert(cvFolds.nonEmpty && cvFolds == extLogreg,
+      s"cv_summary folds $cvFolds vs extended logreg_balanced rows $extLogreg")
+
+    // logistic regression is fit once per fittable fold: the jobs whose
+    // call site runs through it are one direct fit's worth per fold
+    val lrFrame = "graft.ml.Models$.logisticRegression"
+    val oneFit = {
+      import spark.implicits._
+      val tiny = (0 until 40).map(i => (i % 2.0, i * 0.5, (i * 7 % 11).toDouble))
+        .toDF("som_binary", "f1", "f2")
+      JobsSeen.recording(spark) {
+        Models.logisticRegression(tiny, tiny, Seq("f1", "f2"), "som_binary")
+      }._2.count(_.callSites.contains(lrFrame))
+    }
+    val lrJobs = jobs.count(_.callSites.contains(lrFrame))
+    assert(oneFit > 0 && lrJobs == oneFit * cvFolds.size,
+      s"$lrJobs logistic-regression jobs for ${cvFolds.size} fold(s); " +
+        s"one fit submits $oneFit")
+
+    assertStageLabelled(jobs)
   }
 
   test("RunPipeline: SoM-less snapshot degrades to stages 0-4 + report") {
@@ -211,12 +283,15 @@ class RunPipelineSpec extends SparkTestBase {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
 
     val out2 = s"$outDir-nosom"
-    val logs = RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", out2)
+    val (logs, jobs) = JobsSeen.recording(spark) {
+      RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", out2)
+    }
     val byStage = logs.map(l => (l.stage, l.name) -> l.status).toMap
     assert(byStage((4, "segment")) === "success")
     assert(byStage((5, "ml-prep")) === "skipped")
     assert(byStage((9, "report")) === "success")
     assert(Files.exists(Paths.get(s"$out2/RUN_REPORT.md")))
     assert(!Files.exists(Paths.get(s"$out2/cv_summary.json")))
+    assertStageLabelled(jobs)
   }
 }

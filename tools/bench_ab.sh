@@ -19,7 +19,9 @@
 # is appended to .bench_build/ab.jsonl here; the summary gives, per
 # workload and end-to-end metric, each side's median and quartiles, the
 # change's wins (ties count for neither) and the parent's IQR, and whether
-# the median gap exceeds that IQR.
+# the median gap exceeds that IQR. It exits 1, naming the seeds and sides,
+# when any run of this invocation is incorrect (including a run that did
+# not finish) or a pair lacks a side.
 set -euo pipefail
 here="$(cd "$(dirname "$0")/.." && pwd)"
 rev=HEAD^ pairs=10 seed0=1000 pdir=
@@ -48,7 +50,7 @@ started="$(date +%s)"
 run_side() { # side dir workload seed pair
   local line
   line="$(cd "$2" && python3 snapbench/run.py --workload "$3" --seed "$4" \
-    --seconds "$seconds" --trace 0 2>"$here/.bench_build/ab-$1.stderr.log" | tail -n 1)"
+    --seconds "$seconds" --trace 0 2>"$here/.bench_build/ab-$1.stderr.log" | tail -n 1)" || true
   python3 -c 'import json,sys
 side, w, seed, pair, ab, line = sys.argv[1:7]
 try:
@@ -73,22 +75,27 @@ for w in "${workloads[@]}"; do
   done
 done
 
-python3 - "$log" "$started" "$here/BENCHMARK.json" "$sha" <<'EOF'
+python3 - "$log" "$started" "$here/BENCHMARK.json" "$sha" "$pairs" "$seed0" "${workloads[@]}" <<'EOF'
 import json, statistics, sys
 log, ab, bench, sha = sys.argv[1], int(sys.argv[2]), sys.argv[3], sys.argv[4]
+npairs, seed0, workloads = int(sys.argv[5]), int(sys.argv[6]), sys.argv[7:]
 better = {m["name"]: m["better"] for m in json.load(open(bench))["end_to_end"]}
 rows = [json.loads(l) for l in open(log)]
 rows = [r for r in rows if r.get("ab") == ab]
 def quart(v):
     return tuple(statistics.quantiles(v, n=4, method="inclusive")) if len(v) > 1 else (v[0],) * 3
 print(f"parent {sha} vs this checkout")
-for w in dict.fromkeys(r["workload"] for r in rows):
+failed = []
+for w in workloads:
     by = {(r["side"], r["pair"]): r for r in rows if r["workload"] == w}
-    pairs = sorted({p for _, p in by if ("parent", p) in by and ("change", p) in by})
-    bad = [k for k, r in by.items() if not r.get("correct")]
-    print(f"\n{w}: {len(pairs)} pairs, seeds "
-          f"{min(by[('parent', p)]['seed'] for p in pairs)}-"
-          f"{max(by[('parent', p)]['seed'] for p in pairs)}, incorrect runs: {bad or 'none'}")
+    pairs = [p for p in range(npairs) if ("parent", p) in by and ("change", p) in by]
+    bad = [f"{s} seed {seed0 + p}" for (s, p), r in sorted(by.items(), key=lambda kv: kv[0][1])
+           if not r.get("correct")]
+    missing = [f"{s} seed {seed0 + p}" for p in range(npairs)
+               for s in ("parent", "change") if (s, p) not in by]
+    failed += [f"{w}: {x} incorrect" for x in bad] + [f"{w}: {x} missing" for x in missing]
+    print(f"\n{w}: {len(pairs)} of {npairs} pairs, seeds {seed0}-{seed0 + npairs - 1}, "
+          f"incorrect runs: {', '.join(bad) or 'none'}, missing runs: {', '.join(missing) or 'none'}")
     print(f"  {'metric':<11} {'parent median [q1, q3]':>27} {'change median [q1, q3]':>27}"
           f" {'wins':>6} {'parent IQR':>10} {'gap > IQR':>9}")
     for m, b in better.items():
@@ -102,4 +109,7 @@ for w in dict.fromkeys(r["workload"] for r in rows):
         (p1, pm, p3), (c1, cm, c3) = quart(pv), quart(cv)
         print(f"  {m:<11} {pm:>9.3f} [{p1:>7.3f}, {p3:>7.3f}] {cm:>9.3f} [{c1:>7.3f}, {c3:>7.3f}]"
               f" {wins:>3}/{len(ok):<2} {p3 - p1:>10.3f} {str(sign * (pm - cm) > p3 - p1):>9}")
+if failed:
+    print("\nFAILED A/B:\n  " + "\n  ".join(failed), file=sys.stderr)
+    sys.exit(1)
 EOF
