@@ -11,8 +11,11 @@ import scala.util.control.NonFatal
   * driver code calls them sequentially). Used by the query paths that
   * construct several independent eager frames or model fits (m6's 8
   * family×fold fits, m9's 3 learning-curve arms, mm10's per-modality
-  * fingerprint materializations) and by `RunPipeline` stage 6, which fits
-  * its four model families at once.
+  * fingerprint materializations) and by `RunPipeline`: stage 1 builds
+  * its per-output branches at once (nested: the Apple branch fans its
+  * records out to three builders), stages 2-3 write their artifacts
+  * beside the next stage's work, and stage 6 fits its four model
+  * families at once.
   *
   * Why not `ExecutionContext.global` + `Await.result(Duration.Inf)`:
   * blocking indefinitely on the shared global pool is a latent hang —

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,17 +23,25 @@ import graft.operators.{Folds, Impute}
   *    fallback; Zepp optionally password-protected) + S3 extraction
   *  - 1 aggregate: S5 — one `export.xml` scan, materialized and routed by
   *    record type to the cardio, sleep and activity builders — + S7/S8
-  *    robust CSVs → daily_* frames
+  *    robust CSVs → daily_* frames. One branch per output, all
+  *    concurrently: each builds, materializes and writes its frame, and
+  *    the CSV branches run beside the XML scan. A failing branch ends the
+  *    run with a `failed` stage-1 log naming the output and its cause,
+  *    after its siblings finish
   *  - 2 unify: the five-domain `unify_all` (J11)
   *  - 3 label: segment z-scores → PBSI composite → percentile labels
-  *  - 4 segment: `segment_autolog` table
+  *  - 4 segment: `segment_autolog` table. Stages 2 and 3 each write their
+  *    artifact beside the next stage's work (`daily_unified.csv` beside
+  *    the label frame's materialization, `daily_labeled.csv` beside stage
+  *    4) and join the write before that stage returns
   *  - 5 ML prep: temporal gate + anti-leak drop (ML7 exclusions) +
   *    median impute (M1 fallback path — deterministic)
   *  - 6 ML6: LogisticRegression (the reference's stage-6 model) and the
   *    ML6-extended families (RF / GBT / LinearSVC), each fit once per fold
-  *    and all four concurrently; the primary artifacts read the logistic
-  *    predictions and the extended table comes from one metrics pass
-  *    sliced by model
+  *    and all four concurrently. The logistic fit thread writes the
+  *    primary artifacts as soon as its predictions are materialized; the
+  *    extended table comes from one metrics pass sliced by model once all
+  *    four are done
   *  - 7/8 LSTM + TFLite: out of engine scope per SURVEY (external libs)
   *  - 9 report: `Reports.writeArtifacts` tree (cv_summary.json,
   *    confusion matrices, per-class CSVs, RUN_REPORT.md)
@@ -41,16 +50,28 @@ import graft.operators.{Folds, Impute}
   * object only sequences them and lays out files. All frames stay
   * distributed — the only collects are fold boundaries (a handful of
   * rows) and the report rendering the reference also does driver-side.
-  * A frame read by more than one later job (the XML records, the Apple
+  * A frame read by more than one later job (the XML records, the stage-1
   * daily frames, `unified`, `labeled`) is materialized once with an eager
   * `localCheckpoint`, so no job replays its lineage back to the scan.
-  * Every Spark job carries the description `stage <n> <name>` of the stage
-  * that submitted it.
+  * Every Spark job carries the description `stage <n> <name> …` of the
+  * stage that submitted it; work on a pool thread adds what it builds
+  * (`stage 1 aggregate apple/daily_cardio`, `stage 6 ml6-fit rf`).
   */
 object RunPipeline {
 
   final case class StageLog(stage: Int, name: String, status: String,
                             detail: String)
+
+  /** Stage 1's outputs under `joined/`, in the order its log lists them. */
+  private val Stage1Outputs = Seq("apple/daily_cardio", "apple/daily_sleep",
+    "apple/daily_activity", "apple/daily_meds_autoexport",
+    "apple/daily_som_autoexport", "zepp/daily_cardio", "zepp/daily_sleep",
+    "zepp/zepp_daily_features")
+
+  /** A stage-1 branch that failed, named by the output it was building. */
+  private final class BranchFailed(output: String, cause: Throwable)
+      extends RuntimeException(s"$output: " + Option(cause.getMessage)
+        .flatMap(_.linesIterator.nextOption()).getOrElse(cause.toString), cause)
 
   /** Participant/site configuration the reference reads from its config
     * files; defaults match the parity fixtures. */
@@ -141,6 +162,17 @@ object RunPipeline {
     val snapDate = java.time.LocalDate.parse(snapshot)
     val extracted = s"$outDir/extracted"
     val joined = s"$outDir/joined"
+    // Writes `df` to joined/<file>.csv while `next` (the following stage's
+    // work) runs beside it; returns `next`'s result once both are done.
+    def writeAlongside[A](n: Int, name: String, df: DataFrame, file: String)
+                         (next: => A): A =
+      Concurrency.inParallel[Option[A]](s"stage$n-write", Seq(
+        () => {
+          stage(n, s"$name $file")
+          Sinks.atomicCsv(df, s"$joined/$file.csv")
+          None
+        },
+        () => Some(next))).last.get
 
     // ---------- stage 0: ingest ----------
     stage(0, "ingest")
@@ -184,98 +216,117 @@ object RunPipeline {
 
     // ---------- stage 1: aggregate ----------
     stage(1, "aggregate")
-    // export.xml is scanned once: the records frame feeds three builders,
-    // and each daily frame is written here and read again by unify
-    val appleRecords = findFirst(s"$extracted/apple", "export.xml")
-      .map(x => ReferencePipeline.appleRecords(spark, x).localCheckpoint(true))
-    val appleCardio = appleRecords.map(r =>
-      ReferencePipeline.appleDailyCardio(r).localCheckpoint(true))
-    val appleSleep = appleRecords.map(r =>
-      ReferencePipeline.appleDailySleep(r).localCheckpoint(true))
-    val appleAct = appleRecords.map(r =>
-      ReferencePipeline.appleDailyActivity(r).localCheckpoint(true))
+    // One branch per output, all concurrently: the per-domain builders are
+    // independent, so each builds its daily frame, materializes it once
+    // (unify reads it again) and writes it without waiting for the others.
+    // The Apple branch scans export.xml once and fans the materialized
+    // records out to its three builders; the CSV branches never wait for
+    // that scan.
+    def branch[T](name: String)(body: => T): T = {
+      stage(1, s"aggregate $name")
+      try body catch { case NonFatal(e) => throw new BranchFailed(name, e) }
+    }
+    def written(name: String)(build: => DataFrame): (String, DataFrame) =
+      branch(name) {
+        val df = build.localCheckpoint(true)
+        Sinks.atomicCsv(df, s"$joined/$name.csv")
+        name -> df
+      }
+    val appleXml = findFirst(s"$extracted/apple", "export.xml")
     val medsCsv = findFirst(s"$extracted/apple", "Medications.csv")
-    val meds = medsCsv.map(p => ReferencePipeline.medsDaily(
-      spark.read.option("header", "true").csv(p), snapshot))
     val somCsv = findFirst(s"$extracted/apple", "StateOfMind.csv")
-    val som = somCsv.map(p => ReferencePipeline.somDaily(
-      spark.read.option("header", "true").csv(p), Some(snapshot)))
     val globs = Discovery.zeppGlobs(extracted)
-    def zeppFiles(key: String): Seq[String] = globFiles(globs(key))
-    val zeppCardio =
-      if (!zeppExtracted) None
-      else Some(zeppFiles("HEARTRATE") ++ zeppFiles("HEARTRATE_AUTO"))
-        .filter(_.nonEmpty)
-        .map(fs => ReferencePipeline.zeppDailyCardio(readCsv(spark, fs)))
+    def zeppFiles(key: String): Seq[String] =
+      if (zeppExtracted) globFiles(globs(key)) else Nil
+    val zeppCardioFiles = zeppFiles("HEARTRATE") ++ zeppFiles("HEARTRATE_AUTO")
+    val zeppBodyFiles = zeppFiles("BODY")
+    val zeppHealthFiles = zeppFiles("HEALTH_DATA")
     // the reference keeps SLEEP_NAPS_*/SLEEP_INTERVALS_* files inside the
     // SLEEP dir — split the one glob by filename
-    val sleepAll = if (zeppExtracted) zeppFiles("SLEEP") else Nil
+    val sleepAll = zeppFiles("SLEEP")
     val napsFiles = sleepAll.filter(_.toUpperCase.contains("NAPS"))
     val intervalFiles = sleepAll.filter(_.toUpperCase.contains("INTERVALS"))
     val sleepDailyFiles = sleepAll.diff(napsFiles).diff(intervalFiles)
-    val zeppSleep =
-      Some(sleepDailyFiles).filter(_.nonEmpty).map { fs =>
-        val daily = RobustCsv.canonicalize(
-          spark.read.option("header", "true").option("escape", "\"").csv(fs: _*),
-          Map("deep_min" -> Seq("deepSleepTime", "deep_minutes"),
-            "light_min" -> Seq("shallowSleepTime", "light_minutes"),
-            "rem_min" -> Seq("REMTime", "rem_minutes")))
-        val naps = Some(napsFiles).filter(_.nonEmpty)
-          .map(n => spark.read.option("header", "true").option("escape", "\"")
-            .csv(n: _*))
-          .getOrElse(spark.range(0)
-            .select(lit(null).cast("string").as("date"),
-              lit(null).cast("string").as("naps")))
-        val intervals = Some(intervalFiles).filter(_.nonEmpty)
-          .map(i => spark.read.option("header", "true").option("escape", "\"")
-            .csv(i: _*))
-        ReferencePipeline.zeppSleepDaily(daily, naps, cfg.homeTz, Seq("naps"),
-          intervals)
+    val branches: Seq[() => Seq[(String, DataFrame)]] = Seq(
+      appleXml.map(x => () => {
+        val records = branch("apple/export.xml")(
+          ReferencePipeline.appleRecords(spark, x).localCheckpoint(true))
+        Concurrency.inParallel("stage1-apple", Seq(
+          "apple/daily_cardio" -> ReferencePipeline.appleDailyCardio _,
+          "apple/daily_sleep" -> ReferencePipeline.appleDailySleep _,
+          "apple/daily_activity" -> ReferencePipeline.appleDailyActivity _)
+          .map { case (name, build) => () => written(name)(build(records)) })
+      }),
+      medsCsv.map(p => () => Seq(written("apple/daily_meds_autoexport")(
+        ReferencePipeline.medsDaily(
+          spark.read.option("header", "true").csv(p), snapshot)))),
+      somCsv.map(p => () => Seq(written("apple/daily_som_autoexport")(
+        ReferencePipeline.somDaily(
+          spark.read.option("header", "true").csv(p), Some(snapshot))))),
+      // the Zepp cardio frame feeds both its own file and the legacy
+      // zepp_daily_features consolidation (_merge_on_date)
+      Option.when((zeppCardioFiles ++ zeppBodyFiles ++ zeppHealthFiles)
+          .nonEmpty)(() => {
+          val cardio = Some(zeppCardioFiles).filter(_.nonEmpty).map(fs =>
+            written("zepp/daily_cardio")(
+              ReferencePipeline.zeppDailyCardio(readCsv(spark, fs))))
+          cardio.toSeq :+ written("zepp/zepp_daily_features")(
+            ReferencePipeline.zeppDailyFeatures(cardio.map(_._2).toSeq ++
+              Some(zeppBodyFiles).filter(_.nonEmpty).map(fs =>
+                ReferencePipeline.zeppBodyDaily(readCsv(spark, fs),
+                  cfg.tzCutover, cfg.tzBefore, cfg.tzAfter)) ++
+              Some(zeppHealthFiles).filter(_.nonEmpty).map(fs =>
+                ReferencePipeline.zeppHealthDaily(readCsv(spark, fs),
+                  cfg.tzCutover, cfg.tzBefore, cfg.tzAfter))))
+        }),
+      Some(sleepDailyFiles).filter(_.nonEmpty).map(fs => () => Seq(
+        written("zepp/daily_sleep") {
+          val daily = RobustCsv.canonicalize(
+            spark.read.option("header", "true").option("escape", "\"")
+              .csv(fs: _*),
+            Map("deep_min" -> Seq("deepSleepTime", "deep_minutes"),
+              "light_min" -> Seq("shallowSleepTime", "light_minutes"),
+              "rem_min" -> Seq("REMTime", "rem_minutes")))
+          val naps = Some(napsFiles).filter(_.nonEmpty)
+            .map(n => spark.read.option("header", "true")
+              .option("escape", "\"").csv(n: _*))
+            .getOrElse(spark.range(0)
+              .select(lit(null).cast("string").as("date"),
+                lit(null).cast("string").as("naps")))
+          val intervals = Some(intervalFiles).filter(_.nonEmpty)
+            .map(i => spark.read.option("header", "true")
+              .option("escape", "\"").csv(i: _*))
+          ReferencePipeline.zeppSleepDaily(daily, naps, cfg.homeTz,
+            Seq("naps"), intervals)
+        }))).flatten
+    val stage1 =
+      try Concurrency.inParallel("stage1", branches).flatten.toMap
+      catch {
+        case f: BranchFailed =>
+          logs += StageLog(1, "aggregate", "failed", f.getMessage)
+          return logs.toSeq
       }
-    val zeppBody =
-      if (!zeppExtracted) None
-      else Some(zeppFiles("BODY")).filter(_.nonEmpty).map(fs =>
-        ReferencePipeline.zeppBodyDaily(readCsv(spark, fs),
-          cfg.tzCutover, cfg.tzBefore, cfg.tzAfter))
-    val zeppHealth =
-      if (!zeppExtracted) None
-      else Some(zeppFiles("HEALTH_DATA")).filter(_.nonEmpty).map(fs =>
-        ReferencePipeline.zeppHealthDaily(readCsv(spark, fs),
-          cfg.tzCutover, cfg.tzBefore, cfg.tzAfter))
-    // legacy zepp_daily_features consolidation (_merge_on_date)
-    val zeppFeatures = Some(Seq(zeppCardio, zeppBody, zeppHealth).flatten)
-      .filter(_.nonEmpty).map(ReferencePipeline.zeppDailyFeatures)
-    val stage1 = Seq(
-      ("apple/daily_cardio", appleCardio), ("apple/daily_sleep", appleSleep),
-      ("apple/daily_activity", appleAct),
-      ("apple/daily_meds_autoexport", meds),
-      ("apple/daily_som_autoexport", som),
-      ("zepp/daily_cardio", zeppCardio), ("zepp/daily_sleep", zeppSleep),
-      ("zepp/zepp_daily_features", zeppFeatures))
-    stage1.foreach { case (name, df) =>
-      df.foreach(d => Sinks.atomicCsv(d, s"$joined/$name.csv"))
-    }
     logs += StageLog(1, "aggregate",
-      if (stage1.exists(_._2.isDefined)) "success" else "failed",
-      stage1.collect { case (n, Some(_)) => n }.mkString(", "))
-    if (!stage1.exists(_._2.isDefined)) return logs.toSeq
+      if (stage1.nonEmpty) "success" else "failed",
+      Stage1Outputs.filter(stage1.contains).mkString(", "))
+    if (stage1.isEmpty) return logs.toSeq
 
     // ---------- stage 2: unify ----------
     stage(2, "unify")
     val unified = ReferencePipeline.unifyAllDomains(
-      ReferencePipeline.unifySleepDomains(appleSleep, zeppSleep),
-      ReferencePipeline.unifyCardioDomains(appleCardio, zeppCardio),
-      ReferencePipeline.unifyActivityDomains(appleAct, None),
+      ReferencePipeline.unifySleepDomains(stage1.get("apple/daily_sleep"),
+        stage1.get("zepp/daily_sleep")),
+      ReferencePipeline.unifyCardioDomains(stage1.get("apple/daily_cardio"),
+        stage1.get("zepp/daily_cardio")),
+      ReferencePipeline.unifyActivityDomains(
+        stage1.get("apple/daily_activity"), None),
       ReferencePipeline.unifyMedsDomain(
-        meds.map(m => "apple_autoexport" -> m).toSeq),
-      ReferencePipeline.unifySomDomain(som))
+        stage1.get("apple/daily_meds_autoexport")
+          .map("apple_autoexport" -> _).toSeq),
+      ReferencePipeline.unifySomDomain(stage1.get("apple/daily_som_autoexport")))
       .localCheckpoint(true) // written, then read by every label job
-    Sinks.atomicCsv(unified, s"$joined/daily_unified.csv")
-    logs += StageLog(2, "unify", "success",
-      s"${unified.columns.length} cols")
 
     // ---------- stage 3: label ----------
-    stage(3, "label")
     // unify_all's frame carries no provenance flags; labelDaily's quality
     // factor reads the canonical form's missing_/source_ columns. Derive
     // them with the same any-non-null rule unifyCanonical applies.
@@ -291,15 +342,21 @@ object RunPipeline {
       .withColumn("missing_activity",
         (!haveAny("total_steps", "total_distance", "total_active_energy"))
           .cast("int"))
-    val labeled = ReferencePipeline.labelDaily(withProvenance)
-      .localCheckpoint(true) // consumed by stages 4, 5, 6 and the report
-    Sinks.atomicCsv(labeled, s"$joined/daily_labeled.csv")
+    val labeled = writeAlongside(2, "unify", unified, "daily_unified") {
+      stage(3, "label")
+      // consumed by stages 4, 5, 6 and the report
+      ReferencePipeline.labelDaily(withProvenance).localCheckpoint(true)
+    }
+    logs += StageLog(2, "unify", "success",
+      s"${unified.columns.length} cols")
     logs += StageLog(3, "label", "success", "pbsi labels attached")
 
     // ---------- stage 4: segment ----------
-    stage(4, "segment")
-    val segments = ReferencePipeline.segmentAutolog(labeled)
-    Sinks.atomicCsv(segments, s"$joined/segment_autolog.csv")
+    writeAlongside(3, "label", labeled, "daily_labeled") {
+      stage(4, "segment")
+      Sinks.atomicCsv(ReferencePipeline.segmentAutolog(labeled),
+        s"$joined/segment_autolog.csv")
+    }
     logs += StageLog(4, "segment", "success", "segment_autolog written")
 
     // ---------- stage 5: ML prep ----------
@@ -404,48 +461,56 @@ object RunPipeline {
     // Each family is fit once per fold, all four concurrently: a fit is a
     // chain of small MLlib jobs bound by driver and scheduling latency, not
     // compute, so overlapping them leaves about the slowest family. Each
-    // family's fold predictions are materialized once; the primary
-    // artifacts and the extended table both read them.
-    val preds =
+    // family's fold predictions are materialized once. The primary
+    // artifacts need only the logistic predictions, so its fit thread
+    // writes them while the slower families are still fitting; the
+    // extended table reads every family's predictions.
+    val primary = families.head._1
+    val fits =
       if (foldData.isEmpty) Nil
       else Concurrency.inParallel("ml6-fits", families.map { case (name, fit) =>
         () => {
           // pool threads start with the submitting thread's description
           stage(6, s"ml6-fit $name")
-          foldData.map { case (fid, train, valD) =>
+          val pred = foldData.map { case (fid, train, valD) =>
             fit(train, valD).select(lit(name).as("model"),
               lit(fid).as("fold_id"), col("date"),
               col("som_binary").cast("int").cast("string").as("y_true"),
               col("y_pred").cast("int").cast("string").as("y_pred_s"))
           }.reduce(_ unionByName _).localCheckpoint(true)
+          val summary = Option.when(name == primary) {
+            stage(6, "ml6")
+            Reports.writeArtifacts(labeled, pred.drop("model"),
+              "fold_id", "y_true", "y_pred_s", "date", classes,
+              model = primary, featureSet = "FS-B",
+              target = "som_binary", nFeatures = features.size,
+              participant = participant, snapshot = snapshot,
+              stagesExecuted = "0-9", generatedAt = generatedAt,
+              outDir = outDir, trainCounts = Some(trainCounts))
+          }
+          (pred, summary)
         }
       })
-    preds.headOption match {
-      case Some(pred) =>
-        val summary = Reports.writeArtifacts(labeled, pred.drop("model"),
-          "fold_id", "y_true", "y_pred_s", "date", classes,
-          model = families.head._1, featureSet = "FS-B",
-          target = "som_binary", nFeatures = features.size,
-          participant = participant, snapshot = snapshot,
-          stagesExecuted = "0-9", generatedAt = generatedAt,
-          outDir = outDir, trainCounts = Some(trainCounts))
+    fits.headOption.flatMap(_._2) match {
+      case Some(summary) =>
         logs += StageLog(6, "ml6", "success",
-          s"${summary.folds.size} folds, ${families.head._1}")
+          s"${summary.folds.size} folds, $primary")
         // ML6-extended: per-fold metric rows for every family, one pass
         stage(6, "ml6-ext")
-        Sinks.atomicCsv(Reports.perFoldMetrics(preds.reduce(_ unionByName _),
+        Sinks.atomicCsv(Reports.perFoldMetrics(
+            fits.map(_._1).reduce(_ unionByName _),
             "fold_id", "y_true", "y_pred_s", "date", classes,
             Some(trainCounts), sliceCols = Seq("model"))
           .select("model", "fold_id", "val_start", "val_end", "n_train",
             "n_val", "f1_macro", "balanced_accuracy", "cohen_kappa"),
           s"$outDir/metrics/ml6_extended_summary.csv")
-        logs += StageLog(6, "ml6-ext", "success", s"${preds.size} families")
+        logs += StageLog(6, "ml6-ext", "success", s"${fits.size} families")
       case None =>
         logs += StageLog(6, "ml6", "skipped", "all folds single-class")
     }
     logs += StageLog(7, "ml7-lstm", "skipped", "out of engine scope (SURVEY M5)")
     logs += StageLog(8, "tflite", "skipped", "out of engine scope (SURVEY M5)")
-    if (preds.isEmpty) {
+    if (fits.isEmpty) {
       stage(9, "report")
       Sinks.atomicText(spark, s"$outDir/RUN_REPORT.md",
         Reports.runReportMd(labeled, participant, snapshot, "0-6",

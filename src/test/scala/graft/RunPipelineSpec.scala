@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, LocalFileSystem, Path}
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 import graft.ml.Models
@@ -54,27 +54,36 @@ object ReadCountingFileSystem {
   }
 }
 
-/** A job as a listener sees it at submission: its `spark.job.description`
-  * ("" when unset) and the call sites of its stages. */
-final case class JobSeen(description: String, callSites: String)
+/** A job as a listener sees it: its `spark.job.description` ("" when
+  * unset), the call sites of its stages, and its start and end times
+  * (epoch ms; the end is the start for a job that never reported one). */
+final case class JobSeen(description: String, callSites: String,
+                         start: Long, end: Long) {
+  def overlaps(o: JobSeen): Boolean = start < o.end && o.start < end
+}
 
 object JobsSeen {
   /** Runs `body` and returns its result and every Spark job it submitted. */
   def recording[T](spark: SparkSession)(body: => T): (T, Seq[JobSeen]) = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[JobSeen]()
+    val started = new ConcurrentHashMap[Int, JobSeen]()
+    val ended = new ConcurrentHashMap[Int, java.lang.Long]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(JobSeen(
+        started.put(e.jobId, JobSeen(
           Option(e.properties).flatMap(p =>
             Option(p.getProperty("spark.job.description"))).getOrElse(""),
-          e.stageInfos.map(_.details).mkString("\n")))
+          e.stageInfos.map(_.details).mkString("\n"), e.time, e.time))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ended.put(e.jobId, e.time)
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
       val out = body
       ListenerBusDrain(sc)
-      (out, seen.asScala.toSeq)
+      (out, started.asScala.toSeq.sortBy(_._1).map { case (id, j) =>
+        Option(ended.get(id)).fold(j)(t => j.copy(end = t))
+      })
     } finally sc.removeSparkListener(listener)
   }
 }
@@ -89,7 +98,9 @@ object JobsSeen {
   * order, file layout, skip semantics, and the report tree. */
 class RunPipelineSpec extends SparkTestBase {
 
-  private def buildFixture(): (String, String) = {
+  /** `medsDate` names the Medications.csv date column, so a spec can
+    * drift the header. */
+  private def buildFixture(medsDate: String = "Date"): (String, String) = {
     val root = Files.createTempDirectory("graft-runpipe").toString
     val rawDir = Paths.get(root, "raw", "P000001", "apple", "export")
     Files.createDirectories(rawDir)
@@ -115,7 +126,7 @@ class RunPipelineSpec extends SparkTestBase {
     xml ++= "</HealthData>\n"
 
     val meds = new StringBuilder
-    meds ++= "Date,Medication,Nickname,Dosage,Unit,Status,Archived,Codings\n"
+    meds ++= s"$medsDate,Medication,Nickname,Dosage,Unit,Status,Archived,Codings\n"
     days.zipWithIndex.foreach { case (d, i) =>
       if (i % 2 == 0)
         meds ++= s"$d 09:00:00 +0000,Sertraline,,50,mg,Taken,No,\n"
@@ -259,6 +270,40 @@ class RunPipelineSpec extends SparkTestBase {
         s"one fit submits $oneFit")
 
     assertStageLabelled(jobs)
+
+    // stage 1 runs one branch per output concurrently, so jobs building
+    // two different outputs overlap in time
+    val stage1Jobs = jobs.filter(_.description.startsWith("stage 1 "))
+    assert(stage1Jobs.exists(a => stage1Jobs.exists(b =>
+        a.description != b.description && a.overlaps(b))),
+      "no two stage-1 outputs overlap: " +
+        stage1Jobs.map(j => s"${j.description} [${j.start}, ${j.end}]"))
+  }
+
+  test("RunPipeline: a failing stage-1 branch is a named stage failure") {
+    // Medications.csv's header drifted: `When` where `Date` was
+    val (rawRoot, outDir) = buildFixture(medsDate = "When")
+    val (logs, jobs) = JobsSeen.recording(spark) {
+      RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+    }
+    val last = logs.last
+    assert((last.stage, last.name, last.status) === ((1, "aggregate", "failed")),
+      logs.mkString("\n"))
+    assert(last.detail.startsWith("apple/daily_meds_autoexport: ") &&
+      last.detail.contains("`Date`") && !last.detail.contains("\n"), last.detail)
+    // stage 2 never starts
+    assert(logs.forall(_.stage <= 1), logs.mkString("\n"))
+    assert(!jobs.exists(_.description.startsWith("stage 2")))
+    assertStageLabelled(jobs)
+    // the sibling branches finished their writes first, and no write was
+    // left half done
+    val files = scala.util.Using.resource(
+      Files.walk(Paths.get(outDir, "joined")))(_.iterator().asScala.map(_.toString).toSeq)
+    for (f <- Seq("apple/daily_cardio", "apple/daily_sleep",
+        "apple/daily_activity", "apple/daily_som_autoexport"))
+      assert(files.contains(s"$outDir/joined/$f.csv"), s"missing $f: $files")
+    assert(!files.exists(_.endsWith("daily_meds_autoexport.csv")), files)
+    assert(!files.exists(_.endsWith(".__tmp__")), files)
   }
 
   test("RunPipeline: SoM-less snapshot degrades to stages 0-4 + report") {

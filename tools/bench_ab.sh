@@ -8,7 +8,8 @@
 #   -n PAIRS       pairs per workload (default 10)
 #   -s FIRST_SEED  pair i uses seed FIRST_SEED+i on both sides (default 1000)
 #   -d PARENT_DIR  where REV's files are unpacked (default
-#                  ${TMPDIR:-/tmp}/bench_ab-<rev>); reused if present
+#                  ${TMPDIR:-/tmp}/bench_ab-<rev>); reused if present and
+#                  stamped with REV's sha, refused (exit 2) otherwise
 #   WORKLOAD       default: every workload in BENCHMARK.json
 #
 #   tools/bench_ab.sh -r HEAD -n 10 -s 301 ingest_8y
@@ -28,15 +29,24 @@ rev=HEAD^ pairs=10 seed0=1000 pdir=
 while getopts "r:n:s:d:" o; do
   case "$o" in
     r) rev=$OPTARG ;; n) pairs=$OPTARG ;; s) seed0=$OPTARG ;; d) pdir=$OPTARG ;;
-    *) sed -n '2,13p' "$0" >&2; exit 2 ;;
+    *) sed -n '2,14p' "$0" >&2; exit 2 ;;
   esac
 done
 shift $((OPTIND - 1))
 sha="$(git -C "$here" rev-parse --short "$rev")"
+full="$(git -C "$here" rev-parse "$rev^{commit}")"
 pdir="${pdir:-${TMPDIR:-/tmp}/bench_ab-$sha}"
+# the stamp names the commit unpacked in PARENT_DIR, written only once the
+# unpack has finished, so a reused directory is known to hold REV
+stamp="$pdir/.bench_ab-sha"
 if [ ! -d "$pdir" ]; then
   mkdir -p "$pdir"
-  git -C "$here" archive "$sha" | tar -x -C "$pdir"
+  git -C "$here" archive "$full" | tar -x -C "$pdir"
+  echo "$full" >"$stamp"
+elif [ "$(cat "$stamp" 2>/dev/null)" != "$full" ]; then
+  echo "bench_ab: $pdir holds $(cat "$stamp" 2>/dev/null || echo "no stamped commit")," \
+    "not $rev ($full); remove it or pass another -d" >&2
+  exit 2
 fi
 seconds="$(python3 -c 'import json,sys; print(json.load(open(sys.argv[1]))["run_seconds"])' "$here/BENCHMARK.json")"
 workloads=("$@")
