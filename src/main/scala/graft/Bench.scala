@@ -1,12 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Contention gate: sample the 1-min load BEFORE Spark ramps up. A
     // quiet host sits near 0 here; anything materially above it means
-    // another job (sbt compile, a ScaleCurve/probe run) shares the
+    // another job (sbt compile, a second bench run) shares the
     // machine and the suite's timings will be polluted — the round-8
     // committed bench was exactly such a run (same surface, 145.9 s
     // quiet vs 196.5 s contended, the slower one committed). The run
@@ -20,21 +18,7 @@ object Bench {
       System.err.println(f"[bench] WARNING: load_avg $loadAtStart%.2f at " +
         "start — another job shares this host; timings will be polluted. " +
         "The output JSON carries \"contended\": true.")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Even with the UI off, the SQL status listener retains completed
-      // executions — plan graphs included — in driver memory (default
-      // 1000). Over 100+ queries x multiple actions x adaptive reruns
-      // that store is pure suite-state heap aging the later queries pay
-      // for in GC time. Keep only a handful.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus)
     // warm up the session (codegen, file listing, parquet footers) so the
     // first timed query doesn't carry JVM/session startup.
     graft.core.Tables.names.foreach { t =>
@@ -170,8 +154,7 @@ object Bench {
     // the identical line to a committed file so timing history survives
     // independently of stdout plumbing. Filtered dev runs
     // (SPARK_GRAFT_ONLY) must NOT write: a partial-surface line would
-    // silently replace the committed full-surface artifact (the same
-    // rule ScaleCurve applies to SCALING.md).
+    // silently replace the committed full-surface artifact.
     if (only.nonEmpty) {
       System.err.println("[bench] filtered run — BENCH_LOCAL.json not written")
     } else try {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,7 +8,8 @@ object Verify {
       s"usage: graft.Verify <sfDir> <outDir> [name1,name2,...] (got ${args.length} args)")
     val sfDir = args(0); val outDir = args(1)
     // Optional third arg: run only these queries (dev loop; the driver
-    // always runs the full set).
+    // always runs the full set). A failing query's stack trace goes to
+    // stderr, so one named query doubles as the diagnosis loop.
     val only = args.lift(2).map(_.split(',').toSet)
     only.foreach { names =>
       val unknown = names -- SparkEntry.queries.keySet
@@ -19,19 +19,7 @@ object Verify {
     }
     val selected = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter { case (k, _) => names(k) })
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Suite-state hygiene (same lesson as Bench.scala): the SQL status
-      // listener retains up to 1000 completed executions' plan graphs
-      // even with the UI off — across 100+ queries that ages the driver
-      // heap and slows late-suite runs.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus)
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.ListBuffer.empty[(String, String)]
     selected.foreach { case (name, fn) =>
@@ -39,6 +27,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        e.printStackTrace()
         failures += name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}"
       }
     }

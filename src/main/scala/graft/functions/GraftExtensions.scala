@@ -25,7 +25,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * Two wiring paths, same registrations:
   *
   *  - new sessions: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  *    (or `SparkSession.builder.withExtensions(new GraftExtensions)`);
+  *    (or the session builder's `withExtensions(new GraftExtensions)`);
   *  - an existing session: `GraftExtensions.register(spark)` — the
   *    injection hook only runs at session construction, so a live
   *    session (notebook, test harness) registers into its own function

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 import scala.jdk.CollectionConverters._
@@ -199,7 +200,7 @@ object Dedup {
   /** [[lshCandidates]] with deterministic cache lifetime: the candidate
     * pairs are materialized eagerly (localCheckpoint severs the lineage,
     * so downstream consumers never re-read the signature), then the
-    * signature cache is released. Use for repeated invocations over
+    * signature checkpoint is released. Use for repeated invocations over
     * different inputs, where the lazy variant would accumulate cache
     * entries until LRU pressure. */
   def lshCandidatesEager(sig: DataFrame, idCol: String, numHashes: Int,
@@ -208,11 +209,15 @@ object Dedup {
     // kernel runs once, every band branch reads the materialized rows)
     // minus the cache's columnar re-encode, which the job profile
     // measured at ~0.7 s on a 5k-row signature frame (the block-store
-    // checkpoint keeps UnsafeRows as-is). Lifetime is deterministic
-    // either way: the checkpointed blocks free with the RDD handle.
+    // checkpoint keeps UnsafeRows as-is). Left alone, its blocks would
+    // free only when the ContextCleaner sees the RDD handle GC'd; once the
+    // result is materialized nothing reads them, so unpersist them here.
     val cached = sig.localCheckpoint(eager = true)
-    bandJoin(cached, idCol, numHashes, rowsPerBand)
+    val pairs = bandJoin(cached, idCol, numHashes, rowsPerBand)
       .localCheckpoint(eager = true)
+    cached.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
+    pairs
   }
 
   /** One band-key expression per band over mh0..mh{numHashes-1} — sha60

@@ -7,7 +7,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Concurrency, Sinks}
+import graft.core.{Concurrency, Sessions, Sinks}
 import graft.ingest.{Discovery, EncryptedZip, RobustCsv, ZipExtract}
 import graft.ml.Models
 import graft.operators.{Folds, Impute}
@@ -81,22 +81,12 @@ object RunPipeline {
       tzBefore: String = "Europe/Dublin",
       tzAfter: String = "America/New_York",
       mlCutoff: String = "0001-01-01",
-      foldsMonthly: Boolean = true,
-      trainDays: Int = 28, valDays: Int = 14, nFolds: Int = 4,
       zeppPassword: Option[String] = None)
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,
       "usage: graft.pipeline.RunPipeline <rawRoot> <participant> <snapshot:YYYY-MM-DD> <outDir> [zeppPassword]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus)
     val logs = run(spark, args(0), args(1), args(2), args(3),
       Config(zeppPassword = args.lift(4)))
     logs.foreach(l =>
@@ -382,32 +372,12 @@ object RunPipeline {
 
     // ---------- stage 6: ML6 + extended families ----------
     stage(6, "ml6")
-    // Both fold branches land on the same summary shape. The monthly
-    // frame's bounds mirror the reference's build_month_windows: a
+    // The fold bounds mirror the reference's build_month_windows: a
     // BOUNDED train window [train_start, val_start) and an EXCLUSIVE
-    // val_end. The day-based branch summarizes actual role dates, so its
-    // val_end is an inclusive max date — flagged per row so the fold
-    // slicing applies the right comparison.
-    val foldFrame =
-      if (cfg.foldsMonthly)
-        Folds.calendarFoldsMonthly(prepped, "date", "som_binary")
-          .select(col("fold_id"), col("train_start"), col("val_start"),
-            col("val_end"), col("n_train"),
-            lit(false).as("val_end_inclusive"))
-      else
-        Folds.calendarFolds(prepped, "date", cfg.trainDays, cfg.valDays,
-          cfg.nFolds, cfg.valDays)
-          .groupBy("fold_id")
-          .agg(
-            min(when(col("role") === "train", col("date"))).as("train_start"),
-            min(when(col("role") === "val", col("date"))).as("val_start"),
-            max(when(col("role") === "val", col("date"))).as("val_end"),
-            sum(when(col("role") === "train", 1L).otherwise(0L)).as("n_train"))
-          .filter(col("val_start").isNotNull)
-          .withColumn("val_end_inclusive", lit(true))
-    val foldRows = foldFrame
-      .select("fold_id", "train_start", "val_start", "val_end", "n_train",
-        "val_end_inclusive").collect()
+    // val_end.
+    val foldRows = Folds.calendarFoldsMonthly(prepped, "date", "som_binary")
+      .select("fold_id", "train_start", "val_start", "val_end", "n_train")
+      .collect()
     if (foldRows.isEmpty) {
       logs += StageLog(6, "ml6", "skipped", "no usable calendar folds")
       stage(9, "report")
@@ -435,13 +405,11 @@ object RunPipeline {
     val foldData = foldRows.toSeq.map { r =>
       val (fid, ts, vs, ve) =
         (r.getInt(0), r.getDate(1), r.getDate(2), r.getDate(3))
-      val veInclusive = r.getBoolean(5)
       val train =
         (if (ts == null) typed.filter(lit(false))
          else typed.filter(col("date") >= lit(ts) && col("date") < lit(vs)))
           .localCheckpoint(true)
-      val valD = typed.filter(col("date") >= lit(vs) &&
-          (if (veInclusive) col("date") <= lit(ve) else col("date") < lit(ve)))
+      val valD = typed.filter(col("date") >= lit(vs) && col("date") < lit(ve))
         .localCheckpoint(true)
       // folds whose train side is single-class can't fit — skip, as the
       // reference's fold guard does

@@ -13,10 +13,6 @@ import graft.operators._
   */
 object MlQueries {
 
-  /** Exposed for [[graft.tools.ProfileM6]] (the m6 fit-cost probe). */
-  def dailyUserFrame(s: SparkSession, dir: String): DataFrame =
-    dailyUser(s, dir)
-
   private def dailyUser(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
       .groupBy(col("user_id"), to_date(col("ts")).as("date"))
@@ -822,15 +818,15 @@ object MlQueries {
       // Boundary: the union of the 8 fits' PREDICTION frames (tiny —
       // validation rows) is consumed once per family by the metrics
       // passes below; without it each pass re-executes all 8 lazy
-      // model transforms (the fits themselves are eager, but ProfileM6
-      // measured the full query at ~2.7x the concurrent fit wall —
-      // the metrics tail replaying transforms was most of the gap).
-      // ProfileM6 breakdown (sf0.1, min-of-2): per-(family,fold) fits
-      // sum to ~15 s sequential — svc/gbt are the heavy families
-      // (~2.3-2.9 s each vs ~1.0-1.25 for rf/logreg; MLlib iteration
-      // scheduling, not compute) — the concurrent form collapses that
-      // to a ~3.5-6.4 s wall, and with this checkpoint the metrics
-      // tail adds ~2 s (was ~6 s replaying transforms).
+      // model transforms (the fits themselves are eager, but the
+      // since-retired ProfileM6 probe measured the full query at ~2.7x
+      // the concurrent fit wall — the metrics tail replaying transforms
+      // was most of the gap). ProfileM6 breakdown (sf0.1, min-of-2):
+      // per-(family,fold) fits sum to ~15 s sequential — svc/gbt are
+      // the heavy families (~2.3-2.9 s each vs ~1.0-1.25 for rf/logreg;
+      // MLlib iteration scheduling, not compute) — the concurrent form
+      // collapses that to a ~3.5-6.4 s wall, and with this checkpoint
+      // the metrics tail adds ~2 s (was ~6 s replaying transforms).
       val all = preds.reduce(_ unionByName _).localCheckpoint(true)
       // ONE sliced metrics pass over the checkpointed union instead of
       // four filtered perFoldMetrics chains (each was its own 3-agg +

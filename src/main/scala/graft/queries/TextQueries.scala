@@ -58,10 +58,8 @@ object TextQueries {
   }
   /** e2e_c4_prep's word-wrap segmentation preamble (see that query's
     * comment for why it exists): the corpus word stream wrapped into
-    * lines of W = 4 + doc_id%4 words, terminal period. Public so
-    * ProfileE2E stages the C4 composition from the same frames the
-    * bench times. */
-  def c4SegmentedDocs(s: SparkSession, dir: String): DataFrame = {
+    * lines of W = 4 + doc_id%4 words, terminal period. */
+  private def c4SegmentedDocs(s: SparkSession, dir: String): DataFrame = {
     // fused WordWrap kernel — RuleKernelsSpec-pinned value-identical to
     // the composable sequence/slice/array_join wrap (the composable form
     // paid three CodegenFallback HOFs per document)
@@ -75,9 +73,9 @@ object TextQueries {
   /** dd28's deterministic PII planting (the synthetic corpus is
     * PII-free): %11==3 docs get an email + a dashed phone (two separated
     * spans), %11==7 two ADJACENT IPv4 tokens (span merging carries
-    * traffic). Shared by the dd28 fixture, the e2e_decontam_prep redact
-    * stage, and ProfileE2E's stage replay; the SQL twins restate it. */
-  def plantPii(docs: DataFrame): DataFrame = docs.withColumn("text",
+    * traffic). Shared by the dd28 fixture and the e2e_decontam_prep
+    * redact stage; the SQL twins restate it. */
+  private def plantPii(docs: DataFrame): DataFrame = docs.withColumn("text",
     when(col("doc_id") % 11 === 3,
       concat(col("text"), lit(" mail u"), col("doc_id").cast("string"),
         lit("@mail.example or 555-010-"),

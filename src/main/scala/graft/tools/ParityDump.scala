@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import graft.core.Sessions
 import graft.pipeline.ReferencePipeline
 
 /** Dev harness: run a reference-contract operator on a fixture CSV and
@@ -13,13 +13,7 @@ object ParityDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: ParityDump <meds|pbsi> <in> <out> [snapshot]")
     val Array(task, in, out) = args.take(3)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus)
     val df = task match {
       case "meds" =>
         val csv = spark.read.option("header", "true").csv(in)

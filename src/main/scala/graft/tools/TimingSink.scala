@@ -2,8 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 
-/** The timing sink every measurement tool (Bench / ScaleCurve /
-  * DeepDocsProbe / ProfileE2E) consumes a query through.
+/** The timing sink `Bench` consumes a query through, and the one
+  * `PlanAudit`'s `loj_agg` column points hand-rolled timers to.
   *
   * `df.count()` is NOT a valid timing sink: it wraps the plan in a new
   * count aggregate and re-optimizes, and the optimizer is then free to

@@ -153,7 +153,14 @@ class DriftDedupSpec extends SparkTestBase {
     val fused = Dedup.lshVerifiedPairs(docs, "doc_id", "text", 2, 4, 2, 0.05)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val sig = Dedup.minhashSignature(docs, "doc_id", "text", 2, 4)
+    // the eager variant leaves only its result's checkpoint persisted:
+    // the signature checkpoint is released before it returns
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val cand = Dedup.lshCandidatesEager(sig, "doc_id", 4, 2)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+    val resultRdd = cand.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }
+    assert(added.toSeq === resultRdd)
     val composed = Dedup.verifyPairsJaccard(cand, docs, "doc_id", "text", 2, 0.05)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(fused === composed)

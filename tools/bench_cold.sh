@@ -19,6 +19,5 @@ shift || true
 for q in "$@"; do
   echo "=== $q (cold JVM, sf=$SF_DIR) ==="
   SPARK_GRAFT_ONLY="$q" SPARK_GRAFT_SF_DIR="$SF_DIR" \
-    SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
     sbt -batch "runMain graft.Bench" 2>&1 | grep -E 'bench-gauge|"metric"'
 done
