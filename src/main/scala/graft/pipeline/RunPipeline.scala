@@ -6,6 +6,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.core.{Concurrency, Sessions, Sinks}
 import graft.ingest.{Discovery, EncryptedZip, RobustCsv, ZipExtract}
@@ -46,6 +47,20 @@ import graft.operators.{Folds, Impute}
   *  - 9 report: `Reports.writeArtifacts` tree (cv_summary.json,
   *    confusion matrices, per-class CSVs, RUN_REPORT.md)
   *
+  * Stages 2-9 run interpreted: Spark's whole-stage code generation and
+  * its generated projections, predicates and orderings are off for them
+  * (see [[interpreted]]). Every frame after stage 1 has one row per
+  * calendar day, a few thousand rows at most, so compiling and JIT-ing a
+  * single-use class for each expression costs more than evaluating it
+  * row by row. Stage 1 keeps code generation: it scans and aggregates the
+  * whole export (4.7 M records at the paper's scale), and as the settings
+  * are session-wide they can only change once all its concurrent
+  * branches have finished.
+  *
+  * A stage that throws ends the run with a `failed` log naming that stage
+  * and the first line of the cause, as a stage-1 branch does; `main`
+  * then exits 1.
+  *
   * Every stage is the already-parity-checked library operator; this
   * object only sequences them and lays out files. All frames stay
   * distributed — the only collects are fold boundaries (a handful of
@@ -68,10 +83,48 @@ object RunPipeline {
     "apple/daily_som_autoexport", "zepp/daily_cardio", "zepp/daily_sleep",
     "zepp/zepp_daily_features")
 
+  private def firstLine(e: Throwable): String =
+    Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+      .getOrElse(e.toString)
+
   /** A stage-1 branch that failed, named by the output it was building. */
   private final class BranchFailed(output: String, cause: Throwable)
-      extends RuntimeException(s"$output: " + Option(cause.getMessage)
-        .flatMap(_.linesIterator.nextOption()).getOrElse(cause.toString), cause)
+      extends RuntimeException(s"$output: ${firstLine(cause)}", cause)
+
+  /** Stage `stage` of 2-9 failed; the message is the cause's first line. */
+  private final class StageFailed(val stage: Int, val name: String,
+                                  cause: Throwable)
+      extends RuntimeException(firstLine(cause), cause)
+
+  /** Runs `body` (stages 2-9) without generated code: no whole-stage
+    * code generation, and the interpreted form of every projection,
+    * predicate and ordering (`factoryMode` NO_CODEGEN). Then puts each
+    * conf back as it was: its previous value if one was set, else unset.
+    * (`conf.getOption` reports the default for an unset key, so restoring
+    * from it would leave the default pinned as an explicit setting.)
+    *
+    * `spark.sql.codegen.factoryMode` is an internal Spark conf, used here
+    * because it is the only switch for the classes tasks generate on
+    * their own threads (`UnsafeProjection`, `Ordering` and the like);
+    * `wholeStage=false` alone gave about a third of the saving. The
+    * interpreted objects it selects are the ones Spark's default
+    * `FALLBACK` mode uses whenever a compile fails, so output must not
+    * change; the snapbench digests (`snapbench/expected.json`) check that
+    * on both workloads, and `RunPipelineSpec` checks that every stage 2-9
+    * SQL job, and no stage 0-1 job, carries the setting and that the
+    * confs are restored. The session is shared, so every thread `body`
+    * starts must be joined before it returns; the confs must never
+    * outlive the call. */
+  private def interpreted[A](spark: SparkSession)(body: => A): A = {
+    val confs = Seq(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+      SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN")
+    val before = spark.conf.getAll
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally confs.foreach { case (k, _) =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 
   /** Participant/site configuration the reference reads from its config
     * files; defaults match the parity fixtures. */
@@ -92,6 +145,7 @@ object RunPipeline {
     logs.foreach(l =>
       println(f"[stage ${l.stage}%d] ${l.name}%-10s ${l.status}%-8s ${l.detail}"))
     spark.stop()
+    if (logs.exists(_.status == "failed")) sys.exit(1)
   }
 
   // ---- filesystem helpers (driver-side, stage-0 scale: a few files) ----
@@ -149,6 +203,15 @@ object RunPipeline {
     // labels the jobs the calling thread submits from here on
     def stage(n: Int, name: String): Unit =
       spark.sparkContext.setJobDescription(s"stage $n $name")
+    // Runs `body` as stage n's work (n >= 2), its jobs labelled; a failure
+    // in it ends the run with a `failed` log for that stage
+    def step[A](n: Int, name: String)(body: => A): A = {
+      stage(n, name)
+      try body catch {
+        case NonFatal(e) if !e.isInstanceOf[StageFailed] =>
+          throw new StageFailed(n, name, e)
+      }
+    }
     val snapDate = java.time.LocalDate.parse(snapshot)
     val extracted = s"$outDir/extracted"
     val joined = s"$outDir/joined"
@@ -157,7 +220,7 @@ object RunPipeline {
     def writeAlongside[A](n: Int, name: String, df: DataFrame, file: String)
                          (next: => A): A =
       Concurrency.inParallel[Option[A]](s"stage$n-write", Seq(
-        () => {
+        () => step(n, name) {
           stage(n, s"$name $file")
           Sinks.atomicCsv(df, s"$joined/$file.csv")
           None
@@ -301,190 +364,205 @@ object RunPipeline {
       Stage1Outputs.filter(stage1.contains).mkString(", "))
     if (stage1.isEmpty) return logs.toSeq
 
-    // ---------- stage 2: unify ----------
-    stage(2, "unify")
-    val unified = ReferencePipeline.unifyAllDomains(
-      ReferencePipeline.unifySleepDomains(stage1.get("apple/daily_sleep"),
-        stage1.get("zepp/daily_sleep")),
-      ReferencePipeline.unifyCardioDomains(stage1.get("apple/daily_cardio"),
-        stage1.get("zepp/daily_cardio")),
-      ReferencePipeline.unifyActivityDomains(
-        stage1.get("apple/daily_activity"), None),
-      ReferencePipeline.unifyMedsDomain(
-        stage1.get("apple/daily_meds_autoexport")
-          .map("apple_autoexport" -> _).toSeq),
-      ReferencePipeline.unifySomDomain(stage1.get("apple/daily_som_autoexport")))
-      .localCheckpoint(true) // written, then read by every label job
+    // Stages 2-9 as one local method: a stage that ends the run early
+    // returns from it, inside the interpreted scope below.
+    def dailyStages(): Unit = {
+      // ---------- stage 2: unify ----------
+      val unified = step(2, "unify") {
+        ReferencePipeline.unifyAllDomains(
+          ReferencePipeline.unifySleepDomains(stage1.get("apple/daily_sleep"),
+            stage1.get("zepp/daily_sleep")),
+          ReferencePipeline.unifyCardioDomains(stage1.get("apple/daily_cardio"),
+            stage1.get("zepp/daily_cardio")),
+          ReferencePipeline.unifyActivityDomains(
+            stage1.get("apple/daily_activity"), None),
+          ReferencePipeline.unifyMedsDomain(
+            stage1.get("apple/daily_meds_autoexport")
+              .map("apple_autoexport" -> _).toSeq),
+          ReferencePipeline.unifySomDomain(stage1.get("apple/daily_som_autoexport")))
+          .localCheckpoint(true) // written, then read by every label job
+      }
 
-    // ---------- stage 3: label ----------
-    // unify_all's frame carries no provenance flags; labelDaily's quality
-    // factor reads the canonical form's missing_/source_ columns. Derive
-    // them with the same any-non-null rule unifyCanonical applies.
-    def haveAny(names: String*): org.apache.spark.sql.Column =
-      names.filter(unified.columns.contains).map(col(_).isNotNull)
-        .reduceOption(_ || _).getOrElse(lit(false))
-    val withProvenance = unified
-      .withColumn("missing_sleep",
-        (!haveAny("sleep_hours", "sleep_quality_score")).cast("int"))
-      .withColumn("source_cardio",
-        when(haveAny("hr_mean", "hr_min", "hr_max", "hr_std"), lit("merged"))
-          .otherwise(lit("none")))
-      .withColumn("missing_activity",
-        (!haveAny("total_steps", "total_distance", "total_active_energy"))
-          .cast("int"))
-    val labeled = writeAlongside(2, "unify", unified, "daily_unified") {
-      stage(3, "label")
-      // consumed by stages 4, 5, 6 and the report
-      ReferencePipeline.labelDaily(withProvenance).localCheckpoint(true)
-    }
-    logs += StageLog(2, "unify", "success",
-      s"${unified.columns.length} cols")
-    logs += StageLog(3, "label", "success", "pbsi labels attached")
-
-    // ---------- stage 4: segment ----------
-    writeAlongside(3, "label", labeled, "daily_labeled") {
-      stage(4, "segment")
-      Sinks.atomicCsv(ReferencePipeline.segmentAutolog(labeled),
-        s"$joined/segment_autolog.csv")
-    }
-    logs += StageLog(4, "segment", "success", "segment_autolog written")
-
-    // ---------- stage 5: ML prep ----------
-    stage(5, "ml-prep")
-    val generatedAt = java.time.Instant.now().toString
-    if (!labeled.columns.contains("som_category_3class")) {
-      logs += StageLog(5, "ml-prep", "skipped", "no SoM domain in snapshot")
-      stage(9, "report")
-      Sinks.atomicText(spark, s"$outDir/RUN_REPORT.md",
-        Reports.runReportMd(labeled, participant, snapshot, "0-4",
-          generatedAt, None))
-      logs += StageLog(9, "report", "success", s"$outDir/RUN_REPORT.md")
-      return logs.toSeq
-    }
-    val features = Seq("sleep_hours", "sleep_quality_score", "hr_mean",
-      "hr_std", "total_steps", "total_active_energy")
-      .filter(labeled.columns.contains)
-    val prepped = Impute.medianImpute(
-      ReferencePipeline.mlPrep(labeled, cfg.mlCutoff),
-      Seq("segment_id"), features)
-    logs += StageLog(5, "ml-prep", "success",
-      s"${features.size} features, median-imputed per segment")
-
-    // ---------- stage 6: ML6 + extended families ----------
-    stage(6, "ml6")
-    // The fold bounds mirror the reference's build_month_windows: a
-    // BOUNDED train window [train_start, val_start) and an EXCLUSIVE
-    // val_end.
-    val foldRows = Folds.calendarFoldsMonthly(prepped, "date", "som_binary")
-      .select("fold_id", "train_start", "val_start", "val_end", "n_train")
-      .collect()
-    if (foldRows.isEmpty) {
-      logs += StageLog(6, "ml6", "skipped", "no usable calendar folds")
-      stage(9, "report")
-      Sinks.atomicText(spark, s"$outDir/RUN_REPORT.md",
-        Reports.runReportMd(labeled, participant, snapshot, "0-5",
-          generatedAt, None))
-      logs += StageLog(9, "report", "success", s"$outDir/RUN_REPORT.md")
-      return logs.toSeq
-    }
-    val families: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
-      "logreg_balanced" -> ((tr, va) =>
-        Models.logisticRegression(tr, va, features, "som_binary")),
-      "rf" -> ((tr, va) => Models.randomForest(tr, va, features,
-        "som_binary", numTrees = 50, maxDepth = 6)),
-      "gbt" -> ((tr, va) => Models.gbt(tr, va, features, "som_binary",
-        maxIter = 20, maxDepth = 4)),
-      "svc" -> ((tr, va) => Models.linearSvc(tr, va, features, "som_binary",
-        maxIter = 30)))
-    val typed = prepped.withColumn("som_binary",
-      col("som_binary").cast("double"))
-    // Per-fold train/val slices and the single-class fit guard, computed
-    // ONCE and shared by all four families: each MLlib iteration rescans
-    // its training frame and the class-count guard is a Spark job, so
-    // leaving them inside each family's fit would replay both per family.
-    val foldData = foldRows.toSeq.map { r =>
-      val (fid, ts, vs, ve) =
-        (r.getInt(0), r.getDate(1), r.getDate(2), r.getDate(3))
-      val train =
-        (if (ts == null) typed.filter(lit(false))
-         else typed.filter(col("date") >= lit(ts) && col("date") < lit(vs)))
-          .localCheckpoint(true)
-      val valD = typed.filter(col("date") >= lit(vs) && col("date") < lit(ve))
-        .localCheckpoint(true)
-      // folds whose train side is single-class can't fit — skip, as the
-      // reference's fold guard does
-      val fittable = train.select("som_binary").na.drop().distinct().count() >= 2 &&
-        !valD.isEmpty
-      (fid, train, valD, fittable)
-    }.collect { case (fid, train, valD, true) => (fid, train, valD) }
-    val classes = Seq("0", "1")
-    // Actual per-fold training-set sizes (the bounded windows the folds
-    // really train on), so published artifacts don't fall back to the
-    // total-minus-val identity that no longer matches.
-    val trainCounts = {
-      import spark.implicits._
-      foldRows.toSeq.map(r => (r.getInt(0), r.getLong(4)))
-        .toDF("fold_id", "n_train")
-    }
-    // Each family is fit once per fold, all four concurrently: a fit is a
-    // chain of small MLlib jobs bound by driver and scheduling latency, not
-    // compute, so overlapping them leaves about the slowest family. Each
-    // family's fold predictions are materialized once. The primary
-    // artifacts need only the logistic predictions, so its fit thread
-    // writes them while the slower families are still fitting; the
-    // extended table reads every family's predictions.
-    val primary = families.head._1
-    val fits =
-      if (foldData.isEmpty) Nil
-      else Concurrency.inParallel("ml6-fits", families.map { case (name, fit) =>
-        () => {
-          // pool threads start with the submitting thread's description
-          stage(6, s"ml6-fit $name")
-          val pred = foldData.map { case (fid, train, valD) =>
-            fit(train, valD).select(lit(name).as("model"),
-              lit(fid).as("fold_id"), col("date"),
-              col("som_binary").cast("int").cast("string").as("y_true"),
-              col("y_pred").cast("int").cast("string").as("y_pred_s"))
-          }.reduce(_ unionByName _).localCheckpoint(true)
-          val summary = Option.when(name == primary) {
-            stage(6, "ml6")
-            Reports.writeArtifacts(labeled, pred.drop("model"),
-              "fold_id", "y_true", "y_pred_s", "date", classes,
-              model = primary, featureSet = "FS-B",
-              target = "som_binary", nFeatures = features.size,
-              participant = participant, snapshot = snapshot,
-              stagesExecuted = "0-9", generatedAt = generatedAt,
-              outDir = outDir, trainCounts = Some(trainCounts))
-          }
-          (pred, summary)
+      // ---------- stage 3: label ----------
+      val labeled = writeAlongside(2, "unify", unified, "daily_unified") {
+        step(3, "label") {
+          // unify_all's frame carries no provenance flags; labelDaily's
+          // quality factor reads the canonical form's missing_/source_
+          // columns. Derive them with the same any-non-null rule
+          // unifyCanonical applies.
+          def haveAny(names: String*): org.apache.spark.sql.Column =
+            names.filter(unified.columns.contains).map(col(_).isNotNull)
+              .reduceOption(_ || _).getOrElse(lit(false))
+          val withProvenance = unified
+            .withColumn("missing_sleep",
+              (!haveAny("sleep_hours", "sleep_quality_score")).cast("int"))
+            .withColumn("source_cardio",
+              when(haveAny("hr_mean", "hr_min", "hr_max", "hr_std"), lit("merged"))
+                .otherwise(lit("none")))
+            .withColumn("missing_activity",
+              (!haveAny("total_steps", "total_distance", "total_active_energy"))
+                .cast("int"))
+          // consumed by stages 4, 5, 6 and the report
+          ReferencePipeline.labelDaily(withProvenance).localCheckpoint(true)
         }
-      })
-    fits.headOption.flatMap(_._2) match {
-      case Some(summary) =>
-        logs += StageLog(6, "ml6", "success",
-          s"${summary.folds.size} folds, $primary")
-        // ML6-extended: per-fold metric rows for every family, one pass
-        stage(6, "ml6-ext")
-        Sinks.atomicCsv(Reports.perFoldMetrics(
-            fits.map(_._1).reduce(_ unionByName _),
-            "fold_id", "y_true", "y_pred_s", "date", classes,
-            Some(trainCounts), sliceCols = Seq("model"))
-          .select("model", "fold_id", "val_start", "val_end", "n_train",
-            "n_val", "f1_macro", "balanced_accuracy", "cohen_kappa"),
-          s"$outDir/metrics/ml6_extended_summary.csv")
-        logs += StageLog(6, "ml6-ext", "success", s"${fits.size} families")
-      case None =>
-        logs += StageLog(6, "ml6", "skipped", "all folds single-class")
+      }
+      logs += StageLog(2, "unify", "success",
+        s"${unified.columns.length} cols")
+      logs += StageLog(3, "label", "success", "pbsi labels attached")
+
+      // ---------- stage 4: segment ----------
+      writeAlongside(3, "label", labeled, "daily_labeled") {
+        step(4, "segment") {
+          Sinks.atomicCsv(ReferencePipeline.segmentAutolog(labeled),
+            s"$joined/segment_autolog.csv")
+        }
+      }
+      logs += StageLog(4, "segment", "success", "segment_autolog written")
+
+      // ---------- stage 5: ML prep ----------
+      val generatedAt = java.time.Instant.now().toString
+      // RUN_REPORT.md alone, for a run that ends before the ML6 artifacts
+      def reportOnly(stagesExecuted: String): Unit = {
+        step(9, "report") {
+          Sinks.atomicText(spark, s"$outDir/RUN_REPORT.md",
+            Reports.runReportMd(labeled, participant, snapshot, stagesExecuted,
+              generatedAt, None))
+        }
+        logs += StageLog(9, "report", "success", s"$outDir/RUN_REPORT.md")
+      }
+      if (!labeled.columns.contains("som_category_3class")) {
+        logs += StageLog(5, "ml-prep", "skipped", "no SoM domain in snapshot")
+        reportOnly("0-4")
+        return
+      }
+      val features = Seq("sleep_hours", "sleep_quality_score", "hr_mean",
+        "hr_std", "total_steps", "total_active_energy")
+        .filter(labeled.columns.contains)
+      val prepped = step(5, "ml-prep") {
+        Impute.medianImpute(ReferencePipeline.mlPrep(labeled, cfg.mlCutoff),
+          Seq("segment_id"), features)
+      }
+      logs += StageLog(5, "ml-prep", "success",
+        s"${features.size} features, median-imputed per segment")
+
+      // ---------- stage 6: ML6 + extended families ----------
+      // The fold bounds mirror the reference's build_month_windows: a
+      // BOUNDED train window [train_start, val_start) and an EXCLUSIVE
+      // val_end.
+      val foldRows = step(6, "ml6") {
+        Folds.calendarFoldsMonthly(prepped, "date", "som_binary")
+          .select("fold_id", "train_start", "val_start", "val_end", "n_train")
+          .collect()
+      }
+      if (foldRows.isEmpty) {
+        logs += StageLog(6, "ml6", "skipped", "no usable calendar folds")
+        reportOnly("0-5")
+        return
+      }
+      val families: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
+        "logreg_balanced" -> ((tr, va) =>
+          Models.logisticRegression(tr, va, features, "som_binary")),
+        "rf" -> ((tr, va) => Models.randomForest(tr, va, features,
+          "som_binary", numTrees = 50, maxDepth = 6)),
+        "gbt" -> ((tr, va) => Models.gbt(tr, va, features, "som_binary",
+          maxIter = 20, maxDepth = 4)),
+        "svc" -> ((tr, va) => Models.linearSvc(tr, va, features, "som_binary",
+          maxIter = 30)))
+      // Per-fold train/val slices and the single-class fit guard, computed
+      // ONCE and shared by all four families: each MLlib iteration rescans
+      // its training frame and the class-count guard is a Spark job, so
+      // leaving them inside each family's fit would replay both per family.
+      val foldData = step(6, "ml6") {
+        val typed = prepped.withColumn("som_binary",
+          col("som_binary").cast("double"))
+        foldRows.toSeq.map { r =>
+          val (fid, ts, vs, ve) =
+            (r.getInt(0), r.getDate(1), r.getDate(2), r.getDate(3))
+          val train =
+            (if (ts == null) typed.filter(lit(false))
+             else typed.filter(col("date") >= lit(ts) && col("date") < lit(vs)))
+              .localCheckpoint(true)
+          val valD = typed.filter(col("date") >= lit(vs) && col("date") < lit(ve))
+            .localCheckpoint(true)
+          // folds whose train side is single-class can't fit — skip, as the
+          // reference's fold guard does
+          val fittable = train.select("som_binary").na.drop().distinct().count() >= 2 &&
+            !valD.isEmpty
+          (fid, train, valD, fittable)
+        }.collect { case (fid, train, valD, true) => (fid, train, valD) }
+      }
+      val classes = Seq("0", "1")
+      // Actual per-fold training-set sizes (the bounded windows the folds
+      // really train on), so published artifacts don't fall back to the
+      // total-minus-val identity that no longer matches.
+      val trainCounts = {
+        import spark.implicits._
+        foldRows.toSeq.map(r => (r.getInt(0), r.getLong(4)))
+          .toDF("fold_id", "n_train")
+      }
+      // Each family is fit once per fold, all four concurrently: a fit is a
+      // chain of small MLlib jobs bound by driver and scheduling latency, not
+      // compute, so overlapping them leaves about the slowest family. Each
+      // family's fold predictions are materialized once. The primary
+      // artifacts need only the logistic predictions, so its fit thread
+      // writes them while the slower families are still fitting; the
+      // extended table reads every family's predictions.
+      val primary = families.head._1
+      val fits =
+        if (foldData.isEmpty) Nil
+        else Concurrency.inParallel("ml6-fits", families.map { case (name, fit) =>
+          () => step(6, "ml6") {
+            // pool threads start with the submitting thread's description
+            stage(6, s"ml6-fit $name")
+            val pred = foldData.map { case (fid, train, valD) =>
+              fit(train, valD).select(lit(name).as("model"),
+                lit(fid).as("fold_id"), col("date"),
+                col("som_binary").cast("int").cast("string").as("y_true"),
+                col("y_pred").cast("int").cast("string").as("y_pred_s"))
+            }.reduce(_ unionByName _).localCheckpoint(true)
+            val summary = Option.when(name == primary) {
+              stage(6, "ml6")
+              Reports.writeArtifacts(labeled, pred.drop("model"),
+                "fold_id", "y_true", "y_pred_s", "date", classes,
+                model = primary, featureSet = "FS-B",
+                target = "som_binary", nFeatures = features.size,
+                participant = participant, snapshot = snapshot,
+                stagesExecuted = "0-9", generatedAt = generatedAt,
+                outDir = outDir, trainCounts = Some(trainCounts))
+            }
+            (pred, summary)
+          }
+        })
+      fits.headOption.flatMap(_._2) match {
+        case Some(summary) =>
+          logs += StageLog(6, "ml6", "success",
+            s"${summary.folds.size} folds, $primary")
+          // ML6-extended: per-fold metric rows for every family, one pass
+          step(6, "ml6-ext") {
+            Sinks.atomicCsv(Reports.perFoldMetrics(
+                fits.map(_._1).reduce(_ unionByName _),
+                "fold_id", "y_true", "y_pred_s", "date", classes,
+                Some(trainCounts), sliceCols = Seq("model"))
+              .select("model", "fold_id", "val_start", "val_end", "n_train",
+                "n_val", "f1_macro", "balanced_accuracy", "cohen_kappa"),
+              s"$outDir/metrics/ml6_extended_summary.csv")
+          }
+          logs += StageLog(6, "ml6-ext", "success", s"${fits.size} families")
+        case None =>
+          logs += StageLog(6, "ml6", "skipped", "all folds single-class")
+      }
+      logs += StageLog(7, "ml7-lstm", "skipped", "out of engine scope (SURVEY M5)")
+      logs += StageLog(8, "tflite", "skipped", "out of engine scope (SURVEY M5)")
+      if (fits.isEmpty) reportOnly("0-6")
+      else logs += StageLog(9, "report", "success", s"$outDir/RUN_REPORT.md")
     }
-    logs += StageLog(7, "ml7-lstm", "skipped", "out of engine scope (SURVEY M5)")
-    logs += StageLog(8, "tflite", "skipped", "out of engine scope (SURVEY M5)")
-    if (fits.isEmpty) {
-      stage(9, "report")
-      Sinks.atomicText(spark, s"$outDir/RUN_REPORT.md",
-        Reports.runReportMd(labeled, participant, snapshot, "0-6",
-          generatedAt, None))
+    interpreted(spark) {
+      try dailyStages()
+      catch {
+        case f: StageFailed =>
+          logs += StageLog(f.stage, f.name, "failed", f.getMessage)
+      }
     }
-    logs += StageLog(9, "report", "success", s"$outDir/RUN_REPORT.md")
     logs.toSeq
   }
 }

@@ -13,10 +13,11 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * scale-plan review as a committed artifact instead of a by-hand
   * `.explain` pass.
   *
-  * For each query: execute once at the given SF (small — the point is
-  * the PLAN, not the timing) so AQE settles on its FINAL adaptive plan,
-  * then count the operators that decide whether the plan survives a
-  * 100× scale-up:
+  * For each query: execute at the given SF (small — the point is the
+  * PLAN, not the timing) so AQE settles on its FINAL adaptive plan, then
+  * count the operators that decide whether the plan survives a 100×
+  * scale-up. Each query runs twice (see [[auditTwice]]); one whose two
+  * final plans differ is marked `unstable`. The counts:
   *
   *  - `shuffles` — `Exchange` nodes (hash/range/single-partition): each
   *    is a full-data network pass at scale;
@@ -296,6 +297,40 @@ object PlanAudit {
       lojAgg = lojAggTails(df.queryExecution.optimizedPlan))
   }
 
+  /** Audits the query `build` returns twice, each time from a fresh
+    * DataFrame. AQE re-plans as query stages finish, so the final plan
+    * can depend on which stage finishes first, and a loaded host can
+    * change that order; two runs whose counts differ mark the query
+    * unstable, so timing noise does not pass for a plan change. A query
+    * whose first run fails is not run again. */
+  def auditTwice(build: () => org.apache.spark.sql.DataFrame): Seq[Counts] = {
+    def once(): Counts =
+      try audit(build())
+      catch {
+        case e: Throwable =>
+          Counts(0, 0, 0, 0, 0, 0, -1, err = Some(e.getMessage))
+      }
+    val first = once()
+    if (first.err.isDefined) Seq(first) else Seq(first, once())
+  }
+
+  /** A query's PLANS.md table row from its runs. An unstable query (runs
+    * that differ) is named `name (unstable)`, and each count that differs
+    * shows every run's value, `first/second`. */
+  private[graft] def tableRow(name: String, runs: Seq[Counts]): String =
+    runs.flatMap(_.err).headOption match {
+      case Some(m) =>
+        s"| $name | ERR: ${String.valueOf(m).takeWhile(_ != '\n').take(60)} |||||||||\n"
+      case None =>
+        def cell(f: Counts => Any): String = runs.map(f).distinct.mkString("/")
+        val fb = cell(c => if (c.fallback.isEmpty) "-"
+          else c.fallback.toSeq.sorted.mkString(" "))
+        val label = if (runs.distinct.size > 1) s"$name (unstable)" else name
+        s"| $label | ${cell(_.shuffles)} | ${cell(_.singlePart)} " +
+          s"| ${cell(_.bcast)} | ${cell(_.sorts)} | ${cell(_.nlj)} " +
+          s"| ${cell(_.wscg)} | $fb | ${cell(_.lojAgg)} | ${cell(_.rows)} |\n"
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outPath = if (args.length > 1) args(1) else "PLANS.md"
@@ -305,20 +340,20 @@ object PlanAudit {
 
     val results = graft.SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
-        val c =
-          try audit(fn(spark, sfDir))
-          catch {
-            case e: Throwable =>
-              Counts(0, 0, 0, 0, 0, 0, -1, err = Some(e.getMessage))
-          }
-        System.err.println(s"[plan-audit] $name -> $c")
-        name -> c
+        val runs = auditTwice(() => fn(spark, sfDir))
+        System.err.println(s"[plan-audit] $name -> ${runs.mkString(" / ")}")
+        name -> runs
     }
 
     val sb = new StringBuilder
     sb ++= "# PLANS — final (post-AQE) physical-plan audit per query\n\n"
-    sb ++= s"Generated by `graft.tools.PlanAudit` at `$sfDir`. Counts are\n"
-    sb ++= "over the FINAL adaptive plan after one execution. `nlj`\n"
+    sb ++= s"Generated by `graft.tools.PlanAudit` at `$sfDir`. Each query\n"
+    sb ++= "executes twice; counts are over the FINAL adaptive plan of each\n"
+    sb ++= "execution. AQE re-plans as query stages finish, so the final\n"
+    sb ++= "plan can depend on which stage finishes first: a query whose two\n"
+    sb ++= "executions differ is marked `(unstable)`, each differing count\n"
+    sb ++= "shown as `first/second`, and its change between two PLANS.md\n"
+    sb ++= "files is not evidence of a code change. `nlj`\n"
     sb ++= "(CartesianProduct / BroadcastNestedLoopJoin) must be justified\n"
     sb ++= "in the allowlist below — the invariant is no nested-loop join\n"
     sb ++= "where BOTH sides grow with the corpus; a 1-row scalar-frame\n"
@@ -349,45 +384,39 @@ object PlanAudit {
     sb ++= "tail DELETED (SPARK-36194) — use `tools.TimingSink.rows`.\n\n"
     sb ++= "| query | shuffles | 1part | bcast | sorts | nlj | wscg | fallback | lojAgg | rows |\n"
     sb ++= "|---|---|---|---|---|---|---|---|---|---|\n"
-    results.foreach { case (name, c) =>
-      c.err match {
-        case Some(m) =>
-          sb ++= s"| $name | ERR: ${m.takeWhile(_ != '\n').take(60)} |||||||||\n"
-        case None =>
-          val fb = if (c.fallback.isEmpty) "-"
-            else c.fallback.toSeq.sorted.mkString(" ")
-          sb ++= s"| $name | ${c.shuffles} | ${c.singlePart} | ${c.bcast} " +
-            s"| ${c.sorts} | ${c.nlj} | ${c.wscg} | $fb | ${c.lojAgg} | ${c.rows} |\n"
-      }
-    }
-    val totals = results.map(_._2)
+    results.foreach { case (name, runs) => sb ++= tableRow(name, runs) }
+    // totals count each query's first run
+    val totals = results.map(_._2.head)
+    val unstable = results.count(_._2.distinct.size > 1)
     // Same subtraction as the `bad` gate below — a query only counts as
     // non-benign if its fallback set survives BOTH the benign set and its
     // per-query allowlist entry; allowlisted queries are reported apart.
-    val nonBenign = results.count { case (name, c) =>
-      (c.fallback -- benignFallback.keySet --
+    val nonBenign = results.count { case (name, runs) =>
+      (runs.head.fallback -- benignFallback.keySet --
         allowedFallback.get(name).map(_._1).getOrElse(Set.empty)).nonEmpty
     }
-    val allowlisted = results.count { case (name, c) =>
-      val afterBenign = c.fallback -- benignFallback.keySet
+    val allowlisted = results.count { case (name, runs) =>
+      val afterBenign = runs.head.fallback -- benignFallback.keySet
       afterBenign.nonEmpty && (afterBenign --
         allowedFallback.get(name).map(_._1).getOrElse(Set.empty)).isEmpty
     }
-    sb ++= s"\nTotals: ${totals.map(_.shuffles).sum} shuffles, " +
+    sb ++= s"\nTotals (first executions): ${totals.map(_.shuffles).sum} shuffles, " +
       s"${totals.map(_.bcast).sum} broadcasts, " +
       s"${totals.map(_.nlj).sum} nested-loop joins, " +
       s"$nonBenign queries with non-benign interpreted expressions " +
       s"($allowlisted with allowlisted-only interpreted expressions), " +
       s"${totals.map(_.lojAgg).sum} counting-sink-unsafe join tails over " +
-      s"${results.size} queries.\n"
+      s"${results.size} queries; $unstable unstable.\n"
     Files.write(Paths.get(outPath),
       sb.toString.getBytes(StandardCharsets.UTF_8))
-    val bad = results.filter { case (name, c) =>
-      val unvetted = c.fallback -- benignFallback.keySet --
-        allowedFallback.get(name).map(_._1).getOrElse(Set.empty)
-      c.err.isDefined ||
-        c.nlj > allowedNlj.get(name).map(_._1).getOrElse(0) ||
-        unvetted.nonEmpty
+    val bad = results.flatMap { case (name, runs) =>
+      runs.find { c =>
+        val unvetted = c.fallback -- benignFallback.keySet --
+          allowedFallback.get(name).map(_._1).getOrElse(Set.empty)
+        c.err.isDefined ||
+          c.nlj > allowedNlj.get(name).map(_._1).getOrElse(0) ||
+          unvetted.nonEmpty
+      }.map(name -> _)
     }
     bad.foreach { case (n, c) =>
       val unvetted = c.fallback -- benignFallback.keySet --

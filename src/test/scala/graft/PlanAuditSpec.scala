@@ -66,4 +66,27 @@ class PlanAuditSpec extends SparkTestBase {
     assert(c.rows === 4)
     assert(c.nlj === 1)
   }
+
+  test("auditTwice executes twice; tableRow shows both counts of an unstable query") {
+    import spark.implicits._
+    var built = 0
+    val runs = PlanAudit.auditTwice { () =>
+      built += 1
+      Seq(1, 2, 3).toDF("x").repartition(2)
+    }
+    assert(built === 2 && runs.size === 2 && runs.distinct.size === 1, runs)
+    assert(PlanAudit.tableRow("q", runs).startsWith("| q | "))
+
+    val first = PlanAudit.Counts(9, 0, 5, 1, 0, 2, 10)
+    assert(PlanAudit.tableRow("m1_impute", Seq(first, first.copy(bcast = 4))) ===
+      "| m1_impute (unstable) | 9 | 0 | 5/4 | 1 | 0 | 2 | - | 0 | 10 |\n")
+
+    // a failing first run is reported, not repeated
+    val failed = PlanAudit.auditTwice { () =>
+      built += 1
+      throw new IllegalStateException("no such table\nat ...")
+    }
+    assert(built === 3 && failed.size === 1)
+    assert(PlanAudit.tableRow("bad", failed) === "| bad | ERR: no such table |||||||||\n")
+  }
 }

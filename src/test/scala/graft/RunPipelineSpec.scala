@@ -55,10 +55,13 @@ object ReadCountingFileSystem {
 }
 
 /** A job as a listener sees it: its `spark.job.description` ("" when
-  * unset), the call sites of its stages, and its start and end times
-  * (epoch ms; the end is the start for a job that never reported one). */
+  * unset), the call sites of its stages, its start and end times (epoch
+  * ms; the end is the start for a job that never reported one), whether
+  * a SQL execution submitted it, and the `spark.sql.codegen.factoryMode`
+  * that execution propagated (set only when the session sets it). */
 final case class JobSeen(description: String, callSites: String,
-                         start: Long, end: Long) {
+                         start: Long, end: Long, sql: Boolean,
+                         factoryMode: Option[String]) {
   def overlaps(o: JobSeen): Boolean = start < o.end && o.start < end
 }
 
@@ -68,11 +71,15 @@ object JobsSeen {
     val started = new ConcurrentHashMap[Int, JobSeen]()
     val ended = new ConcurrentHashMap[Int, java.lang.Long]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
         started.put(e.jobId, JobSeen(
-          Option(e.properties).flatMap(p =>
-            Option(p.getProperty("spark.job.description"))).getOrElse(""),
-          e.stageInfos.map(_.details).mkString("\n"), e.time, e.time))
+          prop("spark.job.description").getOrElse(""),
+          e.stageInfos.map(_.details).mkString("\n"), e.time, e.time,
+          prop("spark.sql.execution.id").isDefined,
+          prop(CodegenConfs.keys.last)))
+      }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         ended.put(e.jobId, e.time)
     }
@@ -88,6 +95,17 @@ object JobsSeen {
   }
 }
 
+/** The two session confs `RunPipeline` sets around stages 2-9. */
+object CodegenConfs {
+  val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+
+  /** Each conf as explicitly set on `spark`'s session (None: unset). */
+  def of(spark: SparkSession): Seq[Option[String]] = {
+    val set = spark.conf.getAll
+    keys.map(set.get)
+  }
+}
+
 /** End-to-end snapshot orchestration: raw ZIP in → artifact tree out.
   * The fixture is a reference-shaped snapshot (HealthAutoExport ZIP with
   * export.xml + Medications.csv + StateOfMind.csv; no Zepp ZIP, so the
@@ -100,7 +118,8 @@ class RunPipelineSpec extends SparkTestBase {
 
   /** `medsDate` names the Medications.csv date column, so a spec can
     * drift the header. */
-  private def buildFixture(medsDate: String = "Date"): (String, String) = {
+  private def buildFixture(medsDate: String = "Date",
+                           zeppSleep: Boolean = false): (String, String) = {
     val root = Files.createTempDirectory("graft-runpipe").toString
     val rawDir = Paths.get(root, "raw", "P000001", "apple", "export")
     Files.createDirectories(rawDir)
@@ -151,6 +170,24 @@ class RunPipelineSpec extends SparkTestBase {
     put("apple_health_export/StateOfMind.csv", som.toString)
     zos.close()
 
+    if (zeppSleep) {
+      // an unencrypted Zepp cloud ZIP with one daily SLEEP CSV, last
+      // modified on the snapshot day so stage 0 selects it
+      val zeppDir = Paths.get(root, "raw", "P000001", "zepp")
+      Files.createDirectories(zeppDir)
+      val zeppZip = zeppDir.resolve("3075021620_1725105600000.zip")
+      val zz = new ZipOutputStream(Files.newOutputStream(zeppZip))
+      zz.putNextEntry(new ZipEntry("SLEEP/SLEEP_1725105600000.csv"))
+      zz.write(("date,deepSleepTime,shallowSleepTime,REMTime\n" +
+        days.takeRight(60).zipWithIndex.map { case (d, i) =>
+          s"$d,${60 + i % 30},${200 + i % 50},${70 + i % 20}\n"
+        }.mkString).getBytes("UTF-8"))
+      zz.closeEntry()
+      zz.close()
+      Files.setLastModifiedTime(zeppZip, java.nio.file.attribute.FileTime
+        .from(java.time.Instant.parse("2024-08-31T12:00:00Z")))
+    }
+
     (s"$root/raw", s"$root/out")
   }
 
@@ -162,11 +199,42 @@ class RunPipelineSpec extends SparkTestBase {
         unlabelled.headOption)
   }
 
+  /** Stages 2-9 run without generated code and stages 0-1 with it: every
+    * SQL job labelled `stage 2`-`stage 9` carries factoryMode NO_CODEGEN,
+    * and no `stage 0`/`stage 1` job does. */
+  private def assertInterpretedAfterStage1(jobs: Seq[JobSeen]): Unit = {
+    val (early, late) = jobs.filter(_.sql)
+      .partition(_.description.matches("stage [01] .*"))
+    val interpreted = early.filter(_.factoryMode.contains("NO_CODEGEN"))
+    assert(early.nonEmpty && interpreted.isEmpty,
+      s"${interpreted.size} of ${early.size} stage 0-1 SQL jobs interpreted: " +
+        interpreted.map(_.description).distinct)
+    val compiled = late.filterNot(_.factoryMode.contains("NO_CODEGEN"))
+    assert(late.nonEmpty && compiled.isEmpty,
+      s"${compiled.size} of ${late.size} stage 2-9 SQL jobs not interpreted: " +
+        compiled.map(j => s"${j.description} (${j.factoryMode})").distinct)
+  }
+
+  /** Runs `body` with both codegen confs set to sentinel values (Spark's
+    * defaults, set explicitly, so "restored" differs from "unset"), asserts
+    * that `body` leaves them as it found them, then unsets them. */
+  private def withSentinelConfs[T](body: => T): T = {
+    val sentinel = Seq("true", "FALLBACK")
+    CodegenConfs.keys.zip(sentinel).foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val out = body
+      assert(CodegenConfs.of(spark) === sentinel.map(Some(_)))
+      out
+    } finally CodegenConfs.keys.foreach(spark.conf.unset)
+  }
+
   test("RunPipeline: snapshot ZIP in -> full artifact tree out, stages 0-9") {
     val (rawRoot, outDir) = buildFixture()
-    val ((logs, readBytes), jobs) = JobsSeen.recording(spark) {
-      ReadCountingFileSystem.counting(spark) {
-        RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+    val ((logs, readBytes), jobs) = withSentinelConfs {
+      JobsSeen.recording(spark) {
+        ReadCountingFileSystem.counting(spark) {
+          RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+        }
       }
     }
     val byStage = logs.map(l => (l.stage, l.name) -> l.status).toMap
@@ -270,6 +338,7 @@ class RunPipelineSpec extends SparkTestBase {
         s"one fit submits $oneFit")
 
     assertStageLabelled(jobs)
+    assertInterpretedAfterStage1(jobs)
 
     // stage 1 runs one branch per output concurrently, so jobs building
     // two different outputs overlap in time
@@ -283,8 +352,10 @@ class RunPipelineSpec extends SparkTestBase {
   test("RunPipeline: a failing stage-1 branch is a named stage failure") {
     // Medications.csv's header drifted: `When` where `Date` was
     val (rawRoot, outDir) = buildFixture(medsDate = "When")
-    val (logs, jobs) = JobsSeen.recording(spark) {
-      RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+    val (logs, jobs) = withSentinelConfs {
+      JobsSeen.recording(spark) {
+        RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+      }
     }
     val last = logs.last
     assert((last.stage, last.name, last.status) === ((1, "aggregate", "failed")),
@@ -304,6 +375,31 @@ class RunPipelineSpec extends SparkTestBase {
       assert(files.contains(s"$outDir/joined/$f.csv"), s"missing $f: $files")
     assert(!files.exists(_.endsWith("daily_meds_autoexport.csv")), files)
     assert(!files.exists(_.endsWith(".__tmp__")), files)
+  }
+
+  test("RunPipeline: a failing stage 2-9 is a named stage failure") {
+    // A Zepp daily SLEEP CSV reaches stage 2, whose sleep unify reads the
+    // Apple sleep contract (sleep_hours, sleep_quality_score) that the
+    // Zepp frame does not carry yet. Once the Zepp columns are mapped,
+    // this case needs another stage-2 schema fault.
+    val (rawRoot, outDir) = buildFixture(zeppSleep = true)
+    val (logs, jobs) = withSentinelConfs {
+      JobsSeen.recording(spark) {
+        RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+      }
+    }
+    val byStage = logs.map(l => (l.stage, l.name) -> l).toMap
+    assert(byStage((1, "aggregate")).status === "success", logs.mkString("\n"))
+    assert(byStage((1, "aggregate")).detail.contains("zepp/daily_sleep"),
+      logs.mkString("\n"))
+    val last = logs.last
+    assert((last.stage, last.name, last.status) === ((2, "unify", "failed")),
+      logs.mkString("\n"))
+    assert(last.detail.contains("sleep_hours") && !last.detail.contains("\n"),
+      last.detail)
+    assert(!jobs.exists(_.description.matches("stage [3-9] .*")),
+      jobs.map(_.description).distinct)
+    assertStageLabelled(jobs)
   }
 
   test("RunPipeline: SoM-less snapshot degrades to stages 0-4 + report") {
@@ -338,5 +434,8 @@ class RunPipelineSpec extends SparkTestBase {
     assert(Files.exists(Paths.get(s"$out2/RUN_REPORT.md")))
     assert(!Files.exists(Paths.get(s"$out2/cv_summary.json")))
     assertStageLabelled(jobs)
+    assertInterpretedAfterStage1(jobs)
+    // confs unset before the run are unset after it
+    assert(CodegenConfs.of(spark) === Seq(None, None))
   }
 }

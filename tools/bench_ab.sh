@@ -23,8 +23,14 @@
 # the median gap exceeds that IQR. It exits 1, naming the seeds and sides,
 # when any run of this invocation is incorrect (including a run that did
 # not finish) or a pair lacks a side.
+#
+# One A/B at a time per checkout: snapbench runs share .bench_build/work,
+# so two at once fail each other's digest checks. The script holds an
+# exclusive flock on .bench_build/bench_ab.lock while it runs and exits 2,
+# naming the holder, if another invocation already holds it.
 set -euo pipefail
 here="$(cd "$(dirname "$0")/.." && pwd)"
+invocation="$0 $*"
 rev=HEAD^ pairs=10 seed0=1000 pdir=
 while getopts "r:n:s:d:" o; do
   case "$o" in
@@ -33,6 +39,15 @@ while getopts "r:n:s:d:" o; do
   esac
 done
 shift $((OPTIND - 1))
+mkdir -p "$here/.bench_build"
+lock="$here/.bench_build/bench_ab.lock"
+exec 9<>"$lock"
+if ! flock -n 9; then
+  echo "bench_ab: another A/B runs in this checkout ($(cat "$lock"));" \
+    "wait for it or stop it" >&2
+  exit 2
+fi
+echo "pid $$ since $(date -u +%FT%TZ): $invocation" >"$lock"
 sha="$(git -C "$here" rev-parse --short "$rev")"
 full="$(git -C "$here" rev-parse "$rev^{commit}")"
 pdir="${pdir:-${TMPDIR:-/tmp}/bench_ab-$sha}"
@@ -53,7 +68,6 @@ workloads=("$@")
 [ ${#workloads[@]} -gt 0 ] || read -r -a workloads <<<"$(python3 -c \
   'import json,sys; print(" ".join(w["name"] for w in json.load(open(sys.argv[1]))["workloads"]))' \
   "$here/BENCHMARK.json")"
-mkdir -p "$here/.bench_build"
 log="$here/.bench_build/ab.jsonl"
 started="$(date +%s)"
 
