@@ -29,9 +29,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * Plane components are derived from SHA-256 of "(table_)plane_dim"
   * mapped to [-1, 1) — reproducible anywhere, no RNG state.
   *
-  * Oracle note: sim2 is recall-gated, so no SQL twin computes buckets
-  * today. If one is ever added it must encode BOTH edge rules explicitly:
-  * NULL vector -> NULL bucket (row leaves the equi-join), and
+  * Oracle note: the sim2/sim7 DuckDB twins recompute the buckets
+  * (`TextQueries.hyperplaneBucketCtes`), so they encode BOTH edge rules
+  * explicitly: NULL vector -> NULL bucket (row leaves the equi-join), and
   * length-mismatched / null-element vectors -> bucket 0 of EVERY table
   * (the null-poisoned dot). Callers that want cleaner candidate sets can
   * filter malformed vectors (null / wrong size) before bucketing.

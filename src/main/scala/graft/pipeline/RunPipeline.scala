@@ -21,14 +21,15 @@ import graft.operators.{Folds, Impute}
   *
   * Stage map (reference stage → engine call):
   *  - 0 ingest: S1/S2 deterministic ZIP selection (filename date, mtime
-  *    fallback; Zepp optionally password-protected) + S3 extraction
+  *    fallback; Zepp optionally password-protected) + S3 extraction. A
+  *    Zepp ZIP that cannot be opened without a password is skipped
   *  - 1 aggregate: S5 — one `export.xml` scan, materialized and routed by
   *    record type to the cardio, sleep and activity builders — + S7/S8
   *    robust CSVs → daily_* frames. One branch per output, all
   *    concurrently: each builds, materializes and writes its frame, and
-  *    the CSV branches run beside the XML scan. A failing branch ends the
-  *    run with a `failed` stage-1 log naming the output and its cause,
-  *    after its siblings finish
+  *    the CSV branches run beside the XML scan. A failing branch's log
+  *    detail names the output it was building; the run fails here too
+  *    when no input was found
   *  - 2 unify: the five-domain `unify_all` (J11)
   *  - 3 label: segment z-scores → PBSI composite → percentile labels
   *  - 4 segment: `segment_autolog` table. Stages 2 and 3 each write their
@@ -57,9 +58,10 @@ import graft.operators.{Folds, Impute}
   * are session-wide they can only change once all its concurrent
   * branches have finished.
   *
-  * A stage that throws ends the run with a `failed` log naming that stage
-  * and the first line of the cause, as a stage-1 branch does; `main`
-  * then exits 1.
+  * A stage 0-9 that throws ends the run with a `failed` log naming that
+  * stage and the first line of the cause (after its started siblings
+  * finish); `run` returns the logs so far, and `main` stops the session
+  * and exits 1.
   *
   * Every stage is the already-parity-checked library operator; this
   * object only sequences them and lays out files. All frames stay
@@ -87,14 +89,10 @@ object RunPipeline {
     Option(e.getMessage).flatMap(_.linesIterator.nextOption())
       .getOrElse(e.toString)
 
-  /** A stage-1 branch that failed, named by the output it was building. */
-  private final class BranchFailed(output: String, cause: Throwable)
-      extends RuntimeException(s"$output: ${firstLine(cause)}", cause)
-
-  /** Stage `stage` of 2-9 failed; the message is the cause's first line. */
+  /** Stage `stage` failed; the message is its log line's detail. */
   private final class StageFailed(val stage: Int, val name: String,
-                                  cause: Throwable)
-      extends RuntimeException(firstLine(cause), cause)
+                                  detail: String, cause: Throwable)
+      extends RuntimeException(detail, cause)
 
   /** Runs `body` (stages 2-9) without generated code: no whole-stage
     * code generation, and the interpreted form of every projection,
@@ -192,24 +190,33 @@ object RunPipeline {
 
   def run(spark: SparkSession, rawRoot: String, participant: String,
           snapshot: String, outDir: String,
-          cfg: Config = Config()): Seq[StageLog] =
-    try runStages(spark, rawRoot, participant, snapshot, outDir, cfg)
-    finally spark.sparkContext.setJobDescription(null)
+          cfg: Config = Config()): Seq[StageLog] = {
+    val logs = scala.collection.mutable.ArrayBuffer[StageLog]()
+    try runStages(spark, rawRoot, participant, snapshot, outDir, cfg, logs)
+    catch {
+      case f: StageFailed =>
+        logs += StageLog(f.stage, f.name, "failed", f.getMessage)
+    } finally spark.sparkContext.setJobDescription(null)
+    logs.toSeq
+  }
 
   private def runStages(spark: SparkSession, rawRoot: String,
                         participant: String, snapshot: String, outDir: String,
-                        cfg: Config): Seq[StageLog] = {
-    val logs = scala.collection.mutable.ArrayBuffer[StageLog]()
+                        cfg: Config,
+                        logs: scala.collection.mutable.Buffer[StageLog]): Unit = {
     // labels the jobs the calling thread submits from here on
     def stage(n: Int, name: String): Unit =
       spark.sparkContext.setJobDescription(s"stage $n $name")
-    // Runs `body` as stage n's work (n >= 2), its jobs labelled; a failure
-    // in it ends the run with a `failed` log for that stage
-    def step[A](n: Int, name: String)(body: => A): A = {
-      stage(n, name)
+    // Runs `body` as stage n's work, its jobs labelled `stage n name`, or
+    // `stage n name part` for one part of a stage; a failure in it ends
+    // the run with a `failed` log for that stage, whose detail starts
+    // with `part: ` when a part is named
+    def step[A](n: Int, name: String, part: String = "")(body: => A): A = {
+      stage(n, if (part.isEmpty) name else s"$name $part")
       try body catch {
         case NonFatal(e) if !e.isInstanceOf[StageFailed] =>
-          throw new StageFailed(n, name, e)
+          throw new StageFailed(n, name,
+            if (part.isEmpty) firstLine(e) else s"$part: ${firstLine(e)}", e)
       }
     }
     val snapDate = java.time.LocalDate.parse(snapshot)
@@ -220,47 +227,48 @@ object RunPipeline {
     def writeAlongside[A](n: Int, name: String, df: DataFrame, file: String)
                          (next: => A): A =
       Concurrency.inParallel[Option[A]](s"stage$n-write", Seq(
-        () => step(n, name) {
-          stage(n, s"$name $file")
+        () => step(n, name, file) {
           Sinks.atomicCsv(df, s"$joined/$file.csv")
           None
         },
         () => Some(next))).last.get
 
     // ---------- stage 0: ingest ----------
-    stage(0, "ingest")
-    val appleDir = Paths.get(rawRoot, participant, "apple", "export")
-    val appleZips = listWithSuffix(appleDir, ".zip")
-    val appleChosen = Discovery
-      .selectByFilenameDate(appleZips.map(_.getFileName.toString), snapDate)
-      .orElse(Discovery.selectByMtime(
-        appleZips.map(p => p.getFileName.toString ->
+    val (appleChosen, zeppChosen, zeppExtracted) = step(0, "ingest") {
+      val appleDir = Paths.get(rawRoot, participant, "apple", "export")
+      val appleZips = listWithSuffix(appleDir, ".zip")
+      val appleChosen = Discovery
+        .selectByFilenameDate(appleZips.map(_.getFileName.toString), snapDate)
+        .orElse(Discovery.selectByMtime(
+          appleZips.map(p => p.getFileName.toString ->
+            Files.getLastModifiedTime(p).toMillis),
+          snapDate.plusDays(1).atStartOfDay(java.time.ZoneOffset.UTC)
+            .toInstant.toEpochMilli))
+      appleChosen.foreach { name =>
+        ZipExtract.extract(appleDir.resolve(name).toString, s"$extracted/apple")
+      }
+      val zeppDir = Paths.get(rawRoot, participant, "zepp")
+      val zeppZips = listWithSuffix(zeppDir, ".zip")
+      val zeppChosen = Discovery.selectByMtime(
+        zeppZips.map(p => p.getFileName.toString ->
           Files.getLastModifiedTime(p).toMillis),
         snapDate.plusDays(1).atStartOfDay(java.time.ZoneOffset.UTC)
-          .toInstant.toEpochMilli))
-    appleChosen.foreach { name =>
-      ZipExtract.extract(appleDir.resolve(name).toString, s"$extracted/apple")
-    }
-    val zeppDir = Paths.get(rawRoot, participant, "zepp")
-    val zeppZips = listWithSuffix(zeppDir, ".zip")
-    val zeppChosen = Discovery.selectByMtime(
-      zeppZips.map(p => p.getFileName.toString ->
-        Files.getLastModifiedTime(p).toMillis),
-      snapDate.plusDays(1).atStartOfDay(java.time.ZoneOffset.UTC)
-        .toInstant.toEpochMilli)
-    val zeppExtracted = zeppChosen match {
-      case Some(name) =>
-        val zp = zeppDir.resolve(name).toString
-        cfg.zeppPassword match {
-          case Some(pwd) =>
-            EncryptedZip.extract(zp, s"$extracted/zepp/cloud", pwd); true
-          case None =>
-            // reference stage 0: encrypted Zepp without a password is a
-            // non-fatal skip (apple-only mode keeps ML6 reproducible)
-            try { ZipExtract.extract(zp, s"$extracted/zepp/cloud"); true }
-            catch { case _: Exception => false }
-        }
-      case None => false
+          .toInstant.toEpochMilli)
+      val zeppExtracted = zeppChosen match {
+        case Some(name) =>
+          val zp = zeppDir.resolve(name).toString
+          cfg.zeppPassword match {
+            case Some(pwd) =>
+              EncryptedZip.extract(zp, s"$extracted/zepp/cloud", pwd); true
+            case None =>
+              // reference stage 0: encrypted Zepp without a password is a
+              // non-fatal skip (apple-only mode keeps ML6 reproducible)
+              try { ZipExtract.extract(zp, s"$extracted/zepp/cloud"); true }
+              catch { case _: Exception => false }
+          }
+        case None => false
+      }
+      (appleChosen, zeppChosen, zeppExtracted)
     }
     logs += StageLog(0, "ingest",
       if (appleChosen.isDefined) "success" else "skipped",
@@ -268,101 +276,99 @@ object RunPipeline {
         s"${if (zeppExtracted) zeppChosen.getOrElse("-") else "skipped"}")
 
     // ---------- stage 1: aggregate ----------
-    stage(1, "aggregate")
-    // One branch per output, all concurrently: the per-domain builders are
-    // independent, so each builds its daily frame, materializes it once
-    // (unify reads it again) and writes it without waiting for the others.
-    // The Apple branch scans export.xml once and fans the materialized
-    // records out to its three builders; the CSV branches never wait for
-    // that scan.
-    def branch[T](name: String)(body: => T): T = {
-      stage(1, s"aggregate $name")
-      try body catch { case NonFatal(e) => throw new BranchFailed(name, e) }
-    }
-    def written(name: String)(build: => DataFrame): (String, DataFrame) =
-      branch(name) {
-        val df = build.localCheckpoint(true)
-        Sinks.atomicCsv(df, s"$joined/$name.csv")
-        name -> df
-      }
-    val appleXml = findFirst(s"$extracted/apple", "export.xml")
-    val medsCsv = findFirst(s"$extracted/apple", "Medications.csv")
-    val somCsv = findFirst(s"$extracted/apple", "StateOfMind.csv")
-    val globs = Discovery.zeppGlobs(extracted)
-    def zeppFiles(key: String): Seq[String] =
-      if (zeppExtracted) globFiles(globs(key)) else Nil
-    val zeppCardioFiles = zeppFiles("HEARTRATE") ++ zeppFiles("HEARTRATE_AUTO")
-    val zeppBodyFiles = zeppFiles("BODY")
-    val zeppHealthFiles = zeppFiles("HEALTH_DATA")
-    // the reference keeps SLEEP_NAPS_*/SLEEP_INTERVALS_* files inside the
-    // SLEEP dir — split the one glob by filename
-    val sleepAll = zeppFiles("SLEEP")
-    val napsFiles = sleepAll.filter(_.toUpperCase.contains("NAPS"))
-    val intervalFiles = sleepAll.filter(_.toUpperCase.contains("INTERVALS"))
-    val sleepDailyFiles = sleepAll.diff(napsFiles).diff(intervalFiles)
-    val branches: Seq[() => Seq[(String, DataFrame)]] = Seq(
-      appleXml.map(x => () => {
-        val records = branch("apple/export.xml")(
-          ReferencePipeline.appleRecords(spark, x).localCheckpoint(true))
-        Concurrency.inParallel("stage1-apple", Seq(
-          "apple/daily_cardio" -> ReferencePipeline.appleDailyCardio _,
-          "apple/daily_sleep" -> ReferencePipeline.appleDailySleep _,
-          "apple/daily_activity" -> ReferencePipeline.appleDailyActivity _)
-          .map { case (name, build) => () => written(name)(build(records)) })
-      }),
-      medsCsv.map(p => () => Seq(written("apple/daily_meds_autoexport")(
-        ReferencePipeline.medsDaily(
-          spark.read.option("header", "true").csv(p), snapshot)))),
-      somCsv.map(p => () => Seq(written("apple/daily_som_autoexport")(
-        ReferencePipeline.somDaily(
-          spark.read.option("header", "true").csv(p), Some(snapshot))))),
-      // the Zepp cardio frame feeds both its own file and the legacy
-      // zepp_daily_features consolidation (_merge_on_date)
-      Option.when((zeppCardioFiles ++ zeppBodyFiles ++ zeppHealthFiles)
-          .nonEmpty)(() => {
-          val cardio = Some(zeppCardioFiles).filter(_.nonEmpty).map(fs =>
-            written("zepp/daily_cardio")(
-              ReferencePipeline.zeppDailyCardio(readCsv(spark, fs))))
-          cardio.toSeq :+ written("zepp/zepp_daily_features")(
-            ReferencePipeline.zeppDailyFeatures(cardio.map(_._2).toSeq ++
-              Some(zeppBodyFiles).filter(_.nonEmpty).map(fs =>
-                ReferencePipeline.zeppBodyDaily(readCsv(spark, fs),
-                  cfg.tzCutover, cfg.tzBefore, cfg.tzAfter)) ++
-              Some(zeppHealthFiles).filter(_.nonEmpty).map(fs =>
-                ReferencePipeline.zeppHealthDaily(readCsv(spark, fs),
-                  cfg.tzCutover, cfg.tzBefore, cfg.tzAfter))))
+    val stage1 = step(1, "aggregate") {
+      // One branch per output, all concurrently: the per-domain builders are
+      // independent, so each builds its daily frame, materializes it once
+      // (unify reads it again) and writes it without waiting for the others.
+      // The Apple branch scans export.xml once and fans the materialized
+      // records out to its three builders; the CSV branches never wait for
+      // that scan.
+      def written(name: String)(build: => DataFrame): (String, DataFrame) =
+        step(1, "aggregate", name) {
+          val df = build.localCheckpoint(true)
+          Sinks.atomicCsv(df, s"$joined/$name.csv")
+          name -> df
+        }
+      val appleXml = findFirst(s"$extracted/apple", "export.xml")
+      val medsCsv = findFirst(s"$extracted/apple", "Medications.csv")
+      val somCsv = findFirst(s"$extracted/apple", "StateOfMind.csv")
+      val globs = Discovery.zeppGlobs(extracted)
+      def zeppFiles(key: String): Seq[String] =
+        if (zeppExtracted) globFiles(globs(key)) else Nil
+      val zeppCardioFiles = zeppFiles("HEARTRATE") ++ zeppFiles("HEARTRATE_AUTO")
+      val zeppBodyFiles = zeppFiles("BODY")
+      val zeppHealthFiles = zeppFiles("HEALTH_DATA")
+      // the reference keeps SLEEP_NAPS_*/SLEEP_INTERVALS_* files inside the
+      // SLEEP dir — split the one glob by filename
+      val sleepAll = zeppFiles("SLEEP")
+      val napsFiles = sleepAll.filter(_.toUpperCase.contains("NAPS"))
+      val intervalFiles = sleepAll.filter(_.toUpperCase.contains("INTERVALS"))
+      val sleepDailyFiles = sleepAll.diff(napsFiles).diff(intervalFiles)
+      val branches: Seq[() => Seq[(String, DataFrame)]] = Seq(
+        appleXml.map(x => () => {
+          val records = step(1, "aggregate", "apple/export.xml")(
+            ReferencePipeline.appleRecords(spark, x).localCheckpoint(true))
+          Concurrency.inParallel("stage1-apple", Seq(
+            "apple/daily_cardio" -> ReferencePipeline.appleDailyCardio _,
+            "apple/daily_sleep" -> ReferencePipeline.appleDailySleep _,
+            "apple/daily_activity" -> ReferencePipeline.appleDailyActivity _)
+            .map { case (name, build) => () => written(name)(build(records)) })
         }),
-      Some(sleepDailyFiles).filter(_.nonEmpty).map(fs => () => Seq(
-        written("zepp/daily_sleep") {
-          val daily = RobustCsv.canonicalize(
-            spark.read.option("header", "true").option("escape", "\"")
-              .csv(fs: _*),
-            Map("deep_min" -> Seq("deepSleepTime", "deep_minutes"),
-              "light_min" -> Seq("shallowSleepTime", "light_minutes"),
-              "rem_min" -> Seq("REMTime", "rem_minutes")))
-          val naps = Some(napsFiles).filter(_.nonEmpty)
-            .map(n => spark.read.option("header", "true")
-              .option("escape", "\"").csv(n: _*))
-            .getOrElse(spark.range(0)
-              .select(lit(null).cast("string").as("date"),
-                lit(null).cast("string").as("naps")))
-          val intervals = Some(intervalFiles).filter(_.nonEmpty)
-            .map(i => spark.read.option("header", "true")
-              .option("escape", "\"").csv(i: _*))
-          ReferencePipeline.zeppSleepDaily(daily, naps, cfg.homeTz,
-            Seq("naps"), intervals)
-        }))).flatten
-    val stage1 =
-      try Concurrency.inParallel("stage1", branches).flatten.toMap
-      catch {
-        case f: BranchFailed =>
-          logs += StageLog(1, "aggregate", "failed", f.getMessage)
-          return logs.toSeq
+        medsCsv.map(p => () => Seq(written("apple/daily_meds_autoexport")(
+          ReferencePipeline.medsDaily(
+            spark.read.option("header", "true").csv(p), snapshot)))),
+        somCsv.map(p => () => Seq(written("apple/daily_som_autoexport")(
+          ReferencePipeline.somDaily(
+            spark.read.option("header", "true").csv(p), Some(snapshot))))),
+        // the Zepp cardio frame feeds both its own file and the legacy
+        // zepp_daily_features consolidation (_merge_on_date)
+        Option.when((zeppCardioFiles ++ zeppBodyFiles ++ zeppHealthFiles)
+            .nonEmpty)(() => {
+            val cardio = Some(zeppCardioFiles).filter(_.nonEmpty).map(fs =>
+              written("zepp/daily_cardio")(
+                ReferencePipeline.zeppDailyCardio(readCsv(spark, fs))))
+            cardio.toSeq :+ written("zepp/zepp_daily_features")(
+              ReferencePipeline.zeppDailyFeatures(cardio.map(_._2).toSeq ++
+                Some(zeppBodyFiles).filter(_.nonEmpty).map(fs =>
+                  ReferencePipeline.zeppBodyDaily(readCsv(spark, fs),
+                    cfg.tzCutover, cfg.tzBefore, cfg.tzAfter)) ++
+                Some(zeppHealthFiles).filter(_.nonEmpty).map(fs =>
+                  ReferencePipeline.zeppHealthDaily(readCsv(spark, fs),
+                    cfg.tzCutover, cfg.tzBefore, cfg.tzAfter))))
+          }),
+        Some(sleepDailyFiles).filter(_.nonEmpty).map(fs => () => Seq(
+          written("zepp/daily_sleep") {
+            val daily = RobustCsv.canonicalize(
+              spark.read.option("header", "true").option("escape", "\"")
+                .csv(fs: _*),
+              Map("deep_min" -> Seq("deepSleepTime", "deep_minutes"),
+                "light_min" -> Seq("shallowSleepTime", "light_minutes"),
+                "rem_min" -> Seq("REMTime", "rem_minutes")))
+            val naps = Some(napsFiles).filter(_.nonEmpty)
+              .map(n => spark.read.option("header", "true")
+                .option("escape", "\"").csv(n: _*))
+              .getOrElse(spark.range(0)
+                .select(lit(null).cast("string").as("date"),
+                  lit(null).cast("string").as("naps")))
+            val intervals = Some(intervalFiles).filter(_.nonEmpty)
+              .map(i => spark.read.option("header", "true")
+                .option("escape", "\"").csv(i: _*))
+            ReferencePipeline.zeppSleepDaily(daily, naps, cfg.homeTz,
+              Seq("naps"), intervals)
+          }))).flatten
+      val built = Concurrency.inParallel("stage1", branches).flatten.toMap
+      if (built.isEmpty) {
+        val apple = appleChosen.fold("no Apple ZIP selected")(z =>
+          s"$z holds no export.xml, Medications.csv or StateOfMind.csv")
+        val zepp =
+          if (zeppExtracted) s"${zeppChosen.getOrElse("-")} holds no Zepp daily CSV"
+          else "no Zepp ZIP extracted"
+        throw new IllegalStateException(s"no input found: $apple; $zepp")
       }
-    logs += StageLog(1, "aggregate",
-      if (stage1.nonEmpty) "success" else "failed",
+      built
+    }
+    logs += StageLog(1, "aggregate", "success",
       Stage1Outputs.filter(stage1.contains).mkString(", "))
-    if (stage1.isEmpty) return logs.toSeq
 
     // Stages 2-9 as one local method: a stage that ends the run early
     // returns from it, inside the interpreted scope below.
@@ -556,13 +562,6 @@ object RunPipeline {
       if (fits.isEmpty) reportOnly("0-6")
       else logs += StageLog(9, "report", "success", s"$outDir/RUN_REPORT.md")
     }
-    interpreted(spark) {
-      try dailyStages()
-      catch {
-        case f: StageFailed =>
-          logs += StageLog(f.stage, f.name, "failed", f.getMessage)
-      }
-    }
-    logs.toSeq
+    interpreted(spark)(dailyStages())
   }
 }

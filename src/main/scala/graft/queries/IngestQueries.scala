@@ -1,7 +1,7 @@
 package graft.queries
 
 import java.io.File
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.Canon.round
 import graft.ingest.XmlRecordScan
@@ -15,9 +15,9 @@ import graft.operators.DailyAgg
   * The fixture is seeded from row ids (no RNG), written once per scale
   * under /tmp and reused; sf0.1 generates 2M records (~0.5 GB), so the
   * driver-recorded seconds divide into a rec/s and MB/s figure comparable
-  * with BASELINE. Rows-only correctness check (the file is not one of the
-  * oracle's parquet tables); the S5 semantics are oracle-free but pinned
-  * by IngestSpec fixtures.
+  * with BASELINE. The file is not one of the oracle's parquet tables, so
+  * the oracle is a pinned expected table; the S5 semantics are pinned by
+  * IngestSpec fixtures.
   */
 object IngestQueries {
 
@@ -52,9 +52,9 @@ object IngestQueries {
     path
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Seq[Query] = Seq(
     // S5 at scale: text-scan + regex extract + outlier filter + daily agg.
-    "s5_xml_scan" -> ((s, dir) => {
+    Query("s5_xml_scan", (s, dir) => {
       val path = xmlFixture(s, dir)
       val hr = XmlRecordScan.records(s, path, Seq(HrType))
         .withColumn("v", col("value").try_cast("double"))
@@ -63,16 +63,8 @@ object IngestQueries {
           DailyAgg.outlierFilter(hr, "v", 30, 220), "start_ts", "v")
         .select(col("date"), round(col("v_mean"), 6).as("hr_mean"),
           col("n_samples").as("hr_samples"))
-    }))
-
-  // Pinned-expected gate (the XML fixture lives outside the oracle's
-  // parquet tables, so no SQL twin can re-scan it): the committed
-  // parquet is the engine's own deterministic output at sf0.01 — the
-  // fixture derives every record from the row id, no RNG — regenerated
-  // via tools/pin_expected.py if the generator changes. Valid for the
-  // driver's sf0.01 correctness run only.
-  def oracles: Map[String, String] = Map(
-    "s5_xml_scan" ->
-      """SELECT date, hr_mean, hr_samples
-        |FROM read_parquet('/root/repo/src/test/resources/expected/s5_xml_scan_sf0.01.parquet')""".stripMargin)
+    },
+      // Pinned: the fixture derives every record from the row id, no RNG;
+      // re-pin if the generator changes.
+      oracle = Query.pinned("s5_xml_scan", "date, hr_mean, hr_samples")))
 }

@@ -12,22 +12,7 @@ import graft.operators._
   * SURVEY §2 rows A10, A15, A22, D2, C1, M1', M3.
   */
 object MlQueries {
-
-  private def dailyUser(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .groupBy(col("user_id"), to_date(col("ts")).as("date"))
-      .agg(
-        round(avg(col("value")), 6).as("f_mean"),
-        count(lit(1)).cast("double").as("f_n"),
-        round(sum(when(col("event_type") === "purchase", col("value")).otherwise(0.0)), 6)
-          .as("f_purchase"))
-
-  private val dailyUserSql: String =
-    """SELECT user_id, CAST(ts AS DATE) AS date,
-      |  round(avg(value), 6) AS f_mean,
-      |  CAST(count(*) AS DOUBLE) AS f_n,
-      |  round(sum(CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END), 6) AS f_purchase
-      |FROM events GROUP BY 1, 2""".stripMargin
+  import EventQueries.{dailyUser, dailyUserSql}
 
   /** The ML-eval family's calendar split boundary — ONE constant so the
     * m5 oracle chain and every derived eval (m7/m8/m10, m9's fixed test
@@ -87,17 +72,29 @@ object MlQueries {
           .as("prec"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Seq[Query] = Seq(
     // A10: interval table -> daily duration sums (events as intervals of
     // `value` seconds).
-    "a10_intervals" -> ((s, dir) => {
+    Query("a10_intervals", (s, dir) => {
       val intervals = Tables.events(s, dir)
         .select(col("ts").as("start_ts"),
           // floor explicitly: Spark's double->int cast truncates but
           // DuckDB's rounds — floor() pins both to the same integer.
           expr("timestampadd(SECOND, CAST(floor(value) AS INT), ts)").as("end_ts"))
       Intervals.dailyDurations(intervals, "start_ts", "end_ts")
-    }),
+    },
+      oracle =
+        """WITH iv AS (
+          |  SELECT ts AS start_ts, ts + CAST(floor(value) AS INT) * INTERVAL 1 SECOND AS end_ts
+          |  FROM events),
+          |d AS (
+          |  SELECT start_ts,
+          |    (epoch_us(end_ts) // 1000000 - epoch_us(start_ts) // 1000000) / 3600.0 AS dur_h
+          |  FROM iv)
+          |SELECT CAST(start_ts AS DATE) AS date,
+          |  round(sum(dur_h), 6) AS total_h, count(*) AS n_intervals,
+          |  round(max(dur_h), 6) AS max_h
+          |FROM d WHERE dur_h > 0 GROUP BY 1""".stripMargin),
 
     // A11: naps-JSON aggregation. Testdata has no JSON interval column,
     // so the query synthesizes one deterministically from events — each
@@ -106,7 +103,7 @@ object MlQueries {
     // trips it through from_json + higher-order aggregate (the real A11
     // path); the twin computes the durations independently from the raw
     // columns — a cross-representation check, not a replay.
-    "a11_naps_daily" -> ((s, dir) => {
+    Query("a11_naps_daily", (s, dir) => {
       val f = "yyyy-MM-dd HH:mm:ss"
       val startS = date_format(col("ts"), f)
       val jsonNaps = concat(
@@ -120,13 +117,28 @@ object MlQueries {
         Tables.events(s, dir)
           .select(to_date(col("ts")).as("date"), jsonNaps.as("naps")),
         "date", "naps")
-    }),
+    },
+      // a11 twin: the engine builds a JSON naps array per event and parses
+      // it back (from_json + higher-order aggregate); the twin computes the
+      // same durations straight from the raw columns — the two naps are
+      // [ts, ts+floor(value)s] and [ts, ts-30min], so the per-row clamped
+      // sum is floor(value)/3600 when floor(value) >= 1, else 0.
+      oracle =
+        """WITH n AS (
+          |  SELECT CAST(ts AS DATE) AS date,
+          |    CASE WHEN floor(value) > 0 THEN floor(value) / 3600.0
+          |      ELSE 0.0 END AS nap_h
+          |  FROM events)
+          |SELECT date, round(sum(nap_h), 6) AS nap_hours,
+          |  CAST(sum(CASE WHEN nap_h > 0 THEN 1 ELSE 0 END) AS BIGINT)
+          |    AS days_with_naps
+          |FROM n GROUP BY date""".stripMargin),
 
     // C4: two-phase data-dependent unit conversion — phase 1 collects the
     // whole-column max per event_type (bounded by |event_type|, the
     // global-stat driver round-trip), phase 2 applies the minutes->hours
     // decision as literals. Never per-partition (SURVEY §7.5.5).
-    "c4_units" -> ((s, dir) => {
+    Query("c4_units", (s, dir) => {
       val ev = Tables.events(s, dir)
       val decisions = ev.groupBy(col("event_type"))
         .agg(max(col("value")).as("mx")).collect()
@@ -147,33 +159,99 @@ object MlQueries {
         .agg(round(max("value"), 6).as("max_raw"),
           round(sum("v_h"), 6).as("total_h"))
         .select("event_type", "max_raw", "converted", "total_h")
-    }),
+    },
+      // c4 twin: the whole-column max decision as a per-type join instead
+      // of the engine's driver round-trip; the conversion multiplies by the
+      // identical double constant (1.0/60.0) so the products are
+      // bit-identical to the engine's convertIf.
+      oracle =
+        """WITH mx AS (
+          |  SELECT event_type, max(value) AS mxv FROM events GROUP BY 1)
+          |SELECT e.event_type,
+          |  round(max(e.value), 6) AS max_raw,
+          |  CAST(CASE WHEN mx.mxv > 24.0 THEN 1 ELSE 0 END AS INT) AS converted,
+          |  round(sum(CASE WHEN mx.mxv > 24.0 THEN e.value * (1.0/60.0)
+          |    ELSE e.value END), 6) AS total_h
+          |FROM events e JOIN mx USING (event_type)
+          |GROUP BY e.event_type, mx.mxv""".stripMargin),
 
     // A15: instability — variance of per-segment feature means, max-normed.
-    "a15_instability" -> ((s, dir) => {
+    Query("a15_instability", (s, dir) => {
       val segmented = dailyUser(s, dir).withColumn("segment_id", col("user_id"))
       Segmentation.instabilityScores(segmented, Seq("f_mean", "f_n", "f_purchase"))
-    }),
+    },
+      oracle =
+        s"""WITH daily AS ($dailyUserSql),
+          |seg AS (
+          |  SELECT user_id, avg(f_mean) AS m1, avg(f_n) AS m2, avg(f_purchase) AS m3
+          |  FROM daily GROUP BY user_id),
+          |vars AS (
+          |  SELECT var_samp(m1) AS v1, var_samp(m2) AS v2, var_samp(m3) AS v3 FROM seg),
+          |un AS (
+          |  SELECT 'f_mean' AS feature, v1 AS variance FROM vars
+          |  UNION ALL SELECT 'f_n', v2 FROM vars
+          |  UNION ALL SELECT 'f_purchase', v3 FROM vars),
+          |mx AS (SELECT max(variance) AS mv FROM un)
+          |SELECT feature, round(variance, 6) AS variance,
+          |  CASE WHEN mv > 0 THEN round(variance / mv, 6) ELSE 0.0 END AS instability
+          |FROM un CROSS JOIN mx""".stripMargin),
 
     // A22: overnight-window day classification.
-    "a22_day_class" -> ((s, dir) =>
+    Query("a22_day_class", (s, dir) =>
       DailyAgg.classifyDays(Tables.events(s, dir), "ts",
         col("event_type").isin("click", "view"),
-        col("event_type") === "purchase")),
+        col("event_type") === "purchase"),
+      oracle =
+        """WITH sh AS (
+          |  SELECT ts + INTERVAL 2 HOUR AS shifted, event_type FROM events),
+          |o AS (
+          |  SELECT CAST(shifted AS DATE) AS date,
+          |    sum(CASE WHEN event_type IN ('click','view') THEN 1 ELSE 0 END) AS n_a,
+          |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS n_b
+          |  FROM sh WHERE hour(shifted) < 10 GROUP BY 1)
+          |SELECT date, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+          |  CASE WHEN n_a > 0 AND n_b > 0 THEN 'normal'
+          |       WHEN n_a = 0 AND n_b > 0 THEN 'sleepless'
+          |       WHEN n_a = 0 AND n_b = 0 THEN 'sensor_missing'
+          |       ELSE 'ambiguous' END AS day_class
+          |FROM o""".stripMargin),
 
     // D2: KS two-sample statistic between first and second half per type.
-    "d2_ks" -> ((s, dir) => {
+    Query("d2_ks", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
       val labeled = Tables.events(s, dir)
         .withColumn("s", when(ntile(2).over(w) === 1, "a").otherwise("b"))
       Drift.ksTwoSample(labeled, "event_type", "s", "value")
-    }),
+    },
+      oracle =
+        """WITH h AS (
+          |  SELECT event_type, value,
+          |    CASE WHEN ntile(2) OVER (PARTITION BY event_type ORDER BY ts, event_id) = 1
+          |      THEN 'a' ELSE 'b' END AS s
+          |  FROM events),
+          |pv AS (
+          |  SELECT event_type, value,
+          |    sum(CASE WHEN s = 'a' THEN 1 ELSE 0 END) AS ca,
+          |    sum(CASE WHEN s = 'b' THEN 1 ELSE 0 END) AS cb
+          |  FROM h GROUP BY 1, 2),
+          |cum AS (
+          |  SELECT event_type,
+          |    sum(ca) OVER w AS cum_a, sum(cb) OVER w AS cum_b,
+          |    sum(ca) OVER wa AS n_a, sum(cb) OVER wa AS n_b
+          |  FROM pv
+          |  WINDOW w AS (PARTITION BY event_type ORDER BY value
+          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+          |  wa AS (PARTITION BY event_type))
+          |SELECT event_type,
+          |  round(max(abs(cum_a / CAST(n_a AS DOUBLE) - cum_b / CAST(n_b AS DOUBLE))), 6) AS ks_stat,
+          |  CAST(max(n_a) AS BIGINT) AS n_a, CAST(max(n_b) AS BIGINT) AS n_b
+          |FROM cum GROUP BY event_type""".stripMargin),
 
     // D2 at segment boundaries: +-7-day windows around each segment start
     // (first segment skipped), per-feature KS + asymptotic p-value (the
     // SQL-replayable form — the DuckDB twin sums the identical series).
-    "d2_ks_boundaries" -> ((s, dir) => {
+    Query("d2_ks_boundaries", (s, dir) => {
       import s.implicits._
       val daily = Tables.events(s, dir)
         .groupBy(to_date(col("ts")).as("date"))
@@ -186,14 +264,76 @@ object MlQueries {
       Drift.ksAtBoundaries(daily, segments, "date",
         Seq("f_mean", "f_purchase"), windowDays = 7, minRows = 5,
         pMethod = "asymptotic")
-    }),
+    },
+      oracle =
+        """WITH daily AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS f_mean,
+          |    round(sum(CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END), 6)
+          |      AS f_purchase
+          |  FROM events GROUP BY 1),
+          |bnd AS (SELECT * FROM (VALUES (CAST(2 AS BIGINT), DATE '2024-01-11'),
+          |        (CAST(3 AS BIGINT), DATE '2024-01-21')) AS t(segment_id, boundary_date)),
+          |tagged AS (
+          |  SELECT b.segment_id, b.boundary_date, d.date, d.f_mean, d.f_purchase,
+          |    CASE WHEN d.date < b.boundary_date THEN 'a' ELSE 'b' END AS side
+          |  FROM daily d JOIN bnd b
+          |    ON d.date >= b.boundary_date - INTERVAL 7 DAY
+          |   AND d.date < b.boundary_date + INTERVAL 7 DAY),
+          |eligible AS (
+          |  SELECT segment_id, boundary_date FROM tagged GROUP BY 1, 2
+          |  HAVING sum(CASE WHEN side = 'a' THEN 1 ELSE 0 END) >= 5
+          |     AND sum(CASE WHEN side = 'b' THEN 1 ELSE 0 END) >= 5),
+          |unp AS (
+          |  SELECT t.segment_id, t.boundary_date, 'f_mean' AS feature, t.side,
+          |    t.f_mean AS value
+          |  FROM tagged t JOIN eligible e USING (segment_id, boundary_date)
+          |  WHERE t.f_mean IS NOT NULL
+          |  UNION ALL
+          |  SELECT t.segment_id, t.boundary_date, 'f_purchase', t.side, t.f_purchase
+          |  FROM tagged t JOIN eligible e USING (segment_id, boundary_date)
+          |  WHERE t.f_purchase IS NOT NULL),
+          |pv AS (
+          |  SELECT segment_id, boundary_date, feature, value,
+          |    sum(CASE WHEN side = 'a' THEN 1 ELSE 0 END) AS ca,
+          |    sum(CASE WHEN side = 'b' THEN 1 ELSE 0 END) AS cb
+          |  FROM unp GROUP BY 1, 2, 3, 4),
+          |cum AS (
+          |  SELECT segment_id, boundary_date, feature,
+          |    sum(ca) OVER w AS cum_a, sum(cb) OVER w AS cum_b,
+          |    sum(ca) OVER wa AS n_a, sum(cb) OVER wa AS n_b
+          |  FROM pv
+          |  WINDOW w AS (PARTITION BY segment_id, boundary_date, feature ORDER BY value
+          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+          |  wa AS (PARTITION BY segment_id, boundary_date, feature)),
+          |ks AS (
+          |  SELECT segment_id, boundary_date, feature,
+          |    round(max(abs(cum_a / CAST(n_a AS DOUBLE) - cum_b / CAST(n_b AS DOUBLE))), 6)
+          |      AS ks_stat,
+          |    CAST(max(n_a) AS BIGINT) AS n_before, CAST(max(n_b) AS BIGINT) AS n_after
+          |  FROM cum GROUP BY 1, 2, 3),
+          |lamt AS (
+          |  SELECT *,
+          |    (sqrt(n_before * CAST(n_after AS DOUBLE) / (n_before + n_after)) + 0.12
+          |      + 0.11 / sqrt(n_before * CAST(n_after AS DOUBLE) / (n_before + n_after)))
+          |      * ks_stat AS lam
+          |  FROM ks WHERE n_before >= 5 AND n_after >= 5),
+          |pval AS (
+          |  SELECT segment_id, boundary_date, feature, ks_stat, n_before, n_after,
+          |    round(CASE WHEN lam < 1e-3 THEN 1.0
+          |      ELSE least(greatest(2.0 * list_sum(list_transform(range(1, 101),
+          |        k -> power(-1.0, k - 1) * exp(-2.0 * k * k * lam * lam))), 0.0), 1.0)
+          |      END, 6) AS p_value
+          |  FROM lamt)
+          |SELECT segment_id, boundary_date, feature, ks_stat, p_value,
+          |  p_value < 0.05 AS significant, n_before, n_after
+          |FROM pval""".stripMargin),
 
     // D2 exact: the same boundary scan with the DEFAULT auto p-method —
     // at these window sizes that is the exact Hodges path-count p-value,
     // matching what the reference's scipy call computes. No closed-form
     // SQL twin exists (the DP isn't SQL-expressible), so the oracle is a
     // pinned expected table (tools/pin_expected.py), like d1_adwin.
-    "d2_ks_exact" -> ((s, dir) => {
+    Query("d2_ks_exact", (s, dir) => {
       import s.implicits._
       val daily = Tables.events(s, dir)
         .groupBy(to_date(col("ts")).as("date"))
@@ -205,10 +345,14 @@ object MlQueries {
         .withColumn("date_start", col("date_start").cast("date"))
       Drift.ksAtBoundaries(daily, segments, "date",
         Seq("f_mean", "f_purchase"), windowDays = 7, minRows = 5)
-    }),
+    },
+      // D2 exact: pinned (the path-count DP has no SQL twin); the p-value
+      // algorithm itself is brute-force-verified in DriftDedupSpec.
+      oracle = Query.pinned("d2_ks_exact", "segment_id, boundary_date, " +
+        "feature, ks_stat, p_value,\n  significant, n_before, n_after")),
 
     // C1: multi-format timestamp parse chain over heterogeneous strings.
-    "c1_parse_ts" -> ((s, dir) => {
+    Query("c1_parse_ts", (s, dir) => {
       val stringified = Tables.events(s, dir).withColumn("ts_str",
         when(col("event_type") === "click",
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))
@@ -224,11 +368,29 @@ object MlQueries {
           sum(when(col("parsed").isNull, 1).otherwise(0)).as("n_failed"),
           min(unix_timestamp(col("parsed"))).as("min_epoch"),
           max(unix_timestamp(col("parsed"))).as("max_epoch"))
-    }),
+    },
+      oracle =
+        """WITH s AS (
+          |  SELECT event_type,
+          |    CASE WHEN event_type = 'click' THEN strftime(ts, '%Y-%m-%d %H:%M:%S')
+          |         WHEN event_type = 'view' THEN strftime(ts, '%Y-%m-%dT%H:%M:%S')
+          |         ELSE strftime(ts, '%Y-%m-%d') END AS ts_str
+          |  FROM events),
+          |p AS (
+          |  SELECT event_type, coalesce(
+          |    try_strptime(ts_str, '%Y-%m-%d %H:%M:%S'),
+          |    try_strptime(ts_str, '%Y-%m-%dT%H:%M:%S'),
+          |    try_strptime(ts_str, '%Y-%m-%d')) AS parsed
+          |  FROM s)
+          |SELECT event_type, count(parsed) AS n_parsed,
+          |  CAST(sum(CASE WHEN parsed IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_failed,
+          |  min(epoch_us(parsed) // 1000000) AS min_epoch,
+          |  max(epoch_us(parsed) // 1000000) AS max_epoch
+          |FROM p GROUP BY event_type""".stripMargin),
 
     // C2: timezone cutover — wall-clock conversion switching home zone at
     // a date (winter months, so no DST edge in the fixture range).
-    "c2_tz_cutover" -> ((s, dir) => {
+    Query("c2_tz_cutover", (s, dir) => {
       val local = TimeParse.tzCutover(col("ts"), "2024-01-15",
         "Europe/Dublin", "America/New_York")
       Tables.events(s, dir)
@@ -236,10 +398,19 @@ object MlQueries {
         .withColumn("local_date", to_date(local))
         .groupBy("local_date")
         .agg(count(lit(1)).as("n"), round(avg("local_hour"), 6).as("avg_local_hour"))
-    }),
+    },
+      oracle =
+        """WITH loc AS (
+          |  SELECT CASE WHEN CAST(ts AS DATE) < DATE '2024-01-15'
+          |    THEN (ts AT TIME ZONE 'UTC') AT TIME ZONE 'Europe/Dublin'
+          |    ELSE (ts AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York' END AS lt
+          |  FROM events)
+          |SELECT CAST(lt AS DATE) AS local_date, count(*) AS n,
+          |  round(avg(hour(lt)), 6) AS avg_local_hour
+          |FROM loc GROUP BY 1""".stripMargin),
 
     // W10: ranking window functions (percent_rank / cume_dist / ntile).
-    "w10_ranks" -> ((s, dir) => {
+    Query("w10_ranks", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type").orderBy("value")
       Tables.events(s, dir)
@@ -249,11 +420,20 @@ object MlQueries {
         .groupBy("event_type", "quartile")
         .agg(count(lit(1)).as("n"), round(avg("value"), 6).as("v_avg"),
           round(max("pr"), 6).as("pr_max"), round(max("cd"), 6).as("cd_max"))
-    }),
+    },
+      oracle =
+        """WITH r AS (
+          |  SELECT event_type, value,
+          |    percent_rank() OVER w AS pr, cume_dist() OVER w AS cd,
+          |    ntile(4) OVER w AS quartile
+          |  FROM events WINDOW w AS (PARTITION BY event_type ORDER BY value))
+          |SELECT event_type, quartile, count(*) AS n, round(avg(value), 6) AS v_avg,
+          |  round(max(pr), 6) AS pr_max, round(max(cd), 6) AS cd_max
+          |FROM r GROUP BY 1, 2""".stripMargin),
 
     // M1': per-group median imputation with global fallback over a sparse
     // daily grid.
-    "m1_impute" -> ((s, dir) => {
+    Query("m1_impute", (s, dir) => {
       val spine = Tables.events(s, dir).select(to_date(col("ts")).as("date")).distinct()
       val users = Tables.events(s, dir).select("user_id").distinct()
       val purch = Tables.events(s, dir).filter(col("event_type") === "purchase")
@@ -262,11 +442,26 @@ object MlQueries {
       val sparse = spine.crossJoin(users).join(purch, Seq("date", "user_id"), "left")
       Impute.medianImpute(sparse, Seq("user_id"), Seq("pv"))
         .select(col("user_id"), col("date"), round(col("pv"), 6).as("pv"))
-    }),
+    },
+      oracle =
+        """WITH spine AS (SELECT DISTINCT CAST(ts AS DATE) AS date FROM events),
+          |users AS (SELECT DISTINCT user_id FROM events),
+          |purch AS (
+          |  SELECT CAST(ts AS DATE) AS date, user_id, round(avg(value), 6) AS pv
+          |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
+          |grid AS (
+          |  SELECT u.user_id, s.date, p.pv
+          |  FROM spine s CROSS JOIN users u
+          |  LEFT JOIN purch p ON p.date = s.date AND p.user_id = u.user_id),
+          |gm AS (SELECT user_id, quantile_cont(pv, 0.5) AS med FROM grid GROUP BY user_id),
+          |am AS (SELECT quantile_cont(pv, 0.5) AS gmed FROM grid)
+          |SELECT g.user_id, g.date,
+          |  round(coalesce(g.pv, gm.med, am.gmed, 0.0), 6) AS pv
+          |FROM grid g LEFT JOIN gm ON g.user_id = gm.user_id CROSS JOIN am""".stripMargin),
 
     // M1 full: deterministic iterative ridge imputation (MICE option (a))
     // over a sparse 2-feature user x date grid - 2 rounds, lambda=1.
-    "m1_iterative" -> ((s, dir) => {
+    Query("m1_iterative", (s, dir) => {
       val ev = Tables.events(s, dir)
       val spine = ev.select(to_date(col("ts")).as("date")).distinct()
       val users = ev.select("user_id").distinct()
@@ -280,35 +475,147 @@ object MlQueries {
           maxIter = 2, lambda = 1.0, minSegmentRows = 5)
         .select(col("user_id"), col("date"),
           round(col("f1"), 6).as("f1"), round(col("f2"), 6).as("f2"))
-    }),
+    },
+      oracle = {
+        // one ridge step (lambda=1, intercept penalized): y ~ x over rows
+        // where y was originally observed; 2x2 normal equations in closed form
+        def step(src: String, tgt: String, y: String, x: String): String = {
+          val st = s"st_$tgt"
+          val cf = s"cf_$tgt"
+          val upd =
+            if (y == "f1")
+              s"""CASE WHEN NOT s.o_f1 AND c.b0 IS NOT NULL
+                 |      THEN c.b0 + c.b1 * s.f2 ELSE s.f1 END AS f1, s.f2 AS f2"""
+                .stripMargin
+            else
+              s"""s.f1 AS f1, CASE WHEN NOT s.o_f2 AND c.b0 IS NOT NULL
+                 |      THEN c.b0 + c.b1 * s.f1 ELSE s.f2 END AS f2""".stripMargin
+          s"""$st AS (
+             |  SELECT user_id, count(*) AS n, sum($x) AS sx, sum($x*$x) AS sxx,
+             |    sum($y) AS sy, sum($x*$y) AS sxy
+             |  FROM $src WHERE o_$y GROUP BY user_id),
+             |$cf AS (
+             |  SELECT user_id,
+             |    (sy*(sxx+1.0) - sxy*sx) / ((n+1.0)*(sxx+1.0) - sx*sx) AS b0,
+             |    (sxy*(n+1.0) - sy*sx) / ((n+1.0)*(sxx+1.0) - sx*sx) AS b1
+             |  FROM $st),
+             |$tgt AS (
+             |  SELECT s.user_id, s.date, s.o_f1, s.o_f2,
+             |    $upd
+             |  FROM $src s LEFT JOIN $cf c USING(user_id))""".stripMargin
+        }
+        s"""WITH spine AS (SELECT DISTINCT CAST(ts AS DATE) AS date FROM events),
+          |users AS (SELECT DISTINCT user_id FROM events),
+          |pf AS (SELECT user_id, CAST(ts AS DATE) AS date, round(avg(value), 6) AS v
+          |       FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
+          |cf AS (SELECT user_id, CAST(ts AS DATE) AS date, round(avg(value), 6) AS v
+          |       FROM events WHERE event_type = 'click' GROUP BY 1, 2),
+          |grid AS (
+          |  SELECT u.user_id, s.date, a.v AS f1r, b.v AS f2r
+          |  FROM spine s CROSS JOIN users u
+          |  LEFT JOIN pf a ON a.user_id = u.user_id AND a.date = s.date
+          |  LEFT JOIN cf b ON b.user_id = u.user_id AND b.date = s.date),
+          |med AS (SELECT user_id, quantile_cont(f1r, 0.5) AS m1,
+          |        quantile_cont(f2r, 0.5) AS m2 FROM grid GROUP BY user_id),
+          |gm AS (SELECT quantile_cont(f1r, 0.5) AS g1,
+          |       quantile_cont(f2r, 0.5) AS g2 FROM grid),
+          |s0 AS (
+          |  SELECT g.user_id, g.date,
+          |    g.f1r IS NOT NULL AS o_f1, g.f2r IS NOT NULL AS o_f2,
+          |    coalesce(g.f1r, m.m1, gm.g1, 0.0) AS f1,
+          |    coalesce(g.f2r, m.m2, gm.g2, 0.0) AS f2
+          |  FROM grid g LEFT JOIN med m USING(user_id) CROSS JOIN gm),
+          |${step("s0", "s1", "f1", "f2")},
+          |${step("s1", "s2", "f2", "f1")},
+          |${step("s2", "s3", "f1", "f2")},
+          |${step("s3", "s4", "f2", "f1")}
+          |SELECT user_id, date, round(f1, 6) AS f1, round(f2, 6) AS f2
+          |FROM s4""".stripMargin
+      }),
 
     // M3: anti-leak standard scaling (fit on train fold only).
-    "m3_scale" -> ((s, dir) =>
+    Query("m3_scale", (s, dir) =>
       Impute.scaleFitOnTrain(dailyUser(s, dir),
           col("date") < lit(TrainEnd).cast("date"), Seq("f_mean", "f_n"))
-        .select("user_id", "date", "f_mean_scaled", "f_n_scaled")),
+        .select("user_id", "date", "f_mean_scaled", "f_n_scaled"),
+      oracle =
+        s"""WITH daily AS ($dailyUserSql),
+          |stats AS (
+          |  SELECT avg(f_mean) FILTER (date < DATE '$TrainEnd') AS m1,
+          |    stddev_samp(f_mean) FILTER (date < DATE '$TrainEnd') AS s1,
+          |    avg(f_n) FILTER (date < DATE '$TrainEnd') AS m2,
+          |    stddev_samp(f_n) FILTER (date < DATE '$TrainEnd') AS s2
+          |  FROM daily)
+          |SELECT d.user_id, d.date,
+          |  round(CASE WHEN s1 IS NOT NULL AND s1 > 0 THEN (d.f_mean - m1) / s1 ELSE 0.0 END, 6)
+          |    AS f_mean_scaled,
+          |  round(CASE WHEN s2 IS NOT NULL AND s2 > 0 THEN (d.f_n - m2) / s2 ELSE 0.0 END, 6)
+          |    AS f_n_scaled
+          |FROM daily d CROSS JOIN stats""".stripMargin),
 
     // A18: two-phase activity stats (peaks need the day's own mean/std).
-    "a18_activity" -> ((s, dir) =>
-      DailyAgg.activityStats(Tables.events(s, dir), "ts", "value", 10.0)),
+    Query("a18_activity", (s, dir) =>
+      DailyAgg.activityStats(Tables.events(s, dir), "ts", "value", 10.0),
+      oracle =
+        """WITH stats AS (
+          |  SELECT CAST(ts AS DATE) AS date, avg(value) AS m, stddev_samp(value) AS s,
+          |    count(*) AS n_events
+          |  FROM events GROUP BY 1)
+          |SELECT e.date, round(any_value(st.m), 6) AS v_mean,
+          |  round(any_value(st.s), 6) AS v_std,
+          |  any_value(st.n_events) AS n_events,
+          |  CAST(sum(CASE WHEN e.v > st.m + st.s THEN 1 ELSE 0 END) AS BIGINT) AS n_peaks,
+          |  round(sum(CASE WHEN e.v <= 10.0 THEN 1 ELSE 0 END) / CAST(count(*) AS DOUBLE), 6)
+          |    AS sedentary_ratio
+          |FROM (SELECT CAST(ts AS DATE) AS date, value AS v FROM events) e
+          |JOIN stats st ON e.date = st.date
+          |GROUP BY e.date""".stripMargin),
 
     // W9: multi-rule auto-segmentation (gap-recovery + delta-shift with
     // density guard), summarized per segment.
-    "w9_autoseg" -> ((s, dir) => {
+    Query("w9_autoseg", (s, dir) => {
       val seg = Segmentation.autoSegment(dailyUser(s, dir), "user_id", "date",
         "f_mean", k = 5, deltaThreshold = 3.0, minDensity = 0.8, gapDays = 1)
       seg.groupBy("user_id", "segment_id")
         .agg(min("date").as("seg_start"), max("date").as("seg_end"),
           count(lit(1)).as("n_days"),
           min_by(col("seg_reason"), col("date")).as("reason"))
-    }),
+    },
+      oracle =
+        s"""WITH daily AS ($dailyUserSql),
+          |r AS (
+          |  SELECT user_id, date, f_mean,
+          |    avg(f_mean) OVER (PARTITION BY user_id ORDER BY date
+          |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS roll,
+          |    count(f_mean) OVER (PARTITION BY user_id ORDER BY date
+          |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) / 5.0 AS dens,
+          |    lag(date) OVER (PARTITION BY user_id ORDER BY date) AS prev_d
+          |  FROM daily),
+          |f AS (
+          |  SELECT user_id, date,
+          |    CASE WHEN prev_d IS NULL THEN 'initial'
+          |         WHEN date_diff('day', prev_d, date) > 1 THEN 'gap_recovery'
+          |         WHEN dens >= 0.8 AND abs(roll - lag(roll) OVER
+          |           (PARTITION BY user_id ORDER BY date)) > 3.0 THEN 'delta_shift'
+          |    END AS seg_reason
+          |  FROM r),
+          |seg AS (
+          |  SELECT user_id, date, seg_reason,
+          |    sum(CASE WHEN seg_reason IS NOT NULL THEN 1 ELSE 0 END)
+          |      OVER (PARTITION BY user_id ORDER BY date
+          |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS segment_id
+          |  FROM f)
+          |SELECT user_id, CAST(segment_id AS BIGINT) AS segment_id,
+          |  min(date) AS seg_start, max(date) AS seg_end,
+          |  count(*) AS n_days, arg_min(seg_reason, date) AS reason
+          |FROM seg GROUP BY user_id, segment_id""".stripMargin),
 
     // W9-full (columnar half): 3-signal delta rules with per-signal
     // thresholds + density guard + gap recovery, priority-chained like the
     // reference's rule order; sparsity synthesized deterministically so
     // every rule is reachable. (The loop-exact reference semantics incl.
     // temporal fallback + source mode are autoSegmentFull, parity-pinned.)
-    "w9_autoseg_multi" -> ((s, dir) => {
+    Query("w9_autoseg_multi", (s, dir) => {
       val sparse = dailyUser(s, dir).select(col("user_id"), col("date"),
         when(dayofmonth(col("date")) % 5 === 0, lit(null).cast("double"))
           .otherwise(col("f_mean")).as("s_hr"),
@@ -323,23 +630,88 @@ object MlQueries {
           ("s_se", 30.0, "se_shift")),
         k = 7, minDensity = 0.7, gapMin = 3, missingCol = "missing")
         .select("user_id", "date", "seg_reason", "segment_id")
-    }),
+    },
+      oracle =
+        s"""WITH daily AS ($dailyUserSql),
+          |sp AS (
+          |  SELECT user_id, date,
+          |    CASE WHEN day(date) % 5 = 0 THEN NULL ELSE f_mean END AS s_hr,
+          |    CASE WHEN day(date) % 7 = 3 THEN NULL ELSE f_n END AS s_hrv,
+          |    CASE WHEN day(date) % 4 = 1 THEN NULL ELSE f_purchase END AS s_se
+          |  FROM daily),
+          |m AS (SELECT *,
+          |  CASE WHEN s_hr IS NULL AND s_se IS NULL THEN 1 ELSE 0 END AS missing
+          |  FROM sp),
+          |w AS (
+          |  SELECT user_id, date, missing,
+          |    row_number() OVER win AS rn,
+          |    lag(missing, 1) OVER win AS m1, lag(missing, 2) OVER win AS m2,
+          |    lag(missing, 3) OVER win AS m3,
+          |    count(s_hr) OVER wprev / 7.0 AS dp_hr, count(s_hr) OVER wcurr / 7.0 AS dc_hr,
+          |    avg(s_hr) OVER wprev AS ap_hr, avg(s_hr) OVER wcurr AS ac_hr,
+          |    count(s_hrv) OVER wprev / 7.0 AS dp_hrv, count(s_hrv) OVER wcurr / 7.0 AS dc_hrv,
+          |    avg(s_hrv) OVER wprev AS ap_hrv, avg(s_hrv) OVER wcurr AS ac_hrv,
+          |    count(s_se) OVER wprev / 7.0 AS dp_se, count(s_se) OVER wcurr / 7.0 AS dc_se,
+          |    avg(s_se) OVER wprev AS ap_se, avg(s_se) OVER wcurr AS ac_se
+          |  FROM m
+          |  WINDOW win AS (PARTITION BY user_id ORDER BY date),
+          |    wprev AS (PARTITION BY user_id ORDER BY date
+          |      ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING),
+          |    wcurr AS (PARTITION BY user_id ORDER BY date
+          |      ROWS BETWEEN CURRENT ROW AND 6 FOLLOWING)),
+          |r AS (
+          |  SELECT user_id, date,
+          |    CASE WHEN rn > 3 AND missing = 0 AND m1 = 1 AND m2 = 1 AND m3 = 1
+          |           THEN 'gap_recovery'
+          |         WHEN rn > 7 AND dp_hr >= 0.7 AND dc_hr >= 0.7
+          |           AND abs(ac_hr - ap_hr) >= 3.0 THEN 'hr_shift'
+          |         WHEN rn > 7 AND dp_hrv >= 0.7 AND dc_hrv >= 0.7
+          |           AND abs(ac_hrv - ap_hrv) >= 2.0 THEN 'hrv_shift'
+          |         WHEN rn > 7 AND dp_se >= 0.7 AND dc_se >= 0.7
+          |           AND abs(ac_se - ap_se) >= 30.0 THEN 'se_shift'
+          |    END AS seg_reason
+          |  FROM w)
+          |SELECT user_id, date, seg_reason,
+          |  CAST(sum(CASE WHEN seg_reason IS NOT NULL THEN 1 ELSE 0 END)
+          |    OVER (PARTITION BY user_id ORDER BY date
+          |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1 AS BIGINT)
+          |    AS segment_id
+          |FROM r""".stripMargin),
 
     // Q1: single-pass audit rules over the events table.
-    "q1_audit" -> ((s, dir) =>
+    Query("q1_audit", (s, dir) =>
       graft.qc.Audit.run(Tables.events(s, dir), Seq(
         graft.qc.Audit.rangeRule("value", 0, 150),
         graft.qc.Audit.nullRule("props"),
         graft.qc.Audit.Rule("type_unknown", "CRITICAL",
-          !col("event_type").isin("click", "error", "purchase", "signup", "view"))))),
+          !col("event_type").isin("click", "error", "purchase", "signup", "view")))),
+      oracle =
+        """WITH agg AS (
+          |  SELECT
+          |    sum(CASE WHEN value IS NOT NULL AND value NOT BETWEEN 0 AND 150
+          |        THEN 1 ELSE 0 END) AS value_range,
+          |    sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END) AS props_null,
+          |    sum(CASE WHEN event_type NOT IN ('click','error','purchase','signup','view')
+          |        THEN 1 ELSE 0 END) AS type_unknown,
+          |    count(*) AS n
+          |  FROM events)
+          |SELECT rule, severity, CAST(n_violations AS BIGINT) AS n_violations, n AS n_rows,
+          |  round(n_violations * 100.0 / n, 6) AS violation_pct
+          |FROM (
+          |  SELECT 'value_range' AS rule, 'CRITICAL' AS severity, value_range AS n_violations, n FROM agg
+          |  UNION ALL SELECT 'props_null', 'WARNING', props_null, n FROM agg
+          |  UNION ALL SELECT 'type_unknown', 'CRITICAL', type_unknown, n FROM agg)""".stripMargin),
 
-    // D1: ADWIN change detection (rows-only: inherently sequential state,
-    // no SQL twin — DriftDedupSpec pins shift-detection semantics).
-    "d1_adwin" -> ((s, dir) => {
+    // D1: ADWIN change detection (inherently sequential state —
+    // DriftDedupSpec pins shift-detection semantics).
+    Query("d1_adwin", (s, dir) => {
       val daily = dailyUser(s, dir)
       Drift.adwin(daily, "user_id", "date", "f_mean", delta = 1e-8)
         .filter(col("is_change") === 1)
-    }),
+    },
+      // Pinned: the output is bit-identical across runs and CPU counts
+      // (DriftDedupSpec); re-pin if fixtures or ADWIN parameters change.
+      oracle = Query.pinned("d1_adwin", "user_id, date, value, is_change")),
 
     // M5: deterministic GD logistic regression, hash-checked end-to-end —
     // standardization constants and per-iteration gradient averages are
@@ -347,17 +719,18 @@ object MlQueries {
     // is replayed exactly by the oracle's unrolled iteration CTEs. (The
     // seeded MLlib LBFGS fit remains the operator-level path, spec-pinned
     // in MlSpec — its treeAggregate sums aren't SQL-replayable.)
-    "m5_logreg_predict" -> ((s, dir) =>
+    Query("m5_logreg_predict", (s, dir) =>
       gdlrPred(s, dir)
         .select(col("user_id"), col("date"), col("label"), col("prob"),
-          col("y_pred"))),
+          col("y_pred")),
+      oracle = m5OracleSql(3)),
 
     // M7 calibration (beyond ref): reliability bins + expected calibration
     // error over the deterministic GD-LR probabilities — the standard
     // post-training calibration audit. Bin = floor(prob*10) clamped to 9;
     // conf/acc/gap rounded before the ECE so both engines aggregate
     // identical inputs; the ECE window runs over <= 10 bin rows.
-    "m7_calibration" -> ((s, dir) => {
+    Query("m7_calibration", (s, dir) => {
       val binned = gdlrPred(s, dir).filter(col("prob").isNotNull)
         .withColumn("bin", least(floor(col("prob") * 10), lit(9L)).cast("long"))
         .groupBy("bin")
@@ -370,21 +743,41 @@ object MlQueries {
       val tot = binned.agg(
         round(sum(col("gap") * col("n")) / sum(col("n")), 6).as("ece"))
       binned.crossJoin(broadcast(tot))
-    }),
+    },
+      // m7 twin: m5's full prediction CTE chain as a derived table, then
+      // the same bin/round-before-ECE arithmetic.
+      oracle =
+        s"""WITH pred AS (SELECT * FROM (${m5OracleSql(3)})),
+          |binned AS (
+          |  SELECT CAST(least(floor(prob * 10), 9) AS BIGINT) AS bin,
+          |    count(*) AS n, round(avg(prob), 6) AS conf,
+          |    round(avg(label), 6) AS acc
+          |  FROM pred WHERE prob IS NOT NULL GROUP BY 1),
+          |g AS (
+          |  SELECT bin, n, conf, acc, round(abs(conf - acc), 6) AS gap
+          |  FROM binned)
+          |SELECT bin, n, conf, acc, gap,
+          |  round(sum(gap * n) OVER () / sum(n) OVER (), 6) AS ece
+          |FROM g""".stripMargin),
 
     // M8 ROC sweep (beyond ref): confusion-matrix counts and TPR/FPR/
     // precision at ten decision thresholds over the deterministic GD-LR
     // probabilities — the operating-point table behind a ROC curve.
     // Thresholds are exploded as literals so the sweep is ONE pass over
     // the prediction frame (grouped by threshold), not ten scans.
-    "m8_roc_sweep" -> ((s, dir) => rocSweep(s, dir)),
+    Query("m8_roc_sweep", (s, dir) => rocSweep(s, dir),
+      // m8 twin: m5's prediction CTEs, cross-joined with an unnested
+      // threshold list (cast to DOUBLE — DuckDB parses the literals as
+      // DECIMAL, whose correctly-rounded double conversion equals Spark's
+      // k/10.0). Sums cast to BIGINT (DuckDB sums ints into HUGEINT).
+      oracle = m8OracleSql),
 
     // M16 (beyond ref): average precision (the PR-AUC estimator) over the
     // GD-LR test predictions — precision@k summed at each positive's rank
     // under the deterministic (prob desc, user, date) order. The global
     // window is bounded by contract: the test fold is the fixed study
     // tail, not corpus-sized.
-    "m16_avg_precision" -> ((s, dir) => {
+    Query("m16_avg_precision", (s, dir) => {
       val pred = gdlrPred(s, dir).filter(col("prob").isNotNull)
       val ord = org.apache.spark.sql.expressions.Window
         .orderBy(col("prob").desc, col("user_id"), col("date"))
@@ -400,37 +793,109 @@ object MlQueries {
               col("cum_pos").cast("double") / col("rk"))) / sum(pos), 6)
             .as("avg_precision"),
           round(sum(pos).cast("double") / count(lit(1)), 6).as("prevalence"))
-    }),
+    },
+      oracle =
+        s"""WITH pred AS (SELECT * FROM (${m5OracleSql(3)})),
+          |p AS (SELECT user_id, date, prob, label FROM pred WHERE prob IS NOT NULL),
+          |r AS (
+          |  SELECT label,
+          |    row_number() OVER (ORDER BY prob DESC, user_id, date) AS rk,
+          |    sum(CASE WHEN label = 1.0 THEN 1 ELSE 0 END)
+          |      OVER (ORDER BY prob DESC, user_id, date ROWS UNBOUNDED PRECEDING)
+          |      AS cum_pos
+          |  FROM p)
+          |SELECT CAST(count(*) AS BIGINT) AS n,
+          |  CAST(sum(CASE WHEN label = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
+          |  round(sum(CASE WHEN label = 1.0 THEN CAST(cum_pos AS DOUBLE) / rk END)
+          |    / sum(CASE WHEN label = 1.0 THEN 1 ELSE 0 END), 6) AS avg_precision,
+          |  round(CAST(sum(CASE WHEN label = 1.0 THEN 1 ELSE 0 END) AS DOUBLE)
+          |    / count(*), 6) AS prevalence
+          |FROM r""".stripMargin),
 
     // M18 (beyond ref): KS score separation — the credit-scoring
     // discrimination metric: the two-sample KS statistic between the
     // score distributions of positives and negatives (d2's tie-safe
     // cume-dist machinery pointed at model outputs instead of features).
-    "m18_score_ks" -> ((s, dir) => {
+    Query("m18_score_ks", (s, dir) => {
       val pred = gdlrPred(s, dir).filter(col("prob").isNotNull)
         .withColumn("model", lit("gdlr"))
         .withColumn("s", when(col("label") === 1.0, "a").otherwise("b"))
       Drift.ksTwoSample(pred, "model", "s", "prob")
-    }),
+    },
+      oracle =
+        s"""WITH pred AS (SELECT * FROM (${m5OracleSql(3)})),
+          |h AS (
+          |  SELECT 'gdlr' AS model, prob AS value,
+          |    CASE WHEN label = 1.0 THEN 'a' ELSE 'b' END AS s
+          |  FROM pred WHERE prob IS NOT NULL),
+          |pv AS (
+          |  SELECT model, value,
+          |    sum(CASE WHEN s = 'a' THEN 1 ELSE 0 END) AS ca,
+          |    sum(CASE WHEN s = 'b' THEN 1 ELSE 0 END) AS cb
+          |  FROM h GROUP BY 1, 2),
+          |cum AS (
+          |  SELECT model,
+          |    sum(ca) OVER w AS cum_a, sum(cb) OVER w AS cum_b,
+          |    sum(ca) OVER wa AS n_a, sum(cb) OVER wa AS n_b
+          |  FROM pv
+          |  WINDOW w AS (PARTITION BY model ORDER BY value
+          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+          |  wa AS (PARTITION BY model))
+          |SELECT model,
+          |  round(max(abs(cum_a / CAST(n_a AS DOUBLE) - cum_b / CAST(n_b AS DOUBLE))), 6)
+          |    AS ks_stat,
+          |  CAST(max(n_a) AS BIGINT) AS n_a, CAST(max(n_b) AS BIGINT) AS n_b
+          |FROM cum GROUP BY model""".stripMargin),
 
     // M19 (beyond ref): split-conformal prediction sets over the GD-LR
     // probabilities — calibration/evaluation folds split by user parity
     // (the deterministic doc_id%k convention), threshold = the exact
     // finite-sample order statistic, coverage audited per set
     // composition. alpha = 0.2 so the fixture exercises singleton sets.
-    "m19_conformal" -> ((s, dir) => {
+    Query("m19_conformal", (s, dir) => {
       val pred = gdlrPred(s, dir).filter(col("prob").isNotNull)
       graft.ml.Baselines.conformalSets(
         pred.filter(col("user_id") % 2 === 0),
         pred.filter(col("user_id") % 2 === 1),
         "prob", "label", Seq("user_id", "date"), alpha = 0.2)
-    }),
+    },
+      // m19 twin: the same exact order statistic (row_number on the
+      // deterministic (score, user_id, date) order — never an interpolated
+      // quantile) and the same set-membership arithmetic.
+      oracle =
+        s"""WITH pred AS (SELECT * FROM (${m5OracleSql(3)})),
+          |p AS (SELECT user_id, date, prob, label FROM pred
+          |  WHERE prob IS NOT NULL),
+          |cal AS (
+          |  SELECT user_id, date,
+          |    CASE WHEN label = 1.0 THEN 1.0 - prob ELSE prob END AS score
+          |  FROM p WHERE user_id % 2 = 0),
+          |nn AS (SELECT count(*) AS n_cal FROM cal),
+          |ranked AS (
+          |  SELECT score,
+          |    row_number() OVER (ORDER BY score, user_id, date) AS rk
+          |  FROM cal),
+          |q AS (
+          |  SELECT score AS qhat, n_cal FROM ranked, nn
+          |  WHERE rk = least(CAST(ceil((n_cal + 1) * 0.8) AS BIGINT), n_cal)),
+          |ev AS (
+          |  SELECT label, qhat, n_cal,
+          |    prob <= qhat AS in0, (1.0 - prob) <= qhat AS in1
+          |  FROM p, q WHERE user_id % 2 = 1)
+          |SELECT in0, in1, CAST(count(*) AS BIGINT) AS n,
+          |  CAST(sum(CASE WHEN (label = 0.0 AND in0) OR (label = 1.0 AND in1)
+          |    THEN 1 ELSE 0 END) AS BIGINT) AS n_covered,
+          |  round(avg(CASE WHEN (label = 0.0 AND in0) OR (label = 1.0 AND in1)
+          |    THEN 1.0 ELSE 0.0 END), 6) AS coverage,
+          |  round(min(qhat), 6) AS qhat,
+          |  CAST(min(n_cal) AS BIGINT) AS n_cal
+          |FROM ev GROUP BY in0, in1""".stripMargin),
 
     // M17 (beyond ref): per-slice eval metrics — the subgroup-regression
     // check every model release gates on. Slices are day-of-week via the
     // portable epoch-day modulus (engine-native dayofweek origins differ
     // across engines, epoch arithmetic doesn't).
-    "m17_slice_metrics" -> ((s, dir) => {
+    Query("m17_slice_metrics", (s, dir) => {
       val pred = gdlrPred(s, dir).filter(col("prob").isNotNull)
       pred
         .withColumn("dow",
@@ -448,42 +913,130 @@ object MlQueries {
             col("tp").cast("double") / (col("tp") + col("fn"))), 6).as("tpr"),
           round(when(col("fp") + col("tn") > 0,
             col("fp").cast("double") / (col("fp") + col("tn"))), 6).as("fpr"))
-    }),
+    },
+      oracle =
+        s"""WITH pred AS (SELECT * FROM (${m5OracleSql(3)})),
+          |p AS (SELECT user_id, date, prob, y_pred, label FROM pred
+          |  WHERE prob IS NOT NULL),
+          |s AS (
+          |  SELECT CAST((date - DATE '1970-01-01') % 7 AS INTEGER) AS dow,
+          |    CAST(count(*) AS BIGINT) AS n,
+          |    CAST(sum(CASE WHEN y_pred = 1 AND label = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+          |    CAST(sum(CASE WHEN y_pred = 1 AND label = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
+          |    CAST(sum(CASE WHEN y_pred = 0 AND label = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
+          |    CAST(sum(CASE WHEN y_pred = 0 AND label = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
+          |  FROM p GROUP BY 1)
+          |SELECT dow, n, tp, fp, fn, tn,
+          |  round(CAST(tp + tn AS DOUBLE) / n, 6) AS accuracy,
+          |  round(CASE WHEN tp + fn > 0 THEN CAST(tp AS DOUBLE) / (tp + fn) END, 6) AS tpr,
+          |  round(CASE WHEN fp + tn > 0 THEN CAST(fp AS DOUBLE) / (fp + tn) END, 6) AS fpr
+          |FROM s""".stripMargin),
 
     // M11 (beyond ref): operating-point selection — the threshold
     // maximizing Youden's J (tpr - fpr) over m8's sweep, smaller
     // threshold on ties. TakeOrdered over the 10-row sweep frame.
-    "m11_best_threshold" -> ((s, dir) =>
+    Query("m11_best_threshold", (s, dir) =>
       rocSweep(s, dir)
         .withColumn("youden",
           round(coalesce(col("tpr"), lit(0.0)) - coalesce(col("fpr"), lit(0.0)), 6))
         .orderBy(col("youden").desc, col("thr"))
         .limit(1)
-        .select("thr", "tpr", "fpr", "youden")),
+        .select("thr", "tpr", "fpr", "youden"),
+      // m11 twin: m8's sweep as a derived table, Youden argmax with the
+      // smaller-threshold tie-break.
+      oracle =
+        s"""WITH roc AS (SELECT * FROM ($m8OracleSql))
+          |SELECT thr, tpr, fpr,
+          |  round(coalesce(tpr, 0.0) - coalesce(fpr, 0.0), 6) AS youden
+          |FROM roc
+          |ORDER BY youden DESC, thr LIMIT 1""".stripMargin),
 
     // D6 (beyond ref): one-sided CUSUM changepoint over the per-user
     // daily series — Page's recursion via its closed form (running sum
     // minus running min), so the whole detector is two windows sharing
     // one entity exchange, no sequential state (contrast D1 ADWIN).
     // Self-referenced parameters: slack 0.5σ, threshold 4σ.
-    "d6_cusum" -> ((s, dir) =>
+    Query("d6_cusum", (s, dir) =>
       Drift.cusum(dailyUser(s, dir), "user_id", "date", "f_mean",
-        slackSigmas = 0.5, threshSigmas = 4.0)),
+        slackSigmas = 0.5, threshSigmas = 4.0),
+      // d6 twin: the same closed form — cumulative sum of (x − μ − κ)
+      // minus its running min (floored at 0 for the empty prefix), alarm
+      // when the statistic exceeds h = 4σ; μ/σ are whole-partition
+      // windows.
+      oracle =
+        s"""WITH d AS ($dailyUserSql),
+          |s AS (
+          |  SELECT user_id, date, f_mean,
+          |    avg(f_mean) OVER (PARTITION BY user_id) AS mu,
+          |    coalesce(stddev_samp(f_mean) OVER (PARTITION BY user_id),
+          |      CAST(0.0 AS DOUBLE)) AS sd
+          |  FROM d),
+          |p1 AS (
+          |  SELECT user_id, date, f_mean, sd,
+          |    sum(f_mean - mu - CAST(0.5 AS DOUBLE) * sd) OVER win AS pr
+          |  FROM s
+          |  WINDOW win AS (PARTITION BY user_id ORDER BY date
+          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+          |p AS (
+          |  SELECT user_id, date, f_mean, sd, pr,
+          |    least(min(pr) OVER win, CAST(0.0 AS DOUBLE)) AS pmin
+          |  FROM p1
+          |  WINDOW win AS (PARTITION BY user_id ORDER BY date
+          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+          |SELECT user_id, date, f_mean,
+          |  round(pr - pmin, 6) AS cusum_stat,
+          |  CASE WHEN sd > 0 AND round(pr - pmin, 6) >
+          |      round(CAST(4.0 AS DOUBLE) * sd, 6)
+          |    THEN 1 ELSE 0 END AS is_alarm
+          |FROM p""".stripMargin),
 
     // D7 (beyond ref): Page-Hinkley mean-shift detector — d6's
     // adaptive-mean sibling: deviations are measured against the RUNNING
     // prefix mean (the online formulation; d6's mu is retrospective), so
     // the detector needs no separately-estimated baseline level.
-    "d7_page_hinkley" -> ((s, dir) =>
+    Query("d7_page_hinkley", (s, dir) =>
       Drift.pageHinkley(dailyUser(s, dir), "user_id", "date", "f_mean",
-        deltaSigmas = 0.1, lambdaSigmas = 5.0)),
+        deltaSigmas = 0.1, lambdaSigmas = 5.0),
+      // d7 twin: running mean + cumulative deviation sum + running min —
+      // the same stacked-window closed form as d6's.
+      oracle =
+        s"""WITH d AS ($dailyUserSql),
+          |s AS (
+          |  SELECT user_id, date, f_mean,
+          |    coalesce(stddev_samp(f_mean) OVER (PARTITION BY user_id),
+          |      CAST(0.0 AS DOUBLE)) AS sd
+          |  FROM d),
+          |rm AS (
+          |  SELECT user_id, date, f_mean, sd,
+          |    avg(f_mean) OVER win AS runmean
+          |  FROM s
+          |  WINDOW win AS (PARTITION BY user_id ORDER BY date
+          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+          |mt AS (
+          |  SELECT user_id, date, f_mean, sd,
+          |    sum(f_mean - runmean - CAST(0.1 AS DOUBLE) * sd) OVER win AS m_t
+          |  FROM rm
+          |  WINDOW win AS (PARTITION BY user_id ORDER BY date
+          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+          |mm AS (
+          |  SELECT user_id, date, f_mean, sd, m_t,
+          |    min(m_t) OVER win AS m_min
+          |  FROM mt
+          |  WINDOW win AS (PARTITION BY user_id ORDER BY date
+          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+          |SELECT user_id, date, f_mean,
+          |  round(m_t - m_min, 6) AS ph_stat,
+          |  CASE WHEN sd > 0 AND round(m_t - m_min, 6) >
+          |      round(CAST(5.0 AS DOUBLE) * sd, 6)
+          |    THEN 1 ELSE 0 END AS is_alarm
+          |FROM mm""".stripMargin),
 
     // D5 (beyond ref): population stability index — the binned
     // industry-standard drift monitor next to D2's KS. Train deciles from
     // ONE exact-percentile row broadcast (no global sort), both splits
     // binned by comparison, per-bin (p-q)·ln(p/q) with the standard 1e-6
     // zero-clamp; the corpus total runs over the ≤10-bin frame.
-    "d5_psi" -> ((s, dir) => {
+    Query("d5_psi", (s, dir) => {
       // materialized once: the percentile row, the bin aggregation and
       // the bin-total row otherwise each re-run the events scan + daily
       // aggregation (plan branches don't share subtrees)
@@ -518,13 +1071,52 @@ object MlQueries {
         .withColumn("psi", round(sum("psi_bin").over(
           org.apache.spark.sql.expressions.Window.partitionBy(lit(1))), 6))
         .select("bin", "n_train", "n_val", "psi_bin", "psi")
-    }),
+    },
+      // d5 twin: train deciles -> comparison bins -> clamped (p-q)·ln(p/q),
+      // corpus total as a window over the <= 10 bin rows.
+      oracle = {
+        val qCols = (1 to 9)
+          .map(i => s"round(quantile_cont(f_mean, 0.${i}), 6) AS q$i")
+          .mkString(",\n    ")
+        val binExpr = (1 to 9)
+          .map(i => s"CAST(f_mean > q$i AS INT)").mkString(" + ")
+        s"""WITH d AS ($dailyUserSql),
+          |sp AS (
+          |  SELECT f_mean,
+          |    CASE WHEN date < DATE '$TrainEnd' THEN 'train' ELSE 'val' END AS split
+          |  FROM d),
+          |qs AS (
+          |  SELECT
+          |    $qCols
+          |  FROM sp WHERE split = 'train'),
+          |b AS (SELECT $binExpr AS bin, split FROM sp, qs),
+          |binned AS (
+          |  SELECT bin,
+          |    CAST(sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
+          |    CAST(sum(CASE WHEN split = 'val' THEN 1 ELSE 0 END) AS BIGINT) AS n_val
+          |  FROM b GROUP BY bin),
+          |tot AS (
+          |  SELECT CAST(sum(n_train) AS BIGINT) AS t_train,
+          |    CAST(sum(n_val) AS BIGINT) AS t_val
+          |  FROM binned),
+          |c AS (
+          |  SELECT bin, n_train, n_val,
+          |    greatest(CAST(n_train AS DOUBLE) / t_train, 1e-6) AS p,
+          |    greatest(CAST(n_val AS DOUBLE) / t_val, 1e-6) AS q
+          |  FROM binned, tot),
+          |c2 AS (
+          |  SELECT bin, n_train, n_val, round((p - q) * ln(p / q), 6) AS psi_bin
+          |  FROM c)
+          |SELECT bin, n_train, n_val, psi_bin,
+          |  round(sum(psi_bin) OVER (), 6) AS psi
+          |FROM c2""".stripMargin
+      }),
 
     // M9 (beyond ref): learning curve — the deterministic GD-LR replayed
     // at three train cutoffs against the FIXED test split, with train
     // size, accuracy, and F1 per point. The loop is driver-side plan
     // construction (3 unioned arms), not 3 scans of collected data.
-    "m9_learning_curve" -> ((s, dir) => {
+    Query("m9_learning_curve", (s, dir) => {
       // materialized once: the 3 arms × (fit + n_train agg + test score)
       // otherwise each re-run the events scan + daily aggregation
       val daily = labeledDaily(s, dir).localCheckpoint(true)
@@ -560,7 +1152,30 @@ object MlQueries {
               lit(2.0) * col("tp") /
                 (lit(2.0) * col("tp") + col("fp") + col("fn"))), 6).as("f1"))
       }}).reduce(_ unionByName _)
-    }),
+    },
+      // m9 twin: one arm per train cutoff — each wraps the full m5 CTE
+      // chain (parameterized train end, fixed test split) and aggregates
+      // the confusion counts into accuracy/F1.
+      oracle = Seq("2024-01-02", "2024-01-05", TrainEnd).map { cut =>
+        s"""SELECT '$cut' AS train_end,
+          |  (SELECT count(*) FROM ($dailyUserSql) WHERE date < DATE '$cut')
+          |    AS n_train,
+          |  m.n_test, m.accuracy, m.f1
+          |FROM (
+          |  SELECT count(*) AS n_test,
+          |    round(avg(CASE WHEN label = y_pred THEN CAST(1.0 AS DOUBLE)
+          |      ELSE CAST(0.0 AS DOUBLE) END), 6) AS accuracy,
+          |    round(CASE WHEN 2 * sum(CASE WHEN y_pred = 1 AND label = 1.0 THEN 1 ELSE 0 END)
+          |        + sum(CASE WHEN y_pred = 1 AND label = 0.0 THEN 1 ELSE 0 END)
+          |        + sum(CASE WHEN y_pred = 0 AND label = 1.0 THEN 1 ELSE 0 END) > 0
+          |      THEN 2.0 * sum(CASE WHEN y_pred = 1 AND label = 1.0 THEN 1 ELSE 0 END) /
+          |        (2.0 * sum(CASE WHEN y_pred = 1 AND label = 1.0 THEN 1 ELSE 0 END)
+          |         + sum(CASE WHEN y_pred = 1 AND label = 0.0 THEN 1 ELSE 0 END)
+          |         + sum(CASE WHEN y_pred = 0 AND label = 1.0 THEN 1 ELSE 0 END))
+          |      END, 6) AS f1
+          |  FROM (${m5OracleSql(3, cut)}) WHERE prob IS NOT NULL
+          |) m""".stripMargin
+      }.mkString("\nUNION ALL\n")),
 
     // M10 (beyond ref): Poisson-bootstrap CI on test accuracy — THE
     // distributed bootstrap: instead of resampling N rows with
@@ -571,7 +1186,7 @@ object MlQueries {
     // then mean + exact 2.5/97.5 percentiles over the 64-row frame (at
     // B=64 the CI endpoints interpolate real order statistics instead of
     // riding the sample min/max as a B=20 run would).
-    "m10_bootstrap_ci" -> ((s, dir) => {
+    Query("m10_bootstrap_ci", (s, dir) => {
       val pred = gdlrPred(s, dir).filter(col("prob").isNotNull)
       // cumulative Poisson(1) CDF; identical literals in the twin
       val cdf = Seq(0.36787944117144233, 0.7357588823428847, 0.919698602928606,
@@ -599,21 +1214,75 @@ object MlQueries {
         round(avg(col("acc")), 6).as("acc_mean"),
         round(percentile(col("acc"), lit(0.025)), 6).as("ci_lo"),
         round(percentile(col("acc"), lit(0.975)), 6).as("ci_hi"))
-    }),
+    },
+      // m10 twin: identical SHA-uniform -> Poisson(1) inverse-CDF weights,
+      // per-replicate weighted accuracy, mean + exact percentile CI.
+      oracle = {
+        val cdf = Seq(0.36787944117144233, 0.7357588823428847, 0.919698602928606,
+          0.9810118431238462, 0.9963401531726563, 0.9994058151824183,
+          0.9999167588507119, 0.9999902967814333)
+        val wCase = cdf.zipWithIndex
+          .map { case (c, i) => s"WHEN u < $c THEN $i" }
+          .mkString("CASE ", " ", " ELSE 8 END")
+        val sha = graft.functions.Hashing.sha28Sql(
+          "CAST(user_id AS VARCHAR) || '_' || CAST(date AS VARCHAR) || '_' || CAST(b AS VARCHAR)")
+        s"""WITH pred AS (SELECT * FROM (${m5OracleSql(3)})),
+          |rep AS (
+          |  SELECT user_id, date,
+          |    CASE WHEN label = y_pred THEN CAST(1 AS BIGINT)
+          |      ELSE CAST(0 AS BIGINT) END AS correct,
+          |    CAST(unnest(range(64)) AS INT) AS b
+          |  FROM pred WHERE prob IS NOT NULL),
+          |weighted AS (
+          |  SELECT b, correct,
+          |    $wCase AS w
+          |  FROM (SELECT *, CAST($sha % 1048576 AS DOUBLE) / 1048576.0 AS u
+          |        FROM rep)),
+          |per AS (
+          |  SELECT b,
+          |    round(CASE WHEN CAST(sum(w) AS BIGINT) > 0
+          |      THEN CAST(sum(w * correct) AS DOUBLE) / CAST(sum(w) AS BIGINT)
+          |      END, 6) AS acc
+          |  FROM weighted GROUP BY b)
+          |SELECT count(*) AS n_replicates,
+          |  round(avg(acc), 6) AS acc_mean,
+          |  round(quantile_cont(acc, 0.025), 6) AS ci_lo,
+          |  round(quantile_cont(acc, 0.975), 6) AS ci_hi
+          |FROM per""".stripMargin
+      }),
 
     // M12: linear feature attribution (the reference's per-fold SHAP
     // table, src/etl/ml7_analysis.py:238-320, via LinearExplainer's
     // closed form coef·z): mean |contribution| per feature over the test
     // fold + coefficient + rank — pure column arithmetic over the
     // deterministic GD-LR, exact DuckDB twin off the shared m5 fit CTEs.
-    "m12_attribution" -> ((s, dir) => {
+    Query("m12_attribution", (s, dir) => {
       // materialized once (gdlrPred's rationale): fit + test side
       val daily = labeledDaily(s, dir).localCheckpoint(true)
       val train = daily.filter(col("date") < lit(TrainEnd).cast("date"))
       val test = daily.filter(col("date") >= lit(TrainEnd).cast("date"))
       graft.ml.Models.logisticRegressionGDAttribution(train, test,
         Seq("f_mean", "f_n"), "label", iters = 3, lr = 0.5)
-    }),
+    },
+      // m12 twin: the shared m5 fit CTE chain (coefficients b3, test z's),
+      // then per-feature mean |coef·z| over the test fold and the
+      // (importance DESC, feature) rank — LinearExplainer's closed form
+      // replayed relationally.
+      oracle =
+        s"""WITH ${m5CtesSql(3, TrainEnd)},
+          |per AS (SELECT
+          |    round(avg(abs(b3.c1 * z1)), 6) AS a1,
+          |    round(avg(abs(b3.c2 * z2)), 6) AS a2,
+          |    round(any_value(b3.c1), 6) AS coef1,
+          |    round(any_value(b3.c2), 6) AS coef2
+          |  FROM te, b3),
+          |u AS (
+          |  SELECT 'f_mean' AS feature, coef1 AS coef, a1 AS mean_abs_contrib FROM per
+          |  UNION ALL
+          |  SELECT 'f_n' AS feature, coef2 AS coef, a2 AS mean_abs_contrib FROM per)
+          |SELECT feature, coef, mean_abs_contrib,
+          |  row_number() OVER (ORDER BY mean_abs_contrib DESC, feature) AS rk
+          |FROM u""".stripMargin),
 
     // M13: the fig07 correlation-heatmap artifact
     // (/root/reference/scripts/generate_dissertation_figures.py:393-407):
@@ -623,7 +1292,7 @@ object MlQueries {
     // computing all F(F-1)/2 correlations at once (each corr is one
     // co-moment pass; F is a fixed feature list, so the row stays tiny
     // at any corpus size) unpivoted via stack — no per-pair scans.
-    "m13_feature_corr" -> ((s, dir) => {
+    Query("m13_feature_corr", (s, dir) => {
       val types = Seq("click", "error", "purchase", "signup", "view")
       val daily = Tables.events(s, dir)
         .groupBy(to_date(col("ts")).as("date"))
@@ -642,21 +1311,53 @@ object MlQueries {
           expr(s"stack(${pairs.size}, $stackArgs) AS (feat_a, feat_b, pearson_r)"),
           col("__n").as("n_days"))
         .select("feat_a", "feat_b", "pearson_r", "n_days")
-    }),
+    },
+      // m13 twin: conditional-aggregate pivot to the daily grain, the same
+      // complete-cases filter, one corr() per pair. Both engines compute
+      // sample Pearson in double; round(6) absorbs co-moment accumulation
+      // order.
+      oracle = {
+        val types = Seq("click", "error", "purchase", "signup", "view")
+        val pivots = types.map(t =>
+          s"avg(value) FILTER (WHERE event_type = '$t') AS $t").mkString(",\n  ")
+        val completePred = types.map(t => s"$t IS NOT NULL").mkString(" AND ")
+        val pairs = for {
+          i <- types.indices; j <- (i + 1) until types.size
+        } yield (types(i), types(j))
+        val arms = pairs.map { case (a, b) =>
+          s"""SELECT '$a' AS feat_a, '$b' AS feat_b,
+             |  round(corr($a, $b), 6) AS pearson_r,
+             |  count(*) AS n_days FROM complete""".stripMargin }
+          .mkString("\nUNION ALL\n")
+        s"""WITH daily AS (
+           |  SELECT CAST(ts AS DATE) AS date,
+           |  $pivots
+           |  FROM events GROUP BY 1),
+           |complete AS (SELECT * FROM daily WHERE $completePred)
+           |$arms""".stripMargin
+      }),
 
     // M4: deterministic best-config selection — per-config metrics, winner
     // picked by (metric DESC, config ASC) exactly as Folds.bestConfig.
-    "m4_ablation_choice" -> ((s, dir) => {
+    Query("m4_ablation_choice", (s, dir) => {
       val metrics = Tables.events(s, dir)
         .groupBy(col("event_type").as("config"))
         .agg(round(avg("value"), 6).as("metric"))
       val best = graft.operators.Folds.bestConfig(metrics, "config", "metric")
       metrics.withColumn("is_best", (col("config") === lit(best)).cast("int"))
-    }),
+    },
+      oracle =
+        """WITH m AS (
+          |  SELECT event_type AS config, round(avg(value), 6) AS metric
+          |  FROM events GROUP BY 1)
+          |SELECT config, metric,
+          |  CASE WHEN row_number() OVER (ORDER BY metric DESC, config) = 1
+          |       THEN 1 ELSE 0 END AS is_best
+          |FROM m""".stripMargin),
 
     // W8/M6: majority + stratified naive baselines over a calendar split,
     // summarized per predicted class.
-    "w8_baselines" -> ((s, dir) => {
+    Query("w8_baselines", (s, dir) => {
       import graft.ml.Baselines
       val ev = Tables.events(s, dir).withColumn("date", to_date(col("ts")))
       val train = ev.filter(col("date") < lit(TrainEnd).cast("date"))
@@ -672,12 +1373,59 @@ object MlQueries {
           Baselines.predictStratified(valD, train, "event_type", "event_id"),
           "stratified"))
         .select("baseline", "y_pred", "n_predictions", "n_correct")
-    }),
+    },
+      oracle =
+        s"""WITH ev AS (SELECT event_id, event_type, CAST(ts AS DATE) AS date FROM events),
+          |tr AS (SELECT * FROM ev WHERE date < DATE '$TrainEnd'),
+          |vl AS (SELECT * FROM ev WHERE date >= DATE '$TrainEnd'),
+          |tc AS (SELECT event_type AS label, count(*) AS k FROM tr GROUP BY 1),
+          |maj AS (SELECT label FROM tc ORDER BY k DESC, label LIMIT 1),
+          |majr AS (
+          |  SELECT 'majority' AS baseline, m.label AS y_pred,
+          |    CAST(count(*) AS BIGINT) AS n_predictions,
+          |    CAST(sum(CASE WHEN v.event_type = m.label THEN 1 ELSE 0 END) AS BIGINT)
+          |      AS n_correct
+          |  FROM vl v CROSS JOIN maj m GROUP BY m.label),
+          |nv AS (SELECT count(*) AS n FROM vl),
+          |quota1 AS (
+          |  SELECT label,
+          |    CAST(floor(k / CAST((SELECT sum(k) FROM tc) AS DOUBLE)
+          |      * (SELECT n FROM nv)) AS BIGINT) AS q,
+          |    k / CAST((SELECT sum(k) FROM tc) AS DOUBLE) * (SELECT n FROM nv)
+          |      - floor(k / CAST((SELECT sum(k) FROM tc) AS DOUBLE)
+          |        * (SELECT n FROM nv)) AS frac
+          |  FROM tc),
+          |rem AS (SELECT (SELECT n FROM nv) - sum(q) AS r FROM quota1),
+          |quota AS (
+          |  SELECT label, q + CASE WHEN row_number() OVER (ORDER BY frac DESC, label)
+          |      <= (SELECT r FROM rem) THEN 1 ELSE 0 END AS q
+          |  FROM quota1),
+          |blocks AS (
+          |  SELECT label AS y_pred,
+          |    coalesce(sum(q) OVER (ORDER BY label
+          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS lo,
+          |    sum(q) OVER (ORDER BY label
+          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hi
+          |  FROM quota),
+          |ranked AS (
+          |  SELECT event_type,
+          |    row_number() OVER (ORDER BY sha256(CAST(event_id AS VARCHAR)), event_id)
+          |      AS rk
+          |  FROM vl),
+          |assigned AS (
+          |  SELECT r.event_type, b.y_pred
+          |  FROM ranked r JOIN blocks b ON r.rk > b.lo AND r.rk <= b.hi)
+          |SELECT 'stratified' AS baseline, y_pred,
+          |  CAST(count(*) AS BIGINT) AS n_predictions,
+          |  CAST(sum(CASE WHEN event_type = y_pred THEN 1 ELSE 0 END) AS BIGINT)
+          |    AS n_correct
+          |FROM assigned GROUP BY y_pred
+          |UNION ALL SELECT * FROM majr""".stripMargin),
 
     // Q1 full: the per-domain audit suite over engine-shaped contract
     // frames with deterministically planted violations, so every rule,
     // threshold, and severity-escalation path is exercised.
-    "q1_domain_audits" -> ((s, dir) => {
+    Query("q1_domain_audits", (s, dir) => {
       import graft.qc.DomainAudits
       val ev = Tables.events(s, dir)
       def daily(t: String) = ev.filter(col("event_type") === t)
@@ -717,10 +1465,111 @@ object MlQueries {
         .unionByName(DomainAudits.sleep(sleep, Some("sleep_efficiency")))
         .unionByName(DomainAudits.meds(medsU))
         .unionByName(DomainAudits.som(somU))
-    }),
+    },
+      oracle =
+        """WITH cardio AS (
+          |  SELECT date, hr_mean,
+          |    CASE WHEN day(date) % 4 = 0 THEN hr_mean ELSE hr_min0 END AS hr_min,
+          |    hr_max,
+          |    CASE WHEN day(date) % 10 = 0 THEN 0.0 ELSE hr_std0 END AS hr_std,
+          |    hr_samples
+          |  FROM (SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS hr_mean,
+          |          round(min(value), 6) AS hr_min0, round(max(value), 6) AS hr_max,
+          |          round(stddev_samp(value), 6) AS hr_std0, count(*) AS hr_samples
+          |        FROM events WHERE event_type = 'error' GROUP BY 1)),
+          |cardio_agg AS (
+          |  SELECT
+          |    CAST(sum(CASE WHEN hr_mean IS NOT NULL AND hr_min = hr_mean
+          |        THEN 1 ELSE 0 END) AS BIGINT) AS v_fab,
+          |    CAST(sum(CASE WHEN hr_mean IS NOT NULL AND hr_std = 0.0
+          |        THEN 1 ELSE 0 END) AS BIGINT) AS v_std,
+          |    CAST(sum(CASE WHEN hr_mean IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS c
+          |  FROM cardio),
+          |sleepf AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(avg(value) / 4.0, 6) AS sleep_hours,
+          |    round(avg(value) / 150.0, 6) AS sleep_efficiency
+          |  FROM events WHERE event_type = 'click' GROUP BY 1),
+          |sleep_agg AS (
+          |  SELECT
+          |    CAST(sum(CASE WHEN sleep_hours IS NOT NULL
+          |        AND (sleep_hours < 0 OR sleep_hours > 24) THEN 1 ELSE 0 END) AS BIGINT) AS v_h,
+          |    CAST(sum(CASE WHEN sleep_hours IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_h,
+          |    CAST(sum(CASE WHEN sleep_efficiency IS NOT NULL
+          |        AND (sleep_efficiency < 0 OR sleep_efficiency > 1) THEN 1 ELSE 0 END) AS BIGINT) AS v_e,
+          |    CAST(sum(CASE WHEN sleep_efficiency IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_e
+          |  FROM sleepf),
+          |medsf AS (
+          |  SELECT CAST(ts AS DATE) AS date,
+          |    CASE WHEN day(CAST(ts AS DATE)) % 9 = 0 THEN 2 ELSE 1 END AS med_any,
+          |    count(*) AS med_event_count, round(sum(value), 6) AS med_dose_total,
+          |    CASE WHEN day(CAST(ts AS DATE)) % 6 = 0 THEN ''
+          |         ELSE 'Methylphenidate, Sertraline' END AS med_names,
+          |    CASE WHEN day(CAST(ts AS DATE)) % 11 = 0 THEN 'weird'
+          |         ELSE 'apple_autoexport' END AS med_vendor
+          |  FROM events WHERE event_type = 'signup' GROUP BY 1),
+          |meds_agg AS (
+          |  SELECT
+          |    CAST(sum(CASE WHEN med_any NOT IN (0, 1) THEN 1 ELSE 0 END) AS BIGINT) AS v_any,
+          |    CAST(count(*) AS BIGINT) AS c_meds,
+          |    CAST(sum(CASE WHEN med_event_count < 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_cnt,
+          |    CAST(sum(CASE WHEN med_dose_total IS NOT NULL AND med_dose_total < 0
+          |        THEN 1 ELSE 0 END) AS BIGINT) AS v_dose,
+          |    CAST(sum(CASE WHEN med_any = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_any1,
+          |    CAST(sum(CASE WHEN med_any = 1 AND med_event_count <= 0
+          |        THEN 1 ELSE 0 END) AS BIGINT) AS v_a1c,
+          |    CAST(sum(CASE WHEN med_any = 1 AND (med_names IS NULL OR trim(med_names) = '')
+          |        THEN 1 ELSE 0 END) AS BIGINT) AS v_nm,
+          |    CAST(sum(CASE WHEN med_vendor NOT IN ('apple_export', 'apple_autoexport', 'fallback')
+          |        THEN 1 ELSE 0 END) AS BIGINT) AS v_vnd
+          |  FROM medsf),
+          |somf AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(avg(value) / 200.0, 6) AS som_mean_score,
+          |    round(max(value), 6) AS som_last_score, count(*) AS som_n_entries,
+          |    CASE WHEN day(CAST(ts AS DATE)) % 8 = 0 THEN 5 ELSE 0 END AS som_category_3class,
+          |    'apple_autoexport' AS som_vendor
+          |  FROM events WHERE event_type = 'view' GROUP BY 1),
+          |som_agg AS (
+          |  SELECT
+          |    CAST(sum(CASE WHEN som_category_3class NOT IN (-1, 0, 1)
+          |        THEN 1 ELSE 0 END) AS BIGINT) AS v_cat,
+          |    CAST(count(*) AS BIGINT) AS c_som,
+          |    CAST(sum(CASE WHEN som_n_entries < 1 THEN 1 ELSE 0 END) AS BIGINT) AS v_ent,
+          |    CAST(sum(CASE WHEN som_vendor NOT IN ('apple_autoexport', 'fallback')
+          |        THEN 1 ELSE 0 END) AS BIGINT) AS v_svnd,
+          |    CAST(sum(CASE WHEN som_mean_score < -1 OR som_mean_score > 1
+          |        THEN 1 ELSE 0 END) AS BIGINT) AS v_ms,
+          |    CAST(sum(CASE WHEN som_mean_score IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_ms,
+          |    CAST(sum(CASE WHEN som_last_score < -1 OR som_last_score > 1
+          |        THEN 1 ELSE 0 END) AS BIGINT) AS v_ls,
+          |    CAST(sum(CASE WHEN som_last_score IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_ls
+          |  FROM somf)
+          |SELECT 'cardio' AS domain, 'fabricated_min' AS "check", 'CRITICAL' AS severity,
+          |  v_fab AS n_violations, c AS n_checked, v_fab <= c * 0.10 AS passed FROM cardio_agg
+          |UNION ALL SELECT 'cardio', 'zero_std', 'CRITICAL', v_std, c, v_std <= c * 0.10 FROM cardio_agg
+          |UNION ALL SELECT 'cardio', 'schema_columns', 'CRITICAL', CAST(0 AS BIGINT), CAST(5 AS BIGINT), true
+          |UNION ALL SELECT 'sleep', 'sleep_hours_range', 'CRITICAL', v_h, c_h, v_h = 0 FROM sleep_agg
+          |UNION ALL SELECT 'sleep', 'efficiency_range', 'WARNING', v_e, c_e, v_e = 0 FROM sleep_agg
+          |UNION ALL SELECT 'meds', 'med_any_invalid',
+          |  CASE WHEN v_any * 100 > c_meds THEN 'CRITICAL' ELSE 'WARNING' END, v_any, c_meds, v_any = 0 FROM meds_agg
+          |UNION ALL SELECT 'meds', 'event_count_negative',
+          |  CASE WHEN v_cnt * 100 > c_meds THEN 'CRITICAL' ELSE 'WARNING' END, v_cnt, c_meds, v_cnt = 0 FROM meds_agg
+          |UNION ALL SELECT 'meds', 'dose_negative',
+          |  CASE WHEN v_dose * 100 > c_meds THEN 'CRITICAL' ELSE 'WARNING' END, v_dose, c_meds, v_dose = 0 FROM meds_agg
+          |UNION ALL SELECT 'meds', 'any1_count_nonpositive',
+          |  CASE WHEN v_a1c * 100 > c_any1 THEN 'CRITICAL' ELSE 'WARNING' END, v_a1c, c_any1, v_a1c = 0 FROM meds_agg
+          |UNION ALL SELECT 'meds', 'any1_names_empty',
+          |  CASE WHEN v_nm * 100 > c_any1 THEN 'CRITICAL' ELSE 'WARNING' END, v_nm, c_any1, v_nm = 0 FROM meds_agg
+          |UNION ALL SELECT 'meds', 'vendor_invalid', 'CRITICAL', v_vnd, c_meds, v_vnd = 0 FROM meds_agg
+          |UNION ALL SELECT 'som', 'category_invalid',
+          |  CASE WHEN v_cat * 100 > c_som THEN 'CRITICAL' ELSE 'WARNING' END, v_cat, c_som, v_cat = 0 FROM som_agg
+          |UNION ALL SELECT 'som', 'entries_lt1',
+          |  CASE WHEN v_ent * 100 > c_som THEN 'CRITICAL' ELSE 'WARNING' END, v_ent, c_som, v_ent = 0 FROM som_agg
+          |UNION ALL SELECT 'som', 'vendor_invalid', 'CRITICAL', v_svnd, c_som, v_svnd = 0 FROM som_agg
+          |UNION ALL SELECT 'som', 'range_som_mean_score', 'WARNING', v_ms, c_ms, v_ms = 0 FROM som_agg
+          |UNION ALL SELECT 'som', 'range_som_last_score', 'WARNING', v_ls, c_ls, v_ls = 0 FROM som_agg""".stripMargin),
 
     // M6 extended: accuracy, balanced accuracy, Cohen's kappa.
-    "m6_extended" -> ((s, dir) => {
+    Query("m6_extended", (s, dir) => {
       val types = Seq("click", "error", "purchase", "signup", "view")
       val pred = Tables.events(s, dir).withColumn("y_pred",
         element_at(typedLit(types), (pmod(floor(col("value") / 40), lit(5)) + 1).cast("int")))
@@ -742,7 +1591,43 @@ object MlQueries {
         round(po, 6).as("accuracy"),
         round(balancedAcc, 6).as("balanced_accuracy"),
         round((po - pe) / (lit(1.0) - pe), 6).as("kappa"))
-    }),
+    },
+      oracle =
+        """WITH pred AS (
+          |  SELECT event_type AS y_true,
+          |    ['click','error','purchase','signup','view']
+          |      [CAST(floor(value / 40) AS BIGINT) % 5 + 1] AS y_pred
+          |  FROM events),
+          |m AS (
+          |  SELECT count(*) AS n,
+          |    sum(CASE WHEN y_true = y_pred THEN 1 ELSE 0 END) AS agree,
+          |    sum(CASE WHEN y_true = 'click' THEN 1 ELSE 0 END) AS rt1,
+          |    sum(CASE WHEN y_pred = 'click' THEN 1 ELSE 0 END) AS rp1,
+          |    sum(CASE WHEN y_true = 'error' THEN 1 ELSE 0 END) AS rt2,
+          |    sum(CASE WHEN y_pred = 'error' THEN 1 ELSE 0 END) AS rp2,
+          |    sum(CASE WHEN y_true = 'purchase' THEN 1 ELSE 0 END) AS rt3,
+          |    sum(CASE WHEN y_pred = 'purchase' THEN 1 ELSE 0 END) AS rp3,
+          |    sum(CASE WHEN y_true = 'signup' THEN 1 ELSE 0 END) AS rt4,
+          |    sum(CASE WHEN y_pred = 'signup' THEN 1 ELSE 0 END) AS rp4,
+          |    sum(CASE WHEN y_true = 'view' THEN 1 ELSE 0 END) AS rt5,
+          |    sum(CASE WHEN y_pred = 'view' THEN 1 ELSE 0 END) AS rp5,
+          |    sum(CASE WHEN y_true = 'click' AND y_pred = 'click' THEN 1 ELSE 0 END) AS d1,
+          |    sum(CASE WHEN y_true = 'error' AND y_pred = 'error' THEN 1 ELSE 0 END) AS d2,
+          |    sum(CASE WHEN y_true = 'purchase' AND y_pred = 'purchase' THEN 1 ELSE 0 END) AS d3,
+          |    sum(CASE WHEN y_true = 'signup' AND y_pred = 'signup' THEN 1 ELSE 0 END) AS d4,
+          |    sum(CASE WHEN y_true = 'view' AND y_pred = 'view' THEN 1 ELSE 0 END) AS d5
+          |  FROM pred)
+          |SELECT
+          |  round(agree / CAST(n AS DOUBLE), 6) AS accuracy,
+          |  round((d1 / CAST(rt1 AS DOUBLE) + d2 / CAST(rt2 AS DOUBLE)
+          |    + d3 / CAST(rt3 AS DOUBLE) + d4 / CAST(rt4 AS DOUBLE)
+          |    + d5 / CAST(rt5 AS DOUBLE)) / 5, 6) AS balanced_accuracy,
+          |  round((agree / CAST(n AS DOUBLE)
+          |      - CAST(rt1 * rp1 + rt2 * rp2 + rt3 * rp3 + rt4 * rp4 + rt5 * rp5 AS DOUBLE)
+          |        / (CAST(n AS DOUBLE) * n))
+          |    / (1.0 - CAST(rt1 * rp1 + rt2 * rp2 + rt3 * rp3 + rt4 * rp4 + rt5 * rp5 AS DOUBLE)
+          |        / (CAST(n AS DOUBLE) * n)), 6) AS kappa
+          |FROM m""".stripMargin),
 
     // M5/M6 extended: the reference's ML6-extended four-family CV
     // (LogReg / RF / XGB->GBT / SVM->LinearSVC, ml6_extended.py) through
@@ -751,7 +1636,7 @@ object MlQueries {
     // margin learners exercise their one-vs-rest path. Gated against a
     // pinned-expected snapshot (model fits are seeded-deterministic but
     // not SQL-replayable, same class as d1_adwin/d2_ks_exact).
-    "m6_model_families" -> ((s, dir) => {
+    Query("m6_model_families", (s, dir) => {
       import graft.ml.Models
       import graft.pipeline.Reports
       // The daily frame feeds 8 fits x (train+val): checkpoint it once so
@@ -837,11 +1722,15 @@ object MlQueries {
           Seq("0", "1", "2"), sliceCols = Seq("model"))
         .select("model", "fold_id", "val_start", "val_end", "n_train",
           "n_val", "f1_macro", "balanced_accuracy", "cohen_kappa")
-    }),
+    },
+      // Pinned (seeded MLlib fits aren't SQL-replayable); determinism
+      // across independent Verify runs checked when pinned.
+      oracle = Query.pinned("m6_model_families", "model, fold_id, " +
+        "val_start, val_end, n_train, n_val,\n  f1_macro, balanced_accuracy, cohen_kappa")),
 
     // M6: AUROC one-vs-rest per class via tie-safe average ranks
     // (rank-sum / Mann-Whitney formulation — pure relational math).
-    "m6_auc" -> ((s, dir) => {
+    Query("m6_auc", (s, dir) => {
       val types = Seq("click", "error", "purchase", "signup", "view")
       val withClass = Tables.events(s, dir)
         .select(explode(typedLit(types)).as("cls"), col("event_type").as("y_true"),
@@ -863,10 +1752,31 @@ object MlQueries {
         .select(col("cls"), col("np"), col("nn"),
           round((col("sumpos") - col("np") * (col("np") + 1) / 2.0) /
             (col("np") * col("nn")), 6).as("auc"))
-    }),
+    },
+      oracle =
+        """WITH wc AS (
+          |  SELECT c.cls, e.event_type AS y_true,
+          |    e.value / 200.0 + CASE WHEN e.event_type = c.cls THEN 0.2 ELSE 0.0 END AS score
+          |  FROM events e CROSS JOIN
+          |    (SELECT unnest(['click','error','purchase','signup','view']) AS cls) c),
+          |r AS (
+          |  SELECT cls, y_true, score,
+          |    rank() OVER (PARTITION BY cls ORDER BY score) AS rmin,
+          |    count(*) OVER (PARTITION BY cls, score) AS cnt
+          |  FROM wc),
+          |a AS (SELECT cls, y_true, rmin + (cnt - 1) / 2.0 AS avgrank FROM r)
+          |SELECT cls,
+          |  CAST(sum(CASE WHEN y_true = cls THEN 1 ELSE 0 END) AS BIGINT) AS np,
+          |  CAST(sum(CASE WHEN y_true <> cls THEN 1 ELSE 0 END) AS BIGINT) AS nn,
+          |  round((sum(CASE WHEN y_true = cls THEN avgrank END)
+          |      - sum(CASE WHEN y_true = cls THEN 1 ELSE 0 END)
+          |        * (sum(CASE WHEN y_true = cls THEN 1 ELSE 0 END) + 1) / 2.0)
+          |    / (sum(CASE WHEN y_true = cls THEN 1 ELSE 0 END)
+          |      * sum(CASE WHEN y_true <> cls THEN 1 ELSE 0 END)), 6) AS auc
+          |FROM a GROUP BY cls""".stripMargin),
 
     // W8 modal baseline: 7-row windowed label mode (ties -> smaller label).
-    "w8_modal" -> ((s, dir) => {
+    Query("w8_modal", (s, dir) => {
       val labeled = dailyUser(s, dir).withColumn("label",
         when(col("f_mean") >= 110, 1).when(col("f_mean") <= 90, -1).otherwise(0))
       val w = org.apache.spark.sql.expressions.Window
@@ -880,7 +1790,24 @@ object MlQueries {
             .when(col("c_zero") >= col("c_pos"), 0)
             .otherwise(1))
         .select("user_id", "date", "label", "label_modal")
-    }))
+    },
+      oracle =
+        s"""WITH daily AS ($dailyUserSql),
+          |lab AS (
+          |  SELECT user_id, date,
+          |    CASE WHEN f_mean >= 110 THEN 1 WHEN f_mean <= 90 THEN -1 ELSE 0 END AS label
+          |  FROM daily),
+          |c AS (
+          |  SELECT user_id, date, label,
+          |    sum(CASE WHEN label = -1 THEN 1 ELSE 0 END) OVER w AS c_neg,
+          |    sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) OVER w AS c_zero,
+          |    sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) OVER w AS c_pos
+          |  FROM lab WINDOW w AS (PARTITION BY user_id ORDER BY date
+          |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
+          |SELECT user_id, date, label,
+          |  CASE WHEN c_neg >= c_zero AND c_neg >= c_pos THEN -1
+          |       WHEN c_zero >= c_pos THEN 0 ELSE 1 END AS label_modal
+          |FROM c""".stripMargin))
 
   /** DuckDB replay of [[graft.ml.Models.logisticRegressionGD]]'s fit: the
     * same canonical roundings at every cross-engine boundary make the
@@ -947,999 +1874,4 @@ object MlQueries {
       |  round(CASE WHEN tp + fp > 0 THEN CAST(tp AS DOUBLE) / (tp + fp) END, 6)
       |    AS prec
       |FROM s""".stripMargin
-
-  def oracles: Map[String, String] = Map(
-    // a11 twin: the engine builds a JSON naps array per event and parses
-    // it back (from_json + higher-order aggregate); the twin computes the
-    // same durations straight from the raw columns — the two naps are
-    // [ts, ts+floor(value)s] and [ts, ts-30min], so the per-row clamped
-    // sum is floor(value)/3600 when floor(value) >= 1, else 0.
-    "a11_naps_daily" ->
-      """WITH n AS (
-        |  SELECT CAST(ts AS DATE) AS date,
-        |    CASE WHEN floor(value) > 0 THEN floor(value) / 3600.0
-        |      ELSE 0.0 END AS nap_h
-        |  FROM events)
-        |SELECT date, round(sum(nap_h), 6) AS nap_hours,
-        |  CAST(sum(CASE WHEN nap_h > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS days_with_naps
-        |FROM n GROUP BY date""".stripMargin,
-
-    // c4 twin: the whole-column max decision as a per-type join instead
-    // of the engine's driver round-trip; the conversion multiplies by the
-    // identical double constant (1.0/60.0) so the products are
-    // bit-identical to the engine's convertIf.
-    "c4_units" ->
-      """WITH mx AS (
-        |  SELECT event_type, max(value) AS mxv FROM events GROUP BY 1)
-        |SELECT e.event_type,
-        |  round(max(e.value), 6) AS max_raw,
-        |  CAST(CASE WHEN mx.mxv > 24.0 THEN 1 ELSE 0 END AS INT) AS converted,
-        |  round(sum(CASE WHEN mx.mxv > 24.0 THEN e.value * (1.0/60.0)
-        |    ELSE e.value END), 6) AS total_h
-        |FROM events e JOIN mx USING (event_type)
-        |GROUP BY e.event_type, mx.mxv""".stripMargin,
-
-    "m5_logreg_predict" -> m5OracleSql(3),
-
-    // m7 twin: m5's full prediction CTE chain as a derived table, then
-    // the same bin/round-before-ECE arithmetic.
-    "m7_calibration" ->
-      s"""WITH pred AS (SELECT * FROM (${m5OracleSql(3)})),
-        |binned AS (
-        |  SELECT CAST(least(floor(prob * 10), 9) AS BIGINT) AS bin,
-        |    count(*) AS n, round(avg(prob), 6) AS conf,
-        |    round(avg(label), 6) AS acc
-        |  FROM pred WHERE prob IS NOT NULL GROUP BY 1),
-        |g AS (
-        |  SELECT bin, n, conf, acc, round(abs(conf - acc), 6) AS gap
-        |  FROM binned)
-        |SELECT bin, n, conf, acc, gap,
-        |  round(sum(gap * n) OVER () / sum(n) OVER (), 6) AS ece
-        |FROM g""".stripMargin,
-
-    // d6 twin: the same closed form — cumulative sum of (x − μ − κ)
-    // minus its running min (floored at 0 for the empty prefix), alarm
-    // when the statistic exceeds h = 4σ; μ/σ are whole-partition
-    // windows.
-    "d6_cusum" ->
-      s"""WITH d AS ($dailyUserSql),
-        |s AS (
-        |  SELECT user_id, date, f_mean,
-        |    avg(f_mean) OVER (PARTITION BY user_id) AS mu,
-        |    coalesce(stddev_samp(f_mean) OVER (PARTITION BY user_id),
-        |      CAST(0.0 AS DOUBLE)) AS sd
-        |  FROM d),
-        |p1 AS (
-        |  SELECT user_id, date, f_mean, sd,
-        |    sum(f_mean - mu - CAST(0.5 AS DOUBLE) * sd) OVER win AS pr
-        |  FROM s
-        |  WINDOW win AS (PARTITION BY user_id ORDER BY date
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |p AS (
-        |  SELECT user_id, date, f_mean, sd, pr,
-        |    least(min(pr) OVER win, CAST(0.0 AS DOUBLE)) AS pmin
-        |  FROM p1
-        |  WINDOW win AS (PARTITION BY user_id ORDER BY date
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT user_id, date, f_mean,
-        |  round(pr - pmin, 6) AS cusum_stat,
-        |  CASE WHEN sd > 0 AND round(pr - pmin, 6) >
-        |      round(CAST(4.0 AS DOUBLE) * sd, 6)
-        |    THEN 1 ELSE 0 END AS is_alarm
-        |FROM p""".stripMargin,
-
-    // d7 twin: running mean + cumulative deviation sum + running min —
-    // the same stacked-window closed form as d6's.
-    "d7_page_hinkley" ->
-      s"""WITH d AS ($dailyUserSql),
-        |s AS (
-        |  SELECT user_id, date, f_mean,
-        |    coalesce(stddev_samp(f_mean) OVER (PARTITION BY user_id),
-        |      CAST(0.0 AS DOUBLE)) AS sd
-        |  FROM d),
-        |rm AS (
-        |  SELECT user_id, date, f_mean, sd,
-        |    avg(f_mean) OVER win AS runmean
-        |  FROM s
-        |  WINDOW win AS (PARTITION BY user_id ORDER BY date
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |mt AS (
-        |  SELECT user_id, date, f_mean, sd,
-        |    sum(f_mean - runmean - CAST(0.1 AS DOUBLE) * sd) OVER win AS m_t
-        |  FROM rm
-        |  WINDOW win AS (PARTITION BY user_id ORDER BY date
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |mm AS (
-        |  SELECT user_id, date, f_mean, sd, m_t,
-        |    min(m_t) OVER win AS m_min
-        |  FROM mt
-        |  WINDOW win AS (PARTITION BY user_id ORDER BY date
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT user_id, date, f_mean,
-        |  round(m_t - m_min, 6) AS ph_stat,
-        |  CASE WHEN sd > 0 AND round(m_t - m_min, 6) >
-        |      round(CAST(5.0 AS DOUBLE) * sd, 6)
-        |    THEN 1 ELSE 0 END AS is_alarm
-        |FROM mm""".stripMargin,
-
-    // d5 twin: train deciles -> comparison bins -> clamped (p-q)·ln(p/q),
-    // corpus total as a window over the <= 10 bin rows.
-    "d5_psi" -> {
-      val qCols = (1 to 9)
-        .map(i => s"round(quantile_cont(f_mean, 0.${i}), 6) AS q$i")
-        .mkString(",\n    ")
-      val binExpr = (1 to 9)
-        .map(i => s"CAST(f_mean > q$i AS INT)").mkString(" + ")
-      s"""WITH d AS ($dailyUserSql),
-        |sp AS (
-        |  SELECT f_mean,
-        |    CASE WHEN date < DATE '$TrainEnd' THEN 'train' ELSE 'val' END AS split
-        |  FROM d),
-        |qs AS (
-        |  SELECT
-        |    $qCols
-        |  FROM sp WHERE split = 'train'),
-        |b AS (SELECT $binExpr AS bin, split FROM sp, qs),
-        |binned AS (
-        |  SELECT bin,
-        |    CAST(sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
-        |    CAST(sum(CASE WHEN split = 'val' THEN 1 ELSE 0 END) AS BIGINT) AS n_val
-        |  FROM b GROUP BY bin),
-        |tot AS (
-        |  SELECT CAST(sum(n_train) AS BIGINT) AS t_train,
-        |    CAST(sum(n_val) AS BIGINT) AS t_val
-        |  FROM binned),
-        |c AS (
-        |  SELECT bin, n_train, n_val,
-        |    greatest(CAST(n_train AS DOUBLE) / t_train, 1e-6) AS p,
-        |    greatest(CAST(n_val AS DOUBLE) / t_val, 1e-6) AS q
-        |  FROM binned, tot),
-        |c2 AS (
-        |  SELECT bin, n_train, n_val, round((p - q) * ln(p / q), 6) AS psi_bin
-        |  FROM c)
-        |SELECT bin, n_train, n_val, psi_bin,
-        |  round(sum(psi_bin) OVER (), 6) AS psi
-        |FROM c2""".stripMargin
-    },
-
-    // m9 twin: one arm per train cutoff — each wraps the full m5 CTE
-    // chain (parameterized train end, fixed test split) and aggregates
-    // the confusion counts into accuracy/F1.
-    "m9_learning_curve" -> Seq("2024-01-02", "2024-01-05", TrainEnd).map { cut =>
-      s"""SELECT '$cut' AS train_end,
-        |  (SELECT count(*) FROM ($dailyUserSql) WHERE date < DATE '$cut')
-        |    AS n_train,
-        |  m.n_test, m.accuracy, m.f1
-        |FROM (
-        |  SELECT count(*) AS n_test,
-        |    round(avg(CASE WHEN label = y_pred THEN CAST(1.0 AS DOUBLE)
-        |      ELSE CAST(0.0 AS DOUBLE) END), 6) AS accuracy,
-        |    round(CASE WHEN 2 * sum(CASE WHEN y_pred = 1 AND label = 1.0 THEN 1 ELSE 0 END)
-        |        + sum(CASE WHEN y_pred = 1 AND label = 0.0 THEN 1 ELSE 0 END)
-        |        + sum(CASE WHEN y_pred = 0 AND label = 1.0 THEN 1 ELSE 0 END) > 0
-        |      THEN 2.0 * sum(CASE WHEN y_pred = 1 AND label = 1.0 THEN 1 ELSE 0 END) /
-        |        (2.0 * sum(CASE WHEN y_pred = 1 AND label = 1.0 THEN 1 ELSE 0 END)
-        |         + sum(CASE WHEN y_pred = 1 AND label = 0.0 THEN 1 ELSE 0 END)
-        |         + sum(CASE WHEN y_pred = 0 AND label = 1.0 THEN 1 ELSE 0 END))
-        |      END, 6) AS f1
-        |  FROM (${m5OracleSql(3, cut)}) WHERE prob IS NOT NULL
-        |) m""".stripMargin
-    }.mkString("\nUNION ALL\n"),
-
-    // m10 twin: identical SHA-uniform -> Poisson(1) inverse-CDF weights,
-    // per-replicate weighted accuracy, mean + exact percentile CI.
-    "m10_bootstrap_ci" -> {
-      val cdf = Seq(0.36787944117144233, 0.7357588823428847, 0.919698602928606,
-        0.9810118431238462, 0.9963401531726563, 0.9994058151824183,
-        0.9999167588507119, 0.9999902967814333)
-      val wCase = cdf.zipWithIndex
-        .map { case (c, i) => s"WHEN u < $c THEN $i" }
-        .mkString("CASE ", " ", " ELSE 8 END")
-      val sha = graft.functions.Hashing.sha28Sql(
-        "CAST(user_id AS VARCHAR) || '_' || CAST(date AS VARCHAR) || '_' || CAST(b AS VARCHAR)")
-      s"""WITH pred AS (SELECT * FROM (${m5OracleSql(3)})),
-        |rep AS (
-        |  SELECT user_id, date,
-        |    CASE WHEN label = y_pred THEN CAST(1 AS BIGINT)
-        |      ELSE CAST(0 AS BIGINT) END AS correct,
-        |    CAST(unnest(range(64)) AS INT) AS b
-        |  FROM pred WHERE prob IS NOT NULL),
-        |weighted AS (
-        |  SELECT b, correct,
-        |    $wCase AS w
-        |  FROM (SELECT *, CAST($sha % 1048576 AS DOUBLE) / 1048576.0 AS u
-        |        FROM rep)),
-        |per AS (
-        |  SELECT b,
-        |    round(CASE WHEN CAST(sum(w) AS BIGINT) > 0
-        |      THEN CAST(sum(w * correct) AS DOUBLE) / CAST(sum(w) AS BIGINT)
-        |      END, 6) AS acc
-        |  FROM weighted GROUP BY b)
-        |SELECT count(*) AS n_replicates,
-        |  round(avg(acc), 6) AS acc_mean,
-        |  round(quantile_cont(acc, 0.025), 6) AS ci_lo,
-        |  round(quantile_cont(acc, 0.975), 6) AS ci_hi
-        |FROM per""".stripMargin
-    },
-
-    // m12 twin: the shared m5 fit CTE chain (coefficients b3, test z's),
-    // then per-feature mean |coef·z| over the test fold and the
-    // (importance DESC, feature) rank — LinearExplainer's closed form
-    // replayed relationally.
-    "m12_attribution" ->
-      s"""WITH ${m5CtesSql(3, TrainEnd)},
-        |per AS (SELECT
-        |    round(avg(abs(b3.c1 * z1)), 6) AS a1,
-        |    round(avg(abs(b3.c2 * z2)), 6) AS a2,
-        |    round(any_value(b3.c1), 6) AS coef1,
-        |    round(any_value(b3.c2), 6) AS coef2
-        |  FROM te, b3),
-        |u AS (
-        |  SELECT 'f_mean' AS feature, coef1 AS coef, a1 AS mean_abs_contrib FROM per
-        |  UNION ALL
-        |  SELECT 'f_n' AS feature, coef2 AS coef, a2 AS mean_abs_contrib FROM per)
-        |SELECT feature, coef, mean_abs_contrib,
-        |  row_number() OVER (ORDER BY mean_abs_contrib DESC, feature) AS rk
-        |FROM u""".stripMargin,
-
-    // m13 twin: conditional-aggregate pivot to the daily grain, the same
-    // complete-cases filter, one corr() per pair. Both engines compute
-    // sample Pearson in double; round(6) absorbs co-moment accumulation
-    // order.
-    "m13_feature_corr" -> {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val pivots = types.map(t =>
-        s"avg(value) FILTER (WHERE event_type = '$t') AS $t").mkString(",\n  ")
-      val completePred = types.map(t => s"$t IS NOT NULL").mkString(" AND ")
-      val pairs = for {
-        i <- types.indices; j <- (i + 1) until types.size
-      } yield (types(i), types(j))
-      val arms = pairs.map { case (a, b) =>
-        s"""SELECT '$a' AS feat_a, '$b' AS feat_b,
-           |  round(corr($a, $b), 6) AS pearson_r,
-           |  count(*) AS n_days FROM complete""".stripMargin }
-        .mkString("\nUNION ALL\n")
-      s"""WITH daily AS (
-         |  SELECT CAST(ts AS DATE) AS date,
-         |  $pivots
-         |  FROM events GROUP BY 1),
-         |complete AS (SELECT * FROM daily WHERE $completePred)
-         |$arms""".stripMargin
-    },
-
-    // m8 twin: m5's prediction CTEs, cross-joined with an unnested
-    // threshold list (cast to DOUBLE — DuckDB parses the literals as
-    // DECIMAL, whose correctly-rounded double conversion equals Spark's
-    // k/10.0). Sums cast to BIGINT (DuckDB sums ints into HUGEINT).
-    "m8_roc_sweep" -> m8OracleSql,
-
-    "m16_avg_precision" ->
-      s"""WITH pred AS (SELECT * FROM (${m5OracleSql(3)})),
-        |p AS (SELECT user_id, date, prob, label FROM pred WHERE prob IS NOT NULL),
-        |r AS (
-        |  SELECT label,
-        |    row_number() OVER (ORDER BY prob DESC, user_id, date) AS rk,
-        |    sum(CASE WHEN label = 1.0 THEN 1 ELSE 0 END)
-        |      OVER (ORDER BY prob DESC, user_id, date ROWS UNBOUNDED PRECEDING)
-        |      AS cum_pos
-        |  FROM p)
-        |SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CASE WHEN label = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-        |  round(sum(CASE WHEN label = 1.0 THEN CAST(cum_pos AS DOUBLE) / rk END)
-        |    / sum(CASE WHEN label = 1.0 THEN 1 ELSE 0 END), 6) AS avg_precision,
-        |  round(CAST(sum(CASE WHEN label = 1.0 THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / count(*), 6) AS prevalence
-        |FROM r""".stripMargin,
-
-    "m18_score_ks" ->
-      s"""WITH pred AS (SELECT * FROM (${m5OracleSql(3)})),
-        |h AS (
-        |  SELECT 'gdlr' AS model, prob AS value,
-        |    CASE WHEN label = 1.0 THEN 'a' ELSE 'b' END AS s
-        |  FROM pred WHERE prob IS NOT NULL),
-        |pv AS (
-        |  SELECT model, value,
-        |    sum(CASE WHEN s = 'a' THEN 1 ELSE 0 END) AS ca,
-        |    sum(CASE WHEN s = 'b' THEN 1 ELSE 0 END) AS cb
-        |  FROM h GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT model,
-        |    sum(ca) OVER w AS cum_a, sum(cb) OVER w AS cum_b,
-        |    sum(ca) OVER wa AS n_a, sum(cb) OVER wa AS n_b
-        |  FROM pv
-        |  WINDOW w AS (PARTITION BY model ORDER BY value
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |  wa AS (PARTITION BY model))
-        |SELECT model,
-        |  round(max(abs(cum_a / CAST(n_a AS DOUBLE) - cum_b / CAST(n_b AS DOUBLE))), 6)
-        |    AS ks_stat,
-        |  CAST(max(n_a) AS BIGINT) AS n_a, CAST(max(n_b) AS BIGINT) AS n_b
-        |FROM cum GROUP BY model""".stripMargin,
-
-    // m19 twin: the same exact order statistic (row_number on the
-    // deterministic (score, user_id, date) order — never an interpolated
-    // quantile) and the same set-membership arithmetic.
-    "m19_conformal" ->
-      s"""WITH pred AS (SELECT * FROM (${m5OracleSql(3)})),
-        |p AS (SELECT user_id, date, prob, label FROM pred
-        |  WHERE prob IS NOT NULL),
-        |cal AS (
-        |  SELECT user_id, date,
-        |    CASE WHEN label = 1.0 THEN 1.0 - prob ELSE prob END AS score
-        |  FROM p WHERE user_id % 2 = 0),
-        |nn AS (SELECT count(*) AS n_cal FROM cal),
-        |ranked AS (
-        |  SELECT score,
-        |    row_number() OVER (ORDER BY score, user_id, date) AS rk
-        |  FROM cal),
-        |q AS (
-        |  SELECT score AS qhat, n_cal FROM ranked, nn
-        |  WHERE rk = least(CAST(ceil((n_cal + 1) * 0.8) AS BIGINT), n_cal)),
-        |ev AS (
-        |  SELECT label, qhat, n_cal,
-        |    prob <= qhat AS in0, (1.0 - prob) <= qhat AS in1
-        |  FROM p, q WHERE user_id % 2 = 1)
-        |SELECT in0, in1, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CASE WHEN (label = 0.0 AND in0) OR (label = 1.0 AND in1)
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_covered,
-        |  round(avg(CASE WHEN (label = 0.0 AND in0) OR (label = 1.0 AND in1)
-        |    THEN 1.0 ELSE 0.0 END), 6) AS coverage,
-        |  round(min(qhat), 6) AS qhat,
-        |  CAST(min(n_cal) AS BIGINT) AS n_cal
-        |FROM ev GROUP BY in0, in1""".stripMargin,
-
-    "m17_slice_metrics" ->
-      s"""WITH pred AS (SELECT * FROM (${m5OracleSql(3)})),
-        |p AS (SELECT user_id, date, prob, y_pred, label FROM pred
-        |  WHERE prob IS NOT NULL),
-        |s AS (
-        |  SELECT CAST((date - DATE '1970-01-01') % 7 AS INTEGER) AS dow,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN y_pred = 1 AND label = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |    CAST(sum(CASE WHEN y_pred = 1 AND label = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        |    CAST(sum(CASE WHEN y_pred = 0 AND label = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-        |    CAST(sum(CASE WHEN y_pred = 0 AND label = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
-        |  FROM p GROUP BY 1)
-        |SELECT dow, n, tp, fp, fn, tn,
-        |  round(CAST(tp + tn AS DOUBLE) / n, 6) AS accuracy,
-        |  round(CASE WHEN tp + fn > 0 THEN CAST(tp AS DOUBLE) / (tp + fn) END, 6) AS tpr,
-        |  round(CASE WHEN fp + tn > 0 THEN CAST(fp AS DOUBLE) / (fp + tn) END, 6) AS fpr
-        |FROM s""".stripMargin,
-
-    // m11 twin: m8's sweep as a derived table, Youden argmax with the
-    // smaller-threshold tie-break.
-    "m11_best_threshold" ->
-      s"""WITH roc AS (SELECT * FROM ($m8OracleSql))
-        |SELECT thr, tpr, fpr,
-        |  round(coalesce(tpr, 0.0) - coalesce(fpr, 0.0), 6) AS youden
-        |FROM roc
-        |ORDER BY youden DESC, thr LIMIT 1""".stripMargin,
-
-    // D1: ADWIN is sequential-state (no SQL formulation), so the gate is
-    // a pinned-expected-table comparison: the committed parquet is the
-    // engine's own deterministic output at sf0.01 (bit-identical across
-    // runs and CPU counts, DriftDedupSpec), regenerated via
-    // tools/pin_expected.py if fixtures or ADWIN parameters change. Valid
-    // for the driver's sf0.01 correctness run only.
-    "d1_adwin" ->
-      """SELECT user_id, date, value, is_change
-        |FROM read_parquet('/root/repo/src/test/resources/expected/d1_adwin_sf0.01.parquet')""".stripMargin,
-
-    // Pinned-expected gate (seeded MLlib fits aren't SQL-replayable);
-    // determinism across independent Verify runs checked when pinned.
-    // Valid for the driver's sf0.01 run only.
-    "m6_model_families" ->
-      """SELECT model, fold_id, val_start, val_end, n_train, n_val,
-        |  f1_macro, balanced_accuracy, cohen_kappa
-        |FROM read_parquet('/root/repo/src/test/resources/expected/m6_model_families_sf0.01.parquet')""".stripMargin,
-
-    // D2 exact: pinned-expected gate (the path-count DP has no SQL twin);
-    // the p-value algorithm itself is brute-force-verified in
-    // DriftDedupSpec. Valid for the driver's sf0.01 run only.
-    "d2_ks_exact" ->
-      """SELECT segment_id, boundary_date, feature, ks_stat, p_value,
-        |  significant, n_before, n_after
-        |FROM read_parquet('/root/repo/src/test/resources/expected/d2_ks_exact_sf0.01.parquet')""".stripMargin,
-    "a10_intervals" ->
-      """WITH iv AS (
-        |  SELECT ts AS start_ts, ts + CAST(floor(value) AS INT) * INTERVAL 1 SECOND AS end_ts
-        |  FROM events),
-        |d AS (
-        |  SELECT start_ts,
-        |    (epoch_us(end_ts) // 1000000 - epoch_us(start_ts) // 1000000) / 3600.0 AS dur_h
-        |  FROM iv)
-        |SELECT CAST(start_ts AS DATE) AS date,
-        |  round(sum(dur_h), 6) AS total_h, count(*) AS n_intervals,
-        |  round(max(dur_h), 6) AS max_h
-        |FROM d WHERE dur_h > 0 GROUP BY 1""".stripMargin,
-
-    "a15_instability" ->
-      s"""WITH daily AS ($dailyUserSql),
-        |seg AS (
-        |  SELECT user_id, avg(f_mean) AS m1, avg(f_n) AS m2, avg(f_purchase) AS m3
-        |  FROM daily GROUP BY user_id),
-        |vars AS (
-        |  SELECT var_samp(m1) AS v1, var_samp(m2) AS v2, var_samp(m3) AS v3 FROM seg),
-        |un AS (
-        |  SELECT 'f_mean' AS feature, v1 AS variance FROM vars
-        |  UNION ALL SELECT 'f_n', v2 FROM vars
-        |  UNION ALL SELECT 'f_purchase', v3 FROM vars),
-        |mx AS (SELECT max(variance) AS mv FROM un)
-        |SELECT feature, round(variance, 6) AS variance,
-        |  CASE WHEN mv > 0 THEN round(variance / mv, 6) ELSE 0.0 END AS instability
-        |FROM un CROSS JOIN mx""".stripMargin,
-
-    "a22_day_class" ->
-      """WITH sh AS (
-        |  SELECT ts + INTERVAL 2 HOUR AS shifted, event_type FROM events),
-        |o AS (
-        |  SELECT CAST(shifted AS DATE) AS date,
-        |    sum(CASE WHEN event_type IN ('click','view') THEN 1 ELSE 0 END) AS n_a,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS n_b
-        |  FROM sh WHERE hour(shifted) < 10 GROUP BY 1)
-        |SELECT date, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |  CASE WHEN n_a > 0 AND n_b > 0 THEN 'normal'
-        |       WHEN n_a = 0 AND n_b > 0 THEN 'sleepless'
-        |       WHEN n_a = 0 AND n_b = 0 THEN 'sensor_missing'
-        |       ELSE 'ambiguous' END AS day_class
-        |FROM o""".stripMargin,
-
-    "d2_ks" ->
-      """WITH h AS (
-        |  SELECT event_type, value,
-        |    CASE WHEN ntile(2) OVER (PARTITION BY event_type ORDER BY ts, event_id) = 1
-        |      THEN 'a' ELSE 'b' END AS s
-        |  FROM events),
-        |pv AS (
-        |  SELECT event_type, value,
-        |    sum(CASE WHEN s = 'a' THEN 1 ELSE 0 END) AS ca,
-        |    sum(CASE WHEN s = 'b' THEN 1 ELSE 0 END) AS cb
-        |  FROM h GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT event_type,
-        |    sum(ca) OVER w AS cum_a, sum(cb) OVER w AS cum_b,
-        |    sum(ca) OVER wa AS n_a, sum(cb) OVER wa AS n_b
-        |  FROM pv
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY value
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |  wa AS (PARTITION BY event_type))
-        |SELECT event_type,
-        |  round(max(abs(cum_a / CAST(n_a AS DOUBLE) - cum_b / CAST(n_b AS DOUBLE))), 6) AS ks_stat,
-        |  CAST(max(n_a) AS BIGINT) AS n_a, CAST(max(n_b) AS BIGINT) AS n_b
-        |FROM cum GROUP BY event_type""".stripMargin,
-
-    "d2_ks_boundaries" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS f_mean,
-        |    round(sum(CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END), 6)
-        |      AS f_purchase
-        |  FROM events GROUP BY 1),
-        |bnd AS (SELECT * FROM (VALUES (CAST(2 AS BIGINT), DATE '2024-01-11'),
-        |        (CAST(3 AS BIGINT), DATE '2024-01-21')) AS t(segment_id, boundary_date)),
-        |tagged AS (
-        |  SELECT b.segment_id, b.boundary_date, d.date, d.f_mean, d.f_purchase,
-        |    CASE WHEN d.date < b.boundary_date THEN 'a' ELSE 'b' END AS side
-        |  FROM daily d JOIN bnd b
-        |    ON d.date >= b.boundary_date - INTERVAL 7 DAY
-        |   AND d.date < b.boundary_date + INTERVAL 7 DAY),
-        |eligible AS (
-        |  SELECT segment_id, boundary_date FROM tagged GROUP BY 1, 2
-        |  HAVING sum(CASE WHEN side = 'a' THEN 1 ELSE 0 END) >= 5
-        |     AND sum(CASE WHEN side = 'b' THEN 1 ELSE 0 END) >= 5),
-        |unp AS (
-        |  SELECT t.segment_id, t.boundary_date, 'f_mean' AS feature, t.side,
-        |    t.f_mean AS value
-        |  FROM tagged t JOIN eligible e USING (segment_id, boundary_date)
-        |  WHERE t.f_mean IS NOT NULL
-        |  UNION ALL
-        |  SELECT t.segment_id, t.boundary_date, 'f_purchase', t.side, t.f_purchase
-        |  FROM tagged t JOIN eligible e USING (segment_id, boundary_date)
-        |  WHERE t.f_purchase IS NOT NULL),
-        |pv AS (
-        |  SELECT segment_id, boundary_date, feature, value,
-        |    sum(CASE WHEN side = 'a' THEN 1 ELSE 0 END) AS ca,
-        |    sum(CASE WHEN side = 'b' THEN 1 ELSE 0 END) AS cb
-        |  FROM unp GROUP BY 1, 2, 3, 4),
-        |cum AS (
-        |  SELECT segment_id, boundary_date, feature,
-        |    sum(ca) OVER w AS cum_a, sum(cb) OVER w AS cum_b,
-        |    sum(ca) OVER wa AS n_a, sum(cb) OVER wa AS n_b
-        |  FROM pv
-        |  WINDOW w AS (PARTITION BY segment_id, boundary_date, feature ORDER BY value
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |  wa AS (PARTITION BY segment_id, boundary_date, feature)),
-        |ks AS (
-        |  SELECT segment_id, boundary_date, feature,
-        |    round(max(abs(cum_a / CAST(n_a AS DOUBLE) - cum_b / CAST(n_b AS DOUBLE))), 6)
-        |      AS ks_stat,
-        |    CAST(max(n_a) AS BIGINT) AS n_before, CAST(max(n_b) AS BIGINT) AS n_after
-        |  FROM cum GROUP BY 1, 2, 3),
-        |lamt AS (
-        |  SELECT *,
-        |    (sqrt(n_before * CAST(n_after AS DOUBLE) / (n_before + n_after)) + 0.12
-        |      + 0.11 / sqrt(n_before * CAST(n_after AS DOUBLE) / (n_before + n_after)))
-        |      * ks_stat AS lam
-        |  FROM ks WHERE n_before >= 5 AND n_after >= 5),
-        |pval AS (
-        |  SELECT segment_id, boundary_date, feature, ks_stat, n_before, n_after,
-        |    round(CASE WHEN lam < 1e-3 THEN 1.0
-        |      ELSE least(greatest(2.0 * list_sum(list_transform(range(1, 101),
-        |        k -> power(-1.0, k - 1) * exp(-2.0 * k * k * lam * lam))), 0.0), 1.0)
-        |      END, 6) AS p_value
-        |  FROM lamt)
-        |SELECT segment_id, boundary_date, feature, ks_stat, p_value,
-        |  p_value < 0.05 AS significant, n_before, n_after
-        |FROM pval""".stripMargin,
-
-    "c1_parse_ts" ->
-      """WITH s AS (
-        |  SELECT event_type,
-        |    CASE WHEN event_type = 'click' THEN strftime(ts, '%Y-%m-%d %H:%M:%S')
-        |         WHEN event_type = 'view' THEN strftime(ts, '%Y-%m-%dT%H:%M:%S')
-        |         ELSE strftime(ts, '%Y-%m-%d') END AS ts_str
-        |  FROM events),
-        |p AS (
-        |  SELECT event_type, coalesce(
-        |    try_strptime(ts_str, '%Y-%m-%d %H:%M:%S'),
-        |    try_strptime(ts_str, '%Y-%m-%dT%H:%M:%S'),
-        |    try_strptime(ts_str, '%Y-%m-%d')) AS parsed
-        |  FROM s)
-        |SELECT event_type, count(parsed) AS n_parsed,
-        |  CAST(sum(CASE WHEN parsed IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_failed,
-        |  min(epoch_us(parsed) // 1000000) AS min_epoch,
-        |  max(epoch_us(parsed) // 1000000) AS max_epoch
-        |FROM p GROUP BY event_type""".stripMargin,
-
-    "c2_tz_cutover" ->
-      """WITH loc AS (
-        |  SELECT CASE WHEN CAST(ts AS DATE) < DATE '2024-01-15'
-        |    THEN (ts AT TIME ZONE 'UTC') AT TIME ZONE 'Europe/Dublin'
-        |    ELSE (ts AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York' END AS lt
-        |  FROM events)
-        |SELECT CAST(lt AS DATE) AS local_date, count(*) AS n,
-        |  round(avg(hour(lt)), 6) AS avg_local_hour
-        |FROM loc GROUP BY 1""".stripMargin,
-
-    "w10_ranks" ->
-      """WITH r AS (
-        |  SELECT event_type, value,
-        |    percent_rank() OVER w AS pr, cume_dist() OVER w AS cd,
-        |    ntile(4) OVER w AS quartile
-        |  FROM events WINDOW w AS (PARTITION BY event_type ORDER BY value))
-        |SELECT event_type, quartile, count(*) AS n, round(avg(value), 6) AS v_avg,
-        |  round(max(pr), 6) AS pr_max, round(max(cd), 6) AS cd_max
-        |FROM r GROUP BY 1, 2""".stripMargin,
-
-    "m1_impute" ->
-      """WITH spine AS (SELECT DISTINCT CAST(ts AS DATE) AS date FROM events),
-        |users AS (SELECT DISTINCT user_id FROM events),
-        |purch AS (
-        |  SELECT CAST(ts AS DATE) AS date, user_id, round(avg(value), 6) AS pv
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |grid AS (
-        |  SELECT u.user_id, s.date, p.pv
-        |  FROM spine s CROSS JOIN users u
-        |  LEFT JOIN purch p ON p.date = s.date AND p.user_id = u.user_id),
-        |gm AS (SELECT user_id, quantile_cont(pv, 0.5) AS med FROM grid GROUP BY user_id),
-        |am AS (SELECT quantile_cont(pv, 0.5) AS gmed FROM grid)
-        |SELECT g.user_id, g.date,
-        |  round(coalesce(g.pv, gm.med, am.gmed, 0.0), 6) AS pv
-        |FROM grid g LEFT JOIN gm ON g.user_id = gm.user_id CROSS JOIN am""".stripMargin,
-
-    "m1_iterative" -> {
-      // one ridge step (lambda=1, intercept penalized): y ~ x over rows
-      // where y was originally observed; 2x2 normal equations in closed form
-      def step(src: String, tgt: String, y: String, x: String): String = {
-        val st = s"st_$tgt"
-        val cf = s"cf_$tgt"
-        val upd =
-          if (y == "f1")
-            s"""CASE WHEN NOT s.o_f1 AND c.b0 IS NOT NULL
-               |      THEN c.b0 + c.b1 * s.f2 ELSE s.f1 END AS f1, s.f2 AS f2"""
-              .stripMargin
-          else
-            s"""s.f1 AS f1, CASE WHEN NOT s.o_f2 AND c.b0 IS NOT NULL
-               |      THEN c.b0 + c.b1 * s.f1 ELSE s.f2 END AS f2""".stripMargin
-        s"""$st AS (
-           |  SELECT user_id, count(*) AS n, sum($x) AS sx, sum($x*$x) AS sxx,
-           |    sum($y) AS sy, sum($x*$y) AS sxy
-           |  FROM $src WHERE o_$y GROUP BY user_id),
-           |$cf AS (
-           |  SELECT user_id,
-           |    (sy*(sxx+1.0) - sxy*sx) / ((n+1.0)*(sxx+1.0) - sx*sx) AS b0,
-           |    (sxy*(n+1.0) - sy*sx) / ((n+1.0)*(sxx+1.0) - sx*sx) AS b1
-           |  FROM $st),
-           |$tgt AS (
-           |  SELECT s.user_id, s.date, s.o_f1, s.o_f2,
-           |    $upd
-           |  FROM $src s LEFT JOIN $cf c USING(user_id))""".stripMargin
-      }
-      s"""WITH spine AS (SELECT DISTINCT CAST(ts AS DATE) AS date FROM events),
-        |users AS (SELECT DISTINCT user_id FROM events),
-        |pf AS (SELECT user_id, CAST(ts AS DATE) AS date, round(avg(value), 6) AS v
-        |       FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |cf AS (SELECT user_id, CAST(ts AS DATE) AS date, round(avg(value), 6) AS v
-        |       FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-        |grid AS (
-        |  SELECT u.user_id, s.date, a.v AS f1r, b.v AS f2r
-        |  FROM spine s CROSS JOIN users u
-        |  LEFT JOIN pf a ON a.user_id = u.user_id AND a.date = s.date
-        |  LEFT JOIN cf b ON b.user_id = u.user_id AND b.date = s.date),
-        |med AS (SELECT user_id, quantile_cont(f1r, 0.5) AS m1,
-        |        quantile_cont(f2r, 0.5) AS m2 FROM grid GROUP BY user_id),
-        |gm AS (SELECT quantile_cont(f1r, 0.5) AS g1,
-        |       quantile_cont(f2r, 0.5) AS g2 FROM grid),
-        |s0 AS (
-        |  SELECT g.user_id, g.date,
-        |    g.f1r IS NOT NULL AS o_f1, g.f2r IS NOT NULL AS o_f2,
-        |    coalesce(g.f1r, m.m1, gm.g1, 0.0) AS f1,
-        |    coalesce(g.f2r, m.m2, gm.g2, 0.0) AS f2
-        |  FROM grid g LEFT JOIN med m USING(user_id) CROSS JOIN gm),
-        |${step("s0", "s1", "f1", "f2")},
-        |${step("s1", "s2", "f2", "f1")},
-        |${step("s2", "s3", "f1", "f2")},
-        |${step("s3", "s4", "f2", "f1")}
-        |SELECT user_id, date, round(f1, 6) AS f1, round(f2, 6) AS f2
-        |FROM s4""".stripMargin
-    },
-
-    "a18_activity" ->
-      """WITH stats AS (
-        |  SELECT CAST(ts AS DATE) AS date, avg(value) AS m, stddev_samp(value) AS s,
-        |    count(*) AS n_events
-        |  FROM events GROUP BY 1)
-        |SELECT e.date, round(any_value(st.m), 6) AS v_mean,
-        |  round(any_value(st.s), 6) AS v_std,
-        |  any_value(st.n_events) AS n_events,
-        |  CAST(sum(CASE WHEN e.v > st.m + st.s THEN 1 ELSE 0 END) AS BIGINT) AS n_peaks,
-        |  round(sum(CASE WHEN e.v <= 10.0 THEN 1 ELSE 0 END) / CAST(count(*) AS DOUBLE), 6)
-        |    AS sedentary_ratio
-        |FROM (SELECT CAST(ts AS DATE) AS date, value AS v FROM events) e
-        |JOIN stats st ON e.date = st.date
-        |GROUP BY e.date""".stripMargin,
-
-    "w9_autoseg" ->
-      s"""WITH daily AS ($dailyUserSql),
-        |r AS (
-        |  SELECT user_id, date, f_mean,
-        |    avg(f_mean) OVER (PARTITION BY user_id ORDER BY date
-        |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS roll,
-        |    count(f_mean) OVER (PARTITION BY user_id ORDER BY date
-        |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) / 5.0 AS dens,
-        |    lag(date) OVER (PARTITION BY user_id ORDER BY date) AS prev_d
-        |  FROM daily),
-        |f AS (
-        |  SELECT user_id, date,
-        |    CASE WHEN prev_d IS NULL THEN 'initial'
-        |         WHEN date_diff('day', prev_d, date) > 1 THEN 'gap_recovery'
-        |         WHEN dens >= 0.8 AND abs(roll - lag(roll) OVER
-        |           (PARTITION BY user_id ORDER BY date)) > 3.0 THEN 'delta_shift'
-        |    END AS seg_reason
-        |  FROM r),
-        |seg AS (
-        |  SELECT user_id, date, seg_reason,
-        |    sum(CASE WHEN seg_reason IS NOT NULL THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY date
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS segment_id
-        |  FROM f)
-        |SELECT user_id, CAST(segment_id AS BIGINT) AS segment_id,
-        |  min(date) AS seg_start, max(date) AS seg_end,
-        |  count(*) AS n_days, arg_min(seg_reason, date) AS reason
-        |FROM seg GROUP BY user_id, segment_id""".stripMargin,
-
-    "w9_autoseg_multi" ->
-      s"""WITH daily AS ($dailyUserSql),
-        |sp AS (
-        |  SELECT user_id, date,
-        |    CASE WHEN day(date) % 5 = 0 THEN NULL ELSE f_mean END AS s_hr,
-        |    CASE WHEN day(date) % 7 = 3 THEN NULL ELSE f_n END AS s_hrv,
-        |    CASE WHEN day(date) % 4 = 1 THEN NULL ELSE f_purchase END AS s_se
-        |  FROM daily),
-        |m AS (SELECT *,
-        |  CASE WHEN s_hr IS NULL AND s_se IS NULL THEN 1 ELSE 0 END AS missing
-        |  FROM sp),
-        |w AS (
-        |  SELECT user_id, date, missing,
-        |    row_number() OVER win AS rn,
-        |    lag(missing, 1) OVER win AS m1, lag(missing, 2) OVER win AS m2,
-        |    lag(missing, 3) OVER win AS m3,
-        |    count(s_hr) OVER wprev / 7.0 AS dp_hr, count(s_hr) OVER wcurr / 7.0 AS dc_hr,
-        |    avg(s_hr) OVER wprev AS ap_hr, avg(s_hr) OVER wcurr AS ac_hr,
-        |    count(s_hrv) OVER wprev / 7.0 AS dp_hrv, count(s_hrv) OVER wcurr / 7.0 AS dc_hrv,
-        |    avg(s_hrv) OVER wprev AS ap_hrv, avg(s_hrv) OVER wcurr AS ac_hrv,
-        |    count(s_se) OVER wprev / 7.0 AS dp_se, count(s_se) OVER wcurr / 7.0 AS dc_se,
-        |    avg(s_se) OVER wprev AS ap_se, avg(s_se) OVER wcurr AS ac_se
-        |  FROM m
-        |  WINDOW win AS (PARTITION BY user_id ORDER BY date),
-        |    wprev AS (PARTITION BY user_id ORDER BY date
-        |      ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING),
-        |    wcurr AS (PARTITION BY user_id ORDER BY date
-        |      ROWS BETWEEN CURRENT ROW AND 6 FOLLOWING)),
-        |r AS (
-        |  SELECT user_id, date,
-        |    CASE WHEN rn > 3 AND missing = 0 AND m1 = 1 AND m2 = 1 AND m3 = 1
-        |           THEN 'gap_recovery'
-        |         WHEN rn > 7 AND dp_hr >= 0.7 AND dc_hr >= 0.7
-        |           AND abs(ac_hr - ap_hr) >= 3.0 THEN 'hr_shift'
-        |         WHEN rn > 7 AND dp_hrv >= 0.7 AND dc_hrv >= 0.7
-        |           AND abs(ac_hrv - ap_hrv) >= 2.0 THEN 'hrv_shift'
-        |         WHEN rn > 7 AND dp_se >= 0.7 AND dc_se >= 0.7
-        |           AND abs(ac_se - ap_se) >= 30.0 THEN 'se_shift'
-        |    END AS seg_reason
-        |  FROM w)
-        |SELECT user_id, date, seg_reason,
-        |  CAST(sum(CASE WHEN seg_reason IS NOT NULL THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY date
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1 AS BIGINT)
-        |    AS segment_id
-        |FROM r""".stripMargin,
-
-    "q1_audit" ->
-      """WITH agg AS (
-        |  SELECT
-        |    sum(CASE WHEN value IS NOT NULL AND value NOT BETWEEN 0 AND 150
-        |        THEN 1 ELSE 0 END) AS value_range,
-        |    sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END) AS props_null,
-        |    sum(CASE WHEN event_type NOT IN ('click','error','purchase','signup','view')
-        |        THEN 1 ELSE 0 END) AS type_unknown,
-        |    count(*) AS n
-        |  FROM events)
-        |SELECT rule, severity, CAST(n_violations AS BIGINT) AS n_violations, n AS n_rows,
-        |  round(n_violations * 100.0 / n, 6) AS violation_pct
-        |FROM (
-        |  SELECT 'value_range' AS rule, 'CRITICAL' AS severity, value_range AS n_violations, n FROM agg
-        |  UNION ALL SELECT 'props_null', 'WARNING', props_null, n FROM agg
-        |  UNION ALL SELECT 'type_unknown', 'CRITICAL', type_unknown, n FROM agg)""".stripMargin,
-
-    "m4_ablation_choice" ->
-      """WITH m AS (
-        |  SELECT event_type AS config, round(avg(value), 6) AS metric
-        |  FROM events GROUP BY 1)
-        |SELECT config, metric,
-        |  CASE WHEN row_number() OVER (ORDER BY metric DESC, config) = 1
-        |       THEN 1 ELSE 0 END AS is_best
-        |FROM m""".stripMargin,
-
-    "w8_baselines" ->
-      s"""WITH ev AS (SELECT event_id, event_type, CAST(ts AS DATE) AS date FROM events),
-        |tr AS (SELECT * FROM ev WHERE date < DATE '$TrainEnd'),
-        |vl AS (SELECT * FROM ev WHERE date >= DATE '$TrainEnd'),
-        |tc AS (SELECT event_type AS label, count(*) AS k FROM tr GROUP BY 1),
-        |maj AS (SELECT label FROM tc ORDER BY k DESC, label LIMIT 1),
-        |majr AS (
-        |  SELECT 'majority' AS baseline, m.label AS y_pred,
-        |    CAST(count(*) AS BIGINT) AS n_predictions,
-        |    CAST(sum(CASE WHEN v.event_type = m.label THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_correct
-        |  FROM vl v CROSS JOIN maj m GROUP BY m.label),
-        |nv AS (SELECT count(*) AS n FROM vl),
-        |quota1 AS (
-        |  SELECT label,
-        |    CAST(floor(k / CAST((SELECT sum(k) FROM tc) AS DOUBLE)
-        |      * (SELECT n FROM nv)) AS BIGINT) AS q,
-        |    k / CAST((SELECT sum(k) FROM tc) AS DOUBLE) * (SELECT n FROM nv)
-        |      - floor(k / CAST((SELECT sum(k) FROM tc) AS DOUBLE)
-        |        * (SELECT n FROM nv)) AS frac
-        |  FROM tc),
-        |rem AS (SELECT (SELECT n FROM nv) - sum(q) AS r FROM quota1),
-        |quota AS (
-        |  SELECT label, q + CASE WHEN row_number() OVER (ORDER BY frac DESC, label)
-        |      <= (SELECT r FROM rem) THEN 1 ELSE 0 END AS q
-        |  FROM quota1),
-        |blocks AS (
-        |  SELECT label AS y_pred,
-        |    coalesce(sum(q) OVER (ORDER BY label
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS lo,
-        |    sum(q) OVER (ORDER BY label
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hi
-        |  FROM quota),
-        |ranked AS (
-        |  SELECT event_type,
-        |    row_number() OVER (ORDER BY sha256(CAST(event_id AS VARCHAR)), event_id)
-        |      AS rk
-        |  FROM vl),
-        |assigned AS (
-        |  SELECT r.event_type, b.y_pred
-        |  FROM ranked r JOIN blocks b ON r.rk > b.lo AND r.rk <= b.hi)
-        |SELECT 'stratified' AS baseline, y_pred,
-        |  CAST(count(*) AS BIGINT) AS n_predictions,
-        |  CAST(sum(CASE WHEN event_type = y_pred THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_correct
-        |FROM assigned GROUP BY y_pred
-        |UNION ALL SELECT * FROM majr""".stripMargin,
-
-    "q1_domain_audits" ->
-      """WITH cardio AS (
-        |  SELECT date, hr_mean,
-        |    CASE WHEN day(date) % 4 = 0 THEN hr_mean ELSE hr_min0 END AS hr_min,
-        |    hr_max,
-        |    CASE WHEN day(date) % 10 = 0 THEN 0.0 ELSE hr_std0 END AS hr_std,
-        |    hr_samples
-        |  FROM (SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS hr_mean,
-        |          round(min(value), 6) AS hr_min0, round(max(value), 6) AS hr_max,
-        |          round(stddev_samp(value), 6) AS hr_std0, count(*) AS hr_samples
-        |        FROM events WHERE event_type = 'error' GROUP BY 1)),
-        |cardio_agg AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN hr_mean IS NOT NULL AND hr_min = hr_mean
-        |        THEN 1 ELSE 0 END) AS BIGINT) AS v_fab,
-        |    CAST(sum(CASE WHEN hr_mean IS NOT NULL AND hr_std = 0.0
-        |        THEN 1 ELSE 0 END) AS BIGINT) AS v_std,
-        |    CAST(sum(CASE WHEN hr_mean IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS c
-        |  FROM cardio),
-        |sleepf AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(avg(value) / 4.0, 6) AS sleep_hours,
-        |    round(avg(value) / 150.0, 6) AS sleep_efficiency
-        |  FROM events WHERE event_type = 'click' GROUP BY 1),
-        |sleep_agg AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN sleep_hours IS NOT NULL
-        |        AND (sleep_hours < 0 OR sleep_hours > 24) THEN 1 ELSE 0 END) AS BIGINT) AS v_h,
-        |    CAST(sum(CASE WHEN sleep_hours IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_h,
-        |    CAST(sum(CASE WHEN sleep_efficiency IS NOT NULL
-        |        AND (sleep_efficiency < 0 OR sleep_efficiency > 1) THEN 1 ELSE 0 END) AS BIGINT) AS v_e,
-        |    CAST(sum(CASE WHEN sleep_efficiency IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_e
-        |  FROM sleepf),
-        |medsf AS (
-        |  SELECT CAST(ts AS DATE) AS date,
-        |    CASE WHEN day(CAST(ts AS DATE)) % 9 = 0 THEN 2 ELSE 1 END AS med_any,
-        |    count(*) AS med_event_count, round(sum(value), 6) AS med_dose_total,
-        |    CASE WHEN day(CAST(ts AS DATE)) % 6 = 0 THEN ''
-        |         ELSE 'Methylphenidate, Sertraline' END AS med_names,
-        |    CASE WHEN day(CAST(ts AS DATE)) % 11 = 0 THEN 'weird'
-        |         ELSE 'apple_autoexport' END AS med_vendor
-        |  FROM events WHERE event_type = 'signup' GROUP BY 1),
-        |meds_agg AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN med_any NOT IN (0, 1) THEN 1 ELSE 0 END) AS BIGINT) AS v_any,
-        |    CAST(count(*) AS BIGINT) AS c_meds,
-        |    CAST(sum(CASE WHEN med_event_count < 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_cnt,
-        |    CAST(sum(CASE WHEN med_dose_total IS NOT NULL AND med_dose_total < 0
-        |        THEN 1 ELSE 0 END) AS BIGINT) AS v_dose,
-        |    CAST(sum(CASE WHEN med_any = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_any1,
-        |    CAST(sum(CASE WHEN med_any = 1 AND med_event_count <= 0
-        |        THEN 1 ELSE 0 END) AS BIGINT) AS v_a1c,
-        |    CAST(sum(CASE WHEN med_any = 1 AND (med_names IS NULL OR trim(med_names) = '')
-        |        THEN 1 ELSE 0 END) AS BIGINT) AS v_nm,
-        |    CAST(sum(CASE WHEN med_vendor NOT IN ('apple_export', 'apple_autoexport', 'fallback')
-        |        THEN 1 ELSE 0 END) AS BIGINT) AS v_vnd
-        |  FROM medsf),
-        |somf AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(avg(value) / 200.0, 6) AS som_mean_score,
-        |    round(max(value), 6) AS som_last_score, count(*) AS som_n_entries,
-        |    CASE WHEN day(CAST(ts AS DATE)) % 8 = 0 THEN 5 ELSE 0 END AS som_category_3class,
-        |    'apple_autoexport' AS som_vendor
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |som_agg AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN som_category_3class NOT IN (-1, 0, 1)
-        |        THEN 1 ELSE 0 END) AS BIGINT) AS v_cat,
-        |    CAST(count(*) AS BIGINT) AS c_som,
-        |    CAST(sum(CASE WHEN som_n_entries < 1 THEN 1 ELSE 0 END) AS BIGINT) AS v_ent,
-        |    CAST(sum(CASE WHEN som_vendor NOT IN ('apple_autoexport', 'fallback')
-        |        THEN 1 ELSE 0 END) AS BIGINT) AS v_svnd,
-        |    CAST(sum(CASE WHEN som_mean_score < -1 OR som_mean_score > 1
-        |        THEN 1 ELSE 0 END) AS BIGINT) AS v_ms,
-        |    CAST(sum(CASE WHEN som_mean_score IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_ms,
-        |    CAST(sum(CASE WHEN som_last_score < -1 OR som_last_score > 1
-        |        THEN 1 ELSE 0 END) AS BIGINT) AS v_ls,
-        |    CAST(sum(CASE WHEN som_last_score IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS c_ls
-        |  FROM somf)
-        |SELECT 'cardio' AS domain, 'fabricated_min' AS "check", 'CRITICAL' AS severity,
-        |  v_fab AS n_violations, c AS n_checked, v_fab <= c * 0.10 AS passed FROM cardio_agg
-        |UNION ALL SELECT 'cardio', 'zero_std', 'CRITICAL', v_std, c, v_std <= c * 0.10 FROM cardio_agg
-        |UNION ALL SELECT 'cardio', 'schema_columns', 'CRITICAL', CAST(0 AS BIGINT), CAST(5 AS BIGINT), true
-        |UNION ALL SELECT 'sleep', 'sleep_hours_range', 'CRITICAL', v_h, c_h, v_h = 0 FROM sleep_agg
-        |UNION ALL SELECT 'sleep', 'efficiency_range', 'WARNING', v_e, c_e, v_e = 0 FROM sleep_agg
-        |UNION ALL SELECT 'meds', 'med_any_invalid',
-        |  CASE WHEN v_any * 100 > c_meds THEN 'CRITICAL' ELSE 'WARNING' END, v_any, c_meds, v_any = 0 FROM meds_agg
-        |UNION ALL SELECT 'meds', 'event_count_negative',
-        |  CASE WHEN v_cnt * 100 > c_meds THEN 'CRITICAL' ELSE 'WARNING' END, v_cnt, c_meds, v_cnt = 0 FROM meds_agg
-        |UNION ALL SELECT 'meds', 'dose_negative',
-        |  CASE WHEN v_dose * 100 > c_meds THEN 'CRITICAL' ELSE 'WARNING' END, v_dose, c_meds, v_dose = 0 FROM meds_agg
-        |UNION ALL SELECT 'meds', 'any1_count_nonpositive',
-        |  CASE WHEN v_a1c * 100 > c_any1 THEN 'CRITICAL' ELSE 'WARNING' END, v_a1c, c_any1, v_a1c = 0 FROM meds_agg
-        |UNION ALL SELECT 'meds', 'any1_names_empty',
-        |  CASE WHEN v_nm * 100 > c_any1 THEN 'CRITICAL' ELSE 'WARNING' END, v_nm, c_any1, v_nm = 0 FROM meds_agg
-        |UNION ALL SELECT 'meds', 'vendor_invalid', 'CRITICAL', v_vnd, c_meds, v_vnd = 0 FROM meds_agg
-        |UNION ALL SELECT 'som', 'category_invalid',
-        |  CASE WHEN v_cat * 100 > c_som THEN 'CRITICAL' ELSE 'WARNING' END, v_cat, c_som, v_cat = 0 FROM som_agg
-        |UNION ALL SELECT 'som', 'entries_lt1',
-        |  CASE WHEN v_ent * 100 > c_som THEN 'CRITICAL' ELSE 'WARNING' END, v_ent, c_som, v_ent = 0 FROM som_agg
-        |UNION ALL SELECT 'som', 'vendor_invalid', 'CRITICAL', v_svnd, c_som, v_svnd = 0 FROM som_agg
-        |UNION ALL SELECT 'som', 'range_som_mean_score', 'WARNING', v_ms, c_ms, v_ms = 0 FROM som_agg
-        |UNION ALL SELECT 'som', 'range_som_last_score', 'WARNING', v_ls, c_ls, v_ls = 0 FROM som_agg""".stripMargin,
-
-    "m6_extended" ->
-      """WITH pred AS (
-        |  SELECT event_type AS y_true,
-        |    ['click','error','purchase','signup','view']
-        |      [CAST(floor(value / 40) AS BIGINT) % 5 + 1] AS y_pred
-        |  FROM events),
-        |m AS (
-        |  SELECT count(*) AS n,
-        |    sum(CASE WHEN y_true = y_pred THEN 1 ELSE 0 END) AS agree,
-        |    sum(CASE WHEN y_true = 'click' THEN 1 ELSE 0 END) AS rt1,
-        |    sum(CASE WHEN y_pred = 'click' THEN 1 ELSE 0 END) AS rp1,
-        |    sum(CASE WHEN y_true = 'error' THEN 1 ELSE 0 END) AS rt2,
-        |    sum(CASE WHEN y_pred = 'error' THEN 1 ELSE 0 END) AS rp2,
-        |    sum(CASE WHEN y_true = 'purchase' THEN 1 ELSE 0 END) AS rt3,
-        |    sum(CASE WHEN y_pred = 'purchase' THEN 1 ELSE 0 END) AS rp3,
-        |    sum(CASE WHEN y_true = 'signup' THEN 1 ELSE 0 END) AS rt4,
-        |    sum(CASE WHEN y_pred = 'signup' THEN 1 ELSE 0 END) AS rp4,
-        |    sum(CASE WHEN y_true = 'view' THEN 1 ELSE 0 END) AS rt5,
-        |    sum(CASE WHEN y_pred = 'view' THEN 1 ELSE 0 END) AS rp5,
-        |    sum(CASE WHEN y_true = 'click' AND y_pred = 'click' THEN 1 ELSE 0 END) AS d1,
-        |    sum(CASE WHEN y_true = 'error' AND y_pred = 'error' THEN 1 ELSE 0 END) AS d2,
-        |    sum(CASE WHEN y_true = 'purchase' AND y_pred = 'purchase' THEN 1 ELSE 0 END) AS d3,
-        |    sum(CASE WHEN y_true = 'signup' AND y_pred = 'signup' THEN 1 ELSE 0 END) AS d4,
-        |    sum(CASE WHEN y_true = 'view' AND y_pred = 'view' THEN 1 ELSE 0 END) AS d5
-        |  FROM pred)
-        |SELECT
-        |  round(agree / CAST(n AS DOUBLE), 6) AS accuracy,
-        |  round((d1 / CAST(rt1 AS DOUBLE) + d2 / CAST(rt2 AS DOUBLE)
-        |    + d3 / CAST(rt3 AS DOUBLE) + d4 / CAST(rt4 AS DOUBLE)
-        |    + d5 / CAST(rt5 AS DOUBLE)) / 5, 6) AS balanced_accuracy,
-        |  round((agree / CAST(n AS DOUBLE)
-        |      - CAST(rt1 * rp1 + rt2 * rp2 + rt3 * rp3 + rt4 * rp4 + rt5 * rp5 AS DOUBLE)
-        |        / (CAST(n AS DOUBLE) * n))
-        |    / (1.0 - CAST(rt1 * rp1 + rt2 * rp2 + rt3 * rp3 + rt4 * rp4 + rt5 * rp5 AS DOUBLE)
-        |        / (CAST(n AS DOUBLE) * n)), 6) AS kappa
-        |FROM m""".stripMargin,
-
-    "m6_auc" ->
-      """WITH wc AS (
-        |  SELECT c.cls, e.event_type AS y_true,
-        |    e.value / 200.0 + CASE WHEN e.event_type = c.cls THEN 0.2 ELSE 0.0 END AS score
-        |  FROM events e CROSS JOIN
-        |    (SELECT unnest(['click','error','purchase','signup','view']) AS cls) c),
-        |r AS (
-        |  SELECT cls, y_true, score,
-        |    rank() OVER (PARTITION BY cls ORDER BY score) AS rmin,
-        |    count(*) OVER (PARTITION BY cls, score) AS cnt
-        |  FROM wc),
-        |a AS (SELECT cls, y_true, rmin + (cnt - 1) / 2.0 AS avgrank FROM r)
-        |SELECT cls,
-        |  CAST(sum(CASE WHEN y_true = cls THEN 1 ELSE 0 END) AS BIGINT) AS np,
-        |  CAST(sum(CASE WHEN y_true <> cls THEN 1 ELSE 0 END) AS BIGINT) AS nn,
-        |  round((sum(CASE WHEN y_true = cls THEN avgrank END)
-        |      - sum(CASE WHEN y_true = cls THEN 1 ELSE 0 END)
-        |        * (sum(CASE WHEN y_true = cls THEN 1 ELSE 0 END) + 1) / 2.0)
-        |    / (sum(CASE WHEN y_true = cls THEN 1 ELSE 0 END)
-        |      * sum(CASE WHEN y_true <> cls THEN 1 ELSE 0 END)), 6) AS auc
-        |FROM a GROUP BY cls""".stripMargin,
-
-    "w8_modal" ->
-      s"""WITH daily AS ($dailyUserSql),
-        |lab AS (
-        |  SELECT user_id, date,
-        |    CASE WHEN f_mean >= 110 THEN 1 WHEN f_mean <= 90 THEN -1 ELSE 0 END AS label
-        |  FROM daily),
-        |c AS (
-        |  SELECT user_id, date, label,
-        |    sum(CASE WHEN label = -1 THEN 1 ELSE 0 END) OVER w AS c_neg,
-        |    sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) OVER w AS c_zero,
-        |    sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) OVER w AS c_pos
-        |  FROM lab WINDOW w AS (PARTITION BY user_id ORDER BY date
-        |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
-        |SELECT user_id, date, label,
-        |  CASE WHEN c_neg >= c_zero AND c_neg >= c_pos THEN -1
-        |       WHEN c_zero >= c_pos THEN 0 ELSE 1 END AS label_modal
-        |FROM c""".stripMargin,
-
-    "m3_scale" ->
-      s"""WITH daily AS ($dailyUserSql),
-        |stats AS (
-        |  SELECT avg(f_mean) FILTER (date < DATE '$TrainEnd') AS m1,
-        |    stddev_samp(f_mean) FILTER (date < DATE '$TrainEnd') AS s1,
-        |    avg(f_n) FILTER (date < DATE '$TrainEnd') AS m2,
-        |    stddev_samp(f_n) FILTER (date < DATE '$TrainEnd') AS s2
-        |  FROM daily)
-        |SELECT d.user_id, d.date,
-        |  round(CASE WHEN s1 IS NOT NULL AND s1 > 0 THEN (d.f_mean - m1) / s1 ELSE 0.0 END, 6)
-        |    AS f_mean_scaled,
-        |  round(CASE WHEN s2 IS NOT NULL AND s2 > 0 THEN (d.f_n - m2) / s2 ELSE 0.0 END, 6)
-        |    AS f_n_scaled
-        |FROM daily d CROSS JOIN stats""".stripMargin)
 }

@@ -30,10 +30,10 @@ object RelationalQueries {
     """SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS v, count(*) AS n
       |FROM events WHERE event_type = 'purchase' GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Seq[Query] = Seq(
     // A2/A4-family scan-aggregate (TPC-H Q1 shape): map-side partial agg,
     // 4 output groups.
-    "q1_pricing_summary" -> ((s, dir) =>
+    Query("q1_pricing_summary", (s, dir) =>
       Tables.lineitem(s, dir)
         .filter(to_date(col("l_shipdate")) <= lit("1998-09-02").cast("date"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -44,10 +44,20 @@ object RelationalQueries {
             .as("sum_disc_price"),
           round(avg("l_quantity"), 6).as("avg_qty"),
           round(avg("l_discount"), 6).as("avg_disc"),
-          count(lit(1)).as("count_order"))),
+          count(lit(1)).as("count_order")),
+      oracle =
+        """SELECT l_returnflag, l_linestatus,
+          |  round(sum(l_quantity), 2) AS sum_qty,
+          |  round(sum(l_extendedprice), 2) AS sum_base_price,
+          |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+          |  round(avg(l_quantity), 6) AS avg_qty,
+          |  round(avg(l_discount), 6) AS avg_disc,
+          |  count(*) AS count_order
+          |FROM lineitem WHERE CAST(l_shipdate AS DATE) <= DATE '1998-09-02'
+          |GROUP BY l_returnflag, l_linestatus""".stripMargin),
 
     // Multi-way broadcast join through the dimension chain.
-    "q5_region_revenue" -> ((s, dir) => {
+    Query("q5_region_revenue", (s, dir) => {
       val li = Tables.lineitem(s, dir)
       val sup = broadcast(Tables.supplier(s, dir))
       val nat = broadcast(Tables.nation(s, dir))
@@ -60,14 +70,23 @@ object RelationalQueries {
           round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
             .as("revenue"),
           count(lit(1)).as("n_items"))
-    }),
+    },
+      oracle =
+        """SELECT r.r_name,
+          |  round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+          |  count(*) AS n_items
+          |FROM lineitem l
+          |JOIN supplier s ON l.l_suppkey = s.s_suppkey
+          |JOIN nation n ON s.s_nationkey = n.n_nationkey
+          |JOIN region r ON n.n_regionkey = r.r_regionkey
+          |GROUP BY r.r_name""".stripMargin),
 
     // Q6 (beyond ref): cross-table referential-integrity audit — orphan
     // foreign keys via left-anti equi-joins (plain hash shuffles at any
     // scale), one row per FK edge with total child rows and orphan count.
     // The cross-table complement of Q2's re-agg oracle and Q3's
     // degeneracy asserts.
-    "q6_ref_integrity" -> ((s, dir) => {
+    Query("q6_ref_integrity", (s, dir) => {
       import graft.qc.Audit.FkEdge
       graft.qc.Audit.refIntegrity(Seq(
         FkEdge("lineitem->orders", Tables.lineitem(s, dir), "l_orderkey",
@@ -78,7 +97,25 @@ object RelationalQueries {
           Tables.nation(s, dir), "n_nationkey"),
         FkEdge("nation->region", Tables.nation(s, dir), "n_regionkey",
           Tables.region(s, dir), "r_regionkey")))
-    }),
+    },
+      oracle = {
+        def edge(name: String, child: String, childKey: String,
+                 parent: String, parentKey: String) =
+          s"""SELECT '$name' AS fk_edge,
+            |  (SELECT count(*) FROM $child) AS n_child,
+            |  (SELECT count(*) FROM $child c WHERE NOT EXISTS
+            |    (SELECT 1 FROM $parent p WHERE p.$parentKey = c.$childKey))
+            |    AS n_orphans,
+            |  CAST((SELECT count(*) FROM $child c WHERE NOT EXISTS
+            |    (SELECT 1 FROM $parent p WHERE p.$parentKey = c.$childKey)) = 0
+            |    AS INT) AS ok""".stripMargin
+        Seq(
+          edge("lineitem->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
+          edge("orders->customer", "orders", "o_custkey", "customer", "c_custkey"),
+          edge("customer->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
+          edge("nation->region", "nation", "n_regionkey", "region", "r_regionkey"))
+          .mkString("\nUNION ALL\n")
+      }),
 
     // Q7: the same parameterized integrity audit over pipeline-DERIVED
     // corpus tables — the QC a real training-data pipeline runs between
@@ -86,7 +123,7 @@ object RelationalQueries {
     // to a document, and the embedding store's ids are checked against the
     // document ids (a genuine cross-store edge that CAN have orphans —
     // the audit reports rather than assumes).
-    "q7_corpus_integrity" -> ((s, dir) => {
+    Query("q7_corpus_integrity", (s, dir) => {
       import graft.qc.Audit.FkEdge
       val docs = Tables.documents(s, dir)
       val chunks = graft.operators.TextAnalysis.chunkDocuments(
@@ -97,36 +134,83 @@ object RelationalQueries {
         FkEdge("dedup_keep->documents", keep, "keep_id", docs, "doc_id"),
         FkEdge("embeddings->documents", Tables.embeddings(s, dir), "vec_id",
           docs, "doc_id")))
-    }),
+    },
+      // q7 twin: the derived corpus tables rebuilt as CTEs (chunking via the
+      // shared t13 twin, exact-dedup keep pointers via the dd1 group-min),
+      // then the same NOT EXISTS orphan arithmetic per edge.
+      oracle = {
+        def edge(name: String, child: String, childKey: String) =
+          s"""SELECT '$name' AS fk_edge,
+            |  (SELECT count(*) FROM $child) AS n_child,
+            |  (SELECT count(*) FROM $child c WHERE NOT EXISTS
+            |    (SELECT 1 FROM documents p WHERE p.doc_id = c.$childKey))
+            |    AS n_orphans,
+            |  CAST((SELECT count(*) FROM $child c WHERE NOT EXISTS
+            |    (SELECT 1 FROM documents p WHERE p.doc_id = c.$childKey)) = 0
+            |    AS INT) AS ok""".stripMargin
+        val chunksSql =
+          graft.operators.TextAnalysis.chunkDocumentsSql("doc_id", "text", 30, 5)
+        s"""WITH chunks AS (SELECT * FROM ($chunksSql)),
+          |keep AS (
+          |  SELECT min(doc_id) AS keep_id FROM documents GROUP BY sha256(text))
+          |${Seq(
+          edge("chunks->documents", "chunks", "doc_id"),
+          edge("dedup_keep->documents", "keep", "keep_id"),
+          edge("embeddings->documents", "embeddings", "vec_id"))
+          .mkString("\nUNION ALL\n")}""".stripMargin
+      }),
 
     // J1: full-outer equi-join of two daily frames.
-    "j1_full_outer" -> ((s, dir) =>
+    Query("j1_full_outer", (s, dir) =>
       clickDaily(s, dir).select(col("date"), col("v").as("click_v"), col("n").as("click_n"))
         .join(purchaseDaily(s, dir)
           .select(col("date"), col("v").as("purch_v"), col("n").as("purch_n")),
-          Seq("date"), "full_outer")),
+          Seq("date"), "full_outer"),
+      oracle =
+        s"""WITH c AS ($clickDailySql), p AS ($purchaseDailySql)
+          |SELECT COALESCE(c.date, p.date) AS date,
+          |  c.v AS click_v, c.n AS click_n, p.v AS purch_v, p.n AS purch_n
+          |FROM c FULL OUTER JOIN p ON c.date = p.date""".stripMargin),
 
     // J2/U2: date spine + chained left joins (the unify_all shape).
-    "j2_spine_unify" -> ((s, dir) => {
+    Query("j2_spine_unify", (s, dir) => {
       val c = clickDaily(s, dir).select(col("date"), col("v").as("click_v"))
       val p = purchaseDaily(s, dir).select(col("date"), col("v").as("purch_v"))
       val e = Tables.events(s, dir).filter(col("event_type") === "error")
         .groupBy(to_date(col("ts")).as("date"))
         .agg(round(avg("value"), 6).as("err_v"))
       Unify.unifyAll(Seq(c, p, e))
-    }),
+    },
+      oracle =
+        s"""WITH c AS ($clickDailySql), p AS ($purchaseDailySql),
+          |e AS (SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS err_v
+          |      FROM events WHERE event_type = 'error' GROUP BY 1),
+          |spine AS (SELECT DISTINCT date FROM (
+          |  SELECT date FROM c UNION ALL SELECT date FROM p UNION ALL SELECT date FROM e))
+          |SELECT s.date, c.v AS click_v, p.v AS purch_v, e.err_v
+          |FROM spine s
+          |LEFT JOIN c ON s.date = c.date
+          |LEFT JOIN p ON s.date = p.date
+          |LEFT JOIN e ON s.date = e.date""".stripMargin),
 
     // J3: left-anti fill-missing-dates preference merge.
-    "j3_prefer_merge" -> ((s, dir) => {
+    Query("j3_prefer_merge", (s, dir) => {
       val a = clickDaily(s, dir).select(col("date"), col("v"), lit("click").as("src"))
       val b = purchaseDaily(s, dir).select(col("date"), col("v"), lit("purchase").as("src"))
       // restrict the preferred side so the anti-join actually fills rows
       val aOdd = a.filter(dayofmonth(col("date")) % 2 === 1)
       Unify.preferByDate(aOdd, b)
-    }),
+    },
+      oracle =
+        s"""WITH a AS (SELECT date, v, 'click' AS src FROM ($clickDailySql)
+          |           WHERE day(date) % 2 = 1),
+          |b AS (SELECT date, v, 'purchase' AS src FROM ($purchaseDailySql))
+          |SELECT * FROM a
+          |UNION ALL
+          |SELECT b.* FROM b LEFT JOIN a ON b.date = a.date WHERE a.date IS NULL""".stripMargin),
 
     // J4/U1: union-by-name (null-padding) + grouped mean fusion.
-    "j4_union_fuse" -> ((s, dir) => {
+    Query("j4_union_fuse", (s, dir) => {
       val a = clickDaily(s, dir).select(col("date"), col("v"), col("n").as("click_n"))
       val b = purchaseDaily(s, dir).select(col("date"), col("v"), col("n").as("purch_n"))
       Unify.unionFuse(Seq(a, b), Seq(
@@ -134,20 +218,39 @@ object RelationalQueries {
         sum(col("click_n")).as("click_n_total"),
         sum(col("purch_n")).as("purch_n_total"),
         count(lit(1)).as("n_sources")))
-    }),
+    },
+      oracle =
+        s"""WITH a AS (SELECT date, v, n AS click_n, NULL::BIGINT AS purch_n
+          |           FROM ($clickDailySql)),
+          |b AS (SELECT date, v, NULL::BIGINT AS click_n, n AS purch_n
+          |      FROM ($purchaseDailySql)),
+          |u AS (SELECT * FROM a UNION ALL SELECT * FROM b)
+          |SELECT date, round(avg(v), 6) AS v_fused,
+          |  CAST(sum(click_n) AS BIGINT) AS click_n_total,
+          |  CAST(sum(purch_n) AS BIGINT) AS purch_n_total, count(*) AS n_sources
+          |FROM u GROUP BY date""".stripMargin),
 
     // J6: column-wise coalesce merge with provenance + missing flags.
-    "j6_coalesce_merge" -> ((s, dir) => {
+    Query("j6_coalesce_merge", (s, dir) => {
       val a = clickDaily(s, dir).filter(dayofmonth(col("date")) % 3 =!= 0)
         .select(col("date"), col("v"))
       val b = purchaseDaily(s, dir).filter(dayofmonth(col("date")) % 2 === 0)
         .select(col("date"), col("v"))
       Unify.coalesceMerge(a, b, Seq("v"), "metric")
-    }),
+    },
+      oracle =
+        s"""WITH a AS (SELECT date, v FROM ($clickDailySql) WHERE day(date) % 3 <> 0),
+          |b AS (SELECT date, v FROM ($purchaseDailySql) WHERE day(date) % 2 = 0)
+          |SELECT COALESCE(a.date, b.date) AS date,
+          |  COALESCE(a.v, b.v) AS v,
+          |  CASE WHEN a.v IS NOT NULL THEN 'a' WHEN b.v IS NOT NULL THEN 'b'
+          |       ELSE 'none' END AS source_metric,
+          |  CASE WHEN COALESCE(a.v, b.v) IS NULL THEN 1 ELSE 0 END AS missing_metric
+          |FROM a FULL OUTER JOIN b ON a.date = b.date""".stripMargin),
 
     // J3-variant: customers with no RECENT orders, counted per nation
     // (anti join on the fact side, broadcast dim attach).
-    "j_anti_customers" -> ((s, dir) => {
+    Query("j_anti_customers", (s, dir) => {
       val cust = Tables.customer(s, dir)
       val ord = Tables.orders(s, dir)
         .filter(to_date(col("o_orderdate")) >= lit("2000-01-01").cast("date"))
@@ -157,13 +260,21 @@ object RelationalQueries {
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n_customers_no_orders"),
           round(sum("c_acctbal"), 2).as("acctbal_sum"))
-    }),
+    },
+      oracle =
+        """SELECT n.n_name, count(*) AS n_customers_no_orders,
+          |  round(sum(c.c_acctbal), 2) AS acctbal_sum
+          |FROM customer c
+          |JOIN nation n ON c.c_nationkey = n.n_nationkey
+          |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
+          |  AND CAST(o.o_orderdate AS DATE) >= DATE '2000-01-01')
+          |GROUP BY n.n_name""".stripMargin),
 
     // J11: the FULL DailyUnifier.unify_all contract — five domains (sleep
     // prefer-by-date, cardio mean-merge + HRV outer re-join + null padding,
     // activity sum-merge, meds priority vendor, SoM) fused on a spine over
     // ALL domain dates, meds + SoM included.
-    "j11_unify_domains" -> ((s, dir) => {
+    Query("j11_unify_domains", (s, dir) => {
       import graft.pipeline.ReferencePipeline
       val ev = Tables.events(s, dir)
       // ONE shared scan+aggregate on (date, event_type) feeds all eight
@@ -228,13 +339,105 @@ object RelationalQueries {
         ReferencePipeline.unifyActivityDomains(Some(appleAct), Some(zeppAct)),
         ReferencePipeline.unifyMedsDomain(Seq("apple_autoexport" -> meds)),
         ReferencePipeline.unifySomDomain(Some(som)))
-    }),
+    },
+      oracle =
+        """WITH
+          |asleep AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(avg(value) / 10.0, 6) AS sleep_hours,
+          |    round(min(value), 6) AS sleep_quality_score
+          |  FROM events WHERE event_type = 'click' GROUP BY 1
+          |  HAVING day(CAST(ts AS DATE)) % 2 = 1),
+          |zsleep AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(avg(value) / 12.0, 6) AS sleep_hours,
+          |    round(min(value), 6) AS sleep_quality_score
+          |  FROM events WHERE event_type = 'view' GROUP BY 1),
+          |sleep AS (
+          |  SELECT * FROM asleep UNION ALL
+          |  SELECT z.* FROM zsleep z LEFT JOIN asleep a ON z.date = a.date
+          |  WHERE a.date IS NULL),
+          |acard AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS hr_mean,
+          |    round(min(value), 6) AS hr_min, round(max(value), 6) AS hr_max,
+          |    round(stddev_samp(value), 6) AS hr_std, count(*) AS hr_samples,
+          |    round(avg(value) * 0.5, 6) AS hrv_sdnn_mean, count(*) AS n_hrv_sdnn
+          |  FROM events WHERE event_type = 'error' GROUP BY 1
+          |  HAVING day(CAST(ts AS DATE)) <= 20),
+          |zcard AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS hr_mean,
+          |    round(min(value), 6) AS hr_min, round(max(value), 6) AS hr_max,
+          |    round(stddev_samp(value), 6) AS hr_std, count(*) AS hr_samples
+          |  FROM events WHERE event_type = 'signup' GROUP BY 1),
+          |cardu AS (
+          |  SELECT date, hr_mean, hr_min, hr_max, hr_std, hr_samples FROM acard
+          |  UNION ALL
+          |  SELECT date, hr_mean, hr_min, hr_max, hr_std, hr_samples FROM zcard),
+          |cardhr AS (
+          |  SELECT date, avg(hr_mean) AS hr_mean, avg(hr_min) AS hr_min,
+          |    avg(hr_max) AS hr_max, avg(hr_std) AS hr_std,
+          |    avg(hr_samples) AS hr_samples
+          |  FROM cardu GROUP BY date),
+          |cardio AS (
+          |  SELECT COALESCE(h.date, v.date) AS date, h.hr_mean, h.hr_min, h.hr_max,
+          |    h.hr_std, h.hr_samples, v.hrv_sdnn_mean, NULL::DOUBLE AS hrv_sdnn_median,
+          |    NULL::DOUBLE AS hrv_sdnn_min, NULL::DOUBLE AS hrv_sdnn_max, v.n_hrv_sdnn
+          |  FROM cardhr h FULL OUTER JOIN
+          |    (SELECT date, hrv_sdnn_mean, n_hrv_sdnn FROM acard) v ON h.date = v.date),
+          |aact AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(sum(value), 6) AS total_steps,
+          |    round(sum(value) / 1000.0, 6) AS total_distance,
+          |    round(sum(value) * 2.0, 6) AS total_active_energy
+          |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
+          |zact AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(sum(value), 6) AS total_steps,
+          |    round(sum(value) / 1000.0, 6) AS total_distance,
+          |    round(sum(value) * 2.0, 6) AS total_active_energy
+          |  FROM events WHERE event_type = 'click' GROUP BY 1),
+          |actu AS (SELECT * FROM aact UNION ALL SELECT * FROM zact),
+          |activity AS (
+          |  SELECT date, coalesce(sum(total_steps), 0.0) AS total_steps,
+          |    coalesce(sum(total_distance), 0.0) AS total_distance,
+          |    coalesce(sum(total_active_energy), 0.0) AS total_active_energy
+          |  FROM actu GROUP BY date),
+          |meds AS (
+          |  SELECT CAST(ts AS DATE) AS date, 1 AS med_any, count(*) AS med_event_count,
+          |    round(sum(value), 6) AS med_dose_total,
+          |    'apple_autoexport' AS med_vendor
+          |  FROM events WHERE event_type = 'signup' GROUP BY 1
+          |  HAVING day(CAST(ts AS DATE)) % 3 <> 0),
+          |som AS (
+          |  SELECT CAST(ts AS DATE) AS date,
+          |    round(avg(value) / 200.0, 6) AS som_mean_score,
+          |    round(max(value), 6) AS som_last_score, count(*) AS som_n_entries,
+          |    CASE WHEN avg(value) / 200.0 >= 0.25 THEN 1
+          |         WHEN avg(value) / 200.0 <= -0.25 THEN -1 ELSE 0 END
+          |      AS som_category_3class,
+          |    'apple_autoexport' AS som_vendor
+          |  FROM events WHERE event_type = 'view' GROUP BY 1
+          |  HAVING day(CAST(ts AS DATE)) % 4 <> 0),
+          |spine AS (
+          |  SELECT date FROM sleep UNION SELECT date FROM cardio
+          |  UNION SELECT date FROM activity UNION SELECT date FROM meds
+          |  UNION SELECT date FROM som)
+          |SELECT sp.date, sl.sleep_hours, sl.sleep_quality_score,
+          |  c.hr_mean, c.hr_min, c.hr_max, c.hr_std, c.hr_samples,
+          |  c.hrv_sdnn_mean, c.hrv_sdnn_median, c.hrv_sdnn_min, c.hrv_sdnn_max,
+          |  c.n_hrv_sdnn,
+          |  a.total_steps, a.total_distance, a.total_active_energy,
+          |  m.med_any, m.med_event_count, m.med_dose_total, m.med_vendor,
+          |  so.som_mean_score, so.som_last_score, so.som_n_entries,
+          |  so.som_category_3class, so.som_vendor
+          |FROM spine sp
+          |LEFT JOIN sleep sl ON sp.date = sl.date
+          |LEFT JOIN cardio c ON sp.date = c.date
+          |LEFT JOIN activity a ON sp.date = a.date
+          |LEFT JOIN meds m ON sp.date = m.date
+          |LEFT JOIN som so ON sp.date = so.date""".stripMargin),
 
     // J11 legacy fold: Zepp BODY (weight/bodyfat) + HEALTH_DATA
     // (spo2/stress) daily loaders — first-present column candidates, TZ
     // cutover local dates, daily means — folded with HR into the
     // zepp_daily_features consolidation (_merge_on_date outer merge).
-    "j11_zepp_features" -> ((s, dir) => {
+    Query("j11_zepp_features", (s, dir) => {
       import graft.pipeline.ReferencePipeline
       val ev = Tables.events(s, dir)
       val hr = ev.filter(col("event_type") === "error")
@@ -261,11 +464,51 @@ object RelationalQueries {
           round(col("zepp_bodyfat_pct"), 6).as("zepp_bodyfat_pct"),
           round(col("zepp_spo2_mean"), 6).as("zepp_spo2_mean"),
           round(col("zepp_stress_mean"), 6).as("zepp_stress_mean"))
-    }),
+    },
+      oracle =
+        """WITH hr AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS zepp_hr_mean
+          |  FROM events WHERE event_type = 'error' GROUP BY 1
+          |  HAVING day(CAST(ts AS DATE)) <= 25),
+          |body0 AS (
+          |  SELECT date_trunc('second', ts) AS t, value / 2 + 50 AS weight,
+          |    value / 10 AS fat_rate
+          |  FROM events
+          |  WHERE event_type = 'purchase' AND day(CAST(ts AS DATE)) % 2 = 0),
+          |body AS (
+          |  SELECT CAST(CASE WHEN CAST(t AS DATE) < DATE '2024-01-15'
+          |      THEN (t AT TIME ZONE 'UTC') AT TIME ZONE 'Europe/Dublin'
+          |      ELSE (t AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York' END
+          |      AS DATE) AS date,
+          |    round(avg(weight), 6) AS zepp_weight_kg,
+          |    round(avg(fat_rate), 6) AS zepp_bodyfat_pct
+          |  FROM body0 GROUP BY 1),
+          |health0 AS (
+          |  SELECT date_trunc('second', ts) AS t, value / 2 AS spo2,
+          |    value / 10 AS stress
+          |  FROM events
+          |  WHERE event_type = 'view' AND day(CAST(ts AS DATE)) % 3 <> 0),
+          |health AS (
+          |  SELECT CAST(CASE WHEN CAST(t AS DATE) < DATE '2024-01-15'
+          |      THEN (t AT TIME ZONE 'UTC') AT TIME ZONE 'Europe/Dublin'
+          |      ELSE (t AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York' END
+          |      AS DATE) AS date,
+          |    round(avg(spo2), 6) AS zepp_spo2_mean,
+          |    round(avg(stress), 6) AS zepp_stress_mean
+          |  FROM health0 GROUP BY 1),
+          |spine AS (
+          |  SELECT date FROM hr UNION SELECT date FROM body
+          |  UNION SELECT date FROM health)
+          |SELECT sp.date, h.zepp_hr_mean, b.zepp_weight_kg, b.zepp_bodyfat_pct,
+          |  he.zepp_spo2_mean, he.zepp_stress_mean
+          |FROM spine sp
+          |LEFT JOIN hr h ON sp.date = h.date
+          |LEFT JOIN body b ON sp.date = b.date
+          |LEFT JOIN health he ON sp.date = he.date""".stripMargin),
 
     // F7/5.1: the ML-prep gate over a meds+SoM-fused unified frame —
     // temporal cutoff, SoM validity filter, som_binary, anti-leak drop.
-    "f7_som_gate" -> ((s, dir) => {
+    Query("f7_som_gate", (s, dir) => {
       import graft.pipeline.ReferencePipeline
       val ev = Tables.events(s, dir)
       def daily(t: String) = ev.filter(col("event_type") === t)
@@ -287,12 +530,41 @@ object RelationalQueries {
         ReferencePipeline.unifySomDomain(Some(som)))
         .withColumn("label_3cls", lit(0)) // planted anti-leak column
       ReferencePipeline.mlPrep(unified, "2024-01-08")
-    }),
+    },
+      oracle =
+        """WITH sleep AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(avg(value) / 10.0, 6) AS sleep_hours,
+          |    round(min(value), 6) AS sleep_quality_score
+          |  FROM events WHERE event_type = 'click' GROUP BY 1),
+          |som AS (
+          |  SELECT CAST(ts AS DATE) AS date,
+          |    round(avg(value) / 200.0, 6) AS som_mean_score,
+          |    round(avg(value) / 200.0, 6) AS som_last_score,
+          |    count(*) AS som_n_entries,
+          |    CASE WHEN avg(value) / 200.0 >= 0.52 THEN 1
+          |         WHEN avg(value) / 200.0 <= 0.48 THEN -1 ELSE 0 END
+          |      AS som_category_3class,
+          |    'apple_autoexport' AS som_vendor
+          |  FROM events WHERE event_type = 'view' GROUP BY 1
+          |  HAVING day(CAST(ts AS DATE)) % 4 <> 0),
+          |spine AS (SELECT date FROM sleep UNION SELECT date FROM som),
+          |unified AS (
+          |  SELECT sp.date, sl.sleep_hours, sl.sleep_quality_score,
+          |    so.som_mean_score, so.som_last_score, so.som_n_entries,
+          |    so.som_category_3class, so.som_vendor
+          |  FROM spine sp LEFT JOIN sleep sl ON sp.date = sl.date
+          |  LEFT JOIN som so ON sp.date = so.date)
+          |SELECT date, sleep_hours, sleep_quality_score, som_mean_score,
+          |  som_last_score, som_n_entries, som_category_3class, som_vendor,
+          |  CASE WHEN som_category_3class = -1 THEN 1 ELSE 0 END AS som_binary
+          |FROM unified
+          |WHERE date >= DATE '2024-01-08' AND som_category_3class IS NOT NULL
+          |  AND som_vendor = 'apple_autoexport'""".stripMargin),
 
     // A21: cross-device tolerance validation — two vendors' daily metrics
     // compared under +-absTol OR relTol% rules, with planted drift so both
     // branches of the tolerance fire.
-    "a21_cross_device" -> ((s, dir) => {
+    Query("a21_cross_device", (s, dir) => {
       val ev = Tables.events(s, dir)
       def side = ev.groupBy(to_date(col("ts")).as("date"))
         .agg(round(avg("value"), 6).as("hr_mean"),
@@ -302,20 +574,52 @@ object RelationalQueries {
           when(dayofmonth(col("date")) % 3 === 0, 5.0).otherwise(0.001), 6))
       graft.qc.Validators.crossDevice(side, b, "date", Seq("hr_mean", "n"),
         absTol = 1.0, relTolPct = 0.5)
-    }),
+    },
+      oracle =
+        """WITH a AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS hr_mean,
+          |    CAST(count(*) AS DOUBLE) AS n
+          |  FROM events GROUP BY 1),
+          |b AS (
+          |  SELECT date,
+          |    round(hr_mean + CASE WHEN day(date) % 3 = 0 THEN 5.0 ELSE 0.001 END, 6)
+          |      AS hr_mean,
+          |    n
+          |  FROM a)
+          |SELECT a.date, a.hr_mean AS a_hr_mean, a.n AS a_n,
+          |  b.hr_mean AS b_hr_mean, b.n AS b_n,
+          |  round(abs(a.hr_mean - b.hr_mean), 6) AS diff_hr_mean,
+          |  CASE WHEN abs(a.hr_mean - b.hr_mean) <= 1.0
+          |         OR abs(a.hr_mean - b.hr_mean)
+          |            / greatest(abs(a.hr_mean), 1e-12) * 100.0 <= 0.5
+          |       THEN 1 ELSE 0 END AS ok_hr_mean,
+          |  round(abs(a.n - b.n), 6) AS diff_n,
+          |  CASE WHEN abs(a.n - b.n) <= 1.0
+          |         OR abs(a.n - b.n) / greatest(abs(a.n), 1e-12) * 100.0 <= 0.5
+          |       THEN 1 ELSE 0 END AS ok_n,
+          |  CASE WHEN (abs(a.hr_mean - b.hr_mean) <= 1.0
+          |         OR abs(a.hr_mean - b.hr_mean)
+          |            / greatest(abs(a.hr_mean), 1e-12) * 100.0 <= 0.5)
+          |        AND (abs(a.n - b.n) <= 1.0
+          |         OR abs(a.n - b.n) / greatest(abs(a.n), 1e-12) * 100.0 <= 0.5)
+          |       THEN 1 ELSE 0 END AS consistent
+          |FROM a JOIN b ON a.date = b.date""".stripMargin),
 
     // J7: static-priority vendor selection — the preferred vendor is empty,
     // so the probe falls through to the next source; provenance recorded.
-    "j7_vendor_select" -> ((s, dir) => {
+    Query("j7_vendor_select", (s, dir) => {
       val apple = clickDaily(s, dir).filter(col("v") < -1) // empty by data
       val zepp = purchaseDaily(s, dir)
       graft.operators.Folds.firstNonEmpty(Seq(
         "apple_export" -> apple, "apple_autoexport" -> zepp)).get._2
-    }),
+    },
+      oracle =
+        s"""SELECT date, v, n, 'apple_autoexport' AS vendor
+          |FROM ($purchaseDailySql)""".stripMargin),
 
     // J10: QC re-aggregation consistency join — recompute daily stats two
     // ways and diff them (the reference's own oracle pattern, Q2).
-    "j10_qc_consistency" -> ((s, dir) => {
+    Query("j10_qc_consistency", (s, dir) => {
       val official = Tables.events(s, dir)
         .groupBy(to_date(col("ts")).as("date"))
         .agg(round(avg("value"), 6).as("v_mean"), count(lit(1)).as("n"))
@@ -328,35 +632,65 @@ object RelationalQueries {
         .select(col("date"), col("v_mean"), col("n"),
           round(abs(col("v_mean") - round(col("v_mean2"), 6)), 6).as("mean_diff"),
           (col("n") - col("n2")).as("n_diff"))
-    }),
+    },
+      oracle =
+        """WITH official AS (
+          |  SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS v_mean, count(*) AS n
+          |  FROM events GROUP BY 1),
+          |pre AS (
+          |  SELECT CAST(ts AS DATE) AS date, event_type, sum(value) AS vs, count(*) AS cn
+          |  FROM events GROUP BY 1, 2),
+          |recomputed AS (
+          |  SELECT date, sum(vs) / sum(cn) AS v_mean2, sum(cn) AS n2
+          |  FROM pre GROUP BY date)
+          |SELECT o.date, o.v_mean, o.n,
+          |  round(abs(o.v_mean - round(r.v_mean2, 6)), 6) AS mean_diff,
+          |  CAST(o.n - r.n2 AS BIGINT) AS n_diff
+          |FROM official o JOIN recomputed r ON o.date = r.date""".stripMargin),
 
     // U2 set-difference shape: (user, day) pairs with clicks but no
     // purchases (left-anti on the composite key).
-    "u2_date_diff" -> ((s, dir) => {
+    Query("u2_date_diff", (s, dir) => {
       def ud(t: String) = Tables.events(s, dir).filter(col("event_type") === t)
         .select(col("user_id"), to_date(col("ts")).as("date")).distinct()
       ud("click").join(ud("purchase"), Seq("user_id", "date"), "left_anti")
         .withColumn("only_in", lit("click"))
-    }),
+    },
+      oracle =
+        """WITH c AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS date FROM events
+          |           WHERE event_type = 'click'),
+          |p AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS date FROM events
+          |      WHERE event_type = 'purchase')
+          |SELECT c.user_id, c.date, 'click' AS only_in
+          |FROM c LEFT JOIN p ON c.user_id = p.user_id AND c.date = p.date
+          |WHERE p.user_id IS NULL""".stripMargin),
 
     // U4: set intersection on a composite key (absent in the reference;
     // free in Spark).
-    "u4_intersect" -> ((s, dir) => {
+    Query("u4_intersect", (s, dir) => {
       def ud(t: String) = Tables.events(s, dir).filter(col("event_type") === t)
         .select(col("user_id"), to_date(col("ts")).as("date"))
       ud("click").intersect(ud("purchase"))
-    }),
+    },
+      oracle =
+        """SELECT user_id, CAST(ts AS DATE) AS date FROM events WHERE event_type = 'click'
+          |INTERSECT
+          |SELECT user_id, CAST(ts AS DATE) AS date FROM events WHERE event_type = 'purchase'""".stripMargin),
 
     // A23: rollup subtotals (absent in the reference; free in Spark).
-    "a23_rollup" -> ((s, dir) =>
+    Query("a23_rollup", (s, dir) =>
       Tables.lineitem(s, dir)
         .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(round(sum("l_quantity"), 2).as("sum_qty"), count(lit(1)).as("n"))),
+        .agg(round(sum("l_quantity"), 2).as("sum_qty"), count(lit(1)).as("n")),
+      oracle =
+        """SELECT l_returnflag, l_linestatus,
+          |  round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
+          |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin),
 
     // Q10: full CUBE grouping sets with grouping_id — every subtotal
     // combination in ONE shuffle (Catalyst expands the grouping sets
     // map-side; no per-granularity rescan of the fact table).
-    "q10_cube" -> ((s, dir) =>
+    Query("q10_cube", (s, dir) =>
       Tables.lineitem(s, dir)
         .cube(col("l_returnflag"), year(col("l_shipdate")).as("ship_year"))
         .agg(grouping_id().cast("long").as("gid"),
@@ -364,388 +698,32 @@ object RelationalQueries {
           round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
             .as("revenue"),
           count(lit(1)).as("n"))
-        .select("l_returnflag", "ship_year", "gid", "sum_qty", "revenue", "n")),
+        .select("l_returnflag", "ship_year", "gid", "sum_qty", "revenue", "n"),
+      oracle =
+        """SELECT l_returnflag,
+          |  CAST(year(CAST(l_shipdate AS DATE)) AS INTEGER) AS ship_year,
+          |  CAST(GROUPING(l_returnflag, year(CAST(l_shipdate AS DATE))) AS BIGINT) AS gid,
+          |  round(sum(l_quantity), 2) AS sum_qty,
+          |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+          |  count(*) AS n
+          |FROM lineitem
+          |GROUP BY CUBE (l_returnflag, year(CAST(l_shipdate AS DATE)))""".stripMargin),
 
     // Scan + selective filter + projection: predicate/projection pushdown
     // showcase (F1/F10).
-    "f10_pushdown_scan" -> ((s, dir) =>
+    Query("f10_pushdown_scan", (s, dir) =>
       Tables.lineitem(s, dir)
         .filter(to_date(col("l_shipdate")).between(lit("1995-01-01").cast("date"),
           lit("1995-12-31").cast("date")) && col("l_discount") > 0.05)
         .groupBy(col("l_returnflag"))
         .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2).as("revenue_effect"),
-          count(lit(1)).as("n"))))
-
-  def oracles: Map[String, String] = Map(
-    "q6_ref_integrity" -> {
-      def edge(name: String, child: String, childKey: String,
-               parent: String, parentKey: String) =
-        s"""SELECT '$name' AS fk_edge,
-          |  (SELECT count(*) FROM $child) AS n_child,
-          |  (SELECT count(*) FROM $child c WHERE NOT EXISTS
-          |    (SELECT 1 FROM $parent p WHERE p.$parentKey = c.$childKey))
-          |    AS n_orphans,
-          |  CAST((SELECT count(*) FROM $child c WHERE NOT EXISTS
-          |    (SELECT 1 FROM $parent p WHERE p.$parentKey = c.$childKey)) = 0
-          |    AS INT) AS ok""".stripMargin
-      Seq(
-        edge("lineitem->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-        edge("orders->customer", "orders", "o_custkey", "customer", "c_custkey"),
-        edge("customer->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-        edge("nation->region", "nation", "n_regionkey", "region", "r_regionkey"))
-        .mkString("\nUNION ALL\n")
-    },
-
-    // q7 twin: the derived corpus tables rebuilt as CTEs (chunking via the
-    // shared t13 twin, exact-dedup keep pointers via the dd1 group-min),
-    // then the same NOT EXISTS orphan arithmetic per edge.
-    "q7_corpus_integrity" -> {
-      def edge(name: String, child: String, childKey: String) =
-        s"""SELECT '$name' AS fk_edge,
-          |  (SELECT count(*) FROM $child) AS n_child,
-          |  (SELECT count(*) FROM $child c WHERE NOT EXISTS
-          |    (SELECT 1 FROM documents p WHERE p.doc_id = c.$childKey))
-          |    AS n_orphans,
-          |  CAST((SELECT count(*) FROM $child c WHERE NOT EXISTS
-          |    (SELECT 1 FROM documents p WHERE p.doc_id = c.$childKey)) = 0
-          |    AS INT) AS ok""".stripMargin
-      val chunksSql =
-        graft.operators.TextAnalysis.chunkDocumentsSql("doc_id", "text", 30, 5)
-      s"""WITH chunks AS (SELECT * FROM ($chunksSql)),
-        |keep AS (
-        |  SELECT min(doc_id) AS keep_id FROM documents GROUP BY sha256(text))
-        |${Seq(
-          edge("chunks->documents", "chunks", "doc_id"),
-          edge("dedup_keep->documents", "keep", "keep_id"),
-          edge("embeddings->documents", "embeddings", "vec_id"))
-          .mkString("\nUNION ALL\n")}""".stripMargin
-    },
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |  round(avg(l_quantity), 6) AS avg_qty,
-        |  round(avg(l_discount), 6) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem WHERE CAST(l_shipdate AS DATE) <= DATE '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q5_region_revenue" ->
-      """SELECT r.r_name,
-        |  round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem l
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |JOIN region r ON n.n_regionkey = r.r_regionkey
-        |GROUP BY r.r_name""".stripMargin,
-
-    "j1_full_outer" ->
-      s"""WITH c AS ($clickDailySql), p AS ($purchaseDailySql)
-        |SELECT COALESCE(c.date, p.date) AS date,
-        |  c.v AS click_v, c.n AS click_n, p.v AS purch_v, p.n AS purch_n
-        |FROM c FULL OUTER JOIN p ON c.date = p.date""".stripMargin,
-
-    "j2_spine_unify" ->
-      s"""WITH c AS ($clickDailySql), p AS ($purchaseDailySql),
-        |e AS (SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS err_v
-        |      FROM events WHERE event_type = 'error' GROUP BY 1),
-        |spine AS (SELECT DISTINCT date FROM (
-        |  SELECT date FROM c UNION ALL SELECT date FROM p UNION ALL SELECT date FROM e))
-        |SELECT s.date, c.v AS click_v, p.v AS purch_v, e.err_v
-        |FROM spine s
-        |LEFT JOIN c ON s.date = c.date
-        |LEFT JOIN p ON s.date = p.date
-        |LEFT JOIN e ON s.date = e.date""".stripMargin,
-
-    "j3_prefer_merge" ->
-      s"""WITH a AS (SELECT date, v, 'click' AS src FROM ($clickDailySql)
-        |           WHERE day(date) % 2 = 1),
-        |b AS (SELECT date, v, 'purchase' AS src FROM ($purchaseDailySql))
-        |SELECT * FROM a
-        |UNION ALL
-        |SELECT b.* FROM b LEFT JOIN a ON b.date = a.date WHERE a.date IS NULL""".stripMargin,
-
-    "j4_union_fuse" ->
-      s"""WITH a AS (SELECT date, v, n AS click_n, NULL::BIGINT AS purch_n
-        |           FROM ($clickDailySql)),
-        |b AS (SELECT date, v, NULL::BIGINT AS click_n, n AS purch_n
-        |      FROM ($purchaseDailySql)),
-        |u AS (SELECT * FROM a UNION ALL SELECT * FROM b)
-        |SELECT date, round(avg(v), 6) AS v_fused,
-        |  CAST(sum(click_n) AS BIGINT) AS click_n_total,
-        |  CAST(sum(purch_n) AS BIGINT) AS purch_n_total, count(*) AS n_sources
-        |FROM u GROUP BY date""".stripMargin,
-
-    "j6_coalesce_merge" ->
-      s"""WITH a AS (SELECT date, v FROM ($clickDailySql) WHERE day(date) % 3 <> 0),
-        |b AS (SELECT date, v FROM ($purchaseDailySql) WHERE day(date) % 2 = 0)
-        |SELECT COALESCE(a.date, b.date) AS date,
-        |  COALESCE(a.v, b.v) AS v,
-        |  CASE WHEN a.v IS NOT NULL THEN 'a' WHEN b.v IS NOT NULL THEN 'b'
-        |       ELSE 'none' END AS source_metric,
-        |  CASE WHEN COALESCE(a.v, b.v) IS NULL THEN 1 ELSE 0 END AS missing_metric
-        |FROM a FULL OUTER JOIN b ON a.date = b.date""".stripMargin,
-
-    "j_anti_customers" ->
-      """SELECT n.n_name, count(*) AS n_customers_no_orders,
-        |  round(sum(c.c_acctbal), 2) AS acctbal_sum
-        |FROM customer c
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-        |  AND CAST(o.o_orderdate AS DATE) >= DATE '2000-01-01')
-        |GROUP BY n.n_name""".stripMargin,
-
-    "j11_unify_domains" ->
-      """WITH
-        |asleep AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(avg(value) / 10.0, 6) AS sleep_hours,
-        |    round(min(value), 6) AS sleep_quality_score
-        |  FROM events WHERE event_type = 'click' GROUP BY 1
-        |  HAVING day(CAST(ts AS DATE)) % 2 = 1),
-        |zsleep AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(avg(value) / 12.0, 6) AS sleep_hours,
-        |    round(min(value), 6) AS sleep_quality_score
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |sleep AS (
-        |  SELECT * FROM asleep UNION ALL
-        |  SELECT z.* FROM zsleep z LEFT JOIN asleep a ON z.date = a.date
-        |  WHERE a.date IS NULL),
-        |acard AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS hr_mean,
-        |    round(min(value), 6) AS hr_min, round(max(value), 6) AS hr_max,
-        |    round(stddev_samp(value), 6) AS hr_std, count(*) AS hr_samples,
-        |    round(avg(value) * 0.5, 6) AS hrv_sdnn_mean, count(*) AS n_hrv_sdnn
-        |  FROM events WHERE event_type = 'error' GROUP BY 1
-        |  HAVING day(CAST(ts AS DATE)) <= 20),
-        |zcard AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS hr_mean,
-        |    round(min(value), 6) AS hr_min, round(max(value), 6) AS hr_max,
-        |    round(stddev_samp(value), 6) AS hr_std, count(*) AS hr_samples
-        |  FROM events WHERE event_type = 'signup' GROUP BY 1),
-        |cardu AS (
-        |  SELECT date, hr_mean, hr_min, hr_max, hr_std, hr_samples FROM acard
-        |  UNION ALL
-        |  SELECT date, hr_mean, hr_min, hr_max, hr_std, hr_samples FROM zcard),
-        |cardhr AS (
-        |  SELECT date, avg(hr_mean) AS hr_mean, avg(hr_min) AS hr_min,
-        |    avg(hr_max) AS hr_max, avg(hr_std) AS hr_std,
-        |    avg(hr_samples) AS hr_samples
-        |  FROM cardu GROUP BY date),
-        |cardio AS (
-        |  SELECT COALESCE(h.date, v.date) AS date, h.hr_mean, h.hr_min, h.hr_max,
-        |    h.hr_std, h.hr_samples, v.hrv_sdnn_mean, NULL::DOUBLE AS hrv_sdnn_median,
-        |    NULL::DOUBLE AS hrv_sdnn_min, NULL::DOUBLE AS hrv_sdnn_max, v.n_hrv_sdnn
-        |  FROM cardhr h FULL OUTER JOIN
-        |    (SELECT date, hrv_sdnn_mean, n_hrv_sdnn FROM acard) v ON h.date = v.date),
-        |aact AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(sum(value), 6) AS total_steps,
-        |    round(sum(value) / 1000.0, 6) AS total_distance,
-        |    round(sum(value) * 2.0, 6) AS total_active_energy
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-        |zact AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(sum(value), 6) AS total_steps,
-        |    round(sum(value) / 1000.0, 6) AS total_distance,
-        |    round(sum(value) * 2.0, 6) AS total_active_energy
-        |  FROM events WHERE event_type = 'click' GROUP BY 1),
-        |actu AS (SELECT * FROM aact UNION ALL SELECT * FROM zact),
-        |activity AS (
-        |  SELECT date, coalesce(sum(total_steps), 0.0) AS total_steps,
-        |    coalesce(sum(total_distance), 0.0) AS total_distance,
-        |    coalesce(sum(total_active_energy), 0.0) AS total_active_energy
-        |  FROM actu GROUP BY date),
-        |meds AS (
-        |  SELECT CAST(ts AS DATE) AS date, 1 AS med_any, count(*) AS med_event_count,
-        |    round(sum(value), 6) AS med_dose_total,
-        |    'apple_autoexport' AS med_vendor
-        |  FROM events WHERE event_type = 'signup' GROUP BY 1
-        |  HAVING day(CAST(ts AS DATE)) % 3 <> 0),
-        |som AS (
-        |  SELECT CAST(ts AS DATE) AS date,
-        |    round(avg(value) / 200.0, 6) AS som_mean_score,
-        |    round(max(value), 6) AS som_last_score, count(*) AS som_n_entries,
-        |    CASE WHEN avg(value) / 200.0 >= 0.25 THEN 1
-        |         WHEN avg(value) / 200.0 <= -0.25 THEN -1 ELSE 0 END
-        |      AS som_category_3class,
-        |    'apple_autoexport' AS som_vendor
-        |  FROM events WHERE event_type = 'view' GROUP BY 1
-        |  HAVING day(CAST(ts AS DATE)) % 4 <> 0),
-        |spine AS (
-        |  SELECT date FROM sleep UNION SELECT date FROM cardio
-        |  UNION SELECT date FROM activity UNION SELECT date FROM meds
-        |  UNION SELECT date FROM som)
-        |SELECT sp.date, sl.sleep_hours, sl.sleep_quality_score,
-        |  c.hr_mean, c.hr_min, c.hr_max, c.hr_std, c.hr_samples,
-        |  c.hrv_sdnn_mean, c.hrv_sdnn_median, c.hrv_sdnn_min, c.hrv_sdnn_max,
-        |  c.n_hrv_sdnn,
-        |  a.total_steps, a.total_distance, a.total_active_energy,
-        |  m.med_any, m.med_event_count, m.med_dose_total, m.med_vendor,
-        |  so.som_mean_score, so.som_last_score, so.som_n_entries,
-        |  so.som_category_3class, so.som_vendor
-        |FROM spine sp
-        |LEFT JOIN sleep sl ON sp.date = sl.date
-        |LEFT JOIN cardio c ON sp.date = c.date
-        |LEFT JOIN activity a ON sp.date = a.date
-        |LEFT JOIN meds m ON sp.date = m.date
-        |LEFT JOIN som so ON sp.date = so.date""".stripMargin,
-
-    "j11_zepp_features" ->
-      """WITH hr AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS zepp_hr_mean
-        |  FROM events WHERE event_type = 'error' GROUP BY 1
-        |  HAVING day(CAST(ts AS DATE)) <= 25),
-        |body0 AS (
-        |  SELECT date_trunc('second', ts) AS t, value / 2 + 50 AS weight,
-        |    value / 10 AS fat_rate
-        |  FROM events
-        |  WHERE event_type = 'purchase' AND day(CAST(ts AS DATE)) % 2 = 0),
-        |body AS (
-        |  SELECT CAST(CASE WHEN CAST(t AS DATE) < DATE '2024-01-15'
-        |      THEN (t AT TIME ZONE 'UTC') AT TIME ZONE 'Europe/Dublin'
-        |      ELSE (t AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York' END
-        |      AS DATE) AS date,
-        |    round(avg(weight), 6) AS zepp_weight_kg,
-        |    round(avg(fat_rate), 6) AS zepp_bodyfat_pct
-        |  FROM body0 GROUP BY 1),
-        |health0 AS (
-        |  SELECT date_trunc('second', ts) AS t, value / 2 AS spo2,
-        |    value / 10 AS stress
-        |  FROM events
-        |  WHERE event_type = 'view' AND day(CAST(ts AS DATE)) % 3 <> 0),
-        |health AS (
-        |  SELECT CAST(CASE WHEN CAST(t AS DATE) < DATE '2024-01-15'
-        |      THEN (t AT TIME ZONE 'UTC') AT TIME ZONE 'Europe/Dublin'
-        |      ELSE (t AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York' END
-        |      AS DATE) AS date,
-        |    round(avg(spo2), 6) AS zepp_spo2_mean,
-        |    round(avg(stress), 6) AS zepp_stress_mean
-        |  FROM health0 GROUP BY 1),
-        |spine AS (
-        |  SELECT date FROM hr UNION SELECT date FROM body
-        |  UNION SELECT date FROM health)
-        |SELECT sp.date, h.zepp_hr_mean, b.zepp_weight_kg, b.zepp_bodyfat_pct,
-        |  he.zepp_spo2_mean, he.zepp_stress_mean
-        |FROM spine sp
-        |LEFT JOIN hr h ON sp.date = h.date
-        |LEFT JOIN body b ON sp.date = b.date
-        |LEFT JOIN health he ON sp.date = he.date""".stripMargin,
-
-    "f7_som_gate" ->
-      """WITH sleep AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(avg(value) / 10.0, 6) AS sleep_hours,
-        |    round(min(value), 6) AS sleep_quality_score
-        |  FROM events WHERE event_type = 'click' GROUP BY 1),
-        |som AS (
-        |  SELECT CAST(ts AS DATE) AS date,
-        |    round(avg(value) / 200.0, 6) AS som_mean_score,
-        |    round(avg(value) / 200.0, 6) AS som_last_score,
-        |    count(*) AS som_n_entries,
-        |    CASE WHEN avg(value) / 200.0 >= 0.52 THEN 1
-        |         WHEN avg(value) / 200.0 <= 0.48 THEN -1 ELSE 0 END
-        |      AS som_category_3class,
-        |    'apple_autoexport' AS som_vendor
-        |  FROM events WHERE event_type = 'view' GROUP BY 1
-        |  HAVING day(CAST(ts AS DATE)) % 4 <> 0),
-        |spine AS (SELECT date FROM sleep UNION SELECT date FROM som),
-        |unified AS (
-        |  SELECT sp.date, sl.sleep_hours, sl.sleep_quality_score,
-        |    so.som_mean_score, so.som_last_score, so.som_n_entries,
-        |    so.som_category_3class, so.som_vendor
-        |  FROM spine sp LEFT JOIN sleep sl ON sp.date = sl.date
-        |  LEFT JOIN som so ON sp.date = so.date)
-        |SELECT date, sleep_hours, sleep_quality_score, som_mean_score,
-        |  som_last_score, som_n_entries, som_category_3class, som_vendor,
-        |  CASE WHEN som_category_3class = -1 THEN 1 ELSE 0 END AS som_binary
-        |FROM unified
-        |WHERE date >= DATE '2024-01-08' AND som_category_3class IS NOT NULL
-        |  AND som_vendor = 'apple_autoexport'""".stripMargin,
-
-    "a21_cross_device" ->
-      """WITH a AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS hr_mean,
-        |    CAST(count(*) AS DOUBLE) AS n
-        |  FROM events GROUP BY 1),
-        |b AS (
-        |  SELECT date,
-        |    round(hr_mean + CASE WHEN day(date) % 3 = 0 THEN 5.0 ELSE 0.001 END, 6)
-        |      AS hr_mean,
-        |    n
-        |  FROM a)
-        |SELECT a.date, a.hr_mean AS a_hr_mean, a.n AS a_n,
-        |  b.hr_mean AS b_hr_mean, b.n AS b_n,
-        |  round(abs(a.hr_mean - b.hr_mean), 6) AS diff_hr_mean,
-        |  CASE WHEN abs(a.hr_mean - b.hr_mean) <= 1.0
-        |         OR abs(a.hr_mean - b.hr_mean)
-        |            / greatest(abs(a.hr_mean), 1e-12) * 100.0 <= 0.5
-        |       THEN 1 ELSE 0 END AS ok_hr_mean,
-        |  round(abs(a.n - b.n), 6) AS diff_n,
-        |  CASE WHEN abs(a.n - b.n) <= 1.0
-        |         OR abs(a.n - b.n) / greatest(abs(a.n), 1e-12) * 100.0 <= 0.5
-        |       THEN 1 ELSE 0 END AS ok_n,
-        |  CASE WHEN (abs(a.hr_mean - b.hr_mean) <= 1.0
-        |         OR abs(a.hr_mean - b.hr_mean)
-        |            / greatest(abs(a.hr_mean), 1e-12) * 100.0 <= 0.5)
-        |        AND (abs(a.n - b.n) <= 1.0
-        |         OR abs(a.n - b.n) / greatest(abs(a.n), 1e-12) * 100.0 <= 0.5)
-        |       THEN 1 ELSE 0 END AS consistent
-        |FROM a JOIN b ON a.date = b.date""".stripMargin,
-
-    "j7_vendor_select" ->
-      s"""SELECT date, v, n, 'apple_autoexport' AS vendor
-        |FROM ($purchaseDailySql)""".stripMargin,
-
-    "j10_qc_consistency" ->
-      """WITH official AS (
-        |  SELECT CAST(ts AS DATE) AS date, round(avg(value), 6) AS v_mean, count(*) AS n
-        |  FROM events GROUP BY 1),
-        |pre AS (
-        |  SELECT CAST(ts AS DATE) AS date, event_type, sum(value) AS vs, count(*) AS cn
-        |  FROM events GROUP BY 1, 2),
-        |recomputed AS (
-        |  SELECT date, sum(vs) / sum(cn) AS v_mean2, sum(cn) AS n2
-        |  FROM pre GROUP BY date)
-        |SELECT o.date, o.v_mean, o.n,
-        |  round(abs(o.v_mean - round(r.v_mean2, 6)), 6) AS mean_diff,
-        |  CAST(o.n - r.n2 AS BIGINT) AS n_diff
-        |FROM official o JOIN recomputed r ON o.date = r.date""".stripMargin,
-
-    "u2_date_diff" ->
-      """WITH c AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS date FROM events
-        |           WHERE event_type = 'click'),
-        |p AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS date FROM events
-        |      WHERE event_type = 'purchase')
-        |SELECT c.user_id, c.date, 'click' AS only_in
-        |FROM c LEFT JOIN p ON c.user_id = p.user_id AND c.date = p.date
-        |WHERE p.user_id IS NULL""".stripMargin,
-
-    "u4_intersect" ->
-      """SELECT user_id, CAST(ts AS DATE) AS date FROM events WHERE event_type = 'click'
-        |INTERSECT
-        |SELECT user_id, CAST(ts AS DATE) AS date FROM events WHERE event_type = 'purchase'""".stripMargin,
-
-    "a23_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q10_cube" ->
-      """SELECT l_returnflag,
-        |  CAST(year(CAST(l_shipdate AS DATE)) AS INTEGER) AS ship_year,
-        |  CAST(GROUPING(l_returnflag, year(CAST(l_shipdate AS DATE))) AS BIGINT) AS gid,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |  count(*) AS n
-        |FROM lineitem
-        |GROUP BY CUBE (l_returnflag, year(CAST(l_shipdate AS DATE)))""".stripMargin,
-
-    "f10_pushdown_scan" ->
-      """SELECT l_returnflag,
-        |  round(sum(l_extendedprice * l_discount), 2) AS revenue_effect,
-        |  count(*) AS n
-        |FROM lineitem
-        |WHERE CAST(l_shipdate AS DATE) BETWEEN DATE '1995-01-01' AND DATE '1995-12-31'
-        |  AND l_discount > 0.05
-        |GROUP BY l_returnflag""".stripMargin)
+          count(lit(1)).as("n")),
+      oracle =
+        """SELECT l_returnflag,
+          |  round(sum(l_extendedprice * l_discount), 2) AS revenue_effect,
+          |  count(*) AS n
+          |FROM lineitem
+          |WHERE CAST(l_shipdate AS DATE) BETWEEN DATE '1995-01-01' AND DATE '1995-12-31'
+          |  AND l_discount > 0.05
+          |GROUP BY l_returnflag""".stripMargin))
 }

@@ -11,8 +11,7 @@ import graft.operators.{Dedup, Similarity, Sketches, TextAnalysis}
   * dedup (exact / MinHash / SimHash / n-gram Jaccard / embedding cosine),
   * similarity search, and text analysis. Hash-based ops use the portable
   * SHA-derived hashes so the DuckDB oracle recomputes them exactly; the
-  * LSH-ANN variant is engine-only (no SQL twin) and gets the driver's
-  * rows-only check.
+  * seeded-KMeans ANN outputs are gated by pinned expected tables.
   */
 object TextQueries {
   private val K = 3 // word-shingle size for near-dup ops
@@ -270,10 +269,13 @@ object TextQueries {
   private val mixtureWeights = Map(
     "en" -> 0.4, "zh" -> 0.2, "es" -> 0.15, "de" -> 0.15, "fr" -> 0.1)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Seq[Query] = Seq(
     // Exact dedup by content hash.
-    "dd1_exact_dedup" -> ((s, dir) =>
-      Dedup.exactDups(Tables.documents(s, dir), "doc_id", "text")),
+    Query("dd1_exact_dedup", (s, dir) =>
+      Dedup.exactDups(Tables.documents(s, dir), "doc_id", "text"),
+      oracle =
+        """SELECT sha256(text) AS text_sha, min(doc_id) AS keep_id, count(*) AS n_copies
+          |FROM documents GROUP BY 1""".stripMargin),
 
     // t25: per-source distinct-trigram diversity via the portable
     // mergeable HyperLogLog (exact-integer registers, SHA-60 hash) —
@@ -281,31 +283,35 @@ object TextQueries {
     // sketches, never by re-scanning: the fixed-size-reduce shape that
     // makes corpus-wide distinct counts free at 100 TB. The exact
     // distinct column is the audit the sketch replaces at scale.
-    "t25_hll_diversity" -> ((s, dir) =>
-      Sketches.hllShingleDiversity(Tables.documents(s, dir), "source", "text", K)),
+    Query("t25_hll_diversity", (s, dir) =>
+      Sketches.hllShingleDiversity(Tables.documents(s, dir), "source", "text", K),
+      oracle = Sketches.hllShingleDiversitySql("documents", "source", "text", K)),
 
     // t26: Count-Min frequency sketch over the trigram stream, probed at
     // the exact top-10 shingles — the bounded-memory frequency oracle for
     // vocabularies too wide to GROUP BY exactly. Width is fixture-sized
     // so the overestimate column shows real collisions.
-    "t26_countmin" -> ((s, dir) =>
-      Sketches.countMinShingles(Tables.documents(s, dir), "text", K, topN = 10)),
+    Query("t26_countmin", (s, dir) =>
+      Sketches.countMinShingles(Tables.documents(s, dir), "text", K, topN = 10),
+      oracle = Sketches.countMinShinglesSql("documents", "text", K, topN = 10)),
 
     // t31: the published Gopher quality-rule audit (Rae et al. 2021
     // table A1 — the rule set Dolma/FineWeb reuse): per-rule boolean
     // flags + overall keep per document, the pass/fail governance frame
     // complementing t2's composite score. Map-only pass; flags derive
     // from round(6) ratios so both engines make identical boundary calls.
-    "t31_gopher_rules" -> ((s, dir) =>
-      TextAnalysis.gopherRules(Tables.documents(s, dir), "doc_id", "text")),
+    Query("t31_gopher_rules", (s, dir) =>
+      TextAnalysis.gopherRules(Tables.documents(s, dir), "doc_id", "text"),
+      oracle = TextAnalysis.gopherRulesSql("doc_id", "text")),
 
     // t32: the published C4 cleaning-rule audit (Raffel et al. 2020
     // §2.2): line-filter statistics + page-level boolean flags + keep per
     // document — the web-corpus companion to t31's Gopher frame. Map-only
     // pass; frac_lines_kept is a round(6) ratio so both engines make
     // identical boundary calls.
-    "t32_c4_rules" -> ((s, dir) =>
-      TextAnalysis.c4Rules(Tables.documents(s, dir), "doc_id", "text")),
+    Query("t32_c4_rules", (s, dir) =>
+      TextAnalysis.c4Rules(Tables.documents(s, dir), "doc_id", "text"),
+      oracle = TextAnalysis.c4RulesSql("doc_id", "text")),
 
     // t30: n-gram novelty — per document the share of its trigram
     // occurrences whose shingle it INTRODUCED to the corpus (first owner
@@ -313,7 +319,7 @@ object TextQueries {
     // high-novelty docs carry new content. One grouped first-owner pass
     // + one equi-join; the curation-side complement of dd5's pairwise
     // verify.
-    "t30_novelty" -> ((s, dir) => {
+    Query("t30_novelty", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val tri = docs.select(col("doc_id"),
         explode(Dedup.shingles(col("text"), K)).as("g"))
@@ -329,14 +335,32 @@ object TextQueries {
           coalesce(col("n_novel"), lit(0L)).as("n_novel"),
           round(col("n_novel").cast("double") / col("n_shingles"), 6)
             .as("novelty"))
-    }),
+    },
+      oracle =
+        s"""WITH tok AS (
+          |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS tk
+          |  FROM documents),
+          |tri AS (
+          |  SELECT doc_id, unnest(${Dedup.shinglesOverTkSql(K)}) AS g FROM tok),
+          |fo AS (SELECT g, min(doc_id) AS first_doc FROM tri GROUP BY 1),
+          |scored AS (
+          |  SELECT t.doc_id, count(*) AS n_shingles,
+          |    CAST(sum(CASE WHEN f.first_doc = t.doc_id THEN 1 ELSE 0 END) AS BIGINT)
+          |      AS n_novel
+          |  FROM tri t JOIN fo f USING (g) GROUP BY 1)
+          |SELECT d.doc_id,
+          |  coalesce(s.n_shingles, 0) AS n_shingles,
+          |  coalesce(s.n_novel, 0) AS n_novel,
+          |  round(CAST(s.n_novel AS DOUBLE) / s.n_shingles, 6) AS novelty
+          |FROM documents d LEFT JOIN scored s USING (doc_id)""".stripMargin),
 
     // t29: pairwise source overlap from the per-source HLL registers
     // alone (inclusion–exclusion over register-max pair unions) — the
     // corpus-free form of t19's exact overlap: after the one register
     // build, everything is bounded by sources² × 1024 rows.
-    "t29_hll_overlap" -> ((s, dir) =>
-      Sketches.hllPairwiseOverlap(Tables.documents(s, dir), "source", "text", K)),
+    Query("t29_hll_overlap", (s, dir) =>
+      Sketches.hllPairwiseOverlap(Tables.documents(s, dir), "source", "text", K),
+      oracle = Sketches.hllPairwiseOverlapSql("documents", "source", "text", K)),
 
     // dd20: corpus snapshot diff — the change-audit between two ingest
     // snapshots (added / removed / changed / unchanged by content SHA,
@@ -344,7 +368,7 @@ object TextQueries {
     // by deterministic rules both engines replay (drop id%7=3, append a
     // revision marker to id%5=1, new ids for id%11=0 copies), standing in
     // for yesterday's vs today's crawl.
-    "dd20_snapshot_diff" -> ((s, dir) => {
+    Query("dd20_snapshot_diff", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val a = docs.select(col("doc_id"), sha2(col("text"), 256).as("sha_a"))
       val bBase = docs.filter(col("doc_id") % 7 =!= 3)
@@ -362,33 +386,91 @@ object TextQueries {
             .when(col("sha_a") =!= col("sha_b"), "changed")
             .otherwise("unchanged").as("status"))
         .groupBy("status").agg(count(lit(1)).as("n"))
-    }),
+    },
+      oracle =
+        """WITH a AS (SELECT doc_id, sha256(text) AS sha_a FROM documents),
+          |b_base AS (
+          |  SELECT doc_id,
+          |    CASE WHEN doc_id % 5 = 1 THEN text || ' rev2' ELSE text END AS text_b
+          |  FROM documents WHERE doc_id % 7 <> 3),
+          |b_new AS (
+          |  SELECT doc_id + 1000000 AS doc_id, text AS text_b
+          |  FROM documents WHERE doc_id % 11 = 0),
+          |b AS (
+          |  SELECT doc_id, sha256(text_b) AS sha_b
+          |  FROM (SELECT * FROM b_base UNION ALL SELECT * FROM b_new)),
+          |d AS (
+          |  SELECT CASE WHEN a.sha_a IS NULL THEN 'added'
+          |              WHEN b.sha_b IS NULL THEN 'removed'
+          |              WHEN a.sha_a <> b.sha_b THEN 'changed'
+          |              ELSE 'unchanged' END AS status
+          |  FROM a FULL OUTER JOIN b USING (doc_id))
+          |SELECT status, count(*) AS n FROM d GROUP BY 1""".stripMargin),
 
     // MinHash signatures (6 portable universal hashes over 3-shingles).
-    "dd2_minhash_sig" -> ((s, dir) =>
-      Dedup.minhashSignature(Tables.documents(s, dir), "doc_id", "text", K, MINHASHES)),
+    Query("dd2_minhash_sig", (s, dir) =>
+      Dedup.minhashSignature(Tables.documents(s, dir), "doc_id", "text", K, MINHASHES),
+      oracle = {
+        val cols = (0 until MINHASHES)
+          .map(i => s"${Dedup.minhashSql(K, i)} AS mh$i").mkString(",\n  ")
+        s"SELECT doc_id,\n  $cols\nFROM ${Dedup.tkSourceSql("text", "doc_id")}"
+      }),
 
     // Banded LSH candidate pairs: bigram minhash, 2 bands x 2 rows —
     // selective (0.02% of all pairs at sf0.1) but nonempty. Eager variant:
     // the signature cache is released deterministically after the band
     // join, so repeated invocations (bench min-of-N) don't accumulate
     // cache entries in the shared JVM.
-    "dd3_lsh_candidates" -> ((s, dir) => {
+    Query("dd3_lsh_candidates", (s, dir) => {
       val sig = Dedup.minhashSignature(Tables.documents(s, dir), "doc_id", "text", 2, 4)
       Dedup.lshCandidatesEager(sig, "doc_id", 4, 2)
-    }),
+    },
+      oracle = {
+        val cols = (0 until 4)
+          .map(i => s"${Dedup.minhashSql(2, i)} AS mh$i").mkString(",\n  ")
+        s"""WITH sig AS (SELECT doc_id,\n  $cols\nFROM ${Dedup.tkSourceSql("text", "doc_id")}),
+          |bands AS (
+          |  SELECT doc_id, CAST(('0x' || substr(sha256(('0_' || mh0 || '_' || mh1)), 1, 15)) AS BIGINT) AS band_key FROM sig
+          |  UNION ALL SELECT doc_id, CAST(('0x' || substr(sha256(('1_' || mh2 || '_' || mh3)), 1, 15)) AS BIGINT) FROM sig)
+          |SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+          |FROM bands l JOIN bands r
+          |  ON l.band_key = r.band_key AND l.doc_id < r.doc_id""".stripMargin
+      }),
 
     // t22: PageRank centrality over the dd3 banded-LSH candidate graph —
     // the corpus-curation hub signal (template/boilerplate clusters rank
     // high). 6 fixed-point rounds at d=0.85; edges materialized once,
     // each round one equi-join + one aggregation.
-    "t22_centrality" -> ((s, dir) => {
+    Query("t22_centrality", (s, dir) => {
       val sig = Dedup.minhashSignature(Tables.documents(s, dir),
         "doc_id", "text", 2, 4)
       val pairs = Dedup.lshCandidatesEager(sig, "doc_id", 4, 2)
       Dedup.pagerankOverPairs(pairs, "id_a", "id_b", damping = 0.85,
         iters = 6)
-    }),
+    },
+      // t22 twin: dd3's candidate CTEs, then the 6 fixed-point rounds
+      // unrolled. All arithmetic forced to DOUBLE (DuckDB parses bare
+      // numeric literals as DECIMAL, whose exact 0.15 differs from the
+      // engine's binary 1.0-0.85) so both engines replay identical IEEE
+      // operations; round(6) absorbs per-node summation order.
+      oracle = {
+        val cols = (0 until 4)
+          .map(i => s"${Dedup.minhashSql(2, i)} AS mh$i").mkString(",\n  ")
+        s"""WITH sig AS (SELECT doc_id,\n  $cols\nFROM ${Dedup.tkSourceSql("text", "doc_id")}),
+          |bands AS (
+          |  SELECT doc_id, CAST(('0x' || substr(sha256(('0_' || mh0 || '_' || mh1)), 1, 15)) AS BIGINT) AS band_key FROM sig
+          |  UNION ALL SELECT doc_id, CAST(('0x' || substr(sha256(('1_' || mh2 || '_' || mh3)), 1, 15)) AS BIGINT) FROM sig),
+          |cand AS (
+          |  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+          |  FROM bands l JOIN bands r
+          |    ON l.band_key = r.band_key AND l.doc_id < r.doc_id),
+          |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM cand
+          |  UNION ALL SELECT id_b, id_a FROM cand),
+          |${pagerankCtes(6)}
+          |SELECT id AS doc_id, CAST(deg AS BIGINT) AS deg,
+          |  round(r, 6) AS centrality
+          |FROM r6""".stripMargin
+      }),
 
     // t22_prod: the same PageRank hub signal over dd21's
     // PRODUCTION-banded verified pairs (16 hashes, 4 bands of 4,
@@ -398,20 +480,33 @@ object TextQueries {
     // by reference: the edge volume is dd21's cluster-shaped output,
     // and each PageRank round stays one equi-join + one aggregation
     // over it.
-    "t22_prod" -> ((s, dir) => {
+    Query("t22_prod", (s, dir) => {
       val pairs = Dedup.lshVerifiedPairs(Tables.documents(s, dir),
         "doc_id", "text", 3, 16, 4, 0.5)
       Dedup.pagerankOverPairs(pairs, "id_a", "id_b", damping = 0.85,
         iters = 6)
-    }),
+    },
+      // t22_prod twin: dd21's production-banded verify chain (vpairs at
+      // J >= 0.5), then the same unrolled PageRank rounds over its
+      // undirected edge expansion.
+      oracle =
+        s"""WITH ${lshVerifiedCtesFor(3, 16, 4, 0.5)},
+          |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM vpairs
+          |  UNION ALL SELECT id_b, id_a FROM vpairs),
+          |${pagerankCtes(6)}
+          |SELECT id AS doc_id, CAST(deg AS BIGINT) AS deg,
+          |  round(r, 6) AS centrality
+          |FROM r6""".stripMargin),
 
     // SimHash (16-bit) signature per document. Two-step: hash tokens once
     // into a column, then fold the 16 bit-aggregates over it.
-    "dd4_simhash" -> ((s, dir) =>
+    Query("dd4_simhash", (s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"), Dedup.hashedTokens(col("text")).as("htk"))
         .select(col("doc_id"),
-          Dedup.simhashOverHashed(col("htk"), 16).as("simhash16"))),
+          Dedup.simhashOverHashed(col("htk"), 16).as("simhash16")),
+      oracle =
+        s"SELECT doc_id, CAST(${Dedup.simhashSql("text", 16)} AS BIGINT) AS simhash16 FROM documents"),
 
     // Exact n-gram Jaccard for pairs blocked by a MinHash band key (bigram
     // shingles). The band key is the scale-safe block: cardinality grows
@@ -420,17 +515,34 @@ object TextQueries {
     // blocks also means the plain blocked shuffle join parallelizes
     // without salting, and the banded operator shares one hashed-shingle
     // pass between the band key and the verify set.
-    "dd5_ngram_jaccard" -> ((s, dir) =>
+    Query("dd5_ngram_jaccard", (s, dir) =>
       Dedup.ngramJaccardPairsBanded(Tables.documents(s, dir),
-        "doc_id", "text", 2, 2, 0.05)),
+        "doc_id", "text", 2, 2, 0.05),
+      oracle = {
+        val shExpr = Dedup.shinglesOverTkSql(2)
+        s"""WITH sets AS (
+          |  SELECT doc_id,
+          |    ${Dedup.minhashBandKeySql(2, 2)} AS block,
+          |    list_distinct(list_transform($shExpr, s -> ${Hashing.sha28Sql("s")})) AS sh
+          |  FROM ${Dedup.tkSourceSql("text", "doc_id")}),
+          |pairs AS (
+          |  SELECT l.doc_id AS id_a, r.doc_id AS id_b,
+          |    round(len(list_intersect(l.sh, r.sh)) /
+          |      CAST(len(l.sh) + len(r.sh) - len(list_intersect(l.sh, r.sh)) AS DOUBLE), 6)
+          |      AS jaccard
+          |  FROM sets l JOIN sets r ON l.block = r.block AND l.doc_id < r.doc_id)
+          |SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.05""".stripMargin
+      }),
 
     // The composed 100-TB near-dup path: MinHash -> banded LSH candidates
     // -> exact Jaccard verification, every stage an equi-join (no
     // broadcast, no cross join). Fused: one shingle+SHA pass feeds both
     // the signature and the verification sets.
-    "dd7_lsh_verified" -> ((s, dir) =>
+    Query("dd7_lsh_verified", (s, dir) =>
       Dedup.lshVerifiedPairs(Tables.documents(s, dir), "doc_id", "text",
-        2, 4, 2, 0.05)),
+        2, 4, 2, 0.05),
+      oracle =
+        s"WITH $lshVerifiedCtes\nSELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.05"),
 
     // dd21: the PRODUCTION banding shape of dd7 — 16 hashes as 4 bands
     // of 4 (trigram shingles, J>=0.5). dd7's 2-rows-per-band knob keeps
@@ -441,9 +553,12 @@ object TextQueries {
     // ~1e-8 per pair on real-text shingle statistics — which is what
     // makes banded LSH near-linear at 100 TB. Same fused one-hash-pass
     // plan as dd7; value-gated through the parametric oracle CTE.
-    "dd21_lsh_prod_bands" -> ((s, dir) =>
+    Query("dd21_lsh_prod_bands", (s, dir) =>
       Dedup.lshVerifiedPairs(Tables.documents(s, dir), "doc_id", "text",
-        3, 16, 4, 0.5)),
+        3, 16, 4, 0.5),
+      oracle =
+        s"""WITH ${lshVerifiedCtesFor(3, 16, 4, 0.5)}
+          |SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.5""".stripMargin),
 
     // dd21's WIDE-banding form — the measured production response to the
     // collision floor the fourth scale surfaced: 128 hashes as 16 bands
@@ -452,29 +567,44 @@ object TextQueries {
     // Random-pair band collisions fall from ~J_floor^4 to ~J_floor^8
     // (~1e-16 on this fixture) — BANDCANDS.json carries the measured
     // candidate contrast per scale, DEEPDOCS.json the wall-ratio one.
-    "dd21_lsh_wide_bands" -> ((s, dir) =>
+    Query("dd21_lsh_wide_bands", (s, dir) =>
       Dedup.lshVerifiedPairs(Tables.documents(s, dir), "doc_id", "text",
-        3, 128, 8, 0.7)),
+        3, 128, 8, 0.7),
+      oracle =
+        s"""WITH ${lshVerifiedCtesFor(3, 128, 8, 0.7)}
+          |SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.7""".stripMargin),
 
     // Near-dup clustering: connected components over the LSH-verified
     // pairs via alternating large-star/small-star contraction (O(log n)
     // rounds of pure equi-shuffles); cluster_id = min member id.
-    "dd8_dup_clusters" -> ((s, dir) =>
+    Query("dd8_dup_clusters", (s, dir) =>
       Dedup.dupClusters(
         Dedup.lshVerifiedPairs(Tables.documents(s, dir), "doc_id", "text",
-          2, 4, 2, 0.05))),
+          2, 4, 2, 0.05)),
+      oracle =
+        s"""WITH RECURSIVE $lshVerifiedCtes,
+          |$componentCtes
+          |SELECT CAST(id AS BIGINT) AS id, CAST(least(id, min(r)) AS BIGINT) AS cluster_id
+          |FROM reach GROUP BY id""".stripMargin),
 
     // The complete corpus-dedup composition: signature -> banded LSH ->
     // exact verify -> connected components -> keep one representative per
     // cluster (plus every unpaired doc). What a user actually runs at
     // 100 TB to produce a deduplicated training corpus.
-    "dd9_dedup_corpus" -> ((s, dir) => {
+    Query("dd9_dedup_corpus", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val clusters = Dedup.dupClusters(
         Dedup.lshVerifiedPairs(docs, "doc_id", "text", 2, 4, 2, 0.05))
       Dedup.keepClusterRepresentatives(docs, "doc_id", clusters)
         .select("doc_id", "lang", "source")
-    }),
+    },
+      oracle =
+        s"""WITH RECURSIVE $lshVerifiedCtes,
+          |$componentCtes,
+          |clusters AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id)
+          |SELECT doc_id, lang, source FROM documents
+          |WHERE doc_id NOT IN (SELECT id FROM clusters WHERE id <> cid)""".stripMargin),
 
     // dd22: the SAME corpus-dedup composition at dd21's production
     // banding (16 hashes as 4 bands of 4, J >= 0.5). dd9's small-
@@ -485,28 +615,49 @@ object TextQueries {
     // what a 100-TB ingest actually runs end-to-end: banded candidates
     // stay ~linear in the true-duplicate mass, and the star-contraction
     // clustering + representative anti-join ride cluster-shaped volumes.
-    "dd22_dedup_corpus_prod" -> ((s, dir) => {
+    Query("dd22_dedup_corpus_prod", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val clusters = Dedup.dupClusters(
         Dedup.lshVerifiedPairs(docs, "doc_id", "text", 3, 16, 4, 0.5))
       Dedup.keepClusterRepresentatives(docs, "doc_id", clusters)
         .select("doc_id", "lang", "source")
-    }),
+    },
+      oracle =
+        s"""WITH RECURSIVE ${lshVerifiedCtesFor(3, 16, 4, 0.5)},
+          |$componentCtes,
+          |clusters AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id)
+          |SELECT doc_id, lang, source FROM documents
+          |WHERE doc_id NOT IN (SELECT id FROM clusters WHERE id <> cid)""".stripMargin),
 
     // Normalized exact dedup (C4-style): case/punctuation/whitespace
     // differences collapse before hashing, so near-exact variants group.
-    "dd12_norm_dedup" -> ((s, dir) =>
+    Query("dd12_norm_dedup", (s, dir) =>
       Dedup.exactDups(
         Tables.documents(s, dir).withColumn("norm_text",
           TextAnalysis.normalizeForDedup(col("text"))),
         "doc_id", "norm_text")
-        .withColumnRenamed("text_sha", "norm_sha")),
+        .withColumnRenamed("text_sha", "norm_sha"),
+      oracle =
+        s"""SELECT sha256(${TextAnalysis.normalizeForDedupSql("text")}) AS norm_sha,
+          |  min(doc_id) AS keep_id, count(*) AS n_copies
+          |FROM documents GROUP BY 1""".stripMargin),
 
     // Embedding-cosine near-dup pairs blocked by label (0.3 ~ the p99 of
     // within-label cosine in the synthetic embeddings — nonempty output).
-    "dd6_embed_dups" -> ((s, dir) =>
+    Query("dd6_embed_dups", (s, dir) =>
       Similarity.cosineDupPairs(Tables.embeddings(s, dir), "vec_id", "embedding",
-        "label", 0.3)),
+        "label", 0.3),
+      oracle =
+        """WITH v AS (
+          |  SELECT label, vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+          |  FROM embeddings)
+          |SELECT l.vec_id AS id_a, r.vec_id AS id_b,
+          |  round(list_inner_product(l.e, r.e) /
+          |    (sqrt(list_inner_product(l.e, l.e)) * sqrt(list_inner_product(r.e, r.e))), 6) AS sim
+          |FROM v l JOIN v r ON l.label = r.label AND l.vec_id < r.vec_id
+          |WHERE round(list_inner_product(l.e, r.e) /
+          |    (sqrt(list_inner_product(l.e, l.e)) * sqrt(list_inner_product(r.e, r.e))), 6) >= 0.3""".stripMargin),
 
     // dd18: blocking-quality eval — banded-LSH candidate/true/found pair
     // counts with precision and recall, on a deterministic SHA-rank
@@ -515,14 +666,48 @@ object TextQueries {
     // ANY corpus size (TakeOrdered top-N, no global sort materialized),
     // so the eval budget is fixed while the banded stages remain the
     // production path. Same (K=2, 2-hash band, τ=0.05) knobs as dd5.
-    "dd18_lsh_quality" -> ((s, dir) => {
+    Query("dd18_lsh_quality", (s, dir) => {
       val sample = Tables.documents(s, dir)
         .select(col("doc_id"), col("text"),
           graft.functions.Hashing.sha28(col("doc_id")).as("__k"))
         .orderBy(col("__k"), col("doc_id")).limit(500)
         .drop("__k")
       Dedup.bandedJaccardQuality(sample, "doc_id", "text", 2, 2, 0.05)
-    }),
+    },
+      oracle = {
+        val shExpr = Dedup.shinglesOverTkSql(2)
+        val sha = graft.functions.Hashing.sha28Sql("CAST(doc_id AS VARCHAR)")
+        s"""WITH d AS (SELECT doc_id, text FROM documents
+          |  ORDER BY $sha, doc_id LIMIT 500),
+          |sets AS (
+          |  SELECT doc_id,
+          |    ${Dedup.minhashBandKeySql(2, 2)} AS block,
+          |    list_distinct(list_transform($shExpr, s -> ${graft.functions.Hashing.sha28Sql("s")})) AS sh
+          |  FROM ${Dedup.tkSourceSqlFrom("d", "text", "doc_id")}),
+          |cand AS (
+          |  SELECT l.doc_id AS a, r.doc_id AS b FROM sets l JOIN sets r
+          |  ON l.block = r.block AND l.doc_id < r.doc_id
+          |  WHERE l.block <> ${graft.functions.Hashing.sha60Sql("'-1_-1'")}),
+          |tru AS (
+          |  SELECT l.doc_id AS a, r.doc_id AS b,
+          |    round(len(list_intersect(l.sh, r.sh)) /
+          |      CAST(len(l.sh) + len(r.sh) - len(list_intersect(l.sh, r.sh)) AS DOUBLE), 6)
+          |      AS j
+          |  FROM sets l JOIN sets r ON l.doc_id < r.doc_id),
+          |truth AS (SELECT a, b FROM tru WHERE j >= 0.05),
+          |found AS (SELECT c.a, c.b FROM cand c JOIN truth t ON c.a = t.a AND c.b = t.b),
+          |n AS (SELECT
+          |  (SELECT count(*) FROM d) AS n_docs,
+          |  (SELECT count(*) FROM cand) AS n_cand,
+          |  (SELECT count(*) FROM truth) AS n_true,
+          |  (SELECT count(*) FROM found) AS n_found)
+          |SELECT n_docs, n_cand, n_true, n_found,
+          |  round(CASE WHEN n_cand > 0 THEN CAST(n_found AS DOUBLE) / n_cand END, 6)
+          |    AS cand_precision,
+          |  round(CASE WHEN n_true > 0 THEN CAST(n_found AS DOUBLE) / n_true END, 6)
+          |    AS recall
+          |FROM n""".stripMargin
+      }),
 
     // t20: asymmetric n-gram containment — quote / doc-in-doc detection
     // on a deterministic SHA-rank sample of 300 docs (same absolute-bound
@@ -530,7 +715,7 @@ object TextQueries {
     // any corpus size; the operator itself takes any blocking column).
     // Single constant block + 32-way salt so the quadratic verify spreads
     // over every core.
-    "t20_containment" -> ((s, dir) => {
+    Query("t20_containment", (s, dir) => {
       val sample = Tables.documents(s, dir)
         .select(col("doc_id"), col("text"),
           graft.functions.Hashing.sha28(col("doc_id")).as("__k"))
@@ -538,52 +723,155 @@ object TextQueries {
         .drop("__k")
       Dedup.containmentPairs(sample.withColumn("__all", lit(0)),
         "doc_id", "text", "__all", K, minContainment = 0.5, saltBuckets = 32)
-    }),
+    },
+      // t20 twin: the dd18 SHA-rank sample, distinct hashed shingle sets,
+      // all pairs (no size prune — containment is maximized by
+      // small-vs-large), both directions rounded BEFORE the greatest()
+      // threshold, exactly as the engine filters.
+      oracle = {
+        val shExpr = Dedup.shinglesOverTkSql(K)
+        val sha = graft.functions.Hashing.sha28Sql("CAST(doc_id AS VARCHAR)")
+        s"""WITH d AS (SELECT doc_id, text FROM documents
+          |  ORDER BY $sha, doc_id LIMIT 300),
+          |sets AS (
+          |  SELECT doc_id,
+          |    list_distinct(list_transform($shExpr, s -> ${graft.functions.Hashing.sha28Sql("s")})) AS sh
+          |  FROM ${Dedup.tkSourceSqlFrom("d", "text", "doc_id")}),
+          |ns AS (SELECT doc_id, sh, len(sh) AS n FROM sets WHERE len(sh) > 0),
+          |pairs AS (
+          |  SELECT l.doc_id AS id_a, r.doc_id AS id_b,
+          |    len(list_intersect(l.sh, r.sh)) AS i, l.n AS na, r.n AS nb
+          |  FROM ns l JOIN ns r ON l.doc_id < r.doc_id),
+          |sc AS (
+          |  SELECT id_a, id_b,
+          |    round(CAST(i AS DOUBLE) / na, 6) AS cont_a_in_b,
+          |    round(CAST(i AS DOUBLE) / nb, 6) AS cont_b_in_a
+          |  FROM pairs)
+          |SELECT id_a, id_b, cont_a_in_b, cont_b_in_a FROM sc
+          |WHERE greatest(cont_a_in_b, cont_b_in_a) >= 0.5""".stripMargin
+      }),
 
     // Brute-force cosine top-5 for the first 20 vectors.
-    "sim1_knn" -> ((s, dir) => {
+    Query("sim1_knn", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.bruteForceTopK(emb.filter(col("vec_id") < 20), emb,
           "vec_id", "embedding", 5)
         .select("query_id", "neighbor_id", "sim", "rk")
-    }),
+    },
+      oracle =
+        """WITH v AS (
+          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+          |  FROM embeddings),
+          |scored AS (
+          |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+          |    round(list_inner_product(q.e, c.e) /
+          |      (sqrt(list_inner_product(q.e, q.e)) * sqrt(list_inner_product(c.e, c.e))), 6) AS sim
+          |  FROM v q JOIN v c ON q.vec_id < 20 AND q.vec_id <> c.vec_id),
+          |ranked AS (
+          |  SELECT query_id, neighbor_id, sim,
+          |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
+          |  FROM scored)
+          |SELECT query_id, neighbor_id, sim, rk FROM ranked WHERE rk <= 5""".stripMargin),
 
     // LSH-bucketed ANN (engine-only; approximate by design). 8 tables x
     // 6 planes: candidates ~12% of the corpus per query at sf0.01.
-    "sim2_ann_lsh" -> ((s, dir) => {
+    Query("sim2_ann_lsh", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.lshTopK(emb.filter(col("vec_id") < 20), emb,
           "vec_id", "embedding", 5, 6, 64, numTables = 8)
         .select("query_id", "neighbor_id", "sim", "rk")
-    }),
+    },
+      // sim2 twin: the hyperplane components are SHA-derived (no RNG
+      // state), so the ENTIRE LSH pipeline — plane matrix, sign-bit
+      // buckets, (table, bucket) candidate equi-join, cosine, rank — is
+      // replayable in DuckDB. Mirrors HyperplaneBucket's edge rules
+      // exactly: NULL vector -> no bucket rows (drops out of the join),
+      // length-mismatched / null-element vector -> bucket 0 of every
+      // table. CAST sums to BIGINT (DuckDB integer sums are HUGEINT).
+      oracle =
+        s"""WITH $hyperplaneBucketCtes,
+          |cand AS (
+          |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
+          |  FROM buckets q JOIN buckets c ON q.t = c.t AND q.b = c.b
+          |  WHERE q.vec_id < 20 AND q.vec_id <> c.vec_id),
+          |scored AS (
+          |  SELECT cand.query_id, cand.neighbor_id,
+          |    round(list_inner_product(qv.e, cv.e) /
+          |      (sqrt(list_inner_product(qv.e, qv.e))
+          |        * sqrt(list_inner_product(cv.e, cv.e))), 6) AS sim
+          |  FROM cand
+          |  JOIN ok qv ON cand.query_id = qv.vec_id
+          |  JOIN ok cv ON cand.neighbor_id = cv.vec_id),
+          |ranked AS (
+          |  SELECT query_id, neighbor_id, sim,
+          |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
+          |  FROM scored)
+          |SELECT query_id, neighbor_id, sim, rk FROM ranked WHERE rk <= 5""".stripMargin),
 
     // sim7: LSH-bucketed cosine range search — ALL corpus pairs above a
     // similarity floor among multi-table hyperplane candidates (sim2's
     // knobs); the embedding analog of banded text near-dup.
-    "sim7_cosine_range" -> ((s, dir) =>
+    Query("sim7_cosine_range", (s, dir) =>
       Similarity.lshCosineRange(Tables.embeddings(s, dir), "vec_id",
-        "embedding", minSim = 0.3, numPlanes = 6, dims = 64, numTables = 8)),
+        "embedding", minSim = 0.3, numPlanes = 6, dims = 64, numTables = 8),
+      // sim7 twin: the shared bucket CTEs, symmetric candidate self-join,
+      // cosine verify, similarity floor.
+      oracle =
+        s"""WITH $hyperplaneBucketCtes,
+          |cand AS (
+          |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+          |  FROM buckets a JOIN buckets b ON a.t = b.t AND a.b = b.b
+          |  WHERE a.vec_id < b.vec_id),
+          |scored AS (
+          |  SELECT cand.id_a, cand.id_b,
+          |    round(list_inner_product(av.e, bv.e) /
+          |      (sqrt(list_inner_product(av.e, av.e))
+          |        * sqrt(list_inner_product(bv.e, bv.e))), 6) AS sim
+          |  FROM cand
+          |  JOIN ok av ON cand.id_a = av.vec_id
+          |  JOIN ok bv ON cand.id_b = bv.vec_id)
+          |SELECT id_a, id_b, sim FROM scored WHERE sim >= 0.3""".stripMargin),
 
     // sim8: exact maximum-inner-product top-5 (recommendation scoring —
     // magnitude matters, cosine is the wrong metric). The scale path is
     // the Neyshabur–Srebro augmentation ([[Similarity.augmentForMips]])
     // which reduces MIPS to cosine LSH; rank equivalence is spec-pinned,
     // the oracle gates the exact form.
-    "sim8_mips" -> ((s, dir) => {
+    Query("sim8_mips", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.mipsTopK(emb.filter(col("vec_id") < 20), emb,
         "vec_id", "embedding", 5)
-    }),
+    },
+      oracle =
+        """WITH v AS (
+          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+          |  FROM embeddings),
+          |scored AS (
+          |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+          |    round(list_inner_product(q.e, c.e), 6) AS ip
+          |  FROM v q JOIN v c ON q.vec_id < 20 AND q.vec_id <> c.vec_id),
+          |ranked AS (
+          |  SELECT query_id, neighbor_id, ip,
+          |    row_number() OVER (PARTITION BY query_id ORDER BY ip DESC, neighbor_id) AS rk
+          |  FROM scored)
+          |SELECT query_id, neighbor_id, ip, rk FROM ranked WHERE rk <= 5""".stripMargin),
 
     // IVF ANN: kmeans coarse quantizer + multi-probe. The seeded fit is
     // deterministic on fixed data, so the output is pinned-expected
     // (rows+schema+hash) since round 7.
-    "sim3_ann_ivf" -> ((s, dir) => {
+    Query("sim3_ann_ivf", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.ivfTopK(emb.filter(col("vec_id") < 20), emb,
           "vec_id", "embedding", 5, numCells = 16, nProbe = 4)
         .select("query_id", "neighbor_id", "sim", "rk")
-    }),
+    },
+      // Pinned: seeded MLlib KMeans on fixed data is run-to-run
+      // deterministic (double-dump diff in tools/pin_expected.py
+      // provenance), so the BUILD path's output is pinnable; the same
+      // holds for sim_recall_build. Re-pin ONLY after a deliberate
+      // quantizer-knob or Spark-version change, and eyeball the recall
+      // diff before committing.
+      oracle = Query.pinned("sim3_ann_ivf", "query_id, neighbor_id, sim, rk")),
 
     // sim3's serving path with a DETERMINISTIC stored quantizer: the
     // vec_id<16 embeddings stand in for 16 fitted centroids, so probe +
@@ -591,33 +879,90 @@ object TextQueries {
     // except the KMeans fit itself — is value-gated by an exact DuckDB
     // twin (the fit stays recall-floor-guarded via sim3_ann_ivf +
     // sim_recall_build and the DriftDedupSpec recall floor).
-    "sim3_assign" -> ((s, dir) => {
+    Query("sim3_assign", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.ivfTopKWithCentroids(emb.filter(col("vec_id") < 20), emb,
           "vec_id", "embedding", 5,
           emb.filter(col("vec_id") < 16), "vec_id", "embedding", nProbe = 4)
         .select("query_id", "neighbor_id", "sim", "rk")
-    }),
+    },
+      // sim3_assign twin: assignment argmin + nProbe probe ranking share
+      // ONE distance CTE (round-6 L2^2 via the inner-product identity —
+      // the sim5-proven arithmetic), ties to the smallest cell on both.
+      oracle =
+        """WITH v AS (
+          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+          |  FROM embeddings),
+          |cent AS (SELECT vec_id AS cell, e AS c FROM v WHERE vec_id < 16),
+          |dist AS (
+          |  SELECT b.vec_id, c.cell,
+          |    round(list_inner_product(b.e, b.e) - 2 * list_inner_product(b.e, c.c)
+          |      + list_inner_product(c.c, c.c), 6) AS d
+          |  FROM v b CROSS JOIN cent c),
+          |assigned AS (
+          |  SELECT vec_id, cell FROM (
+          |    SELECT vec_id, cell,
+          |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+          |    FROM dist) WHERE rn = 1),
+          |probes AS (
+          |  SELECT vec_id AS query_id, cell FROM (
+          |    SELECT vec_id, cell,
+          |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+          |    FROM dist WHERE vec_id < 20) WHERE rn <= 4),
+          |cand AS (
+          |  SELECT p.query_id, a.vec_id AS neighbor_id
+          |  FROM probes p JOIN assigned a ON p.cell = a.cell
+          |  WHERE p.query_id <> a.vec_id),
+          |scored AS (
+          |  SELECT cand.query_id, cand.neighbor_id,
+          |    round(list_inner_product(qv.e, cv.e) /
+          |      (sqrt(list_inner_product(qv.e, qv.e))
+          |        * sqrt(list_inner_product(cv.e, cv.e))), 6) AS sim
+          |  FROM cand
+          |  JOIN v qv ON cand.query_id = qv.vec_id
+          |  JOIN v cv ON cand.neighbor_id = cv.vec_id),
+          |ranked AS (
+          |  SELECT query_id, neighbor_id, sim,
+          |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
+          |  FROM scored)
+          |SELECT query_id, neighbor_id, sim, rk FROM ranked WHERE rk <= 5""".stripMargin),
 
     // Incremental IVF maintenance: the vec_id<8 embeddings act as the
     // stored centroid table (deterministic stand-in for a fitted
     // quantizer), the rest are the ingest batch assigned to cells with
     // no refit, no join, no shuffle. Exact oracle: round-6 L2^2 argmin,
     // ties to the smallest cell.
-    "sim5_ivf_assign" -> ((s, dir) => {
+    Query("sim5_ivf_assign", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.ivfAssign(emb.filter(col("vec_id") >= 8), "vec_id", "embedding",
           emb.filter(col("vec_id") < 8), "vec_id", "embedding")
         .select(col("vec_id"), col("cell"), col("cell_dist"))
-    }),
+    },
+      oracle =
+        """WITH v AS (
+          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+          |  FROM embeddings),
+          |cent AS (SELECT vec_id AS cell, e AS c FROM v WHERE vec_id < 8),
+          |batch AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
+          |scored AS (
+          |  SELECT b.vec_id, c.cell,
+          |    round(list_inner_product(b.e, b.e) - 2 * list_inner_product(b.e, c.c)
+          |      + list_inner_product(c.c, c.c), 6) AS d
+          |  FROM batch b CROSS JOIN cent c),
+          |ranked AS (
+          |  SELECT vec_id, cell, d,
+          |    row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+          |  FROM scored)
+          |SELECT vec_id, cell, d AS cell_dist FROM ranked WHERE rn = 1""".stripMargin),
 
     // sim11: Johnson–Lindenstrauss ±1 random projection (64→16) — the
     // embedding-compression step ahead of ANN: 4× fewer floats through
     // every downstream candidate join, pure per-row arithmetic, with the
     // JL norm-preservation ratio as the built-in audit column.
-    "sim11_random_projection" -> ((s, dir) =>
+    Query("sim11_random_projection", (s, dir) =>
       Similarity.randomProject(Tables.embeddings(s, dir), "vec_id",
-        "embedding", dIn = 64, dOut = 16)),
+        "embedding", dIn = 64, dOut = 16),
+      oracle = Similarity.randomProjectSql(64, 16)),
 
     // sim10: IVF index-health drift — the recluster trigger of a served
     // ANN index: assign the historical population and the new ingest
@@ -626,7 +971,7 @@ object TextQueries {
     // cell whose batch distances outgrow its index-time distances is
     // drifting away from its centroid and flags for recluster. One
     // groupBy over the assignment — no extra shuffle beyond sim5's plan.
-    "sim10_centroid_drift" -> ((s, dir) => {
+    Query("sim10_centroid_drift", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val assigned = Similarity.ivfAssign(emb.filter(col("vec_id") >= 8),
           "vec_id", "embedding",
@@ -645,22 +990,86 @@ object TextQueries {
             col("mean_d_batch") / col("mean_d_index")), 6))
         .withColumn("needs_recluster",
           when(col("dist_ratio") > 1.2, 1).otherwise(0))
-    }),
+    },
+      // sim10 twin: sim5's argmin CTE chain + per-cell aggregation split
+      // by the batch predicate.
+      oracle =
+        """WITH v AS (
+          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+          |  FROM embeddings),
+          |cent AS (SELECT vec_id AS cell, e AS c FROM v WHERE vec_id < 8),
+          |batch AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
+          |scored AS (
+          |  SELECT b.vec_id, c.cell,
+          |    round(list_inner_product(b.e, b.e) - 2 * list_inner_product(b.e, c.c)
+          |      + list_inner_product(c.c, c.c), 6) AS d
+          |  FROM batch b CROSS JOIN cent c),
+          |ranked AS (
+          |  SELECT vec_id, cell, d,
+          |    row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+          |  FROM scored),
+          |assigned AS (
+          |  SELECT vec_id, cell, d AS cell_dist, vec_id % 5 = 0 AS is_batch
+          |  FROM ranked WHERE rn = 1),
+          |per AS (
+          |  SELECT cell,
+          |    CAST(sum(CASE WHEN NOT is_batch THEN 1 ELSE 0 END) AS BIGINT) AS n_index,
+          |    CAST(sum(CASE WHEN is_batch THEN 1 ELSE 0 END) AS BIGINT) AS n_batch,
+          |    round(avg(CASE WHEN NOT is_batch THEN cell_dist END), 6) AS mean_d_index,
+          |    round(avg(CASE WHEN is_batch THEN cell_dist END), 6) AS mean_d_batch
+          |  FROM assigned GROUP BY 1),
+          |r AS (
+          |  SELECT *, round(CASE WHEN mean_d_index > 0
+          |      THEN mean_d_batch / mean_d_index END, 6) AS dist_ratio
+          |  FROM per)
+          |SELECT cell, n_index, n_batch, mean_d_index, mean_d_batch, dist_ratio,
+          |  CASE WHEN dist_ratio > 1.2 THEN 1 ELSE 0 END AS needs_recluster
+          |FROM r""".stripMargin),
 
     // SemDeDup-style semantic dedup: quantizer-cell assignment (vec_id<8
     // stored centroids, the sim5 fixture), within-cell cosine pairs >=
     // 0.3, components, min-id representative per component. One row per
     // semantically-surviving vector.
-    "dd16_semantic_dedup" -> ((s, dir) => {
+    Query("dd16_semantic_dedup", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.semanticDedup(emb, "vec_id", "embedding",
         emb.filter(col("vec_id") < 8), "vec_id", "embedding", 0.3)
-    }),
+    },
+      // dd16 twin: sim5's argmin-assignment CTEs over ALL vectors, dd6's
+      // within-block cosine pair shape blocked by the assigned cell, the
+      // shared recursive component CTEs, dd9's min-id representative tail.
+      oracle =
+        s"""WITH RECURSIVE v AS (
+          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+          |  FROM embeddings),
+          |cent AS (SELECT vec_id AS cell, e AS c FROM v WHERE vec_id < 8),
+          |scored AS (
+          |  SELECT b.vec_id, c.cell,
+          |    round(list_inner_product(b.e, b.e) - 2 * list_inner_product(b.e, c.c)
+          |      + list_inner_product(c.c, c.c), 6) AS d
+          |  FROM v b CROSS JOIN cent c),
+          |assigned AS (
+          |  SELECT vec_id, cell, d AS cell_dist FROM (
+          |    SELECT vec_id, cell, d,
+          |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+          |    FROM scored)
+          |  WHERE rn = 1),
+          |pv AS (SELECT a.vec_id, a.cell, v.e FROM assigned a JOIN v USING (vec_id)),
+          |vpairs AS (
+          |  SELECT l.vec_id AS id_a, r.vec_id AS id_b
+          |  FROM pv l JOIN pv r ON l.cell = r.cell AND l.vec_id < r.vec_id
+          |  WHERE round(list_inner_product(l.e, r.e) /
+          |    (sqrt(list_inner_product(l.e, l.e)) * sqrt(list_inner_product(r.e, r.e))), 6) >= 0.3),
+          |$componentCtes,
+          |clusters AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id)
+          |SELECT vec_id, cell, cell_dist FROM assigned
+          |WHERE vec_id NOT IN (SELECT id FROM clusters WHERE id <> cid)""".stripMargin),
 
     // int8 embedding quantization + reconstruction-quality audit (the
     // 4x-memory ANN storage path). Emits the scale, the first 4 quantized
     // components, and the original-vs-dequantized cosine.
-    "sim4_quantize" -> ((s, dir) =>
+    Query("sim4_quantize", (s, dir) =>
       Similarity.quantizeInt8(Tables.embeddings(s, dir), "vec_id", "embedding")
         .select(col("vec_id"),
           round(col("scale"), 6).as("scale6"),
@@ -669,46 +1078,184 @@ object TextQueries {
           element_at(col("qvec"), 2).as("q1"),
           element_at(col("qvec"), 3).as("q2"),
           element_at(col("qvec"), 4).as("q3"),
-          col("recon_cos"))),
+          col("recon_cos")),
+      oracle =
+        """WITH v AS (
+          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+          |  FROM embeddings),
+          |s AS (
+          |  SELECT vec_id, e,
+          |    CASE WHEN m = 0 THEN 1.0 ELSE m / 127.0 END AS scale
+          |  FROM (SELECT vec_id, e,
+          |    list_max(list_transform(e, x -> abs(x))) AS m FROM v)),
+          |q AS (
+          |  SELECT vec_id, e, scale,
+          |    list_transform(e, x ->
+          |      CAST(sign(x) * floor(abs(x) / scale + 0.5) AS INT)) AS qv
+          |  FROM s),
+          |d AS (
+          |  SELECT vec_id, e, scale, qv,
+          |    list_transform(qv, qi -> qi * scale) AS deq
+          |  FROM q)
+          |SELECT vec_id, round(scale, 6) AS scale6,
+          |  CAST(len(qv) AS BIGINT) AS n_dims,
+          |  qv[1] AS q0, qv[2] AS q1, qv[3] AS q2, qv[4] AS q3,
+          |  round(list_inner_product(e, deq) /
+          |    (sqrt(list_inner_product(e, e)) * sqrt(list_inner_product(deq, deq))), 6)
+          |    AS recon_cos
+          |FROM d""".stripMargin),
 
     // Product quantization (sim6): the vec_id<16 embeddings stand in for
     // a stored 16-code codebook sliced into 4 subspaces of 16 dims; every
     // vector encodes to 4 codes via per-subspace round-6 L2^2 argmin plus
     // the summed quantization error. Zero-shuffle literal evaluation
     // (sim5 plan shape), exact DuckDB twin.
-    "sim6_pq_encode" -> ((s, dir) => {
+    Query("sim6_pq_encode", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.pqEncode(emb, "vec_id", "embedding",
         emb.filter(col("vec_id") < 16), "vec_id", "embedding",
         numSubspaces = 4)
-    }),
+    },
+      // sim6 twins: the per-(vector, subspace, code) distance CTE is the
+      // sim5 round-6 L2^2 arithmetic on list SLICES; encode = argmin per
+      // (vector, subspace) with ties to the smallest code.
+      oracle =
+        """WITH v AS (
+          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+          |  FROM embeddings),
+          |cb AS (SELECT vec_id AS code, e AS c FROM v WHERE vec_id < 16),
+          |sub AS (SELECT unnest(range(4)) AS m),
+          |d AS (
+          |  SELECT b.vec_id, s.m, c.code,
+          |    round(list_inner_product(b.e[s.m*16+1 : s.m*16+16], b.e[s.m*16+1 : s.m*16+16])
+          |      - 2 * list_inner_product(b.e[s.m*16+1 : s.m*16+16], c.c[s.m*16+1 : s.m*16+16])
+          |      + list_inner_product(c.c[s.m*16+1 : s.m*16+16], c.c[s.m*16+1 : s.m*16+16]), 6) AS d
+          |  FROM v b CROSS JOIN cb c CROSS JOIN sub s),
+          |enc AS (
+          |  SELECT vec_id, m, code, d FROM (
+          |    SELECT vec_id, m, code, d,
+          |      row_number() OVER (PARTITION BY vec_id, m ORDER BY d, code) AS rn
+          |    FROM d) WHERE rn = 1)
+          |SELECT vec_id,
+          |  max(CASE WHEN m = 0 THEN code END) AS code_0,
+          |  max(CASE WHEN m = 1 THEN code END) AS code_1,
+          |  max(CASE WHEN m = 2 THEN code END) AS code_2,
+          |  max(CASE WHEN m = 3 THEN code END) AS code_3,
+          |  round(sum(d), 6) AS recon_l2
+          |FROM enc GROUP BY vec_id""".stripMargin),
 
     // ADC top-k over the PQ codes (sim6 serving): per-query distance
     // tables against the codebook, corpus items scored by 4 table lookups
     // at their codes — the classic PQ scan; queries bounded (vec_id<20)
     // like sim1's brute-force contract, IVFADC composition documented for
     // corpus scale.
-    "sim6_pq_adc" -> ((s, dir) => {
+    Query("sim6_pq_adc", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.pqTopK(emb.filter(col("vec_id") < 20), emb,
         "vec_id", "embedding", 5,
         emb.filter(col("vec_id") < 16), "vec_id", "embedding",
         numSubspaces = 4)
-    }),
+    },
+      // ADC: corpus codes from the encode CTEs, query distance tables from
+      // the same distance CTE restricted to query ids, approximate
+      // distance = sum of the per-subspace table entries at the corpus
+      // item's codes.
+      oracle =
+        """WITH v AS (
+          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+          |  FROM embeddings),
+          |cb AS (SELECT vec_id AS code, e AS c FROM v WHERE vec_id < 16),
+          |sub AS (SELECT unnest(range(4)) AS m),
+          |d AS (
+          |  SELECT b.vec_id, s.m, c.code,
+          |    round(list_inner_product(b.e[s.m*16+1 : s.m*16+16], b.e[s.m*16+1 : s.m*16+16])
+          |      - 2 * list_inner_product(b.e[s.m*16+1 : s.m*16+16], c.c[s.m*16+1 : s.m*16+16])
+          |      + list_inner_product(c.c[s.m*16+1 : s.m*16+16], c.c[s.m*16+1 : s.m*16+16]), 6) AS d
+          |  FROM v b CROSS JOIN cb c CROSS JOIN sub s),
+          |enc AS (
+          |  SELECT vec_id, m, code FROM (
+          |    SELECT vec_id, m, code,
+          |      row_number() OVER (PARTITION BY vec_id, m ORDER BY d, code) AS rn
+          |    FROM d) WHERE rn = 1),
+          |scored AS (
+          |  SELECT q.vec_id AS query_id, enc.vec_id AS neighbor_id,
+          |    round(sum(q.d), 6) AS adist
+          |  FROM enc JOIN (SELECT * FROM d WHERE vec_id < 20) q
+          |    ON enc.m = q.m AND enc.code = q.code
+          |  WHERE q.vec_id <> enc.vec_id
+          |  GROUP BY 1, 2),
+          |ranked AS (
+          |  SELECT query_id, neighbor_id, adist,
+          |    row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rk
+          |  FROM scored)
+          |SELECT query_id, neighbor_id, adist, CAST(rk AS BIGINT) AS rk
+          |FROM ranked WHERE rk <= 5""".stripMargin),
 
     // sim9: the IVFADC composition itself as a gated query — coarse
     // cells route each query to nProbe=2 of the 8 stored cells, ADC
     // scores only those cells' PQ codes (sim6's codebook). The
     // production FAISS IndexIVFPQ serving shape, deterministic
     // end-to-end.
-    "sim9_ivfadc" -> ((s, dir) => {
+    Query("sim9_ivfadc", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.ivfAdcTopK(emb.filter(col("vec_id") < 20), emb,
         "vec_id", "embedding", 5,
         emb.filter(col("vec_id") < 8), "vec_id", "embedding",
         emb.filter(col("vec_id") < 16), "vec_id", "embedding",
         numSubspaces = 4, nProbe = 2)
-    }),
+    },
+      // sim9 twin: sim5's cell CTE over the whole corpus + a probe CTE
+      // (rn <= nProbe of the same distance frame restricted to query
+      // ids) gate sim6's ADC scan to probed cells only.
+      oracle =
+        """WITH v AS (
+          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+          |  FROM embeddings),
+          |cent AS (SELECT vec_id AS cell, e AS c FROM v WHERE vec_id < 8),
+          |cb AS (SELECT vec_id AS code, e AS c FROM v WHERE vec_id < 16),
+          |sub AS (SELECT unnest(range(4)) AS m),
+          |cd AS (
+          |  SELECT b.vec_id, c.cell,
+          |    round(list_inner_product(b.e, b.e) - 2 * list_inner_product(b.e, c.c)
+          |      + list_inner_product(c.c, c.c), 6) AS d
+          |  FROM v b CROSS JOIN cent c),
+          |cells AS (
+          |  SELECT vec_id, cell FROM (
+          |    SELECT vec_id, cell,
+          |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+          |    FROM cd) WHERE rn = 1),
+          |probes AS (
+          |  SELECT vec_id AS query_id, cell FROM (
+          |    SELECT vec_id, cell,
+          |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+          |    FROM cd WHERE vec_id < 20) WHERE rn <= 2),
+          |pd AS (
+          |  SELECT b.vec_id, s.m, c.code,
+          |    round(list_inner_product(b.e[s.m*16+1 : s.m*16+16], b.e[s.m*16+1 : s.m*16+16])
+          |      - 2 * list_inner_product(b.e[s.m*16+1 : s.m*16+16], c.c[s.m*16+1 : s.m*16+16])
+          |      + list_inner_product(c.c[s.m*16+1 : s.m*16+16], c.c[s.m*16+1 : s.m*16+16]), 6) AS d
+          |  FROM v b CROSS JOIN cb c CROSS JOIN sub s),
+          |enc AS (
+          |  SELECT vec_id, m, code FROM (
+          |    SELECT vec_id, m, code,
+          |      row_number() OVER (PARTITION BY vec_id, m ORDER BY d, code) AS rn
+          |    FROM pd) WHERE rn = 1),
+          |scored AS (
+          |  SELECT q.vec_id AS query_id, enc.vec_id AS neighbor_id,
+          |    round(sum(q.d), 6) AS adist
+          |  FROM enc
+          |  JOIN cells ce ON ce.vec_id = enc.vec_id
+          |  JOIN probes p ON p.cell = ce.cell
+          |  JOIN (SELECT * FROM pd WHERE vec_id < 20) q
+          |    ON q.vec_id = p.query_id AND enc.m = q.m AND enc.code = q.code
+          |  WHERE q.vec_id <> enc.vec_id
+          |  GROUP BY 1, 2),
+          |ranked AS (
+          |  SELECT query_id, neighbor_id, adist,
+          |    row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rk
+          |  FROM scored)
+          |SELECT query_id, neighbor_id, adist, CAST(rk AS BIGINT) AS rk
+          |FROM ranked WHERE rk <= 5""".stripMargin),
 
     // Recall-at-k of both ANN SERVING paths vs the exact baseline, as a
     // first-class artifact row. Both arms are deterministic — the LSH arm
@@ -716,7 +1263,7 @@ object TextQueries {
     // stored-centroid serving path — so the whole frame is gated by a
     // pinned-expected oracle (tools/pin_expected.py, same pattern as
     // d1_adwin/s5): rows+schema+hash, not rows-only.
-    "sim_recall" -> ((s, dir) => {
+    Query("sim_recall", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 20)
       val exact = Similarity.bruteForceTopK(qs, emb, "vec_id", "embedding", 5)
@@ -726,7 +1273,11 @@ object TextQueries {
         "ann_ivf" -> Similarity.ivfTopKWithCentroids(qs, emb, "vec_id",
           "embedding", 5, emb.filter(col("vec_id") < 16), "vec_id", "embedding",
           nProbe = 4)))
-    }),
+    },
+      // Pinned: both arms (SHA-derived LSH, stored-centroid IVF serving)
+      // are deterministic, so the whole summary is a rows+schema+hash
+      // regression gate.
+      oracle = Query.pinned("sim_recall", "method, n_queries, mean_recall")),
 
     // Recall of the production KMeans IVF BUILD path (sim3_ann_ivf) vs
     // the exact baseline. Seeded KMeans on fixed data is run-to-run
@@ -734,31 +1285,48 @@ object TextQueries {
     // pinned-expected oracle like sim_recall — a KMeans-build quality
     // regression now fails the hash gate, not just DriftDedupSpec's
     // synthetic 0.8 floor.
-    "sim_recall_build" -> ((s, dir) => {
+    Query("sim_recall_build", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 20)
       val exact = Similarity.bruteForceTopK(qs, emb, "vec_id", "embedding", 5)
       Similarity.recallSummary(exact, Seq(
         "ann_ivf_build" -> Similarity.ivfTopK(qs, emb, "vec_id", "embedding", 5,
           numCells = 16, nProbe = 4)))
-    }),
+    },
+      oracle = Query.pinned("sim_recall_build", "method, n_queries, mean_recall")),
 
     // Language-ID heuristic.
-    "t1_langid" -> ((s, dir) =>
+    Query("t1_langid", (s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"),
-          TextAnalysis.langId(col("text")).as("pred_lang"))),
+          TextAnalysis.langId(col("text")).as("pred_lang")),
+      oracle =
+        s"SELECT doc_id, lang, ${TextAnalysis.langIdSql("text")} AS pred_lang FROM documents"),
 
     // Quality scoring.
-    "t2_quality" -> ((s, dir) =>
+    Query("t2_quality", (s, dir) =>
       TextAnalysis.qualityColumns(Tables.documents(s, dir), "text")
         .select("doc_id", "n_words", "mean_word_len", "punct_ratio",
-          "stopword_ratio", "quality_score")),
+          "stopword_ratio", "quality_score"),
+      oracle = {
+        val q = TextAnalysis.qualitySql("text")
+        s"""SELECT doc_id, ${q("n_words")} AS n_words,
+          |  ${q("mean_word_len")} AS mean_word_len,
+          |  ${q("punct_ratio")} AS punct_ratio,
+          |  ${q("stopword_ratio")} AS stopword_ratio,
+          |  ${q("quality_score")} AS quality_score
+          |FROM documents""".stripMargin
+      }),
 
     // Token counting (whitespace + BPE-ish regex).
-    "t3_token_counts" -> ((s, dir) =>
+    Query("t3_token_counts", (s, dir) =>
       TextAnalysis.tokenCounts(Tables.documents(s, dir), "text")
-        .select("doc_id", "ws_tokens", "re_tokens")),
+        .select("doc_id", "ws_tokens", "re_tokens"),
+      oracle =
+        s"""SELECT doc_id,
+          |  len(string_split_regex(lower(text), '\\s+')) AS ws_tokens,
+          |  len(regexp_extract_all(text, '${TextAnalysis.tokenRegex}')) AS re_tokens
+          |FROM documents""".stripMargin),
 
     // t18: Zipf-law corpus statistics — log-log regression of frequency
     // on rank over the top-100 tokens (TakeOrdered: no global sort
@@ -766,7 +1334,7 @@ object TextQueries {
     // plus corpus vocab/token totals. A healthy natural-language corpus
     // shows slope ≈ -1; word-salad or boilerplate-heavy corpora drift —
     // the corpus-level health check next to t10's per-doc repetition.
-    "t18_zipf" -> ((s, dir) => {
+    Query("t18_zipf", (s, dir) => {
       val toks = Tables.documents(s, dir)
         .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
         .filter(length(col("tok")) > 0)
@@ -782,25 +1350,63 @@ object TextQueries {
         round(regr_slope(log(col("n")), log(col("rank"))), 6).as("zipf_slope"),
         round(regr_r2(log(col("n")), log(col("rank"))), 6).as("zipf_r2"))
       reg.crossJoin(broadcast(totals))
-    }),
+    },
+      oracle =
+        """WITH toks AS (
+          |  SELECT unnest(string_split_regex(lower(text), '\s+')) AS tok
+          |  FROM documents),
+          |counts AS (
+          |  SELECT tok, count(*) AS n FROM toks WHERE len(tok) > 0 GROUP BY tok),
+          |totals AS (
+          |  SELECT count(*) AS vocab_size, CAST(sum(n) AS BIGINT) AS total_tokens
+          |  FROM counts),
+          |top AS (
+          |  SELECT tok, n FROM counts ORDER BY n DESC, tok LIMIT 100),
+          |ranked AS (
+          |  SELECT n, row_number() OVER (ORDER BY n DESC, tok) AS rank FROM top),
+          |reg AS (
+          |  SELECT count(*) AS n_top,
+          |    round(regr_slope(ln(n), ln(rank)), 6) AS zipf_slope,
+          |    round(regr_r2(ln(n), ln(rank)), 6) AS zipf_r2
+          |  FROM ranked)
+          |SELECT n_top, zipf_slope, zipf_r2, vocab_size, total_tokens
+          |FROM reg, totals""".stripMargin),
 
     // t19: cross-source contamination matrix — for every source pair,
     // the count of shared distinct 3-shingle hashes and the overlap
     // coefficient |A∩B| / min(|A|,|B|). The join key is the shingle hash
     // (cardinality grows with the corpus — bounded pairs per key by the
     // source count), output bounded by sources².
-    "t19_source_overlap" -> ((s, dir) =>
-      TextAnalysis.sourceOverlap(Tables.documents(s, dir), "source", "text", 3)),
+    Query("t19_source_overlap", (s, dir) =>
+      TextAnalysis.sourceOverlap(Tables.documents(s, dir), "source", "text", 3),
+      oracle = {
+        val shExpr = Dedup.shinglesOverTkSql(3)
+        s"""WITH base AS (
+          |  SELECT source, unnest($shExpr) AS sg
+          |  FROM ${Dedup.tkSourceSql("text", "source")}),
+          |sh AS (SELECT DISTINCT source, ${graft.functions.Hashing.sha28Sql("sg")} AS h FROM base),
+          |per AS (SELECT source, count(*) AS n FROM sh GROUP BY 1),
+          |p AS (
+          |  SELECT a.source AS src_a, b.source AS src_b, count(*) AS n_shared
+          |  FROM sh a JOIN sh b ON a.h = b.h AND a.source < b.source
+          |  GROUP BY 1, 2)
+          |SELECT src_a, src_b, n_shared, pa.n AS n_a, pb.n AS n_b,
+          |  round(CAST(n_shared AS DOUBLE) / least(pa.n, pb.n), 6) AS overlap
+          |FROM p
+          |JOIN per pa ON p.src_a = pa.source
+          |JOIN per pb ON p.src_b = pb.source""".stripMargin
+      }),
 
     // Rolling-hash document fingerprint.
-    "t4_fingerprint" -> ((s, dir) =>
+    Query("t4_fingerprint", (s, dir) =>
       Tables.documents(s, dir)
-        .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))),
+        .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp")),
+      oracle = s"SELECT doc_id, ${TextAnalysis.fingerprintSql("text")} AS fp FROM documents"),
 
     // Multimodal: binary-payload plumbing — documents' UTF-8 bytes as
     // opaque payloads, stub-decoded (mapPartitions batch shape) into
     // 4-dim byte-fold features + payload length/sha accounting.
-    "mm1_features" -> ((s, dir) => {
+    Query("mm1_features", (s, dir) => {
       // ASCII-sanitize first: the DuckDB twin folds codepoints via
       // ord(substr(...)), which equals UTF-8 bytes only for ASCII — strip
       // anything else on BOTH sides so the contract survives non-ASCII
@@ -818,13 +1424,31 @@ object TextQueries {
           element_at(col("features"), 2).cast("double").as("f1"),
           element_at(col("features"), 3).cast("double").as("f2"),
           element_at(col("features"), 4).cast("double").as("f3"))
-    }),
+    },
+      oracle = {
+        def fold(j: Int) =
+          s"""CAST(list_sum(list_transform(range(1, length(t) + 1),
+             |    i -> CASE WHEN (i - 1) % 4 = $j THEN ord(substr(t, i, 1))
+             |              ELSE 0 END)) AS DOUBLE) AS f$j""".stripMargin
+        s"""WITH src AS (
+           |  SELECT doc_id, regexp_replace(text, '[^\\x00-\\x7F]', '', 'g') AS t
+           |  FROM documents)
+           |SELECT doc_id,
+           |  CAST(octet_length(CAST(t AS BLOB)) AS BIGINT) AS payload_len,
+           |  substr(sha256(t), 1, 16) AS sha16,
+           |  ${fold(0)},
+           |  ${fold(1)},
+           |  ${fold(2)},
+           |  ${fold(3)}
+           |FROM src""".stripMargin
+      }),
 
     // SimHash near-dup pairs: 16-bit signature, 4 bit-slice bands
     // (pigeonhole-complete for hamming <= 2), exact bit_count verify.
     // AUDIT FORM: quadratic in cluster size — dd14 is the scale surface.
-    "dd10_simhash_dups" -> ((s, dir) =>
-      Dedup.simhashPairs(Tables.documents(s, dir), "doc_id", "text", 16, 4, 2)),
+    Query("dd10_simhash_dups", (s, dir) =>
+      Dedup.simhashPairs(Tables.documents(s, dir), "doc_id", "text", 16, 4, 2),
+      oracle = Dedup.simhashPairsSql(16, 4, 2)),
 
     // The scale-default SimHash consumption (dd10's doc-level pairs are
     // never materialized): connected components on the distinct-signature
@@ -834,12 +1458,28 @@ object TextQueries {
     // quadratic (an m-member same-sig cluster is one sig node, not m²
     // pairs). Oracle stays the doc-level recursive-CTE formulation:
     // identical partitions, so identical survivors.
-    "dd14_simhash_corpus" -> ((s, dir) => {
+    Query("dd14_simhash_corpus", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val q = TextAnalysis.qualityColumns(docs, "text")
       Dedup.simhashClusters(q, "doc_id", "text", 16, 4, 2, col("quality_score"))
         .select("doc_id", "lang", "source", "quality_score")
-    }),
+    },
+      // dd14 twin: dd10's pair CTEs -> the shared recursive component
+      // CTEs -> dd11's quality-best representative tail.
+      oracle =
+        s"""WITH RECURSIVE ${Dedup.simhashPairsCtes(16, 4, 2)},
+          |$componentCtes,
+          |clusters AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
+          |q AS (SELECT doc_id, lang, source,
+          |  ${TextAnalysis.qualitySql("text")("quality_score")} AS quality_score
+          |  FROM documents),
+          |a AS (SELECT q.*, coalesce(c.cid, q.doc_id) AS cluster_key
+          |  FROM q LEFT JOIN clusters c ON q.doc_id = c.id),
+          |ranked AS (SELECT *, row_number() OVER (PARTITION BY cluster_key
+          |    ORDER BY quality_score DESC, doc_id) AS rk FROM a)
+          |SELECT doc_id, lang, source, quality_score
+          |FROM ranked WHERE rk = 1""".stripMargin),
 
     // Multimodal REAL decode: each document gets a genuine PNG or JPEG
     // payload (encoded executor-side through the JDK's ImageIO codec at
@@ -848,7 +1488,7 @@ object TextQueries {
     // the same mapPartitions batch shape as mm1. The oracle recomputes
     // the decoded columns from the dimension formulas — so a codec bug,
     // offset slip, or endianness mistake hash-diverges.
-    "mm2_decode" -> ((s, dir) => {
+    Query("mm2_decode", (s, dir) => {
       import graft.multimodal.Multimodal
       val media = Tables.documents(s, dir).select(col("doc_id"))
         .repartition(s.sparkContext.defaultParallelism)
@@ -869,7 +1509,17 @@ object TextQueries {
       Multimodal.decodeHeaders(withPayload, "payload")
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("channels"))
-    }),
+    },
+      // The decoded header columns are pure functions of doc_id (the
+      // Spark side round-trips them through a REAL ImageIO encode + byte
+      // parse; both encoders emit 3-component color for TYPE_INT_RGB).
+      oracle =
+        """SELECT doc_id,
+          |  CASE WHEN doc_id % 3 = 0 THEN 'jpeg' ELSE 'png' END AS format,
+          |  CAST(doc_id % 13 + 1 AS INTEGER) AS width,
+          |  CAST(doc_id % 7 + 1 AS INTEGER) AS height,
+          |  CAST(3 AS INTEGER) AS channels
+          |FROM documents""".stripMargin),
 
     // Multimodal REAL pixel decode: PNG payloads (lossless — the decoded
     // raster round-trips the generator's pixel formula exactly), decoded
@@ -878,7 +1528,7 @@ object TextQueries {
     // the pixel formula — no codec — so a decode bug, pooling-bounds slip
     // or luma-weight drift hash-diverges. (JPEG stays header-only in mm2:
     // lossy rasters aren't SQL-recomputable.)
-    "mm3_pixels" -> ((s, dir) => {
+    Query("mm3_pixels", (s, dir) => {
       import graft.multimodal.Multimodal
       val media = Tables.documents(s, dir).select(col("doc_id"))
         .repartition(s.sparkContext.defaultParallelism)
@@ -902,7 +1552,50 @@ object TextQueries {
           round(element_at(col("gray_thumb"), 28), 6).as("t33"),
           round(element_at(col("gray_thumb"), 57), 6).as("t70"),
           round(element_at(col("gray_thumb"), 64), 6).as("t77"))
-    }),
+    },
+      // mm3 twin: PNG is lossless, so the decoded raster equals the
+      // generator formula pixel (x,y) = (doc_id*31 + 7x + 13y) & 0xffffff
+      // — the five checked thumbnail cells are recomputed from that
+      // formula with the engine's exact pooling bounds (integer division,
+      // >= 1 pixel per cell) and integer luma sum; the final
+      // sum/(1000·n) division is the only float op, identical operands on
+      // both sides.
+      oracle =
+        """WITH p AS (
+          |  SELECT doc_id, doc_id % 13 + 1 AS w, doc_id % 7 + 1 AS h
+          |  FROM documents),
+          |cells AS (
+          |  SELECT * FROM (VALUES (0, 0, 't00'), (0, 7, 't07'), (3, 3, 't33'),
+          |    (7, 0, 't70'), (7, 7, 't77')) AS c(ci, cj, cname)),
+          |b AS (
+          |  SELECT doc_id, w, h, cname,
+          |    (cj * w) // 8 AS x0,
+          |    least(greatest(((cj + 1) * w) // 8, (cj * w) // 8 + 1), w) AS x1,
+          |    (ci * h) // 8 AS y0,
+          |    least(greatest(((ci + 1) * h) // 8, (ci * h) // 8 + 1), h) AS y1
+          |  FROM p CROSS JOIN cells),
+          |bx AS (SELECT *, unnest(range(x0, x1)) AS x FROM b),
+          |bxy AS (SELECT *, unnest(range(y0, y1)) AS y FROM bx),
+          |g AS (
+          |  SELECT doc_id, w, h, cname,
+          |    299 * (((doc_id * 31 + x * 7 + y * 13) % 16777216) // 65536)
+          |      + 587 * ((((doc_id * 31 + x * 7 + y * 13) % 16777216) // 256) % 256)
+          |      + 114 * (((doc_id * 31 + x * 7 + y * 13) % 16777216) % 256)
+          |      AS luma
+          |  FROM bxy),
+          |cv AS (
+          |  SELECT doc_id, any_value(w) AS w, any_value(h) AS h, cname,
+          |    round(CAST(sum(luma) AS DOUBLE) / (1000.0 * count(*)), 6) AS val
+          |  FROM g GROUP BY doc_id, cname)
+          |SELECT doc_id,
+          |  CAST(any_value(w) AS INTEGER) AS px_width,
+          |  CAST(any_value(h) AS INTEGER) AS px_height,
+          |  max(CASE WHEN cname = 't00' THEN val END) AS t00,
+          |  max(CASE WHEN cname = 't07' THEN val END) AS t07,
+          |  max(CASE WHEN cname = 't33' THEN val END) AS t33,
+          |  max(CASE WHEN cname = 't70' THEN val END) AS t70,
+          |  max(CASE WHEN cname = 't77' THEN val END) AS t77
+          |FROM cv GROUP BY doc_id""".stripMargin),
 
     // Multimodal perceptual near-dup: REAL PNG payloads hashed by aHash
     // (8×8 luma thumbnail thresholded at its own mean, exact-integer
@@ -912,7 +1605,7 @@ object TextQueries {
     // copies genuinely collide (clusters > 1 are real, not degenerate).
     // Oracle recomputes all 64 cells from the pixel formula — integer
     // division end to end, no float mean to diverge on.
-    "mm6_image_ahash" -> ((s, dir) => {
+    Query("mm6_image_ahash", (s, dir) => {
       import graft.multimodal.Multimodal
       val media = Tables.documents(s, dir).select(col("doc_id"))
         .repartition(s.sparkContext.defaultParallelism)
@@ -932,7 +1625,52 @@ object TextQueries {
       Multimodal.aHash64(withPayload, "payload")
         .groupBy("sig_hi", "sig_lo")
         .agg(count(lit(1)).as("n_images"), min("doc_id").as("rep_id"))
-    }),
+    },
+      // mm6 twin: the mm3 pixel-formula CTE generalized to all 64 cells,
+      // kept in integer division end to end (milli-luma m = sum // n,
+      // bit = 64·m > Σm), signature packed into 32-bit halves.
+      oracle =
+        """WITH p AS (
+          |  SELECT doc_id, doc_id % 13 + 1 AS w, doc_id % 7 + 1 AS h
+          |  FROM documents),
+          |cells AS (
+          |  SELECT ci, cj
+          |  FROM (SELECT unnest(range(0, 8)) AS ci) a
+          |  CROSS JOIN (SELECT unnest(range(0, 8)) AS cj) b),
+          |bnd AS (
+          |  SELECT doc_id, w, h, ci, cj,
+          |    (cj * w) // 8 AS x0,
+          |    least(greatest(((cj + 1) * w) // 8, (cj * w) // 8 + 1), w) AS x1,
+          |    (ci * h) // 8 AS y0,
+          |    least(greatest(((ci + 1) * h) // 8, (ci * h) // 8 + 1), h) AS y1
+          |  FROM p CROSS JOIN cells),
+          |bx AS (SELECT *, unnest(range(x0, x1)) AS x FROM bnd),
+          |bxy AS (SELECT *, unnest(range(y0, y1)) AS y FROM bx),
+          |g AS (
+          |  SELECT doc_id, ci, cj,
+          |    299 * (((doc_id * 31 + x * 7 + y * 13) % 16777216) // 65536)
+          |      + 587 * ((((doc_id * 31 + x * 7 + y * 13) % 16777216) // 256) % 256)
+          |      + 114 * (((doc_id * 31 + x * 7 + y * 13) % 16777216) % 256)
+          |      AS luma
+          |  FROM bxy),
+          |cellm AS (
+          |  SELECT doc_id, ci, cj,
+          |    CAST(sum(luma) // count(*) AS BIGINT) AS m
+          |  FROM g GROUP BY 1, 2, 3),
+          |tot AS (SELECT doc_id, CAST(sum(m) AS BIGINT) AS tot FROM cellm GROUP BY 1),
+          |bits AS (
+          |  SELECT c.doc_id, c.ci * 8 + c.cj AS k,
+          |    CASE WHEN 64 * c.m > t.tot THEN 1 ELSE 0 END AS bit
+          |  FROM cellm c JOIN tot t USING (doc_id)),
+          |sig AS (
+          |  SELECT doc_id,
+          |    CAST(sum(CASE WHEN k >= 32 THEN bit * (1::BIGINT << (k - 32))
+          |      ELSE 0 END) AS BIGINT) AS sig_hi,
+          |    CAST(sum(CASE WHEN k < 32 THEN bit * (1::BIGINT << k)
+          |      ELSE 0 END) AS BIGINT) AS sig_lo
+          |  FROM bits GROUP BY 1)
+          |SELECT sig_hi, sig_lo, count(*) AS n_images, min(doc_id) AS rep_id
+          |FROM sig GROUP BY 1, 2""".stripMargin),
 
     // mm9: multimodal near-duplicate DEDUP — the text dd-family machinery
     // applied to images (mm6 detects equal hashes; this one CLUSTERS
@@ -952,7 +1690,7 @@ object TextQueries {
     // EXACTNESS: its vpairs is the brute all-pairs hamming filter over
     // the (bounded) distinct-signature table, so a band-key slip that
     // drops a within-radius pair hash-diverges.
-    "mm9_image_near_dup" -> ((s, dir) => {
+    Query("mm9_image_near_dup", (s, dir) => {
       // materialize the distinct-signature table ONCE: every band
       // projection of the hamming join (4 union branches) and the final
       // rollup join otherwise re-execute the whole PNG decode+hash pass
@@ -974,7 +1712,32 @@ object TextQueries {
           col("n"))
         .groupBy("cluster_id")
         .agg(sum(col("n")).as("n_images"), count(lit(1)).as("n_sigs"))
-    }),
+    },
+      // mm9 twin: mm6's 64-cell integer aHash replay at the mm9 fixture
+      // dims + per-group gradient slopes (shared [[mm9SigCtes]] chain),
+      // then the BRUTE all-pairs hamming filter over distinct
+      // signatures — an independent check that the banded join is
+      // pigeonhole-exact — and the recursive component CTEs (dd8
+      // pattern) + rollup.
+      oracle =
+        s"""WITH RECURSIVE ${mm9SigCtes(8, "sig")},
+          |sigstats AS MATERIALIZED (
+          |  SELECT sig_hi, sig_lo, min(doc_id) AS rid, count(*) AS n
+          |  FROM sig GROUP BY 1, 2),
+          |vpairs AS (
+          |  SELECT l.rid AS id_a, r.rid AS id_b
+          |  FROM sigstats l JOIN sigstats r ON l.rid < r.rid
+          |  WHERE bit_count(xor(l.sig_hi, r.sig_hi))
+          |      + bit_count(xor(l.sig_lo, r.sig_lo)) <= 3),
+          |$componentCtes,
+          |clusters AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
+          |labeled AS (
+          |  SELECT coalesce(c.cid, s.rid) AS cluster_id, s.n
+          |  FROM sigstats s LEFT JOIN clusters c ON s.rid = c.id)
+          |SELECT cluster_id, CAST(sum(n) AS BIGINT) AS n_images,
+          |  count(*) AS n_sigs
+          |FROM labeled GROUP BY 1""".stripMargin),
 
     // mm9_wide: the WIDE-hash response to aHash64's banding ceiling —
     // dd21_lsh_wide_bands' treatment for images, with the banding
@@ -991,7 +1754,7 @@ object TextQueries {
     // 16×16 integer pooling pixel-for-pixel and brute-forces all-pairs
     // hamming over distinct signatures, so the banding's EXACTNESS at
     // radius 7 is oracle-checked, not argued.
-    "mm9_wide" -> ((s, dir) => {
+    Query("mm9_wide", (s, dir) => {
       val sigCols = (0 until 8).map(w => s"sig$w")
       // mm9's materialization note applies ×2 here: 8 band branches,
       // each re-running the 16×16 decode+hash pass without the
@@ -1009,7 +1772,36 @@ object TextQueries {
           col("n"))
         .groupBy("cluster_id")
         .agg(sum(col("n")).as("n_images"), count(lit(1)).as("n_sigs"))
-    }),
+    },
+      // mm9_wide twin: the 16×16-cell 256-bit replay (8 packed 32-bit
+      // words), brute all-pairs hamming <= 7 over distinct signatures
+      // — so the 8-band join's pigeonhole exactness at the measured
+      // banding is oracle-checked — then the same cluster rollup.
+      oracle = {
+        // bit_count returns TINYINT in DuckDB — eight summed popcounts
+        // overflow 127 without the per-term widening
+        val ham = (0 until 8).map(w =>
+          s"CAST(bit_count(xor(l.sig$w, r.sig$w)) AS BIGINT)")
+          .mkString("\n      + ")
+        val cols = (0 until 8).map(w => s"sig$w").mkString(", ")
+        s"""WITH RECURSIVE ${mm9SigCtes(16, "sig")},
+          |sigstats AS MATERIALIZED (
+          |  SELECT $cols, min(doc_id) AS rid, count(*) AS n
+          |  FROM sig GROUP BY ${(1 to 8).mkString(", ")}),
+          |vpairs AS (
+          |  SELECT l.rid AS id_a, r.rid AS id_b
+          |  FROM sigstats l JOIN sigstats r ON l.rid < r.rid
+          |  WHERE $ham <= 7),
+          |$componentCtes,
+          |clusters AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
+          |labeled AS (
+          |  SELECT coalesce(c.cid, s.rid) AS cluster_id, s.n
+          |  FROM sigstats s LEFT JOIN clusters c ON s.rid = c.id)
+          |SELECT cluster_id, CAST(sum(n) AS BIGINT) AS n_images,
+          |  count(*) AS n_sigs
+          |FROM labeled GROUP BY 1""".stripMargin
+      }),
 
     // mm11: audio near-dup dedup — mm9's treatment at the audio grain.
     // mm7's delta-energy fingerprint over the mm11 fixture (planted
@@ -1024,7 +1816,7 @@ object TextQueries {
     // replays samples from the byte formula and brute-forces all-pairs
     // hamming within each window-count block — banding exactness is
     // oracle-checked.
-    "mm11_audio_near_dup" -> ((s, dir) => {
+    Query("mm11_audio_near_dup", (s, dir) => {
       // mm9's materialization note: 4 band branches + the rollup join
       // otherwise re-run the PCM synth + fingerprint pass each
       val sigStats = mm11DocFps(s, dir)
@@ -1043,7 +1835,13 @@ object TextQueries {
           col("n"))
         .groupBy("cluster_id")
         .agg(sum(col("n")).as("n_audios"), count(lit(1)).as("n_sigs"))
-    }),
+    },
+      // mm11 twin: the audio fixture's gained samples replayed from the
+      // byte formula (shared [[mm11FpCtes]] chain), then brute all-pairs
+      // hamming <= 3 WITHIN each window-count block over distinct
+      // (n_windows, fp) signatures — the banded join's blocked
+      // pigeonhole exactness is oracle-checked — and the cluster rollup.
+      oracle = mm11TwinSql),
 
     // mm11_adaptive_bands: the measured RESPONSE to the fixed 4×16
     // banding's degenerate-block floor (BANDCANDS: 955 cands/sig at
@@ -1056,7 +1854,7 @@ object TextQueries {
     // exactness is preserved per block, so the output — and the oracle
     // twin — are IDENTICAL to mm11's: the twin's brute all-pairs
     // hamming gates both bandings against the same clusters.
-    "mm11_adaptive_bands" -> ((s, dir) => {
+    Query("mm11_adaptive_bands", (s, dir) => {
       // mm9's materialization note: 4 band branches + the rollup join
       val sigStats = mm11DocFps(s, dir)
         .groupBy("n_windows", "fp")
@@ -1073,7 +1871,12 @@ object TextQueries {
           col("n"))
         .groupBy("cluster_id")
         .agg(sum(col("n")).as("n_audios"), count(lit(1)).as("n_sigs"))
-    }),
+    },
+      // mm11_adaptive_bands twin: IDENTICAL to mm11's — the adaptive
+      // banding is exact per block (pigeonhole over meaningful-range
+      // bands), so the same brute all-pairs-within-block replay gates
+      // both banded forms against the same clusters.
+      oracle = mm11TwinSql),
 
     // mm12: video near-dup dedup — mm9/mm11's treatment at the video
     // grain. The temporal hash over demuxed frame means (mm12DocFps —
@@ -1089,7 +1892,7 @@ object TextQueries {
     // formula and brute-forces all-pairs hamming within each
     // frame-count block — banding exactness is oracle-checked, not
     // argued.
-    "mm12_video_near_dup" -> ((s, dir) => {
+    Query("mm12_video_near_dup", (s, dir) => {
       // mm9's materialization note: 4 band branches + the rollup join
       // otherwise re-run the demux + frame-stats + lag-window pass each
       val fps = mm12DocFps(Tables.documents(s, dir).select(col("doc_id")))
@@ -1108,7 +1911,32 @@ object TextQueries {
           col("n"))
         .groupBy("cluster_id")
         .agg(sum(col("n")).as("n_videos"), count(lit(1)).as("n_sigs"))
-    }),
+    },
+      // mm12 twin: the byte-replay temporal-hash chain, then brute
+      // all-pairs hamming WITHIN each frame-count block (banding
+      // exactness oracle-checked against the engine's 4×16 banded
+      // join) and the recursive connected-component rollup.
+      oracle =
+        s"""WITH RECURSIVE ${mm12FpCtes("", "documents")},
+          |sigstats AS MATERIALIZED (
+          |  SELECT n_frames_sampled, fp, min(doc_id) AS rid,
+          |    count(*) AS n
+          |  FROM f GROUP BY 1, 2),
+          |vpairs AS (
+          |  SELECT l.rid AS id_a, r.rid AS id_b
+          |  FROM sigstats l JOIN sigstats r
+          |    ON l.n_frames_sampled = r.n_frames_sampled
+          |      AND l.rid < r.rid
+          |  WHERE bit_count(xor(l.fp, r.fp)) <= 3),
+          |$componentCtes,
+          |clusters AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
+          |labeled AS (
+          |  SELECT coalesce(c.cid, s.rid) AS cluster_id, s.n
+          |  FROM sigstats s LEFT JOIN clusters c ON s.rid = c.id)
+          |SELECT cluster_id, CAST(sum(n) AS BIGINT) AS n_videos,
+          |  count(*) AS n_sigs
+          |FROM labeled GROUP BY 1""".stripMargin),
 
     // mm10: CROSS-MODAL dedup composition — the multimodal corpus dedups
     // EVERY modality at ITS grain, in order: near-duplicate IMAGES
@@ -1131,7 +1959,7 @@ object TextQueries {
     // pipeline, and the 64-bit banding's candidate floor is MEASURED
     // (BANDCANDS: 115 cands/sig at 0.5M docs vs mm9_wide's 28.7) — a
     // three-stage chain rides the measured-best banding.
-    "mm10_crossmodal_dedup" -> ((s, dir) => {
+    Query("mm10_crossmodal_dedup", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val sigCols = (0 until 8).map(w => s"sig$w")
       // Stage-boundary materialization (guide §5 / §3.3): without it the
@@ -1237,7 +2065,110 @@ object TextQueries {
         Dedup.lshVerifiedPairs(survivors, "doc_id", "text", 2, 4, 2, 0.05))
       Dedup.keepClusterRepresentatives(survivors, "doc_id", tclusters)
         .select("doc_id", "lang", "source")
-    }),
+    },
+      // mm10 twin: mm9's pixel-replay signature chain (CTEs i-prefixed
+      // where they would collide with the text-dedup fragment) ->
+      // doc-level image-cluster labels -> one representative per image
+      // cluster -> mm11's sample-replay chain (au-prefixed) over the
+      // image survivors -> one representative per audio cluster ->
+      // mm12's byte-replay chain (vd-prefixed) over the audio
+      // survivors -> one representative per video cluster -> dd9's
+      // LSH-verify + recursive-component chain over the final survivor
+      // set. Four recursive component chains.
+      oracle = {
+        val textCtes = lshVerifiedCtesFor(2, 4, 2, 0.05, from = "surv")
+        val icols = (0 until 8).map(w => s"sig$w").mkString(", ")
+        val iham = (0 until 8).map(w =>
+          s"CAST(bit_count(xor(l.sig$w, r.sig$w)) AS BIGINT)")
+          .mkString("\n      + ")
+        s"""WITH RECURSIVE ${mm9SigCtes(16, "isig")},
+          |sigstats AS MATERIALIZED (
+          |  SELECT $icols, min(doc_id) AS rid
+          |  FROM isig GROUP BY ${(1 to 8).mkString(", ")}),
+          |ivpairs AS (
+          |  SELECT l.rid AS id_a, r.rid AS id_b
+          |  FROM sigstats l JOIN sigstats r ON l.rid < r.rid
+          |  WHERE $iham <= 7),
+          |iedges AS (
+          |  SELECT id_a AS u, id_b AS v FROM ivpairs
+          |  UNION SELECT id_b, id_a FROM ivpairs),
+          |ireach AS (
+          |  SELECT u AS id, v AS r FROM iedges
+          |  UNION
+          |  SELECT t.id, e.v AS r FROM ireach t JOIN iedges e ON t.r = e.u),
+          |icl AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM ireach GROUP BY id),
+          |dlab AS (
+          |  SELECT d.doc_id, coalesce(c.cid, s.rid) AS cluster_id
+          |  FROM isig d
+          |  JOIN sigstats s USING ($icols)
+          |  LEFT JOIN icl c ON s.rid = c.id),
+          |img_reps AS (
+          |  SELECT min(doc_id) AS doc_id FROM dlab GROUP BY cluster_id),
+          |isurv AS MATERIALIZED (
+          |  SELECT d.* FROM documents d SEMI JOIN img_reps USING (doc_id)),
+          |${mm11FpCtes("au", "isurv")},
+          |asigstats AS MATERIALIZED (
+          |  SELECT n_windows, fp, min(doc_id) AS rid
+          |  FROM auf GROUP BY 1, 2),
+          |avpairs AS (
+          |  SELECT l.rid AS id_a, r.rid AS id_b
+          |  FROM asigstats l JOIN asigstats r
+          |    ON l.n_windows = r.n_windows AND l.rid < r.rid
+          |  WHERE bit_count(xor(l.fp, r.fp)) <= 3),
+          |aedges AS (
+          |  SELECT id_a AS u, id_b AS v FROM avpairs
+          |  UNION SELECT id_b, id_a FROM avpairs),
+          |areach AS (
+          |  SELECT u AS id, v AS r FROM aedges
+          |  UNION
+          |  SELECT t.id, e.v AS r FROM areach t JOIN aedges e ON t.r = e.u),
+          |acl AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM areach GROUP BY id),
+          |adlab AS (
+          |  SELECT f.doc_id, coalesce(c.cid, s.rid) AS cluster_id
+          |  FROM auf f
+          |  JOIN asigstats s USING (n_windows, fp)
+          |  LEFT JOIN acl c ON s.rid = c.id),
+          |aud_reps AS (
+          |  SELECT min(doc_id) AS doc_id FROM adlab GROUP BY cluster_id),
+          |asurv AS MATERIALIZED (
+          |  SELECT i.* FROM isurv i SEMI JOIN aud_reps USING (doc_id)),
+          |${mm12FpCtes("vd", "asurv")},
+          |vsigstats AS MATERIALIZED (
+          |  SELECT n_frames_sampled, fp, min(doc_id) AS rid
+          |  FROM vdf GROUP BY 1, 2),
+          |vvpairs AS (
+          |  SELECT l.rid AS id_a, r.rid AS id_b
+          |  FROM vsigstats l JOIN vsigstats r
+          |    ON l.n_frames_sampled = r.n_frames_sampled
+          |      AND l.rid < r.rid
+          |  WHERE bit_count(xor(l.fp, r.fp)) <= 3),
+          |vedges AS (
+          |  SELECT id_a AS u, id_b AS v FROM vvpairs
+          |  UNION SELECT id_b, id_a FROM vvpairs),
+          |vreach AS (
+          |  SELECT u AS id, v AS r FROM vedges
+          |  UNION
+          |  SELECT t.id, e.v AS r FROM vreach t JOIN vedges e ON t.r = e.u),
+          |vcl AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM vreach GROUP BY id),
+          |vdlab AS (
+          |  SELECT f.doc_id, coalesce(c.cid, s.rid) AS cluster_id
+          |  FROM vdf f
+          |  JOIN vsigstats s USING (n_frames_sampled, fp)
+          |  LEFT JOIN vcl c ON s.rid = c.id),
+          |vid_reps AS (
+          |  SELECT min(doc_id) AS doc_id FROM vdlab GROUP BY cluster_id),
+          |surv AS MATERIALIZED (
+          |  SELECT a.* FROM asurv a SEMI JOIN vid_reps USING (doc_id)),
+          |$textCtes,
+          |$componentCtes,
+          |tcl AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id)
+          |SELECT doc_id, lang, source FROM surv
+          |WHERE doc_id NOT IN (SELECT id FROM tcl WHERE id <> cid)""".stripMargin
+      }),
 
     // Multimodal frame sampling: video-like payloads (bytes a pure
     // function of (media_id, offset), demux-shaped n_frames metadata)
@@ -1248,7 +2179,7 @@ object TextQueries {
     // hash-diverges. Payload lengths deliberately leave a non-zero
     // remainder (plen % n_frames != 0) to pin the drop-the-tail
     // contract.
-    "mm4_frames" -> ((s, dir) => {
+    Query("mm4_frames", (s, dir) => {
       import graft.multimodal.Multimodal
       val media = Tables.documents(s, dir).select(col("doc_id"))
         .repartition(s.sparkContext.defaultParallelism)
@@ -1269,13 +2200,48 @@ object TextQueries {
         }
       }(enc)
       Multimodal.frameStats(Multimodal.sampleFrames(withPayload, stride = 2))
-    }),
+    },
+      // mm4 twin: frame slicing arithmetic recomputed from the byte
+      // formula byte[i] = (media_id*31 + 7i) % 256 — frameLen is an
+      // integer division of the payload length, kept frames are every
+      // 2nd index below min(n_frames, plen), and the trailing
+      // plen % n_frames remainder belongs to NO frame (the engine's
+      // copyOfRange bound), which the x1 = least(f0 + flen, plen) clamp
+      // mirrors.
+      oracle =
+        """WITH p AS (
+          |  SELECT doc_id,
+          |    doc_id % 7 + 2 AS nf,
+          |    (doc_id % 7 + 2) * (doc_id % 5 + 4) + doc_id % 3 AS plen
+          |  FROM documents),
+          |f AS (
+          |  SELECT doc_id, plen,
+          |    greatest(plen // nf, 1) AS flen,
+          |    least(nf, plen) AS mf
+          |  FROM p),
+          |fr AS (SELECT doc_id, plen, flen,
+          |    unnest(range(0, mf, 2)) AS frame_idx FROM f),
+          |b AS (
+          |  SELECT doc_id, frame_idx, frame_idx * flen AS f0,
+          |    least(frame_idx * flen + flen, plen) AS f1
+          |  FROM fr),
+          |bytes AS (SELECT doc_id, frame_idx, f0, f1,
+          |    unnest(range(f0, f1)) AS i FROM b)
+          |SELECT doc_id AS media_id,
+          |  CAST(frame_idx AS INTEGER) AS frame_idx,
+          |  CAST(f1 - f0 AS BIGINT) AS frame_len,
+          |  CAST(sum((doc_id * 31 + 7 * i) % 256) AS BIGINT) AS byte_sum,
+          |  CAST(min((doc_id * 31 + 7 * i) % 256)
+          |    FILTER (WHERE i = f0) AS INTEGER) AS first_byte,
+          |  CAST(min((doc_id * 31 + 7 * i) % 256)
+          |    FILTER (WHERE i = f1 - 1) AS INTEGER) AS last_byte
+          |FROM bytes GROUP BY doc_id, frame_idx, f0, f1""".stripMargin),
 
     // mm8: shot-boundary detection over mm4's sampled frame stats — the
     // classic pixel-difference method at the byte-stat proxy level (mean
     // byte value jump > 100 against the previous sampled frame); per-media
     // audit row for splitting multi-scene clips before captioning.
-    "mm8_scene_cuts" -> ((s, dir) => {
+    Query("mm8_scene_cuts", (s, dir) => {
       import graft.multimodal.Multimodal
       val media = Tables.documents(s, dir).select(col("doc_id"))
         .repartition(s.sparkContext.defaultParallelism)
@@ -1298,7 +2264,46 @@ object TextQueries {
       Multimodal.sceneCuts(
         Multimodal.frameStats(Multimodal.sampleFrames(withPayload, stride = 2)),
         threshold = 100.0)
-    }),
+    },
+      // mm8 twin: mm4's byte-formula CTEs -> per-frame means -> the same
+      // lag/threshold arithmetic (null first-frame diff excluded from the
+      // count in both engines by CASE/when semantics).
+      oracle =
+        """WITH p AS (
+          |  SELECT doc_id,
+          |    doc_id % 7 + 2 AS nf,
+          |    (doc_id % 7 + 2) * (doc_id % 5 + 4) + doc_id % 3 AS plen
+          |  FROM documents),
+          |f AS (
+          |  SELECT doc_id, plen,
+          |    greatest(plen // nf, 1) AS flen,
+          |    least(nf, plen) AS mf
+          |  FROM p),
+          |fr AS (SELECT doc_id, plen, flen,
+          |    unnest(range(0, mf, 2)) AS frame_idx FROM f),
+          |b AS (
+          |  SELECT doc_id, frame_idx, frame_idx * flen AS f0,
+          |    least(frame_idx * flen + flen, plen) AS f1
+          |  FROM fr),
+          |bytes AS (SELECT doc_id, frame_idx, f0, f1,
+          |    unnest(range(f0, f1)) AS i FROM b),
+          |fs AS (
+          |  SELECT doc_id, frame_idx,
+          |    CAST(sum((doc_id * 31 + 7 * i) % 256) AS DOUBLE) / (f1 - f0)
+          |      AS mean_b
+          |  FROM bytes GROUP BY doc_id, frame_idx, f0, f1),
+          |d AS (
+          |  SELECT doc_id, frame_idx, abs(mean_b - lag(mean_b)
+          |    OVER (PARTITION BY doc_id ORDER BY frame_idx)) AS diff
+          |  FROM fs)
+          |SELECT doc_id AS media_id,
+          |  CAST(count(*) AS BIGINT) AS n_frames_sampled,
+          |  CAST(sum(CASE WHEN diff > 100.0 THEN 1 ELSE 0 END) AS BIGINT)
+          |    AS n_cuts,
+          |  CAST(min(CASE WHEN diff > 100.0 THEN frame_idx END) AS INTEGER)
+          |    AS first_cut_idx,
+          |  round(avg(diff), 6) AS mean_diff
+          |FROM d GROUP BY doc_id""".stripMargin),
 
     // Multimodal REAL audio decode: PCM16-LE payloads (samples a pure
     // function of (media_id, index)), unpacked by the byte-walking
@@ -1307,7 +2312,7 @@ object TextQueries {
     // truncated-final-sample contract; the oracle recomputes all stats
     // from the sample formula, so an endianness or unpack slip
     // hash-diverges.
-    "mm5_audio" -> ((s, dir) => {
+    Query("mm5_audio", (s, dir) => {
       import graft.multimodal.Multimodal
       val media = Tables.documents(s, dir).select(col("doc_id"))
         .repartition(s.sparkContext.defaultParallelism)
@@ -1334,7 +2339,25 @@ object TextQueries {
       }(enc)
       Multimodal.pcmStats(withPayload, "payload")
         .select("doc_id", "n_samples", "rms", "zcr", "peak")
-    }),
+    },
+      // mm5 twin: integer sample/sum arithmetic from the generator
+      // formula; the single double division + sqrt replays the engine's
+      // exact operands (sum of squares stays integral until the cast).
+      oracle =
+        """WITH p AS (SELECT doc_id, doc_id % 50 + 10 AS n FROM documents),
+          |s AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM p),
+          |x AS (SELECT doc_id, n, i,
+          |  (doc_id * 7 + i * 13) % 201 - 100 AS v FROM s),
+          |w AS (SELECT doc_id, n, v,
+          |  lag(v) OVER (PARTITION BY doc_id ORDER BY i) AS pv FROM x)
+          |SELECT doc_id,
+          |  CAST(any_value(n) AS BIGINT) AS n_samples,
+          |  round(sqrt(CAST(sum(v * v) AS DOUBLE) / any_value(n)), 6) AS rms,
+          |  round(sum(CASE WHEN pv IS NOT NULL AND pv * v < 0
+          |      THEN 1 ELSE 0 END) /
+          |    CAST(any_value(n) - 1 AS DOUBLE), 6) AS zcr,
+          |  CAST(max(abs(v)) AS INTEGER) AS peak
+          |FROM w GROUP BY doc_id""".stripMargin),
 
     // mm7: perceptual audio near-dup — mm5's PCM16 payloads fingerprinted
     // by the delta-energy signature (windowed integer Σx², sign-of-delta
@@ -1342,7 +2365,7 @@ object TextQueries {
     // mm6. The twin replays sample values straight from the byte formula,
     // so an endianness slip, window off-by-one or tail-handling bug
     // hash-diverges.
-    "mm7_audio_fingerprint" -> ((s, dir) => {
+    Query("mm7_audio_fingerprint", (s, dir) => {
       import graft.multimodal.Multimodal
       val media = Tables.documents(s, dir).select(col("doc_id"))
         .repartition(s.sparkContext.defaultParallelism)
@@ -1370,7 +2393,34 @@ object TextQueries {
       Multimodal.audioFingerprint(withPayload, "payload")
         .groupBy("n_windows", "fp")
         .agg(count(lit(1)).as("n_audios"), min("doc_id").as("rep_id"))
-    }),
+    },
+      // mm7 twin: delta-energy fingerprint replayed from the PCM sample
+      // formula x_i = (doc_id*7 + i*13) % 201 - 100 — integer energies,
+      // lead() comparison, LSB-first bit packing. The fixture's window
+      // count is always >= 2 (n in [10, 59]), so every doc emits a
+      // fingerprint row.
+      oracle =
+        """WITH p AS (
+          |  SELECT doc_id, (doc_id % 50 + 10) // 4 AS nw FROM documents),
+          |s AS (SELECT doc_id, nw, unnest(range(0, 4 * nw)) AS i FROM p),
+          |x AS (
+          |  SELECT doc_id, nw, i // 4 AS w,
+          |    (doc_id * 7 + i * 13) % 201 - 100 AS v
+          |  FROM s),
+          |e AS (
+          |  SELECT doc_id, nw, w, sum(v * v) AS energy FROM x GROUP BY 1, 2, 3),
+          |d AS (
+          |  SELECT doc_id, nw, w, energy,
+          |    lead(energy) OVER (PARTITION BY doc_id ORDER BY w) AS nexte
+          |  FROM e),
+          |f AS (
+          |  SELECT doc_id, nw,
+          |    CAST(coalesce(sum(CASE WHEN nexte > energy
+          |      THEN 1::BIGINT << w ELSE 0 END), 0) AS BIGINT) AS fp
+          |  FROM d WHERE w < nw - 1 AND w < 63 GROUP BY 1, 2)
+          |SELECT CAST(nw AS INTEGER) AS n_windows, fp,
+          |  count(*) AS n_audios, min(doc_id) AS rep_id
+          |FROM f GROUP BY 1, 2""".stripMargin),
 
     // dd19: corpus-level exact-substring dedup at chunk granularity —
     // the shuffle-friendly form of suffix-array substring dedup: every
@@ -1379,8 +2429,9 @@ object TextQueries {
     // surviving text reassembled in position order. k=3 on the
     // word-soup fixture so both the duplicated and the unique path
     // carry real traffic (a production k of 50-100 is the same plan).
-    "dd19_chunk_dedup" -> ((s, dir) =>
-      Dedup.chunkDedup(Tables.documents(s, dir), "doc_id", "text", 3)),
+    Query("dd19_chunk_dedup", (s, dir) =>
+      Dedup.chunkDedup(Tables.documents(s, dir), "doc_id", "text", 3),
+      oracle = Dedup.chunkDedupSql("doc_id", "text", 3)),
 
     // dd24: stride-1 maximal duplicated-span detection (the ExactSubstr /
     // suffix-array lineage) — what dd19's chunk blocking can't see when a
@@ -1388,30 +2439,37 @@ object TextQueries {
     // the fixture so span MERGING carries traffic (174 docs at sf0.01 have
     // >1 maximal span) while 130 docs stay clean; production windows of
     // 50-100 tokens are the same plan.
-    "dd24_dup_spans" -> ((s, dir) =>
-      Dedup.duplicatedSpans(Tables.documents(s, dir), "doc_id", "text", 4)),
+    Query("dd24_dup_spans", (s, dir) =>
+      Dedup.duplicatedSpans(Tables.documents(s, dir), "doc_id", "text", 4),
+      oracle = Dedup.duplicatedSpansSql("doc_id", "text", 4)),
 
     // dd25: soft dedup — training-sampler down-weights from the geometric
     // mean of corpus-wide window-occurrence counts (SoftDeDup lineage);
     // the reweighting alternative to dd24's hard span cuts.
-    "dd25_soft_dedup" -> ((s, dir) =>
-      Dedup.softDedupWeights(Tables.documents(s, dir), "doc_id", "text", 4)),
+    Query("dd25_soft_dedup", (s, dir) =>
+      Dedup.softDedupWeights(Tables.documents(s, dir), "doc_id", "text", 4),
+      oracle = Dedup.softDedupWeightsSql("doc_id", "text", 4)),
 
     // dd26: dd24's CUT form — ExactSubstr dedup proper: every duplicated
     // window keeps only its globally-first occurrence; later copies' token
     // ranges are cut at their exact offsets and the survivors reassembled.
-    "dd26_substr_cut" -> ((s, dir) =>
-      Dedup.substrCut(Tables.documents(s, dir), "doc_id", "text", 4)),
+    Query("dd26_substr_cut", (s, dir) =>
+      Dedup.substrCut(Tables.documents(s, dir), "doc_id", "text", 4),
+      oracle = Dedup.substrCutSql("doc_id", "text", 4)),
 
     // dd27: span-level eval decontamination — t7's rate audit turned into
     // the cut: spans shared with the eval corpus (t7's doc_id < 20 split)
     // are removed from the training docs at their exact offsets instead
     // of dropping whole contaminated pages.
-    "dd27_decontam_cut" -> ((s, dir) => {
+    Query("dd27_decontam_cut", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.decontamCut(docs.filter(col("doc_id") >= 20),
         docs.filter(col("doc_id") < 20), "doc_id", "text", 4)
-    }),
+    },
+      oracle =
+        Dedup.decontamCutSql("doc_id", "text", 4,
+          "(SELECT * FROM documents WHERE doc_id >= 20)",
+          "(SELECT * FROM documents WHERE doc_id < 20)")),
 
     // The PRODUCTION-WINDOW forms of the ExactSubstr family: W = 50
     // tokens, the window Lee et al. (ACL 2022) run corpus dedup at
@@ -1424,11 +2482,13 @@ object TextQueries {
     // constant). Oracle-gated at sf0.01 like every prod-knob variant:
     // the fixture carries 280 duplicated 50-token windows across 277
     // long-enough docs, so both the cut and keep paths see traffic.
-    "dd24_dup_spans_prod" -> ((s, dir) =>
-      Dedup.duplicatedSpans(Tables.documents(s, dir), "doc_id", "text", 50)),
+    Query("dd24_dup_spans_prod", (s, dir) =>
+      Dedup.duplicatedSpans(Tables.documents(s, dir), "doc_id", "text", 50),
+      oracle = Dedup.duplicatedSpansSql("doc_id", "text", 50)),
 
-    "dd26_substr_cut_prod" -> ((s, dir) =>
-      Dedup.substrCut(Tables.documents(s, dir), "doc_id", "text", 50)),
+    Query("dd26_substr_cut_prod", (s, dir) =>
+      Dedup.substrCut(Tables.documents(s, dir), "doc_id", "text", 50),
+      oracle = Dedup.substrCutSql("doc_id", "text", 50)),
 
     // Eval split is doc_id % 50 == 7 (2% of docs at every scale) rather
     // than dd27's doc_id < 20: the probe fixtures' ids grow with the
@@ -1437,11 +2497,15 @@ object TextQueries {
     // suites don't grow with the corpus), so the proportional split
     // makes the probe's broadcast an over-estimate — conservative in
     // the direction that matters.
-    "dd27_decontam_cut_prod" -> ((s, dir) => {
+    Query("dd27_decontam_cut_prod", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.decontamCut(docs.filter(col("doc_id") % 50 =!= 7),
         docs.filter(col("doc_id") % 50 === 7), "doc_id", "text", 50)
-    }),
+    },
+      oracle =
+        Dedup.decontamCutSql("doc_id", "text", 50,
+          "(SELECT * FROM documents WHERE doc_id % 50 <> 7)",
+          "(SELECT * FROM documents WHERE doc_id % 50 = 7)")),
 
     // dd28: PII redaction as a CUT — t11 detects; this rewrites. Token
     // spans matching the shared PII regexes are cut at their exact token
@@ -1453,9 +2517,26 @@ object TextQueries {
     // traffic); every other doc exercises the clean path. Both engines
     // derive the identical planted corpus, so the oracle replays the
     // rewrite byte-for-byte.
-    "dd28_pii_redact" -> ((s, dir) =>
+    Query("dd28_pii_redact", (s, dir) =>
       Dedup.piiRedactCut(plantPii(Tables.documents(s, dir)),
-        "doc_id", "text")),
+        "doc_id", "text"),
+      oracle =
+        Dedup.piiRedactCutSql("doc_id", "text",
+          // NB: the outer template applies stripMargin to the composed
+          // string, so no line here may start with a `||` concat — keep
+          // the operators at line ends.
+          from = """(SELECT doc_id,
+            |  CASE WHEN doc_id % 11 = 3 THEN
+            |    text || ' mail u' || CAST(doc_id AS VARCHAR) ||
+            |      '@mail.example or 555-010-' ||
+            |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+            |  WHEN doc_id % 11 = 7 THEN
+            |    text || ' node 10.0.' || CAST(doc_id % 200 AS VARCHAR) ||
+            |      '.' || CAST(doc_id % 13 AS VARCHAR) ||
+            |      ' 10.1.' || CAST(doc_id % 200 AS VARCHAR) ||
+            |      '.' || CAST(doc_id % 13 AS VARCHAR)
+            |  ELSE text END AS text
+            |  FROM documents)""".stripMargin)),
 
     // dd29: host-grain curation — URL canonicalization, URL-exact dedup,
     // per-host cap. Real corpora key curation on the canonical URL (the
@@ -1469,7 +2550,7 @@ object TextQueries {
     // real skew work, and path collisions (doc_id % 50) so the URL-dedup
     // stage has traffic. Survivors: first doc per canonical URL, then
     // the longest-text 30 per host (doc_id tie-break).
-    "dd29_host_cap" -> ((s, dir) => {
+    Query("dd29_host_cap", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val urled = docs.withColumn("url", concat(
         when(col("doc_id") % 3 === 0, lit("HTTPS://"))
@@ -1497,7 +2578,49 @@ object TextQueries {
           Seq(col("n_chars").desc), n = 30)
         .select(col("doc_id"), col("url_host"), col("url_canon"),
           col("grp_rank"))
-    }),
+    },
+      // dd29 twin: same planted-URL derivation, canonicalization
+      // fragments from urlSql, URL-exact dedup via min(doc_id), and the
+      // single-window per-host rank the two-phase plan implements
+      // losslessly (the dd17 convention).
+      oracle = {
+        val u = TextAnalysis.urlSql("url")
+        s"""WITH urled AS (
+          |  SELECT doc_id, n_chars,
+          |    (CASE WHEN doc_id % 3 = 0 THEN 'HTTPS://'
+          |          WHEN doc_id % 3 = 1 THEN 'http://'
+          |          ELSE 'https://' END)
+          |    || (CASE WHEN doc_id % 13 = 0 THEN 'crawler:Tok3n@' ELSE '' END)
+          |    || (CASE WHEN doc_id % 4 = 0 THEN 'WWW.' ELSE '' END)
+          |    || (CASE WHEN doc_id % 5 < 2 THEN 'Big.Example.COM'
+          |          ELSE 'site' || CAST(doc_id % 97 AS VARCHAR)
+          |            || '.example.org' END)
+          |    || (CASE WHEN doc_id % 7 = 0 THEN ':443' ELSE '' END)
+          |    || '/p/' || CAST(doc_id % 50 AS VARCHAR)
+          |    || (CASE WHEN doc_id % 6 = 0 THEN '/' ELSE '' END)
+          |    || (CASE WHEN doc_id % 2 = 0
+          |          THEN '?utm=x&ref=' || CAST(doc_id % 9 AS VARCHAR)
+          |          ELSE '' END)
+          |    || (CASE WHEN doc_id % 11 = 0 THEN '#s2' ELSE '' END) AS url
+          |  FROM documents),
+          |canon AS (
+          |  SELECT doc_id, n_chars, ${u("url_host")} AS url_host,
+          |    ${u("url_canon")} AS url_canon
+          |  FROM urled),
+          |first_per_url AS (
+          |  SELECT url_canon, min(doc_id) AS doc_id
+          |  FROM canon GROUP BY url_canon),
+          |kept AS (
+          |  SELECT c.* FROM canon c SEMI JOIN first_per_url f
+          |  USING (url_canon, doc_id)),
+          |ranked AS (
+          |  SELECT doc_id, url_host, url_canon,
+          |    row_number() OVER (PARTITION BY url_host
+          |      ORDER BY n_chars DESC, doc_id) AS grp_rank
+          |  FROM kept)
+          |SELECT doc_id, url_host, url_canon, CAST(grp_rank AS BIGINT) AS grp_rank
+          |FROM ranked WHERE grp_rank <= 30""".stripMargin
+      }),
 
     // e2e_llm_prep: the modern LLM-data-prep chain composed end-to-end —
     // the published Gopher rule gate (t31's flags in filter form) drops
@@ -1512,7 +2635,7 @@ object TextQueries {
     // multilingual, and the Gopher-lineage pipelines swap r7's English
     // stop-word list per language, so the stop-word flag stays
     // audit-only here (see gopherStructuralFilter's contract).
-    "e2e_llm_prep" -> ((s, dir) => {
+    Query("e2e_llm_prep", (s, dir) => {
       val docs = TextAnalysis.gopherStructuralFilter(
         Tables.documents(s, dir), "text")
       // materialized: consumed three times below (DSIR weights input,
@@ -1533,7 +2656,39 @@ object TextQueries {
         .agg(count(lit(1)).as("n_docs_kept"),
           sum(col("n_subwords")).as("total_subwords"),
           round(avg(col("chars_per_subword")), 6).as("mean_cps"))
-    }),
+    },
+      // e2e_llm_prep twin: the t31/dd19/t21/t23 fragments composed.
+      // DuckDB permits a WITH inside a derived table, which is how each
+      // self-contained fragment nests into this chain unchanged. The
+      // quality gate filters on the six language-agnostic Gopher flags
+      // (r1-r6), mirroring gopherStructuralFilter's contract.
+      oracle = {
+        val gr = TextAnalysis.gopherRulesSql("doc_id", "text")
+        val dd = Dedup.chunkDedupSql("doc_id", "text", 3, from = "gated")
+        val dsir = TextAnalysis.dsirWeightsSql("doc_id", "dedup_text",
+          "source IN ('src1', 'src2', 'src3', 'src4')", 256, from = "base")
+        val bpe = TextAnalysis.bpeTokenCountsSql("doc_id", "dedup_text",
+          from = "kept")
+        s"""WITH gated AS (
+          |  SELECT d.* FROM documents d
+          |  JOIN ($gr) g USING (doc_id)
+          |  WHERE g.r1_word_count AND g.r2_mean_word_len
+          |    AND g.r3_symbol_ratio AND g.r4_bullet_lines
+          |    AND g.r5_ellipsis_lines AND g.r6_alpha_words),
+          |base AS (
+          |  SELECT dd.doc_id, dd.dedup_text, d.source
+          |  FROM ($dd) dd JOIN gated d USING (doc_id)),
+          |w AS (SELECT * FROM ($dsir) ww WHERE ww.log_w > 0),
+          |kept AS (
+          |  SELECT b.doc_id, b.dedup_text, b.source
+          |  FROM base b JOIN w USING (doc_id))
+          |SELECT k.source,
+          |  CAST(count(*) AS BIGINT) AS n_docs_kept,
+          |  CAST(sum(c.n_subwords) AS BIGINT) AS total_subwords,
+          |  round(avg(c.chars_per_subword), 6) AS mean_cps
+          |FROM ($bpe) c JOIN kept k USING (doc_id)
+          |GROUP BY k.source""".stripMargin
+      }),
 
     // e2e_decontam_prep: the benchmark-clean prep chain — the Gopher rule
     // gate drops structurally bad pages, the stride-1 ExactSubstr cut
@@ -1542,7 +2697,7 @@ object TextQueries {
     // cuts benchmark-shared spans from what survives, and BPE pricing
     // reports the per-source token bill with the decontaminated volume
     // as an audit column. Each stage is the already-gated operator.
-    "e2e_decontam_prep" -> ((s, dir) => {
+    Query("e2e_decontam_prep", (s, dir) => {
       val all = Tables.documents(s, dir)
       val evalDocs = all.filter(col("doc_id") < 20)
         .select(col("doc_id"), col("text").as("redacted_text"))
@@ -1593,7 +2748,59 @@ object TextQueries {
           round(avg(col("chars_per_subword")), 6).as("mean_cps"),
           sum(col("tokens_cut")).as("decontam_tokens_cut"),
           sum(col("n_pii_spans")).as("pii_spans_redacted"))
-    }),
+    },
+      // e2e_decontam_prep twin: the gopher/substr-cut/PII-redact/
+      // decontam/bpe fragments composed — each self-contained WITH nests
+      // as a derived table, the e2e_llm_prep pattern. The PII planting
+      // (dd28's two id strata) runs AFTER the gate, mirroring the engine.
+      oracle = {
+        val gr = TextAnalysis.gopherRulesSql("doc_id", "text",
+          from = "train")
+        val cutSql = Dedup.substrCutSql("doc_id", "text", 4,
+          from = "planted")
+        val redSql = Dedup.piiRedactCutSql("doc_id", "dedup_text",
+          from = "(SELECT doc_id, dedup_text FROM cutq)")
+        val deconSql = Dedup.decontamCutSql("doc_id", "redacted_text", 4,
+          trainFrom = "(SELECT doc_id, redacted_text FROM redq)",
+          evalFrom = "(SELECT doc_id, text AS redacted_text FROM documents " +
+            "WHERE doc_id < 20)")
+        val bpe = TextAnalysis.bpeTokenCountsSql("doc_id", "dedup_text",
+          from = "decon")
+        s"""WITH train AS (SELECT * FROM documents WHERE doc_id >= 20),
+          |gated AS (
+          |  SELECT d.* FROM train d
+          |  JOIN ($gr) g USING (doc_id)
+          |  WHERE g.r1_word_count AND g.r2_mean_word_len
+          |    AND g.r3_symbol_ratio AND g.r4_bullet_lines
+          |    AND g.r5_ellipsis_lines AND g.r6_alpha_words),
+          |planted AS (
+          |  SELECT doc_id, source,
+          |    CASE WHEN doc_id % 11 = 3 THEN
+          |      text || ' mail u' || CAST(doc_id AS VARCHAR) ||
+          |        '@mail.example or 555-010-' ||
+          |        lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+          |    WHEN doc_id % 11 = 7 THEN
+          |      text || ' node 10.0.' || CAST(doc_id % 200 AS VARCHAR) ||
+          |        '.' || CAST(doc_id % 13 AS VARCHAR) ||
+          |        ' 10.1.' || CAST(doc_id % 200 AS VARCHAR) ||
+          |        '.' || CAST(doc_id % 13 AS VARCHAR)
+          |    ELSE text END AS text
+          |  FROM gated),
+          |cutq AS (SELECT * FROM ($cutSql)),
+          |redq AS (SELECT * FROM ($redSql)),
+          |decon AS (SELECT * FROM ($deconSql))
+          |SELECT k.source,
+          |  CAST(count(*) AS BIGINT) AS n_docs_kept,
+          |  CAST(sum(c.n_subwords) AS BIGINT) AS total_subwords,
+          |  round(avg(c.chars_per_subword), 6) AS mean_cps,
+          |  CAST(sum(dc.tokens_cut) AS BIGINT) AS decontam_tokens_cut,
+          |  CAST(sum(r.n_pii_spans) AS BIGINT) AS pii_spans_redacted
+          |FROM ($bpe) c
+          |JOIN decon dc USING (doc_id)
+          |JOIN redq r USING (doc_id)
+          |JOIN (SELECT doc_id, source FROM planted) k USING (doc_id)
+          |GROUP BY k.source""".stripMargin
+      }),
 
     // e2e_c4_prep: the C4-lineage prep chain — materially different from
     // e2e_llm_prep's Gopher gate because C4 rewrites documents at LINE
@@ -1615,7 +2822,7 @@ object TextQueries {
     // survivors keep full lines but lose short ragged last lines — the
     // line-level rewrite the Gopher gate cannot express (measured at
     // sf0.01: 366/500 pages kept, 259 of them line-rewritten).
-    "e2e_c4_prep" -> ((s, dir) => {
+    Query("e2e_c4_prep", (s, dir) => {
       val cleaned = TextAnalysis.c4StructuralClean(
         c4SegmentedDocs(s, dir), "text")
       // materialized: consumed by the chunk-dedup pass AND the source
@@ -1630,13 +2837,43 @@ object TextQueries {
         .agg(count(lit(1)).as("n_docs_kept"),
           sum(col("n_subwords")).as("total_subwords"),
           round(avg(col("chars_per_subword")), 6).as("mean_cps"))
-    }),
+    },
+      // e2e_c4_prep twin: the same word-wrap segmentation (W = 4 +
+      // doc_id%4, terminal period; list_slice/slice and the range
+      // bounds line up 1-based inclusive on both engines), then the
+      // c4Clean/chunkDedup/bpe fragments composed.
+      oracle = {
+        val clean = TextAnalysis.c4CleanSql("text", from = "seg")
+        val dd = Dedup.chunkDedupSql("doc_id", "clean_text", 3,
+          from = "cleaned")
+        val bpe = TextAnalysis.bpeTokenCountsSql("doc_id", "dedup_text",
+          from = "base")
+        s"""WITH seg AS (
+          |  SELECT doc_id, source,
+          |    CASE WHEN len(w) = 0 THEN '' ELSE array_to_string(
+          |      list_transform(range(0, CAST(ceil(len(w) / CAST(4 + (doc_id % 4) AS DOUBLE)) AS INT)),
+          |        i -> array_to_string(list_slice(w, i * (4 + (doc_id % 4)) + 1, (i + 1) * (4 + (doc_id % 4))), ' ') || '.'),
+          |      chr(10)) END AS text
+          |  FROM (SELECT doc_id, source,
+          |          list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS w
+          |        FROM documents)),
+          |cleaned AS ($clean),
+          |base AS (
+          |  SELECT dd.doc_id, dd.dedup_text, d.source
+          |  FROM ($dd) dd JOIN cleaned d USING (doc_id))
+          |SELECT b.source,
+          |  CAST(count(*) AS BIGINT) AS n_docs_kept,
+          |  CAST(sum(c.n_subwords) AS BIGINT) AS total_subwords,
+          |  round(avg(c.chars_per_subword), 6) AS mean_cps
+          |FROM ($bpe) c JOIN base b USING (doc_id)
+          |GROUP BY b.source""".stripMargin
+      }),
 
     // q8: per-source dataset card — the corpus-governance rollup a
     // training-data release ships (docs, token mass, quality, language
     // spread, exact-dup rate per source). One quality pass + one
     // window on the content hash + one aggregation on the source key.
-    "q8_dataset_card" -> ((s, dir) => {
+    Query("q8_dataset_card", (s, dir) => {
       val q = TextAnalysis.qualityColumns(Tables.documents(s, dir), "text")
       val withDup = q.withColumn("__n_sha", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window
@@ -1649,24 +2886,46 @@ object TextQueries {
         round(sum(when(col("__n_sha") > 1, 1).otherwise(0)).cast("double") /
           count(lit(1)), 6).as("dup_rate"),
         round(avg(col("n_chars").cast("double")), 6).as("mean_chars"))
-    }),
+    },
+      oracle = {
+        val qm = TextAnalysis.qualitySql("text")
+        s"""WITH q AS (
+          |  SELECT source, lang, n_chars,
+          |    CAST(${qm("n_words")} AS BIGINT) AS n_words,
+          |    ${qm("quality_score")} AS quality_score,
+          |    count(*) OVER (PARTITION BY sha256(text)) AS n_sha
+          |  FROM documents)
+          |SELECT source,
+          |  CAST(count(*) AS BIGINT) AS n_docs,
+          |  CAST(sum(n_words) AS BIGINT) AS total_words,
+          |  round(avg(quality_score), 6) AS mean_quality,
+          |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+          |  round(sum(CASE WHEN n_sha > 1 THEN 1 ELSE 0 END) /
+          |    CAST(count(*) AS DOUBLE), 6) AS dup_rate,
+          |  round(avg(CAST(n_chars AS DOUBLE)), 6) AS mean_chars
+          |FROM q GROUP BY source""".stripMargin
+      }),
 
     // t23: BPE-apply tokenization counts — the subword count a fixed
     // merge table produces (what actually fills a training shard);
     // per-row higher-order expressions, the merge fold is a codegen'd
     // replace chain.
-    "t23_bpe" -> ((s, dir) =>
-      TextAnalysis.bpeTokenCounts(Tables.documents(s, dir), "doc_id", "text")),
+    Query("t23_bpe", (s, dir) =>
+      TextAnalysis.bpeTokenCounts(Tables.documents(s, dir), "doc_id", "text"),
+      oracle = TextAnalysis.bpeTokenCountsSql("doc_id", "text")),
 
     // t21: DSIR importance weights for data selection — bucketed
     // unigram+bigram LMs fit on a 4-source "curated" target vs the
     // whole corpus as proposal; every doc scored with the smoothed
     // log importance ratio. 256 buckets (the model table stays a
     // broadcast literal at any corpus size).
-    "t21_dsir_weights" -> ((s, dir) =>
+    Query("t21_dsir_weights", (s, dir) =>
       TextAnalysis.dsirWeightsByPred(Tables.documents(s, dir),
         col("source").isin("src1", "src2", "src3", "src4"),
-        "doc_id", "text", 256)),
+        "doc_id", "text", 256),
+      oracle =
+        TextAnalysis.dsirWeightsSql("doc_id", "text",
+          "source IN ('src1', 'src2', 'src3', 'src4')", 256)),
 
     // t28: DSIR resampling — t21's importance weights actually applied:
     // weighted sampling WITHOUT replacement via the Gumbel top-k trick
@@ -1675,7 +2934,7 @@ object TextQueries {
     // sort, no sequential sampling state. Gumbel noise derives from the
     // portable SHA uniform; keys are canonically rounded BEFORE ranking
     // so both engines rank identical values (doc_id breaks ties).
-    "t28_dsir_sample" -> ((s, dir) => {
+    Query("t28_dsir_sample", (s, dir) => {
       val wts = TextAnalysis.dsirWeightsByPred(Tables.documents(s, dir),
           col("source").isin("src1", "src2", "src3", "src4"),
           "doc_id", "text", 256)
@@ -1687,7 +2946,23 @@ object TextQueries {
         .orderBy(col("gumbel_key").desc, col("doc_id"))
         .limit(100)
         .select("doc_id", "n_feats", "log_w", "gumbel_key")
-    }),
+    },
+      // t28 twin: t21's weight chain + the identical Gumbel key over the
+      // shared SHA uniform, ranked on the ROUNDED key.
+      oracle = {
+        val u = s"(${Hashing.sha28Sql("'dsir|' || doc_id")} % 1048576 + 0.5)" +
+          " / 1048576.0"
+        s"""WITH wts AS (
+          |  SELECT * FROM (${TextAnalysis.dsirWeightsSql("doc_id", "text",
+                "source IN ('src1', 'src2', 'src3', 'src4')", 256)})
+          |  WHERE log_w IS NOT NULL),
+          |keyed AS (
+          |  SELECT doc_id, n_feats, log_w,
+          |    round(log_w - ln(-ln($u)), 6) AS gumbel_key
+          |  FROM wts)
+          |SELECT doc_id, n_feats, log_w, gumbel_key
+          |FROM keyed ORDER BY gumbel_key DESC, doc_id LIMIT 100""".stripMargin
+      }),
 
     // t33: dd25's soft-dedup weights WIRED INTO the sampler — the
     // SoftDeDup consumer: selection probability is DSIR importance
@@ -1697,7 +2972,7 @@ object TextQueries {
     // weights ADD (log_w - ln commonness) and ride t28's exact Gumbel
     // top-k unchanged — weighted sampling composes multiplicatively,
     // which is why the standalone scorer (dd25) is the right interface.
-    "t33_soft_sample" -> ((s, dir) => {
+    Query("t33_soft_sample", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val wts = TextAnalysis.dsirWeightsByPred(docs,
           col("source").isin("src1", "src2", "src3", "src4"),
@@ -1714,7 +2989,29 @@ object TextQueries {
         .orderBy(col("gumbel_key").desc, col("doc_id"))
         .limit(100)
         .select("doc_id", "log_w", "commonness", "log_w_soft", "gumbel_key")
-    }),
+    },
+      // t33 twin: t21's weight chain joined with dd25's commonness (both
+      // fragments verbatim), combined in log space, ranked on the same
+      // rounded Gumbel key over a fresh SHA uniform.
+      oracle = {
+        val u = s"(${Hashing.sha28Sql("'softdsir|' || doc_id")} % 1048576" +
+          " + 0.5) / 1048576.0"
+        s"""WITH wts AS (
+          |  SELECT * FROM (${TextAnalysis.dsirWeightsSql("doc_id", "text",
+                "source IN ('src1', 'src2', 'src3', 'src4')", 256)})
+          |  WHERE log_w IS NOT NULL),
+          |soft AS (
+          |  SELECT doc_id, commonness
+          |  FROM (${Dedup.softDedupWeightsSql("doc_id", "text", 4)})),
+          |keyed AS (
+          |  SELECT w.doc_id, w.log_w, s.commonness,
+          |    round(w.log_w - ln(s.commonness), 6) AS log_w_soft,
+          |    round(round(w.log_w - ln(s.commonness), 6)
+          |      - ln(-ln($u)), 6) AS gumbel_key
+          |  FROM wts w JOIN soft s USING (doc_id))
+          |SELECT doc_id, log_w, commonness, log_w_soft, gumbel_key
+          |FROM keyed ORDER BY gumbel_key DESC, doc_id LIMIT 100""".stripMargin
+      }),
 
     // t34: LEARNED quality classifier — t2's heuristics' production
     // successor: hashed unigram+bigram bucket counts (one fused kernel
@@ -1731,12 +3028,87 @@ object TextQueries {
     // discriminator on either would honestly fit a constant. The twin
     // replays the identical fit: unrolled gradient CTEs with the same
     // round-8 boundaries.
-    "t34_quality_clf" -> ((s, dir) =>
+    Query("t34_quality_clf", (s, dir) =>
       TextAnalysis.qualityClassifierScores(Tables.documents(s, dir),
         "doc_id", "text",
         labelExpr = graft.functions.GopherCounts(col("text"),
           TextAnalysis.gopherStopwords).getField("keep6") === 1L,
-        trainPred = col("doc_id") % 5 === 0, iters = 12)),
+        trainPred = col("doc_id") % 5 === 0, iters = 12),
+      // t34 twin: the m5 GD-fit replay generalized to 16 hashed-bucket
+      // features — identical round-8 boundaries at stats and gradients,
+      // unrolled iteration CTEs, guard s=0/NULL -> 1, then the scored
+      // corpus with round-6 prob and the threshold on the ROUNDED prob
+      // (the engine's y_pred contract).
+      oracle = {
+        val B = 16
+        val iters = 12
+        val gr = TextAnalysis.gopherRulesSql("doc_id", "text")
+        val featCols = (0 until B).map(b =>
+          s"CAST(len(list_filter(fl, f -> ${Hashing.sha28Sql("f")} % $B = $b)) AS DOUBLE) AS f$b")
+          .mkString(",\n|    ")
+        val statCols = (0 until B).map(b =>
+          s"round(avg(f$b), 8) AS m$b, round(stddev_samp(f$b), 8) AS sr$b")
+          .mkString(",\n|  ")
+        val guardCols = (0 until B).map(b =>
+          s"m$b, CASE WHEN sr$b IS NULL OR sr$b = 0 THEN 1.0 ELSE sr$b END AS s$b")
+          .mkString(",\n|  ")
+        val zCols = (0 until B).map(b => s"(f$b - m$b) / s$b AS z$b")
+          .mkString(", ")
+        def sig(bt: String) = s"1/(1+exp(-($bt.c0 + " +
+          (0 until B).map(b => s"$bt.c${b + 1}*z$b").mkString(" + ") + ")))"
+        val b0Cols = ("0.0 AS c0" +: (0 until B).map(b => s"0.0 AS c${b + 1}"))
+          .mkString(", ")
+        val iterCtes = (1 to iters).map { k =>
+          val prev = s"b${k - 1}"
+          val gCols = (s"round(avg(${sig(prev)} - y), 8) AS g0" +:
+            (0 until B).map(b =>
+              s"round(avg((${sig(prev)} - y) * z$b), 8) AS g${b + 1}"))
+            .mkString(",\n|    ")
+          val bCols = (s"$prev.c0 - 0.5*g0 AS c0" +:
+            (0 until B).map(b => s"$prev.c${b + 1} - 0.5*g${b + 1} AS c${b + 1}"))
+            .mkString(", ")
+          // MATERIALIZED: DuckDB inlines plain CTEs, so an unrolled
+          // GD chain re-expands the whole upstream fit per reference —
+          // exponential in iterations. Materializing pins each step to
+          // one evaluation (the engine's driver loop does the same).
+          s"""g$k AS MATERIALIZED (SELECT $gCols FROM tr, $prev),
+             |b$k AS MATERIALIZED (SELECT $bCols FROM $prev, g$k)""".stripMargin
+        }.mkString(",\n")
+        s"""WITH gf AS (
+          |  SELECT doc_id,
+          |    CASE WHEN r1_word_count AND r2_mean_word_len
+          |      AND r3_symbol_ratio AND r4_bullet_lines
+          |      AND r5_ellipsis_lines AND r6_alpha_words
+          |    THEN 1.0 ELSE 0.0 END AS label
+          |  FROM ($gr)),
+          |toks AS (
+          |  SELECT doc_id,
+          |    list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
+          |  FROM documents),
+          |fs AS (
+          |  SELECT doc_id, list_concat(w,
+          |    CASE WHEN len(w) >= 2
+          |      THEN list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i + 1])
+          |      ELSE [] END) AS fl
+          |  FROM toks),
+          |fx AS MATERIALIZED (
+          |  SELECT doc_id, g.label, doc_id % 5 = 0 AS is_tr,
+          |    $featCols
+          |  FROM fs JOIN gf g USING (doc_id)),
+          |tr0 AS (SELECT * FROM fx WHERE is_tr),
+          |st AS (SELECT $statCols FROM tr0),
+          |stg AS (SELECT $guardCols FROM st),
+          |tr AS MATERIALIZED (SELECT label AS y, $zCols FROM tr0, stg),
+          |b0 AS (SELECT $b0Cols),
+          |$iterCtes,
+          |te AS (SELECT doc_id, label, $zCols FROM fx, stg),
+          |pred AS (SELECT doc_id, label,
+          |  round(${sig(s"b$iters")}, 6) AS prob FROM te, b$iters)
+          |SELECT doc_id, label, prob,
+          |  CASE WHEN prob IS NULL THEN NULL
+          |       WHEN prob >= 0.5 THEN 1 ELSE 0 END AS y_pred
+          |FROM pred""".stripMargin
+      }),
 
     // Incremental daily-ingest dedup: the 20% batch (doc_id % 5 = 0)
     // deduped against the 80% corpus THROUGH its STORED digest +
@@ -1744,7 +3116,7 @@ object TextQueries {
     // the corpus is never re-hashed wholesale and the state read is a
     // parquet scan, exactly the production shape), then within itself.
     // Same LSH parameters as the dd7 family.
-    "dd13_incremental" -> ((s, dir) => {
+    Query("dd13_incremental", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val existing = docs.filter(col("doc_id") % 5 =!= 0)
       val incoming = docs.filter(col("doc_id") % 5 === 0)
@@ -1754,7 +3126,8 @@ object TextQueries {
         s.read.parquet(sig),
         incoming, "doc_id", "text", 2, 4, 2, 0.05)
         .select("doc_id", "lang", "source")
-    }),
+    },
+      oracle = incrementalDedupSqlFor(2, 4, 2, 0.05)),
 
     // dd23: the SAME stored-state incremental path at dd21's production
     // banding. dd13's 2-hash band keys make the cross-frame candidate
@@ -1763,7 +3136,7 @@ object TextQueries {
     // before verify could drop the random candidates. At 4 rows/band the
     // floor falls to J_floor^4 and the daily-ingest path stays
     // batch-proportional through the third docs decade.
-    "dd23_incremental_prod" -> ((s, dir) => {
+    Query("dd23_incremental_prod", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val existing = docs.filter(col("doc_id") % 5 =!= 0)
       val incoming = docs.filter(col("doc_id") % 5 === 0)
@@ -1773,7 +3146,8 @@ object TextQueries {
         s.read.parquet(sig),
         incoming, "doc_id", "text", 3, 16, 4, 0.5)
         .select("doc_id", "lang", "source")
-    }),
+    },
+      oracle = incrementalDedupSqlFor(3, 16, 4, 0.5)),
 
     // The FULL training-data assembly, end to end, as one hash-gated
     // query: exact dedup -> LSH+Jaccard near-dedup (K=3, 6 hashes, 2
@@ -1782,7 +3156,7 @@ object TextQueries {
     // dedup keeping the (min doc, min chunk) owner. One row per
     // surviving training chunk — what a user of this engine actually
     // ships to a trainer.
-    "e2e_corpus_assembly" -> ((s, dir) => {
+    Query("e2e_corpus_assembly", (s, dir) => {
       // trimmed prepare: this composition reads only (doc_id, text,
       // lang) downstream of the stage boundary — the full prepare()
       // additionally computed token counts + langId + fingerprint per
@@ -1794,7 +3168,56 @@ object TextQueries {
           "text", "lang", mixtureWeights, 0.5, 30, 5)
         .select("doc_id", "lang", "chunk_id", "start_tok", "n_chunk_tokens",
           "chunk_sha")
-    }),
+    },
+      // e2e twin: every stage's proven SQL fragment, composed. d1 = exact
+      // dedup keepers; cand/dup = banded minhash candidates + 3-shingle
+      // Jaccard verify at prepare's parameters; d3 = quality gate on the
+      // shared rounded score; adm = the mixture admission (nested WITH as
+      // a derived table, reading d3); chunks likewise over the admitted
+      // docs; rk=1 = the (min doc, min chunk) owner per chunk SHA.
+      oracle = {
+        val sig6 = (0 until 6)
+          .map(i => s"${Dedup.minhashSql(3, i)} AS mh$i").mkString(",\n  ")
+        val shExpr = Dedup.shinglesOverTkSql(3)
+        val setExpr =
+          s"list_sort(list_distinct(list_transform($shExpr, s -> ${Hashing.sha28Sql("s")})))"
+        val jac = """round(len(list_intersect(a.sh, b.sh)) /
+          |    CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE), 6)""".stripMargin
+        val qExpr = TextAnalysis.qualitySql("text")("quality_score")
+        s"""WITH d1 AS (
+          |  SELECT * FROM documents WHERE doc_id IN (
+          |    SELECT min(doc_id) FROM documents GROUP BY sha256(text))),
+          |sig AS (SELECT doc_id,\n  $sig6\nFROM ${Dedup.tkSourceSqlFrom("d1", "text", "doc_id")}),
+          |bands AS (
+          |  SELECT doc_id, CAST(('0x' || substr(sha256(('0_' || mh0 || '_' || mh1 || '_' || mh2)), 1, 15)) AS BIGINT) AS band_key FROM sig
+          |  UNION ALL SELECT doc_id, CAST(('0x' || substr(sha256(('1_' || mh3 || '_' || mh4 || '_' || mh5)), 1, 15)) AS BIGINT) FROM sig),
+          |cand AS (
+          |  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+          |  FROM bands l JOIN bands r
+          |    ON l.band_key = r.band_key AND l.doc_id < r.doc_id),
+          |sets AS (SELECT doc_id, $setExpr AS sh
+          |  FROM ${Dedup.tkSourceSqlFrom("d1", "text", "doc_id")}),
+          |dup AS (
+          |  SELECT DISTINCT c.id_b FROM cand c
+          |  JOIN sets a ON c.id_a = a.doc_id
+          |  JOIN sets b ON c.id_b = b.doc_id
+          |  WHERE $jac >= 0.7),
+          |d3 AS (
+          |  SELECT * FROM d1
+          |  WHERE doc_id NOT IN (SELECT id_b FROM dup) AND $qExpr >= 30.0),
+          |adm AS (SELECT * FROM (
+          |  ${TextAnalysis.mixtureSampleSql("doc_id", "text", "lang",
+               mixtureWeights, 0.5, from = "d3")})),
+          |d4 AS (SELECT * FROM d3 WHERE doc_id IN (SELECT doc_id FROM adm)),
+          |chunks AS (SELECT * FROM (
+          |  ${TextAnalysis.chunkDocumentsSql("doc_id", "text", 30, 5, from = "d4")})),
+          |ranked AS (
+          |  SELECT *, row_number() OVER (PARTITION BY chunk_sha
+          |    ORDER BY doc_id, chunk_id) AS rk FROM chunks)
+          |SELECT c.doc_id, a.lang, c.chunk_id, c.start_tok,
+          |  c.n_chunk_tokens, c.chunk_sha
+          |FROM ranked c LEFT JOIN adm a USING (doc_id) WHERE rk = 1""".stripMargin
+      }),
 
     // Bloom-accelerated exact membership: which batch docs (doc_id % 5 =
     // 0, dd13's split) already exist by content SHA in the corpus. The
@@ -1802,80 +3225,192 @@ object TextQueries {
     // codegen'd BloomFilterMightContain; false positives die in the
     // exact semi-join, so the oracle is a plain IN — the bloom only
     // shapes the plan (join input = bloom-passing rows), never the rows.
-    "dd15_bloom_membership" -> ((s, dir) => {
+    Query("dd15_bloom_membership", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.bloomExactMembership(
         docs.filter(col("doc_id") % 5 === 0),
         docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text")
-    }),
+    },
+      // dd15 twin: membership is bloom-invisible — a plain IN over the
+      // corpus shas (the bloom only prunes the engine's join input).
+      oracle =
+        """SELECT doc_id, sha256(text) AS text_sha
+          |FROM documents
+          |WHERE doc_id % 5 = 0
+          |  AND sha256(text) IN (
+          |    SELECT sha256(text) FROM documents WHERE doc_id % 5 <> 0)""".stripMargin),
 
     // Decontamination gate: 3-shingle overlap of each corpus doc against
     // the doc_id<20 "eval set", broadcast semi-join on the bench shingles.
-    "t7_contamination" -> ((s, dir) => {
+    Query("t7_contamination", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.contaminationScan(docs.filter(col("doc_id") >= 20), "doc_id", "text",
         docs.filter(col("doc_id") < 20), "text", K)
-    }),
+    },
+      oracle = {
+        val shExpr = Dedup.shinglesOverTkSql(K)
+        s"""WITH sh AS (
+          |  SELECT doc_id, list_distinct($shExpr) AS sh
+          |  FROM ${Dedup.tkSourceSql("text", "doc_id")}),
+          |bench AS (SELECT DISTINCT unnest(sh) AS s FROM sh WHERE doc_id < 20),
+          |corpus AS (SELECT doc_id, sh FROM sh WHERE doc_id >= 20),
+          |ex AS (SELECT doc_id, unnest(sh) AS s FROM corpus),
+          |hits AS (
+          |  SELECT e.doc_id, count(*) AS n_overlap
+          |  FROM ex e JOIN bench b ON e.s = b.s GROUP BY 1)
+          |SELECT c.doc_id, CAST(len(c.sh) AS BIGINT) AS n_shingles,
+          |  coalesce(h.n_overlap, 0) AS n_overlap,
+          |  CASE WHEN len(c.sh) > 0
+          |    THEN round(coalesce(h.n_overlap, 0) / CAST(len(c.sh) AS DOUBLE), 6)
+          |    ELSE 0.0 END AS contamination
+          |FROM corpus c LEFT JOIN hits h USING (doc_id)""".stripMargin
+      }),
 
     // Corpus TF-IDF: top-5 salient terms per document (smoothed idf;
     // vocabulary-sized IDF table broadcast back onto term counts).
-    "t5_tfidf" -> ((s, dir) =>
-      TextAnalysis.tfIdfTopK(Tables.documents(s, dir), "doc_id", "text", 5)),
+    Query("t5_tfidf", (s, dir) =>
+      TextAnalysis.tfIdfTopK(Tables.documents(s, dir), "doc_id", "text", 5),
+      oracle =
+        """WITH tk AS (
+          |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS tk FROM documents),
+          |terms AS (SELECT doc_id, unnest(tk) AS term FROM tk),
+          |termf AS (SELECT doc_id, term FROM terms WHERE term <> ''),
+          |tf AS (SELECT doc_id, term, count(*) AS tf FROM termf GROUP BY 1, 2),
+          |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM termf GROUP BY 1),
+          |n AS (SELECT count(*) AS n FROM documents),
+          |scored AS (
+          |  SELECT tf.doc_id, tf.term, tf.tf, df.df,
+          |    round(tf.tf * (ln((n.n + 1.0) / (df.df + 1.0)) + 1.0), 6) AS tfidf
+          |  FROM tf JOIN df USING (term) CROSS JOIN n),
+          |ranked AS (
+          |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rk
+          |  FROM scored)
+          |SELECT doc_id, term, tf, df, tfidf, CAST(rk AS BIGINT) AS rk
+          |FROM ranked WHERE rk <= 5""".stripMargin),
 
     // Deterministic stratified corpus sample: 25% per language, ranked by
     // SHA-256 of the id — the portable seedless order both engines share.
-    "t6_stratified_sample" -> ((s, dir) =>
+    Query("t6_stratified_sample", (s, dir) =>
       TextAnalysis.stratifiedSample(Tables.documents(s, dir), "doc_id", "lang", 0.25)
-        .select("doc_id", "lang", "source")),
+        .select("doc_id", "lang", "source"),
+      oracle =
+        """WITH ranked AS (
+          |  SELECT doc_id, lang, source,
+          |    row_number() OVER (PARTITION BY lang
+          |      ORDER BY sha256(CAST(doc_id AS VARCHAR)), doc_id) AS rk,
+          |    count(*) OVER (PARTITION BY lang) AS n
+          |  FROM documents)
+          |SELECT doc_id, lang, source FROM ranked WHERE rk <= ceil(0.25 * n)""".stripMargin),
 
     // Unigram-LM quality score: mean token log-prob under the corpus's
     // own add-one-smoothed unigram model (broadcast vocabulary attach).
-    "t8_unigram_lm" -> ((s, dir) =>
-      TextAnalysis.unigramLogProb(Tables.documents(s, dir), "doc_id", "text")),
+    Query("t8_unigram_lm", (s, dir) =>
+      TextAnalysis.unigramLogProb(Tables.documents(s, dir), "doc_id", "text"),
+      oracle =
+        """WITH ex AS (
+          |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS term
+          |  FROM documents),
+          |exf AS (SELECT doc_id, term FROM ex WHERE term <> ''),
+          |model AS (SELECT term, count(*) AS cnt FROM exf GROUP BY 1),
+          |tot AS (SELECT sum(cnt) AS total, count(*) AS vocab FROM model),
+          |scored AS (
+          |  SELECT e.doc_id, ln((m.cnt + 1.0) / (t.total + t.vocab)) AS logp
+          |  FROM exf e JOIN model m USING (term) CROSS JOIN tot t),
+          |agg AS (
+          |  SELECT doc_id, count(*) AS n_tokens, round(avg(logp), 6) AS avg_logp
+          |  FROM scored GROUP BY 1)
+          |SELECT d.doc_id, coalesce(a.n_tokens, 0) AS n_tokens, a.avg_logp
+          |FROM documents d LEFT JOIN agg a USING (doc_id)""".stripMargin),
 
     // Fuller Gopher repetition panel: top/duplicate n-gram coverage for
     // n=3 and n=5 (t10 covers tokens + bigrams).
-    "t15_ngram_coverage" -> ((s, dir) =>
-      TextAnalysis.ngramRepetition(Tables.documents(s, dir), "doc_id", "text")),
+    Query("t15_ngram_coverage", (s, dir) =>
+      TextAnalysis.ngramRepetition(Tables.documents(s, dir), "doc_id", "text"),
+      oracle = TextAnalysis.ngramRepetitionSql("doc_id", "text")),
 
     // Exact frequent tokens via Misra-Gries candidates + exact verify:
     // the shuffle is proportional to heavy-token occurrences, not the
     // corpus, and the verify pass makes the output exactly GROUP BY /
     // HAVING (so the twin is the plain definition).
-    "t16_heavy_hitters" -> ((s, dir) =>
-      TextAnalysis.heavyHitters(Tables.documents(s, dir), "text")),
+    Query("t16_heavy_hitters", (s, dir) =>
+      TextAnalysis.heavyHitters(Tables.documents(s, dir), "text"),
+      oracle = TextAnalysis.heavyHittersSql("documents", "text")),
 
     // FineWeb-style per-source quota: keep the 20 best-quality docs per
     // source (quality desc, doc_id tie-break) via the lossless two-phase
     // top-N — no task ever sorts a whole source.
-    "dd17_source_cap" -> ((s, dir) => {
+    Query("dd17_source_cap", (s, dir) => {
       val q = TextAnalysis.qualityColumns(Tables.documents(s, dir), "text")
       Dedup.capPerGroup(q, "source", "doc_id",
           Seq(col("quality_score").desc), n = 20)
         .select("doc_id", "source", "quality_score", "grp_rank")
-    }),
+    },
+      // dd17 twin: the single-window definition the two-phase plan
+      // implements losslessly.
+      oracle = {
+        val q = TextAnalysis.qualitySql("text")
+        s"""WITH scored AS (
+          |  SELECT doc_id, source, ${q("quality_score")} AS quality_score
+          |  FROM documents),
+          |ranked AS (
+          |  SELECT doc_id, source, quality_score,
+          |    row_number() OVER (PARTITION BY source
+          |      ORDER BY quality_score DESC, doc_id) AS grp_rank
+          |  FROM scored)
+          |SELECT doc_id, source, quality_score, CAST(grp_rank AS BIGINT) AS grp_rank
+          |FROM ranked WHERE grp_rank <= 20""".stripMargin
+      }),
 
     // Deterministic 90/5/5 train/val/test split by portable SHA bucket —
     // stable under corpus growth, pure per-row expression.
-    "t17_hash_split" -> ((s, dir) =>
+    Query("t17_hash_split", (s, dir) =>
       TextAnalysis.hashSplit(Tables.documents(s, dir), "doc_id",
           Seq("train" -> 900000L, "val" -> 50000L, "test" -> 50000L))
-        .select("doc_id", "lang", "split")),
+        .select("doc_id", "lang", "split"),
+      oracle = {
+        val label = TextAnalysis.hashSplitSql("doc_id",
+          Seq("train" -> 900000L, "val" -> 50000L, "test" -> 50000L))
+        s"SELECT doc_id, lang, $label AS split FROM documents"
+      }),
 
     // Cross-fit LM perplexity (the full ccnet shape): unigram model fit
     // on the 'en' reference slice only, every document scored against it
     // (OOV tokens take the smoothed floor), ppl = exp(-avg_logp).
-    "t14_lm_crossppl" -> ((s, dir) => {
+    Query("t14_lm_crossppl", (s, dir) => {
       val docs = Tables.documents(s, dir)
       TextAnalysis.unigramCrossScore(
         docs.filter(col("lang") === "en"), docs, "doc_id", "text")
-    }),
+    },
+      // t14 twin: model CTEs over the 'en' slice, LEFT attach with the
+      // count-0 coalesce for OOV, exp(-rounded avg) so both engines
+      // exponentiate identical inputs.
+      oracle =
+        """WITH ref AS (
+          |  SELECT unnest(string_split_regex(lower(text), '\s+')) AS term
+          |  FROM documents WHERE lang = 'en'),
+          |reff AS (SELECT term FROM ref WHERE term <> ''),
+          |model AS (SELECT term, count(*) AS cnt FROM reff GROUP BY 1),
+          |tot AS (SELECT coalesce(sum(cnt), 0) AS total, count(*) AS vocab FROM model),
+          |ex AS (
+          |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS term
+          |  FROM documents),
+          |exf AS (SELECT doc_id, term FROM ex WHERE term <> ''),
+          |scored AS (
+          |  SELECT e.doc_id,
+          |    ln((coalesce(m.cnt, 0) + 1.0) / greatest(t.total + t.vocab, 1)) AS logp
+          |  FROM exf e LEFT JOIN model m USING (term) CROSS JOIN tot t),
+          |agg AS (
+          |  SELECT doc_id, count(*) AS n_tokens, round(avg(logp), 6) AS avg_logp
+          |  FROM scored GROUP BY 1)
+          |SELECT d.doc_id, coalesce(a.n_tokens, 0) AS n_tokens, a.avg_logp,
+          |  round(exp(-a.avg_logp), 6) AS ppl
+          |FROM documents d LEFT JOIN agg a USING (doc_id)""".stripMargin),
 
     // t27: language-ID confusion matrix — the curation QC that tells you
     // how far to trust t1's heuristic before using it as a mixture gate:
     // (labeled lang × predicted lang) counts plus the per-label recall
     // share each predicted cell represents.
-    "t27_langid_confusion" -> ((s, dir) => {
+    Query("t27_langid_confusion", (s, dir) => {
       val pred = Tables.documents(s, dir)
         .select(col("lang"), TextAnalysis.langId(col("text")).as("lang_pred"))
       val counts = pred.groupBy("lang", "lang_pred").agg(count(lit(1)).as("n"))
@@ -1884,24 +3419,82 @@ object TextQueries {
         .select(col("lang"), col("lang_pred"), col("n"),
           round(col("n").cast("double") / col("n_lang"), 6).as("share"),
           when(col("lang") === col("lang_pred"), 1).otherwise(0).as("is_correct"))
-    }),
+    },
+      oracle =
+        s"""WITH pred AS (
+          |  SELECT lang, ${TextAnalysis.langIdSql("text")} AS lang_pred
+          |  FROM documents),
+          |counts AS (
+          |  SELECT lang, lang_pred, count(*) AS n FROM pred GROUP BY 1, 2),
+          |tot AS (SELECT lang, sum(n) AS n_lang FROM counts GROUP BY 1)
+          |SELECT c.lang, c.lang_pred, c.n,
+          |  round(CAST(c.n AS DOUBLE) / t.n_lang, 6) AS share,
+          |  CASE WHEN c.lang = c.lang_pred THEN 1 ELSE 0 END AS is_correct
+          |FROM counts c JOIN tot t USING (lang)""".stripMargin),
 
     // t24: t14 upgraded one LM order — conditional bigram perplexity
     // P(w2|w1) with add-one smoothing over the reference vocabulary.
     // Context-sensitive, so word-salad that sails through a unigram
     // filter scores poorly here.
-    "t24_bigram_lm" -> ((s, dir) => {
+    Query("t24_bigram_lm", (s, dir) => {
       val docs = Tables.documents(s, dir)
       TextAnalysis.bigramCrossScore(
         docs.filter(col("lang") === "en"), docs, "doc_id", "text")
-    }),
+    },
+      // t24 twin: bigram + head-count CTEs over the 'en' slice via the
+      // proven k=2 shingle fragment; vocab V as a 1-row cross join.
+      oracle =
+        s"""WITH rtok AS (
+          |  SELECT string_split_regex(lower(text), '\\s+') AS tk
+          |  FROM documents WHERE lang = 'en'),
+          |rbi AS (SELECT unnest(${Dedup.shinglesOverTkSql(2)}) AS bi FROM rtok),
+          |model AS (SELECT bi, count(*) AS cbi FROM rbi GROUP BY 1),
+          |heads AS (
+          |  SELECT string_split(bi, ' ')[1] AS head, count(*) AS c1
+          |  FROM rbi GROUP BY 1),
+          |vcb AS (
+          |  SELECT greatest(count(DISTINCT term), 1) AS v FROM (
+          |    SELECT unnest(string_split_regex(lower(text), '\\s+')) AS term
+          |    FROM documents WHERE lang = 'en') WHERE term <> ''),
+          |dtok AS (
+          |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS tk
+          |  FROM documents),
+          |dbi AS (
+          |  SELECT doc_id, unnest(${Dedup.shinglesOverTkSql(2)}) AS bi FROM dtok),
+          |db2 AS (
+          |  SELECT doc_id, bi, string_split(bi, ' ')[1] AS head FROM dbi),
+          |scored AS (
+          |  SELECT d.doc_id,
+          |    ln((coalesce(m.cbi, 0) + 1.0) / (coalesce(h.c1, 0) + v.v)) AS logp
+          |  FROM db2 d LEFT JOIN model m USING (bi)
+          |  LEFT JOIN heads h USING (head) CROSS JOIN vcb v),
+          |agg AS (
+          |  SELECT doc_id, count(*) AS n_bigrams, round(avg(logp), 6) AS avg_logp
+          |  FROM scored GROUP BY 1)
+          |SELECT d.doc_id, coalesce(a.n_bigrams, 0) AS n_bigrams, a.avg_logp,
+          |  round(exp(-a.avg_logp), 6) AS ppl
+          |FROM documents d LEFT JOIN agg a USING (doc_id)""".stripMargin),
 
     // Deterministic sequence packing: per-language 2000-token shards in
     // SHA order (the training-data chunk assignment).
-    "t9_pack_shards" -> ((s, dir) =>
+    Query("t9_pack_shards", (s, dir) =>
       TextAnalysis.packIntoShards(Tables.documents(s, dir), "doc_id", "text",
         "lang", 2000L)
-        .select("doc_id", "lang", "n_tokens", "shard_id")),
+        .select("doc_id", "lang", "n_tokens", "shard_id"),
+      oracle =
+        """WITH toks AS (
+          |  SELECT doc_id, lang,
+          |    len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> ''))
+          |      AS n_tokens
+          |  FROM documents),
+          |packed AS (
+          |  SELECT doc_id, lang, n_tokens,
+          |    CAST(floor(coalesce(sum(n_tokens) OVER (PARTITION BY lang
+          |      ORDER BY sha256(CAST(doc_id AS VARCHAR)), doc_id
+          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2000)
+          |      AS BIGINT) AS shard_id
+          |  FROM toks)
+          |SELECT doc_id, lang, n_tokens, shard_id FROM packed""".stripMargin),
 
     // q11: shard delivery manifest — per shipped shard the doc count,
     // token total and an ORDER-INDEPENDENT content digest (XOR of the
@@ -1909,7 +3502,7 @@ object TextQueries {
     // consuming a shard, and XOR makes the digest mergeable across
     // partial manifests (associative, commutative — the sketch property
     // again). One grouped pass over t9's packing.
-    "q11_shard_manifest" -> ((s, dir) =>
+    Query("q11_shard_manifest", (s, dir) =>
       TextAnalysis.packIntoShards(Tables.documents(s, dir), "doc_id", "text",
           "lang", 2000L)
         .withColumn("__h", Hashing.sha60(col("text")))
@@ -1917,57 +3510,128 @@ object TextQueries {
         .agg(count(lit(1)).as("n_docs"),
           sum("n_tokens").as("shard_tokens"),
           min("doc_id").as("first_doc"),
-          expr("bit_xor(__h)").as("content_digest"))),
+          expr("bit_xor(__h)").as("content_digest")),
+      // q11 twin: t9's single-window packing + grouped manifest with the
+      // XOR content digest.
+      oracle =
+        s"""WITH toks AS (
+          |  SELECT doc_id, lang, text,
+          |    len(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> ''))
+          |      AS n_tokens
+          |  FROM documents),
+          |packed AS (
+          |  SELECT doc_id, lang, text, n_tokens,
+          |    CAST(floor(coalesce(sum(n_tokens) OVER (PARTITION BY lang
+          |      ORDER BY sha256(CAST(doc_id AS VARCHAR)), doc_id
+          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2000)
+          |      AS BIGINT) AS shard_id
+          |  FROM toks)
+          |SELECT lang, shard_id, count(*) AS n_docs,
+          |  CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
+          |  min(doc_id) AS first_doc,
+          |  bit_xor(${Hashing.sha60Sql("text")}) AS content_digest
+          |FROM packed GROUP BY 1, 2""".stripMargin),
 
     // Token-budget corpus mixing: keep 50% of corpus tokens, split across
     // languages by the target weights, admitting docs in portable SHA
     // order per language (the data-mixture step of corpus assembly).
-    "t12_mixture" -> ((s, dir) =>
+    Query("t12_mixture", (s, dir) =>
       TextAnalysis.mixtureSample(Tables.documents(s, dir), "doc_id", "text",
-        "lang", mixtureWeights, 0.5)),
+        "lang", mixtureWeights, 0.5),
+      oracle = TextAnalysis.mixtureSampleSql("doc_id", "text", "lang",
+        mixtureWeights, 0.5)),
 
     // Quality-aware near-dup retention: per LSH-verified cluster keep the
     // highest-quality member (not the arbitrary min id), singletons
     // always survive.
-    "dd11_best_rep" -> ((s, dir) => {
+    Query("dd11_best_rep", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val q = TextAnalysis.qualityColumns(docs, "text")
       val clusters = Dedup.dupClusters(
         Dedup.lshVerifiedPairs(docs, "doc_id", "text", 2, 4, 2, 0.05))
       Dedup.keepBestRepresentatives(q, "doc_id", clusters, col("quality_score"))
         .select("doc_id", "lang", "source", "quality_score")
-    }),
+    },
+      oracle =
+        s"""WITH RECURSIVE $lshVerifiedCtes,
+          |$componentCtes,
+          |clusters AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
+          |q AS (SELECT doc_id, lang, source,
+          |  ${TextAnalysis.qualitySql("text")("quality_score")} AS quality_score
+          |  FROM documents),
+          |a AS (SELECT q.*, coalesce(c.cid, q.doc_id) AS cluster_key
+          |  FROM q LEFT JOIN clusters c ON q.doc_id = c.id),
+          |ranked AS (SELECT *, row_number() OVER (PARTITION BY cluster_key
+          |    ORDER BY quality_score DESC, doc_id) AS rk FROM a)
+          |SELECT doc_id, lang, source, quality_score
+          |FROM ranked WHERE rk = 1""".stripMargin),
 
     // Overlapping token-window chunking (30-token windows, 5-token
     // overlap): the context-window prep that splits long documents, with
     // a portable chunk SHA for downstream chunk-level dedup.
-    "t13_chunks" -> ((s, dir) =>
+    Query("t13_chunks", (s, dir) =>
       TextAnalysis.chunkDocuments(Tables.documents(s, dir), "doc_id", "text",
-        30, 5)),
+        30, 5),
+      oracle = TextAnalysis.chunkDocumentsSql("doc_id", "text", 30, 5)),
 
     // Gopher-style repetition signals: duplicate-token fraction and
     // top-bigram fraction per document (the repetition-removal filter).
-    "t10_repetition" -> ((s, dir) =>
-      TextAnalysis.repetitionMetrics(Tables.documents(s, dir), "doc_id", "text")),
+    Query("t10_repetition", (s, dir) =>
+      TextAnalysis.repetitionMetrics(Tables.documents(s, dir), "doc_id", "text"),
+      oracle =
+        """WITH tk AS (
+          |  SELECT doc_id,
+          |    list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tk
+          |  FROM documents),
+          |b AS (
+          |  SELECT doc_id, len(tk) AS n_tokens, len(list_distinct(tk)) AS n_distinct,
+          |    [tk[i] || ' ' || tk[i + 1] for i in range(1, len(tk))] AS bg
+          |  FROM tk),
+          |e AS (SELECT doc_id, unnest(bg) AS bigram FROM b),
+          |c AS (SELECT doc_id, bigram, count(*) AS c FROM e GROUP BY 1, 2),
+          |t AS (SELECT doc_id, max(c) AS top_n FROM c GROUP BY 1)
+          |SELECT b.doc_id, n_tokens, n_distinct,
+          |  round(CASE WHEN n_tokens > 0
+          |    THEN 1.0 - n_distinct / CAST(n_tokens AS DOUBLE) ELSE 0.0 END, 6)
+          |    AS dup_token_frac,
+          |  round(CASE WHEN n_tokens > 1
+          |    THEN coalesce(top_n, 0) / CAST(n_tokens - 1 AS DOUBLE) ELSE 0.0 END, 6)
+          |    AS top_bigram_frac
+          |FROM b LEFT JOIN t USING (doc_id)""".stripMargin),
 
     // PII scan + redaction: email/phone/IPv4 match counts and the
     // placeholder-redacted text (the scrubbing gate; the synthetic corpus
     // is PII-free, so counts are zero here — detection behavior is pinned
     // on crafted fixtures in TextAnalysisSpec).
-    "t11_pii" -> ((s, dir) =>
+    Query("t11_pii", (s, dir) =>
       TextAnalysis.piiColumns(Tables.documents(s, dir), "text")
         .select(col("doc_id"), col("n_emails"), col("n_phones"),
           col("n_ipv4"), col("pii_total"),
-          length(col("redacted_text")).cast("long").as("redacted_len"))),
+          length(col("redacted_text")).cast("long").as("redacted_len")),
+      oracle = {
+        val m = TextAnalysis.piiSql("text")
+        s"""SELECT doc_id, ${m("n_emails")} AS n_emails,
+           |  ${m("n_phones")} AS n_phones, ${m("n_ipv4")} AS n_ipv4,
+           |  ${m("pii_total")} AS pii_total,
+           |  length(${m("redacted_text")}) AS redacted_len
+           |FROM documents""".stripMargin
+      }),
 
     // C7/C10: string ops + crypto hash projection.
-    "c7_strings" -> ((s, dir) =>
+    Query("c7_strings", (s, dir) =>
       Tables.documents(s, dir).select(
         col("doc_id"),
         length(col("text")).cast("long").as("n_chars_calc"),
         when(col("text").contains("spark"), 1).otherwise(0).as("has_spark"),
         substring(sha2(col("text"), 256), 1, 8).as("sha8"),
-        element_at(graft.functions.WsTokens(col("text")), 1).as("first_tok"))))
+        element_at(graft.functions.WsTokens(col("text")), 1).as("first_tok")),
+      oracle =
+        """SELECT doc_id, length(text) AS n_chars_calc,
+          |  CASE WHEN contains(text, 'spark') THEN 1 ELSE 0 END AS has_spark,
+          |  substr(sha256(text), 1, 8) AS sha8,
+          |  (string_split_regex(lower(text), '\s+'))[1] AS first_tok
+          |FROM documents""".stripMargin))
 
   /** Shared oracle CTE chain for the LSH-verified near-dup path (dd7 and
     * the dd8/dd9 compositions): minhash sig → bands → candidate pairs →
@@ -2322,1802 +3986,5 @@ object TextQueries {
       |r0 AS (SELECT id, deg, CAST(1.0 AS DOUBLE) / nn.n AS r
       |  FROM deg CROSS JOIN nn),
       |$iterCtes""".stripMargin
-  }
-
-  def oracles: Map[String, String] = {
-    Map(
-      "t25_hll_diversity" ->
-        Sketches.hllShingleDiversitySql("documents", "source", "text", K),
-
-      "t26_countmin" ->
-        Sketches.countMinShinglesSql("documents", "text", K, topN = 10),
-
-      "t29_hll_overlap" ->
-        Sketches.hllPairwiseOverlapSql("documents", "source", "text", K),
-
-      "t31_gopher_rules" ->
-        TextAnalysis.gopherRulesSql("doc_id", "text"),
-
-      "t32_c4_rules" ->
-        TextAnalysis.c4RulesSql("doc_id", "text"),
-
-      "t30_novelty" ->
-        s"""WITH tok AS (
-          |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS tk
-          |  FROM documents),
-          |tri AS (
-          |  SELECT doc_id, unnest(${Dedup.shinglesOverTkSql(K)}) AS g FROM tok),
-          |fo AS (SELECT g, min(doc_id) AS first_doc FROM tri GROUP BY 1),
-          |scored AS (
-          |  SELECT t.doc_id, count(*) AS n_shingles,
-          |    CAST(sum(CASE WHEN f.first_doc = t.doc_id THEN 1 ELSE 0 END) AS BIGINT)
-          |      AS n_novel
-          |  FROM tri t JOIN fo f USING (g) GROUP BY 1)
-          |SELECT d.doc_id,
-          |  coalesce(s.n_shingles, 0) AS n_shingles,
-          |  coalesce(s.n_novel, 0) AS n_novel,
-          |  round(CAST(s.n_novel AS DOUBLE) / s.n_shingles, 6) AS novelty
-          |FROM documents d LEFT JOIN scored s USING (doc_id)""".stripMargin,
-
-      "dd20_snapshot_diff" ->
-        """WITH a AS (SELECT doc_id, sha256(text) AS sha_a FROM documents),
-          |b_base AS (
-          |  SELECT doc_id,
-          |    CASE WHEN doc_id % 5 = 1 THEN text || ' rev2' ELSE text END AS text_b
-          |  FROM documents WHERE doc_id % 7 <> 3),
-          |b_new AS (
-          |  SELECT doc_id + 1000000 AS doc_id, text AS text_b
-          |  FROM documents WHERE doc_id % 11 = 0),
-          |b AS (
-          |  SELECT doc_id, sha256(text_b) AS sha_b
-          |  FROM (SELECT * FROM b_base UNION ALL SELECT * FROM b_new)),
-          |d AS (
-          |  SELECT CASE WHEN a.sha_a IS NULL THEN 'added'
-          |              WHEN b.sha_b IS NULL THEN 'removed'
-          |              WHEN a.sha_a <> b.sha_b THEN 'changed'
-          |              ELSE 'unchanged' END AS status
-          |  FROM a FULL OUTER JOIN b USING (doc_id))
-          |SELECT status, count(*) AS n FROM d GROUP BY 1""".stripMargin,
-
-      "dd1_exact_dedup" ->
-        """SELECT sha256(text) AS text_sha, min(doc_id) AS keep_id, count(*) AS n_copies
-          |FROM documents GROUP BY 1""".stripMargin,
-
-      "dd12_norm_dedup" ->
-        s"""SELECT sha256(${TextAnalysis.normalizeForDedupSql("text")}) AS norm_sha,
-          |  min(doc_id) AS keep_id, count(*) AS n_copies
-          |FROM documents GROUP BY 1""".stripMargin,
-
-      "dd2_minhash_sig" -> {
-        val cols = (0 until MINHASHES)
-          .map(i => s"${Dedup.minhashSql(K, i)} AS mh$i").mkString(",\n  ")
-        s"SELECT doc_id,\n  $cols\nFROM ${Dedup.tkSourceSql("text", "doc_id")}"
-      },
-
-      "dd3_lsh_candidates" -> {
-        val cols = (0 until 4)
-          .map(i => s"${Dedup.minhashSql(2, i)} AS mh$i").mkString(",\n  ")
-        s"""WITH sig AS (SELECT doc_id,\n  $cols\nFROM ${Dedup.tkSourceSql("text", "doc_id")}),
-          |bands AS (
-          |  SELECT doc_id, CAST(('0x' || substr(sha256(('0_' || mh0 || '_' || mh1)), 1, 15)) AS BIGINT) AS band_key FROM sig
-          |  UNION ALL SELECT doc_id, CAST(('0x' || substr(sha256(('1_' || mh2 || '_' || mh3)), 1, 15)) AS BIGINT) FROM sig)
-          |SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-          |FROM bands l JOIN bands r
-          |  ON l.band_key = r.band_key AND l.doc_id < r.doc_id""".stripMargin
-      },
-
-      "dd4_simhash" ->
-        s"SELECT doc_id, CAST(${Dedup.simhashSql("text", 16)} AS BIGINT) AS simhash16 FROM documents",
-
-      // t22 twin: dd3's candidate CTEs, then the 6 fixed-point rounds
-      // unrolled. All arithmetic forced to DOUBLE (DuckDB parses bare
-      // numeric literals as DECIMAL, whose exact 0.15 differs from the
-      // engine's binary 1.0-0.85) so both engines replay identical IEEE
-      // operations; round(6) absorbs per-node summation order.
-      "t22_centrality" -> {
-        val cols = (0 until 4)
-          .map(i => s"${Dedup.minhashSql(2, i)} AS mh$i").mkString(",\n  ")
-        s"""WITH sig AS (SELECT doc_id,\n  $cols\nFROM ${Dedup.tkSourceSql("text", "doc_id")}),
-          |bands AS (
-          |  SELECT doc_id, CAST(('0x' || substr(sha256(('0_' || mh0 || '_' || mh1)), 1, 15)) AS BIGINT) AS band_key FROM sig
-          |  UNION ALL SELECT doc_id, CAST(('0x' || substr(sha256(('1_' || mh2 || '_' || mh3)), 1, 15)) AS BIGINT) FROM sig),
-          |cand AS (
-          |  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-          |  FROM bands l JOIN bands r
-          |    ON l.band_key = r.band_key AND l.doc_id < r.doc_id),
-          |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM cand
-          |  UNION ALL SELECT id_b, id_a FROM cand),
-          |${pagerankCtes(6)}
-          |SELECT id AS doc_id, CAST(deg AS BIGINT) AS deg,
-          |  round(r, 6) AS centrality
-          |FROM r6""".stripMargin
-      },
-
-      // t22_prod twin: dd21's production-banded verify chain (vpairs at
-      // J >= 0.5), then the same unrolled PageRank rounds over its
-      // undirected edge expansion.
-      "t22_prod" ->
-        s"""WITH ${lshVerifiedCtesFor(3, 16, 4, 0.5)},
-          |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM vpairs
-          |  UNION ALL SELECT id_b, id_a FROM vpairs),
-          |${pagerankCtes(6)}
-          |SELECT id AS doc_id, CAST(deg AS BIGINT) AS deg,
-          |  round(r, 6) AS centrality
-          |FROM r6""".stripMargin,
-
-      "dd5_ngram_jaccard" -> {
-        val shExpr = Dedup.shinglesOverTkSql(2)
-        s"""WITH sets AS (
-          |  SELECT doc_id,
-          |    ${Dedup.minhashBandKeySql(2, 2)} AS block,
-          |    list_distinct(list_transform($shExpr, s -> ${Hashing.sha28Sql("s")})) AS sh
-          |  FROM ${Dedup.tkSourceSql("text", "doc_id")}),
-          |pairs AS (
-          |  SELECT l.doc_id AS id_a, r.doc_id AS id_b,
-          |    round(len(list_intersect(l.sh, r.sh)) /
-          |      CAST(len(l.sh) + len(r.sh) - len(list_intersect(l.sh, r.sh)) AS DOUBLE), 6)
-          |      AS jaccard
-          |  FROM sets l JOIN sets r ON l.block = r.block AND l.doc_id < r.doc_id)
-          |SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.05""".stripMargin
-      },
-
-      "dd18_lsh_quality" -> {
-        val shExpr = Dedup.shinglesOverTkSql(2)
-        val sha = graft.functions.Hashing.sha28Sql("CAST(doc_id AS VARCHAR)")
-        s"""WITH d AS (SELECT doc_id, text FROM documents
-          |  ORDER BY $sha, doc_id LIMIT 500),
-          |sets AS (
-          |  SELECT doc_id,
-          |    ${Dedup.minhashBandKeySql(2, 2)} AS block,
-          |    list_distinct(list_transform($shExpr, s -> ${graft.functions.Hashing.sha28Sql("s")})) AS sh
-          |  FROM ${Dedup.tkSourceSqlFrom("d", "text", "doc_id")}),
-          |cand AS (
-          |  SELECT l.doc_id AS a, r.doc_id AS b FROM sets l JOIN sets r
-          |  ON l.block = r.block AND l.doc_id < r.doc_id
-          |  WHERE l.block <> ${graft.functions.Hashing.sha60Sql("'-1_-1'")}),
-          |tru AS (
-          |  SELECT l.doc_id AS a, r.doc_id AS b,
-          |    round(len(list_intersect(l.sh, r.sh)) /
-          |      CAST(len(l.sh) + len(r.sh) - len(list_intersect(l.sh, r.sh)) AS DOUBLE), 6)
-          |      AS j
-          |  FROM sets l JOIN sets r ON l.doc_id < r.doc_id),
-          |truth AS (SELECT a, b FROM tru WHERE j >= 0.05),
-          |found AS (SELECT c.a, c.b FROM cand c JOIN truth t ON c.a = t.a AND c.b = t.b),
-          |n AS (SELECT
-          |  (SELECT count(*) FROM d) AS n_docs,
-          |  (SELECT count(*) FROM cand) AS n_cand,
-          |  (SELECT count(*) FROM truth) AS n_true,
-          |  (SELECT count(*) FROM found) AS n_found)
-          |SELECT n_docs, n_cand, n_true, n_found,
-          |  round(CASE WHEN n_cand > 0 THEN CAST(n_found AS DOUBLE) / n_cand END, 6)
-          |    AS cand_precision,
-          |  round(CASE WHEN n_true > 0 THEN CAST(n_found AS DOUBLE) / n_true END, 6)
-          |    AS recall
-          |FROM n""".stripMargin
-      },
-
-      // t20 twin: the dd18 SHA-rank sample, distinct hashed shingle sets,
-      // all pairs (no size prune — containment is maximized by
-      // small-vs-large), both directions rounded BEFORE the greatest()
-      // threshold, exactly as the engine filters.
-      "t20_containment" -> {
-        val shExpr = Dedup.shinglesOverTkSql(K)
-        val sha = graft.functions.Hashing.sha28Sql("CAST(doc_id AS VARCHAR)")
-        s"""WITH d AS (SELECT doc_id, text FROM documents
-          |  ORDER BY $sha, doc_id LIMIT 300),
-          |sets AS (
-          |  SELECT doc_id,
-          |    list_distinct(list_transform($shExpr, s -> ${graft.functions.Hashing.sha28Sql("s")})) AS sh
-          |  FROM ${Dedup.tkSourceSqlFrom("d", "text", "doc_id")}),
-          |ns AS (SELECT doc_id, sh, len(sh) AS n FROM sets WHERE len(sh) > 0),
-          |pairs AS (
-          |  SELECT l.doc_id AS id_a, r.doc_id AS id_b,
-          |    len(list_intersect(l.sh, r.sh)) AS i, l.n AS na, r.n AS nb
-          |  FROM ns l JOIN ns r ON l.doc_id < r.doc_id),
-          |sc AS (
-          |  SELECT id_a, id_b,
-          |    round(CAST(i AS DOUBLE) / na, 6) AS cont_a_in_b,
-          |    round(CAST(i AS DOUBLE) / nb, 6) AS cont_b_in_a
-          |  FROM pairs)
-          |SELECT id_a, id_b, cont_a_in_b, cont_b_in_a FROM sc
-          |WHERE greatest(cont_a_in_b, cont_b_in_a) >= 0.5""".stripMargin
-      },
-
-      "dd7_lsh_verified" ->
-        s"WITH $lshVerifiedCtes\nSELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.05",
-
-      "dd21_lsh_prod_bands" ->
-        s"""WITH ${lshVerifiedCtesFor(3, 16, 4, 0.5)}
-          |SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.5""".stripMargin,
-
-      "dd21_lsh_wide_bands" ->
-        s"""WITH ${lshVerifiedCtesFor(3, 128, 8, 0.7)}
-          |SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.7""".stripMargin,
-
-      "dd8_dup_clusters" ->
-        s"""WITH RECURSIVE $lshVerifiedCtes,
-          |$componentCtes
-          |SELECT CAST(id AS BIGINT) AS id, CAST(least(id, min(r)) AS BIGINT) AS cluster_id
-          |FROM reach GROUP BY id""".stripMargin,
-
-      "dd9_dedup_corpus" ->
-        s"""WITH RECURSIVE $lshVerifiedCtes,
-          |$componentCtes,
-          |clusters AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id)
-          |SELECT doc_id, lang, source FROM documents
-          |WHERE doc_id NOT IN (SELECT id FROM clusters WHERE id <> cid)""".stripMargin,
-
-      "dd22_dedup_corpus_prod" ->
-        s"""WITH RECURSIVE ${lshVerifiedCtesFor(3, 16, 4, 0.5)},
-          |$componentCtes,
-          |clusters AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id)
-          |SELECT doc_id, lang, source FROM documents
-          |WHERE doc_id NOT IN (SELECT id FROM clusters WHERE id <> cid)""".stripMargin,
-
-      "dd13_incremental" -> incrementalDedupSqlFor(2, 4, 2, 0.05),
-
-      "dd23_incremental_prod" -> incrementalDedupSqlFor(3, 16, 4, 0.5),
-
-      "dd6_embed_dups" ->
-        """WITH v AS (
-          |  SELECT label, vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          |  FROM embeddings)
-          |SELECT l.vec_id AS id_a, r.vec_id AS id_b,
-          |  round(list_inner_product(l.e, r.e) /
-          |    (sqrt(list_inner_product(l.e, l.e)) * sqrt(list_inner_product(r.e, r.e))), 6) AS sim
-          |FROM v l JOIN v r ON l.label = r.label AND l.vec_id < r.vec_id
-          |WHERE round(list_inner_product(l.e, r.e) /
-          |    (sqrt(list_inner_product(l.e, l.e)) * sqrt(list_inner_product(r.e, r.e))), 6) >= 0.3""".stripMargin,
-
-      "sim1_knn" ->
-        """WITH v AS (
-          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          |  FROM embeddings),
-          |scored AS (
-          |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          |    round(list_inner_product(q.e, c.e) /
-          |      (sqrt(list_inner_product(q.e, q.e)) * sqrt(list_inner_product(c.e, c.e))), 6) AS sim
-          |  FROM v q JOIN v c ON q.vec_id < 20 AND q.vec_id <> c.vec_id),
-          |ranked AS (
-          |  SELECT query_id, neighbor_id, sim,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-          |  FROM scored)
-          |SELECT query_id, neighbor_id, sim, rk FROM ranked WHERE rk <= 5""".stripMargin,
-
-      "sim8_mips" ->
-        """WITH v AS (
-          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          |  FROM embeddings),
-          |scored AS (
-          |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          |    round(list_inner_product(q.e, c.e), 6) AS ip
-          |  FROM v q JOIN v c ON q.vec_id < 20 AND q.vec_id <> c.vec_id),
-          |ranked AS (
-          |  SELECT query_id, neighbor_id, ip,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY ip DESC, neighbor_id) AS rk
-          |  FROM scored)
-          |SELECT query_id, neighbor_id, ip, rk FROM ranked WHERE rk <= 5""".stripMargin,
-
-      // sim2 twin: the hyperplane components are SHA-derived (no RNG
-      // state), so the ENTIRE LSH pipeline — plane matrix, sign-bit
-      // buckets, (table, bucket) candidate equi-join, cosine, rank — is
-      // replayable in DuckDB. Mirrors HyperplaneBucket's edge rules
-      // exactly: NULL vector -> no bucket rows (drops out of the join),
-      // length-mismatched / null-element vector -> bucket 0 of every
-      // table. CAST sums to BIGINT (DuckDB integer sums are HUGEINT).
-      // sim_recall twin: both arms (SHA-derived LSH, stored-centroid IVF
-      // serving) are deterministic, so the whole summary is pinned to the
-      // engine's own verified output (tools/pin_expected.py — the
-      // d1_adwin/s5 pattern). Turns the driver's rows-only check into a
-      // rows+schema+hash regression gate; sim_recall_build (KMeans build)
-      // stays the lone rows-only recall entry by design.
-      "sim_recall" ->
-        """SELECT method, n_queries, mean_recall
-          |FROM read_parquet('/root/repo/src/test/resources/expected/sim_recall_sf0.01.parquet')""".stripMargin,
-
-      // sim3_ann_ivf / sim_recall_build twins: seeded MLlib KMeans on
-      // fixed data is run-to-run deterministic (double-dump diff in
-      // tools/pin_expected.py provenance), so the BUILD path's output is
-      // pinnable like d1_adwin/s5 — closing the last two no_oracle rows.
-      // Regenerate via tools/pin_expected.py ONLY after a deliberate
-      // quantizer-knob or Spark-version change, and eyeball the recall
-      // diff before committing.
-      "sim3_ann_ivf" ->
-        """SELECT query_id, neighbor_id, sim, rk
-          |FROM read_parquet('/root/repo/src/test/resources/expected/sim3_ann_ivf_sf0.01.parquet')""".stripMargin,
-
-      "sim_recall_build" ->
-        """SELECT method, n_queries, mean_recall
-          |FROM read_parquet('/root/repo/src/test/resources/expected/sim_recall_build_sf0.01.parquet')""".stripMargin,
-
-      "sim2_ann_lsh" ->
-        s"""WITH $hyperplaneBucketCtes,
-          |cand AS (
-          |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-          |  FROM buckets q JOIN buckets c ON q.t = c.t AND q.b = c.b
-          |  WHERE q.vec_id < 20 AND q.vec_id <> c.vec_id),
-          |scored AS (
-          |  SELECT cand.query_id, cand.neighbor_id,
-          |    round(list_inner_product(qv.e, cv.e) /
-          |      (sqrt(list_inner_product(qv.e, qv.e))
-          |        * sqrt(list_inner_product(cv.e, cv.e))), 6) AS sim
-          |  FROM cand
-          |  JOIN ok qv ON cand.query_id = qv.vec_id
-          |  JOIN ok cv ON cand.neighbor_id = cv.vec_id),
-          |ranked AS (
-          |  SELECT query_id, neighbor_id, sim,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-          |  FROM scored)
-          |SELECT query_id, neighbor_id, sim, rk FROM ranked WHERE rk <= 5""".stripMargin,
-
-      // sim7 twin: the shared bucket CTEs, symmetric candidate self-join,
-      // cosine verify, similarity floor.
-      "sim7_cosine_range" ->
-        s"""WITH $hyperplaneBucketCtes,
-          |cand AS (
-          |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-          |  FROM buckets a JOIN buckets b ON a.t = b.t AND a.b = b.b
-          |  WHERE a.vec_id < b.vec_id),
-          |scored AS (
-          |  SELECT cand.id_a, cand.id_b,
-          |    round(list_inner_product(av.e, bv.e) /
-          |      (sqrt(list_inner_product(av.e, av.e))
-          |        * sqrt(list_inner_product(bv.e, bv.e))), 6) AS sim
-          |  FROM cand
-          |  JOIN ok av ON cand.id_a = av.vec_id
-          |  JOIN ok bv ON cand.id_b = bv.vec_id)
-          |SELECT id_a, id_b, sim FROM scored WHERE sim >= 0.3""".stripMargin,
-
-      // sim3_assign twin: assignment argmin + nProbe probe ranking share
-      // ONE distance CTE (round-6 L2^2 via the inner-product identity —
-      // the sim5-proven arithmetic), ties to the smallest cell on both.
-      "sim3_assign" ->
-        """WITH v AS (
-          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          |  FROM embeddings),
-          |cent AS (SELECT vec_id AS cell, e AS c FROM v WHERE vec_id < 16),
-          |dist AS (
-          |  SELECT b.vec_id, c.cell,
-          |    round(list_inner_product(b.e, b.e) - 2 * list_inner_product(b.e, c.c)
-          |      + list_inner_product(c.c, c.c), 6) AS d
-          |  FROM v b CROSS JOIN cent c),
-          |assigned AS (
-          |  SELECT vec_id, cell FROM (
-          |    SELECT vec_id, cell,
-          |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-          |    FROM dist) WHERE rn = 1),
-          |probes AS (
-          |  SELECT vec_id AS query_id, cell FROM (
-          |    SELECT vec_id, cell,
-          |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-          |    FROM dist WHERE vec_id < 20) WHERE rn <= 4),
-          |cand AS (
-          |  SELECT p.query_id, a.vec_id AS neighbor_id
-          |  FROM probes p JOIN assigned a ON p.cell = a.cell
-          |  WHERE p.query_id <> a.vec_id),
-          |scored AS (
-          |  SELECT cand.query_id, cand.neighbor_id,
-          |    round(list_inner_product(qv.e, cv.e) /
-          |      (sqrt(list_inner_product(qv.e, qv.e))
-          |        * sqrt(list_inner_product(cv.e, cv.e))), 6) AS sim
-          |  FROM cand
-          |  JOIN v qv ON cand.query_id = qv.vec_id
-          |  JOIN v cv ON cand.neighbor_id = cv.vec_id),
-          |ranked AS (
-          |  SELECT query_id, neighbor_id, sim,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-          |  FROM scored)
-          |SELECT query_id, neighbor_id, sim, rk FROM ranked WHERE rk <= 5""".stripMargin,
-
-      // dd16 twin: sim5's argmin-assignment CTEs over ALL vectors, dd6's
-      // within-block cosine pair shape blocked by the assigned cell, the
-      // shared recursive component CTEs, dd9's min-id representative tail.
-      "dd16_semantic_dedup" ->
-        s"""WITH RECURSIVE v AS (
-          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          |  FROM embeddings),
-          |cent AS (SELECT vec_id AS cell, e AS c FROM v WHERE vec_id < 8),
-          |scored AS (
-          |  SELECT b.vec_id, c.cell,
-          |    round(list_inner_product(b.e, b.e) - 2 * list_inner_product(b.e, c.c)
-          |      + list_inner_product(c.c, c.c), 6) AS d
-          |  FROM v b CROSS JOIN cent c),
-          |assigned AS (
-          |  SELECT vec_id, cell, d AS cell_dist FROM (
-          |    SELECT vec_id, cell, d,
-          |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-          |    FROM scored)
-          |  WHERE rn = 1),
-          |pv AS (SELECT a.vec_id, a.cell, v.e FROM assigned a JOIN v USING (vec_id)),
-          |vpairs AS (
-          |  SELECT l.vec_id AS id_a, r.vec_id AS id_b
-          |  FROM pv l JOIN pv r ON l.cell = r.cell AND l.vec_id < r.vec_id
-          |  WHERE round(list_inner_product(l.e, r.e) /
-          |    (sqrt(list_inner_product(l.e, l.e)) * sqrt(list_inner_product(r.e, r.e))), 6) >= 0.3),
-          |$componentCtes,
-          |clusters AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id)
-          |SELECT vec_id, cell, cell_dist FROM assigned
-          |WHERE vec_id NOT IN (SELECT id FROM clusters WHERE id <> cid)""".stripMargin,
-
-      // sim6 twins: the per-(vector, subspace, code) distance CTE is the
-      // sim5 round-6 L2^2 arithmetic on list SLICES; encode = argmin per
-      // (vector, subspace) with ties to the smallest code.
-      "sim6_pq_encode" ->
-        """WITH v AS (
-          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          |  FROM embeddings),
-          |cb AS (SELECT vec_id AS code, e AS c FROM v WHERE vec_id < 16),
-          |sub AS (SELECT unnest(range(4)) AS m),
-          |d AS (
-          |  SELECT b.vec_id, s.m, c.code,
-          |    round(list_inner_product(b.e[s.m*16+1 : s.m*16+16], b.e[s.m*16+1 : s.m*16+16])
-          |      - 2 * list_inner_product(b.e[s.m*16+1 : s.m*16+16], c.c[s.m*16+1 : s.m*16+16])
-          |      + list_inner_product(c.c[s.m*16+1 : s.m*16+16], c.c[s.m*16+1 : s.m*16+16]), 6) AS d
-          |  FROM v b CROSS JOIN cb c CROSS JOIN sub s),
-          |enc AS (
-          |  SELECT vec_id, m, code, d FROM (
-          |    SELECT vec_id, m, code, d,
-          |      row_number() OVER (PARTITION BY vec_id, m ORDER BY d, code) AS rn
-          |    FROM d) WHERE rn = 1)
-          |SELECT vec_id,
-          |  max(CASE WHEN m = 0 THEN code END) AS code_0,
-          |  max(CASE WHEN m = 1 THEN code END) AS code_1,
-          |  max(CASE WHEN m = 2 THEN code END) AS code_2,
-          |  max(CASE WHEN m = 3 THEN code END) AS code_3,
-          |  round(sum(d), 6) AS recon_l2
-          |FROM enc GROUP BY vec_id""".stripMargin,
-
-      // ADC: corpus codes from the encode CTEs, query distance tables from
-      // the same distance CTE restricted to query ids, approximate
-      // distance = sum of the per-subspace table entries at the corpus
-      // item's codes.
-      "sim6_pq_adc" ->
-        """WITH v AS (
-          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          |  FROM embeddings),
-          |cb AS (SELECT vec_id AS code, e AS c FROM v WHERE vec_id < 16),
-          |sub AS (SELECT unnest(range(4)) AS m),
-          |d AS (
-          |  SELECT b.vec_id, s.m, c.code,
-          |    round(list_inner_product(b.e[s.m*16+1 : s.m*16+16], b.e[s.m*16+1 : s.m*16+16])
-          |      - 2 * list_inner_product(b.e[s.m*16+1 : s.m*16+16], c.c[s.m*16+1 : s.m*16+16])
-          |      + list_inner_product(c.c[s.m*16+1 : s.m*16+16], c.c[s.m*16+1 : s.m*16+16]), 6) AS d
-          |  FROM v b CROSS JOIN cb c CROSS JOIN sub s),
-          |enc AS (
-          |  SELECT vec_id, m, code FROM (
-          |    SELECT vec_id, m, code,
-          |      row_number() OVER (PARTITION BY vec_id, m ORDER BY d, code) AS rn
-          |    FROM d) WHERE rn = 1),
-          |scored AS (
-          |  SELECT q.vec_id AS query_id, enc.vec_id AS neighbor_id,
-          |    round(sum(q.d), 6) AS adist
-          |  FROM enc JOIN (SELECT * FROM d WHERE vec_id < 20) q
-          |    ON enc.m = q.m AND enc.code = q.code
-          |  WHERE q.vec_id <> enc.vec_id
-          |  GROUP BY 1, 2),
-          |ranked AS (
-          |  SELECT query_id, neighbor_id, adist,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rk
-          |  FROM scored)
-          |SELECT query_id, neighbor_id, adist, CAST(rk AS BIGINT) AS rk
-          |FROM ranked WHERE rk <= 5""".stripMargin,
-
-      // sim9 twin: sim5's cell CTE over the whole corpus + a probe CTE
-      // (rn <= nProbe of the same distance frame restricted to query
-      // ids) gate sim6's ADC scan to probed cells only.
-      "sim9_ivfadc" ->
-        """WITH v AS (
-          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          |  FROM embeddings),
-          |cent AS (SELECT vec_id AS cell, e AS c FROM v WHERE vec_id < 8),
-          |cb AS (SELECT vec_id AS code, e AS c FROM v WHERE vec_id < 16),
-          |sub AS (SELECT unnest(range(4)) AS m),
-          |cd AS (
-          |  SELECT b.vec_id, c.cell,
-          |    round(list_inner_product(b.e, b.e) - 2 * list_inner_product(b.e, c.c)
-          |      + list_inner_product(c.c, c.c), 6) AS d
-          |  FROM v b CROSS JOIN cent c),
-          |cells AS (
-          |  SELECT vec_id, cell FROM (
-          |    SELECT vec_id, cell,
-          |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-          |    FROM cd) WHERE rn = 1),
-          |probes AS (
-          |  SELECT vec_id AS query_id, cell FROM (
-          |    SELECT vec_id, cell,
-          |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-          |    FROM cd WHERE vec_id < 20) WHERE rn <= 2),
-          |pd AS (
-          |  SELECT b.vec_id, s.m, c.code,
-          |    round(list_inner_product(b.e[s.m*16+1 : s.m*16+16], b.e[s.m*16+1 : s.m*16+16])
-          |      - 2 * list_inner_product(b.e[s.m*16+1 : s.m*16+16], c.c[s.m*16+1 : s.m*16+16])
-          |      + list_inner_product(c.c[s.m*16+1 : s.m*16+16], c.c[s.m*16+1 : s.m*16+16]), 6) AS d
-          |  FROM v b CROSS JOIN cb c CROSS JOIN sub s),
-          |enc AS (
-          |  SELECT vec_id, m, code FROM (
-          |    SELECT vec_id, m, code,
-          |      row_number() OVER (PARTITION BY vec_id, m ORDER BY d, code) AS rn
-          |    FROM pd) WHERE rn = 1),
-          |scored AS (
-          |  SELECT q.vec_id AS query_id, enc.vec_id AS neighbor_id,
-          |    round(sum(q.d), 6) AS adist
-          |  FROM enc
-          |  JOIN cells ce ON ce.vec_id = enc.vec_id
-          |  JOIN probes p ON p.cell = ce.cell
-          |  JOIN (SELECT * FROM pd WHERE vec_id < 20) q
-          |    ON q.vec_id = p.query_id AND enc.m = q.m AND enc.code = q.code
-          |  WHERE q.vec_id <> enc.vec_id
-          |  GROUP BY 1, 2),
-          |ranked AS (
-          |  SELECT query_id, neighbor_id, adist,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rk
-          |  FROM scored)
-          |SELECT query_id, neighbor_id, adist, CAST(rk AS BIGINT) AS rk
-          |FROM ranked WHERE rk <= 5""".stripMargin,
-
-      "sim5_ivf_assign" ->
-        """WITH v AS (
-          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          |  FROM embeddings),
-          |cent AS (SELECT vec_id AS cell, e AS c FROM v WHERE vec_id < 8),
-          |batch AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
-          |scored AS (
-          |  SELECT b.vec_id, c.cell,
-          |    round(list_inner_product(b.e, b.e) - 2 * list_inner_product(b.e, c.c)
-          |      + list_inner_product(c.c, c.c), 6) AS d
-          |  FROM batch b CROSS JOIN cent c),
-          |ranked AS (
-          |  SELECT vec_id, cell, d,
-          |    row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-          |  FROM scored)
-          |SELECT vec_id, cell, d AS cell_dist FROM ranked WHERE rn = 1""".stripMargin,
-
-      "sim11_random_projection" -> Similarity.randomProjectSql(64, 16),
-
-      // sim10 twin: sim5's argmin CTE chain + per-cell aggregation split
-      // by the batch predicate.
-      "sim10_centroid_drift" ->
-        """WITH v AS (
-          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          |  FROM embeddings),
-          |cent AS (SELECT vec_id AS cell, e AS c FROM v WHERE vec_id < 8),
-          |batch AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
-          |scored AS (
-          |  SELECT b.vec_id, c.cell,
-          |    round(list_inner_product(b.e, b.e) - 2 * list_inner_product(b.e, c.c)
-          |      + list_inner_product(c.c, c.c), 6) AS d
-          |  FROM batch b CROSS JOIN cent c),
-          |ranked AS (
-          |  SELECT vec_id, cell, d,
-          |    row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-          |  FROM scored),
-          |assigned AS (
-          |  SELECT vec_id, cell, d AS cell_dist, vec_id % 5 = 0 AS is_batch
-          |  FROM ranked WHERE rn = 1),
-          |per AS (
-          |  SELECT cell,
-          |    CAST(sum(CASE WHEN NOT is_batch THEN 1 ELSE 0 END) AS BIGINT) AS n_index,
-          |    CAST(sum(CASE WHEN is_batch THEN 1 ELSE 0 END) AS BIGINT) AS n_batch,
-          |    round(avg(CASE WHEN NOT is_batch THEN cell_dist END), 6) AS mean_d_index,
-          |    round(avg(CASE WHEN is_batch THEN cell_dist END), 6) AS mean_d_batch
-          |  FROM assigned GROUP BY 1),
-          |r AS (
-          |  SELECT *, round(CASE WHEN mean_d_index > 0
-          |      THEN mean_d_batch / mean_d_index END, 6) AS dist_ratio
-          |  FROM per)
-          |SELECT cell, n_index, n_batch, mean_d_index, mean_d_batch, dist_ratio,
-          |  CASE WHEN dist_ratio > 1.2 THEN 1 ELSE 0 END AS needs_recluster
-          |FROM r""".stripMargin,
-
-      "sim4_quantize" ->
-        """WITH v AS (
-          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          |  FROM embeddings),
-          |s AS (
-          |  SELECT vec_id, e,
-          |    CASE WHEN m = 0 THEN 1.0 ELSE m / 127.0 END AS scale
-          |  FROM (SELECT vec_id, e,
-          |    list_max(list_transform(e, x -> abs(x))) AS m FROM v)),
-          |q AS (
-          |  SELECT vec_id, e, scale,
-          |    list_transform(e, x ->
-          |      CAST(sign(x) * floor(abs(x) / scale + 0.5) AS INT)) AS qv
-          |  FROM s),
-          |d AS (
-          |  SELECT vec_id, e, scale, qv,
-          |    list_transform(qv, qi -> qi * scale) AS deq
-          |  FROM q)
-          |SELECT vec_id, round(scale, 6) AS scale6,
-          |  CAST(len(qv) AS BIGINT) AS n_dims,
-          |  qv[1] AS q0, qv[2] AS q1, qv[3] AS q2, qv[4] AS q3,
-          |  round(list_inner_product(e, deq) /
-          |    (sqrt(list_inner_product(e, e)) * sqrt(list_inner_product(deq, deq))), 6)
-          |    AS recon_cos
-          |FROM d""".stripMargin,
-
-      "t1_langid" ->
-        s"SELECT doc_id, lang, ${TextAnalysis.langIdSql("text")} AS pred_lang FROM documents",
-
-      "t2_quality" -> {
-        val q = TextAnalysis.qualitySql("text")
-        s"""SELECT doc_id, ${q("n_words")} AS n_words,
-          |  ${q("mean_word_len")} AS mean_word_len,
-          |  ${q("punct_ratio")} AS punct_ratio,
-          |  ${q("stopword_ratio")} AS stopword_ratio,
-          |  ${q("quality_score")} AS quality_score
-          |FROM documents""".stripMargin
-      },
-
-      "t3_token_counts" ->
-        s"""SELECT doc_id,
-          |  len(string_split_regex(lower(text), '\\s+')) AS ws_tokens,
-          |  len(regexp_extract_all(text, '${TextAnalysis.tokenRegex}')) AS re_tokens
-          |FROM documents""".stripMargin,
-
-      "t4_fingerprint" ->
-        s"SELECT doc_id, ${TextAnalysis.fingerprintSql("text")} AS fp FROM documents",
-
-      "t19_source_overlap" -> {
-        val shExpr = Dedup.shinglesOverTkSql(3)
-        s"""WITH base AS (
-          |  SELECT source, unnest($shExpr) AS sg
-          |  FROM ${Dedup.tkSourceSql("text", "source")}),
-          |sh AS (SELECT DISTINCT source, ${graft.functions.Hashing.sha28Sql("sg")} AS h FROM base),
-          |per AS (SELECT source, count(*) AS n FROM sh GROUP BY 1),
-          |p AS (
-          |  SELECT a.source AS src_a, b.source AS src_b, count(*) AS n_shared
-          |  FROM sh a JOIN sh b ON a.h = b.h AND a.source < b.source
-          |  GROUP BY 1, 2)
-          |SELECT src_a, src_b, n_shared, pa.n AS n_a, pb.n AS n_b,
-          |  round(CAST(n_shared AS DOUBLE) / least(pa.n, pb.n), 6) AS overlap
-          |FROM p
-          |JOIN per pa ON p.src_a = pa.source
-          |JOIN per pb ON p.src_b = pb.source""".stripMargin
-      },
-
-      "t18_zipf" ->
-        """WITH toks AS (
-          |  SELECT unnest(string_split_regex(lower(text), '\s+')) AS tok
-          |  FROM documents),
-          |counts AS (
-          |  SELECT tok, count(*) AS n FROM toks WHERE len(tok) > 0 GROUP BY tok),
-          |totals AS (
-          |  SELECT count(*) AS vocab_size, CAST(sum(n) AS BIGINT) AS total_tokens
-          |  FROM counts),
-          |top AS (
-          |  SELECT tok, n FROM counts ORDER BY n DESC, tok LIMIT 100),
-          |ranked AS (
-          |  SELECT n, row_number() OVER (ORDER BY n DESC, tok) AS rank FROM top),
-          |reg AS (
-          |  SELECT count(*) AS n_top,
-          |    round(regr_slope(ln(n), ln(rank)), 6) AS zipf_slope,
-          |    round(regr_r2(ln(n), ln(rank)), 6) AS zipf_r2
-          |  FROM ranked)
-          |SELECT n_top, zipf_slope, zipf_r2, vocab_size, total_tokens
-          |FROM reg, totals""".stripMargin,
-
-      "dd10_simhash_dups" -> Dedup.simhashPairsSql(16, 4, 2),
-
-      // e2e twin: every stage's proven SQL fragment, composed. d1 = exact
-      // dedup keepers; cand/dup = banded minhash candidates + 3-shingle
-      // Jaccard verify at prepare's parameters; d3 = quality gate on the
-      // shared rounded score; adm = the mixture admission (nested WITH as
-      // a derived table, reading d3); chunks likewise over the admitted
-      // docs; rk=1 = the (min doc, min chunk) owner per chunk SHA.
-      "e2e_corpus_assembly" -> {
-        val sig6 = (0 until 6)
-          .map(i => s"${Dedup.minhashSql(3, i)} AS mh$i").mkString(",\n  ")
-        val shExpr = Dedup.shinglesOverTkSql(3)
-        val setExpr =
-          s"list_sort(list_distinct(list_transform($shExpr, s -> ${Hashing.sha28Sql("s")})))"
-        val jac = """round(len(list_intersect(a.sh, b.sh)) /
-          |    CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE), 6)""".stripMargin
-        val qExpr = TextAnalysis.qualitySql("text")("quality_score")
-        s"""WITH d1 AS (
-          |  SELECT * FROM documents WHERE doc_id IN (
-          |    SELECT min(doc_id) FROM documents GROUP BY sha256(text))),
-          |sig AS (SELECT doc_id,\n  $sig6\nFROM ${Dedup.tkSourceSqlFrom("d1", "text", "doc_id")}),
-          |bands AS (
-          |  SELECT doc_id, CAST(('0x' || substr(sha256(('0_' || mh0 || '_' || mh1 || '_' || mh2)), 1, 15)) AS BIGINT) AS band_key FROM sig
-          |  UNION ALL SELECT doc_id, CAST(('0x' || substr(sha256(('1_' || mh3 || '_' || mh4 || '_' || mh5)), 1, 15)) AS BIGINT) FROM sig),
-          |cand AS (
-          |  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-          |  FROM bands l JOIN bands r
-          |    ON l.band_key = r.band_key AND l.doc_id < r.doc_id),
-          |sets AS (SELECT doc_id, $setExpr AS sh
-          |  FROM ${Dedup.tkSourceSqlFrom("d1", "text", "doc_id")}),
-          |dup AS (
-          |  SELECT DISTINCT c.id_b FROM cand c
-          |  JOIN sets a ON c.id_a = a.doc_id
-          |  JOIN sets b ON c.id_b = b.doc_id
-          |  WHERE $jac >= 0.7),
-          |d3 AS (
-          |  SELECT * FROM d1
-          |  WHERE doc_id NOT IN (SELECT id_b FROM dup) AND $qExpr >= 30.0),
-          |adm AS (SELECT * FROM (
-          |  ${TextAnalysis.mixtureSampleSql("doc_id", "text", "lang",
-               mixtureWeights, 0.5, from = "d3")})),
-          |d4 AS (SELECT * FROM d3 WHERE doc_id IN (SELECT doc_id FROM adm)),
-          |chunks AS (SELECT * FROM (
-          |  ${TextAnalysis.chunkDocumentsSql("doc_id", "text", 30, 5, from = "d4")})),
-          |ranked AS (
-          |  SELECT *, row_number() OVER (PARTITION BY chunk_sha
-          |    ORDER BY doc_id, chunk_id) AS rk FROM chunks)
-          |SELECT c.doc_id, a.lang, c.chunk_id, c.start_tok,
-          |  c.n_chunk_tokens, c.chunk_sha
-          |FROM ranked c LEFT JOIN adm a USING (doc_id) WHERE rk = 1""".stripMargin
-      },
-
-      // dd15 twin: membership is bloom-invisible — a plain IN over the
-      // corpus shas (the bloom only prunes the engine's join input).
-      "dd15_bloom_membership" ->
-        """SELECT doc_id, sha256(text) AS text_sha
-          |FROM documents
-          |WHERE doc_id % 5 = 0
-          |  AND sha256(text) IN (
-          |    SELECT sha256(text) FROM documents WHERE doc_id % 5 <> 0)""".stripMargin,
-
-      // dd14 twin: dd10's pair CTEs -> the shared recursive component
-      // CTEs -> dd11's quality-best representative tail.
-      "dd14_simhash_corpus" ->
-        s"""WITH RECURSIVE ${Dedup.simhashPairsCtes(16, 4, 2)},
-          |$componentCtes,
-          |clusters AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
-          |q AS (SELECT doc_id, lang, source,
-          |  ${TextAnalysis.qualitySql("text")("quality_score")} AS quality_score
-          |  FROM documents),
-          |a AS (SELECT q.*, coalesce(c.cid, q.doc_id) AS cluster_key
-          |  FROM q LEFT JOIN clusters c ON q.doc_id = c.id),
-          |ranked AS (SELECT *, row_number() OVER (PARTITION BY cluster_key
-          |    ORDER BY quality_score DESC, doc_id) AS rk FROM a)
-          |SELECT doc_id, lang, source, quality_score
-          |FROM ranked WHERE rk = 1""".stripMargin,
-
-      "t7_contamination" -> {
-        val shExpr = Dedup.shinglesOverTkSql(K)
-        s"""WITH sh AS (
-          |  SELECT doc_id, list_distinct($shExpr) AS sh
-          |  FROM ${Dedup.tkSourceSql("text", "doc_id")}),
-          |bench AS (SELECT DISTINCT unnest(sh) AS s FROM sh WHERE doc_id < 20),
-          |corpus AS (SELECT doc_id, sh FROM sh WHERE doc_id >= 20),
-          |ex AS (SELECT doc_id, unnest(sh) AS s FROM corpus),
-          |hits AS (
-          |  SELECT e.doc_id, count(*) AS n_overlap
-          |  FROM ex e JOIN bench b ON e.s = b.s GROUP BY 1)
-          |SELECT c.doc_id, CAST(len(c.sh) AS BIGINT) AS n_shingles,
-          |  coalesce(h.n_overlap, 0) AS n_overlap,
-          |  CASE WHEN len(c.sh) > 0
-          |    THEN round(coalesce(h.n_overlap, 0) / CAST(len(c.sh) AS DOUBLE), 6)
-          |    ELSE 0.0 END AS contamination
-          |FROM corpus c LEFT JOIN hits h USING (doc_id)""".stripMargin
-      },
-
-      "t5_tfidf" ->
-        """WITH tk AS (
-          |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS tk FROM documents),
-          |terms AS (SELECT doc_id, unnest(tk) AS term FROM tk),
-          |termf AS (SELECT doc_id, term FROM terms WHERE term <> ''),
-          |tf AS (SELECT doc_id, term, count(*) AS tf FROM termf GROUP BY 1, 2),
-          |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM termf GROUP BY 1),
-          |n AS (SELECT count(*) AS n FROM documents),
-          |scored AS (
-          |  SELECT tf.doc_id, tf.term, tf.tf, df.df,
-          |    round(tf.tf * (ln((n.n + 1.0) / (df.df + 1.0)) + 1.0), 6) AS tfidf
-          |  FROM tf JOIN df USING (term) CROSS JOIN n),
-          |ranked AS (
-          |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rk
-          |  FROM scored)
-          |SELECT doc_id, term, tf, df, tfidf, CAST(rk AS BIGINT) AS rk
-          |FROM ranked WHERE rk <= 5""".stripMargin,
-
-      "t6_stratified_sample" ->
-        """WITH ranked AS (
-          |  SELECT doc_id, lang, source,
-          |    row_number() OVER (PARTITION BY lang
-          |      ORDER BY sha256(CAST(doc_id AS VARCHAR)), doc_id) AS rk,
-          |    count(*) OVER (PARTITION BY lang) AS n
-          |  FROM documents)
-          |SELECT doc_id, lang, source FROM ranked WHERE rk <= ceil(0.25 * n)""".stripMargin,
-
-      "t9_pack_shards" ->
-        """WITH toks AS (
-          |  SELECT doc_id, lang,
-          |    len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> ''))
-          |      AS n_tokens
-          |  FROM documents),
-          |packed AS (
-          |  SELECT doc_id, lang, n_tokens,
-          |    CAST(floor(coalesce(sum(n_tokens) OVER (PARTITION BY lang
-          |      ORDER BY sha256(CAST(doc_id AS VARCHAR)), doc_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2000)
-          |      AS BIGINT) AS shard_id
-          |  FROM toks)
-          |SELECT doc_id, lang, n_tokens, shard_id FROM packed""".stripMargin,
-
-      "t12_mixture" -> TextAnalysis.mixtureSampleSql("doc_id", "text", "lang",
-        mixtureWeights, 0.5),
-
-      // q11 twin: t9's single-window packing + grouped manifest with the
-      // XOR content digest.
-      "q11_shard_manifest" ->
-        s"""WITH toks AS (
-          |  SELECT doc_id, lang, text,
-          |    len(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> ''))
-          |      AS n_tokens
-          |  FROM documents),
-          |packed AS (
-          |  SELECT doc_id, lang, text, n_tokens,
-          |    CAST(floor(coalesce(sum(n_tokens) OVER (PARTITION BY lang
-          |      ORDER BY sha256(CAST(doc_id AS VARCHAR)), doc_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2000)
-          |      AS BIGINT) AS shard_id
-          |  FROM toks)
-          |SELECT lang, shard_id, count(*) AS n_docs,
-          |  CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-          |  min(doc_id) AS first_doc,
-          |  bit_xor(${Hashing.sha60Sql("text")}) AS content_digest
-          |FROM packed GROUP BY 1, 2""".stripMargin,
-
-      "t13_chunks" -> TextAnalysis.chunkDocumentsSql("doc_id", "text", 30, 5),
-
-      "dd11_best_rep" ->
-        s"""WITH RECURSIVE $lshVerifiedCtes,
-          |$componentCtes,
-          |clusters AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
-          |q AS (SELECT doc_id, lang, source,
-          |  ${TextAnalysis.qualitySql("text")("quality_score")} AS quality_score
-          |  FROM documents),
-          |a AS (SELECT q.*, coalesce(c.cid, q.doc_id) AS cluster_key
-          |  FROM q LEFT JOIN clusters c ON q.doc_id = c.id),
-          |ranked AS (SELECT *, row_number() OVER (PARTITION BY cluster_key
-          |    ORDER BY quality_score DESC, doc_id) AS rk FROM a)
-          |SELECT doc_id, lang, source, quality_score
-          |FROM ranked WHERE rk = 1""".stripMargin,
-
-      "t10_repetition" ->
-        """WITH tk AS (
-          |  SELECT doc_id,
-          |    list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tk
-          |  FROM documents),
-          |b AS (
-          |  SELECT doc_id, len(tk) AS n_tokens, len(list_distinct(tk)) AS n_distinct,
-          |    [tk[i] || ' ' || tk[i + 1] for i in range(1, len(tk))] AS bg
-          |  FROM tk),
-          |e AS (SELECT doc_id, unnest(bg) AS bigram FROM b),
-          |c AS (SELECT doc_id, bigram, count(*) AS c FROM e GROUP BY 1, 2),
-          |t AS (SELECT doc_id, max(c) AS top_n FROM c GROUP BY 1)
-          |SELECT b.doc_id, n_tokens, n_distinct,
-          |  round(CASE WHEN n_tokens > 0
-          |    THEN 1.0 - n_distinct / CAST(n_tokens AS DOUBLE) ELSE 0.0 END, 6)
-          |    AS dup_token_frac,
-          |  round(CASE WHEN n_tokens > 1
-          |    THEN coalesce(top_n, 0) / CAST(n_tokens - 1 AS DOUBLE) ELSE 0.0 END, 6)
-          |    AS top_bigram_frac
-          |FROM b LEFT JOIN t USING (doc_id)""".stripMargin,
-
-      "t11_pii" -> {
-        val m = TextAnalysis.piiSql("text")
-        s"""SELECT doc_id, ${m("n_emails")} AS n_emails,
-           |  ${m("n_phones")} AS n_phones, ${m("n_ipv4")} AS n_ipv4,
-           |  ${m("pii_total")} AS pii_total,
-           |  length(${m("redacted_text")}) AS redacted_len
-           |FROM documents""".stripMargin
-      },
-
-      "t8_unigram_lm" ->
-        """WITH ex AS (
-          |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS term
-          |  FROM documents),
-          |exf AS (SELECT doc_id, term FROM ex WHERE term <> ''),
-          |model AS (SELECT term, count(*) AS cnt FROM exf GROUP BY 1),
-          |tot AS (SELECT sum(cnt) AS total, count(*) AS vocab FROM model),
-          |scored AS (
-          |  SELECT e.doc_id, ln((m.cnt + 1.0) / (t.total + t.vocab)) AS logp
-          |  FROM exf e JOIN model m USING (term) CROSS JOIN tot t),
-          |agg AS (
-          |  SELECT doc_id, count(*) AS n_tokens, round(avg(logp), 6) AS avg_logp
-          |  FROM scored GROUP BY 1)
-          |SELECT d.doc_id, coalesce(a.n_tokens, 0) AS n_tokens, a.avg_logp
-          |FROM documents d LEFT JOIN agg a USING (doc_id)""".stripMargin,
-
-      "t15_ngram_coverage" ->
-        TextAnalysis.ngramRepetitionSql("doc_id", "text"),
-
-      "t16_heavy_hitters" ->
-        TextAnalysis.heavyHittersSql("documents", "text"),
-
-      // dd17 twin: the single-window definition the two-phase plan
-      // implements losslessly.
-      "dd17_source_cap" -> {
-        val q = TextAnalysis.qualitySql("text")
-        s"""WITH scored AS (
-          |  SELECT doc_id, source, ${q("quality_score")} AS quality_score
-          |  FROM documents),
-          |ranked AS (
-          |  SELECT doc_id, source, quality_score,
-          |    row_number() OVER (PARTITION BY source
-          |      ORDER BY quality_score DESC, doc_id) AS grp_rank
-          |  FROM scored)
-          |SELECT doc_id, source, quality_score, CAST(grp_rank AS BIGINT) AS grp_rank
-          |FROM ranked WHERE grp_rank <= 20""".stripMargin
-      },
-
-      "t17_hash_split" -> {
-        val label = TextAnalysis.hashSplitSql("doc_id",
-          Seq("train" -> 900000L, "val" -> 50000L, "test" -> 50000L))
-        s"SELECT doc_id, lang, $label AS split FROM documents"
-      },
-
-      // t14 twin: model CTEs over the 'en' slice, LEFT attach with the
-      // count-0 coalesce for OOV, exp(-rounded avg) so both engines
-      // exponentiate identical inputs.
-      "t14_lm_crossppl" ->
-        """WITH ref AS (
-          |  SELECT unnest(string_split_regex(lower(text), '\s+')) AS term
-          |  FROM documents WHERE lang = 'en'),
-          |reff AS (SELECT term FROM ref WHERE term <> ''),
-          |model AS (SELECT term, count(*) AS cnt FROM reff GROUP BY 1),
-          |tot AS (SELECT coalesce(sum(cnt), 0) AS total, count(*) AS vocab FROM model),
-          |ex AS (
-          |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS term
-          |  FROM documents),
-          |exf AS (SELECT doc_id, term FROM ex WHERE term <> ''),
-          |scored AS (
-          |  SELECT e.doc_id,
-          |    ln((coalesce(m.cnt, 0) + 1.0) / greatest(t.total + t.vocab, 1)) AS logp
-          |  FROM exf e LEFT JOIN model m USING (term) CROSS JOIN tot t),
-          |agg AS (
-          |  SELECT doc_id, count(*) AS n_tokens, round(avg(logp), 6) AS avg_logp
-          |  FROM scored GROUP BY 1)
-          |SELECT d.doc_id, coalesce(a.n_tokens, 0) AS n_tokens, a.avg_logp,
-          |  round(exp(-a.avg_logp), 6) AS ppl
-          |FROM documents d LEFT JOIN agg a USING (doc_id)""".stripMargin,
-
-      "t27_langid_confusion" ->
-        s"""WITH pred AS (
-          |  SELECT lang, ${TextAnalysis.langIdSql("text")} AS lang_pred
-          |  FROM documents),
-          |counts AS (
-          |  SELECT lang, lang_pred, count(*) AS n FROM pred GROUP BY 1, 2),
-          |tot AS (SELECT lang, sum(n) AS n_lang FROM counts GROUP BY 1)
-          |SELECT c.lang, c.lang_pred, c.n,
-          |  round(CAST(c.n AS DOUBLE) / t.n_lang, 6) AS share,
-          |  CASE WHEN c.lang = c.lang_pred THEN 1 ELSE 0 END AS is_correct
-          |FROM counts c JOIN tot t USING (lang)""".stripMargin,
-
-      // t24 twin: bigram + head-count CTEs over the 'en' slice via the
-      // proven k=2 shingle fragment; vocab V as a 1-row cross join.
-      "t24_bigram_lm" ->
-        s"""WITH rtok AS (
-          |  SELECT string_split_regex(lower(text), '\\s+') AS tk
-          |  FROM documents WHERE lang = 'en'),
-          |rbi AS (SELECT unnest(${Dedup.shinglesOverTkSql(2)}) AS bi FROM rtok),
-          |model AS (SELECT bi, count(*) AS cbi FROM rbi GROUP BY 1),
-          |heads AS (
-          |  SELECT string_split(bi, ' ')[1] AS head, count(*) AS c1
-          |  FROM rbi GROUP BY 1),
-          |vcb AS (
-          |  SELECT greatest(count(DISTINCT term), 1) AS v FROM (
-          |    SELECT unnest(string_split_regex(lower(text), '\\s+')) AS term
-          |    FROM documents WHERE lang = 'en') WHERE term <> ''),
-          |dtok AS (
-          |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS tk
-          |  FROM documents),
-          |dbi AS (
-          |  SELECT doc_id, unnest(${Dedup.shinglesOverTkSql(2)}) AS bi FROM dtok),
-          |db2 AS (
-          |  SELECT doc_id, bi, string_split(bi, ' ')[1] AS head FROM dbi),
-          |scored AS (
-          |  SELECT d.doc_id,
-          |    ln((coalesce(m.cbi, 0) + 1.0) / (coalesce(h.c1, 0) + v.v)) AS logp
-          |  FROM db2 d LEFT JOIN model m USING (bi)
-          |  LEFT JOIN heads h USING (head) CROSS JOIN vcb v),
-          |agg AS (
-          |  SELECT doc_id, count(*) AS n_bigrams, round(avg(logp), 6) AS avg_logp
-          |  FROM scored GROUP BY 1)
-          |SELECT d.doc_id, coalesce(a.n_bigrams, 0) AS n_bigrams, a.avg_logp,
-          |  round(exp(-a.avg_logp), 6) AS ppl
-          |FROM documents d LEFT JOIN agg a USING (doc_id)""".stripMargin,
-
-      "mm1_features" -> {
-        def fold(j: Int) =
-          s"""CAST(list_sum(list_transform(range(1, length(t) + 1),
-             |    i -> CASE WHEN (i - 1) % 4 = $j THEN ord(substr(t, i, 1))
-             |              ELSE 0 END)) AS DOUBLE) AS f$j""".stripMargin
-        s"""WITH src AS (
-           |  SELECT doc_id, regexp_replace(text, '[^\\x00-\\x7F]', '', 'g') AS t
-           |  FROM documents)
-           |SELECT doc_id,
-           |  CAST(octet_length(CAST(t AS BLOB)) AS BIGINT) AS payload_len,
-           |  substr(sha256(t), 1, 16) AS sha16,
-           |  ${fold(0)},
-           |  ${fold(1)},
-           |  ${fold(2)},
-           |  ${fold(3)}
-           |FROM src""".stripMargin
-      },
-
-      "c7_strings" ->
-        """SELECT doc_id, length(text) AS n_chars_calc,
-          |  CASE WHEN contains(text, 'spark') THEN 1 ELSE 0 END AS has_spark,
-          |  substr(sha256(text), 1, 8) AS sha8,
-          |  (string_split_regex(lower(text), '\s+'))[1] AS first_tok
-          |FROM documents""".stripMargin,
-
-      // The decoded header columns are pure functions of doc_id (the
-      // Spark side round-trips them through a REAL ImageIO encode + byte
-      // parse; both encoders emit 3-component color for TYPE_INT_RGB).
-      "mm2_decode" ->
-        """SELECT doc_id,
-          |  CASE WHEN doc_id % 3 = 0 THEN 'jpeg' ELSE 'png' END AS format,
-          |  CAST(doc_id % 13 + 1 AS INTEGER) AS width,
-          |  CAST(doc_id % 7 + 1 AS INTEGER) AS height,
-          |  CAST(3 AS INTEGER) AS channels
-          |FROM documents""".stripMargin,
-
-      // mm3 twin: PNG is lossless, so the decoded raster equals the
-      // generator formula pixel (x,y) = (doc_id*31 + 7x + 13y) & 0xffffff
-      // — the five checked thumbnail cells are recomputed from that
-      // formula with the engine's exact pooling bounds (integer division,
-      // >= 1 pixel per cell) and integer luma sum; the final
-      // sum/(1000·n) division is the only float op, identical operands on
-      // both sides.
-      "mm3_pixels" ->
-        """WITH p AS (
-          |  SELECT doc_id, doc_id % 13 + 1 AS w, doc_id % 7 + 1 AS h
-          |  FROM documents),
-          |cells AS (
-          |  SELECT * FROM (VALUES (0, 0, 't00'), (0, 7, 't07'), (3, 3, 't33'),
-          |    (7, 0, 't70'), (7, 7, 't77')) AS c(ci, cj, cname)),
-          |b AS (
-          |  SELECT doc_id, w, h, cname,
-          |    (cj * w) // 8 AS x0,
-          |    least(greatest(((cj + 1) * w) // 8, (cj * w) // 8 + 1), w) AS x1,
-          |    (ci * h) // 8 AS y0,
-          |    least(greatest(((ci + 1) * h) // 8, (ci * h) // 8 + 1), h) AS y1
-          |  FROM p CROSS JOIN cells),
-          |bx AS (SELECT *, unnest(range(x0, x1)) AS x FROM b),
-          |bxy AS (SELECT *, unnest(range(y0, y1)) AS y FROM bx),
-          |g AS (
-          |  SELECT doc_id, w, h, cname,
-          |    299 * (((doc_id * 31 + x * 7 + y * 13) % 16777216) // 65536)
-          |      + 587 * ((((doc_id * 31 + x * 7 + y * 13) % 16777216) // 256) % 256)
-          |      + 114 * (((doc_id * 31 + x * 7 + y * 13) % 16777216) % 256)
-          |      AS luma
-          |  FROM bxy),
-          |cv AS (
-          |  SELECT doc_id, any_value(w) AS w, any_value(h) AS h, cname,
-          |    round(CAST(sum(luma) AS DOUBLE) / (1000.0 * count(*)), 6) AS val
-          |  FROM g GROUP BY doc_id, cname)
-          |SELECT doc_id,
-          |  CAST(any_value(w) AS INTEGER) AS px_width,
-          |  CAST(any_value(h) AS INTEGER) AS px_height,
-          |  max(CASE WHEN cname = 't00' THEN val END) AS t00,
-          |  max(CASE WHEN cname = 't07' THEN val END) AS t07,
-          |  max(CASE WHEN cname = 't33' THEN val END) AS t33,
-          |  max(CASE WHEN cname = 't70' THEN val END) AS t70,
-          |  max(CASE WHEN cname = 't77' THEN val END) AS t77
-          |FROM cv GROUP BY doc_id""".stripMargin,
-
-      // mm6 twin: the mm3 pixel-formula CTE generalized to all 64 cells,
-      // kept in integer division end to end (milli-luma m = sum // n,
-      // bit = 64·m > Σm), signature packed into 32-bit halves.
-      "mm6_image_ahash" ->
-        """WITH p AS (
-          |  SELECT doc_id, doc_id % 13 + 1 AS w, doc_id % 7 + 1 AS h
-          |  FROM documents),
-          |cells AS (
-          |  SELECT ci, cj
-          |  FROM (SELECT unnest(range(0, 8)) AS ci) a
-          |  CROSS JOIN (SELECT unnest(range(0, 8)) AS cj) b),
-          |bnd AS (
-          |  SELECT doc_id, w, h, ci, cj,
-          |    (cj * w) // 8 AS x0,
-          |    least(greatest(((cj + 1) * w) // 8, (cj * w) // 8 + 1), w) AS x1,
-          |    (ci * h) // 8 AS y0,
-          |    least(greatest(((ci + 1) * h) // 8, (ci * h) // 8 + 1), h) AS y1
-          |  FROM p CROSS JOIN cells),
-          |bx AS (SELECT *, unnest(range(x0, x1)) AS x FROM bnd),
-          |bxy AS (SELECT *, unnest(range(y0, y1)) AS y FROM bx),
-          |g AS (
-          |  SELECT doc_id, ci, cj,
-          |    299 * (((doc_id * 31 + x * 7 + y * 13) % 16777216) // 65536)
-          |      + 587 * ((((doc_id * 31 + x * 7 + y * 13) % 16777216) // 256) % 256)
-          |      + 114 * (((doc_id * 31 + x * 7 + y * 13) % 16777216) % 256)
-          |      AS luma
-          |  FROM bxy),
-          |cellm AS (
-          |  SELECT doc_id, ci, cj,
-          |    CAST(sum(luma) // count(*) AS BIGINT) AS m
-          |  FROM g GROUP BY 1, 2, 3),
-          |tot AS (SELECT doc_id, CAST(sum(m) AS BIGINT) AS tot FROM cellm GROUP BY 1),
-          |bits AS (
-          |  SELECT c.doc_id, c.ci * 8 + c.cj AS k,
-          |    CASE WHEN 64 * c.m > t.tot THEN 1 ELSE 0 END AS bit
-          |  FROM cellm c JOIN tot t USING (doc_id)),
-          |sig AS (
-          |  SELECT doc_id,
-          |    CAST(sum(CASE WHEN k >= 32 THEN bit * (1::BIGINT << (k - 32))
-          |      ELSE 0 END) AS BIGINT) AS sig_hi,
-          |    CAST(sum(CASE WHEN k < 32 THEN bit * (1::BIGINT << k)
-          |      ELSE 0 END) AS BIGINT) AS sig_lo
-          |  FROM bits GROUP BY 1)
-          |SELECT sig_hi, sig_lo, count(*) AS n_images, min(doc_id) AS rep_id
-          |FROM sig GROUP BY 1, 2""".stripMargin,
-
-      // mm9 twin: mm6's 64-cell integer aHash replay at the mm9 fixture
-      // dims + per-group gradient slopes (shared [[mm9SigCtes]] chain),
-      // then the BRUTE all-pairs hamming filter over distinct
-      // signatures — an independent check that the banded join is
-      // pigeonhole-exact — and the recursive component CTEs (dd8
-      // pattern) + rollup.
-      "mm9_image_near_dup" ->
-        s"""WITH RECURSIVE ${mm9SigCtes(8, "sig")},
-          |sigstats AS MATERIALIZED (
-          |  SELECT sig_hi, sig_lo, min(doc_id) AS rid, count(*) AS n
-          |  FROM sig GROUP BY 1, 2),
-          |vpairs AS (
-          |  SELECT l.rid AS id_a, r.rid AS id_b
-          |  FROM sigstats l JOIN sigstats r ON l.rid < r.rid
-          |  WHERE bit_count(xor(l.sig_hi, r.sig_hi))
-          |      + bit_count(xor(l.sig_lo, r.sig_lo)) <= 3),
-          |$componentCtes,
-          |clusters AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
-          |labeled AS (
-          |  SELECT coalesce(c.cid, s.rid) AS cluster_id, s.n
-          |  FROM sigstats s LEFT JOIN clusters c ON s.rid = c.id)
-          |SELECT cluster_id, CAST(sum(n) AS BIGINT) AS n_images,
-          |  count(*) AS n_sigs
-          |FROM labeled GROUP BY 1""".stripMargin,
-
-      // mm9_wide twin: the 16×16-cell 256-bit replay (8 packed 32-bit
-      // words), brute all-pairs hamming <= 7 over distinct signatures
-      // — so the 8-band join's pigeonhole exactness at the measured
-      // banding is oracle-checked — then the same cluster rollup.
-      "mm9_wide" -> {
-        // bit_count returns TINYINT in DuckDB — eight summed popcounts
-        // overflow 127 without the per-term widening
-        val ham = (0 until 8).map(w =>
-          s"CAST(bit_count(xor(l.sig$w, r.sig$w)) AS BIGINT)")
-          .mkString("\n      + ")
-        val cols = (0 until 8).map(w => s"sig$w").mkString(", ")
-        s"""WITH RECURSIVE ${mm9SigCtes(16, "sig")},
-          |sigstats AS MATERIALIZED (
-          |  SELECT $cols, min(doc_id) AS rid, count(*) AS n
-          |  FROM sig GROUP BY ${(1 to 8).mkString(", ")}),
-          |vpairs AS (
-          |  SELECT l.rid AS id_a, r.rid AS id_b
-          |  FROM sigstats l JOIN sigstats r ON l.rid < r.rid
-          |  WHERE $ham <= 7),
-          |$componentCtes,
-          |clusters AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
-          |labeled AS (
-          |  SELECT coalesce(c.cid, s.rid) AS cluster_id, s.n
-          |  FROM sigstats s LEFT JOIN clusters c ON s.rid = c.id)
-          |SELECT cluster_id, CAST(sum(n) AS BIGINT) AS n_images,
-          |  count(*) AS n_sigs
-          |FROM labeled GROUP BY 1""".stripMargin
-      },
-
-      // mm11 twin: the audio fixture's gained samples replayed from the
-      // byte formula (shared [[mm11FpCtes]] chain), then brute all-pairs
-      // hamming <= 3 WITHIN each window-count block over distinct
-      // (n_windows, fp) signatures — the banded join's blocked
-      // pigeonhole exactness is oracle-checked — and the cluster rollup.
-      "mm11_audio_near_dup" -> mm11TwinSql,
-
-      // mm11_adaptive_bands twin: IDENTICAL to mm11's — the adaptive
-      // banding is exact per block (pigeonhole over meaningful-range
-      // bands), so the same brute all-pairs-within-block replay gates
-      // both banded forms against the same clusters.
-      "mm11_adaptive_bands" -> mm11TwinSql,
-
-      // mm12 twin: the byte-replay temporal-hash chain, then brute
-      // all-pairs hamming WITHIN each frame-count block (banding
-      // exactness oracle-checked against the engine's 4×16 banded
-      // join) and the recursive connected-component rollup.
-      "mm12_video_near_dup" ->
-        s"""WITH RECURSIVE ${mm12FpCtes("", "documents")},
-          |sigstats AS MATERIALIZED (
-          |  SELECT n_frames_sampled, fp, min(doc_id) AS rid,
-          |    count(*) AS n
-          |  FROM f GROUP BY 1, 2),
-          |vpairs AS (
-          |  SELECT l.rid AS id_a, r.rid AS id_b
-          |  FROM sigstats l JOIN sigstats r
-          |    ON l.n_frames_sampled = r.n_frames_sampled
-          |      AND l.rid < r.rid
-          |  WHERE bit_count(xor(l.fp, r.fp)) <= 3),
-          |$componentCtes,
-          |clusters AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
-          |labeled AS (
-          |  SELECT coalesce(c.cid, s.rid) AS cluster_id, s.n
-          |  FROM sigstats s LEFT JOIN clusters c ON s.rid = c.id)
-          |SELECT cluster_id, CAST(sum(n) AS BIGINT) AS n_videos,
-          |  count(*) AS n_sigs
-          |FROM labeled GROUP BY 1""".stripMargin,
-
-      // mm10 twin: mm9's pixel-replay signature chain (CTEs i-prefixed
-      // where they would collide with the text-dedup fragment) ->
-      // doc-level image-cluster labels -> one representative per image
-      // cluster -> mm11's sample-replay chain (au-prefixed) over the
-      // image survivors -> one representative per audio cluster ->
-      // mm12's byte-replay chain (vd-prefixed) over the audio
-      // survivors -> one representative per video cluster -> dd9's
-      // LSH-verify + recursive-component chain over the final survivor
-      // set. Four recursive component chains.
-      "mm10_crossmodal_dedup" -> {
-        val textCtes = lshVerifiedCtesFor(2, 4, 2, 0.05, from = "surv")
-        val icols = (0 until 8).map(w => s"sig$w").mkString(", ")
-        val iham = (0 until 8).map(w =>
-          s"CAST(bit_count(xor(l.sig$w, r.sig$w)) AS BIGINT)")
-          .mkString("\n      + ")
-        s"""WITH RECURSIVE ${mm9SigCtes(16, "isig")},
-          |sigstats AS MATERIALIZED (
-          |  SELECT $icols, min(doc_id) AS rid
-          |  FROM isig GROUP BY ${(1 to 8).mkString(", ")}),
-          |ivpairs AS (
-          |  SELECT l.rid AS id_a, r.rid AS id_b
-          |  FROM sigstats l JOIN sigstats r ON l.rid < r.rid
-          |  WHERE $iham <= 7),
-          |iedges AS (
-          |  SELECT id_a AS u, id_b AS v FROM ivpairs
-          |  UNION SELECT id_b, id_a FROM ivpairs),
-          |ireach AS (
-          |  SELECT u AS id, v AS r FROM iedges
-          |  UNION
-          |  SELECT t.id, e.v AS r FROM ireach t JOIN iedges e ON t.r = e.u),
-          |icl AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM ireach GROUP BY id),
-          |dlab AS (
-          |  SELECT d.doc_id, coalesce(c.cid, s.rid) AS cluster_id
-          |  FROM isig d
-          |  JOIN sigstats s USING ($icols)
-          |  LEFT JOIN icl c ON s.rid = c.id),
-          |img_reps AS (
-          |  SELECT min(doc_id) AS doc_id FROM dlab GROUP BY cluster_id),
-          |isurv AS MATERIALIZED (
-          |  SELECT d.* FROM documents d SEMI JOIN img_reps USING (doc_id)),
-          |${mm11FpCtes("au", "isurv")},
-          |asigstats AS MATERIALIZED (
-          |  SELECT n_windows, fp, min(doc_id) AS rid
-          |  FROM auf GROUP BY 1, 2),
-          |avpairs AS (
-          |  SELECT l.rid AS id_a, r.rid AS id_b
-          |  FROM asigstats l JOIN asigstats r
-          |    ON l.n_windows = r.n_windows AND l.rid < r.rid
-          |  WHERE bit_count(xor(l.fp, r.fp)) <= 3),
-          |aedges AS (
-          |  SELECT id_a AS u, id_b AS v FROM avpairs
-          |  UNION SELECT id_b, id_a FROM avpairs),
-          |areach AS (
-          |  SELECT u AS id, v AS r FROM aedges
-          |  UNION
-          |  SELECT t.id, e.v AS r FROM areach t JOIN aedges e ON t.r = e.u),
-          |acl AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM areach GROUP BY id),
-          |adlab AS (
-          |  SELECT f.doc_id, coalesce(c.cid, s.rid) AS cluster_id
-          |  FROM auf f
-          |  JOIN asigstats s USING (n_windows, fp)
-          |  LEFT JOIN acl c ON s.rid = c.id),
-          |aud_reps AS (
-          |  SELECT min(doc_id) AS doc_id FROM adlab GROUP BY cluster_id),
-          |asurv AS MATERIALIZED (
-          |  SELECT i.* FROM isurv i SEMI JOIN aud_reps USING (doc_id)),
-          |${mm12FpCtes("vd", "asurv")},
-          |vsigstats AS MATERIALIZED (
-          |  SELECT n_frames_sampled, fp, min(doc_id) AS rid
-          |  FROM vdf GROUP BY 1, 2),
-          |vvpairs AS (
-          |  SELECT l.rid AS id_a, r.rid AS id_b
-          |  FROM vsigstats l JOIN vsigstats r
-          |    ON l.n_frames_sampled = r.n_frames_sampled
-          |      AND l.rid < r.rid
-          |  WHERE bit_count(xor(l.fp, r.fp)) <= 3),
-          |vedges AS (
-          |  SELECT id_a AS u, id_b AS v FROM vvpairs
-          |  UNION SELECT id_b, id_a FROM vvpairs),
-          |vreach AS (
-          |  SELECT u AS id, v AS r FROM vedges
-          |  UNION
-          |  SELECT t.id, e.v AS r FROM vreach t JOIN vedges e ON t.r = e.u),
-          |vcl AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM vreach GROUP BY id),
-          |vdlab AS (
-          |  SELECT f.doc_id, coalesce(c.cid, s.rid) AS cluster_id
-          |  FROM vdf f
-          |  JOIN vsigstats s USING (n_frames_sampled, fp)
-          |  LEFT JOIN vcl c ON s.rid = c.id),
-          |vid_reps AS (
-          |  SELECT min(doc_id) AS doc_id FROM vdlab GROUP BY cluster_id),
-          |surv AS MATERIALIZED (
-          |  SELECT a.* FROM asurv a SEMI JOIN vid_reps USING (doc_id)),
-          |$textCtes,
-          |$componentCtes,
-          |tcl AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id)
-          |SELECT doc_id, lang, source FROM surv
-          |WHERE doc_id NOT IN (SELECT id FROM tcl WHERE id <> cid)""".stripMargin
-      },
-
-      // mm7 twin: delta-energy fingerprint replayed from the PCM sample
-      // formula x_i = (doc_id*7 + i*13) % 201 - 100 — integer energies,
-      // lead() comparison, LSB-first bit packing. The fixture's window
-      // count is always >= 2 (n in [10, 59]), so every doc emits a
-      // fingerprint row.
-      "mm7_audio_fingerprint" ->
-        """WITH p AS (
-          |  SELECT doc_id, (doc_id % 50 + 10) // 4 AS nw FROM documents),
-          |s AS (SELECT doc_id, nw, unnest(range(0, 4 * nw)) AS i FROM p),
-          |x AS (
-          |  SELECT doc_id, nw, i // 4 AS w,
-          |    (doc_id * 7 + i * 13) % 201 - 100 AS v
-          |  FROM s),
-          |e AS (
-          |  SELECT doc_id, nw, w, sum(v * v) AS energy FROM x GROUP BY 1, 2, 3),
-          |d AS (
-          |  SELECT doc_id, nw, w, energy,
-          |    lead(energy) OVER (PARTITION BY doc_id ORDER BY w) AS nexte
-          |  FROM e),
-          |f AS (
-          |  SELECT doc_id, nw,
-          |    CAST(coalesce(sum(CASE WHEN nexte > energy
-          |      THEN 1::BIGINT << w ELSE 0 END), 0) AS BIGINT) AS fp
-          |  FROM d WHERE w < nw - 1 AND w < 63 GROUP BY 1, 2)
-          |SELECT CAST(nw AS INTEGER) AS n_windows, fp,
-          |  count(*) AS n_audios, min(doc_id) AS rep_id
-          |FROM f GROUP BY 1, 2""".stripMargin,
-
-      // mm4 twin: frame slicing arithmetic recomputed from the byte
-      // formula byte[i] = (media_id*31 + 7i) % 256 — frameLen is an
-      // integer division of the payload length, kept frames are every
-      // 2nd index below min(n_frames, plen), and the trailing
-      // plen % n_frames remainder belongs to NO frame (the engine's
-      // copyOfRange bound), which the x1 = least(f0 + flen, plen) clamp
-      // mirrors.
-      "mm4_frames" ->
-        """WITH p AS (
-          |  SELECT doc_id,
-          |    doc_id % 7 + 2 AS nf,
-          |    (doc_id % 7 + 2) * (doc_id % 5 + 4) + doc_id % 3 AS plen
-          |  FROM documents),
-          |f AS (
-          |  SELECT doc_id, plen,
-          |    greatest(plen // nf, 1) AS flen,
-          |    least(nf, plen) AS mf
-          |  FROM p),
-          |fr AS (SELECT doc_id, plen, flen,
-          |    unnest(range(0, mf, 2)) AS frame_idx FROM f),
-          |b AS (
-          |  SELECT doc_id, frame_idx, frame_idx * flen AS f0,
-          |    least(frame_idx * flen + flen, plen) AS f1
-          |  FROM fr),
-          |bytes AS (SELECT doc_id, frame_idx, f0, f1,
-          |    unnest(range(f0, f1)) AS i FROM b)
-          |SELECT doc_id AS media_id,
-          |  CAST(frame_idx AS INTEGER) AS frame_idx,
-          |  CAST(f1 - f0 AS BIGINT) AS frame_len,
-          |  CAST(sum((doc_id * 31 + 7 * i) % 256) AS BIGINT) AS byte_sum,
-          |  CAST(min((doc_id * 31 + 7 * i) % 256)
-          |    FILTER (WHERE i = f0) AS INTEGER) AS first_byte,
-          |  CAST(min((doc_id * 31 + 7 * i) % 256)
-          |    FILTER (WHERE i = f1 - 1) AS INTEGER) AS last_byte
-          |FROM bytes GROUP BY doc_id, frame_idx, f0, f1""".stripMargin,
-
-      // mm8 twin: mm4's byte-formula CTEs -> per-frame means -> the same
-      // lag/threshold arithmetic (null first-frame diff excluded from the
-      // count in both engines by CASE/when semantics).
-      "mm8_scene_cuts" ->
-        """WITH p AS (
-          |  SELECT doc_id,
-          |    doc_id % 7 + 2 AS nf,
-          |    (doc_id % 7 + 2) * (doc_id % 5 + 4) + doc_id % 3 AS plen
-          |  FROM documents),
-          |f AS (
-          |  SELECT doc_id, plen,
-          |    greatest(plen // nf, 1) AS flen,
-          |    least(nf, plen) AS mf
-          |  FROM p),
-          |fr AS (SELECT doc_id, plen, flen,
-          |    unnest(range(0, mf, 2)) AS frame_idx FROM f),
-          |b AS (
-          |  SELECT doc_id, frame_idx, frame_idx * flen AS f0,
-          |    least(frame_idx * flen + flen, plen) AS f1
-          |  FROM fr),
-          |bytes AS (SELECT doc_id, frame_idx, f0, f1,
-          |    unnest(range(f0, f1)) AS i FROM b),
-          |fs AS (
-          |  SELECT doc_id, frame_idx,
-          |    CAST(sum((doc_id * 31 + 7 * i) % 256) AS DOUBLE) / (f1 - f0)
-          |      AS mean_b
-          |  FROM bytes GROUP BY doc_id, frame_idx, f0, f1),
-          |d AS (
-          |  SELECT doc_id, frame_idx, abs(mean_b - lag(mean_b)
-          |    OVER (PARTITION BY doc_id ORDER BY frame_idx)) AS diff
-          |  FROM fs)
-          |SELECT doc_id AS media_id,
-          |  CAST(count(*) AS BIGINT) AS n_frames_sampled,
-          |  CAST(sum(CASE WHEN diff > 100.0 THEN 1 ELSE 0 END) AS BIGINT)
-          |    AS n_cuts,
-          |  CAST(min(CASE WHEN diff > 100.0 THEN frame_idx END) AS INTEGER)
-          |    AS first_cut_idx,
-          |  round(avg(diff), 6) AS mean_diff
-          |FROM d GROUP BY doc_id""".stripMargin,
-
-      "dd19_chunk_dedup" ->
-        Dedup.chunkDedupSql("doc_id", "text", 3),
-
-      "dd24_dup_spans" ->
-        Dedup.duplicatedSpansSql("doc_id", "text", 4),
-
-      "dd25_soft_dedup" ->
-        Dedup.softDedupWeightsSql("doc_id", "text", 4),
-
-      "dd26_substr_cut" ->
-        Dedup.substrCutSql("doc_id", "text", 4),
-
-      "dd27_decontam_cut" ->
-        Dedup.decontamCutSql("doc_id", "text", 4,
-          "(SELECT * FROM documents WHERE doc_id >= 20)",
-          "(SELECT * FROM documents WHERE doc_id < 20)"),
-
-      "dd24_dup_spans_prod" ->
-        Dedup.duplicatedSpansSql("doc_id", "text", 50),
-
-      "dd26_substr_cut_prod" ->
-        Dedup.substrCutSql("doc_id", "text", 50),
-
-      "dd27_decontam_cut_prod" ->
-        Dedup.decontamCutSql("doc_id", "text", 50,
-          "(SELECT * FROM documents WHERE doc_id % 50 <> 7)",
-          "(SELECT * FROM documents WHERE doc_id % 50 = 7)"),
-
-      "dd28_pii_redact" ->
-        Dedup.piiRedactCutSql("doc_id", "text",
-          // NB: the outer template applies stripMargin to the composed
-          // string, so no line here may start with a `||` concat — keep
-          // the operators at line ends.
-          from = """(SELECT doc_id,
-            |  CASE WHEN doc_id % 11 = 3 THEN
-            |    text || ' mail u' || CAST(doc_id AS VARCHAR) ||
-            |      '@mail.example or 555-010-' ||
-            |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-            |  WHEN doc_id % 11 = 7 THEN
-            |    text || ' node 10.0.' || CAST(doc_id % 200 AS VARCHAR) ||
-            |      '.' || CAST(doc_id % 13 AS VARCHAR) ||
-            |      ' 10.1.' || CAST(doc_id % 200 AS VARCHAR) ||
-            |      '.' || CAST(doc_id % 13 AS VARCHAR)
-            |  ELSE text END AS text
-            |  FROM documents)""".stripMargin),
-
-      // dd29 twin: same planted-URL derivation, canonicalization
-      // fragments from urlSql, URL-exact dedup via min(doc_id), and the
-      // single-window per-host rank the two-phase plan implements
-      // losslessly (the dd17 convention).
-      "dd29_host_cap" -> {
-        val u = TextAnalysis.urlSql("url")
-        s"""WITH urled AS (
-          |  SELECT doc_id, n_chars,
-          |    (CASE WHEN doc_id % 3 = 0 THEN 'HTTPS://'
-          |          WHEN doc_id % 3 = 1 THEN 'http://'
-          |          ELSE 'https://' END)
-          |    || (CASE WHEN doc_id % 13 = 0 THEN 'crawler:Tok3n@' ELSE '' END)
-          |    || (CASE WHEN doc_id % 4 = 0 THEN 'WWW.' ELSE '' END)
-          |    || (CASE WHEN doc_id % 5 < 2 THEN 'Big.Example.COM'
-          |          ELSE 'site' || CAST(doc_id % 97 AS VARCHAR)
-          |            || '.example.org' END)
-          |    || (CASE WHEN doc_id % 7 = 0 THEN ':443' ELSE '' END)
-          |    || '/p/' || CAST(doc_id % 50 AS VARCHAR)
-          |    || (CASE WHEN doc_id % 6 = 0 THEN '/' ELSE '' END)
-          |    || (CASE WHEN doc_id % 2 = 0
-          |          THEN '?utm=x&ref=' || CAST(doc_id % 9 AS VARCHAR)
-          |          ELSE '' END)
-          |    || (CASE WHEN doc_id % 11 = 0 THEN '#s2' ELSE '' END) AS url
-          |  FROM documents),
-          |canon AS (
-          |  SELECT doc_id, n_chars, ${u("url_host")} AS url_host,
-          |    ${u("url_canon")} AS url_canon
-          |  FROM urled),
-          |first_per_url AS (
-          |  SELECT url_canon, min(doc_id) AS doc_id
-          |  FROM canon GROUP BY url_canon),
-          |kept AS (
-          |  SELECT c.* FROM canon c SEMI JOIN first_per_url f
-          |  USING (url_canon, doc_id)),
-          |ranked AS (
-          |  SELECT doc_id, url_host, url_canon,
-          |    row_number() OVER (PARTITION BY url_host
-          |      ORDER BY n_chars DESC, doc_id) AS grp_rank
-          |  FROM kept)
-          |SELECT doc_id, url_host, url_canon, CAST(grp_rank AS BIGINT) AS grp_rank
-          |FROM ranked WHERE grp_rank <= 30""".stripMargin
-      },
-
-      // mm5 twin: integer sample/sum arithmetic from the generator
-      // formula; the single double division + sqrt replays the engine's
-      // exact operands (sum of squares stays integral until the cast).
-      "mm5_audio" ->
-        """WITH p AS (SELECT doc_id, doc_id % 50 + 10 AS n FROM documents),
-          |s AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM p),
-          |x AS (SELECT doc_id, n, i,
-          |  (doc_id * 7 + i * 13) % 201 - 100 AS v FROM s),
-          |w AS (SELECT doc_id, n, v,
-          |  lag(v) OVER (PARTITION BY doc_id ORDER BY i) AS pv FROM x)
-          |SELECT doc_id,
-          |  CAST(any_value(n) AS BIGINT) AS n_samples,
-          |  round(sqrt(CAST(sum(v * v) AS DOUBLE) / any_value(n)), 6) AS rms,
-          |  round(sum(CASE WHEN pv IS NOT NULL AND pv * v < 0
-          |      THEN 1 ELSE 0 END) /
-          |    CAST(any_value(n) - 1 AS DOUBLE), 6) AS zcr,
-          |  CAST(max(abs(v)) AS INTEGER) AS peak
-          |FROM w GROUP BY doc_id""".stripMargin,
-
-      "t21_dsir_weights" ->
-        TextAnalysis.dsirWeightsSql("doc_id", "text",
-          "source IN ('src1', 'src2', 'src3', 'src4')", 256),
-
-      // t28 twin: t21's weight chain + the identical Gumbel key over the
-      // shared SHA uniform, ranked on the ROUNDED key.
-      "t28_dsir_sample" -> {
-        val u = s"(${Hashing.sha28Sql("'dsir|' || doc_id")} % 1048576 + 0.5)" +
-          " / 1048576.0"
-        s"""WITH wts AS (
-          |  SELECT * FROM (${TextAnalysis.dsirWeightsSql("doc_id", "text",
-                "source IN ('src1', 'src2', 'src3', 'src4')", 256)})
-          |  WHERE log_w IS NOT NULL),
-          |keyed AS (
-          |  SELECT doc_id, n_feats, log_w,
-          |    round(log_w - ln(-ln($u)), 6) AS gumbel_key
-          |  FROM wts)
-          |SELECT doc_id, n_feats, log_w, gumbel_key
-          |FROM keyed ORDER BY gumbel_key DESC, doc_id LIMIT 100""".stripMargin
-      },
-
-      // t33 twin: t21's weight chain joined with dd25's commonness (both
-      // fragments verbatim), combined in log space, ranked on the same
-      // rounded Gumbel key over a fresh SHA uniform.
-      "t33_soft_sample" -> {
-        val u = s"(${Hashing.sha28Sql("'softdsir|' || doc_id")} % 1048576" +
-          " + 0.5) / 1048576.0"
-        s"""WITH wts AS (
-          |  SELECT * FROM (${TextAnalysis.dsirWeightsSql("doc_id", "text",
-                "source IN ('src1', 'src2', 'src3', 'src4')", 256)})
-          |  WHERE log_w IS NOT NULL),
-          |soft AS (
-          |  SELECT doc_id, commonness
-          |  FROM (${Dedup.softDedupWeightsSql("doc_id", "text", 4)})),
-          |keyed AS (
-          |  SELECT w.doc_id, w.log_w, s.commonness,
-          |    round(w.log_w - ln(s.commonness), 6) AS log_w_soft,
-          |    round(round(w.log_w - ln(s.commonness), 6)
-          |      - ln(-ln($u)), 6) AS gumbel_key
-          |  FROM wts w JOIN soft s USING (doc_id))
-          |SELECT doc_id, log_w, commonness, log_w_soft, gumbel_key
-          |FROM keyed ORDER BY gumbel_key DESC, doc_id LIMIT 100""".stripMargin
-      },
-
-      "t23_bpe" ->
-        TextAnalysis.bpeTokenCountsSql("doc_id", "text"),
-
-      // t34 twin: the m5 GD-fit replay generalized to 16 hashed-bucket
-      // features — identical round-8 boundaries at stats and gradients,
-      // unrolled iteration CTEs, guard s=0/NULL -> 1, then the scored
-      // corpus with round-6 prob and the threshold on the ROUNDED prob
-      // (the engine's y_pred contract).
-      "t34_quality_clf" -> {
-        val B = 16
-        val iters = 12
-        val gr = TextAnalysis.gopherRulesSql("doc_id", "text")
-        val featCols = (0 until B).map(b =>
-          s"CAST(len(list_filter(fl, f -> ${Hashing.sha28Sql("f")} % $B = $b)) AS DOUBLE) AS f$b")
-          .mkString(",\n|    ")
-        val statCols = (0 until B).map(b =>
-          s"round(avg(f$b), 8) AS m$b, round(stddev_samp(f$b), 8) AS sr$b")
-          .mkString(",\n|  ")
-        val guardCols = (0 until B).map(b =>
-          s"m$b, CASE WHEN sr$b IS NULL OR sr$b = 0 THEN 1.0 ELSE sr$b END AS s$b")
-          .mkString(",\n|  ")
-        val zCols = (0 until B).map(b => s"(f$b - m$b) / s$b AS z$b")
-          .mkString(", ")
-        def sig(bt: String) = s"1/(1+exp(-($bt.c0 + " +
-          (0 until B).map(b => s"$bt.c${b + 1}*z$b").mkString(" + ") + ")))"
-        val b0Cols = ("0.0 AS c0" +: (0 until B).map(b => s"0.0 AS c${b + 1}"))
-          .mkString(", ")
-        val iterCtes = (1 to iters).map { k =>
-          val prev = s"b${k - 1}"
-          val gCols = (s"round(avg(${sig(prev)} - y), 8) AS g0" +:
-            (0 until B).map(b =>
-              s"round(avg((${sig(prev)} - y) * z$b), 8) AS g${b + 1}"))
-            .mkString(",\n|    ")
-          val bCols = (s"$prev.c0 - 0.5*g0 AS c0" +:
-            (0 until B).map(b => s"$prev.c${b + 1} - 0.5*g${b + 1} AS c${b + 1}"))
-            .mkString(", ")
-          // MATERIALIZED: DuckDB inlines plain CTEs, so an unrolled
-          // GD chain re-expands the whole upstream fit per reference —
-          // exponential in iterations. Materializing pins each step to
-          // one evaluation (the engine's driver loop does the same).
-          s"""g$k AS MATERIALIZED (SELECT $gCols FROM tr, $prev),
-             |b$k AS MATERIALIZED (SELECT $bCols FROM $prev, g$k)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH gf AS (
-          |  SELECT doc_id,
-          |    CASE WHEN r1_word_count AND r2_mean_word_len
-          |      AND r3_symbol_ratio AND r4_bullet_lines
-          |      AND r5_ellipsis_lines AND r6_alpha_words
-          |    THEN 1.0 ELSE 0.0 END AS label
-          |  FROM ($gr)),
-          |toks AS (
-          |  SELECT doc_id,
-          |    list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
-          |  FROM documents),
-          |fs AS (
-          |  SELECT doc_id, list_concat(w,
-          |    CASE WHEN len(w) >= 2
-          |      THEN list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i + 1])
-          |      ELSE [] END) AS fl
-          |  FROM toks),
-          |fx AS MATERIALIZED (
-          |  SELECT doc_id, g.label, doc_id % 5 = 0 AS is_tr,
-          |    $featCols
-          |  FROM fs JOIN gf g USING (doc_id)),
-          |tr0 AS (SELECT * FROM fx WHERE is_tr),
-          |st AS (SELECT $statCols FROM tr0),
-          |stg AS (SELECT $guardCols FROM st),
-          |tr AS MATERIALIZED (SELECT label AS y, $zCols FROM tr0, stg),
-          |b0 AS (SELECT $b0Cols),
-          |$iterCtes,
-          |te AS (SELECT doc_id, label, $zCols FROM fx, stg),
-          |pred AS (SELECT doc_id, label,
-          |  round(${sig(s"b$iters")}, 6) AS prob FROM te, b$iters)
-          |SELECT doc_id, label, prob,
-          |  CASE WHEN prob IS NULL THEN NULL
-          |       WHEN prob >= 0.5 THEN 1 ELSE 0 END AS y_pred
-          |FROM pred""".stripMargin
-      },
-
-      // e2e_llm_prep twin: the t31/dd19/t21/t23 fragments composed.
-      // DuckDB permits a WITH inside a derived table, which is how each
-      // self-contained fragment nests into this chain unchanged. The
-      // quality gate filters on the six language-agnostic Gopher flags
-      // (r1-r6), mirroring gopherStructuralFilter's contract.
-      "e2e_llm_prep" -> {
-        val gr = TextAnalysis.gopherRulesSql("doc_id", "text")
-        val dd = Dedup.chunkDedupSql("doc_id", "text", 3, from = "gated")
-        val dsir = TextAnalysis.dsirWeightsSql("doc_id", "dedup_text",
-          "source IN ('src1', 'src2', 'src3', 'src4')", 256, from = "base")
-        val bpe = TextAnalysis.bpeTokenCountsSql("doc_id", "dedup_text",
-          from = "kept")
-        s"""WITH gated AS (
-          |  SELECT d.* FROM documents d
-          |  JOIN ($gr) g USING (doc_id)
-          |  WHERE g.r1_word_count AND g.r2_mean_word_len
-          |    AND g.r3_symbol_ratio AND g.r4_bullet_lines
-          |    AND g.r5_ellipsis_lines AND g.r6_alpha_words),
-          |base AS (
-          |  SELECT dd.doc_id, dd.dedup_text, d.source
-          |  FROM ($dd) dd JOIN gated d USING (doc_id)),
-          |w AS (SELECT * FROM ($dsir) ww WHERE ww.log_w > 0),
-          |kept AS (
-          |  SELECT b.doc_id, b.dedup_text, b.source
-          |  FROM base b JOIN w USING (doc_id))
-          |SELECT k.source,
-          |  CAST(count(*) AS BIGINT) AS n_docs_kept,
-          |  CAST(sum(c.n_subwords) AS BIGINT) AS total_subwords,
-          |  round(avg(c.chars_per_subword), 6) AS mean_cps
-          |FROM ($bpe) c JOIN kept k USING (doc_id)
-          |GROUP BY k.source""".stripMargin
-      },
-
-      // e2e_decontam_prep twin: the gopher/substr-cut/PII-redact/
-      // decontam/bpe fragments composed — each self-contained WITH nests
-      // as a derived table, the e2e_llm_prep pattern. The PII planting
-      // (dd28's two id strata) runs AFTER the gate, mirroring the engine.
-      "e2e_decontam_prep" -> {
-        val gr = TextAnalysis.gopherRulesSql("doc_id", "text",
-          from = "train")
-        val cutSql = Dedup.substrCutSql("doc_id", "text", 4,
-          from = "planted")
-        val redSql = Dedup.piiRedactCutSql("doc_id", "dedup_text",
-          from = "(SELECT doc_id, dedup_text FROM cutq)")
-        val deconSql = Dedup.decontamCutSql("doc_id", "redacted_text", 4,
-          trainFrom = "(SELECT doc_id, redacted_text FROM redq)",
-          evalFrom = "(SELECT doc_id, text AS redacted_text FROM documents " +
-            "WHERE doc_id < 20)")
-        val bpe = TextAnalysis.bpeTokenCountsSql("doc_id", "dedup_text",
-          from = "decon")
-        s"""WITH train AS (SELECT * FROM documents WHERE doc_id >= 20),
-          |gated AS (
-          |  SELECT d.* FROM train d
-          |  JOIN ($gr) g USING (doc_id)
-          |  WHERE g.r1_word_count AND g.r2_mean_word_len
-          |    AND g.r3_symbol_ratio AND g.r4_bullet_lines
-          |    AND g.r5_ellipsis_lines AND g.r6_alpha_words),
-          |planted AS (
-          |  SELECT doc_id, source,
-          |    CASE WHEN doc_id % 11 = 3 THEN
-          |      text || ' mail u' || CAST(doc_id AS VARCHAR) ||
-          |        '@mail.example or 555-010-' ||
-          |        lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-          |    WHEN doc_id % 11 = 7 THEN
-          |      text || ' node 10.0.' || CAST(doc_id % 200 AS VARCHAR) ||
-          |        '.' || CAST(doc_id % 13 AS VARCHAR) ||
-          |        ' 10.1.' || CAST(doc_id % 200 AS VARCHAR) ||
-          |        '.' || CAST(doc_id % 13 AS VARCHAR)
-          |    ELSE text END AS text
-          |  FROM gated),
-          |cutq AS (SELECT * FROM ($cutSql)),
-          |redq AS (SELECT * FROM ($redSql)),
-          |decon AS (SELECT * FROM ($deconSql))
-          |SELECT k.source,
-          |  CAST(count(*) AS BIGINT) AS n_docs_kept,
-          |  CAST(sum(c.n_subwords) AS BIGINT) AS total_subwords,
-          |  round(avg(c.chars_per_subword), 6) AS mean_cps,
-          |  CAST(sum(dc.tokens_cut) AS BIGINT) AS decontam_tokens_cut,
-          |  CAST(sum(r.n_pii_spans) AS BIGINT) AS pii_spans_redacted
-          |FROM ($bpe) c
-          |JOIN decon dc USING (doc_id)
-          |JOIN redq r USING (doc_id)
-          |JOIN (SELECT doc_id, source FROM planted) k USING (doc_id)
-          |GROUP BY k.source""".stripMargin
-      },
-
-      // e2e_c4_prep twin: the same word-wrap segmentation (W = 4 +
-      // doc_id%4, terminal period; list_slice/slice and the range
-      // bounds line up 1-based inclusive on both engines), then the
-      // c4Clean/chunkDedup/bpe fragments composed.
-      "e2e_c4_prep" -> {
-        val clean = TextAnalysis.c4CleanSql("text", from = "seg")
-        val dd = Dedup.chunkDedupSql("doc_id", "clean_text", 3,
-          from = "cleaned")
-        val bpe = TextAnalysis.bpeTokenCountsSql("doc_id", "dedup_text",
-          from = "base")
-        s"""WITH seg AS (
-          |  SELECT doc_id, source,
-          |    CASE WHEN len(w) = 0 THEN '' ELSE array_to_string(
-          |      list_transform(range(0, CAST(ceil(len(w) / CAST(4 + (doc_id % 4) AS DOUBLE)) AS INT)),
-          |        i -> array_to_string(list_slice(w, i * (4 + (doc_id % 4)) + 1, (i + 1) * (4 + (doc_id % 4))), ' ') || '.'),
-          |      chr(10)) END AS text
-          |  FROM (SELECT doc_id, source,
-          |          list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS w
-          |        FROM documents)),
-          |cleaned AS ($clean),
-          |base AS (
-          |  SELECT dd.doc_id, dd.dedup_text, d.source
-          |  FROM ($dd) dd JOIN cleaned d USING (doc_id))
-          |SELECT b.source,
-          |  CAST(count(*) AS BIGINT) AS n_docs_kept,
-          |  CAST(sum(c.n_subwords) AS BIGINT) AS total_subwords,
-          |  round(avg(c.chars_per_subword), 6) AS mean_cps
-          |FROM ($bpe) c JOIN base b USING (doc_id)
-          |GROUP BY b.source""".stripMargin
-      },
-
-      "q8_dataset_card" -> {
-        val qm = TextAnalysis.qualitySql("text")
-        s"""WITH q AS (
-          |  SELECT source, lang, n_chars,
-          |    CAST(${qm("n_words")} AS BIGINT) AS n_words,
-          |    ${qm("quality_score")} AS quality_score,
-          |    count(*) OVER (PARTITION BY sha256(text)) AS n_sha
-          |  FROM documents)
-          |SELECT source,
-          |  CAST(count(*) AS BIGINT) AS n_docs,
-          |  CAST(sum(n_words) AS BIGINT) AS total_words,
-          |  round(avg(quality_score), 6) AS mean_quality,
-          |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-          |  round(sum(CASE WHEN n_sha > 1 THEN 1 ELSE 0 END) /
-          |    CAST(count(*) AS DOUBLE), 6) AS dup_rate,
-          |  round(avg(CAST(n_chars AS DOUBLE)), 6) AS mean_chars
-          |FROM q GROUP BY source""".stripMargin
-      })
   }
 }

@@ -402,6 +402,45 @@ class RunPipelineSpec extends SparkTestBase {
     assertStageLabelled(jobs)
   }
 
+  /** Replaces the fixture's Apple ZIP with `bytes`. */
+  private def replaceAppleZip(rawRoot: String, bytes: Array[Byte]): Unit =
+    Files.write(Paths.get(rawRoot, "P000001", "apple", "export",
+      "HealthAutoExport-2024-08-31.zip"), bytes)
+
+  test("RunPipeline: a failing stage 0 is a named stage failure") {
+    // a zip-slip entry: its path escapes the extraction directory
+    val (rawRoot, outDir) = buildFixture()
+    val bytes = new java.io.ByteArrayOutputStream
+    val zos = new ZipOutputStream(bytes)
+    zos.putNextEntry(new ZipEntry("../../escaped.txt"))
+    zos.write("x".getBytes("UTF-8"))
+    zos.closeEntry()
+    zos.close()
+    replaceAppleZip(rawRoot, bytes.toByteArray)
+    val (logs, jobs) = JobsSeen.recording(spark) {
+      RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+    }
+    assert(logs.size === 1, logs.mkString("\n"))
+    val l = logs.head
+    assert((l.stage, l.name, l.status) === ((0, "ingest", "failed")), l)
+    assert(l.detail.contains("escapes destination") && !l.detail.contains("\n"),
+      l.detail)
+    assert(!jobs.exists(_.description.startsWith("stage 1")),
+      jobs.map(_.description).distinct)
+    assert(!Files.exists(Paths.get(outDir).resolve("escaped.txt")))
+  }
+
+  test("RunPipeline: an Apple ZIP with no entries names the missing inputs") {
+    // ZipInputStream reads no entry from bytes that are not an archive
+    val (rawRoot, outDir) = buildFixture()
+    replaceAppleZip(rawRoot, "not a zip archive".getBytes("UTF-8"))
+    val logs = RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+    assert(logs.map(l => (l.stage, l.status)) === Seq(0 -> "success", 1 -> "failed"),
+      logs.mkString("\n"))
+    assert(logs.last.detail.contains("export.xml") &&
+      logs.last.detail.contains("HealthAutoExport-2024-08-31.zip"), logs.last.detail)
+  }
+
   test("RunPipeline: SoM-less snapshot degrades to stages 0-4 + report") {
     val (rawRoot, outDir) = buildFixture()
     // strip StateOfMind from the fixture by rebuilding the zip without it

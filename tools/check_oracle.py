@@ -81,14 +81,16 @@ def main(sf_dir: str, out_dir: str) -> int:
             failures += 1
         else:
             print(f"PASS {name} ({len(g)} rows)")
-    # queries without oracle = rows-only
+    # every query carries an oracle, so an output without one is a failure
     import os
     all_dirs = {d for d in os.listdir(out_dir)
                 if os.path.isdir(os.path.join(out_dir, d))}
-    for name in sorted(all_dirs - set(oracle)):
-        n = len(pd.read_parquet(f"{out_dir}/{name}"))
-        print(f"ROWS-ONLY {name}: {n} rows")
-    print(f"\n{len(oracle) - failures}/{len(oracle)} oracle queries pass")
+    orphans = sorted(all_dirs - set(oracle))
+    for name in orphans:
+        print(f"FAIL {name}: output has no oracle SQL")
+    failures += len(orphans)
+    total = len(oracle) + len(orphans)
+    print(f"\n{total - failures}/{total} oracle queries pass")
     return 1 if failures else 0
 
 
