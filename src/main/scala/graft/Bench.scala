@@ -36,8 +36,6 @@ object Bench {
     // not the one-time whole-corpus hash pass production stores.
     try graft.queries.TextQueries.dd13StateFixture(spark, sfDir)
     catch { case _: Throwable => () }
-    try graft.queries.TextQueries.dd23StateFixture(spark, sfDir)
-    catch { case _: Throwable => () }
     // min of 2 runs per query: the first execution pays codegen/JIT
     // compilation; the min reflects steady-state engine throughput.
     // Per-query state hygiene: drop any cache entries / localCheckpoint

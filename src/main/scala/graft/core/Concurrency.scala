@@ -24,9 +24,8 @@ import scala.util.control.NonFatal
   * small DAEMON pool (it cannot pin the JVM open) that is torn down in
   * a finally, and the await is bounded: a wedged action surfaces as a
   * TimeoutException naming the phase instead of a silent hang. The
-  * default bound is deliberately generous (hours — these thunks take
-  * seconds locally and minutes at cluster scale); callers with truly
-  * longer phases pass their own.
+  * bound is deliberately generous (hours — these thunks take seconds
+  * locally and minutes at cluster scale).
   *
   * Failure: when a thunk throws, its siblings are not interrupted; the
   * call waits (within the same bound) for them to finish, then rethrows
@@ -37,8 +36,9 @@ import scala.util.control.NonFatal
   * results are bit-identical to running the same thunks sequentially.
   * Results return in input order regardless of completion order. */
 object Concurrency {
-  def inParallel[T](name: String, thunks: Seq[() => T],
-                    maxWait: Duration = Duration(6, HOURS)): Seq[T] = {
+  private val maxWait = Duration(6, HOURS)
+
+  def inParallel[T](name: String, thunks: Seq[() => T]): Seq[T] = {
     if (thunks.lengthCompare(1) <= 0) return thunks.map(_())
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(

@@ -10,10 +10,9 @@ import org.apache.spark.sql.functions._
   * trailing-comma rows whose field count exceeds the header
   * (`src/domains/som/som_from_autoexport.py:236-290`).
   *
-  * Spark-native: PERMISSIVE mode with a corrupt-record column (malformed
-  * rows observable, not silently dropped), DROPMALFORMED when the caller
-  * wants the reference's on_bad_lines="skip", and alias resolution as a
-  * rename pass so downstream operators see canonical names.
+  * Spark-native: DROPMALFORMED for the reference's
+  * on_bad_lines="skip", and alias resolution as a rename pass so
+  * downstream operators see canonical names.
   */
 object RobustCsv {
 
@@ -33,14 +32,6 @@ object RobustCsv {
       .schema(schema)
       .csv(path)
   }
-
-  /** Read a CSV keeping malformed lines in `_corrupt` for QC accounting. */
-  def readPermissive(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .csv(path)
 
   /** S8 — trailing-comma repair: drop unnamed phantom columns (`_cN`
     * beyond the real header) produced by rows with extra separators. */

@@ -26,17 +26,6 @@ object Intervals {
       .agg(round(sum("dur_h"), 6).as("total_h"), count(lit(1)).as("n_intervals"),
         round(max("dur_h"), 6).as("max_h"))
 
-  /** A9 — stage-pivoted daily durations (deep/light/rem columns). */
-  def dailyStagePivot(intervals: DataFrame, startCol: String, endCol: String,
-                      stageCol: String, stages: Seq[String]): DataFrame =
-    intervals
-      .withColumn("dur_h",
-        (unix_timestamp(col(endCol)) - unix_timestamp(col(startCol))) / 3600.0)
-      .filter(col("dur_h") > 0)
-      .groupBy(to_date(col(startCol)).as("date"))
-      .pivot(stageCol, stages)
-      .agg(round(sum("dur_h"), 6))
-
   /** Schema of the reference's Zepp `naps` JSON column:
     * `[{"start":"2022-01-08 00:33:10+0000","end":"…"}]`. */
   val napsSchema: ArrayType = ArrayType(new StructType()

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Canon.round
 import graft.functions.TimeParse
@@ -282,32 +282,30 @@ object ReferencePipeline {
     Unify.unifyAll(nonEmpty)
   }
 
-  /** Stage 2 — unify: date spine over domains, left joins, Apple>Zepp
-    * cardio coalesce-merge with provenance, missing flags.
-    * Contract shape: `features_daily_unified`
-    * (`src/etl/stage_unify_daily.py:418-490`). */
-  def unifyDaily(appleCardio: DataFrame, zeppCardio: DataFrame, sleep: DataFrame,
-                 activity: DataFrame): DataFrame = {
-    val cardio = Unify.coalesceMerge(
-      appleCardio.select("date", "hr_mean", "hr_std", "hr_samples"),
-      zeppCardio.select("date", "hr_mean", "hr_std", "hr_samples"),
-      Seq("hr_mean", "hr_std", "hr_samples"), "cardio")
-    val unified = Unify.unifyAll(Seq(
-      cardio, sleep.select("date", "sleep_hours", "sleep_quality_score"),
-      activity.select("date", "total_steps", "total_active_energy")))
-    unified
-      .withColumn("missing_sleep", when(col("sleep_hours").isNull, 1).otherwise(0))
-      .withColumn("missing_activity", when(col("total_steps").isNull, 1).otherwise(0))
-  }
-
-  /** Stage 3+4 — segment + PBSI label. Proxies mirror the reference's
-    * `_normalize_column_names_for_pbsi` (hrv ≈ 2*hr_std, exercise ≈
-    * kcal/5, `src/etl/stage_apply_labels.py:84-165`). Output adds
-    * segment_id, z_*, subscores, pbsi_score, label_3cls/2cls,
-    * pbsi_quality. */
+  /** Stage 3+4 — segment + PBSI label over [[unifyAllDomains]]'s frame.
+    * Proxies mirror the reference's `_normalize_column_names_for_pbsi`
+    * (hrv ≈ 2*hr_std, exercise ≈ kcal/5,
+    * `src/etl/stage_apply_labels.py:84-165`). Output adds
+    * missing_sleep, source_cardio, missing_activity, segment_id, z_*,
+    * subscores, pbsi_score, label_3cls/2cls, pbsi_quality. */
   def labelDaily(unified: DataFrame): DataFrame = {
+    // unify_all's frame carries no provenance flags; the quality factor
+    // below reads the canonical form's missing_/source_ columns. Derive
+    // them with the same any-non-null rule unifyCanonical applies.
+    def haveAny(names: String*): Column =
+      names.filter(unified.columns.contains).map(col(_).isNotNull)
+        .reduceOption(_ || _).getOrElse(lit(false))
+    val withProvenance = unified
+      .withColumn("missing_sleep",
+        (!haveAny("sleep_hours", "sleep_quality_score")).cast("int"))
+      .withColumn("source_cardio",
+        when(haveAny("hr_mean", "hr_min", "hr_max", "hr_std"), lit("merged"))
+          .otherwise(lit("none")))
+      .withColumn("missing_activity",
+        (!haveAny("total_steps", "total_distance", "total_active_energy"))
+          .cast("int"))
     val participant = lit("P000001")
-    val withProxies = unified
+    val withProxies = withProvenance
       .withColumn("pid", participant)
       .withColumn("hrv_proxy", col("hr_std") * 2.0)
       .withColumn("exercise_proxy", col("total_active_energy") / 5.0)

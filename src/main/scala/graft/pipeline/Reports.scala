@@ -462,9 +462,10 @@ object Reports {
     *
     * through the atomic `.prev`-backed text sink. Distributed discipline:
     * every write collects only fold-count- or class-count-sized frames;
-    * the daily/prediction frames are aggregated in Spark first. Returns
-    * the CvSummary so callers can assert on the numbers without
-    * re-reading the JSON. */
+    * the daily/prediction frames are aggregated in Spark first. Every
+    * artifact re-aggregates `pred`, so callers pass it materialized (the
+    * snapshot run checkpoints it once). Returns the CvSummary so callers
+    * can assert on the numbers without re-reading the JSON. */
   def writeArtifacts(labeled: DataFrame, pred: DataFrame, foldCol: String,
                      truthCol: String, predCol: String, dateCol: String,
                      classes: Seq[String], model: String, featureSet: String,
@@ -476,14 +477,9 @@ object Reports {
                      warnings: Seq[String] = Nil,
                      trainCounts: Option[DataFrame] = None): CvSummary = {
     val spark = pred.sparkSession
-    // Materialize the prediction frame once: every artifact below
-    // re-aggregates it (per-fold metrics twice, confusion matrices,
-    // per-class counts, class distribution), and without this each pass
-    // would replay the full upstream plan.
-    val p = pred.localCheckpoint(true)
-    val perFold = perFoldMetrics(p, foldCol, truthCol, predCol, dateCol,
+    val perFold = perFoldMetrics(pred, foldCol, truthCol, predCol, dateCol,
       classes, trainCounts)
-    val dist = p.groupBy(truthCol).count().orderBy(truthCol)
+    val dist = pred.groupBy(truthCol).count().orderBy(truthCol)
       .collect().toSeq.map(r => r.get(0).toString -> r.getAs[Long]("count"))
     val summary = CvSummary(model, featureSet, target,
       targetType = if (classes.length > 2) "multiclass" else "binary",
@@ -495,11 +491,11 @@ object Reports {
       cvSummaryJson(summary))
     graft.core.Sinks.atomicText(spark,
       s"$outDir/confusion_matrices/cm_${model}_$target.json",
-      confusionMatricesJson(p, foldCol, truthCol, predCol, classes,
+      confusionMatricesJson(pred, foldCol, truthCol, predCol, classes,
         model, target))
     graft.core.Sinks.atomicText(spark,
       s"$outDir/metrics/per_class_${model}_$target.csv",
-      perClassCsv(perFoldClassMetrics(p, foldCol, truthCol, predCol,
+      perClassCsv(perFoldClassMetrics(pred, foldCol, truthCol, predCol,
         classes), model, target))
     if (baselines.nonEmpty)
       graft.core.Sinks.atomicText(spark,

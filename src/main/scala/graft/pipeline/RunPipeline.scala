@@ -392,24 +392,8 @@ object RunPipeline {
       // ---------- stage 3: label ----------
       val labeled = writeAlongside(2, "unify", unified, "daily_unified") {
         step(3, "label") {
-          // unify_all's frame carries no provenance flags; labelDaily's
-          // quality factor reads the canonical form's missing_/source_
-          // columns. Derive them with the same any-non-null rule
-          // unifyCanonical applies.
-          def haveAny(names: String*): org.apache.spark.sql.Column =
-            names.filter(unified.columns.contains).map(col(_).isNotNull)
-              .reduceOption(_ || _).getOrElse(lit(false))
-          val withProvenance = unified
-            .withColumn("missing_sleep",
-              (!haveAny("sleep_hours", "sleep_quality_score")).cast("int"))
-            .withColumn("source_cardio",
-              when(haveAny("hr_mean", "hr_min", "hr_max", "hr_std"), lit("merged"))
-                .otherwise(lit("none")))
-            .withColumn("missing_activity",
-              (!haveAny("total_steps", "total_distance", "total_active_energy"))
-                .cast("int"))
           // consumed by stages 4, 5, 6 and the report
-          ReferencePipeline.labelDaily(withProvenance).localCheckpoint(true)
+          ReferencePipeline.labelDaily(unified).localCheckpoint(true)
         }
       }
       logs += StageLog(2, "unify", "success",

@@ -28,29 +28,16 @@ object TextQueries {
     * the computation — the oracle is unchanged. Bench calls this in its
     * warm-up so dd13's timed window covers only the batch-proportional
     * path. */
-  def dd13StateFixture(s: SparkSession, dir: String): (String, String) =
-    incStateFixture(s, dir, 2, 4)
-
-  /** dd23's stored corpus state: same digest table, signatures at dd21's
-    * production knobs (K=3, 16 hashes). */
-  def dd23StateFixture(s: SparkSession, dir: String): (String, String) =
-    incStateFixture(s, dir, 3, 16)
-
-  private def incStateFixture(s: SparkSession, dir: String,
-                              shingleK: Int, numHashes: Int): (String, String) = {
+  def dd13StateFixture(s: SparkSession, dir: String): (String, String) = {
     val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val dig = s"/tmp/graft_dd13_$key/digests"
-    // the (2,4) table keeps its original un-suffixed path so warm /tmp
-    // state from earlier rounds stays valid
-    val suffix = if (shingleK == 2 && numHashes == 4) ""
-                 else s"_k${shingleK}h$numHashes"
-    val sig = s"/tmp/graft_dd13_$key/signatures$suffix"
+    val sig = s"/tmp/graft_dd13_$key/signatures"
     if (!new java.io.File(s"$dig/_SUCCESS").exists() ||
         !new java.io.File(s"$sig/_SUCCESS").exists()) {
       val existing = Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0)
       Dedup.contentDigests(existing, "text")
         .write.mode("overwrite").parquet(dig)
-      Dedup.minhashSignature(existing, "doc_id", "text", shingleK, numHashes)
+      Dedup.minhashSignature(existing, "doc_id", "text", 2, 4)
         .write.mode("overwrite").parquet(sig)
     }
     (dig, sig)
@@ -132,7 +119,7 @@ object TextQueries {
 
   /** [[mm9Media]] hashed by the WIDE 256-bit
     * [[graft.multimodal.Multimodal.aHash256]]: one
-    * (doc_id, sig0..sig7) row per document — mm9_wide's input. */
+    * (doc_id, sig0..sig7) row per document — mm10's image input. */
   def mm9WideDocSigs(s: SparkSession, dir: String): DataFrame =
     graft.multimodal.Multimodal.aHash256(mm9Media(s, dir), "payload")
       .select(col("doc_id") +: (0 until 8).map(w => col(s"sig$w")): _*)
@@ -472,32 +459,6 @@ object TextQueries {
           |FROM r6""".stripMargin
       }),
 
-    // t22_prod: the same PageRank hub signal over dd21's
-    // PRODUCTION-banded verified pairs (16 hashes, 4 bands of 4,
-    // J >= 0.5) — t22's audit-knob curve is collision-floor-bound by
-    // its dd3 input (documented in SCALING.md), so the claim that the
-    // production edge set behaves is measured here instead of argued
-    // by reference: the edge volume is dd21's cluster-shaped output,
-    // and each PageRank round stays one equi-join + one aggregation
-    // over it.
-    Query("t22_prod", (s, dir) => {
-      val pairs = Dedup.lshVerifiedPairs(Tables.documents(s, dir),
-        "doc_id", "text", 3, 16, 4, 0.5)
-      Dedup.pagerankOverPairs(pairs, "id_a", "id_b", damping = 0.85,
-        iters = 6)
-    },
-      // t22_prod twin: dd21's production-banded verify chain (vpairs at
-      // J >= 0.5), then the same unrolled PageRank rounds over its
-      // undirected edge expansion.
-      oracle =
-        s"""WITH ${lshVerifiedCtesFor(3, 16, 4, 0.5)},
-          |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM vpairs
-          |  UNION ALL SELECT id_b, id_a FROM vpairs),
-          |${pagerankCtes(6)}
-          |SELECT id AS doc_id, CAST(deg AS BIGINT) AS deg,
-          |  round(r, 6) AS centrality
-          |FROM r6""".stripMargin),
-
     // SimHash (16-bit) signature per document. Two-step: hash tokens once
     // into a column, then fold the 16 bit-aggregates over it.
     Query("dd4_simhash", (s, dir) =>
@@ -544,36 +505,6 @@ object TextQueries {
       oracle =
         s"WITH $lshVerifiedCtes\nSELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.05"),
 
-    // dd21: the PRODUCTION banding shape of dd7 — 16 hashes as 4 bands
-    // of 4 (trigram shingles, J>=0.5). dd7's 2-rows-per-band knob keeps
-    // the oracle signature small but leaves a random-pair collision
-    // floor of ~J_floor^2 per band (the measured ~11x second-decade
-    // ratios of the dd3/dd7/dd8 family are that floor, quantified in
-    // SCALING.md); at 4 rows per band the floor drops to ~J_floor^4 —
-    // ~1e-8 per pair on real-text shingle statistics — which is what
-    // makes banded LSH near-linear at 100 TB. Same fused one-hash-pass
-    // plan as dd7; value-gated through the parametric oracle CTE.
-    Query("dd21_lsh_prod_bands", (s, dir) =>
-      Dedup.lshVerifiedPairs(Tables.documents(s, dir), "doc_id", "text",
-        3, 16, 4, 0.5),
-      oracle =
-        s"""WITH ${lshVerifiedCtesFor(3, 16, 4, 0.5)}
-          |SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.5""".stripMargin),
-
-    // dd21's WIDE-banding form — the measured production response to the
-    // collision floor the fourth scale surfaced: 128 hashes as 16 bands
-    // of 8 at the banding's natural operating point (the LSH S-curve
-    // threshold (1/b)^(1/r) = (1/16)^(1/8) ~ 0.71, so minJ = 0.7).
-    // Random-pair band collisions fall from ~J_floor^4 to ~J_floor^8
-    // (~1e-16 on this fixture) — BANDCANDS.json carries the measured
-    // candidate contrast per scale, DEEPDOCS.json the wall-ratio one.
-    Query("dd21_lsh_wide_bands", (s, dir) =>
-      Dedup.lshVerifiedPairs(Tables.documents(s, dir), "doc_id", "text",
-        3, 128, 8, 0.7),
-      oracle =
-        s"""WITH ${lshVerifiedCtesFor(3, 128, 8, 0.7)}
-          |SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.7""".stripMargin),
-
     // Near-dup clustering: connected components over the LSH-verified
     // pairs via alternating large-star/small-star contraction (O(log n)
     // rounds of pure equi-shuffles); cluster_id = min member id.
@@ -600,30 +531,6 @@ object TextQueries {
     },
       oracle =
         s"""WITH RECURSIVE $lshVerifiedCtes,
-          |$componentCtes,
-          |clusters AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id)
-          |SELECT doc_id, lang, source FROM documents
-          |WHERE doc_id NOT IN (SELECT id FROM clusters WHERE id <> cid)""".stripMargin),
-
-    // dd22: the SAME corpus-dedup composition at dd21's production
-    // banding (16 hashes as 4 bands of 4, J >= 0.5). dd9's small-
-    // signature knobs are the oracle-friendly audit form; past ~1M docs
-    // their 2-hash band keys hit the quadratic collision floor (the
-    // probed 5M-doc run generates ~1e9 random band candidates before the
-    // verify can drop them — the dd7 mechanism, measured). This form is
-    // what a 100-TB ingest actually runs end-to-end: banded candidates
-    // stay ~linear in the true-duplicate mass, and the star-contraction
-    // clustering + representative anti-join ride cluster-shaped volumes.
-    Query("dd22_dedup_corpus_prod", (s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val clusters = Dedup.dupClusters(
-        Dedup.lshVerifiedPairs(docs, "doc_id", "text", 3, 16, 4, 0.5))
-      Dedup.keepClusterRepresentatives(docs, "doc_id", clusters)
-        .select("doc_id", "lang", "source")
-    },
-      oracle =
-        s"""WITH RECURSIVE ${lshVerifiedCtesFor(3, 16, 4, 0.5)},
           |$componentCtes,
           |clusters AS (
           |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id)
@@ -1739,70 +1646,6 @@ object TextQueries {
           |  count(*) AS n_sigs
           |FROM labeled GROUP BY 1""".stripMargin),
 
-    // mm9_wide: the WIDE-hash response to aHash64's banding ceiling —
-    // dd21_lsh_wide_bands' treatment for images, with the banding
-    // chosen by MEASUREMENT (BANDCANDS image rows at 0.5M docs):
-    // aHash64 is pinned at 4 bands of 16 bits by pigeonhole exactness
-    // at radius 3 and emits 115 candidates per distinct signature;
-    // naively banding the 256-bit hash 16×16 is WORSE (1352 cands/sig
-    // — more bands = more chances for correlated thumbnail rows to
-    // collide); 8 bands of 32 bits (exact through radius 7) is the
-    // measured sweet spot at 28.7 cands/sig — wider keys buy entropy
-    // faster than fewer pigeonhole slots cost radius. Same plan shape
-    // as mm9: distinct-signature contraction, equi-join on band keys,
-    // per-pair popcount verify, cluster rollup. The twin replays the
-    // 16×16 integer pooling pixel-for-pixel and brute-forces all-pairs
-    // hamming over distinct signatures, so the banding's EXACTNESS at
-    // radius 7 is oracle-checked, not argued.
-    Query("mm9_wide", (s, dir) => {
-      val sigCols = (0 until 8).map(w => s"sig$w")
-      // mm9's materialization note applies ×2 here: 8 band branches,
-      // each re-running the 16×16 decode+hash pass without the
-      // checkpoint (measured: 3.94 s → the decode executed ~10× per run)
-      val sigStats = mm9WideDocSigs(s, dir)
-        .groupBy(sigCols.head, sigCols.tail: _*)
-        .agg(min("doc_id").as("rid"), count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      val pairs = Dedup.hammingBandJoinWords(sigStats, "rid",
-        sigCols, bandsPerWord = 1, maxHamming = 7)
-      val clusters = Dedup.dupClusters(pairs)
-      sigStats
-        .join(clusters.withColumnRenamed("id", "rid"), Seq("rid"), "left")
-        .select(coalesce(col("cluster_id"), col("rid")).as("cluster_id"),
-          col("n"))
-        .groupBy("cluster_id")
-        .agg(sum(col("n")).as("n_images"), count(lit(1)).as("n_sigs"))
-    },
-      // mm9_wide twin: the 16×16-cell 256-bit replay (8 packed 32-bit
-      // words), brute all-pairs hamming <= 7 over distinct signatures
-      // — so the 8-band join's pigeonhole exactness at the measured
-      // banding is oracle-checked — then the same cluster rollup.
-      oracle = {
-        // bit_count returns TINYINT in DuckDB — eight summed popcounts
-        // overflow 127 without the per-term widening
-        val ham = (0 until 8).map(w =>
-          s"CAST(bit_count(xor(l.sig$w, r.sig$w)) AS BIGINT)")
-          .mkString("\n      + ")
-        val cols = (0 until 8).map(w => s"sig$w").mkString(", ")
-        s"""WITH RECURSIVE ${mm9SigCtes(16, "sig")},
-          |sigstats AS MATERIALIZED (
-          |  SELECT $cols, min(doc_id) AS rid, count(*) AS n
-          |  FROM sig GROUP BY ${(1 to 8).mkString(", ")}),
-          |vpairs AS (
-          |  SELECT l.rid AS id_a, r.rid AS id_b
-          |  FROM sigstats l JOIN sigstats r ON l.rid < r.rid
-          |  WHERE $ham <= 7),
-          |$componentCtes,
-          |clusters AS (
-          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
-          |labeled AS (
-          |  SELECT coalesce(c.cid, s.rid) AS cluster_id, s.n
-          |  FROM sigstats s LEFT JOIN clusters c ON s.rid = c.id)
-          |SELECT cluster_id, CAST(sum(n) AS BIGINT) AS n_images,
-          |  count(*) AS n_sigs
-          |FROM labeled GROUP BY 1""".stripMargin
-      }),
-
     // mm11: audio near-dup dedup — mm9's treatment at the audio grain.
     // mm7's delta-energy fingerprint over the mm11 fixture (planted
     // near-dup payloads: per-group base waveforms, per-variant integer
@@ -1837,46 +1680,29 @@ object TextQueries {
         .agg(sum(col("n")).as("n_audios"), count(lit(1)).as("n_sigs"))
     },
       // mm11 twin: the audio fixture's gained samples replayed from the
-      // byte formula (shared [[mm11FpCtes]] chain), then brute all-pairs
+      // byte formula ([[mm11FpCtes]] chain), then brute all-pairs
       // hamming <= 3 WITHIN each window-count block over distinct
       // (n_windows, fp) signatures — the banded join's blocked
       // pigeonhole exactness is oracle-checked — and the cluster rollup.
-      oracle = mm11TwinSql),
-
-    // mm11_adaptive_bands: the measured RESPONSE to the fixed 4×16
-    // banding's degenerate-block floor (BANDCANDS: 955 cands/sig at
-    // 500k docs — a 17-window clip has 16 meaningful fingerprint bits,
-    // so three of the four fixed bands are constant zero inside its
-    // block and each such band's bucket is the whole block). The
-    // adaptive form fits the four band widths to the block's meaningful
-    // bit range (n_windows−1 delta bits), restoring per-band key
-    // entropy exactly where the fixed banding loses it; pigeonhole
-    // exactness is preserved per block, so the output — and the oracle
-    // twin — are IDENTICAL to mm11's: the twin's brute all-pairs
-    // hamming gates both bandings against the same clusters.
-    Query("mm11_adaptive_bands", (s, dir) => {
-      // mm9's materialization note: 4 band branches + the rollup join
-      val sigStats = mm11DocFps(s, dir)
-        .groupBy("n_windows", "fp")
-        .agg(min("doc_id").as("rid"), count(lit(1)).as("n"))
-        .withColumn("n_bits", (col("n_windows") - 1).cast("int"))
-        .localCheckpoint(true)
-      val pairs = Dedup.hammingBandJoinAdaptive(sigStats, "rid", "fp",
-        bitsCol = "n_bits", bands = 4, maxHamming = 3,
-        blockCols = Seq("n_windows"))
-      val clusters = Dedup.dupClusters(pairs)
-      sigStats
-        .join(clusters.withColumnRenamed("id", "rid"), Seq("rid"), "left")
-        .select(coalesce(col("cluster_id"), col("rid")).as("cluster_id"),
-          col("n"))
-        .groupBy("cluster_id")
-        .agg(sum(col("n")).as("n_audios"), count(lit(1)).as("n_sigs"))
-    },
-      // mm11_adaptive_bands twin: IDENTICAL to mm11's — the adaptive
-      // banding is exact per block (pigeonhole over meaningful-range
-      // bands), so the same brute all-pairs-within-block replay gates
-      // both banded forms against the same clusters.
-      oracle = mm11TwinSql),
+      oracle =
+        s"""WITH RECURSIVE ${mm11FpCtes("", "documents")},
+          |sigstats AS MATERIALIZED (
+          |  SELECT n_windows, fp, min(doc_id) AS rid, count(*) AS n
+          |  FROM f GROUP BY 1, 2),
+          |vpairs AS (
+          |  SELECT l.rid AS id_a, r.rid AS id_b
+          |  FROM sigstats l JOIN sigstats r
+          |    ON l.n_windows = r.n_windows AND l.rid < r.rid
+          |  WHERE bit_count(xor(l.fp, r.fp)) <= 3),
+          |$componentCtes,
+          |clusters AS (
+          |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
+          |labeled AS (
+          |  SELECT coalesce(c.cid, s.rid) AS cluster_id, s.n
+          |  FROM sigstats s LEFT JOIN clusters c ON s.rid = c.id)
+          |SELECT cluster_id, CAST(sum(n) AS BIGINT) AS n_audios,
+          |  count(*) AS n_sigs
+          |FROM labeled GROUP BY 1""".stripMargin),
 
     // mm12: video near-dup dedup — mm9/mm11's treatment at the video
     // grain. The temporal hash over demuxed frame means (mm12DocFps —
@@ -1954,11 +1780,15 @@ object TextQueries {
     // operators; the twin composes the WIDE pixel-replay sig chain
     // (i-prefixed), mm11's sample-replay chain (au-prefixed), mm12's
     // byte-replay chain (vd-prefixed) and the dd9 CTE chain over the
-    // survivor set — four recursive component chains. The image stage runs at mm9_wide's 256-bit banding, not
-    // mm9's 64-bit form: the composition is the production-shaped
-    // pipeline, and the 64-bit banding's candidate floor is MEASURED
-    // (BANDCANDS: 115 cands/sig at 0.5M docs vs mm9_wide's 28.7) — a
-    // three-stage chain rides the measured-best banding.
+    // survivor set — four recursive component chains. The image stage
+    // runs the 256-bit aHash banded 8×32 (exact through hamming radius
+    // 7), not mm9's 64-bit 4×16 form: at 0.5M docs the 64-bit banding
+    // emitted 115 candidates per distinct signature, the 256-bit 16×16
+    // banding 1352 and the 8×32 banding 28.7 (BANDCANDS.json) — wider
+    // keys buy entropy faster than fewer pigeonhole slots cost radius.
+    // The twin replays the 16×16 integer pooling and brute-forces
+    // all-pairs hamming <= 7, so that banding's exactness is
+    // oracle-checked.
     Query("mm10_crossmodal_dedup", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val sigCols = (0 until 8).map(w => s"sig$w")
@@ -2470,42 +2300,6 @@ object TextQueries {
         Dedup.decontamCutSql("doc_id", "text", 4,
           "(SELECT * FROM documents WHERE doc_id >= 20)",
           "(SELECT * FROM documents WHERE doc_id < 20)")),
-
-    // The PRODUCTION-WINDOW forms of the ExactSubstr family: W = 50
-    // tokens, the window Lee et al. (ACL 2022) run corpus dedup at
-    // (their 50-token threshold is what separates boilerplate-length
-    // duplication from incidental n-gram overlap). Same plans as
-    // dd24/dd26/dd27 — the knob is the only change — registered so the
-    // deep-decade probes measure the family at the knob a 100-TB corpus
-    // actually uses (stride-1 windows ≈ corpus tokens REGARDLESS of W;
-    // what W changes is the duplicated mass and the cut-expansion
-    // constant). Oracle-gated at sf0.01 like every prod-knob variant:
-    // the fixture carries 280 duplicated 50-token windows across 277
-    // long-enough docs, so both the cut and keep paths see traffic.
-    Query("dd24_dup_spans_prod", (s, dir) =>
-      Dedup.duplicatedSpans(Tables.documents(s, dir), "doc_id", "text", 50),
-      oracle = Dedup.duplicatedSpansSql("doc_id", "text", 50)),
-
-    Query("dd26_substr_cut_prod", (s, dir) =>
-      Dedup.substrCut(Tables.documents(s, dir), "doc_id", "text", 50),
-      oracle = Dedup.substrCutSql("doc_id", "text", 50)),
-
-    // Eval split is doc_id % 50 == 7 (2% of docs at every scale) rather
-    // than dd27's doc_id < 20: the probe fixtures' ids grow with the
-    // corpus, and a fixed-id eval set would vanish against 20M docs. A
-    // production decontamination has a FIXED-size eval side (benchmark
-    // suites don't grow with the corpus), so the proportional split
-    // makes the probe's broadcast an over-estimate — conservative in
-    // the direction that matters.
-    Query("dd27_decontam_cut_prod", (s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.decontamCut(docs.filter(col("doc_id") % 50 =!= 7),
-        docs.filter(col("doc_id") % 50 === 7), "doc_id", "text", 50)
-    },
-      oracle =
-        Dedup.decontamCutSql("doc_id", "text", 50,
-          "(SELECT * FROM documents WHERE doc_id % 50 <> 7)",
-          "(SELECT * FROM documents WHERE doc_id % 50 = 7)")),
 
     // dd28: PII redaction as a CUT — t11 detects; this rewrites. Token
     // spans matching the shared PII regexes are cut at their exact token
@@ -3129,26 +2923,6 @@ object TextQueries {
     },
       oracle = incrementalDedupSqlFor(2, 4, 2, 0.05)),
 
-    // dd23: the SAME stored-state incremental path at dd21's production
-    // banding. dd13's 2-hash band keys make the cross-frame candidate
-    // volume batch x corpus x J_floor^2 — fine at oracle scales, but at
-    // 5M docs the probe measured it spilling past the machine's disk
-    // before verify could drop the random candidates. At 4 rows/band the
-    // floor falls to J_floor^4 and the daily-ingest path stays
-    // batch-proportional through the third docs decade.
-    Query("dd23_incremental_prod", (s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val existing = docs.filter(col("doc_id") % 5 =!= 0)
-      val incoming = docs.filter(col("doc_id") % 5 === 0)
-      val (dig, sig) = dd23StateFixture(s, dir)
-      Dedup.incrementalDedup(existing,
-        s.read.parquet(dig),
-        s.read.parquet(sig),
-        incoming, "doc_id", "text", 3, 16, 4, 0.5)
-        .select("doc_id", "lang", "source")
-    },
-      oracle = incrementalDedupSqlFor(3, 16, 4, 0.5)),
-
     // The FULL training-data assembly, end to end, as one hash-gated
     // query: exact dedup -> LSH+Jaccard near-dedup (K=3, 6 hashes, 2
     // bands of 3, J>=0.7) -> quality gate (>=30) -> token-budget
@@ -3640,11 +3414,8 @@ object TextQueries {
     * side, plus `vpairs` filtered to the threshold. */
   private lazy val lshVerifiedCtes: String = lshVerifiedCtesFor(2, 4, 2, 0.05)
 
-  /** [[lshVerifiedCtes]] at arbitrary banding knobs — the same fragment
-    * serves the small-signature form above (dd7 family) and the
-    * production-shaped form (dd21: 16 hashes as 4 bands of 4, the
-    * rows-per-band setting that pushes the random-pair collision floor
-    * from ~J^2 to ~J^4 per band). Band keys replicate
+  /** [[lshVerifiedCtes]] at arbitrary banding knobs and source relation
+    * (mm10's text stage reads its survivor set). Band keys replicate
     * `Dedup.bandKeyExprs`'s '<band>_<mh>_..._<mh>' concat exactly. */
   private def lshVerifiedCtesFor(shingleK: Int, numHashes: Int,
                                  rowsPerBand: Int,
@@ -3726,12 +3497,8 @@ object TextQueries {
   /** Twin of the three-stage incremental path at arbitrary banding
     * knobs: exact SHA anti-join, cross-frame banded candidates + jaccard
     * verify, then within-batch LSH dedup of the remainder (bands reuse
-    * sig_in — signatures are per-document). Serves both dd13's
-    * oracle-friendly small-signature form (2, 4, 2, 0.05) and dd23's
-    * production-shaped form at dd21's knobs (3, 16, 4, 0.5) — the
-    * cross-frame candidate volume is batch x corpus x J_floor^(2·rows),
-    * so at the third docs decade only the production banding survives
-    * (the dd7/dd9 collision-floor mechanism, cross-frame). */
+    * sig_in — signatures are per-document). dd13 runs it at
+    * (2, 4, 2, 0.05). */
   private def incrementalDedupSqlFor(shingleK: Int, numHashes: Int,
                                      rowsPerBand: Int,
                                      minJaccard: Double): String = {
@@ -3897,31 +3664,6 @@ object TextQueries {
       |    CAST(coalesce(sum(CASE WHEN nexte > energy
       |      THEN 1::BIGINT << wi ELSE 0 END), 0) AS BIGINT) AS fp
       |  FROM ${pfx}d WHERE wi < nw - 1 AND wi < 63 GROUP BY 1, 2)""".stripMargin
-
-  /** mm11's DuckDB twin — brute all-pairs hamming within each
-    * window-count block over the sample-replayed fingerprints, then the
-    * recursive connected-component rollup. Shared verbatim by
-    * `mm11_audio_near_dup` and `mm11_adaptive_bands`: both bandings are
-    * exact, so one replay gates both. */
-  private lazy val mm11TwinSql: String =
-    s"""WITH RECURSIVE ${mm11FpCtes("", "documents")},
-      |sigstats AS MATERIALIZED (
-      |  SELECT n_windows, fp, min(doc_id) AS rid, count(*) AS n
-      |  FROM f GROUP BY 1, 2),
-      |vpairs AS (
-      |  SELECT l.rid AS id_a, r.rid AS id_b
-      |  FROM sigstats l JOIN sigstats r
-      |    ON l.n_windows = r.n_windows AND l.rid < r.rid
-      |  WHERE bit_count(xor(l.fp, r.fp)) <= 3),
-      |$componentCtes,
-      |clusters AS (
-      |  SELECT id, least(id, min(r)) AS cid FROM reach GROUP BY id),
-      |labeled AS (
-      |  SELECT coalesce(c.cid, s.rid) AS cluster_id, s.n
-      |  FROM sigstats s LEFT JOIN clusters c ON s.rid = c.id)
-      |SELECT cluster_id, CAST(sum(n) AS BIGINT) AS n_audios,
-      |  count(*) AS n_sigs
-      |FROM labeled GROUP BY 1""".stripMargin
 
   /** Byte-replay CTE chain for the mm12 video fixture — recomputes the
     * per-group frame geometry, every payload byte from the

@@ -147,9 +147,7 @@ object PlanAudit {
         "sample-contract-bounded SHA arrays (ground-truth stage)"),
       "dd19_chunk_dedup" -> substrTail,
       "dd26_substr_cut" -> substrTail,
-      "dd26_substr_cut_prod" -> substrTail,
       "dd27_decontam_cut" -> substrTail,
-      "dd27_decontam_cut_prod" -> substrTail,
       "dd28_pii_redact" -> substrTail,
       "e2e_decontam_prep" -> substrTail,
       "dd5_ngram_jaccard" -> (Set("ArraySort"),

@@ -150,21 +150,28 @@ class DriftDedupSpec extends SparkTestBase {
       Seq((2 * i, base.mkString(" ")),
         (2 * i + 1, (base.take(27) ++ Seq(s"a$i", s"b$i", s"c$i")).mkString(" ")))
     }.toDF("doc_id", "text")
-    val fused = Dedup.lshVerifiedPairs(docs, "doc_id", "text", 2, 4, 2, 0.05)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val sig = Dedup.minhashSignature(docs, "doc_id", "text", 2, 4)
-    // the eager variant leaves only its result's checkpoint persisted:
-    // the signature checkpoint is released before it returns
-    val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    val cand = Dedup.lshCandidatesEager(sig, "doc_id", 4, 2)
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- persisted
-    val resultRdd = cand.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }
-    assert(added.toSeq === resultRdd)
-    val composed = Dedup.verifyPairsJaccard(cand, docs, "doc_id", "text", 2, 0.05)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(fused === composed)
-    assert(fused.nonEmpty, "fixture should produce at least one verified pair")
+    // (shingleK, numHashes, rowsPerBand, minJaccard): dd7's audit knobs,
+    // 16 hashes as 4 bands of 4 at J >= 0.5, and 128 hashes as 16 bands
+    // of 8 at the S-curve threshold (1/16)^(1/8) ~ 0.71
+    for ((k, h, r, j) <- Seq((2, 4, 2, 0.05), (3, 16, 4, 0.5),
+        (3, 128, 8, 0.7))) {
+      val knobs = s"($k, $h, $r, $j)"
+      val fused = Dedup.lshVerifiedPairs(docs, "doc_id", "text", k, h, r, j)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val sig = Dedup.minhashSignature(docs, "doc_id", "text", k, h)
+      // the eager variant leaves only its result's checkpoint persisted:
+      // the signature checkpoint is released before it returns
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val cand = Dedup.lshCandidatesEager(sig, "doc_id", h, r)
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+      val resultRdd = cand.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }
+      assert(added.toSeq === resultRdd, knobs)
+      val composed = Dedup.verifyPairsJaccard(cand, docs, "doc_id", "text", k, j)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(fused === composed, knobs)
+      assert(fused.nonEmpty, s"$knobs: fixture should produce at least one verified pair")
+    }
   }
 
   test("dd5 banded: every reported pair's jaccard is exact; blocking only prunes") {

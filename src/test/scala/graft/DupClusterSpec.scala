@@ -172,10 +172,10 @@ class DupClusterSpec extends SparkTestBase {
   }
 
   test("hammingBandJoinWords (256-bit, 16 bands) equals brute force at radius 15") {
-    // 8-word (256-bit) signatures — the mm9_wide shape. A random fleet
-    // plus planted near-dups whose flipped bits SPREAD across words
-    // (a banding that mis-mapped word/offset would lose them), one pair
-    // exactly AT the radius, one just over it.
+    // 8-word (256-bit) signatures — the aHash256 shape of mm10's image
+    // stage. A random fleet plus planted near-dups whose flipped bits
+    // SPREAD across words (a banding that mis-mapped word/offset would
+    // lose them), one pair exactly AT the radius, one just over it.
     val rnd = new scala.util.Random(13)
     def words() = Array.fill(8)(rnd.nextInt() & 0xffffffffL)
     val base = (1L to 30L).map(i => (i, words()))

@@ -8,6 +8,19 @@ import graft.tools.PlanAudit
   * Plan section of finalized adaptive dumps). Pin the parsing. */
 class PlanAuditSpec extends SparkTestBase {
 
+  test("every allow-list key names a registered query") {
+    // a retired query must take its allowedNlj/allowedFallback entry
+    // with it; a stale key would silently allow the next query that
+    // reuses the name
+    val registered = SparkEntry.queries.keySet
+    for ((list, keys) <- Seq("allowedNlj" -> PlanAudit.allowedNlj.keySet,
+        "allowedFallback" -> PlanAudit.allowedFallback.keySet)) {
+      val stale = keys -- registered
+      assert(stale.isEmpty,
+        s"$list names unregistered queries: ${stale.toSeq.sorted.mkString(", ")}")
+    }
+  }
+
   test("stripInitialPlans drops the Initial Plan subtree, keeps the final one") {
     val dump =
       """AdaptiveSparkPlan isFinalPlan=true

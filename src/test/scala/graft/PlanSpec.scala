@@ -202,7 +202,7 @@ class PlanSpec extends SparkTestBase {
 
   test("mm9_wide/mm11: words band join stays an equi-join, incl. block columns") {
     import org.apache.spark.sql.functions._
-    // the generalized N-word banding (mm9_wide's 8x32) and the
+    // the generalized N-word banding (mm10's 8x32 image stage) and the
     // block-column form (mm11's window-count blocking) both keep the
     // band-join contract: equi-join, never a product; the block column
     // rides the SAME equi-join keys (a plan that applied it as a
@@ -430,17 +430,29 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("production-window ExactSubstr (W=50) keeps the family's plan shapes") {
-    // same pins as the W=4 forms — the knob must not change the plan
-    for (q <- Seq("dd24_dup_spans_prod", "dd26_substr_cut_prod",
-        "dd27_decontam_cut_prod")) {
-      val plan = planOf(q)
+    // same pins as the W=4 forms — the knob must not change the plan.
+    // W = 50 tokens is the window Lee et al. (ACL 2022) dedup a corpus
+    // at; the decontam eval split is doc_id % 50 == 7
+    import org.apache.spark.sql.functions.col
+    import graft.operators.Dedup
+    val docs = graft.core.Tables.documents(spark, dir)
+    val decontam = Dedup.decontamCut(docs.filter(col("doc_id") % 50 =!= 7),
+      docs.filter(col("doc_id") % 50 === 7), "doc_id", "text", 50)
+    val plans = Seq(
+      "duplicatedSpans" -> Dedup.duplicatedSpans(docs, "doc_id", "text", 50),
+      "substrCut" -> Dedup.substrCut(docs, "doc_id", "text", 50),
+      "decontamCut" -> decontam).map { case (op, df) =>
+      op -> df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    }
+    for ((op, plan) <- plans) {
       assert(!plan.contains("CartesianProduct") &&
         !plan.contains("BroadcastNestedLoopJoin"),
-        s"$q degenerated to a product:\n${plan.take(600)}")
+        s"$op degenerated to a product:\n${plan.take(600)}")
       assert(plan.contains("HashAggregate") || plan.contains("ObjectHashAggregate"),
-        s"$q: window-occurrence agg not hash-aggregated")
+        s"$op: window-occurrence agg not hash-aggregated")
     }
-    assert(planOf("dd27_decontam_cut_prod").contains("BroadcastHashJoin"),
+    assert(plans.toMap.apply("decontamCut").contains("BroadcastHashJoin"),
       "prod decontam: eval window set not broadcast")
   }
 

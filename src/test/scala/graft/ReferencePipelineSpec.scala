@@ -94,23 +94,29 @@ class ReferencePipelineSpec extends SparkTestBase {
     assert(act.head.getAs[Double]("total_steps") === 1000.0)
   }
 
+  /** Stage 2 as the snapshot run composes it: per-domain vendor fusion,
+    * then `unifyAllDomains`' date spine. */
+  private def unified = unifyAllDomains(
+    unifySleepDomains(Some(appleDailySleep(records)), None),
+    unifyCardioDomains(Some(appleDailyCardio(records)),
+      Some(zeppDailyCardio(zeppCsv))),
+    unifyActivityDomains(Some(appleDailyActivity(records)), None),
+    None, None)
+
   test("stage 2: unify fuses vendors with provenance and fills Zepp-only days") {
-    val unified = unifyDaily(
-      appleDailyCardio(records), zeppDailyCardio(zeppCsv),
-      appleDailySleep(records), appleDailyActivity(records))
+    // the provenance flags are derived by labelDaily, their only reader
+    val labeled = labelDaily(unified)
     assert(unified.count() === 13) // 12 Apple days + 1 Zepp-only day
-    val zeppDay = unified.filter(col("date") === lit("2021-05-13").cast("date")).head()
-    assert(zeppDay.getAs[String]("source_cardio") === "b")
+    val day = (d: String) => labeled.filter(col("date") === lit(d).cast("date")).head()
+    val zeppDay = day("2021-05-13")
+    assert(zeppDay.getAs[String]("source_cardio") === "merged")
     assert(zeppDay.getAs[Double]("hr_mean") === 72.0)
     assert(zeppDay.getAs[Int]("missing_sleep") === 1)
-    val appleDay = unified.filter(col("date") === lit("2021-05-01").cast("date")).head()
-    assert(appleDay.getAs[String]("source_cardio") === "a")
+    val appleDay = day("2021-05-01")
+    assert(appleDay.getAs[String]("source_cardio") === "merged")
   }
 
   test("stage 3+4: labels are non-degenerate; HR shift drives the label; segments close") {
-    val unified = unifyDaily(
-      appleDailyCardio(records), zeppDailyCardio(zeppCsv),
-      appleDailySleep(records), appleDailyActivity(records))
     val labeled = labelDaily(unified)
     graft.qc.Audit.assertNonDegenerate(labeled, "label_3cls")
     graft.qc.Audit.assertUniqueKey(labeled, Seq("date"))
