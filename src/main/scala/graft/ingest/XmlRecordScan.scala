@@ -30,8 +30,10 @@ object XmlRecordScan {
     * the Apple timestamp format `yyyy-MM-dd HH:mm:ss Z` parsed tz-aware.
     * `value` stays a string — sleep records carry categorical values
     * (`HKCategoryValueSleepAnalysisAsleep`); numeric callers `try_cast`.
-    * A missing `startDate`/`endDate` gives a null timestamp (point samples
-    * such as HR may omit `endDate`).
+    * A missing `endDate` gives a null `end_ts` (point samples such as HR
+    * may omit it). A record without a closed `startDate` attribute fails
+    * the scan: its `wall_date` is `to_date("")`, which throws
+    * CAST_INVALID_INPUT under Spark's ANSI default.
     *
     * One scan serves many consumers: pass every type they need, then route
     * rows by `record_type`. The snapshot pipeline reads `export.xml` once
@@ -51,8 +53,9 @@ object XmlRecordScan {
       .select(
         attr(col("value"), "type").as("record_type"),
         attr(col("value"), "value").as("value"),
-        // a record without the attribute gets a null timestamp; a present
-        // but malformed one still fails the parse
+        // a record without the attribute gets a null timestamp here (but
+        // fails at wall_date below); a present but malformed one still
+        // fails the parse
         to_timestamp(attrOpt(col("value"), "startDate"), "yyyy-MM-dd HH:mm:ss Z")
           .as("start_ts"),
         to_timestamp(attrOpt(col("value"), "endDate"), "yyyy-MM-dd HH:mm:ss Z")

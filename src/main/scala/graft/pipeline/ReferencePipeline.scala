@@ -30,42 +30,15 @@ object ReferencePipeline {
   val DistanceType = "HKQuantityTypeIdentifierDistanceWalkingRunning"
   val EnergyType = "HKQuantityTypeIdentifierActiveEnergyBurned"
 
-  /** Apple XML HR daily — exact `AppleHealthAggregator.aggregate_heartrate`
-    * contract (`src/etl/stage_csv_aggregation.py:217-460`): binary-regex
-    * record scan, outlier filter 30-220, POPULATION std (np.std), and the
-    * reference's LOCAL wall-clock date (offset preserved). Checked 1:1
-    * against the reference by tools/reference_parity.py. */
-  def appleHrDaily(spark: SparkSession, xmlPath: String): DataFrame =
-    XmlRecordScan.records(spark, xmlPath, Seq(HrType))
-      .withColumn("v", col("value").try_cast("double"))
-      .filter(col("v").isNotNull && col("v").between(30, 220))
-      .groupBy(col("wall_date").as("date"))
-      .agg(
-        avg("v").as("hr_mean"), min("v").as("hr_min"), max("v").as("hr_max"),
-        stddev_pop("v").as("hr_std"), count(lit(1)).as("hr_samples"))
-
-  /** Apple XML HRV daily — exact `aggregate_hrv` contract
-    * (`src/etl/stage_csv_aggregation.py:516-624`): outliers 5-300, exact
-    * median (np.median = linear midpoint), wall-clock dates.
-    * Checked 1:1 by tools/reference_parity.py. */
-  def appleHrvDaily(spark: SparkSession, xmlPath: String): DataFrame =
-    XmlRecordScan.records(spark, xmlPath, Seq(HrvType))
-      .withColumn("v", col("value").try_cast("double"))
-      .filter(col("v").isNotNull && col("v").between(5, 300))
-      .groupBy(col("wall_date").as("date"))
-      .agg(
-        avg("v").as("hrv_sdnn_mean"),
-        percentile(col("v"), lit(0.5)).as("hrv_sdnn_median"),
-        min("v").as("hrv_sdnn_min"), max("v").as("hrv_sdnn_max"),
-        count(lit(1)).as("n_hrv_sdnn"))
-
   /** Apple XML sleep daily — exact `aggregate_sleep` contract
     * (`src/etl/stage_csv_aggregation.py:162-215`): per-record minutes
     * split asleep-vs-inbed ("asleep" wins, elif "bed"), NO positive-
     * duration filter, quality = asleep/inbed*100 clipped 0-100 with the
     * reference's division edge cases (asleep>0 & inbed=0 -> inf -> 100;
     * asleep=0 -> 0). Wall-clock dates.
-    * Checked 1:1 by tools/reference_parity.py. */
+    * Checked 1:1 by tools/reference_parity.py. It stays beside
+    * `appleDailySleep` as the pinned reference, because the two differ on
+    * a night with sleep stages but no InBed record (AppleDailyParitySpec). */
   def appleSleepDailyExact(spark: SparkSession, xmlPath: String): DataFrame = {
     val lv = lower(col("value"))
     val mins = (unix_timestamp(col("end_ts")) - unix_timestamp(col("start_ts"))) / 60.0
@@ -88,23 +61,6 @@ object ReferencePipeline {
         col("total_sleep_minutes"))
   }
 
-  /** Apple XML activity daily — exact `aggregate_activity` contract
-    * (`src/etl/stage_csv_aggregation.py:655-709`): per-type daily sums of
-    * steps/distance/energy, wall-clock dates, unparsable values skipped.
-    * Checked 1:1 by tools/reference_parity.py. */
-  def appleActivityDailyExact(spark: SparkSession, xmlPath: String): DataFrame =
-    XmlRecordScan.records(spark, xmlPath, Seq(StepsType, DistanceType, EnergyType))
-      .withColumn("v", col("value").try_cast("double"))
-      .filter(col("v").isNotNull)
-      .groupBy(col("wall_date").as("date"))
-      .agg(
-        sum(when(col("record_type") === StepsType, col("v")).otherwise(0.0))
-          .as("total_steps"),
-        sum(when(col("record_type") === DistanceType, col("v")).otherwise(0.0))
-          .as("total_distance"),
-        sum(when(col("record_type") === EnergyType, col("v")).otherwise(0.0))
-          .as("total_active_energy"))
-
   /** Stage 1 input — the one `export.xml` scan the three Apple daily
     * builders share: every record of the six types they read, reduced to
     * the columns they read. Each builder routes its own `record_type`s out
@@ -119,14 +75,18 @@ object ReferencePipeline {
     * HRV (exact median, F3 outliers 5-300) on date.
     * Contract: date, hr_mean, hr_min, hr_max, hr_std, hr_samples,
     * hrv_sdnn_mean, hrv_sdnn_median, hrv_sdnn_min, hrv_sdnn_max,
-    * n_hrv_sdnn (`src/etl/stage_csv_aggregation.py:254-260,784-789`). */
+    * n_hrv_sdnn (`src/etl/stage_csv_aggregation.py:254-260,784-789`).
+    * Each side is checked 1:1 against the reference's
+    * `AppleHealthAggregator.aggregate_heartrate` (`:217-460`, binary-regex
+    * scan, population std) and `aggregate_hrv` (`:516-624`, np.median) by
+    * tools/reference_parity.py, and pinned by AppleDailyParitySpec. */
   def appleDailyCardio(records: DataFrame): DataFrame = {
     // each side keeps only its own record_type below
     val numeric = records
       .withColumn("v", col("value").try_cast("double"))
       .filter(col("v").isNotNull)
     // wall_date, not to_date(start_ts): the reference dates Apple XML
-    // records by LOCAL wall-clock (parity-pinned in appleHrDaily)
+    // records by LOCAL wall-clock (pinned by AppleDailyParitySpec)
     val hr = DailyAgg.dailyStatsBy(
       DailyAgg.outlierFilter(numeric.filter(col("record_type") === HrType), "v", 30, 220),
       col("wall_date"), "v")
@@ -148,11 +108,14 @@ object ReferencePipeline {
   /** Stage 1b — Apple `daily_sleep` from sleep-analysis intervals:
     * asleep-vs-inbed split sums, quality = asleep/inbed clipped 0-100.
     * Contract: date, sleep_hours, sleep_quality_score,
-    * total_sleep_minutes (`src/etl/stage_csv_aggregation.py:162-215`). */
+    * total_sleep_minutes (`src/etl/stage_csv_aggregation.py:162-215`).
+    * AppleDailyParitySpec pins it to `appleSleepDailyExact` on every night
+    * but one: with sleep stages and no InBed record the reference scores
+    * 100 and this gives a null `sleep_quality_score`. */
   def appleDailySleep(records: DataFrame): DataFrame = {
     // wall-clock dates, NO positive-duration filter — both per the
     // reference (`aggregate_sleep` keeps zero/negative intervals and
-    // local dates; parity-pinned in appleSleepDailyExact)
+    // local dates; pinned by AppleDailyParitySpec)
     val iv = records
       .filter(col("record_type") === SleepType)
       .withColumn("mins",
@@ -173,8 +136,12 @@ object ReferencePipeline {
         col("asleep_min").as("total_sleep_minutes"))
   }
 
-  /** Stage 1c — Apple `daily_activity`: sums of steps/distance/energy.
-    * Contract: date, total_steps, total_distance, total_active_energy. */
+  /** Stage 1c — Apple `daily_activity`: sums of steps/distance/energy,
+    * unparsable values skipped.
+    * Contract: date, total_steps, total_distance, total_active_energy
+    * (`src/etl/stage_csv_aggregation.py:655-709`). Checked 1:1 against
+    * the reference's `aggregate_activity` by tools/reference_parity.py,
+    * and pinned by AppleDailyParitySpec. */
   def appleDailyActivity(records: DataFrame): DataFrame =
     records
       .filter(col("record_type").isin(StepsType, DistanceType, EnergyType))

@@ -1,17 +1,29 @@
 package graft.tools
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.core.Sessions
 import graft.pipeline.ReferencePipeline
 
-/** Dev harness: run a reference-contract operator on a fixture CSV and
+/** Dev harness: run a reference-contract operator on a fixture and
   * dump a single CSV for tools/reference_parity.py to diff against the
   * ACTUAL reference implementation's output on the same fixture.
-  * Usage: runMain graft.tools.ParityDump <meds|pbsi> <inCsv> <outCsv> [snapshot]
+  * Usage: runMain graft.tools.ParityDump <task> <in> <outCsv> [snapshot],
+  * where <task> names one of the cases of the match in `main`.
   */
 object ParityDump {
+
+  /** One side of `appleDailyCardio` on `xml`: date and `cols`, without
+    * the full-outer rows that only the other side has (`cols.last`, the
+    * side's sample count, is null there). */
+  private def cardioSide(spark: SparkSession, xml: String, cols: String*): DataFrame =
+    ReferencePipeline.appleDailyCardio(ReferencePipeline.appleRecords(spark, xml))
+      .filter(col(cols.last).isNotNull)
+      .select("date", cols: _*)
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: ParityDump <meds|pbsi> <in> <out> [snapshot]")
+    require(args.length >= 3,
+      "usage: ParityDump <task> <in> <out> [snapshot] (task: a case of ParityDump.main)")
     val Array(task, in, out) = args.take(3)
     val spark = Sessions.local(Sessions.cpus)
     val df = task match {
@@ -52,13 +64,14 @@ object ParityDump {
         }
         ReferencePipeline.unifyCanonical(canon(read(applePath)), canon(read(zeppPath)))
       case "applehr" =>
-        ReferencePipeline.appleHrDaily(spark, in)
+        cardioSide(spark, in, "hr_mean", "hr_min", "hr_max", "hr_std", "hr_samples")
       case "applehrv" =>
-        ReferencePipeline.appleHrvDaily(spark, in)
+        cardioSide(spark, in, "hrv_sdnn_mean", "hrv_sdnn_median", "hrv_sdnn_min",
+          "hrv_sdnn_max", "n_hrv_sdnn")
       case "applesleep" =>
         ReferencePipeline.appleSleepDailyExact(spark, in)
       case "appleactivity" =>
-        ReferencePipeline.appleActivityDailyExact(spark, in)
+        ReferencePipeline.appleDailyActivity(ReferencePipeline.appleRecords(spark, in))
       case "zepphr" =>
         val csv = spark.read.option("header", "true")
           .option("inferSchema", "true").csv(in)

@@ -407,6 +407,26 @@ class RunPipelineSpec extends SparkTestBase {
     Files.write(Paths.get(rawRoot, "P000001", "apple", "export",
       "HealthAutoExport-2024-08-31.zip"), bytes)
 
+  /** Rewrites the fixture's Apple ZIP, passing each entry's name and
+    * content through `edit` (None drops the entry). */
+  private def editAppleZip(rawRoot: String)(
+      edit: (String, Array[Byte]) => Option[Array[Byte]]): Unit = {
+    val zin = new java.util.zip.ZipInputStream(Files.newInputStream(Paths.get(
+      rawRoot, "P000001", "apple", "export", "HealthAutoExport-2024-08-31.zip")))
+    val entries = Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
+      .map(e => e.getName -> zin.readAllBytes()).toList
+    zin.close()
+    val bytes = new java.io.ByteArrayOutputStream
+    val zos = new ZipOutputStream(bytes)
+    for ((name, content) <- entries; kept <- edit(name, content)) {
+      zos.putNextEntry(new ZipEntry(name))
+      zos.write(kept)
+      zos.closeEntry()
+    }
+    zos.close()
+    replaceAppleZip(rawRoot, bytes.toByteArray)
+  }
+
   test("RunPipeline: a failing stage 0 is a named stage failure") {
     // a zip-slip entry: its path escapes the extraction directory
     val (rawRoot, outDir) = buildFixture()
@@ -441,26 +461,37 @@ class RunPipelineSpec extends SparkTestBase {
       logs.last.detail.contains("HealthAutoExport-2024-08-31.zip"), logs.last.detail)
   }
 
+  test("RunPipeline: a truncated export.xml fails stage 1's Apple scan") {
+    // the Apple ZIP's export.xml ends inside the last HR record's
+    // startDate attribute, with no closing </HealthData>: that record's
+    // wall_date is to_date(""), which the ANSI default rejects
+    val (rawRoot, outDir) = buildFixture()
+    editAppleZip(rawRoot) { (name, content) =>
+      if (!name.endsWith("export.xml")) Some(content) else {
+        val xml = new String(content, "UTF-8")
+        val lastHr = xml.lastIndexOf("type=\"HKQuantityTypeIdentifierHeartRate\"")
+        val cut = xml.indexOf("startDate=\"", lastHr) + "startDate=\"2024-08".length
+        Some(xml.substring(0, cut).getBytes("UTF-8"))
+      }
+    }
+    val (logs, jobs) = JobsSeen.recording(spark) {
+      RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir)
+    }
+    val last = logs.last
+    assert((last.stage, last.name, last.status) === ((1, "aggregate", "failed")),
+      logs.mkString("\n"))
+    assert(last.detail.startsWith("apple/export.xml: ") &&
+      last.detail.contains("CAST_INVALID_INPUT") &&
+      !last.detail.contains("\n"), last.detail)
+    assert(!jobs.exists(_.description.startsWith("stage 2")),
+      jobs.map(_.description).distinct)
+  }
+
   test("RunPipeline: SoM-less snapshot degrades to stages 0-4 + report") {
     val (rawRoot, outDir) = buildFixture()
     // strip StateOfMind from the fixture by rebuilding the zip without it
-    val zip = Paths.get(rawRoot, "P000001", "apple", "export",
-      "HealthAutoExport-2024-08-31.zip")
-    val noSom = Files.createTempDirectory("graft-nosom")
-    val zin = new java.util.zip.ZipInputStream(Files.newInputStream(zip))
-    val zout = new ZipOutputStream(Files.newOutputStream(
-      noSom.resolve("tmp.zip")))
-    Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
-      .filterNot(_.getName.contains("StateOfMind")).foreach { e =>
-        zout.putNextEntry(new ZipEntry(e.getName))
-        val buf = new Array[Byte](65536)
-        Iterator.continually(zin.read(buf)).takeWhile(_ > 0)
-          .foreach(n => zout.write(buf, 0, n))
-        zout.closeEntry()
-      }
-    zin.close(); zout.close()
-    Files.move(noSom.resolve("tmp.zip"), zip,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    editAppleZip(rawRoot)((name, content) =>
+      Option.when(!name.contains("StateOfMind"))(content))
 
     val out2 = s"$outDir-nosom"
     val (logs, jobs) = JobsSeen.recording(spark) {

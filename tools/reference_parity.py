@@ -6,6 +6,7 @@ COVERAGE.md.
 
 Usage: python3 tools/reference_parity.py
 """
+import gzip
 import subprocess
 import sys
 import tempfile
@@ -364,32 +365,28 @@ def zepphr_parity():
     return check("zepp_hr (ZeppHealthAggregator.aggregate_heartrate)", expected, got)
 
 
-def applehr_parity():
-    rng = np.random.default_rng(42)
-    lines = ['<?xml version="1.0"?>', "<HealthData>"]
-    for i in range(3000):
-        day = 1 + int(rng.integers(0, 20))
-        hr = round(float(rng.normal(72, 30)), 1)  # includes outliers
-        off = ["+0000", "+0100", "-0500"][int(rng.integers(0, 3))]
-        lines.append(
-            f' <Record type="HKQuantityTypeIdentifierHeartRate" sourceName="W"'
-            f' value="{hr}" startDate="2021-05-{day:02d}'
-            f' {int(rng.integers(0,24)):02d}:{int(rng.integers(0,60)):02d}:{i%60:02d} {off}"'
-            f' endDate="2021-05-{day:02d} 00:00:00 {off}"/>')
-        if i % 10 == 0:  # other record types must be skipped
-            lines.append(
-                ' <Record type="HKQuantityTypeIdentifierStepCount" sourceName="P"'
-                ' value="100" startDate="2021-05-01 12:00:00 +0000"'
-                ' endDate="2021-05-01 12:00:00 +0000"/>')
-    lines.append("</HealthData>")
-    xdir = OUT / "apple"
-    xdir.mkdir(exist_ok=True)
-    xml = xdir / "export.xml"
-    xml.write_text("\n".join(lines))
+# The four Apple daily checks read the seeded fixtures committed for
+# AppleDailyParitySpec, so this tool and `sbt test` share one source.
+PARITY_FIXTURES = Path(__file__).resolve().parent.parent / "src/test/resources/parity"
 
+
+def apple_fixture(name):
+    """`<name>_export.xml.gz` from PARITY_FIXTURES, decompressed into
+    OUT/<name>/export.xml for the reference's readers."""
+    xml = OUT / name / "export.xml"
+    if not xml.exists():
+        xml.parent.mkdir()
+        with gzip.open(PARITY_FIXTURES / f"{name}_export.xml.gz") as src:
+            xml.write_bytes(src.read())
+    return xml
+
+
+def applehr_parity():
+    """3000 HR records over 20 days (outliers, mixed offsets) with
+    interleaved StepCount records the scan must skip."""
+    xml = apple_fixture("applehr")
     from src.etl.stage_csv_aggregation import AppleHealthAggregator
     expected = AppleHealthAggregator(str(xml)).aggregate_heartrate()
-
     out_csv = OUT / "engine_applehr.csv"
     run_engine("applehr", str(xml), str(out_csv))
     got = pd.read_csv(out_csv)
@@ -397,44 +394,9 @@ def applehr_parity():
                  expected, got)
 
 
-def apple_xml_fixture():
-    """Shared HRV + sleep XML fixture (valid DOM for the ET-based paths)."""
-    rng = np.random.default_rng(43)
-    lines = ['<?xml version="1.0"?>', "<HealthData>"]
-    for i in range(800):
-        day = 1 + int(rng.integers(0, 15))
-        hrv = round(float(rng.normal(45, 30)), 1)  # includes <5 / >300 outliers
-        off = ["+0000", "+0100"][int(rng.integers(0, 2))]
-        lines.append(
-            f' <Record type="HKQuantityTypeIdentifierHeartRateVariabilitySDNN"'
-            f' sourceName="W" value="{hrv}" startDate="2021-05-{day:02d}'
-            f' {int(rng.integers(0,24)):02d}:{int(rng.integers(0,60)):02d}:{i%60:02d} {off}"'
-            f' endDate="2021-05-{day:02d} 00:00:00 {off}"/>')
-    for day in range(1, 12):
-        # asleep + inbed intervals; day 10: asleep but NO inbed (inf->100);
-        # day 11: inbed only (asleep=0 -> quality 0)
-        if day != 11:
-            lines.append(
-                f' <Record type="HKCategoryTypeIdentifierSleepAnalysis" sourceName="W"'
-                f' value="HKCategoryValueSleepAnalysisAsleepCore"'
-                f' startDate="2021-05-{day:02d} 01:00:00 +0000"'
-                f' endDate="2021-05-{day:02d} 0{4 + day % 4}:30:00 +0000"/>')
-        if day != 10:
-            lines.append(
-                f' <Record type="HKCategoryTypeIdentifierSleepAnalysis" sourceName="W"'
-                f' value="HKCategoryValueSleepAnalysisInBed"'
-                f' startDate="2021-05-{day:02d} 00:30:00 +0000"'
-                f' endDate="2021-05-{day:02d} 09:00:00 +0000"/>')
-    lines.append("</HealthData>")
-    xdir = OUT / "apple2"
-    xdir.mkdir(exist_ok=True)
-    xml = xdir / "export.xml"
-    xml.write_text("\n".join(lines))
-    return xml
-
-
 def applehrv_parity():
-    xml = apple_xml_fixture()
+    """800 HRV records over 15 days (<5 / >300 outliers)."""
+    xml = apple_fixture("applehrv_sleep")
     from src.etl.stage_csv_aggregation import AppleHealthAggregator
     expected = AppleHealthAggregator(str(xml)).aggregate_hrv()
     out_csv = OUT / "engine_applehrv.csv"
@@ -444,28 +406,8 @@ def applehrv_parity():
 
 
 def appleactivity_parity():
-    rng = np.random.default_rng(44)
-    types_ = ["HKQuantityTypeIdentifierStepCount",
-              "HKQuantityTypeIdentifierDistanceWalkingRunning",
-              "HKQuantityTypeIdentifierActiveEnergyBurned"]
-    lines = ['<?xml version="1.0"?>', "<HealthData>"]
-    for i in range(1200):
-        day = 1 + int(rng.integers(0, 12))
-        t = types_[int(rng.integers(0, 3))]
-        val = ("bogus" if rng.random() < 0.02
-               else str(round(float(rng.uniform(1, 800)), 3)))
-        off = ["+0000", "-0500"][int(rng.integers(0, 2))]
-        lines.append(
-            f' <Record type="{t}" sourceName="P" value="{val}"'
-            f' startDate="2021-05-{day:02d} {int(rng.integers(0,24)):02d}:'
-            f'{int(rng.integers(0,60)):02d}:00 {off}"'
-            f' endDate="2021-05-{day:02d} 23:59:59 {off}"/>')
-    lines.append("</HealthData>")
-    xdir = OUT / "apple3"
-    xdir.mkdir(exist_ok=True)
-    xml = xdir / "export.xml"
-    xml.write_text("\n".join(lines))
-
+    """1200 steps/distance/energy records over 12 days, ~2% unparsable."""
+    xml = apple_fixture("appleactivity")
     from src.etl.stage_csv_aggregation import AppleHealthAggregator
     expected = AppleHealthAggregator(str(xml)).aggregate_activity()
     out_csv = OUT / "engine_appleactivity.csv"
@@ -476,7 +418,9 @@ def appleactivity_parity():
 
 
 def applesleep_parity():
-    xml = apple_xml_fixture()
+    """11 nights in the HRV fixture: day 10 asleep with no InBed
+    (inf -> 100), day 11 InBed only (asleep=0 -> 0)."""
+    xml = apple_fixture("applehrv_sleep")
     from src.etl.stage_csv_aggregation import AppleHealthAggregator
     expected = AppleHealthAggregator(str(xml)).aggregate_sleep()
     out_csv = OUT / "engine_applesleep.csv"
