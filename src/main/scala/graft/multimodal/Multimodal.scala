@@ -31,16 +31,6 @@ object Multimodal {
   // before first use).
   javax.imageio.ImageIO.setUseCache(false)
 
-  /** Canonical multimodal record schema: payload + typed metadata. */
-  val mediaSchema: StructType = new StructType()
-    .add("media_id", LongType)
-    .add("modality", StringType) // image | audio | video
-    .add("payload", BinaryType)
-    .add("width", IntegerType)
-    .add("height", IntegerType)
-    .add("sample_rate", IntegerType)
-    .add("n_frames", IntegerType)
-
   /** ======== STUB ========
     * Deterministic fake decode: folds payload bytes into `dims` float
     * features (feature j = sum of bytes at positions congruent j mod

@@ -182,38 +182,23 @@ object Dedup {
   /** Banded-LSH candidate pairs: split the signature into bands of
     * `rowsPerBand` hashes; docs sharing any band key are candidates.
     * One shuffle on the band key — no cross join. Returns distinct
-    * (id_a < id_b) candidate pairs. */
-  def lshCandidates(sig: DataFrame, idCol: String, numHashes: Int,
-                    rowsPerBand: Int): DataFrame = {
-    // persist the signature table BEFORE splitting into bands: column
-    // pruning would otherwise push each band's projection into the
-    // signature pipeline, recomputing shingle+SHA hashing once per band
-    // per join side. The signature is k longs per doc — tiny at any scale.
-    // NB: the cache is intentionally left registered (unpersisting before
-    // the lazy result is consumed would defeat it); Spark evicts LRU, and
-    // repeated calls with the same logical plan reuse the same entry.
-    // Callers that invoke this repeatedly over DIFFERENT inputs should use
-    // [[lshCandidatesEager]], which releases the cache deterministically.
-    bandJoin(sig.persist(), idCol, numHashes, rowsPerBand)
-  }
-
-  /** [[lshCandidates]] with deterministic cache lifetime: the candidate
-    * pairs are materialized eagerly (localCheckpoint severs the lineage,
-    * so downstream consumers never re-read the signature), then the
-    * signature checkpoint is released. Use for repeated invocations over
-    * different inputs, where the lazy variant would accumulate cache
-    * entries until LRU pressure. */
+    * (id_a < id_b) candidate pairs, materialized eagerly (localCheckpoint
+    * severs the lineage, so downstream consumers never re-read the
+    * signature); the signature checkpoint is then released, so repeated
+    * invocations over different inputs accumulate no cached blocks. */
   def lshCandidatesEager(sig: DataFrame, idCol: String, numHashes: Int,
                          rowsPerBand: Int): DataFrame = {
-    // localCheckpoint instead of persist: same effect (the signature
-    // kernel runs once, every band branch reads the materialized rows)
-    // minus the cache's columnar re-encode, which the job profile
-    // measured at ~0.7 s on a 5k-row signature frame (the block-store
-    // checkpoint keeps UnsafeRows as-is). Left alone, its blocks would
-    // free only when the ContextCleaner sees the RDD handle GC'd; once the
-    // result is materialized nothing reads them, so unpersist them here.
+    // checkpoint the signature BEFORE splitting into bands: column pruning
+    // would otherwise push each band's projection into the signature
+    // pipeline, recomputing shingle+SHA hashing once per band per join
+    // side. localCheckpoint instead of persist: the cache's columnar
+    // re-encode measured ~0.7 s on a 5k-row signature frame (the
+    // block-store checkpoint keeps UnsafeRows as-is). Left alone, its
+    // blocks would free only when the ContextCleaner sees the RDD handle
+    // GC'd; once the result is materialized nothing reads them, so
+    // unpersist them here.
     val cached = sig.localCheckpoint(eager = true)
-    val pairs = bandJoin(cached, idCol, numHashes, rowsPerBand)
+    val pairs = bandSelfJoin(cached, idCol, bandKeyExprs(numHashes, rowsPerBand))
       .localCheckpoint(eager = true)
     cached.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
       .foreach(_.unpersist(blocking = false))
@@ -223,7 +208,7 @@ object Dedup {
   /** One band-key expression per band over mh0..mh{numHashes-1} — sha60
     * of the band prefix + minima concat (see [[bandKeyOverHashed]] for
     * why the key ships as a hash, not the string). */
-  private def bandKeyExprs(numHashes: Int, rowsPerBand: Int): Seq[Column] = {
+  private[graft] def bandKeyExprs(numHashes: Int, rowsPerBand: Int): Seq[Column] = {
     val numBands = numHashes / rowsPerBand
     (0 until numBands).map { b =>
       Hashing.sha60(concat_ws("_",
@@ -231,16 +216,34 @@ object Dedup {
     }
   }
 
-  private def bandJoin(cached: DataFrame, idCol: String, numHashes: Int,
-                       rowsPerBand: Int): DataFrame = {
-    val exploded = bandKeyExprs(numHashes, rowsPerBand)
-      .map(key => cached.select(col(idCol), key.as("band_key")))
+  /** The banded self-join behind every LSH and Hamming blocking here:
+    * each row of `rows` is copied once per band key in `bandKeys`
+    * (expressions over `rows`), the copies equi-self-join on the key
+    * plus `blockCols` with id_a < id_b, and each pair sharing any band
+    * comes out once. Given `hammingWords` (the signature's words), the
+    * pair also carries `hamming`: the summed popcount of the words' xor,
+    * left unfiltered for the caller's radius. Signatures in different
+    * blocks are never candidates (e.g. audio fingerprints only compare
+    * at equal window counts); the block columns ride the join keys, not
+    * a post-join filter. */
+  private[graft] def bandSelfJoin(rows: DataFrame, idCol: String,
+                                  bandKeys: Seq[Column],
+                                  hammingWords: Seq[String] = Nil,
+                                  blockCols: Seq[String] = Nil): DataFrame = {
+    val banded = bandKeys.map(key => rows.select(
+        col(idCol) +: (hammingWords ++ blockCols).map(col) :+ key.as("bk"): _*))
       .reduce(_ union _)
-    val l = exploded.as("l")
-    val r = exploded.as("r")
-    l.join(r, col("l.band_key") === col("r.band_key") &&
-        col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"))
+    val l = banded.as("l")
+    val r = banded.as("r")
+    val cond = ("bk" +: blockCols)
+      .map(c => col(s"l.$c") === col(s"r.$c"))
+      .reduce(_ && _) && col(s"l.$idCol") < col(s"r.$idCol")
+    val hamming = hammingWords
+      .map(w => bit_count(col(s"l.$w").bitwiseXOR(col(s"r.$w"))))
+      .reduceOption(_ + _).map(_.cast("long").as("hamming"))
+    l.join(r, cond)
+      .select(Seq(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b")) ++
+        hamming: _*)
       .distinct()
   }
 
@@ -312,7 +315,7 @@ object Dedup {
     * the whole pipeline. The hashed shingle array is persisted and both
     * the signature (minhash folds) and the verification sets (sorted
     * distinct) derive from it — composing [[minhashSignature]] +
-    * [[lshCandidates]] + [[verifyPairsJaccard]] separately would hash
+    * [[lshCandidatesEager]] + [[verifyPairsJaccard]] separately would hash
     * the corpus three times. Cache lifetime is deterministic: the result
     * is materialized (localCheckpoint) before the persist is released.
     *
@@ -339,7 +342,7 @@ object Dedup {
         .select(col(idCol),
           graft.functions.MinHashOverHashed(col("hsh"), numHashes).as("__mh_arr"))
         .select(col(idCol) +: sigCols: _*)
-      val cand = bandJoin(sig, idCol, numHashes, rowsPerBand)
+      val cand = bandSelfJoin(sig, idCol, bandKeyExprs(numHashes, rowsPerBand))
       val sets = hashed.select(col(idCol),
         array_sort(array_distinct(col("hsh"))).as("sh"))
       val withSets = cand
@@ -420,14 +423,14 @@ object Dedup {
     * star contraction runs unchanged. Both paths produce the identical
     * min-label result (spec cross-checks them).
     *
-    * @param maxRounds hard stop; convergence is typically < 10 rounds.
-    *        Non-convergence within the cap throws rather than returning
-    *        a partially-contracted (wrong) labeling.
+    * The contraction stops after [[MaxClusterRounds]]; convergence is
+    * typically < 10 rounds, and non-convergence within the cap throws
+    * rather than returning a partially-contracted (wrong) labeling.
+    *
     * @param localSolveMaxEdges edge-count threshold below which the
     *        component solve happens on the driver; 0 forces the
     *        distributed star contraction. */
   def dupClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                  maxRounds: Int = 50,
                   localSolveMaxEdges: Long = 1L << 20): DataFrame = {
     // canonical undirected edges (hi > lo) in the ids' NATIVE type — a
     // cast to long would silently null out string/UUID ids and return an
@@ -444,7 +447,7 @@ object Dedup {
     if (edges.count() <= localSolveMaxEdges) return localUnionFind(edges)
     var converged = false
     var round = 0
-    while (!converged && round < maxRounds) {
+    while (!converged && round < MaxClusterRounds) {
       // large-star: for every node u, link each LARGER neighbor to the
       // minimum of u's closed neighborhood. Processed over the symmetric
       // adjacency; groupBy and join share the hash partitioning on u, so
@@ -488,7 +491,7 @@ object Dedup {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"dupClusters did not converge within $maxRounds rounds")
+        s"dupClusters did not converge within $MaxClusterRounds rounds")
     // at fixpoint the edge set is a disjoint union of stars rooted at
     // component minima: members label from their star edge, roots from
     // themselves.
@@ -496,6 +499,9 @@ object Dedup {
       .union(edges.select(col("lo").as("id"), col("lo").as("cluster_id")))
       .distinct()
   }
+
+  /** [[dupClusters]]' round cap for the distributed star contraction. */
+  private val MaxClusterRounds = 50
 
   /** Total order matching Spark's `least`/`min` (and DuckDB `min`) for the
     * id types that reach [[dupClusters]]: strings compare by UTF-8 bytes
@@ -761,8 +767,8 @@ object Dedup {
     // persist the one-long-per-doc signature before banding: the band
     // union references it 4x and the self-join 8x — without the persist
     // each reference recomputes the per-token signature aggregation
-    // (same rationale as lshCandidates). Deterministic lifetime: result
-    // materialized, then released.
+    // (same rationale as lshCandidatesEager's checkpoint). Deterministic
+    // lifetime: result materialized, then released.
     val sigs = docs.repartition(par)
       .select(col(idCol), hashedTokens(col(textCol)).as("htk"))
       .select(col(idCol), simhashOverHashed(col("htk"), bits).as("sig"))
@@ -839,17 +845,10 @@ object Dedup {
                       maxHamming: Int): DataFrame = {
     val bandBits = bits / bands
     val mask = (1L << bandBits) - 1
-    val banded = (0 until bands).map { j =>
-      sigs.select(col(idCol), col("sig"),
-        concat_ws("_", lit(j),
-          shiftright(col("sig"), j * bandBits).bitwiseAND(mask)).as("bk"))
-    }.reduce(_ union _)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    l.join(r, col("l.bk") === col("r.bk") && col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
-        bit_count(col("l.sig").bitwiseXOR(col("r.sig"))).cast("long").as("hamming"))
-      .distinct()
+    val keys = (0 until bands).map { j =>
+      concat_ws("_", lit(j), shiftright(col("sig"), j * bandBits).bitwiseAND(mask))
+    }
+    bandSelfJoin(sigs, idCol, keys, hammingWords = Seq("sig"))
       .filter(col("hamming") <= maxHamming)
   }
 
@@ -863,17 +862,14 @@ object Dedup {
     * share at least one intact band, so the candidate set is exact.
     * Same scale shape as the text banding: the only join is an
     * equi-join on the band key, verify is a per-pair popcount, and
-    * callers block on DISTINCT signatures (the [[simhashDedupCorpus]]
+    * callers block on DISTINCT signatures (the [[simhashClusters]]
     * contraction) so equal-hash masses never enumerate m² pairs. */
   def hammingBandJoin64(sigs: DataFrame, idCol: String, bands: Int,
                         maxHamming: Int): DataFrame = {
     require(bands >= 2 && bands % 2 == 0 && 64 % bands == 0,
       s"hammingBandJoin64: bands must be an even divisor of 64, got $bands")
-    require(maxHamming < bands,
-      s"hammingBandJoin64: need maxHamming ($maxHamming) < bands ($bands) " +
-        "for the pigeonhole guarantee")
-    hammingBandCandidatesWords(sigs, idCol, Seq("sig_lo", "sig_hi"), bands / 2)
-      .filter(col("hamming") <= maxHamming)
+    hammingBandJoinWords(sigs, idCol, Seq("sig_lo", "sig_hi"), bands / 2,
+      maxHamming)
   }
 
   /** [[hammingBandJoin64]] generalized to a signature carried as N
@@ -884,16 +880,26 @@ object Dedup {
     * maxHamming < total bands. This is how a wider perceptual hash
     * buys a deeper exact radius AND a larger band-key space than the
     * 64-bit form's 4×16 ceiling — same scale shape throughout: the
-    * only join is an equi-join on the band key, verify is a per-pair
-    * popcount sum, callers block on DISTINCT signatures. */
+    * only join is an equi-join on the band key (plus `blockCols`, see
+    * [[bandSelfJoin]]), verify is a per-pair popcount sum, callers
+    * block on DISTINCT signatures. */
   def hammingBandJoinWords(sigs: DataFrame, idCol: String,
                            wordCols: Seq[String], bandsPerWord: Int,
                            maxHamming: Int,
                            blockCols: Seq[String] = Nil): DataFrame = {
+    require(bandsPerWord >= 1 && 32 % bandsPerWord == 0,
+      s"hammingBandJoinWords: bandsPerWord must divide 32, got $bandsPerWord")
     require(maxHamming < wordCols.size * bandsPerWord,
       s"hammingBandJoinWords: need maxHamming ($maxHamming) < total bands " +
         s"(${wordCols.size * bandsPerWord}) for the pigeonhole guarantee")
-    hammingBandCandidatesWords(sigs, idCol, wordCols, bandsPerWord, blockCols)
+    val bandBits = 32 / bandsPerWord
+    val mask = (1L << bandBits) - 1
+    val keys = (0 until wordCols.size * bandsPerWord).map { j =>
+      val word = col(wordCols(j / bandsPerWord))
+      val off = (j % bandsPerWord) * bandBits
+      concat_ws("_", lit(j), shiftright(word, off).bitwiseAND(mask))
+    }
+    bandSelfJoin(sigs, idCol, keys, wordCols, blockCols)
       .filter(col("hamming") <= maxHamming)
   }
 
@@ -918,80 +924,22 @@ object Dedup {
                               fpCol: String, bitsCol: String, bands: Int,
                               maxHamming: Int,
                               blockCols: Seq[String]): DataFrame = {
+    require(bands >= 2, s"hammingBandJoinAdaptive: bands >= 2, got $bands")
     require(maxHamming < bands,
       s"hammingBandJoinAdaptive: need maxHamming ($maxHamming) < bands " +
         s"($bands) for the pigeonhole guarantee")
-    hammingBandCandidatesAdaptive(sigs, idCol, fpCol, bitsCol, bands,
-      blockCols).filter(col("hamming") <= maxHamming)
-  }
-
-  /** The pre-verify stage of [[hammingBandJoinAdaptive]] — the
-    * candidate volume the adaptive banding emits (the collision-floor
-    * probe's metric). */
-  def hammingBandCandidatesAdaptive(sigs: DataFrame, idCol: String,
-                                    fpCol: String, bitsCol: String,
-                                    bands: Int,
-                                    blockCols: Seq[String]): DataFrame = {
-    require(bands >= 2, s"hammingBandCandidatesAdaptive: bands >= 2, got $bands")
     // per-block band width; SQL-expression shifts because the width is
     // a COLUMN (functions.shiftright takes a literal offset)
     val withW = sigs.withColumn("__w",
       greatest(lit(1),
         ceil(col(bitsCol).cast("double") / lit(bands)).cast("int")))
-    val banded = (0 until bands).map { j =>
-      withW.select(col(idCol) +: (Seq(fpCol) ++ blockCols).map(col) :+
-        concat_ws("_", lit(j),
-          expr(s"shiftright(cast($fpCol as bigint), $j * __w) & " +
-            "((cast(1 as bigint) << __w) - 1)")).as("bk"): _*)
-    }.reduce(_ union _)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    val cond = (Seq("bk") ++ blockCols)
-      .map(c => col(s"l.$c") === col(s"r.$c"))
-      .reduce(_ && _) && col(s"l.$idCol") < col(s"r.$idCol")
-    l.join(r, cond)
-      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
-        bit_count(col(s"l.$fpCol").bitwiseXOR(col(s"r.$fpCol")))
-          .cast("long").as("hamming"))
-      .distinct()
-  }
-
-  /** The pre-verify stage of [[hammingBandJoinWords]]: every DISTINCT
-    * id pair sharing at least one band key, with its hamming distance
-    * attached but NOT filtered — the candidate volume a banding emits,
-    * which is what the collision-floor probes measure (verify work
-    * follows candidates, not documents). `blockCols` join as extra
-    * equi-keys next to the band key: signatures in different blocks
-    * are never candidates (e.g. audio fingerprints only compare at
-    * equal window counts — a different-length clip is a different
-    * object, and the block key keeps it out of the bucket). */
-  def hammingBandCandidatesWords(sigs: DataFrame, idCol: String,
-                                 wordCols: Seq[String],
-                                 bandsPerWord: Int,
-                                 blockCols: Seq[String] = Nil): DataFrame = {
-    require(bandsPerWord >= 1 && 32 % bandsPerWord == 0,
-      s"hammingBandCandidatesWords: bandsPerWord must divide 32, got $bandsPerWord")
-    val totalBands = wordCols.size * bandsPerWord
-    val bandBits = 32 / bandsPerWord
-    val mask = (1L << bandBits) - 1
-    val banded = (0 until totalBands).map { j =>
-      val word = col(wordCols(j / bandsPerWord))
-      val off = (j % bandsPerWord) * bandBits
-      sigs.select(col(idCol) +: (wordCols ++ blockCols).map(col) :+
-        concat_ws("_", lit(j),
-          shiftright(word, off).bitwiseAND(mask)).as("bk"): _*)
-    }.reduce(_ union _)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    val ham = wordCols.map(wc =>
-      bit_count(col(s"l.$wc").bitwiseXOR(col(s"r.$wc")))).reduce(_ + _)
-    val cond = (Seq("bk") ++ blockCols)
-      .map(c => col(s"l.$c") === col(s"r.$c"))
-      .reduce(_ && _) && col(s"l.$idCol") < col(s"r.$idCol")
-    l.join(r, cond)
-      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
-        ham.cast("long").as("hamming"))
-      .distinct()
+    val keys = (0 until bands).map { j =>
+      concat_ws("_", lit(j),
+        expr(s"shiftright(cast($fpCol as bigint), $j * __w) & " +
+          "((cast(1 as bigint) << __w) - 1)"))
+    }
+    bandSelfJoin(withW, idCol, keys, Seq(fpCol), blockCols)
+      .filter(col("hamming") <= maxHamming)
   }
 
   /** CTE chain of [[simhashPairs]]'s banded blocking + verify, ending in
@@ -1113,21 +1061,17 @@ object Dedup {
 
   /** Exact n-gram Jaccard similarity for pairs blocked by `blockCol`
     * (pairs are only formed within a block — at scale the block key is an
-    * LSH band or a cluster id, never the whole corpus).
-    *  @param broadcastBuild replicate the build side to every task.
-    *        Default FALSE — the safe plan for an unbounded corpus is the
-    *        blocked equi-join (one shuffle on the block key). Pass true
-    *        only when the build side is provably bounded (e.g. a fixed
-    *        query set).
+    * LSH band or a cluster id, never the whole corpus). The safe plan for
+    * an unbounded corpus is the blocked equi-join (one shuffle on the
+    * block key); nothing is broadcast unless AQE measures a side small.
     *  @param saltBuckets fan out the blocked join when blocks are few and
-    *        large: the probe side is salted by `hash(id) % saltBuckets`,
-    *        the build side replicated to every salt — parallelism becomes
-    *        #blocks x saltBuckets at a bounded (x saltBuckets) shuffle
-    *        cost, with no broadcast of an unbounded side. 1 = plain
-    *        blocked join (right when blocks are many, e.g. LSH bands). */
+    *        large: [[Skew.saltedJoin]] salts the probe side by
+    *        `hash(id) % saltBuckets` and replicates the build side to
+    *        every salt — parallelism becomes #blocks x saltBuckets at a
+    *        bounded (x saltBuckets) shuffle cost. 1 = plain blocked join
+    *        (right when blocks are many, e.g. LSH bands). */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         blockCol: String, shingleK: Int, minJaccard: Double,
-                        broadcastBuild: Boolean = false,
                         saltBuckets: Int = 1): DataFrame = {
     // intersect 64-bit shingle hashes, not strings: ~8x less shuffle bytes
     // and integer equality in the pairwise intersect hot loop. The SHA hash
@@ -1138,15 +1082,12 @@ object Dedup {
         col(blockCol), col(idCol),
         hashedShingleSet(col(textCol), shingleK).as("sh"))
       .withColumn("nsh", size(col("sh")))
-    // Round-robin spread of the probe side: the pairwise intersect loop is
-    // the hot path and must use every core regardless of how few splits
-    // the input scan produced. The build side stays broadcastable.
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val l = withSets.repartition(par).as("l")
-    // the BUILD side also repartitions: a broadcast collect executes its
-    // child plan as-is, and a single-split scan would otherwise compute
+    // Round-robin spread of both sides: the pairwise intersect loop is the
+    // hot path and must use every core regardless of how few splits the
+    // input scan produced, and a side AQE turns into a broadcast executes
+    // its child plan as-is — a single-split scan would otherwise compute
     // every shingle hash in one task before broadcasting.
-    val r = withSets.repartition(par).as("r")
+    val par = docs.sparkSession.sparkContext.defaultParallelism
     // |A∪B| = |A| + |B| - |A∩B|: sizes only, no union array materialized.
     // The intersect count is projected BELOW a (no-op) aggregation on the
     // pair key: without that boundary Catalyst pushes the jaccard filter
@@ -1158,18 +1099,8 @@ object Dedup {
     val blockCond = col(s"l.$blockCol") === col(s"r.$blockCol") &&
       col(s"l.$idCol") < col(s"r.$idCol") &&
       sizeRatioPrune(col("l.nsh"), col("r.nsh"), minJaccard)
-    val joined =
-      if (broadcastBuild) l.join(broadcast(r), blockCond)
-      else if (saltBuckets <= 1) l.join(r, blockCond)
-      else {
-        // fragment-replicate: probe rows carry one salt, build rows all of
-        // them — each pair matches exactly once, on the probe's salt.
-        val ls = withSets.repartition(par)
-          .withColumn("salt", pmod(hash(col(idCol)), lit(saltBuckets))).as("l")
-        val rs = withSets.repartition(par)
-          .withColumn("salt", explode(array((0 until saltBuckets).map(lit): _*))).as("r")
-        ls.join(rs, blockCond && col("l.salt") === col("r.salt"))
-      }
+    val joined = Skew.saltedJoin(withSets.repartition(par),
+      withSets.repartition(par), blockCond, hash(col(idCol)), saltBuckets)
     jaccardTail(
       joined.select(
         col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
@@ -1182,7 +1113,7 @@ object Dedup {
     * near 1 when A is quoted/embedded inside B even when their Jaccard
     * is tiny, the doc-in-doc signal symmetric near-dup misses (the
     * quote/subset-detection filter of a training-data pipeline). Same
-    * one-hash-pass, fragment-replicate salting and no-op aggregation
+    * one-hash-pass, [[Skew.saltedJoin]] salting and no-op aggregation
     * boundary as [[ngramJaccardPairs]]; emits BOTH directions per
     * unordered pair and keeps pairs where either direction clears
     * `minContainment`.
@@ -1207,17 +1138,8 @@ object Dedup {
     val inter = graft.functions.SortedLongIntersectCount(col("l.sh"), col("r.sh"))
     val blockCond = col(s"l.$blockCol") === col(s"r.$blockCol") &&
       col(s"l.$idCol") < col(s"r.$idCol")
-    val joined =
-      if (saltBuckets <= 1)
-        withSets.repartition(par).as("l")
-          .join(withSets.repartition(par).as("r"), blockCond)
-      else {
-        val ls = withSets.repartition(par)
-          .withColumn("salt", pmod(hash(col(idCol)), lit(saltBuckets))).as("l")
-        val rs = withSets.repartition(par)
-          .withColumn("salt", explode(array((0 until saltBuckets).map(lit): _*))).as("r")
-        ls.join(rs, blockCond && col("l.salt") === col("r.salt"))
-      }
+    val joined = Skew.saltedJoin(withSets.repartition(par),
+      withSets.repartition(par), blockCond, hash(col(idCol)), saltBuckets)
     joined.select(
         col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
         inter.as("i"), col("l.nsh").as("na"), col("r.nsh").as("nb"))

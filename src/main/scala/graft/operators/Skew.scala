@@ -1,38 +1,47 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation joins for hot keys (the 100 TB path; SURVEY §7.6).
+/** Skew-mitigation joins for hot keys (SURVEY §7.6).
   *
   * When one join key carries a disproportionate share of rows (one
-  * participant/device with most events), a plain shuffle join puts the
-  * whole hot key in one task. Salting splits the big side's hot keys
-  * across `saltFactor` buckets and replicates the small side once per
-  * bucket — bounded replication, even distribution, identical results.
-  * (AQE's skew-join handles sort-merge cases adaptively; explicit salting
-  * covers aggregations and joins AQE can't split.)
+  * participant/device with most events, or one block of an all-pairs
+  * verify), a plain shuffle join puts the whole hot key in one task.
+  * Salting splits the probe side's rows across `saltFactor` buckets and
+  * replicates the build side once per bucket — bounded replication, even
+  * distribution, identical results. [[Dedup.ngramJaccardPairs]] (dd18's
+  * all-pairs ground truth) and [[Dedup.containmentPairs]] (t20) block
+  * their pair verify through [[saltedJoin]]. (AQE's skew-join handles
+  * sort-merge cases adaptively; explicit salting covers aggregations and
+  * joins AQE can't split.)
   */
 object Skew {
 
-  /** Salted equi-join: big side gets a deterministic per-row salt in
-    * [0, saltFactor); small side is exploded across all salts. */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 saltFactor: Int): DataFrame = {
-    val salted = big.withColumn("__salt",
-      pmod(xxhash64(col(key), monotonically_increasing_id()), lit(saltFactor))
-        .cast("int"))
-    val replicated = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltFactor - 1))))
-    salted.join(replicated, Seq(key, "__salt")).drop("__salt")
-  }
+  /** Fragment-replicate join: each `probe` row gets the salt
+    * `pmod(salt, saltFactor)`, each `build` row is replicated once per
+    * salt in [0, saltFactor), and `cond` is ANDed with salt equality, so
+    * every matching pair meets exactly once, on its probe row's salt.
+    * The sides are aliased `l` (probe) and `r` (build) — `cond` refers to
+    * their columns through those aliases — and the salt columns are
+    * dropped from the output. `saltFactor` 1 is the plain join. */
+  def saltedJoin(probe: DataFrame, build: DataFrame, cond: Column,
+                 salt: Column, saltFactor: Int): DataFrame =
+    if (saltFactor <= 1) probe.as("l").join(build.as("r"), cond)
+    else {
+      val l = probe.withColumn("__salt", pmod(salt, lit(saltFactor))).as("l")
+      val r = build.withColumn("__salt",
+        explode(array((0 until saltFactor).map(lit): _*))).as("r")
+      l.join(r, cond && col("l.__salt") === col("r.__salt"))
+        .drop(col("l.__salt")).drop(col("r.__salt"))
+    }
 
   /** Salted aggregation: two-phase groupBy — partial aggregate on
     * (key, salt), then final on key. `partials` aggregate raw columns;
     * `finals` combine the partial columns (sums of sums, etc.). */
   def saltedAgg(df: DataFrame, key: String, saltFactor: Int,
-                partials: Seq[org.apache.spark.sql.Column],
-                finals: Seq[org.apache.spark.sql.Column]): DataFrame =
+                partials: Seq[Column],
+                finals: Seq[Column]): DataFrame =
     df.withColumn("__salt",
         pmod(xxhash64(monotonically_increasing_id()), lit(saltFactor)).cast("int"))
       .groupBy(col(key), col("__salt"))

@@ -412,19 +412,6 @@ object TextAnalysis {
     * term-count side); top-k is one window partitioned by doc. N is a
     * driver scalar (single count — the A13/class-weight two-phase
     * pattern), not a per-row subquery. Ties rank by term for determinism.
-    */
-  def tfIdfTopK(docs: DataFrame, idCol: String, textCol: String,
-                k: Int, broadcastVocabLimit: Long = 1000000L): DataFrame = {
-    // Two lazy branches over the corpus scan (term counts for the probe,
-    // documentFrequencies for the broadcast IDF) beat persisting the
-    // (doc, term) table: that intermediate is LARGER than the compressed
-    // columnar scan it would save, at bench scale (measured 2x slower
-    // persisted) and at 100 TB alike. Parquet re-scan is the cheap side.
-    tfIdfTopKPlan(docs, idCol, textCol, k, broadcastVocabLimit)
-  }
-
-  /** The lazy two-branch plan behind [[tfIdfTopK]]; also what PlanSpec
-    * asserts the broadcast-IDF join shape on.
     *
     * The IDF attach broadcasts only while the measured vocabulary fits
     * `broadcastVocabLimit` — vocabulary grows with the corpus (Heaps'
@@ -433,9 +420,16 @@ object TextAnalysis {
     * equi-join on the high-cardinality term key (even split, no driver
     * pressure). The vocab count is a driver scalar — the same two-phase
     * pattern as N — and its pass is over the already-partial-aggregated
-    * term key. */
-  def tfIdfTopKPlan(docs: DataFrame, idCol: String, textCol: String,
-                    k: Int, broadcastVocabLimit: Long = 1000000L): DataFrame = {
+    * term key. Only the two counts run eagerly; the returned frame is
+    * lazy, and PlanSpec asserts the broadcast-IDF join shape on it.
+    */
+  def tfIdfTopK(docs: DataFrame, idCol: String, textCol: String,
+                k: Int, broadcastVocabLimit: Long = 1000000L): DataFrame = {
+    // Two lazy branches over the corpus scan (term counts for the probe,
+    // documentFrequencies for the broadcast IDF) beat persisting the
+    // (doc, term) table: that intermediate is LARGER than the compressed
+    // columnar scan it would save, at bench scale (measured 2x slower
+    // persisted) and at 100 TB alike. Parquet re-scan is the cheap side.
     val idf = documentFrequencies(docs, idCol, textCol)
     val idfSide = if (idf.count() <= broadcastVocabLimit) broadcast(idf) else idf
     scoreAndRank(termCounts(docs, idCol, textCol), idfSide, idCol,

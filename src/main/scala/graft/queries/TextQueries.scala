@@ -1591,7 +1591,7 @@ object TextQueries {
     // differ by a unit seed offset — a brightness shift whose channel
     // carries flip a few aHash bits (the near-dup regime) — while
     // distinct gradients land far apart. Blocking runs on DISTINCT
-    // signatures labeled by their min doc_id (the simhashDedupCorpus
+    // signatures labeled by their min doc_id (the simhashClusters
     // contraction), so equal-hash image masses attach by hash equality
     // and never enumerate m² pairs. The twin verifies the banding's
     // EXACTNESS: its vpairs is the brute all-pairs hamming filter over

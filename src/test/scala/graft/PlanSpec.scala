@@ -143,10 +143,8 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("t5: the vocabulary IDF table attaches via broadcast, term counts never shuffle twice") {
-    // the public operator materializes through a localCheckpoint (which
-    // hides the plan); assert on the lazy plan variant.
     val plan = graft.operators.TextAnalysis
-      .tfIdfTopKPlan(graft.core.Tables.documents(spark, dir), "doc_id", "text", 5)
+      .tfIdfTopK(graft.core.Tables.documents(spark, dir), "doc_id", "text", 5)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(plan.contains("BroadcastHashJoin"), "IDF attach not broadcast")
@@ -157,6 +155,24 @@ class PlanSpec extends SparkTestBase {
     val plan = planOf("t7_contamination")
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftOuter"),
       "bench shingles not a broadcast left join")
+  }
+
+  test("dd3/dd7: the MinHash band join is an equi-join on the band key, never a product") {
+    // dd3 and dd7 materialize their candidates through a localCheckpoint,
+    // which hides the plan: assert on their lazy blocking stage, the
+    // band self-join over a 4-hash signature in 2 bands of 2 rows
+    val sig = graft.operators.Dedup.minhashSignature(
+      graft.core.Tables.documents(spark, dir), "doc_id", "text", 2, 4)
+    val plan = graft.operators.Dedup
+      .bandSelfJoin(sig, "doc_id", graft.operators.Dedup.bandKeyExprs(4, 2))
+      .queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(!plan.contains("CartesianProduct") &&
+      !plan.contains("BroadcastNestedLoopJoin"),
+      "MinHash band join degenerated to a product join")
+    val joinKeys = plan.linesIterator
+      .filter(l => l.contains("keys") && l.contains("bk")).mkString("\n")
+    assert(joinKeys.nonEmpty, s"band key missing from the equi-join keys:\n$plan")
   }
 
   test("dd10: the simhash band join is an equi-join, never a product") {

@@ -94,6 +94,23 @@ class ReferencePipelineSpec extends SparkTestBase {
     assert(act.head.getAs[Double]("total_steps") === 1000.0)
   }
 
+  test("stage 1 activity: a day whose every activity value is unparsable has no row") {
+    // The engine's contract: records whose value fails the double cast
+    // are dropped before the daily sums, so a day with no parsable step,
+    // distance or energy value yields no daily_activity row (not a row
+    // of 0.0 or null totals). What the reference writes for such a day
+    // is unverified: no reference-parity fixture has one.
+    val path = writeXml(Seq("<HealthData>",
+      record(StepsType, "1200", "2021-06-01 12:00:00", "2021-06-01 12:10:00"),
+      record(StepsType, "bogus", "2021-06-02 12:00:00", "2021-06-02 12:10:00"),
+      record(DistanceType, "n/a", "2021-06-02 12:00:00", "2021-06-02 12:10:00"),
+      record(EnergyType, "", "2021-06-02 13:00:00", "2021-06-02 13:30:00"),
+      "</HealthData>"))
+    val act = appleDailyActivity(appleRecords(spark, path)).collect()
+    assert(act.map(_.getAs[java.sql.Date]("date").toString).toSeq === Seq("2021-06-01"))
+    assert(act.head.getAs[Double]("total_steps") === 1200.0)
+  }
+
   /** Stage 2 as the snapshot run composes it: per-domain vendor fusion,
     * then `unifyAllDomains`' date spine. */
   private def unified = unifyAllDomains(

@@ -65,7 +65,8 @@ class ScaleSpec extends SparkTestBase {
     val small = Seq(("hot", 10), ("cold", 20)).toDF("k", "m")
     val plain = big.join(small, Seq("k"))
       .agg(sum(col("v") * col("m"))).head().getLong(0)
-    val salted = Skew.saltedJoin(big, small, "k", saltFactor = 8)
+    val salted = Skew.saltedJoin(big, small, col("l.k") === col("r.k"),
+        salt = xxhash64(col("k"), monotonically_increasing_id()), saltFactor = 8)
       .agg(sum(col("v") * col("m"))).head().getLong(0)
     assert(salted === plain)
   }
