@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.core.Json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -31,27 +32,15 @@ object Verify {
         failures += name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}"
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => selected.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Self-describing failure record: a CORRECTNESS file with fewer rows
     // than SparkEntry.queries must never masquerade as "fewer queries" —
     // the driver (and the judge) can read exactly what broke and why.
     val failJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/failures.json"),
       s"""{"total": ${selected.size}, "failed": ${failures.size}, "errors": $failJson}""")
     // Also commit-path copy so the failure history survives in the repo
@@ -59,7 +48,7 @@ object Verify {
     // full runs only, so a dev subset run can't overwrite the record.
     if (only.isEmpty)
       try Files.writeString(Paths.get("VERIFY_FAILURES.json"),
-        s"""{"sfDir": ${q(sfDir)}, "total": ${selected.size}, "failed": ${failures.size}, "errors": $failJson}""")
+        s"""{"sfDir": ${Json.str(sfDir)}, "total": ${selected.size}, "failed": ${failures.size}, "errors": $failJson}""")
       catch { case _: Throwable => () }
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size}/${selected.size} queries FAILED")

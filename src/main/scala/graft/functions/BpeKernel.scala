@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShim
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -40,15 +39,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Null text yields a null struct (nullSafeEval), matching the
   * composable columns' null propagation. */
 case class BpeCounts(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = BpeCounts.schema
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   // sentinel-padded literal pattern/replacement pairs, flattened so the
   // codegen reference object is a raw String[] (janino-friendly)
@@ -83,7 +78,7 @@ object BpeCounts {
   /** One document -> (n_words, n_subwords, n_chars). `merges` is the
     * flattened sentinel-padded table: [pat0, rep0, pat1, rep1, ...]. */
   def compute(text: UTF8String, merges: Array[String]): InternalRowType = {
-    val toks0 = ShingleTokenizer.tokens(text, 1)
+    val toks0 = ShingleTokenizer.tokens(text)
     var nWords = 0L
     var nSub = 0L
     var nChars = 0L

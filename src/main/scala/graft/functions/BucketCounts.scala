@@ -2,11 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShim
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,36 +25,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * `element_at(counts, b + 1)` — codegen-native. Value identity with
   * the composable filter-count form is HashingSpec-pinned. */
 case class HashedBucketCounts(child: Expression, buckets: Int)
-    extends UnaryExpression {
+    extends NonNullTextKernel {
 
   require(buckets > 0 && buckets <= 4096,
     s"HashedBucketCounts: buckets out of range: $buckets")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullable: Boolean = false
+  override protected def evalText(text: UTF8String): Any =
+    HashedBucketCounts.compute(text, buckets)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    HashedBucketCounts.compute(v.asInstanceOf[UTF8String], buckets)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.functions.HashedBucketCounts.compute(
-            ${c.isNull} ? null : ${c.value}, $buckets);""",
-      isNull = FalseLiteral)
-  }
+  override protected def computeCall(ctx: CodegenContext, text: String): String =
+    s"graft.functions.HashedBucketCounts.compute($text, $buckets)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

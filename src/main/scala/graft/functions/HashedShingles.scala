@@ -1,83 +1,144 @@
 package graft.functions
 
-import java.nio.charset.StandardCharsets
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared kernel of the fused shingle expressions: lowercase
+/** The one whitespace tokenizer of the text kernels: lowercase
   * (`UTF8String.toLowerCase`, the Lower expression's kernel) and split
   * on `\s+` with Java limit -1, exactly like `split(lower(text),
-  * "\\s+")` — a leading separator yields a leading empty token, kept by
-  * both. Returns null when the text is null or shorter than k tokens
-  * (the caller maps that to the empty shingle list the composable
-  * form's `when(size >= k, ...)` guard produces).
+  * "\\s+")` — a leading separator yields a leading empty token, a
+  * trailing run a trailing one, no separator at all the whole string
+  * ("" for empty input).
   *
-  * The split itself is a hand-rolled scan, not `Pattern.split`: Java
+  * The split is one hand-rolled byte scan, not `Pattern.split`: Java
   * regex `\s` is exactly the ASCII class `[ \t\n\x0B\f\r]` (it does NOT
-  * match U+00A0/U+2028/etc. — pinned by spec), so "runs of `\s`" needs
-  * no regex engine. `Pattern.split` walks the NFA per position and
-  * allocates a matcher per call; the scan is a per-char comparison —
-  * measured 3-6x faster at steady state on mixed-separator docs, and
-  * every text kernel (shingle hashing, token sets, language ID, BPE,
-  * token counts) tokenizes through here. Value-identity with
-  * `Pattern.compile("\\s+").split(s, -1)` — leading separator run gives
-  * a leading "" token, a trailing run a trailing "" (limit -1), no
-  * separator at all gives the whole string as one token ("" for empty
-  * input) — is spec-pinned against the regex form directly. */
+  * match U+00A0/U+2028/etc. — pinned by spec), and in UTF-8 those byte
+  * values never occur inside a multi-byte sequence (continuation bytes
+  * are >= 0x80), so splitting valid UTF-8 bytes finds exactly the
+  * boundaries the char-level regex finds. `Pattern.split` walks the NFA
+  * per position and allocates a matcher per call; the scan is a
+  * per-byte comparison. A lowercased document that is NOT valid UTF-8
+  * (foreign bytes only — parquet strings are valid) is scanned as the
+  * re-encoding of its String form, whose replacement characters are
+  * what the composable `split(lower(text), ...)` sees. Value identity
+  * with `Pattern.compile("\\s+").split(s, -1)` is spec-pinned against
+  * the regex form directly, malformed input included. */
 private[functions] object ShingleTokenizer {
   /** the reference form the scan is pinned against (used by the spec) */
   private[functions] val ws = Pattern.compile("\\s+")
 
-  // Java-regex \s: space plus the contiguous control block \t..\r
-  // (0x09-0x0D: \t \n \x0B \f \r)
-  @inline private def isWs(c: Char): Boolean =
-    c == ' ' || (c >= '\t' && c <= '\r')
+  /** Java-regex `\s`: space plus the contiguous control block \t..\r
+    * (0x09-0x0D). Takes a char, a code point or a byte: a byte >= 0x80
+    * widens to a negative Int, which is never whitespace. */
+  @inline def isWs(c: Int): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
 
-  /** `Pattern.compile("\\s+").split(s, -1)`, value-identical, one scan. */
-  private[functions] def splitWs(s: String): Array[String] = {
-    val n = s.length
-    // pass 1: exact token count = separator runs + 1
-    var runs = 0
-    var i = 0
-    while (i < n) {
-      if (isWs(s.charAt(i))) {
-        runs += 1
-        i += 1
-        while (i < n && isWs(s.charAt(i))) i += 1
-      } else i += 1
+  /** Token boundaries of one scan: token `i` is bytes
+    * `[starts(i), ends(i))`. One reused instance per thread, grown on
+    * demand, so a scan allocates nothing. */
+  final class Bounds {
+    var starts: Array[Int] = new Array[Int](64)
+    var ends: Array[Int] = new Array[Int](64)
+    var n: Int = 0
+    private[ShingleTokenizer] def add(st: Int, en: Int): Unit = {
+      if (n == starts.length) {
+        starts = java.util.Arrays.copyOf(starts, n * 2)
+        ends = java.util.Arrays.copyOf(ends, n * 2)
+      }
+      starts(n) = st; ends(n) = en
+      n += 1
     }
-    val out = new Array[String](runs + 1)
-    // pass 2: fill
+  }
+  private val bounds = new ThreadLocal[Bounds] {
+    override def initialValue(): Bounds = new Bounds
+  }
+
+  /** The UTF-8 bytes of `lower(text)` that [[scan]] splits: the
+    * lowercased bytes themselves when valid, else the re-encoding of
+    * their String form (malformed sequences become U+FFFD). */
+  def lowerBytes(text: UTF8String): Array[Byte] = {
+    val lower = text.toLowerCase
+    if (lower.isValid) lower.getBytes else lower.toString.getBytes(UTF_8)
+  }
+
+  /** Splits valid UTF-8 `bytes` on runs of `\s` (limit -1 semantics:
+    * token count = separator runs + 1). The result is this thread's
+    * [[Bounds]], valid until its next scan. */
+  def scan(bytes: Array[Byte]): Bounds = {
+    val b = bounds.get()
+    b.n = 0
+    val nb = bytes.length
+    var i = 0
     var start = 0
-    var t = 0
-    i = 0
-    while (i < n) {
-      if (isWs(s.charAt(i))) {
-        out(t) = s.substring(start, i)
-        t += 1
+    while (i < nb) {
+      if (isWs(bytes(i))) {
+        b.add(start, i)
         i += 1
-        while (i < n && isWs(s.charAt(i))) i += 1
+        while (i < nb && isWs(bytes(i))) i += 1
         start = i
       } else i += 1
     }
-    out(t) = s.substring(start)
+    b.add(start, nb)
+    b
+  }
+
+  private def strings(bytes: Array[Byte]): Array[String] = {
+    val b = scan(bytes)
+    val out = new Array[String](b.n)
+    var i = 0
+    while (i < b.n) {
+      out(i) = new String(bytes, b.starts(i), b.ends(i) - b.starts(i), UTF_8)
+      i += 1
+    }
     out
   }
 
-  def tokens(text: UTF8String, k: Int): Array[String] = {
-    if (text == null) return null
-    val toks = splitWs(text.toLowerCase.toString)
-    if (toks.length < k) null else toks
+  /** `Pattern.compile("\\s+").split(s, -1)`, value-identical for every
+    * well-formed string (each `UTF8String.toString` is one). */
+  def splitWs(s: String): Array[String] = strings(s.getBytes(UTF_8))
+
+  /** `split(lower(text), "\\s+")` as Strings; null for null text. */
+  def tokens(text: UTF8String): Array[String] =
+    if (text == null) null else strings(lowerBytes(text))
+}
+
+/** A one-string-input kernel whose result is never null: a null text is
+  * passed on to the kernel's `compute` as null, which maps it to a value
+  * (the composable form's otherwise-branch). Interpreted and generated
+  * evaluation both run that one `compute`. */
+private[functions] abstract class NonNullTextKernel extends UnaryExpression
+    with ExpectsInputTypes {
+
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+
+  override def nullable: Boolean = false
+
+  /** the kernel's `compute` over a possibly-null text */
+  protected def evalText(text: UTF8String): Any
+
+  /** the Java call of that `compute`, applied to the expression `text` */
+  protected def computeCall(ctx: CodegenContext, text: String): String
+
+  override def eval(input: InternalRow): Any =
+    evalText(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(
+      code = code"""
+        ${c.code}
+        ${CodeGenerator.javaType(dataType)} ${ev.value} =
+          ${computeCall(ctx, s"${c.isNull} ? null : ${c.value}")};""",
+      isNull = FalseLiteral)
   }
 }
 
@@ -94,10 +155,10 @@ private[functions] object ShingleTokenizer {
   * the shingle build (k `element_at` calls + a `concat_ws` allocation
   * per shingle) and the SHA map run INTERPRETED, boxing every element
   * and materializing the intermediate shingle-string array. This
-  * expression tokenizes once, converts each token to UTF-8 bytes once,
-  * and per shingle streams `tok[i] ' ' tok[i+1] ...` straight into a
-  * thread-local SHA-256 digest — no shingle strings, no boxing, and the
-  * enclosing WholeStageCodegen span stays intact (single static call).
+  * expression tokenizes once, and per shingle streams the token byte
+  * slices `tok[i] ' ' tok[i+1] ...` straight into a thread-local SHA-256
+  * digest — no shingle strings, no boxing, and the enclosing
+  * WholeStageCodegen span stays intact (single static call).
   *
   * Edge semantics matched to the composable form: documents with fewer
   * than k tokens — and NULL documents, which the `when(size >= k, ...)`
@@ -106,7 +167,7 @@ private[functions] object ShingleTokenizer {
   * so the DuckDB oracle replays every value.
   */
 case class HashedShingles(child: Expression, k: Int, hexChars: Int = 7)
-    extends UnaryExpression {
+    extends NonNullTextKernel {
 
   require(k >= 1 && k <= 128, s"shingle size out of range: $k")
   require(hexChars > 0 && hexChars <= 15,
@@ -114,33 +175,11 @@ case class HashedShingles(child: Expression, k: Int, hexChars: Int = 7)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  // null text maps to an empty shingle list (the composable form's
-  // otherwise-branch), so the output is never null.
-  override def nullable: Boolean = false
+  override protected def evalText(text: UTF8String): Any =
+    HashedShingles.compute(text, k, hexChars)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    HashedShingles.compute(v.asInstanceOf[UTF8String], k, hexChars)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    // custom null handling (null in -> empty array out, result never
-    // null), so nullSafeCodeGen's is-null propagation doesn't apply.
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.functions.HashedShingles.compute(
-            ${c.isNull} ? null : ${c.value}, $k, $hexChars);""",
-      isNull = FalseLiteral)
-  }
+  override protected def computeCall(ctx: CodegenContext, text: String): String =
+    s"graft.functions.HashedShingles.compute($text, $k, $hexChars)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -148,113 +187,35 @@ case class HashedShingles(child: Expression, k: Int, hexChars: Int = 7)
 
 object HashedShingles {
 
-  // reusable per-thread scratch: token boundary arrays (grown on demand)
-  // and the 32-byte digest output buffer, so the per-shingle path
-  // allocates nothing but the result array.
-  private final class Scratch {
-    var starts: Array[Int] = new Array[Int](64)
-    var ends: Array[Int] = new Array[Int](64)
-    val digestBuf: Array[Byte] = new Array[Byte](32)
-    def grow(n: Int): Unit = {
-      if (n > starts.length) {
-        starts = java.util.Arrays.copyOf(starts, n * 2)
-        ends = java.util.Arrays.copyOf(ends, n * 2)
-      }
-    }
-  }
-  private val scratch = new ThreadLocal[Scratch] {
-    override def initialValue(): Scratch = new Scratch
+  // the 32-byte digest output buffer, reused per thread, so the
+  // per-shingle path allocates nothing but the result array
+  private val digestBuf = new ThreadLocal[Array[Byte]] {
+    override def initialValue(): Array[Byte] = new Array[Byte](32)
   }
 
-  // Java-regex \s as BYTES: space plus \t..\r (0x09-0x0D). In UTF-8
-  // these values never occur inside a multi-byte sequence (continuation
-  // bytes are >= 0x80), so byte-level splitting of VALID UTF-8 finds
-  // exactly the boundaries the char-level split finds.
-  @inline private def isWsByte(b: Byte): Boolean =
-    b == 0x20.toByte || (b >= 0x09.toByte && b <= 0x0d.toByte)
-
-  /** One document -> its long[] of shaPrefix(shingle) values, in order.
-    *
-    * Fast path: tokenize the LOWERCASED document's UTF-8 bytes directly
-    * and stream token byte-slices into the digest — no UTF-16 toString
-    * round-trip, no per-token substring/getBytes allocation. Exactness:
-    * for valid UTF-8 the `toString`+`getBytes(UTF_8)` round-trip the
-    * slow path pays is the identity, so the hashed bytes are the same;
-    * a document whose lowercased form is NOT valid UTF-8 (foreign bytes
-    * only — parquet strings are valid) takes the original String path,
-    * whose replacement-char semantics match the composable
-    * `split(lower(text), ...)` exactly (spec-pinned both ways). */
+  /** One document -> its long[] of shaPrefix(shingle) values, in order:
+    * the [[ShingleTokenizer]] token byte slices streamed into the digest,
+    * with no per-token String or byte-array allocation. */
   def compute(text: UTF8String, k: Int, hexChars: Int): ArrayData = {
     if (text == null) return new GenericArrayData(Array.emptyLongArray)
-    val lower = text.toLowerCase
-    if (!lower.isValid) return computeViaString(lower, k, hexChars)
-    val bytes = lower.getBytes
-    val nb = bytes.length
-    val sc = scratch.get()
-    // token count = whitespace runs + 1 (limit -1 split semantics:
-    // leading/trailing runs contribute empty tokens, kept)
-    var ntok = 0
-    var i = 0
-    var start = 0
-    while (i < nb) {
-      if (isWsByte(bytes(i))) {
-        sc.grow(ntok + 1)
-        sc.starts(ntok) = start; sc.ends(ntok) = i
-        ntok += 1
-        i += 1
-        while (i < nb && isWsByte(bytes(i))) i += 1
-        start = i
-      } else i += 1
-    }
-    sc.grow(ntok + 1)
-    sc.starts(ntok) = start; sc.ends(ntok) = nb
-    ntok += 1
+    val bytes = ShingleTokenizer.lowerBytes(text)
+    val b = ShingleTokenizer.scan(bytes)
+    val ntok = b.n
     if (ntok < k) return new GenericArrayData(Array.emptyLongArray)
     val md = ShaPrefixLong.localDigest()
+    val buf = digestBuf.get()
     val out = new Array[Long](ntok - k + 1)
-    i = 0
+    var i = 0
     while (i <= ntok - k) {
       md.reset()
       var j = 0
       while (j < k) {
         if (j > 0) md.update(' '.toByte)
-        md.update(bytes, sc.starts(i + j), sc.ends(i + j) - sc.starts(i + j))
+        md.update(bytes, b.starts(i + j), b.ends(i + j) - b.starts(i + j))
         j += 1
       }
-      md.digest(sc.digestBuf, 0, 32)
-      out(i) = ShaPrefixLong.prefixOf(sc.digestBuf, hexChars)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** The original String-path implementation — the exact composable
-    * semantics for malformed-UTF-8 input (and the reference the byte
-    * path is spec-pinned against). `lower` is already lowercased. */
-  private[functions] def computeViaString(lower: UTF8String, k: Int,
-      hexChars: Int): ArrayData = {
-    val toks0 = ShingleTokenizer.splitWs(lower.toString)
-    if (toks0.length < k) return new GenericArrayData(Array.emptyLongArray)
-    val toks = toks0
-    val n = toks.length
-    val tokBytes = new Array[Array[Byte]](n)
-    var i = 0
-    while (i < n) {
-      tokBytes(i) = toks(i).getBytes(StandardCharsets.UTF_8)
-      i += 1
-    }
-    val md = ShaPrefixLong.localDigest()
-    val out = new Array[Long](n - k + 1)
-    i = 0
-    while (i <= n - k) {
-      md.reset()
-      var j = 0
-      while (j < k) {
-        if (j > 0) md.update(' '.toByte)
-        md.update(tokBytes(i + j))
-        j += 1
-      }
-      out(i) = ShaPrefixLong.prefixOf(md.digest(), hexChars)
+      md.digest(buf, 0, 32)
+      out(i) = ShaPrefixLong.prefixOf(buf, hexChars)
       i += 1
     }
     new GenericArrayData(out)
@@ -286,35 +247,17 @@ object HashedShingles {
   * window is joined in a tight JIT'd loop over the token array.
   */
 case class ShingleStrings(child: Expression, k: Int,
-    dropEmpty: Boolean = false) extends UnaryExpression {
+    dropEmpty: Boolean = false) extends NonNullTextKernel {
 
   require(k >= 1 && k <= 128, s"shingle size out of range: $k")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def nullable: Boolean = false
+  override protected def evalText(text: UTF8String): Any =
+    ShingleStrings.compute(text, k, dropEmpty)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    ShingleStrings.compute(v.asInstanceOf[UTF8String], k, dropEmpty)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.functions.ShingleStrings.compute(
-            ${c.isNull} ? null : ${c.value}, $k, $dropEmpty);""",
-      isNull = FalseLiteral)
-  }
+  override protected def computeCall(ctx: CodegenContext, text: String): String =
+    s"graft.functions.ShingleStrings.compute($text, $k, $dropEmpty)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -328,7 +271,7 @@ object ShingleStrings {
     * preamble the repetition metrics use (a leading separator otherwise
     * contributes an empty first token). */
   def compute(text: UTF8String, k: Int, dropEmpty: Boolean = false): ArrayData = {
-    val toks0 = ShingleTokenizer.tokens(text, 1)
+    val toks0 = ShingleTokenizer.tokens(text)
     val toksF =
       if (toks0 == null) null
       else if (dropEmpty) toks0.filter(_.nonEmpty)
@@ -373,22 +316,17 @@ object ShingleStrings {
   * Why not the built-in: Spark's `StringSplit` re-enters
   * `Pattern.compile(...).split` per ROW (`UTF8String.split` compiles
   * the pattern each call) and round-trips UTF-16: UTF8String ->
-  * toString -> regex NFA walk -> String tokens -> UTF8String each. The
-  * fast path here tokenizes the LOWERCASED document's UTF-8 bytes in
-  * place — ASCII `\s` bytes never occur inside a multi-byte sequence —
-  * and emits zero-copy `UTF8String.fromBytes` slices over that one
-  * byte array; a document whose lowercased form is not valid UTF-8
-  * (foreign bytes only) takes the retained String path. Spec-pinned
-  * against the regex form on unicode edges and randomized documents. */
-case class WsTokens(child: Expression) extends UnaryExpression {
+  * toString -> regex NFA walk -> String tokens -> UTF8String each. Here
+  * the tokens are zero-copy `UTF8String.fromBytes` slices over the one
+  * lowercased byte array the [[ShingleTokenizer]] scan splits.
+  * Spec-pinned against the regex form on unicode edges and randomized
+  * documents. */
+case class WsTokens(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override protected def nullSafeEval(v: Any): Any =
     WsTokens.compute(v.asInstanceOf[UTF8String])
@@ -405,48 +343,16 @@ object WsTokens {
   /** One non-null document -> its UTF8String[] token array, exactly
     * `split(lower(text), "\\s+")`. */
   def compute(text: UTF8String): ArrayData = {
-    val lower = text.toLowerCase
-    if (!lower.isValid) {
-      // malformed bytes: the String path's replacement-char semantics
-      // match the composable split exactly (ShingleTokenizer's pin)
-      val toks = ShingleTokenizer.splitWs(lower.toString)
-      val out = new Array[Any](toks.length)
-      var i = 0
-      while (i < toks.length) { out(i) = UTF8String.fromString(toks(i)); i += 1 }
-      return new GenericArrayData(out)
-    }
-    val bytes = lower.getBytes
-    val nb = bytes.length
-    // pass 1: token count = whitespace runs + 1 (limit -1 semantics)
-    var runs = 0
+    val bytes = ShingleTokenizer.lowerBytes(text)
+    val b = ShingleTokenizer.scan(bytes)
+    val out = new Array[Any](b.n)
     var i = 0
-    while (i < nb) {
-      if (isWsByte(bytes(i))) {
-        runs += 1
-        i += 1
-        while (i < nb && isWsByte(bytes(i))) i += 1
-      } else i += 1
+    while (i < b.n) {
+      out(i) = UTF8String.fromBytes(bytes, b.starts(i), b.ends(i) - b.starts(i))
+      i += 1
     }
-    val out = new Array[Any](runs + 1)
-    // pass 2: zero-copy slices over the one lowercased byte array
-    var start = 0
-    var t = 0
-    i = 0
-    while (i < nb) {
-      if (isWsByte(bytes(i))) {
-        out(t) = UTF8String.fromBytes(bytes, start, i - start)
-        t += 1
-        i += 1
-        while (i < nb && isWsByte(bytes(i))) i += 1
-        start = i
-      } else i += 1
-    }
-    out(t) = UTF8String.fromBytes(bytes, start, nb - start)
     new GenericArrayData(out)
   }
-
-  @inline private def isWsByte(b: Byte): Boolean =
-    b == 0x20.toByte || (b >= 0x09.toByte && b <= 0x0d.toByte)
 
   def apply(c: Column): Column =
     GraftShim.column(WsTokens(GraftShim.expression(c)))

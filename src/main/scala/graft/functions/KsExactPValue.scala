@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
@@ -32,18 +32,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * codegen would buy nothing.
   */
 case class KsExactPValue(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
+    extends TernaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def dataType: DataType = DoubleType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, LongType, DoubleType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected (bigint, bigint, double), got $other")
-    }
+  override def inputTypes: Seq[DataType] = Seq(LongType, LongType, DoubleType)
 
   override def nullSafeEval(na: Any, nb: Any, d: Any): Any =
     KsExactPValue.pValue(na.asInstanceOf[Long].toInt,

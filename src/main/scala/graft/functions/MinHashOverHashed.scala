@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -25,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * stays far inside int64 for the generated seeds.
   */
 case class MinHashOverHashed(child: Expression, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   // 256 is the overflow-derived bound, not a style choice: hashed
   // values are 28-bit, and at k = 255 the largest seed a = 2k + 1001 =
@@ -35,11 +34,7 @@ case class MinHashOverHashed(child: Expression, numHashes: Int)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected array<bigint> input, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   @transient private lazy val as: Array[Long] =
     Hashing.minhashSeeds(numHashes).map(_._1).toArray

@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,8 +34,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * is oracle-gated, so the DuckDB twins replay every value. The
   * `\s`/`trim`/`lower` subtleties the pins cover:
   *
-  *  - Java-regex `\s` is the ASCII set `[ \t\n\f\r]` (what the
-  *    composable `split`/`rlike` used — NOT Character.isWhitespace).
+  *  - Java-regex `\s` is the ASCII set [[ShingleTokenizer.isWs]] (what
+  *    the composable `split`/`rlike` used — NOT Character.isWhitespace).
   *  - Spark `trim` strips 0x20 SPACE only; "non-blank after trim" means
   *    "contains a char other than ' '" (a tab-only line is non-blank).
   *  - `length` counts code points (surrogate pair = 1).
@@ -50,11 +49,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    observationally identical (pinned).
   */
 object RuleKernels {
-
-  // Java-regex \s (ASCII), the class the composable split/rlike used
-  @inline private[functions] def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
-      c == '\r'
+  import ShingleTokenizer.isWs
 
   /** Word count of [st, en): runs of non-`\s` chars — equals
     * `size(filter(split(s, "\\s+"), w => w =!= ""))`. */
@@ -85,15 +80,11 @@ object RuleKernels {
   * [[RuleKernels]]. Field order matches `TextAnalysis.gopherCounts`:
   * nw, wchars, alpha, nl, bul, elll, hash, ell, stops. */
 case class GopherCounts(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = GopherCounts.schema
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   @transient private lazy val stopIdx: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer]()
@@ -116,7 +107,7 @@ case class GopherCounts(child: Expression, stopwords: Seq[String])
 }
 
 object GopherCounts {
-  import RuleKernels.isWs
+  import ShingleTokenizer.isWs
 
   // keep6 (0/1): the r1-r6 structural-gate decision over the ROUND-6
   // ratios — carried in the struct so the filter form touches ONE field
@@ -193,7 +184,7 @@ object GopherCounts {
     // distinct stop-word hits over the LOWERCASED token stream (the
     // array_distinct∩literal form counts distinct stopwords present)
     var stops = 0L
-    val toks = ShingleTokenizer.tokens(text, 1)
+    val toks = ShingleTokenizer.tokens(text)
     if (toks != null) {
       val seen = new Array[Boolean](stopIdx.size())
       var j = 0
@@ -228,7 +219,8 @@ object GopherCounts {
 /** Shared C4 line machinery: the line-filter predicate and the
   * blank-line test, exactly as the composable forms phrased them. */
 private[functions] object C4Lines {
-  import RuleKernels.{isWs, wordCount}
+  import RuleKernels.wordCount
+  import ShingleTokenizer.isWs
 
   private val Javascript = UTF8String.fromString("javascript")
 
@@ -257,15 +249,12 @@ private[functions] object C4Lines {
 /** The 5 per-document C4 counts as one struct in one scan — see
   * [[RuleKernels]]. Field order matches `TextAnalysis.c4Counts`:
   * nl, kept, sent, lorem, brace (flags as 0/1 longs). */
-case class C4Counts(child: Expression) extends UnaryExpression {
+case class C4Counts(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
 
   override def dataType: DataType = C4Counts.schema
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     C4Counts.compute(input.asInstanceOf[UTF8String])
@@ -341,15 +330,12 @@ object C4Counts {
   * non-blank lines) joined back with '\n' — value-identical to
   * `array_join(filter(filter(split(t, "\n"), trim(l) =!= ""),
   * keptPred), "\n")`. */
-case class C4KeptText(child: Expression) extends UnaryExpression {
+case class C4KeptText(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
 
   override def dataType: DataType = StringType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     C4KeptText.compute(input.asInstanceOf[UTF8String])
@@ -397,16 +383,11 @@ object C4KeptText {
   * sequence(0, ns - 1), i => concat(array_join(slice(words, i*W+1, W),
   * " "), ".")), "\n"))`. */
 case class WordWrap(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = StringType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"expected (string, int), got ($l, $r)")
-    }
+  override def inputTypes: Seq[DataType] = Seq(StringType, IntegerType)
 
   override def nullSafeEval(text: Any, w: Any): Any =
     WordWrap.compute(text.asInstanceOf[UTF8String], w.asInstanceOf[Int])
@@ -421,7 +402,7 @@ case class WordWrap(left: Expression, right: Expression)
 }
 
 object WordWrap {
-  import RuleKernels.isWs
+  import ShingleTokenizer.isWs
 
   def compute(text: UTF8String, wordsPerLine: Int): UTF8String = {
     require(wordsPerLine >= 1, s"wordsPerLine must be >= 1: $wordsPerLine")

@@ -4,8 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShim
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,18 +22,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * the DuckDB oracle side ([[Hashing.sha28Sql]]) is unchanged.
   */
 case class ShaPrefixLong(child: Expression, hexChars: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   require(hexChars > 0 && hexChars <= 15,
     s"hexChars must be in [1, 15] to fit a non-negative long, got $hexChars")
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     ShaPrefixLong.hash(input.asInstanceOf[UTF8String].getBytes, hexChars)

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -23,17 +22,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * to the `otherwise(-1)` branch, contributing -1 to EVERY bit; a NULL
   * array yields a NULL signature (null-intolerant unary). */
 case class SimHashOverHashed(child: Expression, bits: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   require(bits > 0 && bits <= 64, s"bits out of range: $bits")
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected array<bigint> input, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   override def nullSafeEval(input: Any): Any =
     SimHashOverHashed.sig(input.asInstanceOf[ArrayData], bits)

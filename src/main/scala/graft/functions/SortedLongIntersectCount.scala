@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftShim
@@ -14,30 +14,37 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * §beyond-reference ops). Sorting each document's shingle-hash array once
   * in the upstream projection turns the per-pair cost into an
   * allocation-free two-pointer walk, and `doGenCode` keeps the whole stage
-  * inside Tungsten codegen.
+  * inside Tungsten codegen by calling the same walk.
   *
   * Inputs MUST be sorted ascending and duplicate-free (use
   * `array_sort(array_distinct(...))` upstream); the result is then exactly
   * `size(array_intersect(a, b))`.
   */
 case class SortedLongIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = IntegerType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected two array<bigint> inputs, got ${left.dataType} / ${right.dataType}")
-    }
-  }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(LongType), ArrayType(LongType))
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedLongIntersectCount.compute(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      (a, b) => s"graft.functions.SortedLongIntersectCount.compute($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedLongIntersectCount {
+
+  /** The two-pointer merge walk; both arrays sorted and distinct. */
+  def compute(x: ArrayData, y: ArrayData): Int = {
     var i = 0
     var j = 0
     var c = 0
@@ -53,36 +60,6 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $i = 0, $j = 0, $c = 0;
-         |final int $nx = $a.numElements();
-         |final int $ny = $b.numElements();
-         |while ($i < $nx && $j < $ny) {
-         |  final long $xv = $a.getLong($i);
-         |  final long $yv = $b.getLong($j);
-         |  if ($xv == $yv) { $c++; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; }
-         |  else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object SortedLongIntersectCount {
   def apply(a: Column, b: Column): Column =
     GraftShim.column(SortedLongIntersectCount(
       GraftShim.expression(a), GraftShim.expression(b)))

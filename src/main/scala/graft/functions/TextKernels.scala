@@ -2,11 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShim
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,15 +32,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * accumulator; PolyHashFold of a null array is null).
   */
 case class TokenSetHits(child: Expression, words: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   @transient private lazy val set: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String]()
@@ -68,7 +61,7 @@ case class TokenSetHits(child: Expression, words: Seq[String])
 object TokenSetHits {
 
   def compute(text: UTF8String, set: java.util.HashSet[String]): Int = {
-    val toks = ShingleTokenizer.tokens(text, 1)
+    val toks = ShingleTokenizer.tokens(text)
     var hits = 0
     var i = 0
     while (i < toks.length) {
@@ -84,22 +77,11 @@ object TokenSetHits {
 
 /** Language-ID argmax over marker-word hit counts — see file scaladoc. */
 case class LangBest(child: Expression, markers: Seq[(String, Seq[String])])
-    extends UnaryExpression {
+    extends NonNullTextKernel {
 
   require(markers.nonEmpty, "LangBest needs at least one language")
 
   override def dataType: DataType = StringType
-
-  // null text resolves to the first marker language (the composable
-  // fold's seed accumulator survives every null-score comparison), so
-  // the output is never null.
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
 
   @transient private lazy val sets: Array[java.util.HashSet[String]] =
     markers.map { case (_, words) =>
@@ -117,22 +99,14 @@ case class LangBest(child: Expression, markers: Seq[(String, Seq[String])])
   @transient private lazy val langs: Array[UTF8String] =
     markers.map(m => UTF8String.fromString(m._1)).toArray
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    LangBest.compute(v.asInstanceOf[UTF8String], sets, langs)
-  }
+  override protected def evalText(text: UTF8String): Any =
+    LangBest.compute(text, sets, langs)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  override protected def computeCall(ctx: CodegenContext, text: String): String = {
     val setsRef = ctx.addReferenceObj("langSets", sets, "java.util.HashSet[]")
     val langsRef = ctx.addReferenceObj("langNames", langs,
       "org.apache.spark.unsafe.types.UTF8String[]")
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        UTF8String ${ev.value} = graft.functions.LangBest.compute(
-          ${c.isNull} ? null : ${c.value}, $setsRef, $langsRef);""",
-      isNull = FalseLiteral)
+    s"graft.functions.LangBest.compute($text, $setsRef, $langsRef)"
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -143,8 +117,10 @@ object LangBest {
 
   def compute(text: UTF8String, sets: Array[java.util.HashSet[String]],
               langs: Array[UTF8String]): UTF8String = {
+    // null text resolves to the first marker language (the composable
+    // fold's seed accumulator survives every null-score comparison)
     if (text == null) return langs(0)
-    val toks = ShingleTokenizer.tokens(text, 1)
+    val toks = ShingleTokenizer.tokens(text)
     val scores = new Array[Int](sets.length)
     var i = 0
     while (i < toks.length) {
@@ -184,15 +160,12 @@ object LangBest {
   * removals — the dominant cost of the corpus quality pass measured at
   * depth (regexp_replace alone ~15 s over 500k docs where every other
   * analysis column is sub-second). One code-point scan, no allocation. */
-case class PunctCharCount(child: Expression) extends UnaryExpression {
+case class PunctCharCount(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
 
   override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     PunctCharCount.compute(input.asInstanceOf[UTF8String])
@@ -207,10 +180,9 @@ case class PunctCharCount(child: Expression) extends UnaryExpression {
 
 object PunctCharCount {
 
-  private[functions] def isAsciiWordOrSpace(cp: Int): Boolean =
+  private def isAsciiWordOrSpace(cp: Int): Boolean =
     (cp >= 'a' && cp <= 'z') || (cp >= 'A' && cp <= 'Z') ||
-      (cp >= '0' && cp <= '9') || cp == ' ' || cp == '\t' || cp == '\n' ||
-      cp == 0x0B || cp == '\f' || cp == '\r'
+      (cp >= '0' && cp <= '9') || ShingleTokenizer.isWs(cp)
 
   def compute(text: UTF8String): Int = {
     val s = text.toString
@@ -236,15 +208,12 @@ object PunctCharCount {
   * else that is not ASCII whitespace (whitespace itself matches no
   * branch and breaks runs). One code-point scan with a 2-bit run state
   * instead of a regex walk that materializes every match. */
-case class RegexTokenCount(child: Expression) extends UnaryExpression {
+case class RegexTokenCount(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
 
   override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected a string input, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     RegexTokenCount.compute(input.asInstanceOf[UTF8String])
@@ -273,8 +242,7 @@ object RegexTokenCount {
         if (state != 1) { count += 1; state = 1 }
       } else if (cp >= '0' && cp <= '9') {
         if (state != 2) { count += 1; state = 2 }
-      } else if (cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0B ||
-          cp == '\f' || cp == '\r') {
+      } else if (ShingleTokenizer.isWs(cp)) {
         state = 0
       } else {
         // single-code-point match; also breaks any run
@@ -293,15 +261,11 @@ object RegexTokenCount {
 /** Rolling polynomial fold `(acc * mult + h) % mod` over a long array —
   * see file scaladoc. */
 case class PolyHashFold(child: Expression, mult: Long, mod: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected array<bigint> input, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   override def nullSafeEval(input: Any): Any =
     PolyHashFold.compute(input.asInstanceOf[ArrayData], mult, mod)

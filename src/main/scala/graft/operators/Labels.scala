@@ -11,10 +11,9 @@ import graft.functions.Canon.round
   * labeling: pass 1 computes the composite over all days, exact P25/P75
   * of it become literal thresholds in pass 2.
   *
-  * Scale design: z-scores use a groupBy-aggregate + broadcast join-back
-  * (not a partition-spanning window) so segment stats are computed with
-  * map-side partial aggregation and the re-attach is a broadcast hash
-  * join — no single-partition global window at any input size. The
+  * Scale design: z-scores are window aggregates partitioned by the
+  * segment key ([[groupZScores]]) — one shuffle, one pass over the input,
+  * and no single-partition global window at any input size. The
   * two-pass thresholds are 2 scalars collected to the driver, mirroring
   * the reference's own two-phase structure (`build_pbsi.py:224-253`).
   */

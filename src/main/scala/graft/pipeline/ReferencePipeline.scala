@@ -412,12 +412,9 @@ object ReferencePipeline {
       df.select(("date" +: HrCols.filter(df.columns.contains)).map(col): _*)
     val merged = (apple, zepp) match {
       case (Some(a), Some(z)) =>
-        val combined = hrPart(a).unionByName(hrPart(z), allowMissingColumns = true)
         // pandas builds agg_dict only from columns present in the concat
-        val present = HrCols.filter(combined.columns.contains)
-        val hr = combined.groupBy("date")
-          .agg(avg(present.head).as(present.head),
-            present.tail.map(c => avg(c).as(c)): _*)
+        val present = HrCols.filter(c => a.columns.contains(c) || z.columns.contains(c))
+        val hr = Unify.unionFuse(Seq(hrPart(a), hrPart(z)), present.map(c => avg(c).as(c)))
         val hrvPresent = HrvCols.filter(a.columns.contains)
         val withHrv =
           if (hrvPresent.nonEmpty)
@@ -440,11 +437,8 @@ object ReferencePipeline {
     val out = "date" +: metrics
     (apple, zepp) match {
       case (Some(a), Some(z)) =>
-        Some(a.select(out.map(col): _*)
-          .unionByName(z.select(out.map(col): _*))
-          .groupBy("date")
-          .agg(coalesce(sum(metrics.head), lit(0.0)).as(metrics.head),
-            metrics.tail.map(c => coalesce(sum(c), lit(0.0)).as(c)): _*))
+        Some(Unify.unionFuse(Seq(a.select(out.map(col): _*), z.select(out.map(col): _*)),
+          metrics.map(c => coalesce(sum(c), lit(0.0)).as(c))))
       case (a, z) => a.orElse(z).map(_.select(out.map(col): _*))
     }
   }

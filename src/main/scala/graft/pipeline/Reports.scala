@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Json
 import graft.functions.Canon.round
 
 /** Stage 6–9 artifact contract: the reference's ML6 `cv_summary.json`
@@ -147,8 +148,7 @@ object Reports {
         r.getAs[Long]("n"))
       .toMap
     val folds = cells.keys.map(_._1).toSeq.distinct.sorted
-    def jstr(v: String) = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val labelsJson = classes.map(jstr).mkString("[", ", ", "]")
+    val labelsJson = classes.map(Json.str).mkString("[", ", ", "]")
     val perFold = folds.map { f =>
       val matrix = classes.map { t =>
         classes.map(pd => cells.getOrElse((f, t, pd), 0L)).mkString("[", ", ", "]")
@@ -156,8 +156,8 @@ object Reports {
       s"""{"fold_idx": $f, "matrix": $matrix}"""
     }.mkString("[", ", ", "]")
     s"""{
-       |  "model": ${jstr(model)},
-       |  "target": ${jstr(target)},
+       |  "model": ${Json.str(model)},
+       |  "target": ${Json.str(target)},
        |  "class_labels": $labelsJson,
        |  "n_folds": ${folds.length},
        |  "per_fold": $perFold
@@ -256,25 +256,24 @@ object Reports {
     * (`run_full_pipeline.py:1334-1352`). Deterministic: no timestamps,
     * fixed key order, Double.toString rendering. */
   def cvSummaryJson(s: CvSummary): String = {
-    def jstr(v: String) = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     def jnum(d: Double) = if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15)
       fmt("%.1f", d) else d.toString
     val dist = s.classDistribution
-      .map { case (k, v) => s"${jstr(k)}: $v" }.mkString("{", ", ", "}")
+      .map { case (k, v) => s"${Json.str(k)}: $v" }.mkString("{", ", ", "}")
     val folds = s.folds.map { f =>
-      s"""{"fold": ${f.fold}, "val_start": ${jstr(f.valStart)}, "val_end": ${jstr(f.valEnd)}, """ +
+      s"""{"fold": ${f.fold}, "val_start": ${Json.str(f.valStart)}, "val_end": ${Json.str(f.valEnd)}, """ +
         s""""n_train": ${f.nTrain}, "n_val": ${f.nVal}, "f1_macro": ${jnum(f.f1Macro)}, """ +
         s""""balanced_accuracy": ${jnum(f.balancedAccuracy)}, "cohen_kappa": ${jnum(f.cohenKappa)}}"""
     }.mkString("[", ", ", "]")
-    val warnings = s.warnings.map(jstr).mkString("[", ", ", "]")
+    val warnings = s.warnings.map(Json.str).mkString("[", ", ", "]")
     s"""{
-       |  "model": ${jstr(s.model)},
-       |  "feature_set": ${jstr(s.featureSet)},
-       |  "target": ${jstr(s.target)},
-       |  "target_type": ${jstr(s.targetType)},
+       |  "model": ${Json.str(s.model)},
+       |  "feature_set": ${Json.str(s.featureSet)},
+       |  "target": ${Json.str(s.target)},
+       |  "target_type": ${Json.str(s.targetType)},
        |  "n_classes": ${s.nClasses},
        |  "class_distribution": $dist,
-       |  "cv_type": ${jstr(s"temporal_${s.folds.length}fold")},
+       |  "cv_type": ${Json.str(s"temporal_${s.folds.length}fold")},
        |  "mean_f1_macro": ${jnum(s.meanF1)},
        |  "std_f1_macro": ${jnum(s.stdF1)},
        |  "mean_balanced_accuracy": ${jnum(s.meanBa)},
@@ -282,7 +281,7 @@ object Reports {
        |  "n_samples": ${s.nSamples},
        |  "n_features": ${s.nFeatures},
        |  "folds": $folds,
-       |  "ablation_reference": ${jstr(s.ablationReference)},
+       |  "ablation_reference": ${Json.str(s.ablationReference)},
        |  "warnings": $warnings
        |}""".stripMargin
   }

@@ -56,6 +56,18 @@ class ReportsSpec extends SparkTestBase {
     assert(json === Reports.cvSummaryJson(s), "rendering must be deterministic")
   }
 
+  test("cv_summary.json stays valid JSON when a warning holds a tab and a newline") {
+    val warning = "fold 2:\tskipped\nsingle class \"b\" in C:\\val"
+    val s = CvSummary("LogisticRegression", "FS-A", "som_3class", "som", 3,
+      Seq("a" -> 4L), 4, 2,
+      Seq(FoldMetrics(0, "2024-01-01", "2024-01-05", 0, 4, 1.0, 1.0, 1.0)),
+      "docs/reports/ablation.md", Seq(warning))
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Reports.cvSummaryJson(s))
+    assert(tree.get("warnings").get(0).asText() === warning)
+    assert(tree.get("model").asText() === "LogisticRegression")
+  }
+
   test("cv_summary.json renders locale-independently (comma-decimal default locale)") {
     val folds = Seq(FoldMetrics(0, "2024-01-01", "2024-01-05", 0, 10, 1.0, 1.0, 1.0))
     val s = CvSummary("LogisticRegression", "FS-A", "som_3class", "som", 3,

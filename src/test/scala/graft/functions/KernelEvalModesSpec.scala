@@ -8,6 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkTestBase
 import graft.operators.TextAnalysis
@@ -22,9 +23,9 @@ import graft.operators.TextAnalysis
   * kernels at execution time: a local `Seq.toDF` would be folded by the
   * optimizer's `ConvertToLocalRelation`, interpreted, in both runs. They
   * cover null, empty and whitespace-only text, multi-byte and invalid
-  * UTF-8 (the tokenizers' String fallback), null arrays, empty arrays and
+  * UTF-8 (the tokenizers' malformed-input path), null arrays, empty arrays and
   * null array elements. */
-class KernelEvalModesSpec extends SparkTestBase {
+class KernelEvalModesSpec extends SparkTestBase with BeforeAndAfterAll {
 
   private def bytes(s: String): Array[Byte] = s.getBytes(UTF_8)
 
@@ -104,12 +105,13 @@ class KernelEvalModesSpec extends SparkTestBase {
       if (i == 1) null else Int.box(1 + i % 3))
   }
 
+  private lazy val dir = java.nio.file.Files.createTempDirectory("graft-evalmodes")
+
   /** The parquet-backed input: `s` is `raw` cast to string (bytes as-is,
     * so the invalid UTF-8 row stays invalid), `f` is `v` as float[] and
     * `vi` is `b` as int[] (the other element types the vector kernels
     * read), `toks` is the token array CutSpans cuts. */
   private lazy val input: DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-evalmodes")
     val path = dir.resolve("in.parquet").toString
     spark.createDataFrame(rows.asJava, schema)
       .withColumn("s", col("raw").cast("string"))
@@ -119,6 +121,11 @@ class KernelEvalModesSpec extends SparkTestBase {
       .write.parquet(path)
     spark.read.parquet(path)
   }
+
+  override def afterAll(): Unit =
+    try scala.util.Using.resource(java.nio.file.Files.walk(dir)) {
+      _.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
+    } finally super.afterAll()
 
   private def kernels: Seq[(String, Column)] = {
     val s = col("s")

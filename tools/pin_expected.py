@@ -1,44 +1,46 @@
 #!/usr/bin/env python3
 """Regenerate the pinned expected tables used by fixture-comparison
-oracles (currently d1_adwin). Dev tool (driver-side python), not part of
-the Spark engine.
+oracles. Dev tool (driver-side python), not part of the Spark engine.
 
 Run a fresh Verify dump first, then:
     python3 tools/pin_expected.py /tmp/verify_out
 
-The pinned table is the engine's own deterministic output — the oracle
-entry turns the driver's rows-only check into a rows+schema+hash
-regression gate. Regenerate ONLY after deliberately changing ADWIN
-parameters or the sf0.01 fixtures, and eyeball the diff before
-committing.
+The queries to pin are read from the dump's oracle_sql.json: every
+oracle that reads `src/test/resources/expected/<name>_sf0.01.parquet`
+(the SQL `graft.queries.Query.pinned` writes) is regenerated from the
+dump's `<name>` output. The pinned table is the engine's own
+deterministic output — the oracle entry turns the driver's rows-only
+check into a rows+schema+hash regression gate. Regenerate ONLY after
+deliberately changing a pinned query or the sf0.01 fixtures, and
+eyeball the diff before committing.
 """
+import json
+import os
+import re
 import sys
 
 import duckdb
 
-PINS = {
-    "d1_adwin": "src/test/resources/expected/d1_adwin_sf0.01.parquet",
-    "d2_ks_exact": "src/test/resources/expected/d2_ks_exact_sf0.01.parquet",
-    # deterministic id-derived XML fixture -> deterministic daily stats;
-    # pinning turns the headline ingest query's rows-only check into a
-    # full rows+schema+hash regression gate
-    "s5_xml_scan": "src/test/resources/expected/s5_xml_scan_sf0.01.parquet",
-    # both recall arms are deterministic (SHA-derived LSH planes;
-    # stored-centroid IVF serving path) -> the summary frame is pinnable
-    "sim_recall": "src/test/resources/expected/sim_recall_sf0.01.parquet",
-    # deterministic GD/tree fits (ModelsSpec pins run-to-run identity)
-    "m6_model_families": "src/test/resources/expected/m6_model_families_sf0.01.parquet",
-    # seeded MLlib KMeans on fixed data is run-to-run deterministic
-    # (verified by double-dump diff); pinning closes the last two
-    # no_oracle rows so the IVF BUILD path is rows+schema+hash-gated too
-    "sim3_ann_ivf": "src/test/resources/expected/sim3_ann_ivf_sf0.01.parquet",
-    "sim_recall_build": "src/test/resources/expected/sim_recall_build_sf0.01.parquet",
-}
+EXPECTED = "src/test/resources/expected"
+
+
+def pins(verify_out: str) -> dict:
+    """name -> repo-relative parquet path, for each pinned oracle."""
+    with open(os.path.join(verify_out, "oracle_sql.json")) as f:
+        oracles = json.load(f)
+    out = {}
+    for name, sql in sorted(oracles.items()):
+        rel = f"{EXPECTED}/{name}_sf0.01.parquet"
+        if re.search(r"read_parquet\('(?:[^']*/)?" + re.escape(rel) + r"'\)", sql):
+            out[name] = rel
+    return out
 
 
 def main(verify_out: str) -> int:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     con = duckdb.connect()
-    for name, dest in PINS.items():
+    for name, rel in pins(verify_out).items():
+        dest = os.path.join(root, rel)
         con.execute(
             # ORDER BY ALL: (col1, col2) is not a total order for
             # d2_ks_exact (two feature rows per boundary), and a partial
@@ -46,7 +48,7 @@ def main(verify_out: str) -> int:
             f"COPY (SELECT * FROM read_parquet('{verify_out}/{name}/*.parquet') "
             f"ORDER BY ALL) TO '{dest}' (FORMAT PARQUET)")
         n = con.execute(f"SELECT count(*) FROM read_parquet('{dest}')").fetchone()[0]
-        print(f"pinned {name} -> {dest} ({n} rows)")
+        print(f"pinned {name} -> {rel} ({n} rows)")
     return 0
 
 
