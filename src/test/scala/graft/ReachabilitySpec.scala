@@ -4,20 +4,20 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards against dead public surface, by a source scan (no Spark job).
-  * Every public top-level `object` under `src/main/scala`, and every
-  * public `def`/`val` of one, must be referenced by ANOTHER main source
-  * file outside comments, or be named in
-  * `src/test/resources/reachability_allowlist.txt`. Tests do not count
-  * as references. The list can only shrink: the case fails on a new
-  * unreferenced definition, and on a listed entry that is now referenced
-  * or deleted.
+/** Guards against dead public surface with a bytecode call graph
+  * ([[CallGraph]]; no Spark job). The candidates come from a source scan:
+  * every public top-level `object` under `src/main/scala`, and every
+  * public `def`/`val` of one (bytecode cannot tell `private[graft]` from
+  * public). `override` members and the objects that hold a `main` are
+  * not candidates. The graph then decides which candidates the five
+  * entry points' `main` methods reach. A candidate they do not reach must
+  * be named in `src/test/resources/reachability_allowlist.txt`, and a
+  * listed entry must be unreached and still defined. The list can only
+  * shrink.
   *
-  * Matching is by simple name, so a definition whose name occurs in any
-  * other main file counts as reached; the guard misses such dead code,
-  * but never flags live code. `override` members (reached by the
-  * framework) and `main` entry points (reached from the command line),
-  * with their objects, are not candidates. */
+  * A second case pins the product boundary: the exact set of top-level
+  * objects `RunPipeline.main` reaches
+  * (`src/test/resources/product_boundary.txt`). */
 class ReachabilitySpec extends AnyFunSuite {
 
   /** The repository root: the nearest ancestor of the working directory
@@ -69,8 +69,12 @@ class ReachabilitySpec extends AnyFunSuite {
   private val member =
     """^  (?:(?:final|implicit|lazy|@\w+)\s+)*(?:def|val|var)\s+([A-Za-z_]\w*).*""".r
 
-  /** (qualified name, simple name, file) of every candidate definition. */
-  private def candidates(sources: Map[Path, String]): Seq[(String, String, Path)] =
+  /** A public top-level object (`member` None) or a public member of one. */
+  private case class Candidate(obj: String, member: Option[String], file: Path) {
+    def name: String = obj + member.fold("")("." + _)
+  }
+
+  private def candidates(sources: Map[Path, String]): Seq[Candidate] =
     sources.toSeq.flatMap { case (file, code) =>
       val lines = code.linesIterator.toIndexedSeq
       val pkg = lines.collectFirst {
@@ -78,54 +82,92 @@ class ReachabilitySpec extends AnyFunSuite {
       }.getOrElse("")
       // the public top-level object whose body the scan is in, if any
       var owner: Option[String] = None
-      val found = Seq.newBuilder[(String, String, Path)]
+      val found = Seq.newBuilder[Candidate]
       val entryPoints = Set.newBuilder[String]
       for (line <- lines) line match {
         case topLevel(kind, name) =>
-          owner = Some(name).filter(_ =>
+          owner = Some(s"$pkg.$name").filter(_ =>
             kind == "object" && !line.startsWith("private") &&
               !line.startsWith("protected"))
-          owner.foreach(o => found += ((s"$pkg.$o", o, file)))
+          owner.foreach(o => found += Candidate(o, None, file))
         case member(name) if owner.isDefined =>
           if (name == "main") entryPoints += owner.get
-          else found += ((s"$pkg.${owner.get}.$name", name, file))
+          else found += Candidate(owner.get, Some(name), file)
         case _ =>
       }
       val mains = entryPoints.result()
-      found.result().filterNot { case (q, _, _) =>
-        mains.exists(o => q == s"$pkg.$o" || q.startsWith(s"$pkg.$o."))
-      }
+      found.result().filterNot(c => mains(c.obj))
     }
 
-  test("every public object and member is reached from another main file, or allow-listed") {
+  private val loader = getClass.getClassLoader
+
+  private lazy val mainGraph =
+    CallGraph.of(Class.forName("graft.pipeline.RunPipeline$", false, loader), "")
+
+  private val entryPoints = Seq("graft.pipeline.RunPipeline", "graft.Verify",
+    "graft.Bench", "graft.tools.ParityDump", "graft.tools.PlanAudit")
+
+  private def listed(resource: String): Set[String] =
+    Files.readAllLines(root.resolve(s"src/test/resources/$resource")).asScala
+      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSet
+
+  test("call graph: each fixture rule reaches its member, and no more") {
+    val fixture = CallGraph.of(
+      Class.forName("graft.reachfixture.FixtureMain", false, loader), "graft/reachfixture/")
+    val reach = fixture.reach(Seq(CallGraph.main("graft.reachfixture.FixtureMain")))
+    def fx(o: String) = s"graft.reachfixture.$o"
+    val hits = Seq("Direct", "Forwarded", "Lambda", "Default", "LazyInit", "EagerInit", "ByName",
+      "Virtual", "TraitDefault", "Override", "CodegenTarget").map(o => fx(o) -> "hit") :+
+      (fx("Lazy") -> "value")
+    val misses = Seq("Direct", "Override", "CodegenTarget", "Dead").map(o => fx(o) -> "miss") :+
+      (fx("DeadCaller") -> "caller")
+    val wrong = hits.filterNot { case (o, m) => reach.reached(o, Some(m)) } ++
+      misses.filter { case (o, m) => reach.reached(o, Some(m)) }
+    assert(wrong.isEmpty, s"misjudged: ${wrong.map { case (o, m) => s"$o.$m" }.mkString(", ")}")
+    assert(!reach.reached(fx("Dead"), None) && reach.reached(fx("Direct"), None))
+    // who reaches a member: Java through the forwarder, Catalyst's emitted Java
+    assert(reach.usedFrom(fx("Forwarded"), "hit") === Set("JavaCaller.java"))
+    assert(reach.usedFrom(fx("CodegenTarget"), "hit") === Set("<generated>"))
+    // a name-only javap prototype called stage 0's file selection unreached
+    val product = mainGraph.reach(Seq(CallGraph.main("graft.pipeline.RunPipeline")))
+    assert(product.reached("graft.ingest.Discovery", Some("selectByFilenameDate")))
+  }
+
+  test("public members: reached from an entry point, or listed") {
     val mainDir = root.resolve("src/main/scala")
     val files = scala.util.Using.resource(Files.walk(mainDir)) {
       _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
     }
-    val sources = files.map(f => f -> stripComments(Files.readString(f))).toMap
-    val defs = candidates(sources)
+    val defs = candidates(files.map(f => f -> stripComments(Files.readString(f))).toMap)
     // the scan must see the operator surface, or the guard is vacuous
-    assert(defs.exists(_._1 == "graft.operators.Dedup.lshCandidatesEager"),
+    assert(defs.exists(_.name == "graft.operators.Dedup.lshCandidatesEager"),
       s"scan found no Dedup.lshCandidatesEager among ${defs.size} definitions")
-    def reached(name: String, home: Path): Boolean = {
-      val ident = ("(?<![\\w$])" + java.util.regex.Pattern.quote(name) +
-        "(?![\\w$])").r
-      sources.exists { case (f, code) => f != home && ident.findFirstIn(code).nonEmpty }
-    }
-    val unreached = defs
-      .filterNot { case (_, name, home) => reached(name, home) }
-      .map(_._1).toSet
-    val listFile = root.resolve("src/test/resources/reachability_allowlist.txt")
-    val listed = Files.readAllLines(listFile).asScala.map(_.trim)
-      .filter(l => l.nonEmpty && !l.startsWith("#")).toSet
-    val fresh = (unreached -- listed).toSeq.sorted
-    val stale = (listed -- unreached).toSeq.sorted
+    val reach = mainGraph.reach(entryPoints.map(CallGraph.main))
+    val unreached = defs.filterNot(c => reach.reached(c.obj, c.member)).map(_.name).toSet
+    val listFile = "reachability_allowlist.txt"
+    val allowed = listed(listFile)
+    val fresh = (unreached -- allowed).toSeq.sorted
+    val stale = (allowed -- unreached).toSeq.sorted
     assert(fresh.isEmpty && stale.isEmpty,
-      s"\n${fresh.size} public definition(s) no other main file references " +
-        "(reference, narrow or delete each; the allow-list only shrinks):\n" +
+      s"\n${fresh.size} public definition(s) no entry point reaches " +
+        "(give each a caller, narrow or delete it; the allow-list only shrinks):\n" +
         fresh.mkString("  ", "\n  ", "\n") +
-        s"${stale.size} allow-list entry(ies) now referenced or deleted " +
-        s"(remove them from ${root.relativize(listFile)}):\n" +
+        s"${stale.size} allow-list entry(ies) now reached or deleted " +
+        s"(remove them from src/test/resources/$listFile):\n" +
         stale.mkString("  ", "\n  ", ""))
+  }
+
+  test("product boundary: the objects RunPipeline.main reaches") {
+    val reached = mainGraph.reach(Seq(CallGraph.main("graft.pipeline.RunPipeline")))
+      .topLevelObjects
+    val pinned = listed("product_boundary.txt")
+    val added = (reached -- pinned).toSeq.sorted
+    val gone = (pinned -- reached).toSeq.sorted
+    assert(added.isEmpty && gone.isEmpty,
+      s"\nRunPipeline.main now reaches ${added.size} more object(s):\n" +
+        added.mkString("  ", "\n  ", "\n") +
+        s"and no longer reaches ${gone.size}:\n" + gone.mkString("  ", "\n  ", "\n") +
+        "keep catalog code out of the product, or update " +
+        "src/test/resources/product_boundary.txt")
   }
 }
