@@ -21,7 +21,7 @@ object SparkEntry {
     queries("a13_pbsi")(spark, "/root/testdata/sf0.001")
 
   /** Every query record, names unique. */
-  lazy val all: Seq[Query] = distinctNames(EventQueries.queries ++
+  private[graft] lazy val all: Seq[Query] = distinctNames(EventQueries.queries ++
     RelationalQueries.queries ++ TextQueries.queries ++ MlQueries.queries ++
     IngestQueries.queries)
 

@@ -29,7 +29,7 @@ object Tables {
   /** Canonical post-load schemas — the dtypes every downstream operator
     * and every committed DuckDB oracle assumes. Kept in sync with the
     * observed driver testdata (LoadersSpec pins both directions). */
-  val canonical: Map[String, StructType] = Map(
+  private[graft] val canonical: Map[String, StructType] = Map(
     "region" -> StructType(Seq(
       StructField("r_regionkey", IntegerType), StructField("r_name", StringType))),
     "nation" -> StructType(Seq(
@@ -92,7 +92,7 @@ object Tables {
     * canonical order, casting any compatibly-drifted dtype back; missing
     * columns or incompatible dtypes fail with a message naming the table
     * and column (not an analysis error three operators downstream). */
-  def conform(df: DataFrame, name: String): DataFrame = {
+  private def conform(df: DataFrame, name: String): DataFrame = {
     val want = canonical(name)
     val have = df.schema
     val cols = want.fields.map { f =>

@@ -65,7 +65,7 @@ case class BpeCounts(child: Expression, merges: Seq[(String, String)])
 
 object BpeCounts {
 
-  val schema: StructType = new StructType()
+  private val schema: StructType = new StructType()
     .add("n_words", LongType, nullable = false)
     .add("n_subwords", LongType, nullable = false)
     .add("n_chars", LongType, nullable = false)

@@ -21,13 +21,13 @@ import org.apache.spark.sql.functions.lit
   * canonicalizes; [[epsifySql]] rewrites the DuckDB oracle the same way.
   */
 object Canon {
-  def eps(scale: Int): Double = math.pow(10.0, -scale) * 1e-3
+  private def eps(scale: Int): Double = math.pow(10.0, -scale) * 1e-3
 
   def round(c: Column, scale: Int): Column =
     org.apache.spark.sql.functions.round(c + lit(eps(scale)), scale)
 
-  /** Scala-side twin of [[round]] for driver/state code (streaming state
-    * machines, pinned fixtures): same epsilon shift, same HALF_UP. */
+  /** Scala-side twin of [[round]] for driver-side code (row-wise UDFs,
+    * pinned fixtures): same epsilon shift, same HALF_UP. */
   def roundDouble(v: Double, scale: Int): Double =
     BigDecimal(v + eps(scale))
       .setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble

@@ -63,7 +63,7 @@ case class CutSpans(left: Expression, right: Expression)
 
 object CutSpans {
 
-  val schema: StructType = new StructType()
+  private val schema: StructType = new StructType()
     .add("n_tokens", LongType, nullable = false)
     .add("n_kept", LongType, nullable = false)
     .add("dedup_text", StringType, nullable = false)

@@ -74,7 +74,7 @@ object HyperplaneBucket {
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
     * first 8 hex chars of SHA-256 mapped to [-1, 1). Tables > 0 seed an
     * independent plane family. */
-  def planeComponent(plane: Int, dim: Int, table: Int): Double = {
+  private def planeComponent(plane: Int, dim: Int, table: Int): Double = {
     val key = if (table == 0) s"${plane}_$dim" else s"${table}_${plane}_$dim"
     val dig = java.security.MessageDigest.getInstance("SHA-256")
       .digest(key.getBytes("UTF-8"))
@@ -84,7 +84,7 @@ object HyperplaneBucket {
   }
 
   /** numPlanes x dims component matrix for one table's plane family. */
-  def planeMatrix(numPlanes: Int, dims: Int, table: Int): Array[Array[Double]] =
+  private def planeMatrix(numPlanes: Int, dims: Int, table: Int): Array[Array[Double]] =
     Array.tabulate(numPlanes, dims)((p, d) => planeComponent(p, d, table))
 
   /** All-planes bucket value; 0 when the vector's length differs from the

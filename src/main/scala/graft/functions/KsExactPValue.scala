@@ -50,7 +50,7 @@ object KsExactPValue {
 
   /** Unscaled-DP bound: totals up to here use raw path counts (double
     * overflow bound for C(m+n, n); see class doc). */
-  val SmallTotal = 1000
+  private val SmallTotal = 1000
 
   /** scipy's MAX_AUTO_N: method='auto' computes the exact p-value while
     * max(n1, n2) <= this, asymptotic above. The rescaled DP makes the
@@ -62,7 +62,7 @@ object KsExactPValue {
       GraftShim.expression(nB), GraftShim.expression(d)))
 
   /** P(D >= d) for samples of sizes (m, n), no-ties model. */
-  def pValue(na: Int, nb: Int, d: Double): Double = {
+  private[graft] def pValue(na: Int, nb: Int, d: Double): Double = {
     require(na > 0 && nb > 0, s"ksExactPValue: empty sample ($na, $nb)")
     require(math.max(na, nb) <= ExactLimit,
       s"ksExactPValue: max(m, n) = ${math.max(na, nb)} exceeds exact cap $ExactLimit")

@@ -114,7 +114,7 @@ object GopherCounts {
   // (FilterExec does no subexpression elimination across a predicate,
   // so a conjunction over 8 struct fields would re-run the whole scan
   // per field; one precomputed decision field keeps it a single scan)
-  val schema: StructType = StructType(
+  private val schema: StructType = StructType(
     (Seq("nw", "wchars", "alpha", "nl", "bul", "elll", "hash", "ell",
       "stops") :+ "keep6").map(StructField(_, LongType, nullable = false)))
 
@@ -272,7 +272,7 @@ object C4Counts {
   // keep (0/1): the page-gate decision (>=3 sentences, no lorem ipsum,
   // no brace, >=1 kept line) — one field for the filter form, same
   // single-scan rationale as GopherCounts.keep6
-  val schema: StructType = StructType(
+  private val schema: StructType = StructType(
     Seq("nl", "kept", "sent", "lorem", "brace", "keep")
       .map(StructField(_, LongType, nullable = false)))
 

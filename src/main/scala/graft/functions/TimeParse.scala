@@ -17,7 +17,7 @@ object TimeParse {
 
   /** Default format chain: Apple " +0100" offsets, AutoExport variants,
     * bare ISO, and date-only. First match wins; null if none parse. */
-  val defaultFormats: Seq[String] = Seq(
+  private val defaultFormats: Seq[String] = Seq(
     "yyyy-MM-dd HH:mm:ss Z",
     "yyyy-MM-dd HH:mm:ssZ",
     "yyyy-MM-dd'T'HH:mm:ssXXX",

@@ -113,7 +113,7 @@ object VecKernels {
   /** Element accessor tag; -1 marks an unsupported element type (the
     * composable form's `cast("double")` over decimals rounds differently,
     * so decimals are rejected at analysis rather than silently diverging). */
-  def typeTag(et: DataType): Int = et match {
+  private[functions] def typeTag(et: DataType): Int = et match {
     case DoubleType => 0
     case FloatType => 1
     case IntegerType => 2

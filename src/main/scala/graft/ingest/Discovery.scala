@@ -18,7 +18,7 @@ object Discovery {
   private val datePattern = raw"(\d{4}-\d{2}-\d{2})".r
 
   /** Parse the first YYYY-MM-DD occurring in a filename. */
-  def filenameDate(name: String): Option[LocalDate] =
+  private def filenameDate(name: String): Option[LocalDate] =
     datePattern.findFirstIn(name).flatMap(s => Try(LocalDate.parse(s)).toOption)
 
   /** S1/O3 — deterministic selection by filename date: among candidates
@@ -40,7 +40,7 @@ object Discovery {
 
   /** S9 — Zepp table discovery: domain -> glob under the extracted cloud
     * dir; pass the result straight to `spark.read.csv(paths: _*)`. */
-  val zeppDomains: Seq[String] = Seq(
+  private val zeppDomains: Seq[String] = Seq(
     "ACTIVITY", "ACTIVITY_MINUTE", "ACTIVITY_STAGE", "HEARTRATE",
     "HEARTRATE_AUTO", "SLEEP", "SPORT", "HEALTH_DATA", "BODY", "USER")
 

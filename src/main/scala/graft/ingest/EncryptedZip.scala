@@ -22,8 +22,9 @@ import javax.crypto.{Cipher, Mac, SecretKeyFactory}
   *  - ZipCrypto: the 3-key CRC32 keystream with a 12-byte header whose
   *    last byte checks against crc32 >> 24.
   *
-  * Both verify before inflating (wrong password fails loudly, like
-  * pyzipper). Driver-side pre-step like plain [[ZipExtract]]; entry paths
+  * AES verifies before inflating; ZipCrypto checks its header byte
+  * before and the entry's CRC-32 after, so a wrong password fails loudly
+  * (like pyzipper). Driver-side pre-step like plain [[ZipExtract]]; entry paths
   * are zip-slip-sanitized the same way.
   */
 object EncryptedZip {
@@ -83,11 +84,23 @@ object EncryptedZip {
               if ((flag & 0x8) != 0) (dosTime >>> 8) & 0xff else (crc >>> 24) & 0xff
             (decryptZipCrypto(data, password, checkByte), method)
           } else (data, method)
-        val plain = realMethod match {
+        def decoded = realMethod match {
           case 0 => decrypted
           case 8 => inflateRaw(decrypted)
           case m => throw new IllegalArgumentException(s"unsupported method $m")
         }
+        // ZipCrypto's check byte passes one wrong password in 256, and
+        // nothing authenticates the payload, so the entry's CRC-32 does
+        val plain =
+          if (method == 99 || (flag & 0x1) == 0) decoded
+          else {
+            val p = scala.util.Try(decoded).toOption
+            val sum = new java.util.zip.CRC32()
+            p.foreach(sum.update)
+            require(p.isDefined && sum.getValue.toInt == crc,
+              "wrong password (ZipCrypto CRC-32 mismatch)")
+            p.get
+          }
         target.getParentFile.mkdirs()
         val fos = new FileOutputStream(target)
         try fos.write(plain) finally fos.close()

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
 object XmlRecordScan {
 
   /** Extract an XML attribute value from a record line. */
-  def attr(line: Column, name: String): Column =
+  private def attr(line: Column, name: String): Column =
     regexp_extract(line, s"""$name="([^"]*)"""", 1)
 
   /** Scan `path` for `<Record>` lines of the given `types`. Returns

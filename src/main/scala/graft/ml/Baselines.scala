@@ -26,7 +26,7 @@ import graft.functions.Canon.{round => cround}
 object Baselines {
 
   /** Most frequent training label; ties -> smallest label. */
-  def majorityClass(train: DataFrame, labelCol: String): String =
+  private def majorityClass(train: DataFrame, labelCol: String): String =
     train.groupBy(labelCol).count()
       .orderBy(col("count").desc, col(labelCol))
       .head().get(0).toString
@@ -38,7 +38,7 @@ object Baselines {
 
   /** Largest-remainder quotas for `n` slots over the train distribution:
     * (label, quota) in ascending label order. */
-  def stratifiedQuotas(train: DataFrame, labelCol: String, n: Long): Seq[(String, Long)] = {
+  private def stratifiedQuotas(train: DataFrame, labelCol: String, n: Long): Seq[(String, Long)] = {
     val counts = train.groupBy(labelCol).count()
       .collect().map(r => r.get(0).toString -> r.getAs[Long]("count"))
       .sortBy(_._1)

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
 object Models {
 
   /** Assemble feature columns into MLlib's vector column. */
-  def assemble(df: DataFrame, features: Seq[String]): DataFrame =
+  private def assemble(df: DataFrame, features: Seq[String]): DataFrame =
     new VectorAssembler()
       .setInputCols(features.toArray).setOutputCol("features")
       .setHandleInvalid("skip")
@@ -109,7 +109,7 @@ object Models {
   /** The training path of [[logisticRegressionGD]], exposed so attribution
     * ([[logisticRegressionGDAttribution]]) can reuse the identical
     * coefficients without refitting drift. */
-  def fitLogisticGD(train: DataFrame, features: Seq[String], labelCol: String,
+  private def fitLogisticGD(train: DataFrame, features: Seq[String], labelCol: String,
                     iters: Int, lr: Double): GdLrFit = {
     import graft.functions.Canon
     // the fit is 1 + iters driver actions over the train fold; checkpoint

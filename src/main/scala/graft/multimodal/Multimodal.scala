@@ -39,7 +39,7 @@ object Multimodal {
     * oracle recomputes it in SQL). Replace with a real codec (ImageIO /
     * libsndfile / FFmpeg) behind the same (bytes -> float[]) signature;
     * normalization belongs downstream. */
-  def stubDecode(payload: Array[Byte], dims: Int): Array[Float] = {
+  private def stubDecode(payload: Array[Byte], dims: Int): Array[Float] = {
     val out = new Array[Float](dims)
     var i = 0
     while (i < payload.length) {
@@ -207,7 +207,7 @@ object Multimodal {
     * library; None for anything unrecognized/truncated. Dimensions are
     * exact for lossy formats too — they live in the header, not the
     * compressed stream. */
-  def decodeImageHeader(payload: Array[Byte]): Option[ImageHeader] = {
+  private[graft] def decodeImageHeader(payload: Array[Byte]): Option[ImageHeader] = {
     if (payload == null) return None
     def u8(i: Int): Int = payload(i) & 0xff
     def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)

@@ -128,14 +128,14 @@ object Dedup {
     * cardinality attribute key (source, language, ...) whose blocks grow
     * O(n) and pair counts O(n²). Empty shingle sets hash to -1 so short
     * docs still get a (shared, tiny) block. */
-  def minhashBandKey(text: Column, shingleK: Int, numHashes: Int): Column =
+  private[graft] def minhashBandKey(text: Column, shingleK: Int, numHashes: Int): Column =
     bandKeyOverHashed(
       Hashing.hashedShingles(text, shingleK), numHashes)
 
   /** The band key over an already-hashed shingle array — the shared core
     * of [[minhashBandKey]] and [[ngramJaccardPairsBanded]], kept in one
     * place so the formula can't drift from [[minhashBandKeySql]]. */
-  def bandKeyOverHashed(hashed: Column, numHashes: Int): Column = {
+  private def bandKeyOverHashed(hashed: Column, numHashes: Int): Column = {
     val mins = graft.functions.MinHashOverHashed(hashed, numHashes)
     val parts = (0 until numHashes).map(i =>
       coalesce(element_at(mins, i + 1), lit(-1L)))
@@ -263,7 +263,7 @@ object Dedup {
     * DIFFERENT frames (id_a from `leftDocs`, id_b from `rightDocs`) —
     * the incremental-ingest shape, where the left side is a new batch
     * and the right side the existing corpus. */
-  def verifyPairsJaccardAcross(pairs: DataFrame, leftDocs: DataFrame,
+  private def verifyPairsJaccardAcross(pairs: DataFrame, leftDocs: DataFrame,
                                rightDocs: DataFrame, idCol: String,
                                textCol: String, shingleK: Int,
                                minJaccard: Double): DataFrame = {
@@ -841,7 +841,7 @@ object Dedup {
   /** [[simhashPairs]]'s lazy band-join plan over a precomputed signature
     * frame (no persist/materialization) — keeps the equi-join shape
     * visible to plan assertions. */
-  def simhashBandJoin(sigs: DataFrame, idCol: String, bits: Int, bands: Int,
+  private[graft] def simhashBandJoin(sigs: DataFrame, idCol: String, bits: Int, bands: Int,
                       maxHamming: Int): DataFrame = {
     val bandBits = bits / bands
     val mask = (1L << bandBits) - 1
@@ -1070,7 +1070,7 @@ object Dedup {
     *        every salt — parallelism becomes #blocks x saltBuckets at a
     *        bounded (x saltBuckets) shuffle cost. 1 = plain blocked join
     *        (right when blocks are many, e.g. LSH bands). */
-  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
+  private[graft] def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         blockCol: String, shingleK: Int, minJaccard: Double,
                         saltBuckets: Int = 1): DataFrame = {
     // intersect 64-bit shingle hashes, not strings: ~8x less shuffle bytes

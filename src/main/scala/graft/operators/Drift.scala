@@ -29,7 +29,7 @@ object Drift {
     ksTwoSampleBy(df, Seq(groupCol), sampleCol, valueCol)
 
   /** [[ksTwoSample]] with a composite group key. */
-  def ksTwoSampleBy(df: DataFrame, groupCols: Seq[String], sampleCol: String,
+  private def ksTwoSampleBy(df: DataFrame, groupCols: Seq[String], sampleCol: String,
                     valueCol: String): DataFrame = {
     val gcols = groupCols.map(col)
     val w = Window.partitionBy(gcols: _*).orderBy(col(valueCol))
@@ -61,7 +61,7 @@ object Drift {
     * scipy `ks_2samp`, which switches to an EXACT small-sample method;
     * the engine's contract is the asymptotic form (deterministic, both
     * engines sum the identical series in the same order). */
-  def ksPValue(d: org.apache.spark.sql.Column, nA: org.apache.spark.sql.Column,
+  private def ksPValue(d: org.apache.spark.sql.Column, nA: org.apache.spark.sql.Column,
                nB: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val en = sqrt(nA.cast("double") * nB / (nA + nB))
     val lam = (en + lit(0.12) + lit(0.11) / en) * d
@@ -83,7 +83,7 @@ object Drift {
     * MAX_AUTO_N — the rescaled DP makes the whole range computable),
     * else the asymptotic series. The reference's ±14-day boundary
     * windows always take the exact branch, as scipy does. */
-  def ksPValueAuto(d: org.apache.spark.sql.Column,
+  private def ksPValueAuto(d: org.apache.spark.sql.Column,
                    nA: org.apache.spark.sql.Column,
                    nB: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     when(greatest(nA, nB) <= lit(graft.functions.KsExactPValue.ExactLimit),

@@ -1,38 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** M2/M4/J7 — calendar cross-validation folds, feature-set ablation, and
   * static vendor priority (SURVEY §2.9, §2.3).
   */
 object Folds {
-
-  /** M2 — calendar folds: advancing (trainDays train / valDays val)
-    * windows from the timeline start. Adds `fold_id` (0-based) and `role`
-    * (train/val/none) per (fold, row) — emitted as one row per fold via a
-    * broadcast range join so a row can belong to several folds.
-    * Reference: `src/etl/ml7_analysis.py:148-235`. */
-  def calendarFolds(daily: DataFrame, dateCol: String, trainDays: Int,
-                    valDays: Int, nFolds: Int, stepDays: Int): DataFrame = {
-    val spark = daily.sparkSession
-    import spark.implicits._
-    val startRow = daily.agg(min(col(dateCol))).head()
-    require(!startRow.isNullAt(0),
-      s"calendarFolds: input has no non-null '$dateCol' rows — cannot anchor folds")
-    val start = startRow.getDate(0).toLocalDate
-    val folds = (0 until nFolds).map { f =>
-      val t0 = start.plusDays(f.toLong * stepDays)
-      val v0 = t0.plusDays(trainDays.toLong)
-      val v1 = v0.plusDays(valDays.toLong)
-      (f, java.sql.Date.valueOf(t0), java.sql.Date.valueOf(v0), java.sql.Date.valueOf(v1))
-    }.toDF("fold_id", "train_start", "val_start", "val_end")
-    daily.join(broadcast(folds),
-        col(dateCol) >= col("train_start") && col(dateCol) < col("val_end"))
-      .withColumn("role",
-        when(col(dateCol) < col("val_start"), "train").otherwise("val"))
-      .drop("train_start", "val_start", "val_end")
-  }
 
   /** M2 exact — the reference's month-based calendar folds
     * (`src/etl/ml7_analysis.py:148-235`), semantics mirrored field by
@@ -109,18 +83,6 @@ object Folds {
       .select(col("fold_id"), col("train_start"),
         col("val_start_b").as("train_end"), col("val_start_b").as("val_start"),
         col("val_end"), col("n_train"), col("n_val"))
-  }
-
-  /** M2 guard — keep only folds whose TRAIN split has at least
-    * `minClasses` distinct labels (the reference's min-2-classes scan). */
-  def foldsWithEnoughClasses(folded: DataFrame, labelCol: String,
-                             minClasses: Int): DataFrame = {
-    val ok = folded.filter(col("role") === "train")
-      .groupBy("fold_id")
-      .agg(countDistinct(col(labelCol)).as("n_classes"))
-      .filter(col("n_classes") >= minClasses)
-      .select("fold_id")
-    folded.join(broadcast(ok), Seq("fold_id"))
   }
 
   /** M4 — feature-set ablation: named column subsets (FS-A/B/C/D shape). */

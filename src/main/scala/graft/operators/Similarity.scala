@@ -28,7 +28,7 @@ object Similarity {
     * `aggregate(zip_with(x, y, p*q), 0.0, +)` form, whose ZipWith /
     * ArrayAggregate lambdas are CodegenFallback and ran interpreted per
     * element per scored pair. */
-  def dot(x: Column, y: Column): Column = graft.functions.VecDot(x, y)
+  private def dot(x: Column, y: Column): Column = graft.functions.VecDot(x, y)
 
   /** Cosine similarity of two float-array columns, computed in double. */
   def cosine(a: Column, b: Column): Column =
@@ -38,7 +38,7 @@ object Similarity {
     * sign(i, j) from the parity of SHA-256("rp|i|j") — a fixed function
     * of the coordinates, so the projection is reproducible anywhere and
     * the oracle receives the identical constants as literals. */
-  def randomProjectionSigns(dIn: Int, dOut: Int): Array[Array[Double]] =
+  private def randomProjectionSigns(dIn: Int, dOut: Int): Array[Array[Double]] =
     Array.tabulate(dOut, dIn) { (j, i) =>
       val md = java.security.MessageDigest.getInstance("SHA-256")
       if ((md.digest(s"rp|$i|$j".getBytes("UTF-8"))(0) & 1) == 0) 1.0 else -1.0
@@ -150,7 +150,7 @@ object Similarity {
     * [[graft.functions.HyperplaneBucket]]: all plane dots in one
     * codegen'd primitive loop instead of `numPlanes` interpreted
     * higher-order-function trees per vector. */
-  def lshBucket(vec: Column, numPlanes: Int, dims: Int, table: Int = 0): Column =
+  private def lshBucket(vec: Column, numPlanes: Int, dims: Int, table: Int = 0): Column =
     graft.functions.HyperplaneBucket(vec, numPlanes, dims, table)
 
   /** All tables' bucket keys for a vector as (table, bucket) structs —

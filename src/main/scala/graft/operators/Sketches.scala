@@ -31,45 +31,40 @@ import graft.functions.Hashing
 object Sketches {
 
   /** Register-count exponent: m = 2^p = 1024 registers. */
-  val P: Int = 10
-  val M: Int = 1 << P
+  private val P: Int = 10
+  private val M: Int = 1 << P
 
   /** Bits of the 60-bit [[Hashing.sha60]] hash left after the bucket
     * index is consumed; rho ranges over [1, W + 1]. */
-  val W: Int = 60 - P
+  private val W: Int = 60 - P
 
   /** 2^(W+1): the fixed-point scale that turns sum(2^-rho) into an
     * exact integer sum (each addend 2^(W+1-rho) is a positive integer,
     * and m * 2^(W+1) < 2^62 cannot overflow). */
-  val Scale: Long = 1L << (W + 1)
+  private val Scale: Long = 1L << (W + 1)
 
   /** alpha_m * m^2 * 2^(W+1) — the raw-estimate numerator, embedded as
     * one double literal (17 significant digits round-trip exactly, so
     * both engines divide the identical numerator by the identical
     * integer denominator). */
-  val RawNumerator: Double =
+  private val RawNumerator: Double =
     0.7213 / (1.0 + 1.079 / M.toDouble) * M.toDouble * M.toDouble * Scale.toDouble
   private val rawNumeratorLit: String = f"$RawNumerator%.17e"
 
-  /** (bucket, rho) register coordinates of one value — the shared core
-    * of the batch and streaming register builds. rho = leading zeros of
-    * the W-bit hash suffix + 1 = W + 1 - bitlen(w); length(bin(w)) is
-    * the exact integer bitlen in both engines (no float log2 whose
-    * boundary rounding could diverge). */
-  def registerCols(value: Column): (Column, Column) =
-    registerColsFromHash(Hashing.sha60(value))
-
-  /** [[registerCols]] over an ALREADY-computed 60-bit hash column — the
-    * shape used when the hash is taken upstream so heavier stages
-    * (distinct, shuffle) move longs instead of strings. */
-  def registerColsFromHash(h: Column): (Column, Column) = {
+  /** (bucket, rho) register coordinates of a 60-bit hash column. The
+    * hash is taken upstream so heavier stages (distinct, shuffle) move
+    * longs instead of strings. rho = leading zeros of the W-bit hash
+    * suffix + 1 = W + 1 - bitlen(w); length(bin(w)) is the exact integer
+    * bitlen in both engines (no float log2 whose boundary rounding could
+    * diverge). */
+  private def registerColsFromHash(h: Column): (Column, Column) = {
     val w = shiftright(h, P)
     (pmod(h, lit(M.toLong)),
       when(w === 0, lit(W + 1)).otherwise(lit(W + 1) - length(bin(w))))
   }
 
   /** Register table from a (grp, h) frame of 60-bit hashes. */
-  def hllRegistersFromHash(df: DataFrame): DataFrame = {
+  private def hllRegistersFromHash(df: DataFrame): DataFrame = {
     val (bucket, rho) = registerColsFromHash(col("h"))
     df.select(col("grp"), bucket.as("bucket"), rho.as("rho"))
       .groupBy("grp", "bucket").agg(max("rho").as("m_reg"))
@@ -81,7 +76,7 @@ object Sketches {
     * MAX of the groups' registers, which [[hllEstimate]] exploits and
     * SketchesSpec pins. */
   def hllRegisters(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val (bucket, rho) = registerCols(col(valueCol))
+    val (bucket, rho) = registerColsFromHash(Hashing.sha60(col(valueCol)))
     df.select(col(groupCol).as("grp"), bucket.as("bucket"), rho.as("rho"))
       .groupBy("grp", "bucket").agg(max("rho").as("m_reg"))
   }
@@ -91,14 +86,14 @@ object Sketches {
     * registers + 2^(W+1) per empty register. Small-range (linear
     * counting) correction per the HLL paper; no large-range correction
     * is needed at a 60-bit hash domain. */
-  def hllEstimate(regs: DataFrame): DataFrame =
+  private[graft] def hllEstimate(regs: DataFrame): DataFrame =
     hllEstimateBy(regs, Seq("grp"))
 
   /** [[hllEstimate]] over an arbitrary composite group key — used by the
     * pairwise overlap so pair identities stay structural columns instead
     * of an in-band concatenated string (which a '|' inside a source name
     * would corrupt). */
-  def hllEstimateBy(regs: DataFrame, groupCols: Seq[String]): DataFrame =
+  private def hllEstimateBy(regs: DataFrame, groupCols: Seq[String]): DataFrame =
     regs.groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("n_buckets_used"),
         sum(expr(s"shiftleft(CAST(1 AS BIGINT), ${W + 1} - m_reg)")).as("s_used"))
@@ -350,20 +345,20 @@ object Sketches {
   }
 
   /** Count-Min depth (independent hash rows). */
-  val CmDepth: Int = 4
+  private val CmDepth: Int = 4
 
   /** Count-Min width (cells per row). Fixture-sized so collisions are
     * real and the overestimate column is honest; at corpus scale width
     * grows (error ~ 2N/width) while the build stays one fixed-size
     * aggregate. */
-  val CmWidth: Int = 1024
+  private val CmWidth: Int = 1024
 
   private def cmCol(i: Int, g: Column): Column =
     pmod(Hashing.sha28(concat(lit(s"cm$i|"), g)), lit(CmWidth.toLong))
 
   /** The depth (row, col) cells one value hashes into — shared by the
-    * batch build, the probe side, and the streaming variant. */
-  def cmCellsOf(value: Column): Column =
+    * build and the probe side. */
+  private def cmCellsOf(value: Column): Column =
     array((0 until CmDepth).map(i =>
       struct(lit(i).as("row_i"), cmCol(i, value).as("col_i"))): _*)
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation joins for hot keys (SURVEY §7.6).
+/** Skew-mitigation join for hot keys (SURVEY §7.6).
   *
   * When one join key carries a disproportionate share of rows (one
   * participant/device with most events, or one block of an all-pairs
@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * distribution, identical results. [[Dedup.ngramJaccardPairs]] (dd18's
   * all-pairs ground truth) and [[Dedup.containmentPairs]] (t20) block
   * their pair verify through [[saltedJoin]]. (AQE's skew-join handles
-  * sort-merge cases adaptively; explicit salting covers aggregations and
-  * joins AQE can't split.)
+  * sort-merge cases adaptively; explicit salting covers the joins AQE
+  * can't split.)
   */
 object Skew {
 
@@ -35,17 +35,4 @@ object Skew {
       l.join(r, cond && col("l.__salt") === col("r.__salt"))
         .drop(col("l.__salt")).drop(col("r.__salt"))
     }
-
-  /** Salted aggregation: two-phase groupBy — partial aggregate on
-    * (key, salt), then final on key. `partials` aggregate raw columns;
-    * `finals` combine the partial columns (sums of sums, etc.). */
-  def saltedAgg(df: DataFrame, key: String, saltFactor: Int,
-                partials: Seq[Column],
-                finals: Seq[Column]): DataFrame =
-    df.withColumn("__salt",
-        pmod(xxhash64(monotonically_increasing_id()), lit(saltFactor)).cast("int"))
-      .groupBy(col(key), col("__salt"))
-      .agg(partials.head, partials.tail: _*)
-      .groupBy(col(key))
-      .agg(finals.head, finals.tail: _*)
 }

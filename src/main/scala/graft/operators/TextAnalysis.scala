@@ -23,7 +23,7 @@ object TextAnalysis {
     * heuristic. Deliberately tiny — the operator's value is its shape
     * (portable scoring + argmax with deterministic tie-break), not lexical
     * coverage. */
-  val langMarkers: Seq[(String, Seq[String])] = Seq(
+  private[graft] val langMarkers: Seq[(String, Seq[String])] = Seq(
     "de" -> Seq("der", "die", "das", "und", "nicht", "mit", "ist"),
     "en" -> Seq("the", "a", "of", "and", "to", "in", "is"),
     "es" -> Seq("el", "la", "de", "que", "y", "en", "es"),
@@ -57,7 +57,7 @@ object TextAnalysis {
   }
 
   /** English stopword list for the quality score's stopword ratio. */
-  val qualityStopwords: Seq[String] = langMarkers.toMap.apply("en")
+  private[graft] val qualityStopwords: Seq[String] = langMarkers.toMap.apply("en")
 
   /** Quality scoring: doc length, word count, mean word length, punctuation
     * ratio, stopword ratio, and a composite quality score in [0, 100].
@@ -396,7 +396,7 @@ object TextAnalysis {
     * across the corpus. One explode (map-side) + one aggregation keyed by
     * term — high-cardinality key, so the shuffle distributes evenly at
     * any corpus size. */
-  def documentFrequencies(docs: DataFrame, idCol: String,
+  private def documentFrequencies(docs: DataFrame, idCol: String,
                           textCol: String): DataFrame =
     docs.select(col(idCol), explode(array_distinct(tokens(col(textCol)))).as("term"))
       .filter(col("term") =!= "")
@@ -602,7 +602,7 @@ object TextAnalysis {
     * vocabulary tokenizes at inference. The table is a fixed literal
     * (training the table is a corpus-level count loop out of scope
     * here); later merges may reference earlier merge outputs. */
-  val bpeMerges: Seq[(String, String)] = Seq(
+  private[graft] val bpeMerges: Seq[(String, String)] = Seq(
     "e r" -> "er", "t h" -> "th", "a n" -> "an", "i n" -> "in",
     "s t" -> "st", "a r" -> "ar", "l e" -> "le", "u e" -> "ue",
     "q ue" -> "que", "v a" -> "va", "va l" -> "val", "b le" -> "ble")

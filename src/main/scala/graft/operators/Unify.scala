@@ -19,7 +19,7 @@ object Unify {
   /** J2/U2 — date spine: distinct union of the `date` columns of every
     * input, the canonical grain for all downstream joins.
     * Reference: `src/etl/stage_unify_daily.py:440-460`. */
-  def dateSpine(domains: Seq[DataFrame]): DataFrame =
+  private def dateSpine(domains: Seq[DataFrame]): DataFrame =
     domains.map(_.select(col("date"))).reduce(_ union _).distinct()
 
   /** J2 — spine + chained left joins of each domain.

@@ -14,7 +14,7 @@ import graft.operators.{Dedup, TextAnalysis}
 object CorpusPipeline {
 
   /** Drop exact duplicates (keep the minimum id per identical text). */
-  def dropExactDups(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+  private[graft] def dropExactDups(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val keep = Dedup.exactDups(docs, idCol, textCol).select(col("keep_id").as(idCol))
     docs.join(keep, Seq(idCol), "left_semi")
   }
@@ -29,7 +29,7 @@ object CorpusPipeline {
     * the band self-join, the dominant term in the measured 93 s
     * near-dedup stage at sf10g. Output pairs (and therefore the kept
     * corpus) are identical. */
-  def dropNearDups(docs: DataFrame, idCol: String, textCol: String,
+  private[graft] def dropNearDups(docs: DataFrame, idCol: String, textCol: String,
                    shingleK: Int, numHashes: Int, rowsPerBand: Int,
                    minJaccard: Double): DataFrame = {
     val verified = Dedup.lshVerifiedPairs(docs, idCol, textCol, shingleK,
@@ -40,7 +40,7 @@ object CorpusPipeline {
 
   /** Quality gate + analysis columns: keeps docs with quality_score >=
     * `minQuality`, attaches pred_lang / token counts / fingerprint. */
-  def analyze(docs: DataFrame, textCol: String, minQuality: Double): DataFrame =
+  private def analyze(docs: DataFrame, textCol: String, minQuality: Double): DataFrame =
     TextAnalysis.tokenCounts(
         TextAnalysis.qualityColumns(docs, textCol), textCol)
       .withColumn("pred_lang", TextAnalysis.langId(col(textCol)))

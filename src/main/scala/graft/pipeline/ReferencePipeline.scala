@@ -23,12 +23,12 @@ import graft.operators._
   */
 object ReferencePipeline {
 
-  val HrType = "HKQuantityTypeIdentifierHeartRate"
-  val HrvType = "HKQuantityTypeIdentifierHeartRateVariabilitySDNN"
-  val SleepType = "HKCategoryTypeIdentifierSleepAnalysis"
-  val StepsType = "HKQuantityTypeIdentifierStepCount"
-  val DistanceType = "HKQuantityTypeIdentifierDistanceWalkingRunning"
-  val EnergyType = "HKQuantityTypeIdentifierActiveEnergyBurned"
+  private[graft] val HrType = "HKQuantityTypeIdentifierHeartRate"
+  private[graft] val HrvType = "HKQuantityTypeIdentifierHeartRateVariabilitySDNN"
+  private[graft] val SleepType = "HKCategoryTypeIdentifierSleepAnalysis"
+  private[graft] val StepsType = "HKQuantityTypeIdentifierStepCount"
+  private[graft] val DistanceType = "HKQuantityTypeIdentifierDistanceWalkingRunning"
+  private[graft] val EnergyType = "HKQuantityTypeIdentifierActiveEnergyBurned"
 
   /** Apple XML sleep daily — exact `aggregate_sleep` contract
     * (`src/etl/stage_csv_aggregation.py:162-215`): per-record minutes
@@ -173,7 +173,7 @@ object ReferencePipeline {
 
   /** `_maybe_col` (`src/domains/parse_zepp_export.py:96,218,246`): the
     * first candidate name present in the frame's columns. */
-  def maybeCol(df: DataFrame, candidates: Seq[String]): Option[String] =
+  private def maybeCol(df: DataFrame, candidates: Seq[String]): Option[String] =
     candidates.find(df.columns.contains)
 
   private def emptyDaily(spark: org.apache.spark.sql.SparkSession,
@@ -508,10 +508,10 @@ object ReferencePipeline {
 
   /** The reference's ML7 z-scored feature set and prohibited-predictor
     * list (`src/etl/ml7_analysis.py:79-98`). */
-  val ml7FeatureCols: Seq[String] = Seq(
+  private val ml7FeatureCols: Seq[String] = Seq(
     "z_sleep_total_h", "z_sleep_efficiency", "z_hr_mean", "z_hrv_rmssd",
     "z_hr_max", "z_steps", "z_exercise_min")
-  val ml7AntiLeakCols: Seq[String] = Seq(
+  private val ml7AntiLeakCols: Seq[String] = Seq(
     "pbsi_score", "pbsi_quality", "sleep_sub", "cardio_sub", "activity_sub",
     "label_2cls", "label_clinical")
 

@@ -69,7 +69,7 @@ object Reports {
 
   /** Per-(fold, class) precision/recall/F1 — the rows behind the
     * reference's `per_class_*.csv` artifact. */
-  def perFoldClassMetrics(pred: DataFrame, foldCol: String, truthCol: String,
+  private[graft] def perFoldClassMetrics(pred: DataFrame, foldCol: String, truthCol: String,
                           predCol: String, classes: Seq[String]): DataFrame =
     perClassCounts(pred, foldCol, truthCol, predCol, classes)
       .select(col("fold_id"), col("label"), col("tp"), col("fp"), col("fn"),
@@ -135,7 +135,7 @@ object Reports {
     * matrix}]}` with matrix[i][j] = count(y_true=labels[i],
     * y_pred=labels[j]). One aggregation; only folds × k² cells are
     * collected. */
-  def confusionMatricesJson(pred: DataFrame, foldCol: String, truthCol: String,
+  private[graft] def confusionMatricesJson(pred: DataFrame, foldCol: String, truthCol: String,
                             predCol: String, classes: Seq[String],
                             model: String, target: String): String = {
     val cells = pred
@@ -169,7 +169,7 @@ object Reports {
     * `model,target,class_label,precision_mean,precision_std,recall_mean,
     * recall_std,f1_mean,f1_std,support_total` (std is np.std, ddof=0).
     * Input is a [[perFoldClassMetrics]] frame. */
-  def perClassCsv(perFoldClass: DataFrame, model: String, target: String): String = {
+  private[graft] def perClassCsv(perFoldClass: DataFrame, model: String, target: String): String = {
     val rows = perFoldClass.groupBy("label").agg(
       avg("precision").as("pm"), stddev_pop("precision").as("ps"),
       avg("recall").as("rm"), stddev_pop("recall").as("rs"),
@@ -195,7 +195,7 @@ object Reports {
     * cohen_kappa_std`. Each entry is (method, type, perFoldMetrics
     * frame); W8 baseline predictions feed the same [[perFoldMetrics]]
     * as the model. */
-  def baselineComparisonCsv(entries: Seq[(String, String, DataFrame)],
+  private[graft] def baselineComparisonCsv(entries: Seq[(String, String, DataFrame)],
                             target: String): String = {
     val header = "method,type,target,f1_macro_mean,f1_macro_std," +
       "balanced_accuracy_mean,balanced_accuracy_std,cohen_kappa_mean,cohen_kappa_std"
@@ -241,7 +241,7 @@ object Reports {
 
   /** Collect a [[perFoldMetrics]] frame (already per-fold-small) into the
     * fold list for [[CvSummary]]. */
-  def collectFolds(perFold: DataFrame): Seq[FoldMetrics] =
+  private def collectFolds(perFold: DataFrame): Seq[FoldMetrics] =
     perFold.orderBy("fold_id").collect().toSeq.map { r =>
       FoldMetrics(
         r.getAs[Number]("fold_id").longValue(),
@@ -255,7 +255,7 @@ object Reports {
   /** Render cv_summary.json with the reference's key set and order
     * (`run_full_pipeline.py:1334-1352`). Deterministic: no timestamps,
     * fixed key order, Double.toString rendering. */
-  def cvSummaryJson(s: CvSummary): String = {
+  private[graft] def cvSummaryJson(s: CvSummary): String = {
     def jnum(d: Double) = if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15)
       fmt("%.1f", d) else d.toString
     val dist = s.classDistribution

@@ -47,11 +47,6 @@ object Audit {
         round(col("n_violations") * 100.0 / col("n_rows"), 6))
   }
 
-  /** PASS iff no CRITICAL rule has violations (reference exit-code rule). */
-  def passed(issues: DataFrame): Boolean =
-    issues.filter(col("severity") === "CRITICAL" && col("n_violations") > 0)
-      .isEmpty
-
   /** One referential-integrity edge: `child.childKey` must resolve in
     * `parent.parentKey`. */
   case class FkEdge(name: String, child: DataFrame, childKey: String,

@@ -21,7 +21,7 @@ import graft.operators.DailyAgg
   */
 object IngestQueries {
 
-  val HrType = "HKQuantityTypeIdentifierHeartRate"
+  private val HrType = "HKQuantityTypeIdentifierHeartRate"
 
   /** Records per scale dir: sf * 20M (sf0.1 -> 2M). */
   private def recordsFor(dir: String): Long = {

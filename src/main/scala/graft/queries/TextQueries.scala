@@ -82,7 +82,7 @@ object TextQueries {
     * the seed term is a brightness shift the mean-thresholded aHash
     * mostly cancels); within a group the unit seed offsets flip a few
     * hash bits via channel carries — the near-dup regime. */
-  def mm9Media(s: SparkSession, dir: String): DataFrame = {
+  private def mm9Media(s: SparkSession, dir: String): DataFrame = {
     import graft.multimodal.Multimodal
     val media = Tables.documents(s, dir).select(col("doc_id"))
       .repartition(s.sparkContext.defaultParallelism)
@@ -113,14 +113,14 @@ object TextQueries {
 
   /** [[mm9Media]] hashed by [[graft.multimodal.Multimodal.aHash64]]:
     * one (doc_id, sig_hi, sig_lo) row per document. */
-  def mm9DocSigs(s: SparkSession, dir: String): DataFrame =
+  private def mm9DocSigs(s: SparkSession, dir: String): DataFrame =
     graft.multimodal.Multimodal.aHash64(mm9Media(s, dir), "payload")
       .select(col("doc_id"), col("sig_hi"), col("sig_lo"))
 
   /** [[mm9Media]] hashed by the WIDE 256-bit
     * [[graft.multimodal.Multimodal.aHash256]]: one
     * (doc_id, sig0..sig7) row per document — mm10's image input. */
-  def mm9WideDocSigs(s: SparkSession, dir: String): DataFrame =
+  private def mm9WideDocSigs(s: SparkSession, dir: String): DataFrame =
     graft.multimodal.Multimodal.aHash256(mm9Media(s, dir), "payload")
       .select(col("doc_id") +: (0 until 8).map(w => col(s"sig$w")): _*)
 
@@ -137,7 +137,7 @@ object TextQueries {
     * delta-energy signs — the audio near-dup regime (v=0 is the
     * identity, so each group also carries an exact collision). Returns
     * one (doc_id, n_windows, fp) row per input doc. */
-  def mm11FpsFor(docIds: DataFrame): DataFrame = {
+  private def mm11FpsFor(docIds: DataFrame): DataFrame = {
     import graft.multimodal.Multimodal
     val media = docIds.select(col("doc_id"))
       .repartition(docIds.sparkSession.sparkContext.defaultParallelism)
@@ -169,7 +169,7 @@ object TextQueries {
   }
 
   /** [[mm11FpsFor]] over the whole documents table. */
-  def mm11DocFps(s: SparkSession, dir: String): DataFrame =
+  private def mm11DocFps(s: SparkSession, dir: String): DataFrame =
     mm11FpsFor(Tables.documents(s, dir).select(col("doc_id")))
 
   /** mm12 video fixture: deterministic near-duplicate demuxed-container
@@ -191,7 +191,7 @@ object TextQueries {
     * h 1–3, 27 beyond — the video near-dup regime with negative-path
     * traffic). plen carries a g%3 tail remainder so the demux
     * drop-the-tail contract stays exercised. */
-  def mm12Media(docIds: DataFrame): DataFrame = {
+  private[graft] def mm12Media(docIds: DataFrame): DataFrame = {
     val media = docIds.select(col("doc_id"))
       .repartition(docIds.sparkSession.sparkContext.defaultParallelism)
     val outSchema = new org.apache.spark.sql.types.StructType()
@@ -236,7 +236,7 @@ object TextQueries {
     * signature stays in exact integer arithmetic, replayable by any
     * engine from the byte formula. Returns (doc_id, n_frames_sampled,
     * fp). */
-  def mm12DocFps(docIds: DataFrame): DataFrame = {
+  private[graft] def mm12DocFps(docIds: DataFrame): DataFrame = {
     import graft.multimodal.Multimodal
     val stats = Multimodal.frameStats(
       Multimodal.sampleFrames(mm12Media(docIds), stride = 1))

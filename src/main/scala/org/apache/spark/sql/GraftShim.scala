@@ -11,14 +11,4 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** Register a function builder into a LIVE session's registry —
-    * `SparkSessionExtensions` injection only applies at session
-    * construction, and `sessionState` is `private[sql]`. */
-  def registerFunction(spark: SparkSession,
-      ident: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .registerFunction(ident, info, builder)
 }

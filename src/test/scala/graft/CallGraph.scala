@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{FileSystems, Files, Path}
+import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.xbean.asm9.{ClassReader, Handle, Opcodes, Type}
@@ -11,7 +11,7 @@ import org.apache.xbean.asm9.tree.{ClassNode, FieldInsnNode, InvokeDynamicInsnNo
   * shaded ASM: nothing is loaded or initialised.
   *
   * The classes in the graph (the scope) are those under one package
-  * directory of a class directory or jar. Reaching starts from root
+  * directory of a class directory. Reaching starts from root
   * methods and follows, inside the scope:
   *  - static, special and field instructions, with the class initialiser
   *    of every class they touch (so `MODULE$` access runs an object's
@@ -26,9 +26,10 @@ import org.apache.xbean.asm9.tree.{ClassNode, FieldInsnNode, InvokeDynamicInsnNo
   *    a method of a supertype outside the scope, since that outside code
   *    (Catalyst's `eval`/`doGenCode`, `Aggregator`, `Runnable.run`) may
   *    call it;
-  *  - string constants that name a scope member as `graft.pkg.Cls.member`: the
-  *    Java that Catalyst expressions emit calls the static forwarder by
-  *    that name. A string naming a bare scope class instantiates it.
+  *  - string constants that name a scope member as
+  *    `graft.pkg.Cls.member`: the Java that Catalyst expressions emit
+  *    calls the static forwarder by that name. A string naming a bare
+  *    scope class instantiates it.
   * Default-argument getters (`$default$N`) and lazy-val initialisers
   * (`$lzycompute`) are ordinary methods their callers invoke. */
 final class CallGraph private (classes: Map[String, ClassNode]) {
@@ -209,31 +210,26 @@ object CallGraph {
   }
 
   /** The graph over every class under `pkgDir` (for example
-    * `graft/reachfixture/`, or `""` for all) of the class directory or
-    * jar that holds `anchor`. */
+    * `graft/reachfixture/`, or `""` for all) of the class directory that
+    * holds `anchor`. */
   def of(anchor: Class[_], pkgDir: String): CallGraph = {
-    val loc = java.nio.file.Paths.get(anchor.getProtectionDomain.getCodeSource.getLocation.toURI)
-    val fs = if (Files.isDirectory(loc)) None else Some(FileSystems.newFileSystem(loc))
-    try {
-      val base: Path = fs.map(_.getPath("/")).getOrElse(loc)
-      val dir = base.resolve(pkgDir)
-      val files = scala.util.Using.resource(Files.walk(dir)) {
-        _.iterator().asScala.filter(_.toString.endsWith(".class")).toList
-      }
-      val nodes = files.map { f =>
-        val n = readNode(new ClassReader(Files.readAllBytes(f)), 0)
-        n.name -> n
-      }.toMap
-      new CallGraph(nodes)
-    } finally fs.foreach(_.close())
+    val loc = Paths.get(anchor.getProtectionDomain.getCodeSource.getLocation.toURI)
+    require(Files.isDirectory(loc), s"$anchor was not loaded from a class directory: $loc")
+    val files = scala.util.Using.resource(Files.walk(loc.resolve(pkgDir))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".class")).toList
+    }
+    new CallGraph(files.map { f =>
+      val n = readNode(new ClassReader(Files.readAllBytes(f)), 0)
+      n.name -> n
+    }.toMap)
   }
 
   /** What [[CallGraph.reach]] found: each reached method with its
     * callers, the fields reached methods read, and the initialised
     * classes. */
-  final class Reach(val callers: Map[Meth, Set[Meth]],
+  final class Reach(callers: Map[Meth, Set[Meth]],
       fieldReaders: Map[(String, String), Set[Meth]],
-      val initialized: Set[String], sourceOf: String => Option[String]) {
+      initialized: Set[String], sourceOf: String => Option[String]) {
 
     /** The methods and field reads that make `cls.member` reached: a
       * method or field of that name on the object's module class `cls$`

@@ -208,26 +208,21 @@ class DriftDedupSpec extends SparkTestBase {
     rows.foreach(r => assert(r.getInt(0) === r.getInt(1)))
   }
 
-  test("A17 typed Aggregator matches the lag-window formulation") {
-    import graft.functions.SuccessiveDiffAggregator
-    import graft.functions.SuccessiveDiffAggregator.Sample
+  test("A17 successive-diff stats match a direct per-day recomputation") {
     val rnd = new scala.util.Random(3)
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val events = (0 until 200).map { i =>
-      (new java.sql.Timestamp(base + i * 60000L), 60.0 + rnd.nextGaussian() * 8)
-    }.toDF("ts", "v")
-    // window formulation
+    val samples = (0 until 200).map(i => (base + i * 60000L, 60.0 + rnd.nextGaussian() * 8))
+    val events = samples.map { case (t, v) => (new java.sql.Timestamp(t), v) }.toDF("ts", "v")
     val win = graft.operators.DailyAgg
       .successiveDiffStats(events, "ts", "v", 20.0, 10).head()
-    // typed aggregator formulation
-    val ds = events.as[(java.sql.Timestamp, Double)]
-      .map { case (t, v) => Sample(t.getTime, v) }
-    val agg = ds.groupByKey(_ => 1)
-      .agg(SuccessiveDiffAggregator.make(20.0).toColumn)
-      .head()._2
-    assert(math.abs(win.getAs[Double]("rmssd") - agg.rmssd) < 1e-4,
-      s"window ${win.getAs[Double]("rmssd")} vs agg ${agg.rmssd}")
-    assert(math.abs(win.getAs[Double]("pnn") - agg.pnnPct) < 1e-4)
+    // one day of samples, in time order: diffs, RMSSD, pNN over the n-1 diffs
+    val vs = samples.sortBy(_._1).map(_._2)
+    val diffs = vs.zip(vs.tail).map { case (x, y) => y - x }
+    val rmssd = math.sqrt(diffs.map(d => d * d).sum / diffs.size)
+    val pnn = diffs.count(d => math.abs(d) > 20.0).toDouble / diffs.size * 100.0
+    assert(math.abs(win.getAs[Double]("rmssd") - rmssd) < 1e-4,
+      s"window ${win.getAs[Double]("rmssd")} vs direct $rmssd")
+    assert(math.abs(win.getAs[Double]("pnn") - pnn) < 1e-4)
   }
 
   test("sim: brute-force top-k is deterministic and self-consistent") {

@@ -41,6 +41,24 @@ class EncryptedZipSpec extends SparkTestBase {
     }
   }
 
+  test("ZipCrypto: a wrong password that passes the check byte fails the CRC-32") {
+    assume(new java.io.File("/usr/bin/zip").exists(), "system zip not available")
+    val dir = tmpDir()
+    val src = new java.io.File(dir, "HEARTRATE.csv")
+    Files.write(src.toPath, ("time,heartRate\n2021-05-01 10:00:00,64\n" * 50).getBytes("UTF-8"))
+    val zf = new java.io.File(dir, "zepp.zip")
+    val p = new ProcessBuilder("/usr/bin/zip", "-j", "-e", "-P", "s3cret!",
+      zf.getPath, src.getPath).redirectErrorStream(true).start()
+    assert(p.waitFor() == 0, "zip -e failed")
+    // about one wrong password in 256 matches the header's check byte
+    val past = Iterator.from(0).take(5000).map { i =>
+      intercept[IllegalArgumentException] {
+        EncryptedZip.extract(zf.getPath, new java.io.File(dir, s"x$i").getPath, s"wrong$i")
+      }.getMessage
+    }.find(!_.contains("check byte"))
+    assert(past === Some("requirement failed: wrong password (ZipCrypto CRC-32 mismatch)"))
+  }
+
   // ---- spec-faithful WinZip AES (AE-2) writer, test-local ----
   private def writeAesZip(dest: java.io.File, name: String, plain: Array[Byte],
                           password: String, strength: Int,

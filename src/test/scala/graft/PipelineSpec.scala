@@ -42,24 +42,6 @@ class PipelineSpec extends SparkTestBase {
     assert(picked.get._2.select("vendor").head().getString(0) === "apple_autoexport")
   }
 
-  test("M2: calendar folds assign train/val by date range; class guard filters") {
-    val daily = (0 until 40).map { i =>
-      (java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i)),
-        if (i < 25) 0 else i % 2) // first fold's train window is single-class
-    }.toDF("d", "label")
-    val folded = Folds.calendarFolds(daily, "d", trainDays = 10, valDays = 5,
-      nFolds = 3, stepDays = 10)
-    val roles = folded.groupBy("fold_id", "role").count()
-      .collect().map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(roles((0, "train")) === 10L)
-    assert(roles((0, "val")) === 5L)
-    assert(roles((2, "train")) === 10L)
-    val guarded = Folds.foldsWithEnoughClasses(folded, "label", 2)
-    val keptFolds = guarded.select("fold_id").distinct().collect().map(_.getInt(0)).sorted
-    assert(!keptFolds.contains(0)) // fold 0 train = all label 0
-    assert(keptFolds.contains(2))
-  }
-
   test("M2 exact: month-end clamping, anchor scan, and fold skip rules") {
     // 600 days from a month-END anchor; labels mix immediately, so the
     // anchor stays at 2023-10-31 and every month-add clamps:

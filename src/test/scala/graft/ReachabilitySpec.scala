@@ -148,6 +148,14 @@ class ReachabilitySpec extends AnyFunSuite {
     val allowed = listed(listFile)
     val fresh = (unreached -- allowed).toSeq.sorted
     val stale = (allowed -- unreached).toSeq.sorted
+    val ownFileOnly = defs.collect {
+      case c @ Candidate(o, Some(m), file)
+          if reach.usedFrom(o, m) == Set(file.getFileName.toString) => c.name
+    }.sorted
+    assert(ownFileOnly.isEmpty,
+      s"\n${ownFileOnly.size} public member(s) only their own file uses (narrow " +
+        "each to private, or to private[graft] where a spec calls it):\n" +
+        ownFileOnly.mkString("  ", "\n  ", ""))
     assert(fresh.isEmpty && stale.isEmpty,
       s"\n${fresh.size} public definition(s) no entry point reaches " +
         "(give each a caller, narrow or delete it; the allow-list only shrinks):\n" +

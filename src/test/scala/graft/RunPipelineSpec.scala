@@ -450,6 +450,35 @@ class RunPipelineSpec extends SparkTestBase {
     assert(!Files.exists(Paths.get(outDir).resolve("escaped.txt")))
   }
 
+  test("RunPipeline: a wrong Zepp password is a named stage-0 failure") {
+    // SURVEY records no reference behaviour here: the run stops at stage 0
+    // with the decryptor's cause
+    val zipBin = new java.io.File("/usr/bin/zip")
+    assume(zipBin.exists(), "system zip not available")
+    val (rawRoot, outDir) = buildFixture()
+    val zeppDir = Paths.get(rawRoot, "P000001", "zepp")
+    Files.createDirectories(zeppDir)
+    val csv = Files.createTempDirectory("graft-zepp").resolve("HEARTRATE_1725105600000.csv")
+    Files.write(csv, "time,heartRate\n2024-08-30 10:00:00,64\n".getBytes("UTF-8"))
+    val zeppZip = zeppDir.resolve("3075021620_1725105600000.zip")
+    val p = new ProcessBuilder("/usr/bin/zip", "-j", "-e", "-P", "s3cret!",
+      zeppZip.toString, csv.toString).redirectErrorStream(true).start()
+    assert(p.waitFor() == 0, "zip -e failed")
+    // stage 0 selects only a Zepp ZIP modified before the snapshot's end
+    Files.setLastModifiedTime(zeppZip, java.nio.file.attribute.FileTime
+      .from(java.time.Instant.parse("2024-08-31T12:00:00Z")))
+    val (logs, jobs) = JobsSeen.recording(spark) {
+      RunPipeline.run(spark, rawRoot, "P000001", "2024-08-31", outDir,
+        RunPipeline.Config(zeppPassword = Some("wrong")))
+    }
+    assert(logs.size === 1, logs.mkString("\n"))
+    val l = logs.head
+    assert((l.stage, l.name, l.status) === ((0, "ingest", "failed")), l)
+    assert(l.detail.contains("wrong password") && !l.detail.contains("\n"), l.detail)
+    assert(!jobs.exists(_.description.startsWith("stage 1")),
+      jobs.map(_.description).distinct)
+  }
+
   test("RunPipeline: an Apple ZIP with no entries names the missing inputs") {
     // ZipInputStream reads no entry from bytes that are not an archive
     val (rawRoot, outDir) = buildFixture()

@@ -71,18 +71,6 @@ class ScaleSpec extends SparkTestBase {
     assert(salted === plain)
   }
 
-  test("salted aggregation equals plain aggregation") {
-    val df = ((1 to 3000).map(i => ("hot", i.toDouble)) ++
-      (1 to 50).map(i => ("cold", i.toDouble))).toDF("k", "v")
-    val plain = df.groupBy("k").agg(sum("v").as("s"), count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    val salted = Skew.saltedAgg(df, "k", 8,
-        partials = Seq(sum("v").as("ps"), count(lit(1)).as("pn")),
-        finals = Seq(sum("ps").as("s"), sum("pn").as("n")))
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    assert(salted === plain)
-  }
-
   test("bucketed stratum ops equal their single-window forms bit-for-bit") {
     import graft.operators.TextAnalysis
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")

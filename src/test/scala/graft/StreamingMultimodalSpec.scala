@@ -1,399 +1,13 @@
 package graft
 
-import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
-import graft.streaming.StreamingDaily
-import graft.streaming.StreamingDaily.{SessionEvent, SessionOut}
 
-/** Structured Streaming daily aggs + stateful sessionization, and the
-  * multimodal binary-column plumbing (stubbed decode). */
+/** Stateless corpus ops on a Structured Streaming frame, and the
+  * multimodal binary-column plumbing. */
 class StreamingMultimodalSpec extends SparkTestBase {
   import spark.implicits._
-
-  private def ts(s: String) = Timestamp.valueOf(s)
-
-  test("streaming A2: watermarked daily stats over a memory stream") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, Double)]
-    val df = input.toDF().toDF("ts", "user_id", "value")
-    val agg = StreamingDaily.dailyStats(df, "ts", "user_id", "value")
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName("daily_out").start()
-    try {
-      input.addData(
-        (ts("2024-01-01 08:00:00"), 1L, 10.0),
-        (ts("2024-01-01 09:00:00"), 1L, 20.0),
-        (ts("2024-01-02 08:00:00"), 1L, 30.0))
-      q.processAllAvailable()
-      val out = spark.sql("SELECT * FROM daily_out ORDER BY date").collect()
-      assert(out.length === 2)
-      assert(out(0).getAs[Double]("v_mean") === 15.0)
-      assert(out(0).getAs[Long]("n") === 2)
-      // late-ish data within watermark folds into the existing day
-      input.addData((ts("2024-01-01 23:00:00"), 1L, 30.0))
-      q.processAllAvailable()
-      val out2 = spark.sql("SELECT * FROM daily_out ORDER BY date").collect()
-      assert(out2(0).getAs[Long]("n") === 3)
-    } finally q.stop()
-  }
-
-  test("streaming A2 append mode: watermark finalizes closed days") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, Double)]
-    val df = input.toDF().toDF("ts", "user_id", "value")
-    val agg = StreamingDaily.dailyStats(df, "ts", "user_id", "value", watermark = "1 hour")
-    val q = agg.writeStream.outputMode("append")
-      .format("memory").queryName("daily_append").start()
-    try {
-      input.addData((ts("2024-01-01 08:00:00"), 1L, 10.0))
-      q.processAllAvailable()
-      // day 1 still open: nothing emitted in append mode
-      assert(spark.table("daily_append").count() === 0)
-      // event-time advances past day 1 + watermark -> day 1 finalizes
-      input.addData((ts("2024-01-02 02:00:00"), 1L, 20.0))
-      q.processAllAvailable()
-      input.addData((ts("2024-01-03 02:00:00"), 1L, 30.0))
-      q.processAllAvailable()
-      val out = spark.sql("SELECT * FROM daily_append ORDER BY date").collect()
-      assert(out.length >= 1)
-      assert(out(0).getAs[java.sql.Date]("date").toString === "2024-01-01")
-      assert(out(0).getAs[Long]("n") === 1)
-    } finally q.stop()
-  }
-
-  test("streaming HLL: register table equals batch sketch; estimate identical") {
-    import graft.operators.Sketches
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String)]
-    val df = input.toDF().toDF("ts", "term")
-    val regs = StreamingDaily.streamingHllRegisters(df, "ts", "term")
-    val q = regs.writeStream.outputMode("complete")
-      .format("memory").queryName("hll_regs").start()
-    try {
-      // two micro-batches with overlap: the max-merge must fold them
-      val b1 = (1 to 400).map(i => (ts("2024-01-01 08:00:00"), s"tok$i"))
-      val b2 = (200 to 700).map(i => (ts("2024-01-01 14:00:00"), s"tok$i"))
-      input.addData(b1)
-      q.processAllAvailable()
-      input.addData(b2)
-      q.processAllAvailable()
-      val streamRegs = spark.sql(
-        "SELECT bucket, m_reg FROM hll_regs ORDER BY bucket").collect()
-        .map(r => (r.getLong(0), r.getInt(1)))
-      // batch registers over the union of both batches
-      val batch = (b1 ++ b2).map(_._2).toDF("term").withColumn("grp", lit("d"))
-      val batchRegs = Sketches.hllRegisters(batch, "grp", "term")
-        .orderBy("bucket").collect().map(r => (r.getLong(1), r.getInt(2)))
-      assert(streamRegs.toSeq === batchRegs.toSeq,
-        "streaming register table must equal the batch sketch")
-      // estimate path: identical input registers -> identical estimate
-      val est = Sketches.hllEstimate(
-          spark.table("hll_regs").select(lit("d").as("grp"), col("bucket"),
-            col("m_reg")))
-        .select("hll_estimate").collect().head.getDouble(0)
-      val batchEst = Sketches.hllEstimate(Sketches.hllRegisters(batch, "grp", "term"))
-        .select("hll_estimate").collect().head.getDouble(0)
-      assert(est === batchEst)
-      assert(math.abs(est - 700.0) / 700.0 < 0.1, s"estimate $est vs 700 distinct")
-    } finally q.stop()
-  }
-
-  test("streaming Count-Min: cell table equals the batch sketch build") {
-    import graft.operators.Sketches
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String)]
-    val df = input.toDF().toDF("ts", "term")
-    val cells = StreamingDaily.streamingCountMinCells(df, "ts", "term")
-    val q = cells.writeStream.outputMode("complete")
-      .format("memory").queryName("cm_cells").start()
-    try {
-      input.addData((1 to 300).map(i => (ts("2024-01-01 08:00:00"), s"w${i % 40}")))
-      q.processAllAvailable()
-      input.addData((1 to 200).map(i => (ts("2024-01-01 14:00:00"), s"w${i % 25}")))
-      q.processAllAvailable()
-      val stream = spark.sql(
-        "SELECT row_i, col_i, cell FROM cm_cells ORDER BY row_i, col_i").collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      // batch cells over the union stream: explode each occurrence
-      val batch = ((1 to 300).map(i => s"w${i % 40}") ++
-          (1 to 200).map(i => s"w${i % 25}")).toDF("term")
-        .select(explode(Sketches.cmCellsOf(col("term"))).as("rc"))
-        .groupBy(col("rc.row_i").as("row_i"), col("rc.col_i").as("col_i"))
-        .agg(count(lit(1)).as("cell"))
-        .orderBy("row_i", "col_i").collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      assert(stream.toSeq === batch.toSeq)
-    } finally q.stop()
-  }
-
-  test("streaming D5: per-window PSI against a fixed reference, hand-computed") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Double)]
-    val df = input.toDF().toDF("ts", "value")
-    val psi = StreamingDaily.streamingPsi(df, "ts", "value",
-      refBoundaries = Seq(10.0), refShares = Seq(0.5, 0.5))
-    val q = psi.writeStream.outputMode("complete")
-      .format("memory").queryName("psi_out").start()
-    try {
-      input.addData(
-        // day 1 matches the reference 50/50 split -> PSI 0
-        (ts("2024-01-01 08:00:00"), 5.0), (ts("2024-01-01 09:00:00"), 15.0),
-        // day 2 drifts to 75/25 -> PSI = -0.25*ln(2/3) + 0.25*ln(2)
-        (ts("2024-01-02 08:00:00"), 5.0), (ts("2024-01-02 09:00:00"), 5.0),
-        (ts("2024-01-02 10:00:00"), 5.0), (ts("2024-01-02 11:00:00"), 15.0))
-      q.processAllAvailable()
-      val out = spark.sql("SELECT * FROM psi_out ORDER BY date").collect()
-      assert(out.length === 2)
-      assert(out(0).getAs[Double]("psi") === 0.0)
-      assert(out(0).getAs[Long]("n") === 2L)
-      assert(out(1).getAs[Double]("psi") === 0.274653)
-      assert(out(1).getAs[Long]("n") === 4L)
-    } finally q.stop()
-  }
-
-  test("streaming W4: stateful gap sessionization across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SessionEvent]
-    val sessions = StreamingDaily.sessionize(input.toDS(), gapSeconds = 3600)
-    val q = sessions.writeStream.outputMode("append")
-      .format("memory").queryName("sessions_out").start()
-    try {
-      input.addData(
-        SessionEvent(1L, ts("2024-01-01 08:00:00"), 1.0),
-        SessionEvent(1L, ts("2024-01-01 08:30:00"), 2.0))
-      q.processAllAvailable()
-      // gap > 1h in a later micro-batch closes the first session
-      input.addData(SessionEvent(1L, ts("2024-01-01 12:00:00"), 5.0))
-      q.processAllAvailable()
-      val closed = spark.table("sessions_out").as[SessionOut].collect()
-      assert(closed.length === 1)
-      assert(closed(0).n_events === 2)
-      assert(closed(0).value_sum === 3.0)
-    } finally q.stop()
-  }
-
-  test("streaming D6: CUSUM fold == reference recursion; split-invariant; restarts after alarm") {
-    import StreamingDaily.{CusumEvent, CusumState, cusumStep}
-    val mu = 2.0; val kappa = 0.5; val h = 4.0
-    val vals = Seq(2.0, 2.1, 1.9, 6.0, 6.0, 2.0, 2.0, 7.0, 7.0)
-    val evs = vals.zipWithIndex.map { case (v, i) =>
-      CusumEvent(1L, ts(f"2024-01-01 08:00:${i}%02d"), v) }
-    // reference recursion with post-alarm restart
-    var s = 0.0; var alarms = 0
-    vals.foreach { v =>
-      s = math.max(0.0, s + v - mu - kappa)
-      if (s > h) { alarms += 1; s = 0.0 } }
-    val (stAll, outAll) = cusumStep(1L, evs, None, mu, kappa, h)
-    // hand-trace: 6.0,6.0 fires (3.5+3.5), resets; 7.0 fires (4.5),
-    // resets; the second 7.0 fires again on fresh evidence
-    assert(outAll.length === alarms && alarms === 3)
-    assert(stAll.get.nSeen === vals.length)
-    assert(math.abs(stAll.get.s - s) < 1e-12)
-    // arbitrary micro-batch split replays to the identical alarm set
-    (1 until evs.length).foreach { cut =>
-      val (st1, o1) = cusumStep(1L, evs.take(cut), None, mu, kappa, h)
-      val (st2, o2) = cusumStep(1L, evs.drop(cut), st1, mu, kappa, h)
-      assert(o1 ++ o2 === outAll, s"split at $cut diverged")
-      assert(st2 === stAll)
-    }
-  }
-
-  test("streaming interval join: cross-batch pairing equals the batch join, bound respected") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val buys = MemoryStream[(Long, Timestamp)]
-    val joined = StreamingDaily.streamingIntervalJoin(
-      clicks.toDS().toDF("user_id", "ts"), buys.toDS().toDF("user_id", "ts"),
-      "user_id", "ts", windowSecs = 3600, watermarkDelay = "2 hours")
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("sj_out").start()
-    try {
-      clicks.addData((1L, ts("2024-01-01 10:00:00")), (2L, ts("2024-01-01 10:00:00")))
-      q.processAllAvailable()
-      // purchases arrive in a LATER micro-batch; the buffered left state
-      // still pairs them — that's the stream-stream join's whole point
-      buys.addData(
-        (1L, ts("2024-01-01 10:30:00")), // inside the hour
-        (1L, ts("2024-01-01 12:30:00")), // outside the bound
-        (2L, ts("2024-01-01 09:30:00")), // before the click
-        (3L, ts("2024-01-01 10:30:00"))) // no matching click key
-      q.processAllAvailable()
-      val got = spark.table("sj_out")
-        .select("user_id", "left_ts", "right_ts").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).toString,
-          r.getTimestamp(2).toString)).toSet
-      assert(got === Set(
-        (1L, "2024-01-01 10:00:00.0", "2024-01-01 10:30:00.0")))
-    } finally q.stop()
-  }
-
-  test("streaming D6: end-to-end alarms over a memory stream") {
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingDaily.{CusumAlarm, CusumEvent}
-    val input = MemoryStream[CusumEvent]
-    val alarms = StreamingDaily.streamingCusum(input.toDS(), mu = 1.0,
-      kappa = 0.2, h = 3.0)
-    val q = alarms.writeStream.outputMode("append")
-      .format("memory").queryName("cusum_out").start()
-    try {
-      input.addData(
-        CusumEvent(1L, ts("2024-01-01 08:00:00"), 1.0),
-        CusumEvent(1L, ts("2024-01-01 08:00:01"), 1.1))
-      q.processAllAvailable()
-      assert(spark.table("cusum_out").count() === 0)
-      // the shift arrives in a later micro-batch; state carries the fold
-      input.addData(
-        CusumEvent(1L, ts("2024-01-01 08:00:02"), 4.0),
-        CusumEvent(1L, ts("2024-01-01 08:00:03"), 4.0))
-      q.processAllAvailable()
-      val got = spark.table("cusum_out").as[CusumAlarm].collect()
-      assert(got.length === 1)
-      assert(got(0).user_id === 1L && got(0).n_seen === 4L)
-    } finally q.stop()
-  }
-
-  test("streaming W4: idle-timeout flush path — pure state machine") {
-    import StreamingDaily.{sessionFlush, sessionStep, SessionState}
-    // batch 1: two events 30min apart -> one open session, nothing emitted
-    val (st1, out1) = sessionStep(1L, Seq(
-      SessionEvent(1L, ts("2024-01-01 08:00:00"), 1.0),
-      SessionEvent(1L, ts("2024-01-01 08:30:00"), 2.0)), None, gapSeconds = 3600)
-    assert(out1.isEmpty)
-    assert(st1.count === 2 && st1.sum === 3.0)
-    // idle timeout fires -> the open session flushes with closed=false
-    val flushed = sessionFlush(1L, st1)
-    assert(flushed === Some(StreamingDaily.SessionOut(1L, 1L, 2L, 3.0, closed = false)))
-    // empty state (key seen but no events folded) flushes nothing
-    assert(sessionFlush(1L, SessionState(0L, Long.MinValue, 0L, 0.0)) === None)
-    // a later batch after a gap closes the session instead (closed=true)
-    val (st2, out2) = sessionStep(1L,
-      Seq(SessionEvent(1L, ts("2024-01-01 12:00:00"), 5.0)), Some(st1), 3600)
-    assert(out2 === Seq(StreamingDaily.SessionOut(1L, 1L, 2L, 3.0, closed = true)))
-    assert(st2.sessionId === 2L && st2.count === 1L)
-  }
-
-  test("streaming W4: timeout tombstone preserves session numbering; second timeout reclaims") {
-    import StreamingDaily.{sessionStep, sessionTimeout, SessionState}
-    val (st1, _) = sessionStep(1L, Seq(
-      SessionEvent(1L, ts("2024-01-01 08:00:00"), 1.0)), None, gapSeconds = 3600)
-    assert(st1.sessionId === 1L)
-    // first timeout: session 1 flushes, counter survives in a tombstone
-    val (tomb, out) = sessionTimeout(1L, st1)
-    assert(out === Some(StreamingDaily.SessionOut(1L, 1L, 1L, 1.0, closed = false)))
-    assert(tomb.exists(t => t.sessionId === 1L && t.count === 0L))
-    // the key resumes: the next session is 2, NOT a duplicate 1
-    val (st2, out2) = sessionStep(1L,
-      Seq(SessionEvent(1L, ts("2024-01-01 12:00:00"), 5.0)), tomb, 3600)
-    assert(out2.isEmpty && st2.sessionId === 2L && st2.count === 1L)
-    // second consecutive timeout on a tombstone: nothing to flush, state dropped
-    assert(sessionTimeout(1L, tomb.get) === ((None, None)))
-  }
-
-  test("streaming dedup: first arrival kept, later duplicates dropped across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, String)]
-    val df = input.toDF().toDF("ts", "doc_id", "text")
-    val deduped = StreamingDaily.streamingExactDedup(df, "ts", "text")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_out").start()
-    try {
-      input.addData(
-        (ts("2024-01-01 08:00:00"), 1L, "alpha beta"),
-        (ts("2024-01-01 09:00:00"), 2L, "gamma delta"))
-      q.processAllAvailable()
-      // a duplicate of doc 1 in a LATER micro-batch must be dropped
-      input.addData(
-        (ts("2024-01-01 10:00:00"), 3L, "alpha beta"),
-        (ts("2024-01-01 11:00:00"), 4L, "epsilon"))
-      q.processAllAvailable()
-      val out = spark.sql("SELECT doc_id FROM dedup_out ORDER BY doc_id")
-        .collect().map(_.getLong(0)).toSeq
-      assert(out == Seq(1L, 2L, 4L), s"got $out")
-    } finally q.stop()
-  }
-
-  test("streaming near-dup: same-simhash variants dropped, distinct docs kept") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, String)]
-    val df = input.toDF().toDF("ts", "doc_id", "text")
-    val deduped = StreamingDaily.streamingSimhashDedup(df, "ts", "text")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("simdedup_out").start()
-    try {
-      input.addData(
-        (ts("2024-01-01 08:00:00"), 1L, "alpha beta gamma delta"),
-        (ts("2024-01-01 09:00:00"), 2L, "wholly different tokens here"))
-      q.processAllAvailable()
-      // reordered token multiset -> identical simhash -> dropped in a
-      // later micro-batch; a genuinely distinct doc passes
-      input.addData(
-        (ts("2024-01-01 10:00:00"), 3L, "delta gamma beta alpha"),
-        (ts("2024-01-01 11:00:00"), 4L, "unrelated fresh content"))
-      q.processAllAvailable()
-      val out = spark.sql("SELECT doc_id, sim_sig FROM simdedup_out ORDER BY doc_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(out.map(_._1).toSeq == Seq(1L, 2L, 4L), s"got ${out.toSeq}")
-      // the emitted signature matches the batch operator's (one engine,
-      // two execution modes — downstream banding composes either way)
-      val batchSig = spark.createDataFrame(Seq(Tuple1("alpha beta gamma delta")))
-        .toDF("text")
-        .select(graft.operators.Dedup.simhashOverHashed(
-          graft.operators.Dedup.hashedTokens(org.apache.spark.sql.functions.col("text")), 64))
-        .collect().head.getLong(0)
-      assert(out.find(_._1 == 1L).map(_._2).contains(batchSig))
-    } finally q.stop()
-  }
-
-  test("streaming near-dup: state rows EVICT once the watermark passes the horizon") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, String)]
-    val df = input.toDF().toDF("ts", "doc_id", "text")
-    val deduped = StreamingDaily.streamingSimhashDedup(df, "ts", "text",
-      watermark = "1 day")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("simdedup_evict").start()
-    def stateRows: Long = {
-      // last progress entry that actually ran the stateful operator
-      val ps = q.recentProgress.filter(_.stateOperators.nonEmpty)
-      assert(ps.nonEmpty, "no stateful progress recorded")
-      ps.last.stateOperators.head.numRowsTotal
-    }
-    try {
-      // 3 distinct signatures on Jan 1 -> 3 state entries
-      input.addData(
-        (ts("2024-01-01 08:00:00"), 1L, "alpha beta"),
-        (ts("2024-01-01 09:00:00"), 2L, "gamma delta"),
-        (ts("2024-01-01 10:00:00"), 3L, "epsilon zeta"))
-      q.processAllAvailable()
-      val afterB1 = stateRows
-      assert(afterB1 === 3L, s"expected 3 state rows after batch 1, got $afterB1")
-      // Jan 10 arrival: the data batch itself still carries the old
-      // watermark, so its progress reports the peak of 4 state rows;
-      // the watermark then advances to Jan 9 08:00 and the engine's
-      // follow-up (no-data) batch evicts every Jan 1 entry (expiry =
-      // arrival + 1 day <= Jan 2 10:00). processAllAvailable spans both,
-      // so we see peak 4 in the progress history and 1 at the end.
-      // This is the empirical half of the dropDuplicatesWithinWatermark
-      // contract: bounded state, not just API shape.
-      input.addData((ts("2024-01-10 08:00:00"), 4L, "eta theta"))
-      q.processAllAvailable()
-      val peak = q.recentProgress.filter(_.stateOperators.nonEmpty)
-        .map(_.stateOperators.head.numRowsTotal).max
-      assert(peak === 4L, s"expected peak of 4 state rows (3 old + 1 new), got $peak")
-      val afterB2 = stateRows
-      assert(afterB2 === 1L,
-        s"expected Jan-1 state evicted (1 row: doc 4), got $afterB2")
-      // a further in-horizon arrival grows state again — eviction didn't
-      // just wipe everything
-      input.addData((ts("2024-01-10 09:00:00"), 5L, "iota kappa"))
-      q.processAllAvailable()
-      val afterB3 = stateRows
-      assert(afterB3 === 2L,
-        s"expected 2 in-horizon state rows (docs 4 and 5), got $afterB3")
-    } finally q.stop()
-  }
 
   test("streaming corpus ops: quality gate + chunking run stateless on a stream") {
     implicit val sqlCtx = spark.sqlContext
@@ -716,176 +330,6 @@ class StreamingMultimodalSpec extends SparkTestBase {
     // (n_frames, fp) keys than the 8 frame-count blocks
     assert(fps.values.toSet.size > 50,
       "fingerprint space saturated — fixture regressed to mm9's seed-only trap")
-  }
-
-  test("streaming funnel: pure state machine — order, window, dedupe, completion") {
-    import StreamingDaily.{funnelStep, FunnelEvent, FunnelState}
-    val steps = Seq("view", "click", "buy")
-    // out-of-order arrival within a batch is sorted by event time: the
-    // click BEFORE the first view doesn't advance
-    val (st1, out1) = funnelStep(1L, Seq(
-      FunnelEvent(1L, ts("2024-01-01 10:05:00"), "click"),
-      FunnelEvent(1L, ts("2024-01-01 10:00:00"), "click"),
-      FunnelEvent(1L, ts("2024-01-01 10:02:00"), "view")),
-      None, steps, withinSecs = Some(3600L))
-    assert(out1.map(o => (o.step_idx, o.step)) === Seq((0L, "view"), (1L, "click")))
-    assert(st1.exists(_.stepIdx === 1))
-    // a buy in the NEXT batch advances from carried state; a second buy
-    // after completion emits nothing (state retained, no re-entry)
-    val (st2, out2) = funnelStep(1L, Seq(
-      FunnelEvent(1L, ts("2024-01-01 10:30:00"), "buy"),
-      FunnelEvent(1L, ts("2024-01-01 10:40:00"), "buy")),
-      st1, steps, withinSecs = Some(3600L))
-    assert(out2.map(_.step_idx) === Seq(2L))
-    assert(st2.exists(_.stepIdx === 2))
-    val (st3, out3) = funnelStep(1L, Seq(
-      FunnelEvent(1L, ts("2024-01-01 10:50:00"), "view")),
-      st2, steps, withinSecs = Some(3600L))
-    assert(out3.isEmpty && st3 === st2)
-    // conversion window: a buy past anchor+1h does NOT advance
-    val (_, out4) = funnelStep(2L, Seq(
-      FunnelEvent(2L, ts("2024-01-01 10:00:00"), "view"),
-      FunnelEvent(2L, ts("2024-01-01 10:10:00"), "click"),
-      FunnelEvent(2L, ts("2024-01-01 11:30:00"), "buy")),
-      None, steps, withinSecs = Some(3600L))
-    assert(out4.map(_.step_idx) === Seq(0L, 1L))
-    // equal timestamp does not satisfy strictly-after
-    val (_, out5) = funnelStep(3L, Seq(
-      FunnelEvent(3L, ts("2024-01-01 10:00:00"), "view"),
-      FunnelEvent(3L, ts("2024-01-01 10:00:00"), "click")),
-      None, steps, None)
-    assert(out5.map(_.step_idx) === Seq(0L))
-    // a user who never enters holds no state
-    val (stNone, outNone) = funnelStep(4L, Seq(
-      FunnelEvent(4L, ts("2024-01-01 10:00:00"), "click")),
-      None, steps, None)
-    assert(stNone.isEmpty && outNone.isEmpty)
-  }
-
-  test("streaming funnel: end-to-end over a memory stream across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingDaily.{FunnelEvent, FunnelOut}
-    val input = MemoryStream[FunnelEvent]
-    val out = StreamingDaily.streamingFunnel(input.toDS(),
-      Seq("view", "click", "buy"))
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("funnel_out").start()
-    try {
-      input.addData(
-        FunnelEvent(1L, ts("2024-01-01 10:00:00"), "view"),
-        FunnelEvent(2L, ts("2024-01-01 10:00:00"), "click")) // u2 never enters
-      q.processAllAvailable()
-      input.addData(
-        FunnelEvent(1L, ts("2024-01-01 10:05:00"), "click"),
-        FunnelEvent(1L, ts("2024-01-01 10:06:00"), "buy"),
-        FunnelEvent(2L, ts("2024-01-01 10:10:00"), "view"))
-      q.processAllAvailable()
-      val rows = spark.table("funnel_out").as[FunnelOut].collect()
-      val byStep = rows.groupBy(_.step_idx).view.mapValues(_.map(_.user_id).toSet).toMap
-      assert(byStep === Map(
-        0L -> Set(1L, 2L), 1L -> Set(1L), 2L -> Set(1L)))
-    } finally q.stop()
-  }
-
-  test("chaos replay: simhash dedup under out-of-order arrivals and beyond-watermark lateness") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, String)]
-    val df = input.toDF().toDF("ts", "doc_id", "text")
-    val deduped = StreamingDaily.streamingSimhashDedup(df, "ts", "text",
-      watermark = "1 day")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("simdedup_chaos").start()
-    def emitted: Seq[Long] =
-      spark.sql("SELECT doc_id FROM simdedup_chaos ORDER BY doc_id")
-        .collect().map(_.getLong(0)).toSeq
-    try {
-      // batch 1: two distinct signatures
-      input.addData(
-        (ts("2024-01-01 08:00:00"), 1L, "alpha beta"),
-        (ts("2024-01-01 09:00:00"), 2L, "gamma delta"))
-      q.processAllAvailable()
-      assert(emitted === Seq(1L, 2L))
-      // batch 2: LATE out-of-order duplicate of sig A — event time EARLIER
-      // than the already-emitted copy but inside the watermark horizon ->
-      // dropped, no emission
-      input.addData((ts("2024-01-01 07:00:00"), 3L, "alpha beta"))
-      q.processAllAvailable()
-      assert(emitted === Seq(1L, 2L))
-      // batch 3: fresh signature 9 days later advances the watermark to
-      // Jan 9 08:00 and evicts every Jan-1 state entry
-      input.addData((ts("2024-01-10 08:00:00"), 4L, "epsilon zeta"))
-      q.processAllAvailable()
-      assert(emitted === Seq(1L, 2L, 4L))
-      // batch 4: sig A re-arrives AFTER its state's horizon passed ->
-      // re-emits (the documented horizon-bounded contract); a late
-      // within-watermark duplicate of sig C is still dropped
-      input.addData(
-        (ts("2024-01-09 23:00:00"), 5L, "alpha beta"),
-        (ts("2024-01-10 07:00:00"), 6L, "epsilon zeta"))
-      q.processAllAvailable()
-      assert(emitted === Seq(1L, 2L, 4L, 5L))
-      // batch-equivalence on the surviving set: a batch dedup over the
-      // same rows keyed (signature, 1-day event-time session) keeps
-      // {A: Jan1 group + Jan9 group, B: 1, C: 1} = 4 survivors — the
-      // streaming surviving set has exactly that per-signature shape
-      // (which arrival represents a group differs: batch keeps the
-      // event-time min, the stream keeps the first ARRIVAL).
-      assert(emitted.size === 4)
-    } finally q.stop()
-  }
-
-  test("chaos replay: streaming funnel vs batch replay under disorder and lateness") {
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingDaily.{FunnelEvent, FunnelOut}
-    val steps = Seq("view", "click", "buy")
-    val input = MemoryStream[FunnelEvent]
-    val out = StreamingDaily.streamingFunnel(input.toDS(), steps)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("funnel_chaos").start()
-    try {
-      // u1: disorder WITHIN each batch (sorted by event time before
-      // folding) + a stale re-delivered view in batch 2
-      input.addData(
-        FunnelEvent(1L, ts("2024-01-01 10:05:00"), "click"),
-        FunnelEvent(1L, ts("2024-01-01 10:00:00"), "view"),
-        // u2: steps arrive across batches in fully REVERSED order
-        FunnelEvent(2L, ts("2024-01-01 10:20:00"), "buy"))
-      q.processAllAvailable()
-      input.addData(
-        FunnelEvent(1L, ts("2024-01-01 10:01:00"), "view"), // late re-delivery
-        FunnelEvent(1L, ts("2024-01-01 10:06:00"), "buy"),
-        FunnelEvent(2L, ts("2024-01-01 10:10:00"), "click"))
-      q.processAllAvailable()
-      input.addData(FunnelEvent(2L, ts("2024-01-01 10:00:00"), "view"))
-      q.processAllAvailable()
-      val rows = spark.table("funnel_chaos").as[FunnelOut].collect()
-      val got = rows.groupBy(_.user_id).view
-        .mapValues(_.map(_.step_idx).toSet).toMap
-      // the batch oracle: the SAME pure state machine replayed over each
-      // user's full event set in one sorted pass
-      def batchReplay(uid: Long, evs: Seq[FunnelEvent]): Set[Long] =
-        StreamingDaily.funnelStep(uid, evs, None, steps, None)
-          ._2.map(_.step_idx).toSet
-      val u1Batch = batchReplay(1L, Seq(
-        FunnelEvent(1L, ts("2024-01-01 10:05:00"), "click"),
-        FunnelEvent(1L, ts("2024-01-01 10:00:00"), "view"),
-        FunnelEvent(1L, ts("2024-01-01 10:01:00"), "view"),
-        FunnelEvent(1L, ts("2024-01-01 10:06:00"), "buy")))
-      // u1's disorder was batch-local -> streaming == batch replay exactly
-      assert(got(1L) === u1Batch)
-      assert(got(1L) === Set(0L, 1L, 2L))
-      // u2's cross-batch reversal exceeds the funnel's reordering
-      // tolerance: the stream can only enter at the (late) view — the
-      // surviving emissions are a monotone PREFIX of the batch replay,
-      // never phantom steps
-      val u2Batch = batchReplay(2L, Seq(
-        FunnelEvent(2L, ts("2024-01-01 10:20:00"), "buy"),
-        FunnelEvent(2L, ts("2024-01-01 10:10:00"), "click"),
-        FunnelEvent(2L, ts("2024-01-01 10:00:00"), "view")))
-      assert(u2Batch === Set(0L, 1L, 2L))
-      assert(got(2L) === Set(0L))
-      assert(got(2L).subsetOf(u2Batch))
-    } finally q.stop()
   }
 
   test("multimodal REAL decode: decodeHeaders null-pads unparseable payloads") {
