@@ -69,7 +69,6 @@ object ByName {
 /** Virtual dispatch: `Square.area` runs only through `Shape.area`. */
 trait Shape { def area: Double }
 class Square extends Shape { def area: Double = Virtual.hit() }
-class Circle extends Shape { def area: Double = 0.0 }
 
 object Virtual {
   def hit(): Double = 7.0
