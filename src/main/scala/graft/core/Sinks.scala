@@ -9,9 +9,7 @@ import org.apache.spark.sql.DataFrame
   * `src/etl/stage_csv_aggregation.py:1176-1186`).
   *
   * Contract outputs (small daily tables) are written as a SINGLE file to
-  * preserve the reference's file-per-table layout; scale outputs use
-  * [[writePartitioned]] which keeps Spark's parallel writers and
-  * partition pruning.
+  * preserve the reference's file-per-table layout.
   */
 object Sinks {
 
@@ -59,11 +57,6 @@ object Sinks {
     finally out.close()
     backupAndRename(fs, tmp, tgt)
   }
-
-  /** Scale-path sink: parquet partitioned by the given columns (snapshot /
-    * participant / date become physical partitions => partition pruning). */
-  def writePartitioned(df: DataFrame, target: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(target)
 
   /** Write-guard (the reference's data/ai protection): refuse targets
     * under protected prefixes. */

@@ -25,20 +25,26 @@ object Models {
       .setHandleInvalid("skip")
       .transform(df)
 
+  /** sklearn's class_weight="balanced" as a per-row weight column
+    * expression: w_c = n / (k * n_c) over `train`'s k label classes. */
+  private def balancedWeight(train: DataFrame, labelCol: String): Column = {
+    val counts = train.groupBy(col(labelCol)).count().collect()
+      .map(r => r.get(0) -> r.getLong(1)).toMap
+    val n = counts.values.sum.toDouble
+    val k = counts.size.toDouble
+    counts.foldLeft(lit(1.0)) { case (acc, (label, c)) =>
+      when(col(labelCol) === label, lit(n / (k * c))).otherwise(acc)
+    }
+  }
+
   /** Fit class-balanced logistic regression on `train`, predict `test`.
     * Class weights mirror sklearn's class_weight="balanced":
     * w_c = n / (k * n_c). */
   def logisticRegression(train: DataFrame, test: DataFrame,
                          features: Seq[String], labelCol: String,
                          maxIter: Int = 100): DataFrame = {
-    val counts = train.groupBy(col(labelCol)).count().collect()
-      .map(r => r.get(0) -> r.getLong(1)).toMap
-    val n = counts.values.sum.toDouble
-    val k = counts.size.toDouble
-    val weightExpr = counts.foldLeft(lit(1.0)) { case (acc, (label, c)) =>
-      when(col(labelCol) === label, lit(n / (k * c))).otherwise(acc)
-    }
-    val trainA = assemble(train, features).withColumn("w", weightExpr)
+    val trainA = assemble(train, features)
+      .withColumn("w", balancedWeight(train, labelCol))
     val model = new LogisticRegression()
       .setLabelCol(labelCol).setFeaturesCol("features").setWeightCol("w")
       .setMaxIter(maxIter).setRegParam(0.01)
@@ -261,37 +267,10 @@ object Models {
     * "balanced": w_c = n / (k * n_c). Multiclass trains one-vs-rest. */
   def linearSvc(train: DataFrame, test: DataFrame, features: Seq[String],
                 labelCol: String, maxIter: Int = 100,
-                regParam: Double = 0.01): DataFrame = {
-    val counts = train.groupBy(col(labelCol)).count().collect()
-      .map(r => r.get(0) -> r.getLong(1)).toMap
-    val n = counts.values.sum.toDouble
-    val k = counts.size.toDouble
-    val weightExpr = counts.foldLeft(lit(1.0)) { case (acc, (label, c)) =>
-      when(col(labelCol) === label, lit(n / (k * c))).otherwise(acc)
-    }
-    fitMarginLearner(train.withColumn("w", weightExpr),
+                regParam: Double = 0.01): DataFrame =
+    fitMarginLearner(train.withColumn("w", balancedWeight(train, labelCol)),
       test.withColumn("w", lit(1.0)), features, labelCol,
       new LinearSVC().setMaxIter(maxIter).setRegParam(regParam)
         .setWeightCol("w"),
       weightCol = Some("w"))
-  }
-
-  /** M6 — per-class precision/recall/F1 + macro-F1 from (y_true, y_pred),
-    * as pure aggregation (the oracle-checked formulation). */
-  def macroF1(pred: DataFrame, labelCol: String): Double = {
-    val classes = pred.select(col(labelCol)).distinct().collect().map(_.get(0))
-    val f1s = classes.map { c =>
-      val row = pred.agg(
-        sum(when(col(labelCol) === c && col("y_pred") === c, 1).otherwise(0)).as("tp"),
-        sum(when(col(labelCol) =!= c && col("y_pred") === c, 1).otherwise(0)).as("fp"),
-        sum(when(col(labelCol) === c && col("y_pred") =!= c, 1).otherwise(0)).as("fn"))
-        .head()
-      val (tp, fp, fn) = (row.getLong(0).toDouble, row.getLong(1).toDouble,
-        row.getLong(2).toDouble)
-      val p = if (tp + fp > 0) tp / (tp + fp) else 0.0
-      val r = if (tp + fn > 0) tp / (tp + fn) else 0.0
-      if (p + r > 0) 2 * p * r / (p + r) else 0.0
-    }
-    f1s.sum / f1s.length
-  }
 }

@@ -675,33 +675,19 @@ object Dedup {
   /** dd17 — per-group quota (the FineWeb/RefinedWeb source-capping
     * recipe): keep at most `n` rows per group, best-first by `order`
     * (with the id as the final tie-break, so the cut is total and both
-    * engines agree). Corpus curation at scale caps boilerplate-heavy
-    * domains so no single source dominates the training mix.
+    * engines agree). Corpus curation caps boilerplate-heavy domains so
+    * no single source dominates the training mix.
     *
-    * TWO-PHASE top-N: a single `row_number` window per group would sort
-    * each whole group in one task — a hot domain with 10^8 docs is a
-    * straggler at 100 TB. Phase 1 ranks inside (group, SHA-bucket of id)
-    * partitions and keeps n per bucket — any true global top-n row is
-    * necessarily within the top n of its own bucket, so pruning is
-    * lossless; phase 2 ranks the ≤ numBuckets·n survivors per group.
-    * No task ever sorts a whole group; a hot source costs the same as a
-    * cold one after phase 1. Output keeps all input columns plus
+    * One `row_number` window per group, the same definition the dd17 and
+    * dd29 oracles spell out. Output keeps all input columns plus
     * `grp_rank` (1..n within the group). */
   def capPerGroup(df: DataFrame, groupCol: String, idCol: String,
-                  order: Seq[Column], n: Int,
-                  numBuckets: Int = 64): DataFrame = {
+                  order: Seq[Column], n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(n >= 1, s"cap n must be >= 1, got $n")
-    require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
-    val ordered = order :+ col(idCol).asc
-    val bucket = pmod(Hashing.sha28(col(idCol)), lit(numBuckets))
-    val w1 = Window.partitionBy(col(groupCol), bucket).orderBy(ordered: _*)
-    val w2 = Window.partitionBy(col(groupCol)).orderBy(ordered: _*)
-    df.withColumn("__cap_rk", row_number().over(w1))
-      .filter(col("__cap_rk") <= n)
-      .withColumn("grp_rank", row_number().over(w2).cast("long"))
+    val w = Window.partitionBy(col(groupCol)).orderBy(order :+ col(idCol).asc: _*)
+    df.withColumn("grp_rank", row_number().over(w).cast("long"))
       .filter(col("grp_rank") <= n)
-      .drop("__cap_rk")
   }
 
   /** SimHash over token 28-bit hashes with `bits` bits: per bit, sign of
@@ -1015,17 +1001,17 @@ object Dedup {
     * Ground truth is ALL-PAIRS exact Jaccard, so the caller must pass a
     * bounded (deterministically sampled) doc frame — same eval-query
     * contract as sim1's documented O(Q·N). The all-pairs stage reuses
-    * [[ngramJaccardPairs]] under a single constant block, salted across
-    * `saltBuckets` so the quadratic verify still spreads over every core
-    * instead of one hot partition.
+    * [[ngramJaccardPairs]] under a single constant block; its salted join
+    * spreads the quadratic verify over every core instead of one hot
+    * partition.
     *
     * found ⊆ truth by construction (banding only removes pairs), so
     * `cand_precision` = how much of the candidate volume survives exact
     * verification, and `recall` = the fraction of true pairs the banding
     * keeps. */
   def bandedJaccardQuality(docs: DataFrame, idCol: String, textCol: String,
-                           shingleK: Int, bandHashes: Int, minJaccard: Double,
-                           saltBuckets: Int = 32): DataFrame = {
+                           shingleK: Int, bandHashes: Int,
+                           minJaccard: Double): DataFrame = {
     val keyed = docs.select(col(idCol), col(textCol))
     val nDocs = keyed.agg(count(lit(1)).as("n_docs"))
     // Shingle-less docs all share the sentinel block (coalesce of null
@@ -1045,7 +1031,7 @@ object Dedup {
         col("l.block") === col("r.block") && col(s"l.$idCol") < col(s"r.$idCol"))
       .agg(count(lit(1)).as("n_cand"))
     val truth = ngramJaccardPairs(keyed.withColumn("__all", lit(0)),
-        idCol, textCol, "__all", shingleK, minJaccard, saltBuckets = saltBuckets)
+        idCol, textCol, "__all", shingleK, minJaccard)
       .agg(count(lit(1)).as("n_true"))
     val found = ngramJaccardPairsBanded(keyed, idCol, textCol, shingleK,
         bandHashes, minJaccard)
@@ -1059,20 +1045,20 @@ object Dedup {
           col("n_found").cast("double") / col("n_true")), 6).as("recall"))
   }
 
+  /** Salt factor of the pair verifies' [[Skew.saltedJoin]]: their one
+    * constant block would otherwise put every pair in one task. */
+  private val PairSalt = 32
+
   /** Exact n-gram Jaccard similarity for pairs blocked by `blockCol`
-    * (pairs are only formed within a block — at scale the block key is an
-    * LSH band or a cluster id, never the whole corpus). The safe plan for
-    * an unbounded corpus is the blocked equi-join (one shuffle on the
-    * block key); nothing is broadcast unless AQE measures a side small.
-    *  @param saltBuckets fan out the blocked join when blocks are few and
-    *        large: [[Skew.saltedJoin]] salts the probe side by
-    *        `hash(id) % saltBuckets` and replicates the build side to
-    *        every salt — parallelism becomes #blocks x saltBuckets at a
-    *        bounded (x saltBuckets) shuffle cost. 1 = plain blocked join
-    *        (right when blocks are many, e.g. LSH bands). */
+    * (pairs are only formed within a block). The blocked equi-join is
+    * salted by `PairSalt` through [[Skew.saltedJoin]]: the probe side
+    * takes `hash(id) % PairSalt` and the build side is replicated to
+    * every salt, so a few large blocks still spread over every core, at
+    * a bounded (x PairSalt) shuffle cost. Nothing is broadcast unless
+    * AQE measures a side small. */
   private[graft] def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                        blockCol: String, shingleK: Int, minJaccard: Double,
-                        saltBuckets: Int = 1): DataFrame = {
+                        blockCol: String, shingleK: Int,
+                        minJaccard: Double): DataFrame = {
     // intersect 64-bit shingle hashes, not strings: ~8x less shuffle bytes
     // and integer equality in the pairwise intersect hot loop. The SHA hash
     // is shared with the oracle, so the (collision-negligible) semantics
@@ -1100,7 +1086,7 @@ object Dedup {
       col(s"l.$idCol") < col(s"r.$idCol") &&
       sizeRatioPrune(col("l.nsh"), col("r.nsh"), minJaccard)
     val joined = Skew.saltedJoin(withSets.repartition(par),
-      withSets.repartition(par), blockCond, hash(col(idCol)), saltBuckets)
+      withSets.repartition(par), blockCond, hash(col(idCol)), PairSalt)
     jaccardTail(
       joined.select(
         col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
@@ -1113,9 +1099,9 @@ object Dedup {
     * near 1 when A is quoted/embedded inside B even when their Jaccard
     * is tiny, the doc-in-doc signal symmetric near-dup misses (the
     * quote/subset-detection filter of a training-data pipeline). Same
-    * one-hash-pass, [[Skew.saltedJoin]] salting and no-op aggregation
-    * boundary as [[ngramJaccardPairs]]; emits BOTH directions per
-    * unordered pair and keeps pairs where either direction clears
+    * one-hash-pass, `PairSalt`-way [[Skew.saltedJoin]] salting and no-op
+    * aggregation boundary as [[ngramJaccardPairs]]; emits BOTH directions
+    * per unordered pair and keeps pairs where either direction clears
     * `minContainment`.
     *
     * Two deliberate differences from the Jaccard path: (1) NO size-ratio
@@ -1127,8 +1113,8 @@ object Dedup {
     * inverted-index blocking for subset mining (as the t20 query's
     * absolute SHA-rank sample does). */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       blockCol: String, shingleK: Int, minContainment: Double,
-                       saltBuckets: Int = 1): DataFrame = {
+                       blockCol: String, shingleK: Int,
+                       minContainment: Double): DataFrame = {
     val withSets = docs.select(
         col(blockCol), col(idCol),
         hashedShingleSet(col(textCol), shingleK).as("sh"))
@@ -1139,7 +1125,7 @@ object Dedup {
     val blockCond = col(s"l.$blockCol") === col(s"r.$blockCol") &&
       col(s"l.$idCol") < col(s"r.$idCol")
     val joined = Skew.saltedJoin(withSets.repartition(par),
-      withSets.repartition(par), blockCond, hash(col(idCol)), saltBuckets)
+      withSets.repartition(par), blockCond, hash(col(idCol)), PairSalt)
     joined.select(
         col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
         inter.as("i"), col("l.nsh").as("na"), col("r.nsh").as("nb"))

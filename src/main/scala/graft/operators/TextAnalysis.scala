@@ -412,27 +412,18 @@ object TextAnalysis {
     * term-count side); top-k is one window partitioned by doc. N is a
     * driver scalar (single count — the A13/class-weight two-phase
     * pattern), not a per-row subquery. Ties rank by term for determinism.
-    *
-    * The IDF attach broadcasts only while the measured vocabulary fits
-    * `broadcastVocabLimit` — vocabulary grows with the corpus (Heaps'
-    * law), so at 100 TB of multilingual web text it can exceed any
-    * broadcast budget; past the limit the attach stays a plain shuffled
-    * equi-join on the high-cardinality term key (even split, no driver
-    * pressure). The vocab count is a driver scalar — the same two-phase
-    * pattern as N — and its pass is over the already-partial-aggregated
-    * term key. Only the two counts run eagerly; the returned frame is
-    * lazy, and PlanSpec asserts the broadcast-IDF join shape on it.
+    * Only the N count runs eagerly; the returned frame is lazy, and
+    * PlanSpec asserts the broadcast-IDF join shape on it.
     */
   def tfIdfTopK(docs: DataFrame, idCol: String, textCol: String,
-                k: Int, broadcastVocabLimit: Long = 1000000L): DataFrame = {
+                k: Int): DataFrame = {
     // Two lazy branches over the corpus scan (term counts for the probe,
     // documentFrequencies for the broadcast IDF) beat persisting the
     // (doc, term) table: that intermediate is LARGER than the compressed
-    // columnar scan it would save, at bench scale (measured 2x slower
-    // persisted) and at 100 TB alike. Parquet re-scan is the cheap side.
-    val idf = documentFrequencies(docs, idCol, textCol)
-    val idfSide = if (idf.count() <= broadcastVocabLimit) broadcast(idf) else idf
-    scoreAndRank(termCounts(docs, idCol, textCol), idfSide, idCol,
+    // columnar scan it would save (measured 2x slower persisted at bench
+    // scale). Parquet re-scan is the cheap side.
+    scoreAndRank(termCounts(docs, idCol, textCol),
+      broadcast(documentFrequencies(docs, idCol, textCol)), idCol,
       docs.count(), k)
   }
 
@@ -444,8 +435,7 @@ object TextAnalysis {
 
   /** df stays an AGGREGATION on term (partial aggregation absorbs
     * stopword skew; a window over term would not), then re-attaches onto
-    * the term counts (hinted broadcast or plain equi-join — the caller
-    * decides by measured vocabulary size). */
+    * the term counts through the caller's broadcast hint. */
   private def scoreAndRank(tf: DataFrame, idf: DataFrame, idCol: String,
                            n: Long, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -469,30 +459,25 @@ object TextAnalysis {
     *
     * Scale shape: token counts are one aggregation on the term key; the
     * unigram table is vocabulary-sized and re-attaches onto the exploded
-    * corpus — hinted broadcast while the measured vocabulary fits
-    * `broadcastVocabLimit`, a plain shuffled equi-join on the
-    * high-cardinality term key past it (Heaps' law: vocabulary grows
-    * with the corpus, so 100-TB multilingual text can exceed any
-    * broadcast budget); the per-doc mean is one aggregation on the doc
-    * id. Smoothing keeps out-of-vocabulary tokens finite, so the model
-    * table can also be FIT on a sample and APPLIED to the full corpus.
+    * corpus through a broadcast hint; the per-doc mean is one aggregation
+    * on the doc id. Smoothing keeps out-of-vocabulary tokens finite, so
+    * the model table can also be FIT on a sample and APPLIED to the full
+    * corpus.
     * Returns (id, n_tokens, avg_logp) with avg_logp = mean over tokens of
     * ln((count(token) + 1) / (total_tokens + vocab)), rounded; docs with
     * no tokens get null avg_logp. */
-  def unigramLogProb(docs: DataFrame, idCol: String, textCol: String,
-                     broadcastVocabLimit: Long = 1000000L): DataFrame = {
+  def unigramLogProb(docs: DataFrame, idCol: String,
+                     textCol: String): DataFrame = {
     val exploded = docs
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
       .filter(col("term") =!= "")
     val model = exploded.groupBy("term").agg(count(lit(1)).as("cnt"))
     // two scalars (total token count, vocabulary size) — the A13-style
     // two-phase pattern; both are single-row aggregates of the model.
-    // The vocab scalar doubles as the broadcast-vs-shuffle decision.
     val totals = model.agg(sum("cnt"), count(lit(1))).head()
     val total = totals.getLong(0)
     val vocab = totals.getLong(1)
-    val modelSide = if (vocab <= broadcastVocabLimit) broadcast(model) else model
-    val scored = exploded.join(modelSide, "term")
+    val scored = exploded.join(broadcast(model), "term")
       .withColumn("logp",
         log((col("cnt") + 1.0) / lit(total.toDouble + vocab)))
     docs.select(col(idCol))
@@ -518,11 +503,10 @@ object TextAnalysis {
     *
     * Same scale shape as [[unigramLogProb]]: one aggregation on the term
     * key over the REFERENCE (usually orders of magnitude smaller than
-    * the corpus), vocabulary-adaptive broadcast-vs-shuffle attach onto
-    * the exploded corpus, one aggregation on the doc id. */
+    * the corpus), broadcast attach onto the exploded corpus, one
+    * aggregation on the doc id. */
   def unigramCrossScore(refDocs: DataFrame, docs: DataFrame, idCol: String,
-                        textCol: String,
-                        broadcastVocabLimit: Long = 1000000L): DataFrame = {
+                        textCol: String): DataFrame = {
     val refTerms = refDocs
       .select(explode(tokens(col(textCol))).as("term"))
       .filter(col("term") =!= "")
@@ -533,11 +517,10 @@ object TextAnalysis {
     val total = if (totals.isNullAt(0)) 0L else totals.getLong(0)
     val vocab = totals.getLong(1)
     val denom = math.max(total + vocab, 1L).toDouble
-    val modelSide = if (vocab <= broadcastVocabLimit) broadcast(model) else model
     val exploded = docs
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
       .filter(col("term") =!= "")
-    val scored = exploded.join(modelSide, Seq("term"), "left")
+    val scored = exploded.join(broadcast(model), Seq("term"), "left")
       .withColumn("logp",
         log((coalesce(col("cnt"), lit(0L)) + 1.0) / lit(denom)))
     docs.select(col(idCol))
@@ -555,13 +538,10 @@ object TextAnalysis {
     * the reference's unigram vocabulary size V, with c1(w1) = w1's
     * occurrences as a bigram head. OOV heads take the 1/V floor. Bigrams
     * are the k=2 word shingles (shared helper with the dedup family), so
-    * the oracle reuses the proven shingle SQL. Model attach is
-    * size-adaptive like t5/t8's: broadcast below the vocab limit, plain
-    * equi-join above it (bigram vocabularies outgrow broadcast even
-    * faster than unigram ones). */
+    * the oracle reuses the proven shingle SQL. The bigram and head tables
+    * attach through broadcast hints, like t5/t8's vocabulary tables. */
   def bigramCrossScore(refDocs: DataFrame, docs: DataFrame, idCol: String,
-                       textCol: String,
-                       broadcastVocabLimit: Long = 1000000L): DataFrame = {
+                       textCol: String): DataFrame = {
     val refBi = refDocs.select(explode(Dedup.shingles(col(textCol), 2)).as("bi"))
     val model = refBi.groupBy("bi").agg(count(lit(1)).as("cbi"))
     val heads = refBi
@@ -573,15 +553,11 @@ object TextAnalysis {
       .select(explode(tokens(col(textCol))).as("term"))
       .filter(col("term") =!= "")
       .agg(countDistinct("term")).head().getLong(0), 1L)
-    val nBigramsRef = model.agg(count(lit(1))).head().getLong(0)
-    val (modelSide, headsSide) =
-      if (nBigramsRef <= broadcastVocabLimit) (broadcast(model), broadcast(heads))
-      else (model, heads)
     val scored = docs
       .select(col(idCol), explode(Dedup.shingles(col(textCol), 2)).as("bi"))
       .withColumn("head", element_at(split(col("bi"), " "), 1))
-      .join(modelSide, Seq("bi"), "left")
-      .join(headsSide, Seq("head"), "left")
+      .join(broadcast(model), Seq("bi"), "left")
+      .join(broadcast(heads), Seq("head"), "left")
       .withColumn("logp",
         log((coalesce(col("cbi"), lit(0L)) + 1.0) /
           (coalesce(col("c1"), lit(0L)) + lit(vocab))))
@@ -842,72 +818,25 @@ object TextAnalysis {
        |FROM $from d LEFT JOIN scored s USING ($idCol)""".stripMargin
   }
 
-  /** SHA-prefix bucket id: the numeric value of the first `hexLen` hex
-    * chars of sha256(id). Because the bucket is a PREFIX of the
-    * (sha, id) sort key, ordering by (bucket, sha, id) is identical to
-    * ordering by (sha, id): rows in a lower bucket sort strictly before
-    * every row of a higher bucket, and within a bucket the shared prefix
-    * cancels. That is what lets the stratum-ordered ops below window
-    * within (stratum, bucket) — bounding any one task's sort to
-    * ~stratum/16^hexLen rows — and recover the global order with a
-    * broadcast of per-bucket starting offsets. */
-  private def shaBucket(sha: Column, hexLen: Int): Column =
-    conv(substring(sha, 1, hexLen), 16, 10).cast("long")
-
   /** Deterministic stratified corpus sample: within each stratum, rank
     * rows by SHA-256 of the id (a portable, seedless "random" order that
     * any engine reproduces) and keep ceil(frac × stratum size). The
     * data-mixing primitive of a training-data pipeline — per-source /
     * per-language quotas with bit-reproducible output.
     *
-    * Scale shape (hierarchical prefix sum): strata are languages/sources
-    * — a handful of values — so a single window per stratum would sort
-    * 40% of a 100-TB corpus in one task. Instead each stratum is split
-    * into 16^bucketHexLen SHA-prefix buckets; a tiny per-(stratum,
-    * bucket) count aggregate yields every bucket's starting rank (an
-    * exclusive prefix sum over ≤ strata × 16^hexLen rows) and the
-    * stratum total, broadcast back; the expensive window then runs
-    * within (stratum, bucket) only. Identical output to the
-    * single-window form ([[stratifiedSamplePlain]], equality pinned in
-    * ScaleSpec) because the bucket is a prefix of the sort key. */
+    * Plan: one window per stratum, ordered by (sha, id), gives both the
+    * rank and the stratum size; strata are a handful of languages or
+    * sources, so each stratum's sort runs in one task. */
   def stratifiedSample(docs: DataFrame, idCol: String, stratumCol: String,
-                       frac: Double, bucketHexLen: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(bucketHexLen >= 1 && bucketHexLen <= 8,
-      s"stratifiedSample: bucketHexLen $bucketHexLen not in [1, 8]")
-    val tagged = docs
-      .withColumn("__g_sha", sha2(col(idCol).cast("string"), 256))
-      .withColumn("__g_bkt", shaBucket(col("__g_sha"), bucketHexLen))
-    val byStratum = Window.partitionBy(col(stratumCol))
-    val offsets = tagged.groupBy(col(stratumCol), col("__g_bkt"))
-      .agg(count(lit(1)).as("__g_cnt"))
-      .withColumn("__g_off", coalesce(sum(col("__g_cnt")).over(
-        byStratum.orderBy(col("__g_bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__g_quota",
-        ceil(lit(frac) * sum(col("__g_cnt")).over(byStratum)))
-      .drop("__g_cnt")
-    val wInBucket = Window.partitionBy(col(stratumCol), col("__g_bkt"))
-      .orderBy(col("__g_sha"), col(idCol))
-    tagged.join(broadcast(offsets), Seq(stratumCol, "__g_bkt"))
-      .withColumn("__g_rk", col("__g_off") + row_number().over(wInBucket))
-      .filter(col("__g_rk") <= col("__g_quota"))
-      .select(docs.columns.map(col).toIndexedSeq: _*)
-  }
-
-  /** Single-window form of [[stratifiedSample]] — the reference shape the
-    * bucketed plan must reproduce bit-for-bit (ScaleSpec). Not for 100-TB
-    * use: one task sorts an entire stratum. */
-  private[graft] def stratifiedSamplePlain(docs: DataFrame, idCol: String,
-      stratumCol: String, frac: Double): DataFrame = {
+                       frac: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byStratum = Window.partitionBy(col(stratumCol))
     val rk = row_number().over(
       byStratum.orderBy(sha2(col(idCol).cast("string"), 256), col(idCol)))
     val quota = ceil(lit(frac) * count(lit(1)).over(byStratum))
-    docs.withColumn("rk", rk).withColumn("quota", quota)
-      .filter(col("rk") <= col("quota"))
-      .drop("rk", "quota")
+    docs.withColumn("__g_rk", rk).withColumn("__g_quota", quota)
+      .filter(col("__g_rk") <= col("__g_quota"))
+      .drop("__g_rk", "__g_quota")
   }
 
   /** Deterministic sequence packing: assign documents to fixed
@@ -917,47 +846,13 @@ object TextAnalysis {
     * SHA-256 order, and a document's shard is its exclusive cumulative
     * token offset divided by the budget. Documents larger than the
     * budget still get the shard where their offset lands (greedy
-    * first-fit-in-order, the standard approximation).
+    * first-fit-in-order, the standard approximation). The offset is one
+    * running-sum window per stratum.
     * Returns docs + (n_tokens, shard_id). */
   def packIntoShards(docs: DataFrame, idCol: String, textCol: String,
-                     stratumCol: String, budgetTokens: Long,
-                     bucketHexLen: Int = 2): DataFrame = {
+                     stratumCol: String, budgetTokens: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(budgetTokens > 0, s"packIntoShards: budget $budgetTokens <= 0")
-    require(bucketHexLen >= 1 && bucketHexLen <= 8,
-      s"packIntoShards: bucketHexLen $bucketHexLen not in [1, 8]")
-    // Hierarchical prefix sum (see shaBucket): the exclusive cumulative
-    // token count decomposes into (tokens in all lower SHA-prefix buckets
-    // of the stratum) + (exclusive cumsum within this bucket). The first
-    // term is a tiny aggregate broadcast back; the second is a window
-    // bounded by the bucket, so no task ever sorts a whole stratum.
-    val counted = docs
-      .withColumn("n_tokens",
-        size(graft.functions.ShingleStrings(col(textCol), 1, dropEmpty = true)).cast("long"))
-      .withColumn("__g_sha", sha2(col(idCol).cast("string"), 256))
-      .withColumn("__g_bkt", shaBucket(col("__g_sha"), bucketHexLen))
-    val offsets = counted.groupBy(col(stratumCol), col("__g_bkt"))
-      .agg(sum(col("n_tokens")).as("__g_btok"))
-      .withColumn("__g_off", coalesce(sum(col("__g_btok")).over(
-        Window.partitionBy(col(stratumCol)).orderBy(col("__g_bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .drop("__g_btok")
-    val wInBucket = Window.partitionBy(col(stratumCol), col("__g_bkt"))
-      .orderBy(col("__g_sha"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    counted.join(broadcast(offsets), Seq(stratumCol, "__g_bkt"))
-      .withColumn("shard_id",
-        floor((col("__g_off") +
-          coalesce(sum(col("n_tokens")).over(wInBucket), lit(0L))) /
-          lit(budgetTokens)))
-      .select((docs.columns.toIndexedSeq ++ Seq("n_tokens", "shard_id"))
-        .map(col): _*)
-  }
-
-  /** Single-window form of [[packIntoShards]] — ScaleSpec reference shape. */
-  private[graft] def packIntoShardsPlain(docs: DataFrame, idCol: String,
-      textCol: String, stratumCol: String, budgetTokens: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(stratumCol))
       .orderBy(sha2(col(idCol).cast("string"), 256), col(idCol))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -980,61 +875,15 @@ object TextAnalysis {
     * the budget (its predecessor prefix is still under), so small groups
     * are never starved by one long document.
     *
-    * Distributed shape (hierarchical prefix sum — mixture keys are
-    * LANGUAGES, ~5 values, so `en`=0.4 would otherwise put 40% of a
-    * 100-TB corpus through one task's sort): one token-count projection;
-    * a tiny per-(group, SHA-prefix-bucket) token aggregate whose
-    * exclusive prefix sum over bucket order gives every bucket's
-    * starting token offset AND, summed, the corpus total — both
-    * broadcast back; then the admission window runs within (group,
-    * bucket) only. Output is identical to the single-window form
-    * ([[mixtureSamplePlain]], ScaleSpec-pinned) because the bucket is a
-    * prefix of the (sha, id) admission order. No driver loop, no
-    * collect. */
+    * Plan: one token-count projection; the corpus total is a one-row
+    * aggregate broadcast back; the admission prefix is one running-sum
+    * window per group. No driver loop, no collect. */
   def mixtureSample(docs: DataFrame, idCol: String, textCol: String,
                     groupCol: String, weights: Map[String, Double],
-                    frac: Double, bucketHexLen: Int = 2): DataFrame = {
+                    frac: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(frac > 0.0 && frac <= 1.0, s"mixtureSample: frac $frac not in (0, 1]")
     require(weights.nonEmpty, "mixtureSample: empty weight map")
-    require(bucketHexLen >= 1 && bucketHexLen <= 8,
-      s"mixtureSample: bucketHexLen $bucketHexLen not in [1, 8]")
-    val weightExpr = weights.toSeq.sortBy(_._1)
-      .foldLeft(lit(0.0)) { case (acc, (g, wt)) =>
-        when(col(groupCol) === g, lit(wt)).otherwise(acc)
-      }
-    val counted = docs
-      .withColumn("n_tokens",
-        size(graft.functions.ShingleStrings(col(textCol), 1, dropEmpty = true)).cast("long"))
-      .withColumn("__g_sha", sha2(col(idCol).cast("string"), 256))
-      .withColumn("__g_bkt", shaBucket(col("__g_sha"), bucketHexLen))
-    val perBucket = counted.groupBy(col(groupCol), col("__g_bkt"))
-      .agg(sum(col("n_tokens")).as("__g_btok"))
-    val offsets = perBucket
-      .withColumn("__g_off", coalesce(sum(col("__g_btok")).over(
-        Window.partitionBy(col(groupCol)).orderBy(col("__g_bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .drop("__g_btok")
-    val total = perBucket.agg(sum(col("__g_btok")).as("total_tokens"))
-    val wInBucket = Window.partitionBy(col(groupCol), col("__g_bkt"))
-      .orderBy(col("__g_sha"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    counted.join(broadcast(offsets), Seq(groupCol, "__g_bkt"))
-      .crossJoin(broadcast(total))
-      .withColumn("budget_tokens",
-        floor(lit(frac) * col("total_tokens").cast("double") * weightExpr)
-          .cast("long"))
-      .withColumn("cum_before",
-        col("__g_off") + coalesce(sum(col("n_tokens")).over(wInBucket), lit(0L)))
-      .filter(col("cum_before") < col("budget_tokens"))
-      .select(col(idCol), col(groupCol), col("n_tokens"), col("budget_tokens"))
-  }
-
-  /** Single-window form of [[mixtureSample]] — ScaleSpec reference shape. */
-  private[graft] def mixtureSamplePlain(docs: DataFrame, idCol: String,
-      textCol: String, groupCol: String, weights: Map[String, Double],
-      frac: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val weightExpr = weights.toSeq.sortBy(_._1)
       .foldLeft(lit(0.0)) { case (acc, (g, wt)) =>
         when(col(groupCol) === g, lit(wt)).otherwise(acc)

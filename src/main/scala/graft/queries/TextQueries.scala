@@ -629,7 +629,7 @@ object TextQueries {
         .orderBy(col("__k"), col("doc_id")).limit(300)
         .drop("__k")
       Dedup.containmentPairs(sample.withColumn("__all", lit(0)),
-        "doc_id", "text", "__all", K, minContainment = 0.5, saltBuckets = 32)
+        "doc_id", "text", "__all", K, minContainment = 0.5)
     },
       // t20 twin: the dd18 SHA-rank sample, distinct hashed shingle sets,
       // all pairs (no size prune — containment is maximized by
@@ -2340,8 +2340,8 @@ object TextQueries {
     // plants a deliberately messy URL per doc — scheme/WWW casing,
     // `user:pw@` userinfo, default ports, utm queries, fragments,
     // trailing slashes — with a
-    // HOT host (40% of docs) so the capPerGroup two-phase path is doing
-    // real skew work, and path collisions (doc_id % 50) so the URL-dedup
+    // HOT host (40% of docs) so one host's rank window carries most of
+    // the rows, and path collisions (doc_id % 50) so the URL-dedup
     // stage has traffic. Survivors: first doc per canonical URL, then
     // the longest-text 30 per host (doc_id tie-break).
     Query("dd29_host_cap", (s, dir) => {
@@ -2375,8 +2375,7 @@ object TextQueries {
     },
       // dd29 twin: same planted-URL derivation, canonicalization
       // fragments from urlSql, URL-exact dedup via min(doc_id), and the
-      // single-window per-host rank the two-phase plan implements
-      // losslessly (the dd17 convention).
+      // per-host rank window (the dd17 convention).
       oracle = {
         val u = TextAnalysis.urlSql("url")
         s"""WITH urled AS (
@@ -3111,16 +3110,15 @@ object TextQueries {
       oracle = TextAnalysis.heavyHittersSql("documents", "text")),
 
     // FineWeb-style per-source quota: keep the 20 best-quality docs per
-    // source (quality desc, doc_id tie-break) via the lossless two-phase
-    // top-N — no task ever sorts a whole source.
+    // source (quality desc, doc_id tie-break): one rank window per
+    // source.
     Query("dd17_source_cap", (s, dir) => {
       val q = TextAnalysis.qualityColumns(Tables.documents(s, dir), "text")
       Dedup.capPerGroup(q, "source", "doc_id",
           Seq(col("quality_score").desc), n = 20)
         .select("doc_id", "source", "quality_score", "grp_rank")
     },
-      // dd17 twin: the single-window definition the two-phase plan
-      // implements losslessly.
+      // dd17 twin: the same rank window.
       oracle = {
         val q = TextAnalysis.qualitySql("text")
         s"""WITH scored AS (
@@ -3285,7 +3283,7 @@ object TextQueries {
           sum("n_tokens").as("shard_tokens"),
           min("doc_id").as("first_doc"),
           expr("bit_xor(__h)").as("content_digest")),
-      // q11 twin: t9's single-window packing + grouped manifest with the
+      // q11 twin: t9's packing window + grouped manifest with the
       // XOR content digest.
       oracle =
         s"""WITH toks AS (

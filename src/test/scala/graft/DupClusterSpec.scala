@@ -300,7 +300,7 @@ class DupClusterSpec extends SparkTestBase {
       (3L, "x y z w")                   // unrelated
     ).toDF("doc_id", "text")
     val r = Dedup.bandedJaccardQuality(docs, "doc_id", "text",
-      shingleK = 2, bandHashes = 2, minJaccard = 0.5, saltBuckets = 4).head()
+      shingleK = 2, bandHashes = 2, minJaccard = 0.5).head()
     val (nDocs, nCand, nTrue, nFound) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     assert(nDocs === 3L)
@@ -316,8 +316,7 @@ class DupClusterSpec extends SparkTestBase {
     def doc() = (0 until 3 + rnd.nextInt(4)).map(_ => vocab(rnd.nextInt(vocab.size)))
       .mkString(" ")
     val docs = (0L until 30L).map(i => (i, doc())).toDF("doc_id", "text")
-    val r = Dedup.bandedJaccardQuality(docs, "doc_id", "text", 2, 2, 0.3,
-      saltBuckets = 4).head()
+    val r = Dedup.bandedJaccardQuality(docs, "doc_id", "text", 2, 2, 0.3).head()
     val truth = Dedup.ngramJaccardPairs(
         docs.withColumn("blk", lit(0)), "doc_id", "text", "blk", 2, 0.3)
       .select("id_a", "id_b").collect()

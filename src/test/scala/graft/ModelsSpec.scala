@@ -1,14 +1,29 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ingest.Discovery
 import graft.ml.Models
+import graft.pipeline.Reports
 import graft.qc.Audit
 
 /** M5 model training end-to-end on engine-prepped matrices; S1/S2/S10
   * deterministic discovery; Q3 assertions. */
 class ModelsSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** Macro-F1 of `pred` (y_pred against `labelCol`) through the
+    * oracle-checked M6 aggregation, the whole frame as one fold. */
+  private def macroF1(pred: DataFrame, labelCol: String): Double = {
+    val folded = pred.select(lit(0).as("fold_id"),
+      col(labelCol).cast("string").as("y_true"),
+      col("y_pred").cast("string").as("y_pred"),
+      lit(java.sql.Date.valueOf("2024-01-01")).as("date"))
+    val classes = folded.select("y_true").distinct().collect()
+      .map(_.getString(0)).toSeq
+    Reports.perFoldMetrics(folded, "fold_id", "y_true", "y_pred", "date",
+      classes).head().getAs[Double]("f1_macro")
+  }
 
   test("M5: logistic regression beats majority baseline on separable data") {
     val rnd = new scala.util.Random(42)
@@ -22,12 +37,12 @@ class ModelsSpec extends SparkTestBase {
     val train = df.filter(col("id") % 5 =!= 0)
     val test = df.filter(col("id") % 5 === 0)
     val pred = Models.logisticRegression(train, test, Seq("f1", "f2"), "label")
-    val f1 = Models.macroF1(pred, "label")
+    val f1 = macroF1(pred, "label")
     assert(f1 > 0.9, s"macro-F1 $f1")
     // majority baseline on 3 balanced classes ~ 0.17 macro-F1
     val rf = Models.randomForest(train, test, Seq("f1", "f2"), "label",
       numTrees = 20, maxDepth = 5)
-    assert(Models.macroF1(rf, "label") > 0.9)
+    assert(macroF1(rf, "label") > 0.9)
   }
 
   test("M5 GD: deterministic logreg separates separable data; partition-invariant") {
@@ -92,10 +107,10 @@ class ModelsSpec extends SparkTestBase {
     val gbtLabels = gbt.select("y_pred").distinct().collect()
       .map(_.getDouble(0)).toSet
     assert(gbtLabels.subsetOf(Set(-1.0, 0.0, 1.0)))
-    assert(Models.macroF1(gbt, "label") > 0.9)
+    assert(macroF1(gbt, "label") > 0.9)
     val svc = Models.linearSvc(train, test, Seq("f1", "f2"), "label",
       maxIter = 20)
-    assert(Models.macroF1(svc, "label") > 0.9)
+    assert(macroF1(svc, "label") > 0.9)
   }
 
   test("M5 extended: GBT and LinearSVC fits are deterministic across reruns") {

@@ -55,23 +55,6 @@ class PlanSpec extends SparkTestBase {
     assert(!plan.contains("CartesianProduct"), "unify degenerated to a cartesian")
   }
 
-  test("t6/t9/t12: stratum windows are SHA-prefix bucketed — no task sorts a whole stratum") {
-    // The expensive window must partition by (stratum, __g_bkt), never by
-    // the stratum alone: mixture/stratum keys are languages (~5 values),
-    // so a stratum-only sort is a one-task bottleneck at 100 TB. The
-    // bucketed partitioning prints as hashpartitioning(lang#N, __g_bkt#M.
-    val bucketed = """hashpartitioning\(lang#\d+, __g_bkt#\d+""".r
-    for (q <- Seq("t6_stratified_sample", "t9_pack_shards", "t12_mixture")) {
-      val plan = planOf(q)
-      assert(bucketed.findFirstIn(plan).isDefined,
-        s"$q: window not partitioned by (stratum, SHA-prefix bucket)")
-      assert(plan.contains("BroadcastExchange"),
-        s"$q: per-bucket offset attach is not a broadcast")
-      assert(!plan.contains("SortMergeJoin"),
-        s"$q: offset/total attach degenerated to a shuffled join")
-    }
-  }
-
   test("incremental dedup: every stage an equi-join, no cartesian, no forced broadcast") {
     import org.apache.spark.sql.functions.col
     // same discipline as the dd5 test: with size-based auto-broadcast
@@ -490,11 +473,10 @@ class PlanSpec extends SparkTestBase {
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"dd29 degenerated to a product:\n${plan.take(600)}")
-    // capPerGroup phase 1 partitions by (host, id-bucket) — the skew
-    // defense against the planted hot host; pin that the bucketed
-    // window partitioning survives into the physical plan
+    // capPerGroup ranks in one window hash-partitioned by host (the
+    // two-phase, id-bucketed rank this case's name describes was retired)
     assert(plan.toLowerCase.contains("hashpartitioning(url_host"),
-      "dd29: two-phase cap's bucketed/host partitionings missing")
+      "dd29: the per-host rank window is not hash-partitioned by host")
   }
 
   test("band keys ship as sha60 longs, not concat strings") {

@@ -1,33 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.core.{Sinks, Tables}
+import graft.core.Tables
 import graft.operators.Skew
 
-/** Scale-mechanics evidence: partition pruning on partitioned sinks,
-  * salted joins/aggs matching their plain equivalents, bucketed joins
+/** Scale-mechanics evidence: the stored-state dedup path matching inline
+  * state, salted joins matching their plain equivalents, bucketed joins
   * eliminating the shuffle. */
 class ScaleSpec extends SparkTestBase {
   import spark.implicits._
-
-  test("partitioned sink + partition pruning in the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
-    val daily = Tables.events(spark, "/root/testdata/sf0.001")
-      .groupBy(to_date(col("ts")).as("date"), col("user_id"))
-      .agg(avg("value").as("v"))
-      .withColumn("date_str", date_format(col("date"), "yyyy-MM-dd"))
-    Sinks.writePartitioned(daily.drop("date"), s"$dir/daily", Seq("date_str"))
-    val read = spark.read.parquet(s"$dir/daily")
-      .filter(col("date_str") === "2024-01-05")
-    val plan = read.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      plan.contains("date_str"), s"no partition filter:\n${plan.take(500)}")
-    assert(read.count() > 0)
-    // pruning actually limits files read: only one partition dir touched
-    val scanned = read.select(input_file_name()).distinct().collect()
-      .map(_.getString(0))
-    assert(scanned.forall(_.contains("date_str=2024-01-05")))
-  }
 
   test("dd13 stored-state path: value-identical to inline state, reads the stored tables") {
     import graft.operators.Dedup
@@ -69,85 +50,6 @@ class ScaleSpec extends SparkTestBase {
         salt = xxhash64(col("k"), monotonically_increasing_id()), saltFactor = 8)
       .agg(sum(col("v") * col("m"))).head().getLong(0)
     assert(salted === plain)
-  }
-
-  test("bucketed stratum ops equal their single-window forms bit-for-bit") {
-    import graft.operators.TextAnalysis
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toIndexedSeq
-    // hexLen 1 -> only 16 buckets, so both the per-bucket offset math and
-    // the within-bucket window see real multi-row work at this SF
-    for (hexLen <- Seq(1, 2)) {
-      assert(rows(TextAnalysis.stratifiedSample(docs, "doc_id", "lang", 0.25,
-          bucketHexLen = hexLen)) ===
-        rows(TextAnalysis.stratifiedSamplePlain(docs, "doc_id", "lang", 0.25)),
-        s"stratifiedSample hexLen=$hexLen diverged from single-window form")
-      assert(rows(TextAnalysis.packIntoShards(docs, "doc_id", "text", "lang",
-          2000L, bucketHexLen = hexLen)
-          .select("doc_id", "lang", "n_tokens", "shard_id")) ===
-        rows(TextAnalysis.packIntoShardsPlain(docs, "doc_id", "text", "lang",
-          2000L).select("doc_id", "lang", "n_tokens", "shard_id")),
-        s"packIntoShards hexLen=$hexLen diverged from single-window form")
-      val weights = Map(
-        "en" -> 0.4, "zh" -> 0.2, "es" -> 0.15, "de" -> 0.15, "fr" -> 0.1)
-      assert(rows(TextAnalysis.mixtureSample(docs, "doc_id", "text", "lang",
-          weights, 0.5, bucketHexLen = hexLen)) ===
-        rows(TextAnalysis.mixtureSamplePlain(docs, "doc_id", "text", "lang",
-          weights, 0.5)),
-        s"mixtureSample hexLen=$hexLen diverged from single-window form")
-    }
-  }
-
-  test("dd17 two-phase per-group cap equals the single-window form") {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val docs = graft.operators.TextAnalysis.qualityColumns(
-      Tables.documents(spark, "/root/testdata/sf0.001"), "text")
-    // tiny numBuckets so phase-1 buckets hold real multi-row work, and a
-    // cap small enough that most sources are actually cut
-    for (buckets <- Seq(2, 64)) {
-      val twoPhase = graft.operators.Dedup.capPerGroup(docs, "source",
-          "doc_id", Seq(col("quality_score").desc), n = 3,
-          numBuckets = buckets)
-        .select("doc_id", "source", "grp_rank")
-        .collect().map(_.toString).sorted.toIndexedSeq
-      val w = Window.partitionBy(col("source"))
-        .orderBy(col("quality_score").desc, col("doc_id"))
-      val single = docs
-        .withColumn("grp_rank", row_number().over(w).cast("long"))
-        .filter(col("grp_rank") <= 3)
-        .select("doc_id", "source", "grp_rank")
-        .collect().map(_.toString).sorted.toIndexedSeq
-      assert(twoPhase === single,
-        s"two-phase cap (buckets=$buckets) diverged from single window")
-    }
-  }
-
-  test("vocabulary attach past the broadcast budget: shuffled equi-join, same rows") {
-    import graft.operators.TextAnalysis
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toIndexedSeq
-    val tfidfSmall = rows(TextAnalysis.tfIdfTopK(docs, "doc_id", "text", 5))
-    val lmSmall = rows(TextAnalysis.unigramLogProb(docs, "doc_id", "text"))
-    // limit 0 drops the hint; disabling auto-broadcast makes the planner's
-    // fallback deterministic so the test really runs the shuffle path
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val tfidf = TextAnalysis.tfIdfTopK(docs, "doc_id", "text", 5,
-        broadcastVocabLimit = 0L)
-      val lm = TextAnalysis.unigramLogProb(docs, "doc_id", "text",
-        broadcastVocabLimit = 0L)
-      for ((df, name) <- Seq(tfidf -> "tfIdfTopK", lm -> "unigramLogProb")) {
-        val plan = df.queryExecution.executedPlan.toString
-        assert(!plan.contains("BroadcastHashJoin"),
-          s"$name: vocab attach still broadcast past the budget")
-      }
-      assert(rows(tfidf) === tfidfSmall, "tfIdfTopK diverged on the shuffle path")
-      assert(rows(lm) === lmSmall, "unigramLogProb diverged on the shuffle path")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
   }
 
   test("bucketed tables join without an exchange on the bucketed key") {

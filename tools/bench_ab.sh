@@ -16,11 +16,13 @@
 #
 # The parent is a plain `git archive` of REV, so each side builds its own
 # source with its own snapbench, as a fresh checkout would. Even pairs run
-# the parent first, odd pairs the change first. Each run's last stdout line
-# is appended to .bench_build/ab.jsonl here; the summary gives, per
-# workload and end-to-end metric, each side's median and quartiles, the
-# change's wins (ties count for neither) and the parent's IQR, and whether
-# the median gap exceeds that IQR. It exits 1, naming the seeds and sides,
+# the parent first, odd pairs the change first. Each run's last stdout line,
+# with the `host` block (steal_pct, loadavg_start, loadavg_end, cpus) of its
+# `snapbench-run` line, is appended to .bench_build/ab.jsonl here; the
+# summary gives, per workload, each side's range of loadavg_start and, per
+# end-to-end metric, each side's median and quartiles, the change's wins
+# (ties count for neither) and the parent's IQR, and whether the median gap
+# exceeds that IQR. It exits 1, naming the seeds and sides,
 # when any run of this invocation is incorrect (including a run that did
 # not finish) or a pair lacks a side.
 #
@@ -72,20 +74,25 @@ log="$here/.bench_build/ab.jsonl"
 started="$(date +%s)"
 
 run_side() { # side dir workload seed pair
-  local line
-  line="$(cd "$2" && python3 snapbench/run.py --workload "$3" --seed "$4" \
-    --seconds "$seconds" --trace 0 2>"$here/.bench_build/ab-$1.stderr.log" | tail -n 1)" || true
+  local out
+  out="$(cd "$2" && python3 snapbench/run.py --workload "$3" --seed "$4" \
+    --seconds "$seconds" --trace 0 2>"$here/.bench_build/ab-$1.stderr.log")" || true
   python3 -c 'import json,sys
-side, w, seed, pair, ab, line = sys.argv[1:7]
+side, w, seed, pair, ab, out = sys.argv[1:7]
+lines = out.splitlines()
 try:
-    r = json.loads(line)
-except ValueError:
+    r = json.loads(lines[-1])
+except (IndexError, ValueError):
     r = {"correct": False, "metrics": {}}
+host = None
+for l in lines:
+    if l.startswith("snapbench-run "):
+        host = json.loads(l[len("snapbench-run "):]).get("host")
 print(json.dumps({"ab": int(ab), "side": side, "workload": w, "seed": int(seed),
-                  "pair": int(pair), **r}))
+                  "pair": int(pair), "host": host, **r}))
 ok, pipe = r.get("correct"), r["metrics"].get("pipeline_s", {}).get("value")
 print(f"  {side} {w} seed {seed}: correct={ok} pipeline_s={pipe}", file=sys.stderr)' \
-    "$1" "$3" "$4" "$5" "$started" "$line" >>"$log"
+    "$1" "$3" "$4" "$5" "$started" "$out" >>"$log"
 }
 
 for w in "${workloads[@]}"; do
@@ -120,6 +127,11 @@ for w in workloads:
     failed += [f"{w}: {x} incorrect" for x in bad] + [f"{w}: {x} missing" for x in missing]
     print(f"\n{w}: {len(pairs)} of {npairs} pairs, seeds {seed0}-{seed0 + npairs - 1}, "
           f"incorrect runs: {', '.join(bad) or 'none'}, missing runs: {', '.join(missing) or 'none'}")
+    for s in ("parent", "change"):
+        loads = [r["host"]["loadavg_start"] for (side, _), r in by.items()
+                 if side == s and r.get("host")]
+        print(f"  {s} loadavg_start: " +
+              (f"{min(loads):.2f}-{max(loads):.2f} over {len(loads)} runs" if loads else "not recorded"))
     print(f"  {'metric':<11} {'parent median [q1, q3]':>27} {'change median [q1, q3]':>27}"
           f" {'wins':>6} {'parent IQR':>10} {'gap > IQR':>9}")
     for m, b in better.items():
