@@ -11,7 +11,10 @@ import graft.operators.{Dedup, TextAnalysis}
   * documents and compares its rows, rendered as CSV and sorted, with
   * `src/test/resources/corpus_ops/<case>.csv`. The files were taken from
   * the forked plans, so any rewrite of these operators must reproduce them
-  * row for row. */
+  * row for row. The six Hamming near-dup queries (SimHash pairs and
+  * clusters, image, audio and video near-dup, cross-modal dedup) are
+  * pinned the same way through [[SparkEntry.queries]]: their DuckDB oracle
+  * runs outside tier-1, so these are tier-1's exact-row check of them. */
 class CorpusOpsPinSpec extends SparkTestBase {
   import CorpusOpsPinSpec._
 
@@ -33,7 +36,9 @@ object CorpusOpsPinSpec {
   private def docs(s: org.apache.spark.sql.SparkSession): DataFrame =
     Tables.documents(s, sf)
 
-  val cases: Seq[(String, org.apache.spark.sql.SparkSession => DataFrame)] = Seq(
+  private type Build = org.apache.spark.sql.SparkSession => DataFrame
+
+  val cases: Seq[(String, Build)] = Seq[(String, Build)](
     "stratified_sample" -> (s =>
       TextAnalysis.stratifiedSample(docs(s), "doc_id", "lang", 0.25).drop("text")),
     "pack_into_shards" -> (s =>
@@ -60,7 +65,10 @@ object CorpusOpsPinSpec {
       Dedup.bandedJaccardQuality(docs(s), "doc_id", "text", 2, 2, 0.05)),
     "containment_pairs" -> (s =>
       Dedup.containmentPairs(docs(s).withColumn("__all", lit(0)), "doc_id",
-        "text", "__all", 3, 0.5)))
+        "text", "__all", 3, 0.5))) ++
+    Seq("dd10_simhash_dups", "dd14_simhash_corpus", "mm9_image_near_dup",
+      "mm11_audio_near_dup", "mm12_video_near_dup", "mm10_crossmodal_dedup")
+      .map(q => q -> ((s => SparkEntry.queries(q)(s, sf)): Build))
 
   /** Header line, then one line per row, sorted; fields holding a comma,
     * quote or line break are quoted, nulls are empty. */
