@@ -56,22 +56,21 @@ object Dedup {
     * and the batch probes it as a broadcast'd literal via Spark's own
     * codegen'd `BloomFilterMightContain` (the runtime-filter expression):
     * rows the bloom rejects are DEFINITELY new and never reach the join;
-    * bloom-passing rows (true dups + ~fpp false positives) flow into an
+    * bloom-passing rows (true dups + ~1% false positives) flow into an
     * exact sha semi-join that removes the false positives. The bloom is
     * invisible in the result — output is exactly the batch rows whose
     * sha exists in the corpus (the oracle replays it as a plain IN) —
     * but the join-side cardinality at scale is the bloom-passing subset,
     * not the batch.
     *
-    * Driver-bounded by contract: at fpp=1% the filter costs ~9.6 bits
-    * per distinct corpus sha (1.2 MB per million docs). At corpus sizes
-    * where that outgrows the driver, production shards the filter by
-    * sha prefix or raises fpp — the semi-join keeps the OUTPUT exact
-    * under any fpp, so the knob trades shuffle volume, never
+    * Driver-bounded by contract: at [[BloomFpp]] = 1% the filter costs
+    * ~9.6 bits per distinct corpus sha (1.2 MB per million docs). At
+    * corpus sizes where that outgrows the driver, the filter would be
+    * sharded by sha prefix or the rate raised — the semi-join keeps the
+    * OUTPUT exact under any rate, so it trades shuffle volume, never
     * correctness. */
   def bloomExactMembership(batch: DataFrame, corpus: DataFrame,
-                           idCol: String, textCol: String,
-                           fpp: Double = 0.01): DataFrame = {
+                           idCol: String, textCol: String): DataFrame = {
     val corpusSha = corpus.select(sha2(col(textCol), 256).as("text_sha"))
       .distinct()
       // materialized once: referenced by the count, the bloom build, and
@@ -79,7 +78,7 @@ object Dedup {
       .localCheckpoint(eager = true)
     val n = math.max(corpusSha.count(), 1L)
     val bloom = corpusSha.select(xxhash64(col("text_sha")).as("h"))
-      .stat.bloomFilter("h", n, fpp)
+      .stat.bloomFilter("h", n, BloomFpp)
     val bytes = {
       val out = new java.io.ByteArrayOutputStream()
       bloom.writeTo(out)
@@ -95,6 +94,9 @@ object Dedup {
       .join(corpusSha, Seq("text_sha"), "left_semi")
       .select(col(idCol), col("text_sha"))
   }
+
+  /** [[bloomExactMembership]]'s false-positive rate. */
+  private val BloomFpp = 0.01
 
   /** MinHash signature: k universal hashes min-folded over the shingle
     * set. mh_i = min over shingles of (a_i * sha28(sh) + b_i) mod P. */
@@ -398,7 +400,8 @@ object Dedup {
   }
 
   /** Duplicate clustering: connected components over an undirected
-    * near-dup pair list (e.g. [[lshVerifiedPairs]] output), via
+    * near-dup pair list (`id_a`, `id_b`; e.g. [[lshVerifiedPairs]] or
+    * [[hammingBandJoinWords]] output), via
     * alternating large-star / small-star contraction (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14). Each round
     * is a groupBy + equi-join on node id — plain hash shuffles, no
@@ -430,7 +433,7 @@ object Dedup {
     * @param localSolveMaxEdges edge-count threshold below which the
     *        component solve happens on the driver; 0 forces the
     *        distributed star contraction. */
-  def dupClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
+  def dupClusters(pairs: DataFrame,
                   localSolveMaxEdges: Long = 1L << 20): DataFrame = {
     // canonical undirected edges (hi > lo) in the ids' NATIVE type — a
     // cast to long would silently null out string/UUID ids and return an
@@ -438,9 +441,9 @@ object Dedup {
     // Null ids are dropped explicitly. Lineage cut per round — the
     // iterated-plan pattern of Impute.iterativeRidgeImpute.
     var edges = pairs
-      .filter(col(idA).isNotNull && col(idB).isNotNull)
-      .select(greatest(col(idA), col(idB)).as("hi"),
-        least(col(idA), col(idB)).as("lo"))
+      .filter(col("id_a").isNotNull && col("id_b").isNotNull)
+      .select(greatest(col("id_a"), col("id_b")).as("hi"),
+        least(col("id_a"), col("id_b")).as("lo"))
       .filter(col("hi") =!= col("lo"))
       .distinct()
       .localCheckpoint(eager = true)
@@ -737,7 +740,8 @@ object Dedup {
     * the exact Hamming distance with bit_count(xor). One equi-join on the
     * slice key; candidate volume is governed by slice width, not corpus
     * size. The cheap complement to MinHash-Jaccard: one long per doc, no
-    * shingle sets at pair time.
+    * shingle sets at pair time. The signature is one `bits`-wide word of
+    * [[hammingBandJoinWords]].
     *
     * AUDIT FORM ONLY at scale: the pair set is quadratic in
     * duplicate-cluster size (SCALING.md measured 543k → 56.9M pairs on
@@ -746,9 +750,6 @@ object Dedup {
     * output — and reserve the raw pairs for bounded forensic slices. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    bits: Int, bands: Int, maxHamming: Int): DataFrame = {
-    require(bands > maxHamming,
-      s"pigeonhole guarantee needs bands ($bands) > maxHamming ($maxHamming)")
-    require(bits % bands == 0, s"bits ($bits) must split evenly into $bands bands")
     val par = docs.sparkSession.sparkContext.defaultParallelism
     // persist the one-long-per-doc signature before banding: the band
     // union references it 4x and the self-join 8x — without the persist
@@ -759,13 +760,13 @@ object Dedup {
       .select(col(idCol), hashedTokens(col(textCol)).as("htk"))
       .select(col(idCol), simhashOverHashed(col("htk"), bits).as("sig"))
       .persist()
-    try simhashBandJoin(sigs, idCol, bits, bands, maxHamming)
+    try hammingBandJoinWords(sigs, idCol, Seq("sig"), bits, bands, maxHamming)
       .localCheckpoint(eager = true)
     finally sigs.unpersist()
   }
 
   /** The scale-default consumption of SimHash near-dups: signatures →
-    * connected components ON THE SIGNATURE DOMAIN → one best
+    * [[hammingClusters]] on the distinct signatures → one best
     * representative per cluster. Never materializes the doc-level pair
     * set at all.
     *
@@ -775,11 +776,12 @@ object Dedup {
     * at most min(|docs|, 2^bits) nodes, and far fewer than |docs| in
     * exactly the boilerplate-dense corpora where the doc-level pair set
     * explodes quadratically (an m-member same-sig cluster is m² doc
-    * pairs but ONE sig node). The doc↔sig contraction preserves
-    * components exactly, so the surviving set is identical to the
-    * pair-based composition (the dd14 oracle's recursive doc-level CTE
-    * pins this). Cost: one signature pass over the corpus, a band join
-    * + star contraction on the deduplicated signature graph, and one
+    * pairs but ONE sig node). Each signature node is named by its
+    * smallest member id; labels only partition the documents, and the
+    * doc↔sig contraction preserves components exactly, so the surviving
+    * set is identical to the pair-based composition (the dd14 oracle's
+    * recursive doc-level CTE pins this). Cost: one signature pass over
+    * the corpus, the contraction on the signature graph, and one
     * signature-keyed attach of cluster labels back to docs. The raw
     * [[simhashPairs]] remains the audit form.
     *
@@ -790,9 +792,6 @@ object Dedup {
   def simhashClusters(docs: DataFrame, idCol: String, textCol: String,
                       bits: Int, bands: Int, maxHamming: Int,
                       score: Column): DataFrame = {
-    require(bands > maxHamming,
-      s"pigeonhole guarantee needs bands ($bands) > maxHamming ($maxHamming)")
-    require(bits % bands == 0, s"bits ($bits) must split evenly into $bands bands")
     val par = docs.sparkSession.sparkContext.defaultParallelism
     // one signature pass over the corpus (the 100-TB side), kept for the
     // final label attach; same persist rationale as simhashPairs
@@ -801,84 +800,72 @@ object Dedup {
         .as("__sc_sig"))
       .persist()
     try {
-      // the component graph lives on distinct signatures: node id = the
-      // signature value itself (min-labeling over sig values is as good
-      // a canonical label as any — labels only partition, never surface)
-      val nodes = docSigs.select(col("__sc_sig").as("id")).distinct()
-        .withColumn("sig", col("id"))
-      val sigClusters = dupClusters(
-        simhashBandJoin(nodes, "id", bits, bands, maxHamming))
-      // every doc gets a cluster key: its signature's component label if
-      // the signature has near-dup neighbors, else the signature itself —
-      // which still groups same-sig docs together (hamming 0 ⇒ near-dup),
-      // the case the doc-level pair formulation covers via m² pairs.
+      val sigClusters = hammingClusters(docSigs, idCol, Seq("__sc_sig"), bits,
+        bands, maxHamming)
       // materialize the (doc, label) map — 2 longs per doc — before the
       // unpersist below, or the lazy result plan would recompute the
-      // whole signature pass at action time
+      // whole signature pass at action time. A null signature joins no
+      // node, so its document stays a singleton.
       val clusters = docSigs
-        .join(sigClusters.withColumnRenamed("id", "__sc_sig"), Seq("__sc_sig"), "left")
-        .select(col(idCol).as("id"),
-          coalesce(col("cluster_id"), col("__sc_sig")).as("cluster_id"))
+        .join(sigClusters.select("__sc_sig", "cluster_id"), Seq("__sc_sig"))
+        .select(col(idCol).as("id"), col("cluster_id"))
         .localCheckpoint(eager = true)
       keepBestRepresentatives(docs, idCol, clusters, score)
     } finally docSigs.unpersist()
   }
 
-  /** [[simhashPairs]]'s lazy band-join plan over a precomputed signature
-    * frame (no persist/materialization) — keeps the equi-join shape
-    * visible to plan assertions. */
-  private[graft] def simhashBandJoin(sigs: DataFrame, idCol: String, bits: Int, bands: Int,
-                      maxHamming: Int): DataFrame = {
-    val bandBits = bits / bands
-    val mask = (1L << bandBits) - 1
-    val keys = (0 until bands).map { j =>
-      concat_ws("_", lit(j), shiftright(col("sig"), j * bandBits).bitwiseAND(mask))
-    }
-    bandSelfJoin(sigs, idCol, keys, hammingWords = Seq("sig"))
-      .filter(col("hamming") <= maxHamming)
+  /** Near-dup clusters over Hamming signatures, contracted to the
+    * distinct signatures: one row per distinct `blockCols ++ wordCols`
+    * value of `sigs`, carrying those columns plus `rid` (the smallest
+    * member `idCol`), `n` (the member count) and `cluster_id` (the
+    * smallest `rid` of the signature's connected component under
+    * [[hammingBandJoinWords]] at `maxHamming`, or `rid` itself when the
+    * signature has no neighbour). Callers attach it to their rows by the
+    * signature columns, or roll the counts up by `cluster_id`.
+    *
+    * Equal signatures are near-dups by definition, so an m-member mass of
+    * one signature is one node, never m² pairs. The distinct-signature
+    * frame is materialized once: every band branch of the join and the
+    * final label attach read it, and upstream it is usually a decode or
+    * hashing pass. */
+  def hammingClusters(sigs: DataFrame, idCol: String, wordCols: Seq[String],
+                      wordBits: Int, bandsPerWord: Int, maxHamming: Int,
+                      blockCols: Seq[String] = Nil): DataFrame = {
+    val keyCols = (blockCols ++ wordCols).map(col)
+    val nodes = sigs.groupBy(keyCols: _*)
+      .agg(min(col(idCol)).as("rid"), count(lit(1)).as("n"))
+      .localCheckpoint(eager = true)
+    val clusters = dupClusters(hammingBandJoinWords(nodes, "rid", wordCols,
+      wordBits, bandsPerWord, maxHamming, blockCols))
+    nodes.join(clusters.withColumnRenamed("id", "rid"), Seq("rid"), "left")
+      .select(keyCols ++ Seq(col("rid"), col("n"),
+        coalesce(col("cluster_id"), col("rid")).as("cluster_id")): _*)
   }
 
-  /** Hamming-band join over a 64-bit signature carried as two 32-bit
-    * halves (`sig_hi`, `sig_lo` — the BIGINT-safe packing
-    * [[graft.multimodal.Multimodal.aHash64]] emits): [[simhashBandJoin]]'s
-    * recipe at the two-word grain, for engines/columns where a single
-    * 64-bit word would need sign-gymnastics. `bands` must split 64
-    * evenly with an even count so each half contributes `bands/2` keys;
-    * by the pigeonhole argument two signatures within `maxHamming < bands`
-    * share at least one intact band, so the candidate set is exact.
-    * Same scale shape as the text banding: the only join is an
-    * equi-join on the band key, verify is a per-pair popcount, and
-    * callers block on DISTINCT signatures (the [[simhashClusters]]
-    * contraction) so equal-hash masses never enumerate m² pairs. */
-  def hammingBandJoin64(sigs: DataFrame, idCol: String, bands: Int,
-                        maxHamming: Int): DataFrame = {
-    require(bands >= 2 && bands % 2 == 0 && 64 % bands == 0,
-      s"hammingBandJoin64: bands must be an even divisor of 64, got $bands")
-    hammingBandJoinWords(sigs, idCol, Seq("sig_lo", "sig_hi"), bands / 2,
-      maxHamming)
-  }
-
-  /** [[hammingBandJoin64]] generalized to a signature carried as N
-    * 32-bit words (`wordCols`, LSB-first — word w holds bits
-    * [32w, 32w+32)): each word contributes `bandsPerWord` contiguous
-    * bands of 32/bandsPerWord bits, `wordCols.size * bandsPerWord`
-    * bands total; by pigeonhole the candidate set is EXACT for
-    * maxHamming < total bands. This is how a wider perceptual hash
-    * buys a deeper exact radius AND a larger band-key space than the
-    * 64-bit form's 4×16 ceiling — same scale shape throughout: the
-    * only join is an equi-join on the band key (plus `blockCols`, see
-    * [[bandSelfJoin]]), verify is a per-pair popcount sum, callers
-    * block on DISTINCT signatures. */
-  def hammingBandJoinWords(sigs: DataFrame, idCol: String,
-                           wordCols: Seq[String], bandsPerWord: Int,
-                           maxHamming: Int,
-                           blockCols: Seq[String] = Nil): DataFrame = {
-    require(bandsPerWord >= 1 && 32 % bandsPerWord == 0,
-      s"hammingBandJoinWords: bandsPerWord must divide 32, got $bandsPerWord")
+  /** The Hamming-band join behind every Hamming near-dup here, over a
+    * signature carried as N words of `wordBits` bits (`wordCols`,
+    * LSB-first — word w holds bits [w·wordBits, (w+1)·wordBits)): each
+    * word contributes `bandsPerWord` contiguous bands of
+    * wordBits/bandsPerWord bits, band j keyed `j_<band value>`, and
+    * `wordCols.size * bandsPerWord` bands in total. By pigeonhole two
+    * signatures within `maxHamming` < total bands share an intact band,
+    * so the candidate set is EXACT. One word of `bits` bits is SimHash's
+    * bit-slice banding; a 64-bit hash split into two 32-bit words keeps
+    * BIGINT-safe halves; more words buy a deeper exact radius and a
+    * larger band-key space. The only join is an equi-join on the band
+    * key plus `blockCols` (see [[bandSelfJoin]]); verify is a per-pair
+    * popcount sum over the words, filtered to `maxHamming`. */
+  private[graft] def hammingBandJoinWords(sigs: DataFrame, idCol: String,
+                                          wordCols: Seq[String], wordBits: Int,
+                                          bandsPerWord: Int, maxHamming: Int,
+                                          blockCols: Seq[String] = Nil): DataFrame = {
+    require(bandsPerWord >= 1 && wordBits % bandsPerWord == 0,
+      s"hammingBandJoinWords: bandsPerWord ($bandsPerWord) must divide " +
+        s"wordBits ($wordBits)")
     require(maxHamming < wordCols.size * bandsPerWord,
       s"hammingBandJoinWords: need maxHamming ($maxHamming) < total bands " +
         s"(${wordCols.size * bandsPerWord}) for the pigeonhole guarantee")
-    val bandBits = 32 / bandsPerWord
+    val bandBits = wordBits / bandsPerWord
     val mask = (1L << bandBits) - 1
     val keys = (0 until wordCols.size * bandsPerWord).map { j =>
       val word = col(wordCols(j / bandsPerWord))
@@ -886,45 +873,6 @@ object Dedup {
       concat_ws("_", lit(j), shiftright(word, off).bitwiseAND(mask))
     }
     bandSelfJoin(sigs, idCol, keys, wordCols, blockCols)
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** ADAPTIVE-width hamming-band join over a single ≤63-bit fingerprint
-    * column whose meaningful bit count varies per block (`bitsCol`,
-    * which must be constant within a block — e.g. mm11's n_windows−1
-    * delta bits under its n_windows blocking): every row emits exactly
-    * `bands` band keys of per-block width w = max(1, ceil(bits/bands)),
-    * covering the MEANINGFUL range only. The fixed 4×16 banding hashes
-    * a short-fingerprint block's constant high bands into one bucket —
-    * the bucket is the whole block and candidates go quadratic (the
-    * probe measured 955 cands/sig at 500k docs on the mm11 fixture);
-    * fitting the bands to the meaningful range restores per-band key
-    * entropy exactly where the fixed form loses it. Pigeonhole
-    * exactness holds PER BLOCK: rows in a block share w, the bands
-    * partition [0, bands·w) ⊇ the meaningful range, so two signatures
-    * within `maxHamming < bands` flipped bits share an intact band.
-    * Same scale shape as the fixed form: equi-join on (block, band
-    * key), per-pair popcount verify, callers block on distinct
-    * signatures. */
-  def hammingBandJoinAdaptive(sigs: DataFrame, idCol: String,
-                              fpCol: String, bitsCol: String, bands: Int,
-                              maxHamming: Int,
-                              blockCols: Seq[String]): DataFrame = {
-    require(bands >= 2, s"hammingBandJoinAdaptive: bands >= 2, got $bands")
-    require(maxHamming < bands,
-      s"hammingBandJoinAdaptive: need maxHamming ($maxHamming) < bands " +
-        s"($bands) for the pigeonhole guarantee")
-    // per-block band width; SQL-expression shifts because the width is
-    // a COLUMN (functions.shiftright takes a literal offset)
-    val withW = sigs.withColumn("__w",
-      greatest(lit(1),
-        ceil(col(bitsCol).cast("double") / lit(bands)).cast("int")))
-    val keys = (0 until bands).map { j =>
-      concat_ws("_", lit(j),
-        expr(s"shiftright(cast($fpCol as bigint), $j * __w) & " +
-          "((cast(1 as bigint) << __w) - 1)"))
-    }
-    bandSelfJoin(withW, idCol, keys, Seq(fpCol), blockCols)
       .filter(col("hamming") <= maxHamming)
   }
 

@@ -222,6 +222,31 @@ object TextQueries {
     }(enc)
   }
 
+  /** A 64-bit fingerprint `fp` as the two 32-bit words the Hamming band
+    * join reads (`sig_lo`, `sig_hi`) — a bijection of `fp`, so grouping
+    * by the words is grouping by `fp`. */
+  private def fpWords(fps: DataFrame): DataFrame =
+    fps.withColumn("sig_lo", col("fp").bitwiseAND(lit(0xffffffffL)))
+      .withColumn("sig_hi", shiftright(col("fp"), 32))
+
+  /** [[Dedup.hammingClusters]] over [[fpWords]] at mm11/mm12's banding:
+    * 4 bands of 16 bits, exact through radius 3, blocked on `blockCol`
+    * (the window or frame count — a different-length clip is a
+    * different object, so it never enters the bucket). */
+  private def fpClusters(words: DataFrame, blockCol: String): DataFrame =
+    Dedup.hammingClusters(words, "doc_id", Seq("sig_lo", "sig_hi"),
+      wordBits = 32, bandsPerWord = 2, maxHamming = 3,
+      blockCols = Seq(blockCol))
+
+  /** mm10's stage tail: label each doc with its signature's cluster
+    * (joined on `keyCols`), keep the smallest doc_id per cluster, and
+    * materialize the survivor ids. */
+  private def survivorIds(docSigs: DataFrame, clusters: DataFrame,
+                          keyCols: Seq[String]): DataFrame =
+    docSigs.join(clusters, keyCols)
+      .groupBy("cluster_id").agg(min("doc_id").as("doc_id"))
+      .select("doc_id").localCheckpoint(true)
+
   /** Temporal video hash over [[mm12Media]] payloads — the per-frame
     * mean-intensity delta-sign signature (the TIRI-lineage temporal
     * fingerprint at the byte-stat proxy level this container works at;
@@ -1591,35 +1616,18 @@ object TextQueries {
     // differ by a unit seed offset — a brightness shift whose channel
     // carries flip a few aHash bits (the near-dup regime) — while
     // distinct gradients land far apart. Blocking runs on DISTINCT
-    // signatures labeled by their min doc_id (the simhashClusters
-    // contraction), so equal-hash image masses attach by hash equality
-    // and never enumerate m² pairs. The twin verifies the banding's
+    // signatures labeled by their min doc_id (Dedup.hammingClusters), so
+    // equal-hash image masses attach by hash equality and never
+    // enumerate m² pairs. The twin verifies the banding's
     // EXACTNESS: its vpairs is the brute all-pairs hamming filter over
     // the (bounded) distinct-signature table, so a band-key slip that
     // drops a within-radius pair hash-diverges.
-    Query("mm9_image_near_dup", (s, dir) => {
-      // materialize the distinct-signature table ONCE: every band
-      // projection of the hamming join (4 union branches) and the final
-      // rollup join otherwise re-execute the whole PNG decode+hash pass
-      // — Spark reuses exchanges, not arbitrary subtrees, so the union
-      // fan-out multiplies the most expensive stage of the query. The
-      // checkpoint is |distinct sigs| rows of 4 columns; the decode now
-      // runs exactly once per execution (guide §5: cut lineage at the
-      // reused expensive intermediate).
-      val sigStats = mm9DocSigs(s, dir)
-        .groupBy("sig_hi", "sig_lo")
-        .agg(min("doc_id").as("rid"), count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      val pairs = Dedup.hammingBandJoin64(sigStats, "rid",
-        bands = 4, maxHamming = 3)
-      val clusters = Dedup.dupClusters(pairs)
-      sigStats
-        .join(clusters.withColumnRenamed("id", "rid"), Seq("rid"), "left")
-        .select(coalesce(col("cluster_id"), col("rid")).as("cluster_id"),
-          col("n"))
+    Query("mm9_image_near_dup", (s, dir) =>
+      Dedup.hammingClusters(mm9DocSigs(s, dir), "doc_id",
+          Seq("sig_lo", "sig_hi"), wordBits = 32, bandsPerWord = 2,
+          maxHamming = 3)
         .groupBy("cluster_id")
-        .agg(sum(col("n")).as("n_images"), count(lit(1)).as("n_sigs"))
-    },
+        .agg(sum(col("n")).as("n_images"), count(lit(1)).as("n_sigs")),
       // mm9 twin: mm6's 64-cell integer aHash replay at the mm9 fixture
       // dims + per-group gradient slopes (shared [[mm9SigCtes]] chain),
       // then the BRUTE all-pairs hamming filter over distinct
@@ -1659,26 +1667,10 @@ object TextQueries {
     // replays samples from the byte formula and brute-forces all-pairs
     // hamming within each window-count block — banding exactness is
     // oracle-checked.
-    Query("mm11_audio_near_dup", (s, dir) => {
-      // mm9's materialization note: 4 band branches + the rollup join
-      // otherwise re-run the PCM synth + fingerprint pass each
-      val sigStats = mm11DocFps(s, dir)
-        .groupBy("n_windows", "fp")
-        .agg(min("doc_id").as("rid"), count(lit(1)).as("n"))
-        .withColumn("sig_lo", col("fp").bitwiseAND(lit(0xffffffffL)))
-        .withColumn("sig_hi", shiftright(col("fp"), 32))
-        .localCheckpoint(true)
-      val pairs = Dedup.hammingBandJoinWords(sigStats, "rid",
-        Seq("sig_lo", "sig_hi"), bandsPerWord = 2, maxHamming = 3,
-        blockCols = Seq("n_windows"))
-      val clusters = Dedup.dupClusters(pairs)
-      sigStats
-        .join(clusters.withColumnRenamed("id", "rid"), Seq("rid"), "left")
-        .select(coalesce(col("cluster_id"), col("rid")).as("cluster_id"),
-          col("n"))
+    Query("mm11_audio_near_dup", (s, dir) =>
+      fpClusters(fpWords(mm11DocFps(s, dir)), "n_windows")
         .groupBy("cluster_id")
-        .agg(sum(col("n")).as("n_audios"), count(lit(1)).as("n_sigs"))
-    },
+        .agg(sum(col("n")).as("n_audios"), count(lit(1)).as("n_sigs")),
       // mm11 twin: the audio fixture's gained samples replayed from the
       // byte formula ([[mm11FpCtes]] chain), then brute all-pairs
       // hamming <= 3 WITHIN each window-count block over distinct
@@ -1718,26 +1710,11 @@ object TextQueries {
     // formula and brute-forces all-pairs hamming within each
     // frame-count block — banding exactness is oracle-checked, not
     // argued.
-    Query("mm12_video_near_dup", (s, dir) => {
-      // mm9's materialization note: 4 band branches + the rollup join
-      // otherwise re-run the demux + frame-stats + lag-window pass each
-      val fps = mm12DocFps(Tables.documents(s, dir).select(col("doc_id")))
-      val sigStats = fps.groupBy("n_frames_sampled", "fp")
-        .agg(min("doc_id").as("rid"), count(lit(1)).as("n"))
-        .withColumn("sig_lo", col("fp").bitwiseAND(lit(0xffffffffL)))
-        .withColumn("sig_hi", shiftright(col("fp"), 32))
-        .localCheckpoint(true)
-      val pairs = Dedup.hammingBandJoinWords(sigStats, "rid",
-        Seq("sig_lo", "sig_hi"), bandsPerWord = 2, maxHamming = 3,
-        blockCols = Seq("n_frames_sampled"))
-      val clusters = Dedup.dupClusters(pairs)
-      sigStats
-        .join(clusters.withColumnRenamed("id", "rid"), Seq("rid"), "left")
-        .select(coalesce(col("cluster_id"), col("rid")).as("cluster_id"),
-          col("n"))
+    Query("mm12_video_near_dup", (s, dir) =>
+      fpClusters(fpWords(mm12DocFps(
+          Tables.documents(s, dir).select(col("doc_id")))), "n_frames_sampled")
         .groupBy("cluster_id")
-        .agg(sum(col("n")).as("n_videos"), count(lit(1)).as("n_sigs"))
-    },
+        .agg(sum(col("n")).as("n_videos"), count(lit(1)).as("n_sigs")),
       // mm12 twin: the byte-replay temporal-hash chain, then brute
       // all-pairs hamming WITHIN each frame-count block (banding
       // exactness oracle-checked against the engine's 4×16 banded
@@ -1824,66 +1801,25 @@ object TextQueries {
         () => mm12DocFps(docs.select(col("doc_id"))).localCheckpoint(true)))
       val (hashed, afpsAll, vfpsAll) =
         (fingerprints(0), fingerprints(1), fingerprints(2))
-      // image stage (over all docs — the first filter)
-      val sigStats = hashed.groupBy(sigCols.head, sigCols.tail: _*)
-        .agg(min("doc_id").as("rid"))
-        .localCheckpoint(true)
-      val iclusters = Dedup.dupClusters(
-        Dedup.hammingBandJoinWords(sigStats, "rid", sigCols,
-          bandsPerWord = 1, maxHamming = 7))
-      val docLabeled = hashed.join(sigStats, sigCols)
-        .join(iclusters.withColumnRenamed("id", "rid"), Seq("rid"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("rid")).as("cluster_id"))
-      // survivor checkpoints carry the doc_id ONLY (the r13 form
-      // checkpointed full document rows including text per stage —
-      // corpus-sized executor storage at scale for frames whose
-      // consumers need ids; text re-attaches once, at the text stage)
-      val isurvIds = docLabeled.groupBy("cluster_id")
-        .agg(min("doc_id").as("doc_id"))
-        .select("doc_id").localCheckpoint(true)
+      // image stage (over all docs — the first filter). Survivor
+      // checkpoints carry the doc_id ONLY (the r13 form checkpointed full
+      // document rows including text per stage — corpus-sized executor
+      // storage at scale for frames whose consumers need ids; text
+      // re-attaches once, at the text stage)
+      val isurvIds = survivorIds(hashed,
+        Dedup.hammingClusters(hashed, "doc_id", sigCols, wordBits = 32,
+          bandsPerWord = 1, maxHamming = 7), sigCols)
       // audio stage over the image survivors: filter the materialized
       // fingerprints (id semi-join), THEN group — identical rows to
       // fingerprinting the survivors directly
-      val afps = afpsAll.join(isurvIds, Seq("doc_id"), "left_semi")
-      val asigStats = afps.groupBy("n_windows", "fp")
-        .agg(min("doc_id").as("rid"))
-        .withColumn("sig_lo", col("fp").bitwiseAND(lit(0xffffffffL)))
-        .withColumn("sig_hi", shiftright(col("fp"), 32))
-        .localCheckpoint(true)
-      val aclusters = Dedup.dupClusters(
-        Dedup.hammingBandJoinWords(asigStats, "rid",
-          Seq("sig_lo", "sig_hi"), bandsPerWord = 2, maxHamming = 3,
-          blockCols = Seq("n_windows")))
-      val aLabeled = afps.join(asigStats.select("n_windows", "fp", "rid"),
-          Seq("n_windows", "fp"))
-        .join(aclusters.withColumnRenamed("id", "rid"), Seq("rid"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("rid")).as("cluster_id"))
-      val asurvIds = aLabeled.groupBy("cluster_id")
-        .agg(min("doc_id").as("doc_id"))
-        .select("doc_id").localCheckpoint(true)
+      val afps = fpWords(afpsAll.join(isurvIds, Seq("doc_id"), "left_semi"))
+      val asurvIds = survivorIds(afps, fpClusters(afps, "n_windows"),
+        Seq("n_windows", "sig_lo", "sig_hi"))
       // video stage over the audio survivors (mm12's temporal-hash
       // banding) — same filter-then-group contraction
-      val vfps = vfpsAll.join(asurvIds, Seq("doc_id"), "left_semi")
-      val vsigStats = vfps.groupBy("n_frames_sampled", "fp")
-        .agg(min("doc_id").as("rid"))
-        .withColumn("sig_lo", col("fp").bitwiseAND(lit(0xffffffffL)))
-        .withColumn("sig_hi", shiftright(col("fp"), 32))
-        .localCheckpoint(true)
-      val vclusters = Dedup.dupClusters(
-        Dedup.hammingBandJoinWords(vsigStats, "rid",
-          Seq("sig_lo", "sig_hi"), bandsPerWord = 2, maxHamming = 3,
-          blockCols = Seq("n_frames_sampled")))
-      val vLabeled = vfps.join(
-          vsigStats.select("n_frames_sampled", "fp", "rid"),
-          Seq("n_frames_sampled", "fp"))
-        .join(vclusters.withColumnRenamed("id", "rid"), Seq("rid"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("rid")).as("cluster_id"))
-      val vsurvIds = vLabeled.groupBy("cluster_id")
-        .agg(min("doc_id").as("doc_id"))
-        .select("doc_id").localCheckpoint(true)
+      val vfps = fpWords(vfpsAll.join(asurvIds, Seq("doc_id"), "left_semi"))
+      val vsurvIds = survivorIds(vfps, fpClusters(vfps, "n_frames_sampled"),
+        Seq("n_frames_sampled", "sig_lo", "sig_hi"))
       // text stage: re-attach text LATE (guide §8) — the one checkpoint
       // that carries text, because the LSH verify genuinely reads it.
       // vsurvIds ⊆ audio survivors ⊆ image survivors, so one semi-join

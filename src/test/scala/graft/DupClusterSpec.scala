@@ -135,7 +135,7 @@ class DupClusterSpec extends SparkTestBase {
     assert(got === want)
   }
 
-  test("hammingBandJoin64 equals brute-force hamming, cross-half distances included") {
+  test("hammingBandJoinWords (64-bit as 2 words) equals brute-force hamming, cross-half distances included") {
     // hand-placed 64-bit signatures as (hi, lo) halves: pairs whose
     // distance straddles the hi/lo boundary must still be found (a
     // banding that mixed up halves or offsets would drop them), and the
@@ -157,10 +157,13 @@ class DupClusterSpec extends SparkTestBase {
       h = java.lang.Long.bitCount(ah ^ bh) + java.lang.Long.bitCount(al ^ bl)
       if h <= 3
     } yield (a, b, h.toLong)).toSet
-    // both the production banding (4x16-bit keys — mm9's depth knob)
-    // and the finer 8x8 split must equal brute force exactly
-    Seq(4, 8).foreach { bands =>
-      val got = Dedup.hammingBandJoin64(sigs, "rid", bands, maxHamming = 3)
+    // both the production banding (2 words x 2 bands of 16 bits — mm9's
+    // depth knob) and the finer 2 x 4 split of 8 bits must equal brute
+    // force exactly
+    Seq(2, 4).foreach { bandsPerWord =>
+      val bands = 2 * bandsPerWord
+      val got = Dedup.hammingBandJoinWords(sigs, "rid", Seq("sig_lo", "sig_hi"),
+          wordBits = 32, bandsPerWord = bandsPerWord, maxHamming = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got === want,
         s"band join diverged at bands=$bands: got ${got.size}, want ${want.size}")
@@ -199,7 +202,8 @@ class DupClusterSpec extends SparkTestBase {
       if h <= 15
     } yield (a, b, h.toLong)).toSet
     val got = Dedup.hammingBandJoinWords(sigs, "rid",
-        (0 until 8).map(w => s"sig$w"), bandsPerWord = 2, maxHamming = 15)
+        (0 until 8).map(w => s"sig$w"), wordBits = 32, bandsPerWord = 2,
+        maxHamming = 15)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === want, s"words band join diverged: got ${got.size}, want ${want.size}")
     assert(want.exists(p => p._2 == 203L), "fixture lost its at-radius pair")

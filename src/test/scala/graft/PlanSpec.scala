@@ -160,11 +160,13 @@ class PlanSpec extends SparkTestBase {
 
   test("dd10: the simhash band join is an equi-join, never a product") {
     // assert on the lazy band-join plan (the public operator materializes
-    // through a localCheckpoint, which hides the plan)
+    // through a localCheckpoint, which hides the plan): simhashPairs'
+    // banding is one 16-bit word in 4 bands
     import org.apache.spark.sql.functions._
     val sigs = graft.core.Tables.documents(spark, dir)
       .select(col("doc_id"), graft.operators.Dedup.simhash(col("text"), 16).as("sig"))
-    val plan = graft.operators.Dedup.simhashBandJoin(sigs, "doc_id", 16, 4, 2)
+    val plan = graft.operators.Dedup
+      .hammingBandJoinWords(sigs, "doc_id", Seq("sig"), 16, 4, 2)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!plan.contains("CartesianProduct") &&
@@ -180,15 +182,16 @@ class PlanSpec extends SparkTestBase {
     // synthetic (sig_hi, sig_lo) frame shaped like aHash64's output —
     // the plan contract is independent of the codec path: band join is
     // an equi-join on the band key, never a product, and the node frame
-    // below it is the distinct-signature aggregation
+    // below it is hammingClusters' distinct-signature aggregation
     val sigs = graft.core.Tables.documents(spark, dir)
       .select(col("doc_id"),
         pmod(col("doc_id") * 2654435761L, lit(1L << 32)).as("sig_hi"),
         pmod(col("doc_id") * 40503L, lit(1L << 32)).as("sig_lo"))
-      .groupBy("sig_hi", "sig_lo")
+      .groupBy("sig_lo", "sig_hi")
       .agg(min("doc_id").as("rid"), count(lit(1)).as("n"))
     val plan = graft.operators.Dedup
-      .hammingBandJoin64(sigs, "rid", bands = 8, maxHamming = 3)
+      .hammingBandJoinWords(sigs, "rid", Seq("sig_lo", "sig_hi"),
+        wordBits = 32, bandsPerWord = 4, maxHamming = 3)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!plan.contains("CartesianProduct") &&
@@ -213,10 +216,10 @@ class PlanSpec extends SparkTestBase {
         pmod(col("doc_id") * 40503L, lit(1L << 32)).as("sig_hi"),
         pmod(col("doc_id"), lit(7)).as("nw"))
       .groupBy("nw", "sig_lo", "sig_hi")
-      .agg(min("doc_id").as("rid"))
+      .agg(min("doc_id").as("rid"), count(lit(1)).as("n"))
     val plan = graft.operators.Dedup
       .hammingBandJoinWords(sigs, "rid", Seq("sig_lo", "sig_hi"),
-        bandsPerWord = 1, maxHamming = 1, blockCols = Seq("nw"))
+        wordBits = 32, bandsPerWord = 1, maxHamming = 1, blockCols = Seq("nw"))
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!plan.contains("CartesianProduct") &&
@@ -231,45 +234,19 @@ class PlanSpec extends SparkTestBase {
       s"block column missing from the equi-join keys:\n$joinKeys")
   }
 
-  test("mm11_adaptive: adaptive band join stays an equi-join with the block in the keys") {
-    import org.apache.spark.sql.functions._
-    // the adaptive-width banding computes the band key from a per-block
-    // width COLUMN — the join must still be a hash equi-join on
-    // (block, bk), never a product, and never a post-join width filter
-    val sigs = graft.core.Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        pmod(col("doc_id") * 2654435761L, lit(1L << 40)).as("fp"),
-        (pmod(col("doc_id"), lit(7)) + 17).cast("int").as("nw"))
-      .groupBy("nw", "fp")
-      .agg(min("doc_id").as("rid"))
-      .withColumn("n_bits", (col("nw") - 1).cast("int"))
-    val plan = graft.operators.Dedup
-      .hammingBandJoinAdaptive(sigs, "rid", "fp", "n_bits", bands = 4,
-        maxHamming = 3, blockCols = Seq("nw"))
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"),
-      "adaptive band join degenerated to a product join")
-    assert(plan.contains("Join"), "no join in the adaptive band-join plan")
-    val joinKeys = plan.linesIterator
-      .filter(l => l.contains("keys") && l.contains("bk")).mkString("\n")
-    assert(joinKeys.contains("nw"),
-      s"block column missing from the adaptive equi-join keys:\n$joinKeys")
-  }
-
   test("dd14: the component graph is the distinct-signature frame, not doc pairs") {
     import org.apache.spark.sql.functions._
     // the sig-domain contract, asserted structurally: the band join that
     // feeds component discovery operates on a DISTINCT signature frame
-    // (node id = the signature itself), so its input cardinality is
+    // (node id = the smallest member id), so its input cardinality is
     // bounded by min(|docs|, 2^bits) — never the corpus pair set
     val docs = graft.core.Tables.documents(spark, dir)
     val sigs = docs.select(col("doc_id"),
       graft.operators.Dedup.simhash(col("text"), 16).as("sig"))
-    val nodes = sigs.select(col("sig").as("id")).distinct()
-      .withColumn("sig", col("id"))
-    val plan = graft.operators.Dedup.simhashBandJoin(nodes, "id", 16, 4, 2)
+    val nodes = sigs.groupBy("sig")
+      .agg(min("doc_id").as("rid"), count(lit(1)).as("n"))
+    val plan = graft.operators.Dedup
+      .hammingBandJoinWords(nodes, "rid", Seq("sig"), 16, 4, 2)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!plan.contains("CartesianProduct") &&
@@ -279,8 +256,10 @@ class PlanSpec extends SparkTestBase {
       "distinct-signature aggregation missing below the band join")
     // the equivalence of the sig-domain composition to the doc-pair form
     // is value-pinned in DupClusterSpec; here we additionally pin that
-    // the node count really is the distinct-sig count (the scale bound)
-    val n = nodes.count()
+    // hammingClusters' node count really is the distinct-sig count (the
+    // scale bound)
+    val n = graft.operators.Dedup
+      .hammingClusters(sigs, "doc_id", Seq("sig"), 16, 4, 2).count()
     assert(n === sigs.select("sig").distinct().count() && n <= (1L << 16))
   }
 
@@ -468,13 +447,12 @@ class PlanSpec extends SparkTestBase {
       s"dd28 re-partitions by doc per stage ($docExchanges doc exchanges)")
   }
 
-  test("dd29: host cap is equi-only; the per-host rank never sorts a whole host in one task") {
+  test("dd29: host cap is equi-only; the per-host rank window is hash-partitioned by host") {
     val plan = planOf("dd29_host_cap")
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"dd29 degenerated to a product:\n${plan.take(600)}")
-    // capPerGroup ranks in one window hash-partitioned by host (the
-    // two-phase, id-bucketed rank this case's name describes was retired)
+    // capPerGroup ranks in one window hash-partitioned by host
     assert(plan.toLowerCase.contains("hashpartitioning(url_host"),
       "dd29: the per-host rank window is not hash-partitioned by host")
   }
