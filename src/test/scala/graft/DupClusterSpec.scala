@@ -135,7 +135,8 @@ class DupClusterSpec extends SparkTestBase {
     assert(got === want)
   }
 
-  test("hammingBandJoinWords (64-bit as 2 words) equals brute-force hamming, cross-half distances included") {
+  test("hammingBandJoin64 equals brute-force hamming, cross-half distances included") {
+    // the 64-bit (hi, lo) form of the band join: 2 words of 32 bits.
     // hand-placed 64-bit signatures as (hi, lo) halves: pairs whose
     // distance straddles the hi/lo boundary must still be found (a
     // banding that mixed up halves or offsets would drop them), and the
